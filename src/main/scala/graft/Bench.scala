@@ -1,18 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.engine.{Memos, Sessions}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to every core on the host (the driver benches at local[32]
     // and does not always export SPARK_GRAFT_CPUS).
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    val cpus = Sessions.localCores
     // Per-query repeats: the host carries external load (loadavg swings
     // 2→10 with zero local processes — BASELINE.md), so a single sample
     // can charge a query 3x its warm cost. Each query runs `repeats`
     // times back-to-back; the JSON reports the per-query MEDIAN (and
     // min), total = Σ medians. METHODOLOGY NOTE: with session-memoized
-    // structure caches (Graphs.cached) repeats 2..n are warm, so
+    // structure caches (graft.engine.Memos) repeats 2..n are warm, so
     // medians report warm-path cost — totals are NOT comparable with
     // round-3's single-sample totals. "value_first" = Σ first samples
     // (the cold/single-sample-equivalent total) is emitted alongside
@@ -59,20 +59,12 @@ object Bench {
     }
     val loadStart = loadavg()
     val stealStart = stealJiffies()
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/tests: events-time queries read the same
-      // instants here as under the oracle on any host tz (ADVICE r10)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_MEMO_BUDGET=<bytes>: override the session memo byte
     // budget (default: half the driver heap — graft.engine.Memos) for
     // scale runs that demonstrate the budgeted eviction explicitly.
-    sys.env.get("SPARK_GRAFT_MEMO_BUDGET")
-      .foreach(b => builder.config(graft.engine.Memos.BudgetConf, b))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(s"local[$cpus]",
+      Seq("spark.sql.shuffle.partitions" -> cpus) ++
+        sys.env.get("SPARK_GRAFT_MEMO_BUDGET").map(Memos.BudgetConf -> _): _*)
     // Untimed warm-up: absorb one-time JVM/codegen/session costs so the
     // first timed query measures the query, not the cold start.
     try SparkEntry.queries.get("q_scan_project").foreach(_(spark, sfDir).count())

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.Sessions
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +9,9 @@ object Verify {
     // optional 3rd+ args: dump only these queries (local preflight of
     // new operators; the driver always passes exactly two args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.localCores
+    val spark = Sessions.create(s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus)
     new java.io.File(outDir).mkdirs()
     // Fixture-contract guard (VERDICT r9): if the driver regenerated
     // testdata with a ts layout the reader mis-sniffs, every

@@ -2,58 +2,57 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
-/** Central registry for the session-scoped structure memos
-  * (`Graphs`, `Dedup`/`Similarity`/`SimHash`/`Round8`/... stores).
-  * The memos deliberately pin persisted / localCheckpointed frames
-  * for reuse across a query registry run — that is their job — but
-  * pinned storage needs two controls:
+/** The one place that decides how a piece of session-scoped stored
+  * state is identified, kept and released. Every memo in the engine —
+  * persisted / localCheckpointed structure frames, gate scalars and
+  * flags, scratch layouts on disk — is keyed by (session, fixture
+  * dir, tag), where the tag is `"<module>/<name>"` (`"graphs/edges"`,
+  * `"lsh/lshBandedOld"`): the module prefix keeps every row's entries
+  * apart, so no two rows can share one by accident. Three entry
+  * points:
   *
-  *  1. [[clearAll]] — full eviction, for a harness that switches
-  *     fixture dirs or wants a cold-cache measurement. Nothing calls
-  *     it automatically on the driver's bench path: the driver
-  *     benches one fixture dir per session, where pinned reuse is the
-  *     documented methodology (BASELINE.md).
-  *  2. A BYTE BUDGET (r15, VERDICT r14 task 4) — the memo set grows
-  *     with the fixture (~347 MB at sf0.1, ~12 GB at sf1 per
-  *     SCALING.md), and an unbounded session eventually outgrows the
-  *     JVM. Every memo map is a [[Store]]; each ADMISSION checks the
-  *     block manager's total pinned bytes against [[budgetBytes]]
-  *     and evicts least-recently-HIT entries across ALL stores until
-  *     the total fits (never the entry just admitted). Eviction is a
-  *     real release — CacheManager entry AND any checkpoint RDD
-  *     blocks in the frame's plan (`Dataset.unpersist` alone leaves
-  *     the latter to ContextCleaner GC, the ADVICE-r14 leak) — and a
-  *     later re-miss simply rebuilds (`MemoBudgetSpec` proves it).
+  *  - [[frame]] — a DataFrame, BYTE-BUDGETED: each admission checks
+  *    the block manager's total pinned bytes against [[budgetBytes]]
+  *    and evicts least-recently-HIT frames until the total fits
+  *    (never the entry just admitted, never the [[MinResidentConf]]
+  *    newest). Eviction is a real release — CacheManager entry AND
+  *    any checkpoint RDD blocks in the frame's plan — and a later
+  *    re-miss simply rebuilds (`MemoBudgetSpec` proves it).
+  *  - [[value]] — scalars, flags and small driver arrays (a few longs
+  *    each): outside the budget.
+  *  - [[scratchDir]] — the appId-isolated directory a stored layout
+  *    is written to.
+  *
+  * [[clearAll]] drops all of it: for a harness that switches fixture
+  * dirs or wants a cold-cache measurement (nothing calls it on the
+  * bench path, where pinned reuse is the documented methodology).
   *
   * Eviction-safety contract: an evicted checkpointed frame is
   * unreadable (its lineage was truncated at materialization), so
-  * handed-out memo frames must be consumed within the query that
-  * fetched them — which the registry convention guarantees: every
-  * access goes through `getOrElseUpdate` (bumping the LRU clock), so
-  * the frames a running query depends on are always the NEWEST-hit
-  * entries and are evicted last; queries materialize their result
-  * before returning. A budget small enough to evict a same-query
-  * dependency mid-build degrades persisted deps to lineage recompute
-  * and is out of contract for checkpointed ones — set the budget
-  * above the largest single query's working set (the default, half
-  * the driver heap, is two orders above it at every measured SF). */
+  * handed-out frames must be consumed within the query that fetched
+  * them — which the registry convention guarantees: every access
+  * goes through [[frame]] (bumping the LRU clock), so the frames a
+  * running query depends on are the NEWEST-hit entries and are
+  * evicted last; queries materialize their result before returning.
+  * Set the budget above the largest single query's working set (the
+  * default, half the driver heap, is two orders above it at every
+  * measured SF). */
 object Memos {
-  private val clearers =
-    new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
-  /** Called once from each memo object's initializer. */
-  def register(clear: () => Unit): Unit = clearers.add(clear)
+  /** Identity of one memo entry. */
+  private final case class Key(s: SparkSession, dir: String, tag: String)
 
-  /** Evict every registered session memo. Safe to call between
-    * fixtures or before a cold-cache measurement; the next query
-    * rebuilds what it needs. */
-  def clearAll(): Unit = clearers.forEach(f => f())
+  /** Reference-equality slot (NOT a case class): eviction removes it
+    * with the conditional `TrieMap.remove(key, slot)`, so a victim
+    * selected from a stale snapshot can never drop a NEWER slot that
+    * was re-admitted at the same key after the snapshot was taken. */
+  private final class Slot(val key: Key, val df: DataFrame,
+      @volatile var lastHit: Long)
 
-  // ------------------------------------------------------------------
-  // r15: byte-budgeted stores
-  // ------------------------------------------------------------------
+  private val frames = TrieMap.empty[Key, Slot]
+  private val values = TrieMap.empty[Key, Any]
+  private val tick = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Conf key for the memo byte budget (default: half the driver
     * JVM's max heap — in local mode the one JVM holds every block). */
@@ -66,18 +65,16 @@ object Memos {
 
   /** Conf key for the WORKING-SET GUARD: the N newest-hit entries are
     * never eviction victims. A query fetches its memo frames over
-    * several getOrElseUpdate calls and only then runs jobs over them;
-    * pure LRU under an undersized budget can evict an already-fetched
+    * several [[frame]] calls and only then runs jobs over them; pure
+    * LRU under an undersized budget can evict an already-fetched
     * checkpointed frame before the job reads it, and a checkpoint's
     * lineage is truncated — the read then dies with
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (observed at sf10 under a
-    * deliberately out-of-contract 1.5 GB budget, r16). Keeping the
-    * newest N resident turns that hard failure into a bounded
-    * overshoot: the session can exceed the budget by at most the N
-    * newest entries' bytes — which the contract already requires the
-    * budget to accommodate (it must clear the largest single query's
-    * working set). Default 8 covers the deepest current query (the
-    * signed-LSH family touches ≤ 7 entries per invocation). */
+    * deliberately out-of-contract 1.5 GB budget). Keeping the newest
+    * N resident turns that hard failure into a bounded overshoot of
+    * at most the N newest entries' bytes. Default 8 covers the
+    * deepest current query (the signed-LSH family touches ≤ 7
+    * entries per invocation). */
   val MinResidentConf = "spark.graft.memoMinResident"
 
   /** The working-set guard size (entries). */
@@ -95,51 +92,88 @@ object Memos {
   /** Cumulative budget evictions (observability + spec hook). */
   val evictions = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Session-scoped SCALAR memo (counts, cost-gate stats) — r18,
-    * VERDICT r17 task 1a: the costed selectors' gate scalars
-    * (pair-graph edge counts, Σdf² volumes) are deterministic per
-    * (session, fixture) exactly like the frames they describe, yet
-    * they were re-counted with one driver action per cold
-    * invocation — a pure job-launch tax, and job launches are what
-    * host bursts multiply. Scalars are a few longs: no byte-budget
-    * participation, cleared with [[clearAll]] so a fixture switch or
-    * cold-cache run re-measures. */
-  private val scalars = TrieMap.empty[(SparkSession, String), Any]
-  register(() => scalars.clear())
+  /** The memoized frame under (s, d, tag), built on a miss. Admission
+    * is atomic: `putIfAbsent` decides the winner of two concurrent
+    * misses, and a losing builder releases its freshly built frame
+    * and returns the winner's (a plain get-then-put left the loser's
+    * frame pinned forever). */
+  def frame(s: SparkSession, d: String, tag: String)
+           (build: => DataFrame): DataFrame = {
+    val key = Key(s, d, tag)
+    frames.get(key) match {
+      case Some(sl) =>
+        sl.lastHit = tick.incrementAndGet(); sl.df
+      case None =>
+        val df = build // outside the lock: builds run Spark jobs
+        // Admission holds the Memos lock: release()'s keep-set scan
+        // and unpersist loop hold the same lock, so a slot can never
+        // become live between a scan and the free it informs — the
+        // insert and the budget sweep are one atom.
+        synchronized {
+          val slot = new Slot(key, df, tick.incrementAndGet())
+          frames.putIfAbsent(key, slot) match {
+            case Some(winner) =>
+              release(df)
+              winner.lastHit = tick.incrementAndGet()
+              winner.df
+            case None =>
+              enforceBudget(df.sparkSession, df)
+              df
+          }
+        }
+    }
+  }
 
-  /** Memoize a deterministic per-session scalar under `key`. */
-  def scalar[T](s: SparkSession, key: String)(build: => T): T =
-    scalars.getOrElseUpdate((s, key), build).asInstanceOf[T]
+  /** The memoized value under (s, d, tag) — counts, cost-gate stats,
+    * "layout written" flags, centroid arrays: deterministic per
+    * (session, fixture) like the frames they describe, so one job per
+    * session instead of one per invocation. Outside the byte budget. */
+  def value[T](s: SparkSession, d: String, tag: String)(build: => T): T =
+    values.getOrElseUpdate(Key(s, d, tag), build).asInstanceOf[T]
+
+  /** The scratch directory of stored layout `tag` for fixture `d`:
+    * stable within a session (writes overwrite — no accumulation
+    * across invocations), isolated from concurrent processes on the
+    * same fixture by the Spark application id, which also breaks
+    * cross-fixture 32-bit hashCode collisions between processes. */
+  def scratchDir(s: SparkSession, d: String, tag: String): String =
+    s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
+      Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+
+  /** Live memo frames of session `s` under fixture dir `d`. */
+  private[graft] def frameCount(s: SparkSession, d: String): Int =
+    frames.keys.count(k => (k.s eq s) && k.dir == d)
+
+  /** Evict every memo: frames are released, values dropped. Safe to
+    * call between fixtures or before a cold-cache measurement; the
+    * next query rebuilds what it needs. The map is emptied BEFORE the
+    * releases, so [[release]]'s shared-RDD exclusion set no longer
+    * counts the dropped slots as live and every shared RDD is freed. */
+  def clearAll(): Unit = {
+    val dropped = synchronized {
+      val all = frames.values.toSeq
+      frames.clear()
+      all
+    }
+    dropped.foreach(sl => release(sl.df))
+    values.clear()
+  }
 
   /** Fully release a memoized frame: the CacheManager entry and any
-    * checkpoint RDD blocks embedded in its plan THAT NO OTHER LIVE
-    * SLOT'S PLAN STILL EMBEDS. The ownership guard matters (ADVICE
-    * r15): a derived memo entry's plan can embed another live entry's
-    * checkpoint RDD (e.g. a persisted bucket index built over a
-    * localCheckpointed banded frame) — unpersisting every plan RDD on
-    * eviction would destroy the still-live dependency's blocks and
-    * the next hit on it fails with "checkpoint block not found".
-    * A shared checkpoint RDD is therefore only freed when its LAST
-    * referencing slot is released (no permanent leak: the exclusion
-    * set shrinks as slots go). Blocking, so the budget check right
-    * after an eviction reads post-release sizes.
-    *
-    * Two r16-ADVICE hardenings:
-    *  - the keep-set scan and the unpersist loop run under the Memos
-    *    lock, and admissions ([[Store.getOrElseUpdate]]'s insert path)
-    *    take the same lock — so a slot admitted concurrently whose
-    *    plan embeds the same checkpoint RDD can never slip in between
-    *    the ownership scan and the free;
-    *  - liveness is decided per SLOT, not by DataFrame reference: a
-    *    victim slot is removed from its map BEFORE release is called
-    *    (removeSelf / clear()'s drain / the never-inserted loser), so
-    *    "live" = everything still in a store. If the SAME DataFrame
-    *    instance is also memoized under another key, that twin slot
-    *    keeps both the cache entry (the `df.unpersist` is skipped)
-    *    and every plan RDD — releasing one alias is then a no-op
-    *    instead of destroying the survivor's blocks. */
-  def release(df: DataFrame): Unit = Memos.synchronized {
-    val live = stores.asScala.flatMap(_.slots).toSeq
+    * checkpoint RDD blocks embedded in its plan THAT NO LIVE SLOT'S
+    * PLAN STILL EMBEDS. The ownership guard matters: a derived entry's
+    * plan can embed another live entry's checkpoint RDD (a persisted
+    * bucket index built over a localCheckpointed banded frame), and
+    * unpersisting every plan RDD would destroy the live dependency's
+    * blocks. A shared RDD is freed when its LAST referencing slot is
+    * released. Liveness is decided per SLOT: a victim is removed from
+    * the map BEFORE release is called, so "live" = everything still
+    * in the map; if the SAME DataFrame is also memoized under another
+    * key, that twin keeps the cache entry and every plan RDD.
+    * Blocking, so the budget check right after an eviction reads
+    * post-release sizes; runs under the Memos lock (see [[frame]]). */
+  private def release(df: DataFrame): Unit = synchronized {
+    val live = frames.values.toSeq
     val keep: Set[Int] = live
       .flatMap(sl => org.apache.spark.sql.graftbridge.Bridge.planRdds(sl.df))
       .map(_.id).toSet
@@ -151,100 +185,30 @@ object Memos {
     }
   }
 
-  private val tick = new java.util.concurrent.atomic.AtomicLong(0)
-  private val stores =
-    new java.util.concurrent.ConcurrentLinkedQueue[Store[_]]()
-
-  /** Reference-equality slot (NOT a case class): `removeSelf` uses
-    * the conditional `TrieMap.remove(key, slot)` so an eviction
-    * selected from a stale snapshot can never drop a NEWER slot that
-    * was re-admitted at the same key after the snapshot was taken. */
-  private[engine] final class Slot(val df: DataFrame,
-      @volatile var lastHit: Long) {
-    @volatile var removeSelf: () => Unit = () => ()
-  }
-
-  /** A session memo map with LRU byte-budget participation — the
-    * drop-in replacement for the per-module
-    * `TrieMap[..., DataFrame] + Memos.register` pattern. */
-  final class Store[K](val name: String) {
-    private val m = TrieMap.empty[K, Slot]
-    stores.add(this)
-    register { () => clear() }
-
-    /** Release and drop every entry in THIS store. The map is
-      * emptied FIRST so [[release]]'s shared-RDD exclusion set no
-      * longer counts sibling entries of this store as live — RDDs
-      * shared only within the store are freed, those still embedded
-      * by another store's live slot survive until it releases. */
-    def clear(): Unit = {
-      val dropped = m.values.toSeq
-      m.clear()
-      dropped.foreach(sl => release(sl.df))
-    }
-
-    /** Atomic memoized admission (ADVICE r15: the plain get-then-put
-      * raced — two concurrent misses each built and persisted a
-      * frame, the loser's overwrote the winner's slot and the
-      * orphaned frame stayed pinned forever). `putIfAbsent` decides
-      * the winner; a losing builder releases its freshly built frame
-      * and returns the winner's. */
-    def getOrElseUpdate(key: K, build: => DataFrame): DataFrame =
-      m.get(key) match {
-        case Some(sl) =>
-          sl.lastHit = tick.incrementAndGet(); sl.df
-        case None =>
-          val df = build // outside the lock: builds run Spark jobs
-          // Admission holds the Memos lock (ADVICE r16): release()'s
-          // keep-set scan and unpersist loop hold the same lock, so a
-          // slot can never become live between a scan and the free it
-          // informs — the insert and the budget sweep are one atom.
-          Memos.synchronized {
-            val slot = new Slot(df, tick.incrementAndGet())
-            slot.removeSelf = () => { m.remove(key, slot); () }
-            m.putIfAbsent(key, slot) match {
-              case Some(winner) =>
-                release(df)
-                winner.lastHit = tick.incrementAndGet()
-                winner.df
-              case None =>
-                enforceBudget(df.sparkSession, df)
-                df
-            }
-          }
-      }
-
-    def size: Int = m.size
-    private[engine] def slots: Seq[Slot] = m.values.toSeq
-  }
-
-  /** Evict least-recently-hit entries (across every store) until the
-    * block manager total fits the budget. The just-admitted frame is
-    * exempt; if everything evictable is gone and the total still
-    * exceeds the budget, the residue is in-flight query scratch —
-    * released by its own query's end-of-call discipline.
+  /** Evict least-recently-hit frames until the block manager total
+    * fits the budget. The just-admitted frame is exempt; if
+    * everything evictable is gone and the total still exceeds the
+    * budget, the residue is in-flight query scratch — released by its
+    * own query's end-of-call discipline.
     *
-    * Known slack (ADVICE r15, accepted): the check runs at admission,
-    * but a persisted (non-checkpointed) entry's blocks only
-    * materialize at its first action, so `storedBytes` can exclude
-    * the newest entry and the budget is enforced one admission late —
-    * the session may transiently exceed it by the largest entry's
-    * size. Acceptable under the documented half-heap default, which
-    * leaves that headroom by construction. */
+    * Known slack (accepted): a persisted (non-checkpointed) entry's
+    * blocks only materialize at its first action, so `storedBytes`
+    * can exclude the newest entry and the budget is enforced one
+    * admission late — the session may transiently exceed it by the
+    * largest entry's size, which the half-heap default leaves room
+    * for by construction. */
   private def enforceBudget(s: SparkSession,
                             justAdmitted: DataFrame): Unit = synchronized {
     val budget = budgetBytes(s)
     if (budget <= 0 || storedBytes(s) <= budget) return
-    val sorted = stores.asScala.flatMap(_.slots).toSeq
+    val sorted = frames.values.toSeq
       .filter(_.df ne justAdmitted)
       .sortBy(_.lastHit)
     // working-set guard: the newest-hit entries are never victims
-    // (see MinResidentConf — the running query's fetched frames)
-    val victims = sorted.dropRight(minResident(s))
-    val it = victims.iterator
+    val it = sorted.dropRight(minResident(s)).iterator
     while (storedBytes(s) > budget && it.hasNext) {
       val v = it.next()
-      v.removeSelf()
+      frames.remove(v.key, v)
       release(v.df)
       evictions.incrementAndGet()
     }

@@ -2,6 +2,7 @@ package graft.incr
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** §2 row 278 — the DECLARATIVE MERGE surface (VERDICT r15 task 3).
@@ -202,13 +203,6 @@ object MergeInto {
     touched
   }
 
-  /** q281's store build+merge runs once per (session, fixture) — the
-    * stored partitioned table is LAYOUT state (q157/q158/q249
-    * convention); repeats serve the memoized read-back. */
-  private val memo =
-    new graft.engine.Memos.Store[(org.apache.spark.sql.SparkSession,
-      String, String)]("mergePart")
-
   val defs: Map[String, Q] = Map(
     /** q278: DECLARATIVE MERGE [P §3 update=delete+insert as DML] —
       * all three clause kinds in one pass over `orders`: base = keys
@@ -253,11 +247,9 @@ object MergeInto {
       * proves the RESULT equals the full recompute, the q153
       * result-invisible discipline). Store build + merge run once
       * per (session, fixture); appId-isolated scratch. */
-    "q_incr_merge_partitioned" -> ((s, d) => memo.getOrElseUpdate(
-        (s, d, "q281"), {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_mergepart_" +
-        Integer.toHexString(d.hashCode) + "_" +
-        s.sparkContext.applicationId
+    "q_incr_merge_partitioned" -> ((s, d) => Memos.frame(s, d,
+        "mergePart/q281") {
+      val root = Memos.scratchDir(s, d, "mergepart")
       val o = orders(s, d).select("o_orderkey", "o_custkey",
         "o_totalprice", "o_orderpriority")
       o.write.mode("overwrite").partitionBy("o_orderpriority")
@@ -286,7 +278,7 @@ object MergeInto {
         .select("o_orderkey", "o_custkey", "o_totalprice",
           "o_orderpriority")
         .orderBy("o_orderkey").localCheckpoint()
-    }))
+    })
   )
 
   val sql: Map[String, String] = Map(

@@ -2,6 +2,7 @@ package graft.iter
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** Graph fixture for the iterative operators (SURVEY.md §2 rows
@@ -49,33 +50,21 @@ object Graphs {
   def deg(edges: DataFrame): DataFrame =
     edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
 
-  /** Session-scoped memo for deterministic, reused structure data:
-    * the four graph queries share one cached edge table / degree join
-    * / converged base state instead of rebuilding them per query.
+  /** Session-memoized structure data (`"graphs/..."` memo frames):
+    * the graph queries share one cached edge table / degree join /
+    * converged base state instead of rebuilding them per query.
     * Everything memoized is either persisted or localCheckpointed, so
     * reuse is a cache hit, and determinism (integer arithmetic, fixed
     * data) makes sharing semantically invisible. */
-  private val memo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("graphs")
-
-  /** Evict every memoized structure frame (see [[graft.engine.Memos]]):
-    * a full release — persisted frames unpersist AND checkpointed
-    * frames' blocks are freed at the RDD (Memos.release). */
-  def clear(): Unit = memo.clear()
-
-  def cached(s: SparkSession, d: String, key: String)
-            (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, d, key), build)
-
   def edgesCached(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "edges")(edges(s, d).persist())
+    Memos.frame(s, d, "graphs/edges")(edges(s, d).persist())
 
   def nodesCached(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "nodes")(nodes(edgesCached(s, d)).persist())
+    Memos.frame(s, d, "graphs/nodes")(nodes(edgesCached(s, d)).persist())
 
   /** Edges with source outdeg — the PageRank loop invariant. */
   def edgesDegCached(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "edgesDeg") {
+    Memos.frame(s, d, "graphs/edgesDeg") {
       val e = edgesCached(s, d)
       e.join(broadcast(deg(e)), "src")
         .select(col("src"), col("dst"), col("outdeg"))

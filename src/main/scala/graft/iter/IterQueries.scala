@@ -2,6 +2,7 @@ package graft.iter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** §2 group H — iterative processing (the reference's soul, paper
@@ -153,7 +154,7 @@ object IterQueries {
   /** q41's converged 5-iteration state, shared with q48 (identical
     * deterministic computation — memoized per session+dir). */
   private def converged5(s: SparkSession, d: String): DataFrame =
-    Graphs.cached(s, d, "pr5")(noAqe(s) {
+    Memos.frame(s, d, "graphs/pr5")(noAqe(s) {
       // the fixture graph is symmetrized -> every node has in-edges
       pagerankOn(Graphs.nodesCached(s, d), Graphs.edgesDegCached(s, d), 5,
         allInDeg = true)
@@ -370,11 +371,10 @@ object IterQueries {
     * instead. Set at the MEASURED crossover, not the memory limit
     * (r17, quiet-window mins): at sf0.1 (180k directed edges) the
     * local path wins 0.7 s vs 1.2 s; at sf3 (~1.4M) the two tie
-    * (3.1 s vs r16's 2.9 s distributed); at sf10 (4.58M —
-    * CollapseProbe) the collect cost inverts it, 4.4 s local vs
-    * 2.5 s distributed. 2M edges ≈ 32 MB packed is also two orders
-    * under the driver heap, so the cap is a latency choice with
-    * memory safety for free. */
+    * (3.1 s vs r16's 2.9 s distributed); at sf10 (4.58M edges) the
+    * collect cost inverts it, 4.4 s local vs 2.5 s distributed. 2M
+    * edges ≈ 32 MB packed is also two orders under the driver heap,
+    * so the cap is a latency choice with memory safety for free. */
   val LocalCollapseCap: Long = 2L * 1000 * 1000
 
   /** Branch taken by the most recent [[minLabelCollapseLocal]] call
@@ -744,9 +744,9 @@ object IterQueries {
       * exists to keep the broadcast-frontier distributed collapse
       * measured at bench scale. */
     "q_graph_cc_lineitem" -> ((s, d) => {
-      // structure memo (Graphs.cached convention): the incidence
+      // structure memo (the "graphs/..." frames): the incidence
       // graph is static; the COLLAPSE runs per invocation
-      val edges = Graphs.cached(s, d, "liIncidenceE") {
+      val edges = Memos.frame(s, d, "graphs/liIncidenceE") {
         val li = lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
         val und = li.select((col("l_orderkey") * 4).as("a"),
@@ -757,9 +757,9 @@ object IterQueries {
           .union(und.select(col("b").as("src"), col("a").as("dst")))
           .localCheckpoint()
       }
-      val nodes = Graphs.cached(s, d, "liIncidenceN")(
+      val nodes = Memos.frame(s, d, "graphs/liIncidenceN")(
         edges.select(col("src").as("node")).distinct().localCheckpoint())
-      val nEdges = 4 * graft.engine.Memos.scalar(s, s"iter:liCount:$d")(
+      val nEdges = 4 * Memos.value(s, d, "iter/liCount")(
         lineitem(s, d).count())
       loopConf(s) {
         minLabelCollapseLocal(edges, nodes, 5,
@@ -784,7 +784,7 @@ object IterQueries {
       // repeat calls are cache hits (built under the loop conf like
       // the other structure caches; see the noAqe scaladoc for the
       // measured local-size tradeoff).
-      val edges2 = Graphs.cached(s, d, "edges2deg")(noAqe(s) {
+      val edges2 = Memos.frame(s, d, "graphs/edges2deg")(noAqe(s) {
         val e2 = withDeg(
           Graphs.edgesCached(s, d)
             .filter((col("src") + col("dst")) % 17 =!= 0))
@@ -804,7 +804,7 @@ object IterQueries {
     "q_iter_sssp" -> ((s, d) => {
       // memoized final state (the mrbgResult pattern): deterministic
       // per (session, dir), so repeat invocations are cache hits
-      Graphs.cached(s, d, "ssspResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ssspResult")(noAqe(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val src = n.agg(min("node")).head().getLong(0)
@@ -832,9 +832,9 @@ object IterQueries {
       // localCheckpoints, so repeat invocations are cache hits
       // instead of re-running the seed-union + 3 frontier rounds
       // (~15 sequential micro-stages) every time.
-      Graphs.cached(s, d, "frontierResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/frontierResult")(noAqe(s) {
         val full = Graphs.edgesCached(s, d)
-        val baseE = Graphs.cached(s, d, "edgesBase")(
+        val baseE = Memos.frame(s, d, "graphs/edgesBase")(
           full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
         val deltaE = full.filter((col("src") + col("dst")) % 17 === 0)
         val n = Graphs.nodesCached(s, d) // FULL node set; isolated-in-base stay INF
@@ -843,7 +843,7 @@ object IterQueries {
           when(col("node") === src, 0L).otherwise(INF).as("dist"))
         val changed0 = state0.filter(col("dist") === 0)
           .select(col("node").as("cnode"), col("dist").as("cval"))
-        val baseRun = Graphs.cached(s, d, "ssspBase5")(
+        val baseRun = Memos.frame(s, d, "graphs/ssspBase5")(
           minPropagate(baseE, state0, changed0, "dist", 1L, 5)
             .localCheckpoint())
         val res = iterateIncremental(full, deltaE,
@@ -864,7 +864,7 @@ object IterQueries {
       * unrolled 5-stage CTE as q41 — GIM-V must be result-invisible
       * relative to the specialized loop). */
     "q_gimv_pagerank" -> ((s, d) => {
-      Graphs.cached(s, d, "gimvPrResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/gimvPrResult")(noAqe(s) {
         val edgesDeg = Graphs.edgesDegCached(s, d)
         val n = Graphs.nodesCached(s, d)
         var state = n.selectExpr("node", "CAST(10000000000 AS BIGINT) AS rs")
@@ -888,16 +888,16 @@ object IterQueries {
       * re-iteration on the post-deletion graph: the affected-set
       * bounding must be result-invisible. */
     "q_incr_sssp_delete" -> ((s, d) => {
-      Graphs.cached(s, d, "ssspDeleteResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ssspDeleteResult")(noAqe(s) {
         val full = Graphs.edgesCached(s, d)
         val deleted = full.filter((col("src") + col("dst")) % 17 === 0)
-        val newE = Graphs.cached(s, d, "edgesBase")(
+        val newE = Memos.frame(s, d, "graphs/edgesBase")(
           full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
         val n = Graphs.nodesCached(s, d)
         val srcNode = n.agg(min("node")).head().getLong(0)
         // deletion restart requires a fully CONVERGED base state (a
         // mid-flight base could under-approximate the affected set)
-        val base = Graphs.cached(s, d, "ssspConverged") {
+        val base = Memos.frame(s, d, "graphs/ssspConverged") {
           val state0 = n.select(col("node"),
             when(col("node") === srcNode, 0L).otherwise(INF).as("dist"))
           val changed0 = state0.filter(col("dist") === 0)
@@ -913,7 +913,7 @@ object IterQueries {
     /** q43: connected components via min-label propagation (a GIM-V
       * instance [P §7]), FIXED 5 rounds. */
     "q_iter_connected_components" -> ((s, d) => {
-      Graphs.cached(s, d, "ccResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ccResult")(noAqe(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val state0 = n.select(col("node"), col("node").as("label"))
@@ -934,7 +934,7 @@ object IterQueries {
       * same plan shape (node-sized broadcast state, one shuffle per
       * iteration), so the q41 scale story carries over verbatim. */
     "q_iter_ppr" -> ((s, d) => {
-      Graphs.cached(s, d, "pprResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/pprResult")(noAqe(s) {
         val edgesDeg = Graphs.edgesDegCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val seed = n.agg(min("node")).head().getLong(0)
@@ -961,7 +961,7 @@ object IterQueries {
       * operator itself under the hard signal, alongside q106's
       * sum-instance). */
     "q_gimv_cc" -> ((s, d) => {
-      Graphs.cached(s, d, "gimvCcResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/gimvCcResult")(noAqe(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
         var state = n.select(col("node"), col("node").as("label"))
@@ -981,7 +981,7 @@ object IterQueries {
       * q106 (sum/PageRank), q118 (min/CC), and this (min-plus/SSSP),
       * all against the same unrolled CTEs as their specialized loops. */
     "q_gimv_sssp" -> ((s, d) => {
-      Graphs.cached(s, d, "gimvSsspResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/gimvSsspResult")(noAqe(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val src = n.agg(min("node")).head().getLong(0)
@@ -1033,7 +1033,7 @@ object IterQueries {
       * post-deletion graph — no unrolled iteration count to agree on;
       * convergence itself is what's checked. */
     "q_incr_cc_delete" -> ((s, d) => noAqe(s) {
-      val full = Graphs.cached(s, d, "chainEdges") {
+      val full = Memos.frame(s, d, "graphs/chainEdges") {
         val nodes = customer(s, d)
           .select(col("c_custkey").cast("long").as("node"))
         val eu = customer(s, d).filter(col("c_custkey") % 8 =!= 0)
@@ -1047,15 +1047,15 @@ object IterQueries {
       // the splits are INPUT data (the signed delta and the surviving
       // edges), not the query's work — memoized beside chainEdges so
       // warm runs measure the delete restart, not input re-filtering
-      val deleted = Graphs.cached(s, d, "chainDeleted")(
+      val deleted = Memos.frame(s, d, "graphs/chainDeleted")(
         full.filter((col("src") + col("dst")) % 13 === 0).localCheckpoint())
-      val post = Graphs.cached(s, d, "chainPost")(
+      val post = Memos.frame(s, d, "graphs/chainPost")(
         full.filter((col("src") + col("dst")) % 13 =!= 0).localCheckpoint())
       // converged pre-deletion labels — the paper's STORED state
       // [P §3], so session-memoized like q115's ccBase5: the
       // incremental query's own work is the delete restart, not the
       // base convergence it reads back
-      val base = Graphs.cached(s, d, "chainCcBase") {
+      val base = Memos.frame(s, d, "graphs/chainCcBase") {
         val state0 = customer(s, d)
           .select(col("c_custkey").cast("long").as("node"))
           .select(col("node"), col("node").as("label"))
@@ -1068,16 +1068,16 @@ object IterQueries {
     }),
 
     "q_incr_cc_frontier" -> ((s, d) => {
-      Graphs.cached(s, d, "ccFrontierResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ccFrontierResult")(noAqe(s) {
         val full = Graphs.edgesCached(s, d)
-        val baseE = Graphs.cached(s, d, "edgesBase")(
+        val baseE = Memos.frame(s, d, "graphs/edgesBase")(
           full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
         val deltaE = full.filter((col("src") + col("dst")) % 17 === 0)
         val n = Graphs.nodesCached(s, d) // FULL node set, like q101
         val state0 = n.select(col("node"), col("node").as("label"))
         val changed0 = state0
           .select(col("node").as("cnode"), col("label").as("cval"))
-        val baseRun = Graphs.cached(s, d, "ccBase5")(
+        val baseRun = Memos.frame(s, d, "graphs/ccBase5")(
           minPropagate(baseE, state0, changed0, "label", 0L, 5)
             .localCheckpoint())
         val res = iterateIncremental(full, deltaE,

@@ -2,6 +2,7 @@ package graft.iter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables.Q
 
 /** MRBGraph-style incremental PageRank — the reference's PRESERVED
@@ -118,7 +119,7 @@ object MrbgPagerank {
       * recomputed. */
     "q_incr_mrbg" -> ((s0, d) => {
       val s = s0
-      Graphs.cached(s, d, "mrbgResult")(IterQueries.loopConf(s) {
+      Memos.frame(s, d, "graphs/mrbgResult")(IterQueries.loopConf(s) {
         val nodes = Graphs.nodesCached(s, d)
         val edgesDegOld = Graphs.edgesDegCached(s, d)
         // converged base state — shared with q41/q48 (memoized)

@@ -1,11 +1,12 @@
 package graft.ops
 
 import graft.engine.Dec
+import graft.engine.Memos
 import graft.engine.Tables._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** The ANALYTICS SURFACE module (SURVEY §2 rows 219-241, consolidated
   * r13 from the round-12 accretion files Round12c-Round12g as a pure
@@ -53,16 +54,6 @@ object Analytics {
     * The reference tree at /root/reference is absent (SURVEY.md §0);
     * semantics follow SURVEY §2 rows 219-222.
     */
-
-  private val dfMemoBm = new graft.engine.Memos
-    .Store[(SparkSession, String, String)]("analytics_bitmap")
-  private val writeMemoBm = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Boolean]
-  graft.engine.Memos.register { () => writeMemoBm.clear() }
-
-  private def scratchRootBm(s: SparkSession, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_r12c_" +
-      Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
 
   // ---------------------------------------------------------------
   // bitmap kernel
@@ -188,10 +179,10 @@ object Analytics {
       val touched = delta
         .select(col("event_type"), expr("(user_id - pmod(user_id, 32)) div 32").as("blk"))
         .distinct()
-      val baseP = dfMemoBm.getOrElseUpdate((s, d, "bitmap_partials"), {
+      val baseP = Memos.frame(s, d, "analytics_bitmap/bitmap_partials") {
         val p = bitmapBlocks(base).persist()
         p.count(); p
-      })
+      }
       val keep = baseP
         .join(broadcast(touched), Seq("event_type", "blk"), "left_anti")
       val rec = bitmapBlocks(
@@ -255,13 +246,13 @@ object Analytics {
       * sole input, so one write serves every call — bench reps then
       * measure the pruned read, not the rewrite). */
     "q_scan_dpp" -> ((s, d) => {
-      val scratch = s"${scratchRootBm(s, d)}/dpp"
-      writeMemoBm.getOrElseUpdate((s, d, "dpp_write"), {
+      val scratch = s"${Memos.scratchDir(s, d, "r12c")}/dpp"
+      Memos.value(s, d, "analytics_bitmap/dpp_write") {
         customer(s, d)
           .write.mode("overwrite").partitionBy("c_nationkey")
           .parquet(scratch)
         true
-      })
+      }
       val fact = s.read.parquet(scratch)
       val dim = nation(s, d).filter(col("n_regionkey") === 0)
       fact.join(dim, col("c_nationkey") === col("n_nationkey"))
@@ -437,9 +428,6 @@ object Analytics {
     * semantics follow SURVEY §2 rows 226-229.
     */
 
-  private val dfMemoEng = new graft.engine.Memos
-    .Store[(SparkSession, String, String)]("analytics_engagement")
-
   // ---------------------------------------------------------------
   // DAU/WAU kernel (rolling exact distinct on bitmap partials)
   // ---------------------------------------------------------------
@@ -604,10 +592,10 @@ object Analytics {
           datediff(to_date(col("ts")), lit("1970-01-01")).as("dnum"),
           expr("(user_id - pmod(user_id, 32)) div 32").as("blk"))
         .distinct()
-      val baseP = dfMemoEng.getOrElseUpdate((s, d, "dauwau_partials"), {
+      val baseP = Memos.frame(s, d, "analytics_engagement/dauwau_partials") {
         val p = dailyBitmaps(base).persist()
         p.count(); p
-      })
+      }
       val keep = baseP
         .join(broadcast(touched), Seq("dnum", "blk"), "left_anti")
       val rec = dailyBitmaps(
@@ -738,12 +726,6 @@ object Analytics {
     * semantics follow SURVEY §2 rows 230-233.
     */
 
-  private val dfMemoOls = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  graft.engine.Memos.register { () =>
-    dfMemoOls.values.foreach(_.unpersist(blocking = false)); dfMemoOls.clear()
-  }
-
   // ---------------------------------------------------------------
   // OLS kernel (exact decimal moments)
   // ---------------------------------------------------------------
@@ -865,10 +847,10 @@ object Analytics {
       val base = li.filter(col("l_orderkey") % 10 =!= 0)
       val ins = li.filter(col("l_orderkey") % 10 === 0)
       val del = li.filter(col("l_orderkey") % 10 === 1)
-      val baseP = dfMemoOls.getOrElseUpdate((s, d, "linreg_partials"), {
+      val baseP = Memos.frame(s, d, "analytics_ols/linreg_partials") {
         val p = linregPartials(base).persist()
         p.count(); p
-      })
+      }
       def signed(p: DataFrame, sgn: Int) =
         p.select(col("l_returnflag"),
           (col("n") * sgn).cast(D38o).as("n"),
@@ -1156,9 +1138,6 @@ object Analytics {
 
   private val D38x = DecimalType(38, 0)
 
-  private val dfMemoChi = new graft.engine.Memos
-    .Store[(SparkSession, String, String)]("analytics_chisq")
-
   // ---------------------------------------------------------------
   // chi-square A/B kernel
   // ---------------------------------------------------------------
@@ -1324,10 +1303,10 @@ object Analytics {
       val base = ev.filter(col("event_id") % 10 =!= 0)
       val ins = ev.filter(col("event_id") % 10 === 0)
       val del = ev.filter(col("event_id") % 10 === 1)
-      val baseP = dfMemoChi.getOrElseUpdate((s, d, "chisq_counts"), {
+      val baseP = Memos.frame(s, d, "analytics_chisq/chisq_counts") {
         val p = chisqCounts(base).persist()
         p.count(); p
-      })
+      }
       def signed(p: DataFrame, sgn: Int) =
         p.select(col("event_type"),
           (col("a") * sgn).as("a"), (col("c") * sgn).as("c"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.Dec
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Memos
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -350,14 +351,7 @@ object Extras {
       * only — at scale the text-format pattern is identical, just
       * partitioned; nothing here assumes a single file. */
     "q_source_csv_json" -> ((s, d) => {
-      // scratch keyed by fixture AND Spark application id: stable
-      // within a session (mode overwrite — no accumulation across
-      // invocations) but isolated from concurrent processes benching
-      // the same fixture, which previously raced on one shared dir
-      // (ADVICE r10); the app id also breaks cross-fixture 32-bit
-      // hashCode collisions between processes.
-      val scratch = s"${sys.props("java.io.tmpdir")}/graft_srcmix_" +
-        Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+      val scratch = Memos.scratchDir(s, d, "srcmix")
       val nat = nation(s, d)
       val reg = region(s, d)
       nat.write.mode("overwrite").option("header", "true")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** Misra–Gries heavy hitters [N] — the frequent-items sketch a 100 TB
@@ -96,7 +97,7 @@ object HeavyHitters {
     * memo (r18): one summary scan per session, not per invocation. */
   private def memoSummary(s: org.apache.spark.sql.SparkSession, d: String,
                           key: String, t: => DataFrame): Map[String, Long] =
-    graft.engine.Memos.scalar(s, s"hh:$key:$d")(summaryOf(t, 63))
+    Memos.value(s, d, s"hh/$key")(summaryOf(t, 63))
 
   val defs: Map[String, Q] = Map(
     /** q120: tokens with frequency > n/50 over the document corpus —
@@ -185,10 +186,9 @@ object HeavyHitters {
       // deletion mass budget: n_post * (k+1) >= n_pre * 50, integer —
       // catalog stats of stored relations (scalar-memoized like every
       // gate scalar, r18); the budget CHECK still runs per invocation
-      val nPre = graft.engine.Memos.scalar(s, s"hh:nPre:$d")(
-        toksOf(docs).count())
+      val nPre = Memos.value(s, d, "hh/nPre")(toksOf(docs).count())
       val post = toksOf(docs.filter(col("doc_id") % 10 =!= 1))
-      val nPost = graft.engine.Memos.scalar(s, s"hh:nPost:$d")(post.count())
+      val nPost = Memos.value(s, d, "hh/nPost")(post.count())
       require(nPost * 64L >= nPre * 50L,
         s"deletion mass budget exceeded ($nPre -> $nPost): " +
           "re-summarize the surviving corpus")

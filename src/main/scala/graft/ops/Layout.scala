@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -17,14 +18,6 @@ import graft.engine.Dec._
   * share a directory. */
 object Layout {
 
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
-  graft.engine.Memos.register { () => memo.clear() }
-
-  private def scratchRootL(s: SparkSession, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_r11_" +
-      Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
-
   /** Bucketed orders/customer tables (8 buckets on the join key,
     * sorted within buckets), registered in the session catalog —
     * the co-located layout for repeated big⋈big joins. Returns the
@@ -32,8 +25,8 @@ object Layout {
   private def bucketedTables(s: SparkSession, d: String): (String, String) = {
     val suffix = Integer.toHexString(d.hashCode)
     val (ordT, custT) = (s"g157_ord_$suffix", s"g157_cust_$suffix")
-    memo.getOrElseUpdate((s, d, "bucketed"), {
-      val root = scratchRootL(s, d)
+    Memos.value(s, d, "layout/bucketed") {
+      val root = Memos.scratchDir(s, d, "r11")
       s.sql(s"DROP TABLE IF EXISTS $ordT")
       s.sql(s"DROP TABLE IF EXISTS $custT")
       orders(s, d).write.bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -41,19 +34,19 @@ object Layout {
       customer(s, d).write.bucketBy(8, "c_custkey").sortBy("c_custkey")
         .option("path", s"$root/cust_b").mode("overwrite").saveAsTable(custT)
       "done"
-    })
+    }
     (ordT, custT)
   }
 
   /** Hive-partitioned (day=...) copy of events — the partition-pruned
     * read layout. Returns its path. */
   private def partitionedEvents(s: SparkSession, d: String): String =
-    memo.getOrElseUpdate((s, d, "evByDay"), {
-      val path = s"${scratchRootL(s, d)}/ev_by_day"
+    Memos.value(s, d, "layout/evByDay") {
+      val path = s"${Memos.scratchDir(s, d, "r11")}/ev_by_day"
       events(s, d).withColumn("day", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("day").parquet(path)
       path
-    })
+    }
 
   private val defsBuckets: Map[String, Q] = Map(
     /** q157: co-located bucketed join as a DECLARED query — orders ⋈
@@ -133,14 +126,6 @@ object Layout {
     * semantics follow SURVEY §2 row 242.
     */
 
-  private val statsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Long, Int, Int)]
-  private val writeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Boolean]
-  graft.engine.Memos.register { () =>
-    statsMemo.clear(); writeMemo.clear()
-  }
-
   /** The box's candidate Z cells under `stats` (the rectangle of
     * bucket coordinates, Morton-encoded — O(cells), never a scan). */
   private def boxCells(stats: (Long, Int, Int)): Seq[Int] = {
@@ -164,10 +149,6 @@ object Layout {
         countDistinct(col("user_id")).as("n_users"),
         sum(floor(col("value") * lit(100)).cast("long"))
           .as("value_cents_sum"))
-
-  private def scratchRoot(s: SparkSession, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_r12h_" +
-      Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
 
   /** Morton interleave of two 4-bit cell coordinates → 8-bit Z code
     * (driver-side mirror of [[zCol]]; used to enumerate the
@@ -282,18 +263,18 @@ object Layout {
       * strictness (<256), Morton bijectivity, and result ≡ unpruned
       * scan. */
     "q_scan_zorder" -> ((s, d) => {
-      val scratch = s"${scratchRoot(s, d)}/zorder"
-      val stats = statsMemo.getOrElseUpdate((s, d, "zorder_stats"), {
+      val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder"
+      val stats = Memos.value(s, d, "layout/zorder_stats") {
         val ev = events(s, d)
           .withColumn("dnum",
             datediff(to_date(col("ts")), lit("1970-01-01")))
         val r = ev.agg(max("user_id"), min("dnum"), max("dnum"))
           .collect()(0)
         (r.getLong(0), r.getInt(1), r.getInt(2))
-      })
-      writeMemo.getOrElseUpdate((s, d, "zorder_build"), {
+      }
+      Memos.value(s, d, "layout/zorder_build") {
         zorderWrite(events(s, d), stats, scratch, dynamic = false); true
-      })
+      }
       boxQuery(s, scratch, stats)
     }),
 
@@ -313,26 +294,26 @@ object Layout {
       * (untouched cells' files byte-identical) and the emptied-cell
       * deletion on a constructed frame. */
     "q_incr_zorder" -> ((s, d) => {
-      val scratch = s"${scratchRoot(s, d)}/zorder_incr"
+      val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder_incr"
       val ev = events(s, d)
       val base = ev.filter(col("event_id") % 10 =!= 0)
       val post = ev.filter(col("event_id") % 10 =!= 1)
       val delta = ev.filter(col("event_id") % 10 === 0 ||
         col("event_id") % 10 === 1)
-      val stats = statsMemo.getOrElseUpdate((s, d, "zorder_incr_stats"), {
+      val stats = Memos.value(s, d, "layout/zorder_incr_stats") {
         val b = base.withColumn("dnum",
           datediff(to_date(col("ts")), lit("1970-01-01")))
         val r = b.agg(max("user_id"), min("dnum"), max("dnum"))
           .collect()(0)
         (r.getLong(0), r.getInt(1), r.getInt(2))
-      })
-      writeMemo.getOrElseUpdate((s, d, "zorder_incr_build"), {
+      }
+      Memos.value(s, d, "layout/zorder_incr_build") {
         zorderWrite(base, stats, scratch, dynamic = false); true
-      })
-      writeMemo.getOrElseUpdate((s, d, "zorder_incr_maint"), {
+      }
+      Memos.value(s, d, "layout/zorder_incr_maint") {
         zorderMaintain(s, scratch, post, cellsOf(delta, stats), stats)
         true
-      })
+      }
       boxQuery(s, scratch, stats)
     }))
 

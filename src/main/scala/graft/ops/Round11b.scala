@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -26,22 +27,19 @@ import graft.engine.Dec._
   */
 object Round11b {
 
-  private val dfMemo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("round11b")
-
   /** Distinct bipartite (part, supplier) edge relation — q170's
     * structure data, session-memoized like [[graft.iter.Graphs]]'
     * symmetric graph (which canonicalizes endpoints and so cannot
     * serve the bipartite shape). Persisted: the self-join reads it
     * twice per execution. */
   private[ops] def bipartiteEdges(s: SparkSession, d: String): DataFrame =
-    dfMemo.getOrElseUpdate((s, d, "bipartite"), {
+    Memos.frame(s, d, "round11b/bipartite") {
       val e = lineitem(s, d)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
         .distinct().persist()
       e.count() // materialize so both join sides read cached rows
       e
-    })
+    }
 
   /** GENERIC group-level incremental recompute — the i2MapReduce
     * rule behind the whole signed-delta family (sessionize q140, SCD2
@@ -75,10 +73,10 @@ object Round11b {
                              base: DataFrame, post: DataFrame,
                              groupCols: Seq[String], affected: DataFrame)
                             (derive: DataFrame => DataFrame): DataFrame = {
-    val baseP = dfMemo.getOrElseUpdate((s, d, label), {
+    val baseP = Memos.frame(s, d, s"round11b/$label") {
       val p = derive(base).persist()
       p.count(); p
-    })
+    }
     baseP.join(broadcast(affected), groupCols, "left_anti")
       .unionByName(
         derive(post.join(broadcast(affected), groupCols, "left_semi")))
@@ -397,9 +395,9 @@ object Round11b {
       // the STORED matrix — session-memoized like the rest of the
       // stored-state family (production reads it from the partials
       // store; it is immutable for a given base corpus)
-      val stored = dfMemo.getOrElseUpdate((s, d, "transBase"), {
+      val stored = Memos.frame(s, d, "round11b/transBase") {
         val t = transitionsOf(base).persist(); t.count(); t
-      })
+      }
       val neg = transitionsOf(base.join(affected, Seq("user_id"), "left_semi"))
         .withColumn("n_transitions", -col("n_transitions"))
       val pos = transitionsOf(base.filter(!delPred).unionByName(ins)
@@ -531,7 +529,7 @@ object Round11b {
       // degradation the grid join declares. Decision under the hash.
       val e = bipartiteEdges(s, d).filter(col("p") < 100)
       // gate scalars memoized per (session, fixture) — r18 task 1a
-      val stats = graft.engine.Memos.scalar(s, s"r11b:graphNbrStats:$d")(
+      val stats = Memos.value(s, d, "round11b/graphNbrStats")(
         graft.text.Dedup.pairStats(
           e.select(col("p").as("doc_id"), col("sk").as("tok")), "tok"))
       val (plan, pairs) =
@@ -595,12 +593,12 @@ object Round11b {
       * convention), with appId-isolated scratch. The copy is written
       * by the proven batch reader so the fixture's physical ts layout
       * is normalized before the stream source reads it. */
-    "q_stream_sink_roundtrip" -> ((s, d) => dfMemo.getOrElseUpdate(
+    "q_stream_sink_roundtrip" -> ((s, d) => Memos.frame(s, d,
+        "round11b/streamRoundtrip")(
         // r18 (task 6): 4-partition state — the one-time stream cost
         // is micro-batch state plumbing, not data (Streams.smallStateConf)
-        (s, d, "streamRoundtrip"), graft.stream.Streams.smallStateConf(s) {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_r11s_" +
-        Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+        graft.stream.Streams.smallStateConf(s) {
+      val root = Memos.scratchDir(s, d, "r11s")
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
       val norm = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -653,13 +651,13 @@ object Round11b {
       * as q177 (the restart is result-invisible — the streaming
       * analogue of the signed-delta family's contract). Stream pair
       * runs once per (session, fixture); appId-isolated scratch. */
-    "q_stream_restart_exactly_once" -> ((s, d) => dfMemo.getOrElseUpdate(
+    "q_stream_restart_exactly_once" -> ((s, d) => Memos.frame(s, d,
+        "round11b/streamRestart")(
         // r18 (task 6): 4-partition state across BOTH runs (the
         // checkpoint pins the count at first start)
-        (s, d, "streamRestart"), graft.stream.Streams.smallStateConf(s) {
+        graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val root = s"${sys.props("java.io.tmpdir")}/graft_r11r_" +
-        Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+      val root = Memos.scratchDir(s, d, "r11r")
       val (stage, src, ck, out) = (s"$root/stage", s"$root/src",
         s"$root/ck", s"$root/out")
       val norm = events(s, d)
@@ -717,13 +715,13 @@ object Round11b {
       * every row; ordering robustness comes from the MERGE algebra,
       * not from arrival discipline. Stream runs once per (session,
       * fixture); appId-isolated scratch. */
-    "q_stream_merge_upsert" -> ((s, d) => dfMemo.getOrElseUpdate(
+    "q_stream_merge_upsert" -> ((s, d) => Memos.frame(s, d,
+        "round11b/streamMergeUpsert")(
         // r18 (task 6): the foreachBatch MERGE's full-outer join runs
         // per micro-batch — 4 shuffle partitions size it to the
         // KB-scale batches (result is partition-count invariant)
-        (s, d, "streamMergeUpsert"), graft.stream.Streams.smallStateConf(s) {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_r16m_" +
-        Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+        graft.stream.Streams.smallStateConf(s) {
+      val root = Memos.scratchDir(s, d, "r16m")
       val (src, ck, store) = (s"$root/src", s"$root/ck", s"$root/store")
       val norm = events(s, d)
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -776,8 +774,7 @@ object Round11b {
       * Doubles round-trip bit-exact through ORC's IEEE encoding;
       * money still aggregates in exact decimal (Dec contract). */
     "q_source_orc" -> ((s, d) => {
-      val scratch = s"${sys.props("java.io.tmpdir")}/graft_orc_" +
-        Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+      val scratch = Memos.scratchDir(s, d, "orc")
       val sup = supplier(s, d)
       val nat = nation(s, d)
       sup.write.mode("overwrite").orc(s"$scratch/supplier_orc")

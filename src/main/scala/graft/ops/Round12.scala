@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -28,16 +29,6 @@ import graft.engine.Dec._
   * semantics follow SURVEY §2 rows 180-188.
   */
 object Round12 {
-
-  private val dfMemo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("round12")
-  private val pathMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
-  graft.engine.Memos.register { () => pathMemo.clear() }
-
-  private def scratchRoot(s: SparkSession, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_r12_" +
-      Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
 
   /** Tokenized corpus: (doc rows filtered by `p`) → one `word` row per
     * token occurrence. */
@@ -307,14 +298,14 @@ object Round12 {
       * caveat: giant days split via maxRecordsPerFile + AQE rebalance
       * — same result, documented here. */
     "q_sink_compaction" -> ((s, d) => {
-      val root = pathMemo.getOrElseUpdate((s, d, "compaction"), {
-        val r = s"${scratchRoot(s, d)}/compact"
+      val root = Memos.value(s, d, "round12/compaction") {
+        val r = s"${Memos.scratchDir(s, d, "r12")}/compact"
         val ev = events(s, d).withColumn("day", to_date(col("ts")))
         ev.repartition(8)
           .write.mode("overwrite").partitionBy("day").parquet(s"$r/landing")
         compactPartitions(s, s"$r/landing", s"$r/compacted", "day")
         r
-      })
+      }
       s.read.parquet(s"$root/compacted")
         .groupBy("day")
         .agg(count(lit(1)).as("n_events"),
@@ -341,15 +332,16 @@ object Round12 {
       * delay margin. So the emitted set equals the batch join — which
       * is what the oracle computes. Runs once per (session, fixture)
       * (stored sink, q177 convention). */
-    "q_stream_join_interval" -> ((s, d) => dfMemo.getOrElseUpdate(
+    "q_stream_join_interval" -> ((s, d) => Memos.frame(s, d,
+        "round12/streamJoin")(
         // r18 (task 6): 4-partition state (4 StateStores per join
         // side instead of 32) + 2-files-per-trigger — the eviction
         // margin argument above is per-batch generic, so 3
         // micro-batches prove the same contract 5 did, and
         // cross-batch join state is still exercised (batch 2's
         // purchases match batch 1's views)
-        (s, d, "streamJoin"), graft.stream.Streams.smallStateConf(s) {
-      val root = s"${scratchRoot(s, d)}/sjoin"
+        graft.stream.Streams.smallStateConf(s) {
+      val root = s"${Memos.scratchDir(s, d, "r12")}/sjoin"
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
       val norm = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -415,12 +407,12 @@ object Round12 {
       // scheme (production maintains it incrementally like the signed
       // LSH index), so it is session-memoized per the q50/q170
       // pair-relation convention.
-      val fps = dfMemo.getOrElseUpdate((s, d, "winnowFps"), {
+      val fps = Memos.frame(s, d, "round12/winnowFps") {
         val f = winnowFingerprints(documents(s, d), "doc_id", "text",
           k = 4, w = 4).persist()
         f.count()
         f
-      })
+      }
       val freq = fps.groupBy("fp")
         .agg(count_distinct(col("doc_id")).as("n_docs"))
       fps.join(freq, "fp")
@@ -474,9 +466,9 @@ object Round12 {
       * cross-engine — oracle=none; Round12bSpec pins per-day and
       * union estimates within 5% of the exact distincts and that the
       * union estimate is served from the stored sketches alone. */
-    "q_agg_sketch_union" -> ((s, d) => dfMemo.getOrElseUpdate(
-        (s, d, "hllSketches"), {
-      val path = s"${scratchRoot(s, d)}/hll_daily"
+    "q_agg_sketch_union" -> ((s, d) => Memos.frame(s, d,
+        "round12/hllSketches") {
+      val path = s"${Memos.scratchDir(s, d, "r12")}/hll_daily"
       events(s, d)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
@@ -489,7 +481,7 @@ object Round12 {
           .as("est_users"))
         .select(lit("ALL").as("scope"), col("est_users"))
       perDay.unionByName(all).orderBy("scope").localCheckpoint()
-    })),
+    }),
 
     /** q191: SIGNED INCREMENTAL CHUNK DEDUP [P §3] — q181's duplicate
       * chunk groups maintained under the corpus delta (q125/q134
@@ -532,10 +524,11 @@ object Round12 {
       * fixture); appId-isolated scratch. r18 (task 6): 4-partition
       * state + 4-files-per-trigger — 3 micro-batches (originals,
       * duplicates, flush) instead of 9 prove the same contract. */
-    "q_stream_dedup" -> ((s, d) => dfMemo.getOrElseUpdate(
-        (s, d, "streamDedup"), graft.stream.Streams.smallStateConf(s) {
+    "q_stream_dedup" -> ((s, d) => Memos.frame(s, d,
+        "round12/streamDedup")(
+        graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val root = s"${scratchRoot(s, d)}/sdedup"
+      val root = s"${Memos.scratchDir(s, d, "r12")}/sdedup"
       val (stage, src, ck, out) = (s"$root/stage", s"$root/src",
         s"$root/ck", s"$root/out")
       val norm = events(s, d)
@@ -695,7 +688,7 @@ object Round12 {
       * defect flips the hash. appId-isolated scratch, mode
       * OVERWRITE (q156 convention). */
     "q_source_text_lines" -> ((s, d) => {
-      val scratch = s"${scratchRoot(s, d)}/nation_txt"
+      val scratch = s"${Memos.scratchDir(s, d, "r12")}/nation_txt"
       val nat = nation(s, d)
       nat.select(concat_ws("|", col("n_nationkey"), col("n_name"),
           col("n_regionkey")).as("value"))
@@ -809,8 +802,7 @@ object Round12 {
       val del = li.filter(col("l_orderkey") % 10 === 1)
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         .map { c =>
-          val baseCounts = dfMemo.getOrElseUpdate(
-            (s, d, s"profileBase:$c"),
+          val baseCounts = Memos.frame(s, d, s"round12/profileBase:$c")(
             signedValueCounts(base, c, 1).persist())
           profileOfState(valueCountStateFrom(baseCounts, ins, del, c), c)
         }

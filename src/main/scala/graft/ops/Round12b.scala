@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 import org.apache.spark.sql.graftbridge.Bridge
 import graft.functions.DamerauLevenshtein
@@ -29,12 +30,6 @@ import graft.functions.DamerauLevenshtein
   * semantics follow SURVEY §2 rows 201-218.
   */
 object Round12b {
-
-  private val dfMemo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("round12b")
-  private val volMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Long]
-  graft.engine.Memos.register { () => volMemo.clear() }
 
   /** damerau_levenshtein(a, b) as a Column — wraps the codegen
     * Expression ([[graft.functions.DamerauLevenshtein]]). */
@@ -166,7 +161,7 @@ object Round12b {
   }
 
   private def sortedDocArrays(s: SparkSession, d: String): DataFrame =
-    dfMemo.getOrElseUpdate((s, d, "ppjoin_arrays"), {
+    Memos.frame(s, d, "round12b/ppjoin_arrays") {
       val toks = documents(s, d)
         .filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -174,7 +169,7 @@ object Round12b {
       val arrs = rarestFirstArrays(toks).persist()
       arrs.count()
       arrs
-    })
+    }
 
   /** GENERIC prefix-filtered exact Jaccard self-join (PPJoin lemma,
     * Bayardo/Xiao): with every doc's token set sorted by one global
@@ -378,10 +373,6 @@ object Round12b {
       s"kcore did not converge within $maxRounds rounds ($n edges left)")
     e
   }
-
-  private def scratchRoot(s: SparkSession, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_r12b_" +
-      Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
 
   // ---------------------------------------------------------------
   // q212 kernel: bucket-partial signed maintenance of the band join
@@ -659,7 +650,7 @@ object Round12b {
       // production materializes it next to the dedup index and
       // downstream consumers read it, they don't re-join per query.
       // The first invocation pays the full pipeline end-to-end.
-      dfMemo.getOrElseUpdate((s, d, "setjoin_dedup"),
+      Memos.frame(s, d, "round12b/setjoin_dedup")(
         dedupFirstJaccardPairs(
             documents(s, d).filter(col("doc_id") % 2 === 0),
             "doc_id", "text", 9, 10)
@@ -761,14 +752,14 @@ object Round12b {
       // for a fixed k), so they join the session memo like
       // Graphs.edges itself — each round's frame is built once and
       // read by both its stats row and the next peel.
-      val e1 = dfMemo.getOrElseUpdate((s, d, "kcore_e1"), {
+      val e1 = Memos.frame(s, d, "round12b/kcore_e1") {
         val e = peel(graft.iter.Graphs.edges(s, d), 3).persist()
         e.count(); e
-      })
-      val e2 = dfMemo.getOrElseUpdate((s, d, "kcore_e2"), {
+      }
+      val e2 = Memos.frame(s, d, "round12b/kcore_e2") {
         val e = peel(e1, 3).persist()
         e.count(); e
-      })
+      }
       val e3 = peel(e2, 3)
       coreStats(e1, 1).unionByName(coreStats(e2, 2))
         .unionByName(coreStats(e3, 3))
@@ -939,10 +930,10 @@ object Round12b {
       // stored state: the base partials ARE the persisted relation a
       // production run reads back from the partials store — session-
       // memoized like every stored-state family (IndexStore idiom)
-      val baseP = dfMemo.getOrElseUpdate((s, d, "band_partials"), {
+      val baseP = Memos.frame(s, d, "round12b/band_partials") {
         val p = bandPartials(base).persist()
         p.count(); p
-      })
+      }
       val keep = baseP
         .join(broadcast(touched), Seq("abucket"), "left_anti")
       // the sweep references its input from several plan branches;
@@ -988,7 +979,7 @@ object Round12b {
       // derivation of the immutable events table — so it rides the
       // session memo instead of re-running the user-keyed window +
       // checkpoint per invocation (2 of the row's 13 warm jobs).
-      val iv = dfMemo.getOrElseUpdate((s, d, "overlap_intervals"),
+      val iv = Memos.frame(s, d, "round12b/overlap_intervals")(
         sessionIntervals(s, d, lit(true)).localCheckpoint())
       Sweep.overlapStats(iv, Seq("user_id", "sidx"),
           "s_us", "e_us", OverlapBucketUs)
@@ -1085,20 +1076,14 @@ object Round12b {
       // input — memoize its scalar results across calls in a session
       // (the same table-statistics reuse every cost-based selector
       // in the engine applies)
-      def stats(): (Long, Long) = {
+      val stats = Memos.value(s, d, "round12b/gridStats") {
         val cells = ev.select(
           expr(s"(tsu - pmod(tsu, ${T}L)) div ${T}L").as("tc"),
           expr(s"(vc - pmod(vc, ${V}L)) div ${V}L").as("vcell"))
         val r = Sweep.gridPairVolume(cells).head()
-        volMemo.put((s, d, "grid_vol"), r.getAs[Long]("cand_volume"))
-        volMemo.put((s, d, "grid_rows"), r.getAs[Long]("n_rows"))
         (r.getAs[Long]("cand_volume"), r.getAs[Long]("n_rows"))
       }
-      val known = for {
-        v <- volMemo.get((s, d, "grid_vol"))
-        n <- volMemo.get((s, d, "grid_rows"))
-      } yield (v, n)
-      gridPairs2d(ev, T, V, knownStats = Some(known.getOrElse(stats())))
+      gridPairs2d(ev, T, V, knownStats = Some(stats))
     }),
 
     /** q217: INTEGER OUTLIER DETECTION [N data-quality] — per-user
@@ -1165,7 +1150,7 @@ object Round12b {
       * defect flips the hash. appId-isolated scratch, mode OVERWRITE
       * (q156 convention). */
     "q_scan_schema_evolution" -> ((s, d) => {
-      val scratch = s"${scratchRoot(s, d)}/evolve"
+      val scratch = s"${Memos.scratchDir(s, d, "r12b")}/evolve"
       val nat = nation(s, d)
       nat.filter(col("n_nationkey") < 13)
         .select("n_nationkey", "n_name")

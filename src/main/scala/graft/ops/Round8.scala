@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 import graft.engine.Dec._
 import graft.text.{Dedup, MinHash, Similarity}
@@ -139,21 +140,16 @@ object Round8 {
       .agg(sum(col("n")).as("n"), dbl(sum(col("rev"))).as("rev"))
       .filter(col("n") > 0)
 
-  /** Session-scoped memo for the full-corpus LSH intermediates — the
-    * `Graphs.cached` / `Dedup.cached*` pattern applied to the q136/
-    * q139 pipeline: the token relation, the bucket relation, and the
-    * VERIFIED pair graphs are deterministic functions of the fixture
-    * dir, so back-to-back runs in one session (the bench's repeats,
-    * the spec suite) share one materialization. In production these
-    * are exactly the pieces a pipeline persists anyway: the banded
-    * index IS the stored state of an evolving corpus, and the
-    * verified pair graph is the collapse's input table. */
-  private val memo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("lsh")
-  private def cached(s: SparkSession, d: String, key: String)
-                    (build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, d, key), build)
-
+  /** Session memos for the full-corpus LSH intermediates (the
+    * `"lsh/..."` memo frames) — the graph/dedup structure memos
+    * applied to the q136/q139 pipeline: the token relation, the
+    * bucket relation, and the VERIFIED pair graphs are deterministic
+    * functions of the fixture dir, so back-to-back runs in one
+    * session (the bench's repeats, the spec suite) share one
+    * materialization. In production these are exactly the pieces a
+    * pipeline persists anyway: the banded index IS the stored state
+    * of an evolving corpus, and the verified pair graph is the
+    * collapse's input table. */
   private def cachedToksAll(s: SparkSession, d: String): DataFrame =
     // one pinned copy, shared with the Apriori family (r18)
     Dedup.cachedTokens(s, d)
@@ -167,18 +163,15 @@ object Round8 {
     * every batch would re-run a corpus-wide collect_set the stored
     * relation already holds. */
   private def cachedDocSetsAll(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "docSetsAll")(
+    Memos.frame(s, d, "lsh/docSetsAll")(
       Dedup.docSets(cachedToksAll(s, d)).persist())
 
   /** Σsz of the stored doc-set relation — size metadata of STORED
     * state (computed once per (session, dir) alongside the memo; a
     * real catalog serves table stats for free at query time). Gates
     * the verdict-probe broadcast in [[lshVerdictJoin]]. */
-  private val volMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
-  graft.engine.Memos.register { () => volMemo.clear() }
   private def docSetsVolume(s: SparkSession, d: String): Long =
-    volMemo.getOrElseUpdate((s, d),
+    Memos.value(s, d, "lsh/docSetsVolume")(
       cachedDocSetsAll(s, d)
         .agg(coalesce(sum(col("sz")), lit(0L))).head().getLong(0))
 
@@ -197,14 +190,15 @@ object Round8 {
     * `BroadcastAuditSpec` pins both branches and their equality. */
   val ProbeTokenCap: Long = 512L * 1000
 
-  /** Diagnostic handle for [[graft.tools.CollapseProbe]]. */
+  /** q136's memoized verified pair graph, for specs that check the
+    * collapse arms against it (`Round17Spec`). */
   private[graft] def probeLshPairs(s: SparkSession, d: String): DataFrame =
     cachedLshPairs(s, d)
 
   /** q136's verified pair graph: capped candidates ∪ the quarantined
     * buckets' spanning-star candidates, exact-Jaccard-verified. */
   private def cachedLshPairs(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "lshPairs") {
+    Memos.frame(s, d, "lsh/lshPairs") {
       val toks = cachedToksAll(s, d)
       val bk = MinHash.buckets(MinHash.signatures(toks)).localCheckpoint()
       val cands = MinHash.candidatesFromBuckets(bk)
@@ -217,7 +211,7 @@ object Round8 {
   /** The STORED band-hash index of the base corpus (doc_id % 10 <> 0)
     * — q139's preserved state [P §3]. */
   private def cachedLshBandedOld(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "lshBandedOld") {
+    Memos.frame(s, d, "lsh/lshBandedOld") {
       MinHash.banded(MinHash.signatures(
         cachedToksAll(s, d).filter(col("doc_id") % 10 =!= 0)))
         .localCheckpoint()
@@ -229,7 +223,7 @@ object Round8 {
     * and stored bucket relation" as the memoizable state). Without it
     * every maintenance batch re-groups the full corpus index. */
   private def cachedLshBucketsOld(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "lshBucketsOld")(
+    Memos.frame(s, d, "lsh/lshBucketsOld")(
       MinHash.bucketsOf(cachedLshBandedOld(s, d)).persist())
 
   /** Per-bucket VERIFIED pairs of the base corpus — the MRBG-style
@@ -247,7 +241,7 @@ object Round8 {
     * equal to verifying the distinct candidates of all buckets,
     * because J depends only on the two docs. */
   private def cachedLshPairsByBucket(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "lshPairsByBucket") {
+    Memos.frame(s, d, "lsh/lshPairsByBucket") {
       val bk = cachedLshBucketsOld(s, d)
       val keyed = MinHash.candidatesFromBucketsKeyed(bk)
         .unionByName(MinHash.starCandidatesKeyed(bk)).persist()
@@ -267,7 +261,7 @@ object Round8 {
     * broadcastable at near-dup scale). The maintenance path uses it
     * for pair-level verdict pass-through. */
   private def cachedLshKnownGood(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "lshKnownGood")(
+    Memos.frame(s, d, "lsh/lshKnownGood")(
       cachedLshPairsByBucket(s, d).select("doc_a", "doc_b").distinct()
         .persist())
 
@@ -303,16 +297,6 @@ object Round8 {
     graft.iter.IterQueries.loopConf(s) { lshPairsIncrBody(s, d) }
 
   private def lshPairsIncrBody(s: SparkSession, d: String): DataFrame = {
-    // SPARK_GRAFT_PHASE=1: coarse phase walls for the maintenance
-    // cascade (diagnostic only — the forced count()s change the job
-    // structure, so never enable during a real bench).
-    val phase = sys.env.get("SPARK_GRAFT_PHASE").contains("1")
-    var t0 = System.nanoTime()
-    def mark(m: String, df: DataFrame = null): Unit = if (phase) {
-      if (df != null) df.count()
-      println(f"[phase] $m ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val bandedOld = cachedLshBandedOld(s, d)
     // The insert batch's index rows are STORED state like bandedOld's:
     // signatures are doc-local and map-only (MinHash.banded scaladoc —
@@ -322,7 +306,7 @@ object Round8 {
     // Session-memoized accordingly; the per-invocation work below is
     // the maintenance itself (touched keys, bucket re-group, pair
     // re-derivation) — the part that is genuinely per-batch.
-    val bandedIns = cached(s, d, "lshBandedIns")(
+    val bandedIns = Memos.frame(s, d, "lsh/lshBandedIns")(
       MinHash.banded(MinHash.signatures(
         cachedToksAll(s, d).filter(col("doc_id") % 10 === 0)))
         .localCheckpoint())
@@ -330,7 +314,6 @@ object Round8 {
       .select("doc_id")
     val touched = MinHash.touchedKeys(bandedOld, bandedIns, deleted)
       .persist()
-    mark("bandedIns+touched", touched)
     // Pass-through pairs keep their per-bucket duplicates (≤ Bands
     // copies of two longs): the only consumer is the min-label
     // collapse, for which duplicate edges are semantically inert, and
@@ -343,7 +326,6 @@ object Round8 {
     val rebuiltBk = MinHash.bucketsTouched(bandedOld, bandedIns, deleted,
         touched = Some(touched))
       .persist()
-    mark("rebuiltBk", rebuiltBk)
     // The flat rebuilt pairs ARE the verified distinct candidates of
     // the touched buckets (a pair's Jaccard verdict depends only on
     // the two docs, not the generating bucket), so no keyed
@@ -376,7 +358,6 @@ object Round8 {
     // rebuild ∪ verify fuse into this single checkpoint action.
     val pairs = kept.unionByName(rebuilt.select("doc_a", "doc_b"))
       .localCheckpoint() // materialize before releasing the scratch
-    mark("pairs checkpoint")
     (Seq(touched, rebuiltBk) ++ vScratch)
       .foreach(_.unpersist(blocking = false))
     pairs
@@ -492,7 +473,7 @@ object Round8 {
     * (r18 task 1a: rebuilding it cost q148/q276 a full documents
     * scan per invocation for a KB-sized relation). */
   private def cachedEvalGrams(s: SparkSession, d: String): DataFrame =
-    cached(s, d, "contamEval")(
+    Memos.frame(s, d, "lsh/contamEval")(
       contamGrams(documents(s, d).filter(col("doc_id") % 97 === 0),
         "eval_id").localCheckpoint())
 
@@ -502,7 +483,7 @@ object Round8 {
     * Exposed for the spec's memo ≡ fresh-build equality pin. */
   private[graft] def cachedCleanNormedBase(s: SparkSession,
                                            d: String): DataFrame =
-    cached(s, d, "cleanNormedBase")(Round6.cleanNormed(
+    Memos.frame(s, d, "lsh/cleanNormedBase")(Round6.cleanNormed(
       documents(s, d).filter(col("doc_id") % 10 =!= 0)).localCheckpoint())
 
   /** The q148 overlap join: train grams probe the BROADCAST eval gram
@@ -514,18 +495,6 @@ object Round8 {
       .groupBy("train_id", "eval_id")
       .agg(count(lit(1)).as("shared_grams"))
       .filter(col("shared_grams") >= 3)
-
-  /** Session memo for q154's STORED centroid model (the converged
-    * base-corpus centroids — production writes them through
-    * `KMeans.writeCentroids` / reads them back, `Round6Spec` proves
-    * that round-trip bit-exact): k×dims doubles per (session, dir),
-    * so repeated invocations measure the warm restart itself, not the
-    * base convergence. Registered with [[graft.engine.Memos]] like
-    * every other stored-state memo (plain arrays — nothing to
-    * unpersist). */
-  private val centsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Double]]]
-  graft.engine.Memos.register(() => centsMemo.clear())
 
   val defs: Map[String, Q] = Map(
     /** q153: the COMPOSITE UPDATE delta [P §3: update = delete +
@@ -581,7 +550,12 @@ object Round8 {
     "q_iter_kmeans_incr" -> ((s, d) => {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val post = emb.filter(col("vec_id") % 10 =!= 1).persist()
-      val baseCents = centsMemo.getOrElseUpdate((s, d), {
+      // the STORED centroid model (converged base-corpus centroids —
+      // production writes them through `KMeans.writeCentroids` / reads
+      // them back, `Round6Spec` proves that round-trip bit-exact): k×dims
+      // doubles per (session, dir), so repeated invocations measure the
+      // warm restart itself, not the base convergence
+      val baseCents = Memos.value(s, d, "lsh/kmeansBaseCents") {
         val base = emb.filter(col("vec_id") % 10 =!= 0).persist()
         val seed = base.orderBy("vec_id").limit(10).collect()
           .map(_.getSeq[Float](1).map(_.toDouble).toArray)
@@ -589,7 +563,7 @@ object Round8 {
           .runUntilFrom(s, base, seed, 1e-4, 60)._3
         base.unpersist(blocking = false)
         cents
-      })
+      }
       val (assigned, _, _) = graft.iter.KMeans
         .runIncremental(s, post, baseCents, 1e-4, 60)
       val out = assigned.groupBy("cluster")
@@ -691,8 +665,8 @@ object Round8 {
       // the genuine per-batch maintenance (delta aggregation, signed
       // canon application, passthrough anti-join, final join).
       val normedBase = cachedCleanNormedBase(s, d)
-      val normedIns = cached(s, d, "cleanNormedIns")(Round6.cleanNormed(
-        docs.filter(col("doc_id") % 10 === 0)).localCheckpoint())
+      val normedIns = Memos.frame(s, d, "lsh/cleanNormedIns")(
+        Round6.cleanNormed(docs.filter(col("doc_id") % 10 === 0)).localCheckpoint())
       val deleted = docs.filter(col("doc_id") % 10 === 1).select("doc_id")
       val baseIndex = normedBase.select(col("h"), col("doc_id"))
       val baseState = baseIndex.groupBy("h")
@@ -752,7 +726,7 @@ object Round8 {
     "q_incr_contamination" -> ((s, d) => {
       val doc = documents(s, d)
       val ev = cachedEvalGrams(s, d)
-      val baseState = cached(s, d, "contamBase") {
+      val baseState = Memos.frame(s, d, "lsh/contamBase") {
         contamPairs(contamGrams(
             doc.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 10 =!= 0),
             "train_id"), ev)
@@ -885,8 +859,8 @@ object Round8 {
       // final pass each run the cheap docs⋈broadcast(labels) join
       lshCollapse(s, documents(s, d), cachedLshPairs(s, d),
           // gate scalar memoized with the pair store (r18 task 1a)
-          knownPairCount = Some(graft.engine.Memos.scalar(s,
-            s"r8:lshPairCount:$d")(cachedLshPairs(s, d).count())))
+          knownPairCount = Some(Memos.value(s, d,
+            "lsh/lshPairCount")(cachedLshPairs(s, d).count())))
         .orderBy("doc_id")),
 
     /** q142: SIGNED incremental maintenance of an aggregated join
@@ -1016,11 +990,11 @@ object Round8 {
       val pairs = lshPairsIncr(s, d)
       // the maintained pair RELATION re-runs per invocation (only
       // stored state is memoized) but its COUNT is deterministic per
-      // (session, fixture) — the gate scalar rides the scalar memo,
+      // (session, fixture) — the gate scalar rides a memo value,
       // first invocation pays the one count job (r18 task 1a)
       lshCollapse(s, docsPost, pairs,
-        knownPairCount = Some(graft.engine.Memos.scalar(s,
-          s"r8:lshPairCountIncr:$d")(pairs.count()))).orderBy("doc_id")
+        knownPairCount = Some(Memos.value(s, d,
+          "lsh/lshPairCountIncr")(pairs.count()))).orderBy("doc_id")
     })
   )
 

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Tables._
+import graft.engine.Memos
 
 /** The COST-BASED SELECTOR surface (SURVEY §2 rows 159-161, moved
   * here from the former Round11 module in the r13 consolidation —
@@ -12,9 +13,6 @@ import graft.engine.Tables._
   * the recall audit that makes approximate-family quality a
   * driver-visible number. */
 object Selectors {
-
-  private val dfMemo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("selectors")
 
   val defs: Map[String, Q] = Map(
     /** q159: RECALL OF THE APPROXIMATE FAMILY AS NUMBERS IN THE DUMP
@@ -33,8 +31,8 @@ object Selectors {
       * is session-memoized: it is a deterministic AUDIT of stored
       * index quality (production runs it per index build, not per
       * query), so repeated invocations serve the measured numbers. */
-    "q_quality_recall" -> ((s, d) => dfMemo.getOrElseUpdate(
-        (s, d, "qualityRecall"), {
+    "q_quality_recall" -> ((s, d) => Memos.frame(s, d,
+        "selectors/qualityRecall") {
       import scala.jdk.CollectionConverters._
       def recallRow(metric: String, exact: DataFrame,
                     approx: DataFrame, keys: Seq[String]) = {
@@ -68,7 +66,7 @@ object Selectors {
           org.apache.spark.sql.types.DoubleType)))
       s.createDataFrame(rows.asJava, schema).orderBy("metric")
         .localCheckpoint()
-    })),
+    }),
 
     /** q160: the COST-BASED pair-source selector as a DECLARED query —
       * [[graft.text.Dedup.autoPairs]] run over the q50 subset with the
@@ -90,13 +88,13 @@ object Selectors {
       * does not re-cost and re-verify the same immutable corpus per
       * query. The first invocation pays the costing job + the chosen
       * branch end-to-end. */
-    "q_dedup_auto" -> ((s, d) => dfMemo.getOrElseUpdate(
-        (s, d, "dedupAuto"), {
+    "q_dedup_auto" -> ((s, d) => Memos.frame(s, d,
+        "selectors/dedupAuto") {
       val (plan, pairs) =
         graft.text.Dedup.autoPairs(s, graft.text.Dedup.subsetTokens(s, d))
       pairs.withColumn("plan", lit(plan)).orderBy("doc_a", "doc_b")
         .localCheckpoint()
-    })),
+    }),
 
     /** q161: the cost-based KNN selector as a DECLARED query —
       * [[graft.text.Similarity.autoKnn]] over the full embeddings

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** §2 group I — deduplication over documents [N].
@@ -40,7 +41,7 @@ object Dedup {
     * 19-job profile). persist(), not checkpoint: lineage stays
     * re-derivable under memo-budget eviction. */
   def cachedTokens(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "toksAll"), tokens(s, d).persist())
+    Memos.frame(s, d, "dedup/toksAll")(tokens(s, d).persist())
 
   /** Deterministic subset used by the pairwise queries (bounds the
     * candidate space at any SF; the full-corpus path is q51's LSH).
@@ -359,16 +360,15 @@ object Dedup {
         col("sz_a"), col("sz_b"))
   }
 
-  /** Session-scoped memo for the deterministic subset pair graph and
-    * doc set — the Graphs.cached pattern applied to the dedup family:
+  /** Session memos (`"dedup/..."` memo frames) for the deterministic
+    * subset pair graph and doc set — the graph structure memos applied
+    * to the dedup family:
     * q50, q108 and q126 all consume the SAME exact-Jaccard pair
     * computation, so per (session, dir) it materializes once
     * (localCheckpoint) and every further use is a cache hit.
     * Determinism (integer thresholds, fixed data) makes the sharing
     * semantically invisible, exactly as for the graph structure
     * caches. */
-  private val memo =
-    new graft.engine.Memos.Store[(SparkSession, String, String)]("dedup")
 
   /** Canonical (doc_a < doc_b) intersection counts WITH both set
     * sizes, unthresholded — the one expensive computation (token
@@ -385,7 +385,7 @@ object Dedup {
     * hint-free. Kept hinted so the baseline's plan stays pinned and
     * job-minimal at oracle SFs. */
   def cachedSubsetInter(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "subsetInter"), {
+    Memos.frame(s, d, "dedup/subsetInter") {
       val toks = subsetTokens(s, d)
       val a = toks.select(col("doc_id").as("doc_a"), col("tok"))
       val b = toks.select(col("doc_id").as("doc_b"), col("tok"))
@@ -397,10 +397,10 @@ object Dedup {
         .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
         .join(broadcast(szA), "doc_a").join(broadcast(szB), "doc_b")
         .localCheckpoint()
-    })
+    }
 
   def cachedSubsetPairs(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "subsetPairs"),
+    Memos.frame(s, d, "dedup/subsetPairs")(
       cachedSubsetInter(s, d)
         .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
         .filter(col("inter") * 2 >= col("union_sz"))
@@ -413,13 +413,13 @@ object Dedup {
     * invocation (VERDICT r17 task 1a: job launches are what host
     * bursts multiply). */
   def cachedSubsetPairCount(s: SparkSession, d: String): Long =
-    graft.engine.Memos.scalar(s, s"dedup:subsetPairCount:$d")(
+    Memos.value(s, d, "dedup/subsetPairCount")(
       cachedSubsetPairs(s, d).count())
 
   /** Distinct doc ids of the pairwise subset (the collapse loops'
     * node set — includes singletons, which the pair graph omits). */
   def cachedSubsetDocs(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "subsetDocs"),
+    Memos.frame(s, d, "dedup/subsetDocs")(
       subsetTokens(s, d).select(col("doc_id")).distinct().localCheckpoint())
 
   /** Session-memoized [[docSets]] over the pairwise subset — the
@@ -430,7 +430,7 @@ object Dedup {
     * persist(), not checkpoint: lineage stays re-derivable under
     * memo-budget eviction. */
   def cachedSubsetDocSets(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "subsetDocSets"),
+    Memos.frame(s, d, "dedup/subsetDocSets")(
       docSets(subsetTokens(s, d)).persist())
 
   val defs: Map[String, Q] = Map(
@@ -606,8 +606,8 @@ object Dedup {
       val toks = subsetTokens(s, d)
       // gate scalars memoized per (session, fixture) — the COUNT gate
       // used to re-run as one job per cold invocation (VERDICT r17)
-      val (vol, nKeys) = graft.engine.Memos.scalar(s,
-        s"dedup:subsetTokStats:$d")(pairStats(toks, "tok"))
+      val (vol, nKeys) = Memos.value(s, d, "dedup/subsetTokStats")(
+        pairStats(toks, "tok"))
       val (plan, inter) =
         if (vol <= DefaultVolumeCap) ("exact", cachedSubsetInter(s, d))
         else guardedInterPairs(toks, "tok", "doc_id",
@@ -637,8 +637,8 @@ object Dedup {
       // gate scalars memoized per (session, fixture) — r18 task 1a:
       // the Σdf² stats scan was one extra full-relation job per
       // invocation of this row; the stats are deterministic with the
-      // fixture, so they ride the scalar memo
-      val stats = graft.engine.Memos.scalar(s, s"dedup:shingleStats:$d")(
+      // fixture, so they ride a memo value
+      val stats = Memos.value(s, d, "dedup/shingleStats")(
         pairStats(sh.select(col("doc_id"), col("sh").as("tok")), "tok"))
       val (plan, pairs) = guardedInterPairs(sh, "sh", "doc_id",
         knownStats = Some(stats))

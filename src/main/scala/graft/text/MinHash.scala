@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** §2 row 51 — MinHash + LSH banding near-dup detection [N], the
@@ -253,10 +254,8 @@ object MinHash {
     * the index is deterministic static structure per (session,
     * fixture) — with it memoized, a warm invocation pays buckets →
     * candidates → verify, the per-query share of the pipeline. */
-  private val memo = new graft.engine.Memos
-    .Store[(SparkSession, String, String)]("minhash")
   private def bandedSubsetCached(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "bandedSubset"),
+    Memos.frame(s, d, "minhash/bandedSubset")(
       banded(signatures(Dedup.subsetTokens(s, d))).localCheckpoint())
 
   val defs: Map[String, Q] = Map(

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 
 /** §2 row 66 — SimHash near-dup detection [N]: 64-bit signatures from
@@ -246,11 +247,9 @@ object SimHash {
   /** The STORED state of q147's base subset corpus (doc_id % 5 == 0
     * minus the % 50 == 0 insert class) — the preserved state [P §3],
     * session-memoized like `Round8`'s LSH stores. */
-  private val memo = new graft.engine.Memos
-    .Store[(org.apache.spark.sql.SparkSession, String, String)]("simhash")
   private def bandedOldCached(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "bandedOld"),
+    Memos.frame(s, d, "simhash/bandedOld")(
       banded(signatures(
         Dedup.subsetTokens(s, d).filter(col("doc_id") % 50 =!= 0)))
         .localCheckpoint())
@@ -262,7 +261,7 @@ object SimHash {
     * lossless). */
   private def bandedInsCached(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "bandedIns"),
+    Memos.frame(s, d, "simhash/bandedIns")(
       banded(signatures(
         Dedup.subsetTokens(s, d).filter(col("doc_id") % 50 === 0)))
         .localCheckpoint())
@@ -276,7 +275,7 @@ object SimHash {
     * unlike MinHash no doc-set join is needed even at build time. */
   private def pairsByBucketCached(s: org.apache.spark.sql.SparkSession,
                                   d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "pairsByBucket"),
+    Memos.frame(s, d, "simhash/pairsByBucket")(
       pairsFromBucketsKeyed(bucketsOf(bandedOldCached(s, d)))
         .withColumn("hamming",
           bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("bigint"))

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Memos
 import graft.engine.Tables._
 import graft.iter.KMeans
 
@@ -22,15 +23,12 @@ import graft.iter.KMeans
   * doubles match bitwise. */
 object Similarity {
 
-  /** Session-scoped memo for the cosine>=0.4 pair graph (the
+  /** Session-memoized cosine>=0.4 pair graph (the
     * Dedup.cachedSubsetPairs pattern): q110 and q126 consume the same
     * deterministic O(n²) cosine computation, so it materializes once
     * per (session, dir). */
-  private val memo =
-    new graft.engine.Memos.Store[(SparkSession, String)]("similarity")
-
   def cachedCosinePairs04(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d),
+    Memos.frame(s, d, "similarity/cosinePairs04")(
       cosinePairs(embeddings(s, d).select(col("vec_id"), col("embedding")),
         0.4).select("vec_a", "vec_b").localCheckpoint())
 
@@ -38,7 +36,7 @@ object Similarity {
     * gate scalar for q110/q126, one count per (session, fixture)
     * instead of one job per invocation (VERDICT r17 task 1a). */
   def cachedCosinePairs04Count(s: SparkSession, d: String): Long =
-    graft.engine.Memos.scalar(s, s"sim:cosPairCount04:$d")(
+    Memos.value(s, d, "similarity/cosPairCount04")(
       cachedCosinePairs04(s, d).count())
 
   /** Session-memoized [[quantize]] of the fixture corpus — THE stored
@@ -56,7 +54,7 @@ object Similarity {
     * static structure (per-vector scale+floor), exactly the stored
     * state q275's scaladoc declares the production representation. */
   def cachedQuantized(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, s"$d#qcodes"),
+    Memos.frame(s, d, "similarity/qcodes")(
       quantize(embeddings(s, d).select(col("vec_id"), col("embedding")))
         .persist())
 
@@ -71,20 +69,25 @@ object Similarity {
     * k), exactly the aprioriBaseState / cachedLshBandedOld class, so
     * it rides the same memos; the SEARCH (probe scoring, pruning,
     * top-k) still runs per invocation. Centroids (the k-row model)
-    * memoize as a scalar next to it. Builds over [[cachedQuantized]]
-    * (same relation — assign only appends `cluster`). */
-  def cachedIvfIndexQuantized(s: SparkSession, d: String, k: Int)
-      : (DataFrame, Array[Array[Double]]) = {
-    val cents = graft.engine.Memos.scalar(s, s"sim:ivfqCents:$d:$k") {
+    * memoize as a value next to it ([[ivfCentroids]]). Builds over
+    * [[cachedQuantized]] (same relation — assign only appends
+    * `cluster`). */
+  private def ivfCentroids(s: SparkSession, d: String, k: Int)
+      : Array[Array[Double]] =
+    Memos.value(s, d, s"similarity/ivfqCents:$k") {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val kk = if (k > 0) k
         else math.max(1, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
       val c = emb.orderBy("vec_id").limit(kk).collect()
         .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-      require(c.length == kk, s"cachedIvfIndexQuantized: need >= $kk vectors")
+      require(c.length == kk, s"IVF centroids: need >= $kk vectors")
       c
     }
-    val idx = memo.getOrElseUpdate((s, s"$d#ivfqIdx:$k"),
+
+  def cachedIvfIndexQuantized(s: SparkSession, d: String, k: Int)
+      : (DataFrame, Array[Array[Double]]) = {
+    val cents = ivfCentroids(s, d, k)
+    val idx = Memos.frame(s, d, s"similarity/ivfqIdx:$k")(
       KMeans.assign(s, cachedQuantized(s, d), cents)
         .select("vec_id", "cluster", "qv", "qn").persist())
     (idx, cents)
@@ -99,16 +102,8 @@ object Similarity {
     * construction (the q277 scaladoc's composition argument). */
   def cachedIvfIndex(s: SparkSession, d: String, k: Int)
       : (DataFrame, Array[Array[Double]]) = {
-    val cents = graft.engine.Memos.scalar(s, s"sim:ivfqCents:$d:$k") {
-      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val kk = if (k > 0) k
-        else math.max(1, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val c = emb.orderBy("vec_id").limit(kk).collect()
-        .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-      require(c.length == kk, s"cachedIvfIndex: need >= $kk vectors")
-      c
-    }
-    val idx = memo.getOrElseUpdate((s, s"$d#ivfIdx:$k"),
+    val cents = ivfCentroids(s, d, k)
+    val idx = Memos.frame(s, d, s"similarity/ivfIdx:$k")(
       KMeans.assign(s,
           embeddings(s, d).select(col("vec_id"), col("embedding")), cents)
         .persist())

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MULTI-PROCESS smoke tier (VERDICT r13 task 3): the whole declared
@@ -112,18 +112,11 @@ object ClusterSmoke {
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
     val classes = new java.io.File("target/scala-2.13/classes")
       .getAbsolutePath
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,2048]")
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath",
-        s"$classes:/opt/spark/jars/*")
-      .config("spark.executor.extraJavaOptions",
-        s"$addOpens -Duser.timezone=UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Sessions.create("local-cluster[2,2,2048]",
+      "spark.app.name" -> "graft-cluster-smoke",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.executor.extraClassPath" -> s"$classes:/opt/spark/jars/*",
+      "spark.executor.extraJavaOptions" -> s"$addOpens -Duser.timezone=UTC")
 
     var failed = List.empty[(String, String)]
     def check(name: String)(body: => Unit): Unit =

@@ -45,12 +45,8 @@ object GenScale {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Sessions.create(
+      s"local[${Runtime.getRuntime.availableProcessors}]")
     mainWith(spark, src, out, factor)
     spark.stop()
   }

@@ -1,15 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.engine.Memos
 import scala.jdk.CollectionConverters._
 
-/** VERDICT r14 task 4 — the session memo stores carry a byte budget:
-  * over-budget admissions evict least-recently-hit entries across all
-  * stores, the release is REAL (checkpoint blocks freed at the RDD,
-  * not left to ContextCleaner GC), and a later re-miss rebuilds
-  * correctly. */
+/** Memo frames carry a byte budget: over-budget admissions evict
+  * least-recently-hit frames across every module, the release is REAL
+  * (checkpoint blocks freed at the RDD, not left to ContextCleaner
+  * GC), and a later re-miss rebuilds correctly. Each case keys its
+  * frames under its own fixture dir, so the live-entry count of that
+  * dir is the case's own store size. */
 class MemoBudgetSpec extends SparkSpecBase {
 
   /** Budgeted scope with the working-set guard OFF (minResident=0) so
@@ -26,46 +28,47 @@ class MemoBudgetSpec extends SparkSpecBase {
     }
   }
 
+  private def persisted(lo: Long, n: Long): DataFrame = {
+    val df = spark.range(lo, lo + n).toDF("v").persist(); df.count(); df
+  }
+
+  private def live(dir: String): Int = Memos.frameCount(spark, dir)
+
   test("over-budget admission evicts the LRU entry; re-miss rebuilds " +
       "correctly; just-admitted entry is exempt") {
     // isolate: drop every module memo so only spec entries can be
     // victims (module memos rebuild on their next use by design)
     Memos.clearAll()
-    val store = new Memos.Store[String]("spec")
+    val dir = "memo-spec/lru"
     var builds = 0
-    def build(lo: Long): org.apache.spark.sql.DataFrame = {
-      builds += 1
-      val df = spark.range(lo, lo + 10000).toDF("v").persist()
-      df.count()
-      df
-    }
+    def build(lo: Long): DataFrame = { builds += 1; persisted(lo, 10000) }
     withBudget(1L) { // everything is over budget: each admission evicts
       val before = Memos.evictions.get()
-      val a = store.getOrElseUpdate("a", build(0))
+      val a = Memos.frame(spark, dir, "a")(build(0))
       assert(a.count() == 10000)
-      val b = store.getOrElseUpdate("b", build(100))
+      val b = Memos.frame(spark, dir, "b")(build(100))
       // b's admission must evict a (the only other entry), never b
-      assert(store.size == 1, s"expected only b to survive: ${store.size}")
+      assert(live(dir) == 1, s"expected only b to survive: ${live(dir)}")
       assert(Memos.evictions.get() > before, "eviction counter did not move")
       assert(b.storageLevel != StorageLevel.NONE,
         "the just-admitted entry must not be evicted")
       // a's frame was unpersisted but is lineage-backed: still readable
       assert(a.storageLevel == StorageLevel.NONE)
       // re-miss rebuilds from source
-      val a2 = store.getOrElseUpdate("a", build(0))
+      val a2 = Memos.frame(spark, dir, "a")(build(0))
       assert(builds == 3, s"expected a rebuild on re-miss, builds=$builds")
       assert(a2.count() == 10000 &&
         a2.agg(min(col("v"))).head().getLong(0) == 0L,
         "rebuilt entry returned wrong data")
     }
-    store.clear()
+    Memos.clearAll()
   }
 
   test("eviction releases checkpoint blocks at the RDD (the real free)") {
     Memos.clearAll()
-    val store = new Memos.Store[String]("spec_ckpt")
+    val dir = "memo-spec/ckpt"
     // a checkpointed entry: Dataset.unpersist alone would NOT free it
-    val ck = store.getOrElseUpdate("ck",
+    val ck = Memos.frame(spark, dir, "ck")(
       spark.range(0, 50000).toDF("v").localCheckpoint())
     val rdds = org.apache.spark.sql.graftbridge.Bridge.planRdds(ck)
     assert(rdds.nonEmpty, "checkpointed frame must expose its plan RDD")
@@ -73,73 +76,68 @@ class MemoBudgetSpec extends SparkSpecBase {
       "checkpoint blocks should be cached before eviction")
     withBudget(1L) {
       // admitting anything evicts ck (LRU, ck is the only other entry)
-      store.getOrElseUpdate("other", {
-        val df = spark.range(0, 10).toDF("v").persist(); df.count(); df
-      })
+      Memos.frame(spark, dir, "other")(persisted(0, 10))
     }
-    assert(store.size == 1, "ck must be evicted")
+    assert(live(dir) == 1, "ck must be evicted")
     assert(rdds.forall(_.getStorageLevel == StorageLevel.NONE),
       "eviction must unpersist the checkpoint RDD blocks, not just the " +
         "CacheManager entry")
-    store.clear()
+    Memos.clearAll()
   }
 
   test("evicting a DERIVED entry must not free a live dependency's " +
       "checkpoint blocks (shared-RDD ownership guard, ADVICE r15)") {
     Memos.clearAll()
-    val store = new Memos.Store[String]("spec_shared")
+    val dir = "memo-spec/shared"
     // base: a localCheckpointed frame (the lshBandedOld shape)
-    val base = store.getOrElseUpdate("base",
+    val base = Memos.frame(spark, dir, "base")(
       spark.range(0, 50000).toDF("v").localCheckpoint())
     val baseRdds = org.apache.spark.sql.graftbridge.Bridge.planRdds(base)
     assert(baseRdds.nonEmpty &&
       baseRdds.forall(_.getStorageLevel != StorageLevel.NONE))
     // derived: persisted frame BUILT OVER base — its plan embeds
     // base's checkpoint RDD (the cachedLshBucketsOld shape)
-    val derived = store.getOrElseUpdate("derived", {
+    val derived = Memos.frame(spark, dir, "derived") {
       val df = base.filter(col("v") % 2 === 0).persist(); df.count(); df
-    })
+    }
     assert(org.apache.spark.sql.graftbridge.Bridge.planRdds(derived)
       .map(_.id).toSet.intersect(baseRdds.map(_.id).toSet).nonEmpty,
       "fixture must actually share the checkpoint RDD")
     // bump base so derived is the LRU victim, then force an eviction
     // that stops AFTER derived: budget = current total - 1, so evicting
     // derived (much larger than the tiny new entry) gets back under it
-    store.getOrElseUpdate("base", fail("base must be a hit"))
+    Memos.frame(spark, dir, "base")(fail("base must be a hit"))
     withBudget(Memos.storedBytes(spark) - 1) {
-      store.getOrElseUpdate("other", {
-        val df = spark.range(0, 10).toDF("v").persist(); df.count(); df
-      })
+      Memos.frame(spark, dir, "other")(persisted(0, 10))
     }
     assert(derived.storageLevel == StorageLevel.NONE, "derived evicted")
     assert(baseRdds.forall(_.getStorageLevel != StorageLevel.NONE),
       "derived's eviction must NOT unpersist the live base entry's " +
         "checkpoint blocks")
     // base still readable after the derived eviction
-    assert(store.getOrElseUpdate("base", fail("base must still be live"))
+    assert(Memos.frame(spark, dir, "base")(fail("base must still be live"))
       .count() == 50000)
     // releasing the LAST referencing slot frees the shared RDD
-    store.clear()
+    Memos.clearAll()
     assert(baseRdds.forall(_.getStorageLevel == StorageLevel.NONE),
-      "clear() must free the shared checkpoint once no slot embeds it")
+      "clearAll must free the shared checkpoint once no slot embeds it")
   }
 
   test("concurrent misses on one key admit exactly one frame; the " +
       "loser's build is released, both callers get the winner (ADVICE r15)") {
     Memos.clearAll()
-    val store = new Memos.Store[String]("spec_race")
+    val dir = "memo-spec/race"
     val gate = new java.util.concurrent.CyclicBarrier(2)
-    val built = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.DataFrame]()
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
     // localCheckpoint, not persist: CacheManager dedupes identical
     // persisted plans into ONE entry, but each checkpoint build pins
     // its own distinct RDD blocks — the actual leak shape.
-    def racer(): org.apache.spark.sql.DataFrame =
-      store.getOrElseUpdate("k", {
+    def racer(): DataFrame =
+      Memos.frame(spark, dir, "k") {
         gate.await() // both threads are inside build before either puts
         val df = spark.range(0, 5000).toDF("v").localCheckpoint()
         built.add(df); df
-      })
+      }
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -147,7 +145,7 @@ class MemoBudgetSpec extends SparkSpecBase {
     val (d1, d2) = (Await.result(r1, 60.seconds), Await.result(r2, 60.seconds))
     assert(built.size == 2, "fixture must actually race both builds")
     assert(d1 eq d2, "both callers must receive the same winning frame")
-    assert(store.size == 1)
+    assert(live(dir) == 1)
     // exactly one of the two built frames keeps its checkpoint blocks
     // (the winner); the loser's must have been released at the RDD,
     // not orphaned in the block manager
@@ -158,15 +156,15 @@ class MemoBudgetSpec extends SparkSpecBase {
     assert(org.apache.spark.sql.graftbridge.Bridge.planRdds(d1)
       .forall(_.getStorageLevel != StorageLevel.NONE),
       "the returned winner must be the pinned one")
-    store.clear()
+    Memos.clearAll()
   }
 
   test("working-set guard: the N newest-hit entries are never evicted " +
       "even under an out-of-contract budget (r16 — an already-fetched " +
       "checkpointed frame must survive until its query reads it)") {
     Memos.clearAll()
-    val store = new Memos.Store[Int]("spec_guard")
-    def admit(i: Int) = store.getOrElseUpdate(i,
+    val dir = "memo-spec/guard"
+    def admit(i: Int) = Memos.frame(spark, dir, i.toString)(
       spark.range(i * 1000L, i * 1000L + 1000).toDF("v").localCheckpoint())
     val before = Memos.evictions.get()
     try {
@@ -176,11 +174,10 @@ class MemoBudgetSpec extends SparkSpecBase {
       // 5 entries, guard 3: only the 2 oldest (1, 2) may be evicted —
       // the newest 3 (3, 4, 5 at admission time) stay readable even
       // though every admission ran over budget
-      assert(store.size >= 3, s"guard violated: ${store.size} survive")
+      assert(live(dir) >= 3, s"guard violated: ${live(dir)} survive")
       frames.drop(2).foreach { case (i, df) =>
         val rdds = org.apache.spark.sql.graftbridge.Bridge.planRdds(df)
-        assert(rdds.forall(_.getStorageLevel !=
-            org.apache.spark.storage.StorageLevel.NONE),
+        assert(rdds.forall(_.getStorageLevel != StorageLevel.NONE),
           s"entry $i inside the guard window lost its checkpoint blocks")
         assert(df.count() == 1000)
       }
@@ -189,7 +186,7 @@ class MemoBudgetSpec extends SparkSpecBase {
     } finally {
       spark.conf.unset(Memos.BudgetConf)
       spark.conf.unset(Memos.MinResidentConf)
-      store.clear()
+      Memos.clearAll()
     }
   }
 
@@ -197,18 +194,36 @@ class MemoBudgetSpec extends SparkSpecBase {
       "driver heap") {
     Memos.clearAll()
     assert(Memos.budgetBytes(spark) == Runtime.getRuntime.maxMemory() / 2)
-    val store = new Memos.Store[String]("spec_nofree")
+    val dir = "memo-spec/nofree"
     val before = Memos.evictions.get()
-    val a = store.getOrElseUpdate("a", {
-      val df = spark.range(0, 1000).toDF("v").persist(); df.count(); df
-    })
-    store.getOrElseUpdate("b", {
-      val df = spark.range(0, 1000).toDF("v").persist(); df.count(); df
-    })
+    val a = Memos.frame(spark, dir, "a")(persisted(0, 1000))
+    Memos.frame(spark, dir, "b")(persisted(0, 1000))
     assert(Memos.evictions.get() == before, "evicted under budget")
-    assert(store.size == 2)
+    assert(live(dir) == 2)
     assert(a.storageLevel != StorageLevel.NONE)
-    store.clear()
-    assert(store.size == 0)
+    Memos.clearAll()
+    assert(live(dir) == 0)
+  }
+
+  test("q_incr_linreg's stored partials are budgeted: an undersized " +
+      "budget evicts them and the row rebuilds to the same rows") {
+    Memos.clearAll()
+    val row = SparkEntry.queries("q_incr_linreg")
+    val expected = row(spark, sfDir).collect().toSeq
+    val partials = Memos.frame(spark, sfDir, "analytics_ols/linreg_partials")(
+      fail("q_incr_linreg must memoize its stored partials"))
+    assert(partials.storageLevel != StorageLevel.NONE)
+    withBudget(1L) {
+      val before = Memos.evictions.get()
+      Memos.frame(spark, "memo-spec/linreg", "other")(persisted(0, 10))
+      assert(Memos.evictions.get() > before, "eviction counter did not move")
+      assert(partials.storageLevel == StorageLevel.NONE,
+        "the stored partials must be released by the budget")
+      assert(live(sfDir) == 0, "the partials must leave the memo")
+      assert(row(spark, sfDir).collect().toSeq == expected,
+        "the rebuilt partials must yield the same rows")
+      assert(live(sfDir) == 1, "the re-miss must re-admit the partials")
+    }
+    Memos.clearAll()
   }
 }

@@ -30,17 +30,9 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.engine.Sessions.create("local[4]",
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
 }

@@ -20,13 +20,18 @@ import scala.collection.concurrent.TrieMap
   *    any checkpoint RDD blocks in the frame's plan — and a later
   *    re-miss simply rebuilds (`MemoBudgetSpec` proves it).
   *  - [[value]] — scalars, flags and small driver arrays (a few longs
-  *    each): outside the budget.
+  *    each): outside the budget. [[stored]] and [[replace]] are its
+  *    peek and overwrite, for an owner that can tell a stale value.
   *  - [[scratchDir]] — the appId-isolated directory a stored layout
   *    is written to.
   *
+  * The `tables/<name>` value tags are the session's table catalog
+  * (`Tables.tbl`): one fingerprinted schema per fixture table path,
+  * replaced when the table's files change.
+  *
   * [[clearAll]] drops all of it: for a harness that switches fixture
-  * dirs or wants a cold-cache measurement (nothing calls it on the
-  * bench path, where pinned reuse is the documented methodology).
+  * dirs or wants a cold-cache measurement (the benchmark calls it
+  * between session set-ups and before each registry workload).
   *
   * Eviction-safety contract: an evicted checkpointed frame is
   * unreadable (its lineage was truncated at materialization), so
@@ -130,6 +135,14 @@ object Memos {
     * session instead of one per invocation. Outside the byte budget. */
   def value[T](s: SparkSession, d: String, tag: String)(build: => T): T =
     values.getOrElseUpdate(Key(s, d, tag), build).asInstanceOf[T]
+
+  /** The value under (s, d, tag), if one is stored. */
+  def stored[T](s: SparkSession, d: String, tag: String): Option[T] =
+    values.get(Key(s, d, tag)).map(_.asInstanceOf[T])
+
+  /** Store `v` under (s, d, tag), replacing any earlier value. */
+  def replace[T](s: SparkSession, d: String, tag: String, v: T): Unit =
+    values.update(Key(s, d, tag), v)
 
   /** The scratch directory of stored layout `tag` for fixture `d`:
     * stable within a session (writes overwrite — no accumulation

@@ -1,7 +1,11 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types._
 
 /** Typed fixture readers for the driver-generated testdata
@@ -18,9 +22,83 @@ object Tables {
   /** The driver contract's query shape: (session, sf-dir) => result. */
   type Q = (SparkSession, String) => DataFrame
 
-  def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(s, dir)
-    else s.read.parquet(s"$dir/$name.parquet")
+  /** Fixture table `name` under `dir`, resolved through the session's
+    * table catalog: its schema is inferred once per session and
+    * re-inferred only when the table's files change.
+    *
+    * The catalog entry lives in [[Memos.value]]'s store under tag
+    * `tables/<name>` (one entry per path, replaced on change, dropped by
+    * [[Memos.clearAll]]) and holds the fingerprint of the files it was
+    * resolved from — the sorted (path, length, modification time) of
+    * every file the read's own file index listed, nested partition
+    * files included — with the schema to read them with. A hit reads
+    * with that schema (a listing, but no schema-inference job) and
+    * compares fingerprints; on a mismatch the table is inferred again
+    * and the entry replaced. A miss returns the inferring read itself. */
+  def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val tag = s"tables/$name"
+    Memos.stored[Entry](s, dir, tag)
+      .flatMap { e =>
+        val df = s.read.schema(e.schema).parquet(path)
+        if (fingerprint(df) == e.files) Some(e.finish(df)) else None
+      }
+      .getOrElse {
+        val (df, ts) =
+          if (name == "events") eventsRead(s, path)
+          else (s.read.parquet(path), None)
+        val e = Entry(fingerprint(df), df.schema, ts)
+        Memos.replace(s, dir, tag, e)
+        e.finish(df)
+      }
+  }
+
+  /** Run SQL text over the fixture tables under `dir`: each table the
+    * text names gets a temp view of [[tbl]] under its own name, then
+    * the text runs as written. Only the named tables pay a resolution
+    * and a view registration. Views are resolved into the plan when
+    * `s.sql` analyzes it, so a frame returned here keeps reading `dir`
+    * even after a later call re-points a view at another dir. */
+  def runSql(s: SparkSession, dir: String, q: String): DataFrame = {
+    namedIn(s, q).foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
+    s.sql(q)
+  }
+
+  /** The fixture tables SQL text `q` reads: the relations its parsed
+    * plan names — CTE bodies and subqueries included — that are
+    * fixture tables (a CTE's own name is not one), in [[allNames]]
+    * order. */
+  private[graft] def namedIn(s: SparkSession, q: String): Seq[String] = {
+    def named(p: LogicalPlan): Seq[String] = p.collectWithSubqueries {
+      case r: UnresolvedRelation => Seq(r.multipartIdentifier.last)
+      case w: UnresolvedWith => w.cteRelations.flatMap(c => named(c._2))
+    }.flatten
+    val names = named(s.sessionState.sqlParser.parsePlan(q))
+      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    allNames.filter(names)
+  }
+
+  /** One catalog entry: the files a table was resolved from, the
+    * schema to read them with, and the `ts` normalization (events). */
+  private final case class Entry(files: Seq[(String, Long, Long)],
+      schema: StructType, ts: Option[Column]) {
+    def finish(df: DataFrame): DataFrame =
+      ts.fold(df)(df.withColumn("ts", _))
+  }
+
+  /** Sorted (path, length, modification time) of the files `df`'s
+    * file index listed when the read was built — no second listing and
+    * no Spark job. */
+  private def fingerprint(df: DataFrame): Seq[(String, Long, Long)] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location } match {
+      case Some(i: PartitioningAwareFileIndex) => i.allFiles()
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sorted
+      case other => throw new IllegalStateException(
+        s"cannot fingerprint a read whose file index is $other")
+    }
 
   /** events.parquet physical schema with ts as a raw integer epoch —
     * the fallback read used only when Spark's schema inference rejects
@@ -74,11 +152,17 @@ object Tables {
     *     exceeds double's 53-bit mantissa);
     *  3. a plain int64 `ts` is unit-sniffed by magnitude
     *     (longEpochToMicros).
+    * The sniffing (and step 3's one-row sample job) runs once per
+    * catalog fingerprint, not once per call (see [[tbl]]).
     * FixtureContractSpec pins the resulting values to the documented
     * 2024 range so the NEXT layout change fails loudly in `sbt test`,
     * not silently in the oracle. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val path = s"$d/events.parquet"
+  def events(s: SparkSession, d: String): DataFrame = tbl(s, d, "events")
+
+  /** The inferring read of events.parquet at `path` and the expression
+    * that normalizes its `ts` (None: already TimestampType). */
+  private def eventsRead(s: SparkSession,
+                         path: String): (DataFrame, Option[Column]) = {
     // Fall back ONLY on the schema-inference rejection the fallback
     // is built for (TIMESTAMP(NANOS), SPARK-40819) — any other failure
     // (missing path, corrupt footer, permissions) propagates as
@@ -93,22 +177,22 @@ object Tables {
               m.contains("Illegal Parquet type")) => None
       }
     native match {
-      case Some(df) => df.schema("ts").dataType match {
-        case TimestampType    => df
-        case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-        case LongType         => df.withColumn("ts", timestamp_micros(longEpochToMicros(df)))
+      case Some(df) => df -> (df.schema("ts").dataType match {
+        case TimestampType    => None
+        case TimestampNTZType => Some(col("ts").cast(TimestampType))
+        case LongType         => Some(timestamp_micros(longEpochToMicros(df)))
         // insurance against the next plausible drifts: a DATE column
         // (day precision) and an ISO-8601 string both cast cleanly
         // under the UTC session; FixtureContractSpec's 2024-range
         // check still arbitrates whether the values are sane
-        case DateType         => df.withColumn("ts", col("ts").cast(TimestampType))
-        case _: StringType    => df.withColumn("ts", col("ts").cast(TimestampType))
+        case DateType         => Some(col("ts").cast(TimestampType))
+        case _: StringType    => Some(col("ts").cast(TimestampType))
         case other => throw new IllegalStateException(
           s"events.ts: unsupported physical type $other in $path")
-      }
+      })
       case None =>
-        s.read.schema(eventsRawSchema).parquet(path)
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        s.read.schema(eventsRawSchema).parquet(path) ->
+          Some(timestamp_micros(expr("ts div 1000")))
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = tbl(s, d, "documents")

@@ -155,20 +155,15 @@ object Extras {
       * parameterized subplans, the join surface that window-rank
       * rewrites don't literally express. Catalyst decorrelates it
       * into a ranked join under the hood. */
-    "q_join_lateral" -> ((s, d) => {
-      // Path-based table refs (`parquet.`...``), NOT temp views: a
-      // createOrReplaceTempView here would mutate the session catalog
-      // at plan-build time, so two plans built in one session against
-      // different data dirs would silently cross-contaminate.
-      s.sql(s"""
+    "q_join_lateral" -> ((s, d) =>
+      runSql(s, d, """
         SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        FROM parquet.`$d/customer.parquet` c, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM parquet.`$d/orders.parquet`
+        FROM customer c, LATERAL (
+          SELECT o_orderkey, o_totalprice FROM orders
           WHERE o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
         WHERE c.c_custkey % 10 = 0
-        ORDER BY c.c_custkey, o.o_orderkey""")
-    }),
+        ORDER BY c.c_custkey, o.o_orderkey""")),
 
     /** q81: approximate percentiles — the sketch companion to q69's
       * exact percentiles (t-digest-style; at 100 TB the exact sort
@@ -570,10 +565,7 @@ object Extras {
       * dialect-common text for both engines, the TpcH discipline;
       * UNION-distinct recursion is not yet in Spark and is documented
       * out of scope. */
-    "q_sql_recursive_cte" -> ((s, d) => {
-      orders(s, d).createOrReplaceTempView("orders")
-      s.sql(recursiveCteSql)
-    }),
+    "q_sql_recursive_cte" -> ((s, d) => runSql(s, d, recursiveCteSql)),
 
     /** q274: SQL-DEFINED SCALAR FUNCTION (Spark-4 surface row — the
       * declarative UDF tier ABOVE the engine's extension ladder: the
@@ -586,12 +578,11 @@ object Extras {
       * the hash proves Spark's function dispatch ≡ inlining, which is
       * precisely the feature's contract). */
     "q_fn_sql_udf" -> ((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("lineitem")
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION disc_price(
             p DOUBLE, disc DOUBLE) RETURNS DECIMAL(38,4)
           RETURN CAST(p AS DECIMAL(18,2))
                  * (1 - CAST(disc AS DECIMAL(4,2)))""")
-      s.sql("""SELECT l_returnflag,
+      runSql(s, d, """SELECT l_returnflag,
              CAST(count(*) AS BIGINT) AS n_rows,
              CAST(sum(disc_price(l_extendedprice, l_discount))
                AS DOUBLE) AS disc_revenue

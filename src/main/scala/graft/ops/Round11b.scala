@@ -598,7 +598,7 @@ object Round11b {
         // r18 (task 6): 4-partition state — the one-time stream cost
         // is micro-batch state plumbing, not data (Streams.smallStateConf)
         graft.stream.Streams.smallStateConf(s) {
-      val root = Memos.scratchDir(s, d, "r11s")
+      val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r11s"))
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
       val norm = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -657,7 +657,7 @@ object Round11b {
         // checkpoint pins the count at first start)
         graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val root = Memos.scratchDir(s, d, "r11r")
+      val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r11r"))
       val (stage, src, ck, out) = (s"$root/stage", s"$root/src",
         s"$root/ck", s"$root/out")
       val norm = events(s, d)
@@ -721,7 +721,7 @@ object Round11b {
         // per micro-batch — 4 shuffle partitions size it to the
         // KB-scale batches (result is partition-count invariant)
         graft.stream.Streams.smallStateConf(s) {
-      val root = Memos.scratchDir(s, d, "r16m")
+      val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r16m"))
       val (src, ck, store) = (s"$root/src", s"$root/ck", s"$root/store")
       val norm = events(s, d)
         .select(col("user_id"), col("event_id"), col("event_type"),

@@ -341,7 +341,8 @@ object Round12 {
         // cross-batch join state is still exercised (batch 2's
         // purchases match batch 1's views)
         graft.stream.Streams.smallStateConf(s) {
-      val root = s"${Memos.scratchDir(s, d, "r12")}/sjoin"
+      val root = graft.stream.Streams.freshRoot(s,
+        s"${Memos.scratchDir(s, d, "r12")}/sjoin")
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
       val norm = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -528,7 +529,8 @@ object Round12 {
         "round12/streamDedup")(
         graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val root = s"${Memos.scratchDir(s, d, "r12")}/sdedup"
+      val root = graft.stream.Streams.freshRoot(s,
+        s"${Memos.scratchDir(s, d, "r12")}/sdedup")
       val (stage, src, ck, out) = (s"$root/stage", s"$root/src",
         s"$root/ck", s"$root/out")
       val norm = events(s, d)

@@ -280,11 +280,11 @@ object Round3 {
       * decorrelates the subquery into a LeftSemi join, which is the
       * point — users write the predicate, the engine picks the join. */
     "q_join_exists_subquery" -> ((s, d) =>
-      s.sql(s"""
+      runSql(s, d, """
         SELECT c_custkey, c_name
-        FROM parquet.`$d/customer.parquet` c
+        FROM customer c
         WHERE EXISTS (
-          SELECT 1 FROM parquet.`$d/orders.parquet` o
+          SELECT 1 FROM orders o
           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
         ORDER BY c_custkey""")),
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.engine.Tables
 import graft.engine.Tables.Q
 
@@ -42,14 +42,6 @@ import graft.engine.Tables.Q
   * unique tiebreaker; year()/count() are CAST to INT/BIGINT so the
   * schemas match across engines. */
 object TpcH {
-
-  private val tables = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem")
-
-  private def run(s: SparkSession, d: String, q: String): DataFrame = {
-    tables.foreach(t => Tables.tbl(s, d, t).createOrReplaceTempView(t))
-    s.sql(q)
-  }
 
   /** Q1 — pricing summary report. Verbatim TPC-H (every needed column
     * exists); cutoff adapted to the fixture date range. */
@@ -501,7 +493,7 @@ object TpcH {
 
   val defs: Map[String, Q] =
     pack.map { case (name, q) =>
-      name -> ((s: SparkSession, d: String) => run(s, d, q))
+      name -> ((s: SparkSession, d: String) => Tables.runSql(s, d, q))
     }.toMap
 
   /** The oracle strings ARE the Spark strings — one dialect-common

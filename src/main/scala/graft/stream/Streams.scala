@@ -46,6 +46,18 @@ object Streams {
     }
   }
 
+  /** `root`, emptied first. A declared stream row builds its landing
+    * files, checkpoint and sink under one scratch root; when its memo
+    * frame is rebuilt in the same application (evicted, or dropped by
+    * `Memos.clearAll`), the rerun must not see the earlier run's
+    * files — a stale checkpoint skips or double-counts input, and a
+    * landing dir collects a second copy of every file. */
+  def freshRoot(s: org.apache.spark.sql.SparkSession, root: String): String = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    root
+  }
+
   /** 1-hour tumbling counts+sums per event_type (q57's plan). */
   def tumbling(ev: DataFrame, watermark: Option[String] = None): DataFrame = {
     val src = watermark.fold(ev)(w => ev.withWatermark("ts", w))

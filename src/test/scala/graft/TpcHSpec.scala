@@ -69,4 +69,25 @@ class TpcHSpec extends SparkSpecBase {
       assert(a.nonEmpty, s"$q empty at $sfDir")
     }
   }
+
+  test("a TPC-H call registers exactly the tables its SQL names, " +
+      "CTE bodies and subqueries included") {
+    val names = (q: String) => graft.engine.Tables.namedIn(spark, graft.ops.TpcH.sql(q))
+    assert(names("q_tpch_q1") == Seq("lineitem"))
+    assert(names("q_tpch_q6") == Seq("lineitem"))
+    // Q2's lineitem is named only inside the `ps` CTE, whose own name
+    // is not a fixture table
+    assert(names("q_tpch_q2") ==
+      Seq("region", "nation", "supplier", "part", "lineitem"))
+    // Q20's lineitem and part are named only inside IN subqueries
+    assert(names("q_tpch_q20") == Seq("nation", "supplier", "part", "lineitem"))
+    // Q22's orders is named only inside a NOT EXISTS subquery
+    assert(names("q_tpch_q22") == Seq("customer", "orders"))
+    // complete for every query: each one resolves in a session that
+    // has no temp views of its own
+    for (i <- 1 to 22) {
+      val fresh = spark.newSession()
+      SparkEntry.queries(s"q_tpch_q$i")(fresh, sfDir).queryExecution.assertAnalyzed()
+    }
+  }
 }

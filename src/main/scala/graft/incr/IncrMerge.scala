@@ -3,6 +3,7 @@ package graft.incr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -79,11 +80,26 @@ object IncrMerge {
 
   private val cutoff = "2024-01-20"
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q46: base = events before the cutoff; delta = the rest as
       * inserts plus a deterministic deletion subset (event_id%7=0 of
       * base) as deletes. */
-    "q_incr_delta_merge" -> ((s, d) => {
+    Query("q_incr_delta_merge",
+      s"""SELECT event_type,
+         CAST(sum(CASE WHEN op = '+' THEN 1 ELSE -1 END) AS BIGINT) AS n,
+         CAST(sum(CASE WHEN op = '+'
+                  THEN CAST(ROUND(value,2) AS DECIMAL(18,2))
+                  ELSE -CAST(ROUND(value,2) AS DECIMAL(18,2)) END) AS DOUBLE) AS val_sum
+         FROM (
+           SELECT event_type, value, '+' AS op FROM events
+           WHERE ts < TIMESTAMP '$cutoff'
+           UNION ALL
+           SELECT event_type, value, '+' AS op FROM events
+           WHERE ts >= TIMESTAMP '$cutoff'
+           UNION ALL
+           SELECT event_type, value, '-' AS op FROM events
+           WHERE ts < TIMESTAMP '$cutoff' AND event_id % 7 = 0
+         ) t GROUP BY event_type ORDER BY event_type""")((s, d) => {
       val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
       val base = ev.filter(col("ts") < cut)
@@ -102,7 +118,13 @@ object IncrMerge {
       * recompute over all of history — restart must be value-identical
       * while reading only |keys| + |delta| rows. The scratch dir is
       * deleted after the result materializes. */
-    "q_incr_restart" -> ((s, d) => {
+    Query("q_incr_restart",
+      /** q103 oracle: the FULL recompute — two-level exact-decimal
+        * partial sums equal the one-shot sum bit-for-bit. */
+      """SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CAST(ROUND(value, 2) AS DECIMAL(18,2))) AS DOUBLE) AS val_sum
+         FROM events GROUP BY event_type ORDER BY event_type""")((s, d) => {
       val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
       val dir = java.nio.file.Files.createTempDirectory("graft_mrbg")
@@ -126,7 +148,15 @@ object IncrMerge {
 
     /** q47: kv-level upsert = delete+insert [P §3]: last-write-wins
       * current state per user from the event change log. */
-    "q_incr_upsert_latest" -> ((s, d) => {
+    Query("q_incr_upsert_latest",
+      """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
+         value AS last_value
+         FROM (
+           SELECT user_id, event_id, event_type, value,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events
+         ) t WHERE rn = 1 ORDER BY user_id""")((s, d) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts").desc, col("event_id").desc)
       events(s, d)
@@ -136,40 +166,5 @@ object IncrMerge {
           col("event_type").as("last_type"), col("value").as("last_value"))
         .orderBy("user_id")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_incr_delta_merge" ->
-      s"""SELECT event_type,
-         CAST(sum(CASE WHEN op = '+' THEN 1 ELSE -1 END) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN op = '+'
-                  THEN CAST(ROUND(value,2) AS DECIMAL(18,2))
-                  ELSE -CAST(ROUND(value,2) AS DECIMAL(18,2)) END) AS DOUBLE) AS val_sum
-         FROM (
-           SELECT event_type, value, '+' AS op FROM events
-           WHERE ts < TIMESTAMP '$cutoff'
-           UNION ALL
-           SELECT event_type, value, '+' AS op FROM events
-           WHERE ts >= TIMESTAMP '$cutoff'
-           UNION ALL
-           SELECT event_type, value, '-' AS op FROM events
-           WHERE ts < TIMESTAMP '$cutoff' AND event_id % 7 = 0
-         ) t GROUP BY event_type ORDER BY event_type""",
-    "q_incr_upsert_latest" ->
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-         value AS last_value
-         FROM (
-           SELECT user_id, event_id, event_type, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events
-         ) t WHERE rn = 1 ORDER BY user_id""",
-    /** q103 oracle: the FULL recompute — two-level exact-decimal
-      * partial sums equal the one-shot sum bit-for-bit. */
-    "q_incr_restart" ->
-      """SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(ROUND(value, 2) AS DECIMAL(18,2))) AS DOUBLE) AS val_sum
-         FROM events GROUP BY event_type ORDER BY event_type"""
   )
 }

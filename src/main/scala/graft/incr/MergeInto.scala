@@ -2,7 +2,7 @@ package graft.incr
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
 /** §2 row 278 — the DECLARATIVE MERGE surface (VERDICT r15 task 3).
@@ -203,7 +203,7 @@ object MergeInto {
     touched
   }
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q278: DECLARATIVE MERGE [P §3 update=delete+insert as DML] —
       * all three clause kinds in one pass over `orders`: base = keys
       * with o_orderkey % 10 ∉ {0}, source rows are inserts (% 10 = 0,
@@ -214,7 +214,18 @@ object MergeInto {
       * orders table with % 10 = 7 removed and % 10 = 3 re-priced,
       * hash-compared row by row. One shuffle, no broadcast —
       * Round16Spec pins the plan. */
-    "q_incr_merge_into" -> ((s, d) => {
+    Query("q_incr_merge_into",
+      /** q278 oracle: the full recompute of the post-merge snapshot —
+        * the MERGE must be result-invisible against it. The +1.00
+        * correction is double IEEE on both engines (CAST keeps DuckDB
+        * from planning a DECIMAL add). */
+      """SELECT o_orderkey, o_custkey, o_orderstatus,
+                CASE WHEN o_orderkey % 10 = 3
+                     THEN o_totalprice + CAST(1.0 AS DOUBLE)
+                     ELSE o_totalprice END AS o_totalprice
+         FROM orders
+         WHERE o_orderkey % 10 <> 7
+         ORDER BY o_orderkey""")((s, d) => {
       val o = orders(s, d).select("o_orderkey", "o_custkey",
         "o_orderstatus", "o_totalprice")
       val base = o.filter(col("o_orderkey") % 10 =!= 0)
@@ -247,7 +258,25 @@ object MergeInto {
       * proves the RESULT equals the full recompute, the q153
       * result-invisible discipline). Store build + merge run once
       * per (session, fixture); appId-isolated scratch. */
-    "q_incr_merge_partitioned" -> ((s, d) => Memos.frame(s, d,
+    Query("q_incr_merge_partitioned",
+      /** q281 oracle: full recompute of the post-merge partitioned
+        * store (result-invisible discipline) — deletes and updates only
+        * inside the two touched partitions, inserts keyed -(k+1). */
+      """SELECT o_orderkey, o_custkey,
+                CASE WHEN o_orderkey % 10 = 3
+                      AND o_orderpriority IN ('1-URGENT','3-MEDIUM')
+                     THEN o_totalprice + CAST(2.5 AS DOUBLE)
+                     ELSE o_totalprice END AS o_totalprice,
+                o_orderpriority
+         FROM orders
+         WHERE NOT (o_orderkey % 10 = 7
+                    AND o_orderpriority IN ('1-URGENT','3-MEDIUM'))
+         UNION ALL
+         SELECT -o_orderkey - 1, o_custkey, o_totalprice,
+                o_orderpriority
+         FROM orders
+         WHERE o_orderkey % 10 = 0 AND o_orderpriority = '1-URGENT'
+         ORDER BY o_orderkey""")((s, d) => Memos.frame(s, d,
         "mergePart/q281") {
       val root = Memos.scratchDir(s, d, "mergepart")
       val o = orders(s, d).select("o_orderkey", "o_custkey",
@@ -279,40 +308,5 @@ object MergeInto {
           "o_orderpriority")
         .orderBy("o_orderkey").localCheckpoint()
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    /** q278 oracle: the full recompute of the post-merge snapshot —
-      * the MERGE must be result-invisible against it. The +1.00
-      * correction is double IEEE on both engines (CAST keeps DuckDB
-      * from planning a DECIMAL add). */
-    "q_incr_merge_into" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus,
-                CASE WHEN o_orderkey % 10 = 3
-                     THEN o_totalprice + CAST(1.0 AS DOUBLE)
-                     ELSE o_totalprice END AS o_totalprice
-         FROM orders
-         WHERE o_orderkey % 10 <> 7
-         ORDER BY o_orderkey""",
-
-    /** q281 oracle: full recompute of the post-merge partitioned
-      * store (result-invisible discipline) — deletes and updates only
-      * inside the two touched partitions, inserts keyed -(k+1). */
-    "q_incr_merge_partitioned" ->
-      """SELECT o_orderkey, o_custkey,
-                CASE WHEN o_orderkey % 10 = 3
-                      AND o_orderpriority IN ('1-URGENT','3-MEDIUM')
-                     THEN o_totalprice + CAST(2.5 AS DOUBLE)
-                     ELSE o_totalprice END AS o_totalprice,
-                o_orderpriority
-         FROM orders
-         WHERE NOT (o_orderkey % 10 = 7
-                    AND o_orderpriority IN ('1-URGENT','3-MEDIUM'))
-         UNION ALL
-         SELECT -o_orderkey - 1, o_custkey, o_totalprice,
-                o_orderpriority
-         FROM orders
-         WHERE o_orderkey % 10 = 0 AND o_orderpriority = '1-URGENT'
-         ORDER BY o_orderkey"""
   )
 }

@@ -2,7 +2,7 @@ package graft.iter
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
 /** §2 row 45 — Apriori-style frequent 2-itemset mining (paper workload
@@ -212,8 +212,19 @@ object Apriori {
       .filter(col("support") >= minSup)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q_apriori_pairs" -> ((s, d) => {
+  val queries: Seq[Query] = Seq(
+    Query("q_apriori_pairs",
+      s"""WITH toks AS (
+           SELECT DISTINCT doc_id, tok FROM (
+             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+           ) r WHERE length(tok) > 0
+         )
+         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
+         FROM toks a JOIN toks b
+           ON a.doc_id = b.doc_id AND a.tok < b.tok
+         GROUP BY a.tok, b.tok
+         HAVING count(*) >= $minSupport
+         ORDER BY tok_a, tok_b""")((s, d) => {
       documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .filter(length(col("tok")) > 0)
@@ -233,7 +244,20 @@ object Apriori {
       * [[frequentItemsets]] (L1 → L2 → L3 with per-level pruning);
       * oracle = the brute-force triple self-join, equal because
       * Apriori pruning is lossless. */
-    "q_apriori_triples" -> ((s, d) => {
+    Query("q_apriori_triples",
+      s"""WITH toks AS (
+           SELECT DISTINCT doc_id, tok FROM (
+             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+           ) r WHERE length(tok) > 0
+         )
+         SELECT a.tok AS tok_a, b.tok AS tok_b, c.tok AS tok_c,
+                count(*) AS support
+         FROM toks a
+         JOIN toks b ON a.doc_id = b.doc_id AND a.tok < b.tok
+         JOIN toks c ON b.doc_id = c.doc_id AND b.tok < c.tok
+         GROUP BY a.tok, b.tok, c.tok
+         HAVING count(*) >= $minSupport
+         ORDER BY tok_a, tok_b, tok_c""")((s, d) => {
       // r18 (VERDICT r17 task 2): the item relation is the memoized
       // full-corpus token structure (shared with the LSH family) —
       // the per-invocation tokenize+distinct shuffle was the
@@ -261,7 +285,20 @@ object Apriori {
       * min-support over base+delta via [[frequentItemsetsIncr]]. The
       * oracle is the full-corpus brute-force pair expansion (identical
       * to q45's) — the incremental path must be result-invisible. */
-    "q_incr_apriori" -> ((s, d) => {
+    Query("q_incr_apriori",
+      /** q105 oracle: the FULL recompute over base+delta (= the whole
+        * corpus) — the incremental path must be result-invisible. */
+      s"""WITH toks AS (
+           SELECT DISTINCT doc_id, tok FROM (
+             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+           ) r WHERE length(tok) > 0
+         )
+         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
+         FROM toks a JOIN toks b
+           ON a.doc_id = b.doc_id AND a.tok < b.tok
+         GROUP BY a.tok, b.tok
+         HAVING count(*) >= $minSupport
+         ORDER BY tok_a, tok_b""")((s, d) => {
       val toks = Memos.frame(s, d, "graphs/aprioriToks")(
         documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -296,7 +333,21 @@ object Apriori {
       * are retrieved by semi-join and subtracted in the signed merge.
       * Oracle = the brute-force pair expansion over the POST-DELTA
       * corpus: signed maintenance must be result-invisible. */
-    "q_incr_apriori_delete" -> ((s, d) => {
+    Query("q_incr_apriori_delete",
+      /** q137 oracle: the full recompute over the POST-DELTA corpus
+        * (doc_id%10<>1) — the signed path must be result-invisible. */
+      s"""WITH toks AS (
+           SELECT DISTINCT doc_id, tok FROM (
+             SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+             FROM documents WHERE doc_id % 10 <> 1
+           ) r WHERE length(tok) > 0
+         )
+         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
+         FROM toks a JOIN toks b
+           ON a.doc_id = b.doc_id AND a.tok < b.tok
+         GROUP BY a.tok, b.tok
+         HAVING count(*) >= $minSupport
+         ORDER BY tok_a, tok_b""")((s, d) => {
       val toks = Memos.frame(s, d, "graphs/aprioriToks")(
         documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -324,63 +375,5 @@ object Apriori {
           element_at(col("items"), 2).as("tok_b"), col("support"))
       out.localCheckpoint().orderBy("tok_a", "tok_b")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_apriori_pairs" ->
-      s"""WITH toks AS (
-           SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-           ) r WHERE length(tok) > 0
-         )
-         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
-         FROM toks a JOIN toks b
-           ON a.doc_id = b.doc_id AND a.tok < b.tok
-         GROUP BY a.tok, b.tok
-         HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b""",
-    "q_apriori_triples" ->
-      s"""WITH toks AS (
-           SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-           ) r WHERE length(tok) > 0
-         )
-         SELECT a.tok AS tok_a, b.tok AS tok_b, c.tok AS tok_c,
-                count(*) AS support
-         FROM toks a
-         JOIN toks b ON a.doc_id = b.doc_id AND a.tok < b.tok
-         JOIN toks c ON b.doc_id = c.doc_id AND b.tok < c.tok
-         GROUP BY a.tok, b.tok, c.tok
-         HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b, tok_c""",
-    /** q105 oracle: the FULL recompute over base+delta (= the whole
-      * corpus) — the incremental path must be result-invisible. */
-    "q_incr_apriori" ->
-      s"""WITH toks AS (
-           SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-           ) r WHERE length(tok) > 0
-         )
-         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
-         FROM toks a JOIN toks b
-           ON a.doc_id = b.doc_id AND a.tok < b.tok
-         GROUP BY a.tok, b.tok
-         HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b""",
-    /** q137 oracle: the full recompute over the POST-DELTA corpus
-      * (doc_id%10<>1) — the signed path must be result-invisible. */
-    "q_incr_apriori_delete" ->
-      s"""WITH toks AS (
-           SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-             FROM documents WHERE doc_id % 10 <> 1
-           ) r WHERE length(tok) > 0
-         )
-         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
-         FROM toks a JOIN toks b
-           ON a.doc_id = b.doc_id AND a.tok < b.tok
-         GROUP BY a.tok, b.tok
-         HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b"""
   )
 }

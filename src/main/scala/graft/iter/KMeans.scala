@@ -2,6 +2,7 @@ package graft.iter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 
 /** §2 row 44 — K-means (paper workload [P §7]). k=10, FIXED 3
@@ -228,8 +229,9 @@ object KMeans {
     rows.map(_._2).grouped(dims).toArray
   }
 
-  val defs: Map[String, Q] = Map(
-    "q_iter_kmeans" -> ((s, d) => {
+  // oracle=none by design
+  val queries: Seq[Query] = Seq(
+    Query("q_iter_kmeans")((s, d) => {
       val vecs = embeddings(s, d).select(col("vec_id"), col("embedding")).persist()
       val out = runOn(s, vecs)
         .groupBy("cluster")
@@ -238,6 +240,4 @@ object KMeans {
       IterQueries.finish(out, vecs)
     })
   )
-
-  val sql: Map[String, String] = Map.empty // oracle=none by design
 }

@@ -2,8 +2,7 @@ package graft.iter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
-import graft.engine.Tables.Q
+import graft.engine.{Memos, Query}
 
 /** MRBGraph-style incremental PageRank — the reference's PRESERVED
   * intermediate state + delta accumulation + change-threshold filter
@@ -109,7 +108,7 @@ object MrbgPagerank {
      sp.read.parquet(s"$path/S"),
      sp.read.parquet(s"$path/state"))
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q104: q48's exact computation (PageRank restart after an edge
       * deletion, 2 refinement iterations) via the MRBG mechanism with
       * threshold = 0 — integer delta accumulation makes it bit-equal
@@ -117,7 +116,9 @@ object MrbgPagerank {
       * The deleted edges' sources seed the frontier; everything the
       * delta never reaches is read once (C0/S0 build) and never
       * recomputed. */
-    "q_incr_mrbg" -> ((s0, d) => {
+    // identical full re-iteration oracle as q48: the MRBG delta path
+    // must be result-invisible
+    Query("q_incr_mrbg", IterQueries.pagerankIncrSql(5, 2))((s0, d) => {
       val s = s0
       Memos.frame(s, d, "graphs/mrbgResult")(IterQueries.loopConf(s) {
         val nodes = Graphs.nodesCached(s, d)
@@ -144,11 +145,5 @@ object MrbgPagerank {
             "CAST(rs AS DOUBLE) / 10000000000 AS rank")
       }).orderBy("node")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    // identical full re-iteration oracle as q48: the MRBG delta path
-    // must be result-invisible
-    "q_incr_mrbg" -> IterQueries.pagerankIncrSql(5, 2)
   )
 }

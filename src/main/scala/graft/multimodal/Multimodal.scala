@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 
 /** Multimodal-column support [N]: image/audio/video handled as opaque
@@ -79,10 +80,25 @@ object Multimodal {
     }.toDF("doc_id", "frames")
   }
 
-  val defs: Map[String, Q] = Map(
+  // Oracle caveat: ascii() yields CODE POINTS, so this formulation
+  // matches decodeStub's byte math only for ASCII text — which the
+  // fixture corpus is (verified: every doc matches ^[ -~]*$). The
+  // CASEs mirror the stub's empty-input convention (head_byte=-1,
+  // byte_sum=0) where DuckDB would yield 0/NULL.
+
+  val queries: Seq[Query] = Seq(
     /** q60: decoded-feature extraction over the binary media table —
       * the oracle recomputes the same byte math from the text. */
-    "q_multimodal_features" -> ((s, d) =>
+    Query("q_multimodal_features",
+      """SELECT doc_id,
+         octet_length(encode(text)) AS n_bytes,
+         CASE WHEN length(text) = 0 THEN CAST(-1 AS BIGINT)
+              ELSE CAST(ascii(substr(text, 1, 1)) AS BIGINT) END AS head_byte,
+         CASE WHEN length(text) = 0 THEN CAST(0 AS BIGINT)
+              ELSE coalesce(CAST(list_sum(list_transform(string_split(text, ''),
+                x -> ascii(x))) AS BIGINT), 0) END AS byte_sum,
+         CAST(ceil(octet_length(encode(text)) / 256.0) AS BIGINT) AS n_frames
+         FROM documents ORDER BY doc_id""")((s, d) =>
       features(mediaTable(s, d)).toDF().orderBy("doc_id")),
 
     /** q129: FRAME SAMPLING as a declared query — [[frameSample]]'s
@@ -92,7 +108,13 @@ object Multimodal {
       * pruned away after the slice. The oracle reproduces the byte
       * math via substr on the ASCII fixture (byte == char, verified
       * in the q60 caveat note). */
-    "q_multimodal_frames" -> ((s, d) =>
+    Query("q_multimodal_frames",
+      """SELECT doc_id,
+         CAST((length(text) + 255) // 256 AS BIGINT) AS n_frames,
+         md5(substr(text, 1, 256)) AS first_frame_md5,
+         CAST(length(text) - ((length(text) + 255) // 256 - 1) * 256
+              AS BIGINT) AS last_frame_bytes
+         FROM documents ORDER BY doc_id""")((s, d) =>
       frameSample(mediaTable(s, d))
         .select(col("doc_id"),
           size(col("frames")).cast("bigint").as("n_frames"),
@@ -100,30 +122,5 @@ object Multimodal {
           length(element_at(col("frames"), -1)).cast("bigint")
             .as("last_frame_bytes"))
         .orderBy("doc_id"))
-  )
-
-  // Oracle caveat: ascii() yields CODE POINTS, so this formulation
-  // matches decodeStub's byte math only for ASCII text — which the
-  // fixture corpus is (verified: every doc matches ^[ -~]*$). The
-  // CASEs mirror the stub's empty-input convention (head_byte=-1,
-  // byte_sum=0) where DuckDB would yield 0/NULL.
-  val sql: Map[String, String] = Map(
-    "q_multimodal_features" ->
-      """SELECT doc_id,
-         octet_length(encode(text)) AS n_bytes,
-         CASE WHEN length(text) = 0 THEN CAST(-1 AS BIGINT)
-              ELSE CAST(ascii(substr(text, 1, 1)) AS BIGINT) END AS head_byte,
-         CASE WHEN length(text) = 0 THEN CAST(0 AS BIGINT)
-              ELSE coalesce(CAST(list_sum(list_transform(string_split(text, ''),
-                x -> ascii(x))) AS BIGINT), 0) END AS byte_sum,
-         CAST(ceil(octet_length(encode(text)) / 256.0) AS BIGINT) AS n_frames
-         FROM documents ORDER BY doc_id""",
-    "q_multimodal_frames" ->
-      """SELECT doc_id,
-         CAST((length(text) + 255) // 256 AS BIGINT) AS n_frames,
-         md5(substr(text, 1, 256)) AS first_frame_md5,
-         CAST(length(text) - ((length(text) + 255) // 256 - 1) * 256
-              AS BIGINT) AS last_frame_bytes
-         FROM documents ORDER BY doc_id"""
   )
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -71,12 +72,18 @@ object BloomPrune {
     joined(fact.filter(mightContain(col(factKey))))
   }
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q94: Bloom-pruned selective join — lineitem joined to a ~4%
       * supplier subset: the Bloom filter prunes the fact scan before
       * the shuffle; the oracle is the plain join (pruning must be
       * invisible in the result). */
-    "q_join_bloom_pruned" -> ((s, d) => {
+    Query("q_join_bloom_pruned",
+      """SELECT s_name,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
+         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+         WHERE s_suppkey % 25 = 3
+         GROUP BY s_name ORDER BY s_name""")((s, d) => {
       val dim = supplier(s, d)
         .filter(col("s_suppkey") % 25 === 3)
         .select(col("s_suppkey"), col("s_name"))
@@ -86,13 +93,4 @@ object BloomPrune {
         .orderBy("s_name")
     })
   )
-
-  val sql: Map[String, String] = Map(
-    "q_join_bloom_pruned" ->
-      """SELECT s_name,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         WHERE s_suppkey % 25 = 3
-         GROUP BY s_name ORDER BY s_name""")
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 
 /** Corpus-curation operators (SURVEY.md §2 rows 149b–152): the three
@@ -22,8 +22,7 @@ object Curation {
     * the oracle can hash the scrubbed text byte-for-byte. */
   val ScrubPattern = "\\b(customer|value)\\b"
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val queries: Seq[Query] = Seq(
     /** q150: BLOCKLIST TERM SCRUBBING — the termlist-redaction pass
       * every production corpus runs before training (PII termlists,
       * NSFW blocklists, compliance strings). Pure MAP over the corpus:
@@ -33,7 +32,21 @@ object Curation {
       * deterministic dump sort — embarrassingly parallel at 100 TB,
       * and the termlist (broadcast in production) never touches the
       * data path's partitioning. */
-    "q_text_scrub" -> ((s, d) => {
+    Query("q_text_scrub",
+      // q150: RE2's \b and Java's \b agree on [A-Za-z0-9_] word chars;
+      // the 'g' flag matches Spark's replace-all default.
+      """WITH s AS (
+           SELECT doc_id,
+             CAST(len(regexp_extract_all(text,
+               '\b(customer|value)\b')) AS BIGINT) AS n_hits,
+             CAST(length(text) AS BIGINT) AS len_raw,
+             regexp_replace(text, '\b(customer|value)\b', '[X]', 'g')
+               AS scrubbed
+           FROM documents)
+         SELECT doc_id, n_hits, len_raw,
+           CAST(length(scrubbed) AS BIGINT) AS len_scrubbed,
+           md5(scrubbed) AS scrub_h
+         FROM s WHERE n_hits > 0 ORDER BY doc_id""")((s, d) => {
       val scrubbed = regexp_replace(col("text"), ScrubPattern, "[X]")
       documents(s, d)
         .select(col("doc_id"),
@@ -58,7 +71,24 @@ object Curation {
       * with zero plan change. MAP-side filter + a
       * source-cardinality aggregate: no data-sized shuffle at any
       * scale. */
-    "q_mix_sources" -> ((s, d) => {
+    Query("q_mix_sources",
+      // q151: identical md5 two-hex-char threshold rule; b is
+      // functionally determined by source, carried through the GROUP BY.
+      """WITH k AS (
+           SELECT source, (CAST(substr(source, 4) AS INT) % 4) AS b,
+             CASE WHEN (CAST(substr(source, 4) AS INT) % 4) = 3 THEN 1
+                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <
+                    CASE (CAST(substr(source, 4) AS INT) % 4)
+                      WHEN 0 THEN '40' WHEN 1 THEN '80'
+                      ELSE 'c0' END THEN 1
+                  ELSE 0 END AS kept
+           FROM documents)
+         SELECT source, CAST(count(*) AS BIGINT) AS n_total,
+           CAST(sum(kept) AS BIGINT) AS n_kept,
+           CAST(b + 1 AS DOUBLE) / 4.0 AS target_rate,
+           CAST(sum(kept) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+             AS achieved
+         FROM k GROUP BY source, b ORDER BY source""")((s, d) => {
       val b = pmod(expr("CAST(substring(source, 4) AS INT)"), lit(4))
       val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
       // Hex-string compare ≡ numeric compare at fixed width: the
@@ -86,7 +116,12 @@ object Curation {
       * the q49 plan shape at a fraction of the key width; at 100 TB
       * the groups>1 filter drops ~all of the key space before the
       * result materializes. */
-    "q_dedup_prefix" -> ((s, d) =>
+    Query("q_dedup_prefix",
+      """SELECT md5(substr(text, 1, 64)) AS ph,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(min(doc_id) AS BIGINT) AS keep_id
+         FROM documents
+         GROUP BY 1 HAVING count(*) > 1 ORDER BY ph""")((s, d) =>
       documents(s, d)
         .select(col("doc_id"), md5(substring(col("text"), 1, 64)).as("ph"))
         .groupBy("ph")
@@ -94,47 +129,5 @@ object Curation {
           min("doc_id").as("keep_id"))
         .filter(col("n_docs") > 1)
         .orderBy("ph"))
-  )
-
-  def sql: Map[String, String] = Map(
-    // q150: RE2's \b and Java's \b agree on [A-Za-z0-9_] word chars;
-    // the 'g' flag matches Spark's replace-all default.
-    "q_text_scrub" ->
-      """WITH s AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '\b(customer|value)\b')) AS BIGINT) AS n_hits,
-             CAST(length(text) AS BIGINT) AS len_raw,
-             regexp_replace(text, '\b(customer|value)\b', '[X]', 'g')
-               AS scrubbed
-           FROM documents)
-         SELECT doc_id, n_hits, len_raw,
-           CAST(length(scrubbed) AS BIGINT) AS len_scrubbed,
-           md5(scrubbed) AS scrub_h
-         FROM s WHERE n_hits > 0 ORDER BY doc_id""",
-    // q151: identical md5 two-hex-char threshold rule; b is
-    // functionally determined by source, carried through the GROUP BY.
-    "q_mix_sources" ->
-      """WITH k AS (
-           SELECT source, (CAST(substr(source, 4) AS INT) % 4) AS b,
-             CASE WHEN (CAST(substr(source, 4) AS INT) % 4) = 3 THEN 1
-                  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <
-                    CASE (CAST(substr(source, 4) AS INT) % 4)
-                      WHEN 0 THEN '40' WHEN 1 THEN '80'
-                      ELSE 'c0' END THEN 1
-                  ELSE 0 END AS kept
-           FROM documents)
-         SELECT source, CAST(count(*) AS BIGINT) AS n_total,
-           CAST(sum(kept) AS BIGINT) AS n_kept,
-           CAST(b + 1 AS DOUBLE) / 4.0 AS target_rate,
-           CAST(sum(kept) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-             AS achieved
-         FROM k GROUP BY source, b ORDER BY source""",
-    "q_dedup_prefix" ->
-      """SELECT md5(substr(text, 1, 64)) AS ph,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(min(doc_id) AS BIGINT) AS keep_id
-         FROM documents
-         GROUP BY 1 HAVING count(*) > 1 ORDER BY ph"""
   )
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
 /** Misra–Gries heavy hitters [N] — the frequent-items sketch a 100 TB
@@ -99,14 +99,26 @@ object HeavyHitters {
                           key: String, t: => DataFrame): Map[String, Long] =
     Memos.value(s, d, s"hh/$key")(summaryOf(t, 63))
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q120: tokens with frequency > n/50 over the document corpus —
       * MG(k=63) per partition (63+1 > 50, so the sketch provably
       * retains every qualifying token), broadcast candidate semi-join,
       * exact count + integer threshold (cnt·50 > n — no division).
       * The oracle computes the same answer by brute-force GROUP BY:
       * the sketch path must be result-invisible. */
-    "q_agg_heavy_hitters" -> ((s, d) => {
+    Query("q_agg_heavy_hitters",
+      """WITH toks AS (
+           SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+         ), filtered AS (
+           SELECT tok FROM toks WHERE length(tok) > 0
+         ), t AS (
+           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
+         ), n AS (
+           SELECT count(*) AS n FROM filtered
+         )
+         SELECT tok, CAST(cnt AS BIGINT) AS cnt
+         FROM t, n WHERE cnt * 50 > n
+         ORDER BY cnt DESC, tok""")((s, d) => {
       import s.implicits._
       val toks = documents(s, d)
         .select(explode(split(col("text"), " ")).as("tok"))
@@ -133,7 +145,21 @@ object HeavyHitters {
       * verify pass then makes the result identical to q120's — and the
       * oracle IS q120's brute-force SQL verbatim. Driver-side state is
       * k-bounded (63 entries per partition summary), never data-sized. */
-    "q_incr_heavy_hitters" -> ((s, d) => {
+    Query("q_incr_heavy_hitters",
+      // q123's oracle IS q120's: incremental candidate maintenance must
+      // be result-invisible.
+      """WITH toks AS (
+           SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+         ), filtered AS (
+           SELECT tok FROM toks WHERE length(tok) > 0
+         ), t AS (
+           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
+         ), n AS (
+           SELECT count(*) AS n FROM filtered
+         )
+         SELECT tok, CAST(cnt AS BIGINT) AS cnt
+         FROM t, n WHERE cnt * 50 > n
+         ORDER BY cnt DESC, tok""")((s, d) => {
       import s.implicits._
       val docs = documents(s, d)
       val merged = mergeSummaries(
@@ -174,7 +200,23 @@ object HeavyHitters {
       * data-sized driver state. `Round8Spec` proves the bound on an
       * adversarial fixture sized at the budget edge. Oracle = the
       * brute-force GROUP BY over the post-delta corpus. */
-    "q_incr_heavy_hitters_delete" -> ((s, d) => {
+    Query("q_incr_heavy_hitters_delete",
+      // q138's oracle: the brute-force GROUP BY over the POST-DELTA
+      // corpus — the budget-guarded candidate path must be
+      // result-invisible.
+      """WITH toks AS (
+           SELECT unnest(string_split(text, ' ')) AS tok
+           FROM documents WHERE doc_id % 10 <> 1
+         ), filtered AS (
+           SELECT tok FROM toks WHERE length(tok) > 0
+         ), t AS (
+           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
+         ), n AS (
+           SELECT count(*) AS n FROM filtered
+         )
+         SELECT tok, CAST(cnt AS BIGINT) AS cnt
+         FROM t, n WHERE cnt * 50 > n
+         ORDER BY cnt DESC, tok""")((s, d) => {
       import s.implicits._
       val docs = documents(s, d)
       // pre-delta candidates: preserved base summary ⊕ insert summary
@@ -202,55 +244,5 @@ object HeavyHitters {
         .select(col("tok"), col("cnt"))
         .orderBy(col("cnt").desc, col("tok"))
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_agg_heavy_hitters" ->
-      """WITH toks AS (
-           SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-         ), filtered AS (
-           SELECT tok FROM toks WHERE length(tok) > 0
-         ), t AS (
-           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
-         ), n AS (
-           SELECT count(*) AS n FROM filtered
-         )
-         SELECT tok, CAST(cnt AS BIGINT) AS cnt
-         FROM t, n WHERE cnt * 50 > n
-         ORDER BY cnt DESC, tok"""
-  ) ++ Map(
-    // q123's oracle IS q120's: incremental candidate maintenance must
-    // be result-invisible.
-    "q_incr_heavy_hitters" ->
-      """WITH toks AS (
-           SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-         ), filtered AS (
-           SELECT tok FROM toks WHERE length(tok) > 0
-         ), t AS (
-           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
-         ), n AS (
-           SELECT count(*) AS n FROM filtered
-         )
-         SELECT tok, CAST(cnt AS BIGINT) AS cnt
-         FROM t, n WHERE cnt * 50 > n
-         ORDER BY cnt DESC, tok"""
-  ) ++ Map(
-    // q138's oracle: the brute-force GROUP BY over the POST-DELTA
-    // corpus — the budget-guarded candidate path must be
-    // result-invisible.
-    "q_incr_heavy_hitters_delete" ->
-      """WITH toks AS (
-           SELECT unnest(string_split(text, ' ')) AS tok
-           FROM documents WHERE doc_id % 10 <> 1
-         ), filtered AS (
-           SELECT tok FROM toks WHERE length(tok) > 0
-         ), t AS (
-           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
-         ), n AS (
-           SELECT count(*) AS n FROM filtered
-         )
-         SELECT tok, CAST(cnt AS BIGINT) AS cnt
-         FROM t, n WHERE cnt * 50 > n
-         ORDER BY cnt DESC, tok"""
   )
 }

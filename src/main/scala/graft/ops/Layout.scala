@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -47,66 +47,6 @@ object Layout {
         .write.mode("overwrite").partitionBy("day").parquet(path)
       path
     }
-
-  private val defsBuckets: Map[String, Q] = Map(
-    /** q157: co-located bucketed join as a DECLARED query — orders ⋈
-      * customer on custkey over the 8-bucket layout, merge-join hinted
-      * so the executed plan is the zero-exchange sort-merge join the
-      * bucketing exists for (the hint, not a session-conf toggle,
-      * because the driver executes this frame at action time, after
-      * this function returned — conf set here would not apply).
-      * ColocationSpec asserts the no-Exchange plan; the oracle hash
-      * asserts the result equals the plain join-aggregate over the
-      * parquet originals. At 100 TB this layout turns every repeated
-      * custkey join from two corpus shuffles into a local merge. */
-    "q_join_colocated" -> ((s, d) => {
-      val (ordT, custT) = bucketedTables(s, d)
-      s.table(ordT).hint("merge")
-        .join(s.table(custT), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          dbl(sum(dec2(col("o_totalprice")))).as("revenue"))
-        .orderBy("c_mktsegment")
-    }),
-
-    /** q158: partition-pruned scan as a DECLARED query — one day's
-      * events read back from the hive-partitioned layout (the scan
-      * touches exactly one day=... directory; PartitionPruneSpec
-      * asserts the PartitionFilters plan), aggregated per event type.
-      * Oracle = the same day filtered from the original events parquet
-      * by timestamp range: pruning must be result-invisible. */
-    "q_scan_partition_pruned" -> ((s, d) => {
-      val path = partitionedEvents(s, d)
-      s.read.parquet(path)
-        .filter(col("day") === "2024-01-05")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          count_distinct(col("user_id")).as("n_users"))
-        .orderBy("event_type")
-    })
-  )
-
-  private val sqlBuckets: Map[String, String] = Map(
-    // q157's oracle is the PLAIN join-aggregate over the parquet
-    // originals — the bucketed layout must be result-invisible.
-    "q_join_colocated" ->
-      """SELECT c_mktsegment,
-           CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS revenue
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    // q158's oracle filters the original events by the UTC day range —
-    // partition pruning must be result-invisible.
-    "q_scan_partition_pruned" ->
-      """SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM events
-         WHERE ts >= TIMESTAMP '2024-01-05 00:00:00'
-           AND ts <  TIMESTAMP '2024-01-06 00:00:00'
-         GROUP BY event_type ORDER BY event_type"""
-  )
 
   // ================================================================
   // former Round12h module (Z-order layout; merged r13, pure move)
@@ -245,8 +185,74 @@ object Layout {
       .map(r => zOf(r.getInt(0), r.getInt(1))).distinct.toSeq
   }
 
-  private val defsZorder: Map[String, Q] = Map(
+  /** The box oracle over any events relation — layout-invisible by
+    * construction; rel-parameterized so q249's post-delta oracle is
+    * built, not string-surgered. */
+  def zorderSql(rel: String): String =
+    s"""SELECT CAST(count(*) AS BIGINT) AS n_events,
+               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+               CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
+                 AS value_cents_sum
+        FROM $rel
+        WHERE user_id BETWEEN 3 AND 8
+          AND CAST(ts AS DATE) BETWEEN DATE '2024-01-08'
+                                   AND DATE '2024-01-21'"""
 
+  val queries: Seq[Query] = Seq(
+    /** q157: co-located bucketed join as a DECLARED query — orders ⋈
+      * customer on custkey over the 8-bucket layout, merge-join hinted
+      * so the executed plan is the zero-exchange sort-merge join the
+      * bucketing exists for (the hint, not a session-conf toggle,
+      * because the driver executes this frame at action time, after
+      * this function returned — conf set here would not apply).
+      * ColocationSpec asserts the no-Exchange plan; the oracle hash
+      * asserts the result equals the plain join-aggregate over the
+      * parquet originals. At 100 TB this layout turns every repeated
+      * custkey join from two corpus shuffles into a local merge. */
+    Query("q_join_colocated",
+      // q157's oracle is the PLAIN join-aggregate over the parquet
+      // originals — the bucketed layout must be result-invisible.
+      """SELECT c_mktsegment,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS revenue
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY c_mktsegment ORDER BY c_mktsegment""")((s, d) => {
+      val (ordT, custT) = bucketedTables(s, d)
+      s.table(ordT).hint("merge")
+        .join(s.table(custT), col("o_custkey") === col("c_custkey"))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          dbl(sum(dec2(col("o_totalprice")))).as("revenue"))
+        .orderBy("c_mktsegment")
+    }),
+
+    /** q158: partition-pruned scan as a DECLARED query — one day's
+      * events read back from the hive-partitioned layout (the scan
+      * touches exactly one day=... directory; PartitionPruneSpec
+      * asserts the PartitionFilters plan), aggregated per event type.
+      * Oracle = the same day filtered from the original events parquet
+      * by timestamp range: pruning must be result-invisible. */
+    Query("q_scan_partition_pruned",
+      // q158's oracle filters the original events by the UTC day range —
+      // partition pruning must be result-invisible.
+      """SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+         FROM events
+         WHERE ts >= TIMESTAMP '2024-01-05 00:00:00'
+           AND ts <  TIMESTAMP '2024-01-06 00:00:00'
+         GROUP BY event_type ORDER BY event_type""")((s, d) => {
+      val path = partitionedEvents(s, d)
+      s.read.parquet(path)
+        .filter(col("day") === "2024-01-05")
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          count_distinct(col("user_id")).as("n_users"))
+        .orderBy("event_type")
+    }),
+
+    // former Round12h module rows: Z-order layout
     /** q242: Z-ORDER LAYOUT + 2-D BOX PRUNING [N scale path] —
       * events are written ONCE (session-memoized, appId-isolated
       * scratch) partitioned by the 8-bit Morton code of
@@ -262,7 +268,7 @@ object Layout {
       * pins PartitionFilters-on-zb in the executed plan, candidate
       * strictness (<256), Morton bijectivity, and result ≡ unpruned
       * scan. */
-    "q_scan_zorder" -> ((s, d) => {
+    Query("q_scan_zorder", zorderSql("events"))((s, d) => {
       val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder"
       val stats = Memos.value(s, d, "layout/zorder_stats") {
         val ev = events(s, d)
@@ -293,7 +299,8 @@ object Layout {
       * `Round12mSpec` additionally pins the file-level pass-through
       * (untouched cells' files byte-identical) and the emptied-cell
       * deletion on a constructed frame. */
-    "q_incr_zorder" -> ((s, d) => {
+    Query("q_incr_zorder", zorderSql(
+      "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder_incr"
       val ev = events(s, d)
       val base = ev.filter(col("event_id") % 10 =!= 0)
@@ -315,27 +322,6 @@ object Layout {
         true
       }
       boxQuery(s, scratch, stats)
-    }))
-
-  private val sqlZorder: Map[String, String] = Map(
-    "q_scan_zorder" -> zorderSql("events"),
-    "q_incr_zorder" -> zorderSql(
-      "(SELECT * FROM events WHERE event_id % 10 <> 1)"))
-
-  /** The box oracle over any events relation — layout-invisible by
-    * construction; rel-parameterized so q249's post-delta oracle is
-    * built, not string-surgered. */
-  def zorderSql(rel: String): String =
-    s"""SELECT CAST(count(*) AS BIGINT) AS n_events,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-               CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
-                 AS value_cents_sum
-        FROM $rel
-        WHERE user_id BETWEEN 3 AND 8
-          AND CAST(ts AS DATE) BETWEEN DATE '2024-01-08'
-                                   AND DATE '2024-01-21'"""
-
-  val defs: Map[String, Q] = defsBuckets ++ defsZorder
-
-  val sql: Map[String, String] = sqlBuckets ++ sqlZorder
+    })
+  )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -205,7 +205,7 @@ object Round11b {
           .as("min_p"))
   }
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     /** q162: WINDOW DISTRIBUTION FUNCTIONS — percent_rank + cume_dist
       * of each order's price within its priority class. Completes the
@@ -215,7 +215,14 @@ object Round11b {
       * exact integers, tie rows receiving identical values in both
       * engines. One window sort per priority partition — the same
       * shuffle any ranked window pays; nothing extra at 100 TB. */
-    "q_win_cume_dist" -> ((s, d) => {
+    Query("q_win_cume_dist",
+      """SELECT o_orderkey, o_orderpriority, o_totalprice,
+           percent_rank() OVER
+             (PARTITION BY o_orderpriority ORDER BY o_totalprice) AS pr,
+           cume_dist() OVER
+             (PARTITION BY o_orderpriority ORDER BY o_totalprice) AS cd
+         FROM orders WHERE o_custkey < 200
+         ORDER BY o_orderpriority, o_orderkey""")((s, d) => {
       val w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
       orders(s, d).filter(col("o_custkey") < 200)
         .select(col("o_orderkey"), col("o_orderpriority"),
@@ -234,7 +241,19 @@ object Round11b {
       * |types|²-bounded aggregate. The product analytics primitive
       * behind funnels (q88) generalized to ALL pairs. Integer
       * counts end to end. */
-    "q_events_pathing" -> ((s, d) => {
+    Query("q_events_pathing",
+      """WITH nxt AS (
+           SELECT user_id, event_type,
+             lead(event_type) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+           FROM events
+         )
+         SELECT event_type, next_type,
+           CAST(count(*) AS BIGINT) AS n_transitions,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+         FROM nxt WHERE next_type IS NOT NULL
+         GROUP BY event_type, next_type
+         ORDER BY event_type, next_type""")((s, d) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -257,7 +276,13 @@ object Round11b {
       * multiplies the shuffle by the number of distinct clauses;
       * the scaladoc'd alternative when approximation is acceptable
       * is one pass of approx_count_distinct (q23). */
-    "q_agg_distinct_multi" -> ((s, d) => {
+    Query("q_agg_distinct_multi",
+      """SELECT l_linestatus,
+           CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
+           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
+           CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
+           CAST(count(*) AS BIGINT) AS n_rows
+         FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""")((s, d) => {
       lineitem(s, d).groupBy("l_linestatus")
         .agg(count_distinct(col("l_partkey")).as("n_parts"),
           count_distinct(col("l_suppkey")).as("n_supps"),
@@ -286,7 +311,27 @@ object Round11b {
       * broadcast so the corpus never shuffles twice. Docs under two
       * tokens carry no bigram and drop out (identically in the
       * oracle via the empty range()). */
-    "q_text_lm_rarity" -> ((s, d) =>
+    Query("q_text_lm_rarity",
+      """WITH bb AS (
+           SELECT doc_id,
+             unnest(list_transform(range(1, len(toks)), i -> toks[i]))
+               AS w1,
+             unnest(list_transform(range(1, len(toks)), i -> toks[i + 1]))
+               AS w2
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                 FROM documents) t
+         ), c2 AS (
+           SELECT w1, w2, count(*) AS cnt2 FROM bb GROUP BY w1, w2
+         ), c1 AS (
+           SELECT w1, count(*) AS cnt1 FROM bb GROUP BY w1
+         )
+         SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           CAST(sum(CASE WHEN cnt2 * 32 < cnt1 THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_rare,
+           min(CAST(cnt2 AS DOUBLE) / CAST(cnt1 AS DOUBLE)) AS min_p
+         FROM bb JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
+         GROUP BY doc_id ORDER BY doc_id""")((s, d) =>
       lmRarity(documents(s, d), "doc_id", "text", rarityDenom = 32)
         .orderBy("doc_id")),
 
@@ -309,7 +354,30 @@ object Round11b {
       * threshold 2^16 has no 4-hex representation). Output: per
       * language the pre-count, threshold, kept count/chars and min
       * kept doc. */
-    "q_sample_temperature" -> ((s, d) =>
+    Query("q_sample_temperature",
+      """WITH c AS (
+           SELECT lang, count(*) AS c_docs FROM documents GROUP BY lang
+         ), m AS (
+           SELECT min(c_docs) AS c_min FROM c
+         ), r AS (
+           SELECT lang, c_docs, c_min,
+             CAST(floor(sqrt(CAST(c_min AS DOUBLE) / CAST(c_docs AS DOUBLE))
+               * 65536.0) AS BIGINT) AS t_int
+           FROM c, m
+         ), r2 AS (
+           SELECT lang, c_docs, c_min, t_int,
+             lpad(lower(to_hex(t_int)), 4, '0') AS t_hex
+           FROM r
+         )
+         SELECT lang, c_docs, t_int,
+           CAST(count(*) AS BIGINT) AS n_kept,
+           CAST(sum(n_chars) AS BIGINT) AS n_chars,
+           min(doc_id) AS min_doc
+         FROM documents JOIN r2 USING (lang)
+         WHERE c_docs = c_min
+            OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < t_hex
+         GROUP BY lang, c_docs, t_int
+         ORDER BY lang""")((s, d) =>
       temperatureRebalance(documents(s, d), "lang", "doc_id")
         .groupBy(col("lang"), col("c_docs"), col("t_int"))
         .agg(count(lit(1)).as("n_kept"),
@@ -324,7 +392,23 @@ object Round11b {
       * user-keyed window sort as pathing/sessionize; integer µs
       * arithmetic end to end, so partial-aggregation order cannot
       * perturb anything. */
-    "q_events_dwell" -> ((s, d) => {
+    Query("q_events_dwell",
+      """WITH e AS (
+           SELECT event_type, epoch_us(ts) AS us,
+             lead(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS next_us
+           FROM events
+         ), w AS (
+           SELECT event_type, next_us - us AS wait_us
+           FROM e WHERE next_us IS NOT NULL
+         )
+         SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(wait_us) AS BIGINT) AS total_wait_us,
+           CAST(max(wait_us) AS BIGINT) AS max_wait_us,
+           CAST(sum(wait_us) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+             AS mean_wait_us
+         FROM w GROUP BY event_type ORDER BY event_type""")((s, d) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -351,7 +435,19 @@ object Round11b {
       * mergeable aggregate — no window, no shuffle beyond the
       * groupBy), which is exactly why it beats q29's row_number
       * window when only the extreme row is wanted at 100 TB. */
-    "q_agg_min_max_by" -> ((s, d) => {
+    Query("q_agg_min_max_by",
+      """SELECT o_orderpriority,
+           max_by(o_orderkey,
+             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+               * 10000000000 + o_orderkey) AS top_order,
+           min_by(o_orderkey,
+             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+               * 10000000000 + o_orderkey) AS bottom_order,
+           CAST(max(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS top_price,
+           CAST(min(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS bottom_price
+         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")((s, d) => {
       val ordKey = (dec2(col("o_totalprice")) * 100).cast("long") *
         lit(10000000000L) + col("o_orderkey")
       orders(s, d).groupBy("o_orderpriority")
@@ -381,7 +477,23 @@ object Round11b {
       * leave the stored aggregate. Oracle = the full lead-window
       * recompute over the post-delta log: signed maintenance must be
       * result-invisible. */
-    "q_incr_pathing" -> ((s, d) => {
+    Query("q_incr_pathing",
+      // q169's oracle is q163's transition matrix over the POST-DELTA
+      // event log: signed maintenance must be result-invisible.
+      """WITH post AS (
+           SELECT user_id, event_id, ts, event_type FROM events
+           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
+         ), nxt AS (
+           SELECT event_type,
+             lead(event_type) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+           FROM post
+         )
+         SELECT event_type, next_type,
+           CAST(count(*) AS BIGINT) AS n_transitions
+         FROM nxt WHERE next_type IS NOT NULL
+         GROUP BY event_type, next_type
+         ORDER BY event_type, next_type""")((s, d) => {
       val cut = lit("2024-01-20").cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -418,7 +530,16 @@ object Round11b {
       * bounded and the filter pushes to the scan; the join keys on
       * supplier — the 100 TB skew guard is the documented salted-join
       * swap (q84) if one supplier dominates. Integer counts only. */
-    "q_graph_2hop" -> ((s, d) => {
+    Query("q_graph_2hop",
+      """WITH e AS (
+           SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
+         )
+         SELECT a.p AS part,
+           CAST(count(DISTINCT b.p) AS BIGINT) AS n_2hop,
+           CAST(count(*) AS BIGINT) AS n_paths
+         FROM e a JOIN e b ON a.sk = b.sk AND a.p <> b.p
+         WHERE a.p < 100
+         GROUP BY a.p ORDER BY a.p""")((s, d) => {
       val e = bipartiteEdges(s, d)
       e.filter(col("p") < 100).as("a")
         .join(e.as("b"), col("a.sk") === col("b.sk"))
@@ -440,7 +561,22 @@ object Round11b {
       * independently; no global order exists anywhere. Output is a
       * membership fingerprint per label (count + exact id sum +
       * min/max), so a single divergent kept-row flips the hash. */
-    "q_sample_balanced" -> ((s, d) =>
+    Query("q_sample_balanced",
+      """WITH c AS (
+           SELECT label, count(*) AS c_n FROM embeddings GROUP BY label
+         ), m AS (
+           SELECT min(c_n) AS c_min FROM c
+         ), r AS (
+           SELECT vec_id, label, row_number() OVER
+             (PARTITION BY label
+              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
+           FROM embeddings
+         )
+         SELECT label, CAST(count(*) AS BIGINT) AS n_kept,
+           CAST(sum(vec_id) AS BIGINT) AS sum_ids,
+           min(vec_id) AS min_id, max(vec_id) AS max_id
+         FROM r, m WHERE rn <= c_min
+         GROUP BY label ORDER BY label""")((s, d) =>
       balancedSample(embeddings(s, d).select(col("vec_id"), col("label")),
         "label", "vec_id")
         .groupBy("label")
@@ -458,7 +594,22 @@ object Round11b {
       * sorts locally; nothing is globally ordered at 100 TB. Integer
       * day arithmetic (datediff from a fixed epoch), UTC dates both
       * sides (session pinned / DuckDB naive). */
-    "q_events_streaks" -> ((s, d) =>
+    Query("q_events_streaks",
+      """WITH d AS (
+           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
+         ), g AS (
+           SELECT user_id,
+             CAST(day - DATE '2024-01-01' AS BIGINT)
+               - CAST(row_number() OVER
+                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
+           FROM d
+         ), i AS (
+           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
+         )
+         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
+           CAST(count(*) AS BIGINT) AS n_streaks,
+           CAST(max(len) AS BIGINT) AS longest_streak
+         FROM i GROUP BY user_id ORDER BY user_id""")((s, d) =>
       activityStreaks(events(s, d), "user_id", "ts").orderBy("user_id")),
 
     /** q173: TIME-WINDOWED FUNNEL — q88's funnel with the conversion
@@ -469,7 +620,23 @@ object Round11b {
       * NULL purchase and conv_30m = 0, identical on both engines.
       * Two filtered partial aggregates + one user-keyed join — the
       * conversion-window analytics shape at any scale. */
-    "q_events_funnel_window" -> ((s, d) => {
+    Query("q_events_funnel_window",
+      """WITH v AS (
+           SELECT user_id, min(ts) AS first_view FROM events
+           WHERE event_type = 'view' GROUP BY user_id
+         ), p AS (
+           SELECT v.user_id, v.first_view, min(e.ts) AS first_purchase
+           FROM v LEFT JOIN events e
+             ON e.user_id = v.user_id AND e.event_type = 'purchase'
+            AND e.ts >= v.first_view
+           GROUP BY v.user_id, v.first_view
+         )
+         SELECT user_id, first_view, first_purchase,
+           CAST(CASE WHEN first_purchase IS NOT NULL
+             AND epoch_us(first_purchase) - epoch_us(first_view)
+                 <= 1800000000
+             THEN 1 ELSE 0 END AS BIGINT) AS conv_30m
+         FROM p ORDER BY user_id""")((s, d) => {
       val ev = events(s, d)
       val v = ev.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min(col("ts")).as("first_view"))
@@ -499,7 +666,22 @@ object Round11b {
       * division (10^7·2.6e9 ms exceeds 2^53, an IEEE quotient would
       * corrupt the id). Per-user join fan-out is bounded by the
       * user's own history — embarrassingly parallel at 100 TB. */
-    "q_join_asof_nearest" -> ((s, d) => {
+    Query("q_join_asof_nearest",
+      """WITH err AS (
+           SELECT event_id AS e_id, user_id, epoch_us(ts) AS e_us
+           FROM events WHERE event_type = 'error'
+         ), pur AS (
+           SELECT event_id AS p_id, user_id, epoch_us(ts) AS p_us
+           FROM events WHERE event_type = 'purchase'
+         ), j AS (
+           SELECT e_id, err.user_id AS user_id,
+             min(abs(p_us - e_us) // 1000 * 10000000 + p_id) AS mk
+           FROM err JOIN pur USING (user_id) GROUP BY e_id, err.user_id
+         )
+         SELECT e_id AS event_id, user_id,
+           CAST(mk % 10000000 AS BIGINT) AS nearest_purchase_id,
+           CAST(mk // 10000000 AS BIGINT) AS diff_ms
+         FROM j ORDER BY event_id""")((s, d) => {
       val ev = events(s, d)
       nearestAsofJoin(
         ev.filter(col("event_type") === "error"), "event_id", "ts",
@@ -521,7 +703,26 @@ object Round11b {
       * union by inclusion-exclusion from exact degrees, jaccard ONE
       * division. The LSH swap (q51) is the documented scale path when
       * the pair set cannot be subset-bounded. */
-    "q_graph_jaccard_neighbors" -> ((s, d) => {
+    Query("q_graph_jaccard_neighbors",
+      """WITH e AS (
+           SELECT DISTINCT l_partkey AS p, l_suppkey AS sk
+           FROM lineitem WHERE l_partkey < 100
+         ), deg AS (
+           SELECT p, count(*) AS dg FROM e GROUP BY p
+         ), i AS (
+           SELECT a.p AS part_a, b.p AS part_b, count(*) AS inter
+           FROM e a JOIN e b ON a.sk = b.sk AND a.p < b.p
+           GROUP BY a.p, b.p
+         )
+         SELECT part_a, part_b, CAST(inter AS BIGINT) AS inter,
+           CAST(da.dg + db.dg - inter AS BIGINT) AS union_sz,
+           CAST(inter AS DOUBLE) /
+             CAST(da.dg + db.dg - inter AS DOUBLE) AS jacc,
+           'exact' AS plan
+         FROM i
+         JOIN deg da ON da.p = part_a
+         JOIN deg db ON db.p = part_b
+         ORDER BY part_a, part_b""")((s, d) => {
       // COSTED pair source (r13): the query emits EVERY intersecting
       // pair with its exact jaccard (no threshold), so no LSH swap
       // is sound — the scale guard is guardedInterPairs' capped
@@ -557,7 +758,27 @@ object Round11b {
       * consistent with island semantics. Oracle = q172's islands SQL
       * over the post-delta log: maintenance must be
       * result-invisible. */
-    "q_incr_streaks" -> ((s, d) => {
+    Query("q_incr_streaks",
+      // q176's oracle is q172's islands SQL over the POST-DELTA event
+      // log: signed maintenance must be result-invisible.
+      """WITH post AS (
+           SELECT user_id, event_id, ts FROM events
+           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
+         ), d AS (
+           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM post
+         ), g AS (
+           SELECT user_id,
+             CAST(day - DATE '2024-01-01' AS BIGINT)
+               - CAST(row_number() OVER
+                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
+           FROM d
+         ), i AS (
+           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
+         )
+         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
+           CAST(count(*) AS BIGINT) AS n_streaks,
+           CAST(max(len) AS BIGINT) AS longest_streak
+         FROM i GROUP BY user_id ORDER BY user_id""")((s, d) => {
       val cut = lit("2024-01-20").cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"))
@@ -593,7 +814,22 @@ object Round11b {
       * convention), with appId-isolated scratch. The copy is written
       * by the proven batch reader so the fixture's physical ts layout
       * is normalized before the stream source reads it. */
-    "q_stream_sink_roundtrip" -> ((s, d) => Memos.frame(s, d,
+    Query.stream("q_stream_sink_roundtrip",
+      // q177's oracle: the closed-window set is the pure function
+      // {days : day end <= max(ts) - 1 min} of the input — what
+      // append-mode + AvailableNow's final watermark flush emits.
+      """WITH mx AS (
+           SELECT max(ts) AS m FROM events
+         ), agg AS (
+           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+             event_type, count(*) AS n
+           FROM events GROUP BY 1, 2
+         )
+         SELECT day, event_type, CAST(n AS BIGINT) AS n
+         FROM agg, mx
+         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
+               <= m - INTERVAL 1 MINUTE
+         ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
         "round11b/streamRoundtrip")(
         // r18 (task 6): 4-partition state — the one-time stream cost
         // is micro-batch state plumbing, not data (Streams.smallStateConf)
@@ -651,7 +887,22 @@ object Round11b {
       * as q177 (the restart is result-invisible — the streaming
       * analogue of the signed-delta family's contract). Stream pair
       * runs once per (session, fixture); appId-isolated scratch. */
-    "q_stream_restart_exactly_once" -> ((s, d) => Memos.frame(s, d,
+    Query.stream("q_stream_restart_exactly_once",
+      // q178: identical closed-window function — the checkpoint restart
+      // must be result-invisible, and a duplicate/dropped window from a
+      // broken exactly-once path flips this hash.
+      """WITH mx AS (
+           SELECT max(ts) AS m FROM events
+         ), agg AS (
+           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+             event_type, count(*) AS n
+           FROM events GROUP BY 1, 2
+         )
+         SELECT day, event_type, CAST(n AS BIGINT) AS n
+         FROM agg, mx
+         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
+               <= m - INTERVAL 1 MINUTE
+         ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
         "round11b/streamRestart")(
         // r18 (task 6): 4-partition state across BOTH runs (the
         // checkpoint pins the count at first start)
@@ -715,7 +966,19 @@ object Round11b {
       * every row; ordering robustness comes from the MERGE algebra,
       * not from arrival discipline. Stream runs once per (session,
       * fixture); appId-isolated scratch. */
-    "q_stream_merge_upsert" -> ((s, d) => Memos.frame(s, d,
+    Query.stream("q_stream_merge_upsert",
+      // q280's oracle: the full last-write-wins recompute — the
+      // stream-maintained snapshot must be result-invisible against it
+      // (q47's discipline, computed by a MERGE cascade over
+      // deliberately out-of-order micro-batches instead of one window).
+      """SELECT user_id, event_id AS last_event_id,
+                event_type AS last_type, value AS last_value
+         FROM (
+           SELECT user_id, event_id, event_type, value,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events
+         ) t WHERE rn = 1 ORDER BY user_id""")((s, d) => Memos.frame(s, d,
         "round11b/streamMergeUpsert")(
         // r18 (task 6): the foreachBatch MERGE's full-outer join runs
         // per micro-batch — 4 shuffle partitions size it to the
@@ -773,7 +1036,16 @@ object Round11b {
       * mapping, decimal/double round-trip, nulls) flips the hash.
       * Doubles round-trip bit-exact through ORC's IEEE encoding;
       * money still aggregates in exact decimal (Dec contract). */
-    "q_source_orc" -> ((s, d) => {
+    Query("q_source_orc",
+      // q179's oracle reads the parquet originals — the Spark side must
+      // produce identical values through the ORC round-trip.
+      """SELECT n_name,
+           CAST(count(*) AS BIGINT) AS n_suppliers,
+           CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+             AS acctbal_sum,
+           min(s_name) AS first_supplier
+         FROM supplier JOIN nation ON s_nationkey = n_nationkey
+         GROUP BY n_name ORDER BY n_name""")((s, d) => {
       val scratch = Memos.scratchDir(s, d, "orc")
       val sup = supplier(s, d)
       val nat = nation(s, d)
@@ -789,300 +1061,5 @@ object Round11b {
           min(col("s_name")).as("first_supplier"))
         .orderBy("n_name")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_win_cume_dist" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
-           percent_rank() OVER
-             (PARTITION BY o_orderpriority ORDER BY o_totalprice) AS pr,
-           cume_dist() OVER
-             (PARTITION BY o_orderpriority ORDER BY o_totalprice) AS cd
-         FROM orders WHERE o_custkey < 200
-         ORDER BY o_orderpriority, o_orderkey""",
-    "q_events_pathing" ->
-      """WITH nxt AS (
-           SELECT user_id, event_type,
-             lead(event_type) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-           FROM events
-         )
-         SELECT event_type, next_type,
-           CAST(count(*) AS BIGINT) AS n_transitions,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM nxt WHERE next_type IS NOT NULL
-         GROUP BY event_type, next_type
-         ORDER BY event_type, next_type""",
-    "q_agg_distinct_multi" ->
-      """SELECT l_linestatus,
-           CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps,
-           CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-           CAST(count(*) AS BIGINT) AS n_rows
-         FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""",
-    "q_text_lm_rarity" ->
-      """WITH bb AS (
-           SELECT doc_id,
-             unnest(list_transform(range(1, len(toks)), i -> toks[i]))
-               AS w1,
-             unnest(list_transform(range(1, len(toks)), i -> toks[i + 1]))
-               AS w2
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents) t
-         ), c2 AS (
-           SELECT w1, w2, count(*) AS cnt2 FROM bb GROUP BY w1, w2
-         ), c1 AS (
-           SELECT w1, count(*) AS cnt1 FROM bb GROUP BY w1
-         )
-         SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(sum(CASE WHEN cnt2 * 32 < cnt1 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_rare,
-           min(CAST(cnt2 AS DOUBLE) / CAST(cnt1 AS DOUBLE)) AS min_p
-         FROM bb JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_sample_temperature" ->
-      """WITH c AS (
-           SELECT lang, count(*) AS c_docs FROM documents GROUP BY lang
-         ), m AS (
-           SELECT min(c_docs) AS c_min FROM c
-         ), r AS (
-           SELECT lang, c_docs, c_min,
-             CAST(floor(sqrt(CAST(c_min AS DOUBLE) / CAST(c_docs AS DOUBLE))
-               * 65536.0) AS BIGINT) AS t_int
-           FROM c, m
-         ), r2 AS (
-           SELECT lang, c_docs, c_min, t_int,
-             lpad(lower(to_hex(t_int)), 4, '0') AS t_hex
-           FROM r
-         )
-         SELECT lang, c_docs, t_int,
-           CAST(count(*) AS BIGINT) AS n_kept,
-           CAST(sum(n_chars) AS BIGINT) AS n_chars,
-           min(doc_id) AS min_doc
-         FROM documents JOIN r2 USING (lang)
-         WHERE c_docs = c_min
-            OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < t_hex
-         GROUP BY lang, c_docs, t_int
-         ORDER BY lang""",
-    "q_events_dwell" ->
-      """WITH e AS (
-           SELECT event_type, epoch_us(ts) AS us,
-             lead(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS next_us
-           FROM events
-         ), w AS (
-           SELECT event_type, next_us - us AS wait_us
-           FROM e WHERE next_us IS NOT NULL
-         )
-         SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(wait_us) AS BIGINT) AS total_wait_us,
-           CAST(max(wait_us) AS BIGINT) AS max_wait_us,
-           CAST(sum(wait_us) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-             AS mean_wait_us
-         FROM w GROUP BY event_type ORDER BY event_type""",
-    "q_agg_min_max_by" ->
-      """SELECT o_orderpriority,
-           max_by(o_orderkey,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-               * 10000000000 + o_orderkey) AS top_order,
-           min_by(o_orderkey,
-             CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-               * 10000000000 + o_orderkey) AS bottom_order,
-           CAST(max(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS top_price,
-           CAST(min(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS bottom_price
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    // q169's oracle is q163's transition matrix over the POST-DELTA
-    // event log: signed maintenance must be result-invisible.
-    "q_incr_pathing" ->
-      """WITH post AS (
-           SELECT user_id, event_id, ts, event_type FROM events
-           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
-         ), nxt AS (
-           SELECT event_type,
-             lead(event_type) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-           FROM post
-         )
-         SELECT event_type, next_type,
-           CAST(count(*) AS BIGINT) AS n_transitions
-         FROM nxt WHERE next_type IS NOT NULL
-         GROUP BY event_type, next_type
-         ORDER BY event_type, next_type""",
-    "q_graph_2hop" ->
-      """WITH e AS (
-           SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-         )
-         SELECT a.p AS part,
-           CAST(count(DISTINCT b.p) AS BIGINT) AS n_2hop,
-           CAST(count(*) AS BIGINT) AS n_paths
-         FROM e a JOIN e b ON a.sk = b.sk AND a.p <> b.p
-         WHERE a.p < 100
-         GROUP BY a.p ORDER BY a.p""",
-    "q_sample_balanced" ->
-      """WITH c AS (
-           SELECT label, count(*) AS c_n FROM embeddings GROUP BY label
-         ), m AS (
-           SELECT min(c_n) AS c_min FROM c
-         ), r AS (
-           SELECT vec_id, label, row_number() OVER
-             (PARTITION BY label
-              ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-           FROM embeddings
-         )
-         SELECT label, CAST(count(*) AS BIGINT) AS n_kept,
-           CAST(sum(vec_id) AS BIGINT) AS sum_ids,
-           min(vec_id) AS min_id, max(vec_id) AS max_id
-         FROM r, m WHERE rn <= c_min
-         GROUP BY label ORDER BY label""",
-    "q_events_streaks" ->
-      """WITH d AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-         ), g AS (
-           SELECT user_id,
-             CAST(day - DATE '2024-01-01' AS BIGINT)
-               - CAST(row_number() OVER
-                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
-           FROM d
-         ), i AS (
-           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
-         )
-         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(max(len) AS BIGINT) AS longest_streak
-         FROM i GROUP BY user_id ORDER BY user_id""",
-    "q_events_funnel_window" ->
-      """WITH v AS (
-           SELECT user_id, min(ts) AS first_view FROM events
-           WHERE event_type = 'view' GROUP BY user_id
-         ), p AS (
-           SELECT v.user_id, v.first_view, min(e.ts) AS first_purchase
-           FROM v LEFT JOIN events e
-             ON e.user_id = v.user_id AND e.event_type = 'purchase'
-            AND e.ts >= v.first_view
-           GROUP BY v.user_id, v.first_view
-         )
-         SELECT user_id, first_view, first_purchase,
-           CAST(CASE WHEN first_purchase IS NOT NULL
-             AND epoch_us(first_purchase) - epoch_us(first_view)
-                 <= 1800000000
-             THEN 1 ELSE 0 END AS BIGINT) AS conv_30m
-         FROM p ORDER BY user_id""",
-    "q_join_asof_nearest" ->
-      """WITH err AS (
-           SELECT event_id AS e_id, user_id, epoch_us(ts) AS e_us
-           FROM events WHERE event_type = 'error'
-         ), pur AS (
-           SELECT event_id AS p_id, user_id, epoch_us(ts) AS p_us
-           FROM events WHERE event_type = 'purchase'
-         ), j AS (
-           SELECT e_id, err.user_id AS user_id,
-             min(abs(p_us - e_us) // 1000 * 10000000 + p_id) AS mk
-           FROM err JOIN pur USING (user_id) GROUP BY e_id, err.user_id
-         )
-         SELECT e_id AS event_id, user_id,
-           CAST(mk % 10000000 AS BIGINT) AS nearest_purchase_id,
-           CAST(mk // 10000000 AS BIGINT) AS diff_ms
-         FROM j ORDER BY event_id""",
-    "q_graph_jaccard_neighbors" ->
-      """WITH e AS (
-           SELECT DISTINCT l_partkey AS p, l_suppkey AS sk
-           FROM lineitem WHERE l_partkey < 100
-         ), deg AS (
-           SELECT p, count(*) AS dg FROM e GROUP BY p
-         ), i AS (
-           SELECT a.p AS part_a, b.p AS part_b, count(*) AS inter
-           FROM e a JOIN e b ON a.sk = b.sk AND a.p < b.p
-           GROUP BY a.p, b.p
-         )
-         SELECT part_a, part_b, CAST(inter AS BIGINT) AS inter,
-           CAST(da.dg + db.dg - inter AS BIGINT) AS union_sz,
-           CAST(inter AS DOUBLE) /
-             CAST(da.dg + db.dg - inter AS DOUBLE) AS jacc,
-           'exact' AS plan
-         FROM i
-         JOIN deg da ON da.p = part_a
-         JOIN deg db ON db.p = part_b
-         ORDER BY part_a, part_b""",
-    // q176's oracle is q172's islands SQL over the POST-DELTA event
-    // log: signed maintenance must be result-invisible.
-    "q_incr_streaks" ->
-      """WITH post AS (
-           SELECT user_id, event_id, ts FROM events
-           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
-         ), d AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM post
-         ), g AS (
-           SELECT user_id,
-             CAST(day - DATE '2024-01-01' AS BIGINT)
-               - CAST(row_number() OVER
-                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
-           FROM d
-         ), i AS (
-           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
-         )
-         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(max(len) AS BIGINT) AS longest_streak
-         FROM i GROUP BY user_id ORDER BY user_id""",
-    // q177's oracle: the closed-window set is the pure function
-    // {days : day end <= max(ts) - 1 min} of the input — what
-    // append-mode + AvailableNow's final watermark flush emits.
-    "q_stream_sink_roundtrip" ->
-      """WITH mx AS (
-           SELECT max(ts) AS m FROM events
-         ), agg AS (
-           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             event_type, count(*) AS n
-           FROM events GROUP BY 1, 2
-         )
-         SELECT day, event_type, CAST(n AS BIGINT) AS n
-         FROM agg, mx
-         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
-               <= m - INTERVAL 1 MINUTE
-         ORDER BY day, event_type""",
-    // q178: identical closed-window function — the checkpoint restart
-    // must be result-invisible, and a duplicate/dropped window from a
-    // broken exactly-once path flips this hash.
-    "q_stream_restart_exactly_once" ->
-      """WITH mx AS (
-           SELECT max(ts) AS m FROM events
-         ), agg AS (
-           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             event_type, count(*) AS n
-           FROM events GROUP BY 1, 2
-         )
-         SELECT day, event_type, CAST(n AS BIGINT) AS n
-         FROM agg, mx
-         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
-               <= m - INTERVAL 1 MINUTE
-         ORDER BY day, event_type""",
-    // q280's oracle: the full last-write-wins recompute — the
-    // stream-maintained snapshot must be result-invisible against it
-    // (q47's discipline, computed by a MERGE cascade over
-    // deliberately out-of-order micro-batches instead of one window).
-    "q_stream_merge_upsert" ->
-      """SELECT user_id, event_id AS last_event_id,
-                event_type AS last_type, value AS last_value
-         FROM (
-           SELECT user_id, event_id, event_type, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events
-         ) t WHERE rn = 1 ORDER BY user_id""",
-
-    // q179's oracle reads the parquet originals — the Spark side must
-    // produce identical values through the ORC round-trip.
-    "q_source_orc" ->
-      """SELECT n_name,
-           CAST(count(*) AS BIGINT) AS n_suppliers,
-           CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-             AS acctbal_sum,
-           min(s_name) AS first_supplier
-         FROM supplier JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name"""
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -161,7 +161,7 @@ object Round12 {
       .repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(outPath)
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
 
     /** q180: SIGNED INCREMENTAL WORDCOUNT [P §1] — the i²MapReduce
       * paper's MOTIVATING example as a declared row: token counts over
@@ -177,7 +177,15 @@ object Round12 {
       * count reaches zero vanish (n_total > 0), exactly as the
       * from-scratch wordcount over the post-delta corpus computes —
       * which is what the oracle runs. */
-    "q_incr_wordcount" -> ((s, d) => {
+    Query("q_incr_wordcount",
+      // q180's oracle: the from-scratch wordcount over the POST-DELTA
+      // corpus — the signed merge must be result-invisible.
+      """WITH t AS (
+           SELECT unnest(string_split(text, ' ')) AS word
+           FROM documents WHERE doc_id % 10 <> 1
+         )
+         SELECT word, CAST(count(*) AS BIGINT) AS n_total
+         FROM t GROUP BY word ORDER BY word""")((s, d) => {
       val docs = documents(s, d)
       val baseState = tokens(docs, col("doc_id") % 10 =!= 0)
         .groupBy("word").agg(count(lit(1)).as("n"))
@@ -199,7 +207,22 @@ object Round12 {
       * combines map-side, so at 100 TB this stays a single
       * corpus-proportional shuffle (production follows with a
       * semi-join of kept chunks back to docs, the same shape). */
-    "q_dedup_chunks" -> ((s, d) =>
+    Query("q_dedup_chunks",
+      """WITH t AS (
+           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+         ), x AS (
+           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
+           FROM t WHERE len(toks) >= 16
+         ), c AS (
+           SELECT doc_id,
+             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
+           FROM x
+         )
+         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
+           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+           min(doc_id) AS keep_id
+         FROM c GROUP BY h
+         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""")((s, d) =>
       chunkDupGroups(documents(s, d), "doc_id", "text", chunkTokens = 16)
         .orderBy("h")),
 
@@ -212,7 +235,15 @@ object Round12 {
       * exact median is the documented EXPENSIVE choice (per-group
       * sort); the approximate default is q81's KLL/GK sketch —
       * declaring both keeps the trade-off visible. */
-    "q_agg_median" -> ((s, d) => {
+    Query("q_agg_median",
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
+           median(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+             AS median_cents,
+           min(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+             AS min_cents,
+           max(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+             AS max_cents
+         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")((s, d) => {
       orders(s, d)
         .withColumn("cents", (dec2(col("o_totalprice")) * 100).cast("long"))
         .groupBy("o_orderpriority")
@@ -231,7 +262,15 @@ object Round12 {
       * One scan, one shuffle, all branches map-side combinable —
       * the 100 TB shape for "N metrics with N different predicates".
       * Empty-filter groups yield NULL identically in both engines. */
-    "q_agg_filtered" -> ((s, d) => {
+    Query("q_agg_filtered",
+      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(count(*) FILTER (WHERE l_discount > 0.05) AS BIGINT)
+             AS n_disc,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
+             FILTER (WHERE l_quantity > 25) AS DOUBLE) AS rev_hi_qty,
+           max(l_extendedprice) FILTER (WHERE l_tax < 0.02)
+             AS max_lowtax_price
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")((s, d) => {
       lineitem(s, d).groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_rows"),
           count_if(col("l_discount") > 0.05).as("n_disc"),
@@ -249,7 +288,16 @@ object Round12 {
       * row pins the explicit-frame semantics). Order key (price,
       * orderkey) is UNIQUE so both engines see one total order. Same
       * single window sort any ranked window pays. */
-    "q_win_nth_value" -> ((s, d) => {
+    Query("q_win_nth_value",
+      """SELECT o_orderkey, o_orderpriority, o_totalprice,
+           nth_value(o_orderkey, 2) OVER w AS second_cheapest,
+           first_value(o_orderkey) OVER w AS cheapest,
+           last_value(o_orderkey) OVER w AS priciest
+         FROM orders WHERE o_custkey < 200
+         WINDOW w AS (PARTITION BY o_orderpriority
+           ORDER BY o_totalprice, o_orderkey
+           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+         ORDER BY o_orderpriority, o_orderkey""")((s, d) => {
       val full = Window.partitionBy("o_orderpriority")
         .orderBy(col("o_totalprice"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -277,7 +325,37 @@ object Round12 {
       * compare bitwise; sums go through exact decimal. The
       * approximate production variant swaps count_distinct for HLL
       * (q23) and folds back to one scan. */
-    "q_profile_stats" -> ((s, d) =>
+    Query("q_profile_stats",
+      """WITH p AS (
+           SELECT 'l_quantity' AS col_name,
+             CAST(count(*) AS BIGINT) AS n_rows,
+             CAST(count(DISTINCT l_quantity) AS BIGINT) AS n_distinct,
+             min(l_quantity) AS min_v, max(l_quantity) AS max_v,
+             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
+           FROM lineitem
+           UNION ALL
+           SELECT 'l_extendedprice',
+             CAST(count(*) AS BIGINT),
+             CAST(count(DISTINCT l_extendedprice) AS BIGINT),
+             min(l_extendedprice), max(l_extendedprice),
+             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+           FROM lineitem
+           UNION ALL
+           SELECT 'l_discount',
+             CAST(count(*) AS BIGINT),
+             CAST(count(DISTINCT l_discount) AS BIGINT),
+             min(l_discount), max(l_discount),
+             CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
+           FROM lineitem
+           UNION ALL
+           SELECT 'l_tax',
+             CAST(count(*) AS BIGINT),
+             CAST(count(DISTINCT l_tax) AS BIGINT),
+             min(l_tax), max(l_tax),
+             CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE)
+           FROM lineitem
+         )
+         SELECT * FROM p ORDER BY col_name""")((s, d) =>
       profileStats(lineitem(s, d),
           Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
         .orderBy("col_name")),
@@ -297,7 +375,14 @@ object Round12 {
       * At 100 TB the one-task-per-partition rewrite is the skew
       * caveat: giant days split via maxRecordsPerFile + AQE rebalance
       * — same result, documented here. */
-    "q_sink_compaction" -> ((s, d) => {
+    Query("q_sink_compaction",
+      // q186's oracle reads the ORIGINAL events — the landing write and
+      // the compaction rewrite must both be result-invisible.
+      """SELECT CAST(ts AS DATE) AS day,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
+         FROM events GROUP BY 1 ORDER BY day""")((s, d) => {
       val root = Memos.value(s, d, "round12/compaction") {
         val r = s"${Memos.scratchDir(s, d, "r12")}/compact"
         val ev = events(s, d).withColumn("day", to_date(col("ts")))
@@ -332,7 +417,18 @@ object Round12 {
       * delay margin. So the emitted set equals the batch join — which
       * is what the oracle computes. Runs once per (session, fixture)
       * (stored sink, q177 convention). */
-    "q_stream_join_interval" -> ((s, d) => Memos.frame(s, d,
+    Query.stream("q_stream_join_interval",
+      // q187's oracle: the batch interval join — the streaming execution
+      // (micro-batching, watermark eviction, sink commit log) must be
+      // result-invisible.
+      """SELECT v.user_id AS user_id, v.event_id AS view_id,
+           p.event_id AS purchase_id,
+           epoch_us(p.ts) - epoch_us(v.ts) AS wait_us
+         FROM events v JOIN events p
+           ON p.user_id = v.user_id
+          AND v.event_type = 'view' AND p.event_type = 'purchase'
+          AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE
+         ORDER BY view_id, purchase_id""")((s, d) => Memos.frame(s, d,
         "round12/streamJoin")(
         // r18 (task 6): 4-partition state (4 StateStores per join
         // side instead of 32) + 2-files-per-trigger — the eviction
@@ -401,7 +497,27 @@ object Round12 {
       * the shared-frequency relation is
       * fingerprint-vocabulary-bounded: at 100 TB it min-count-prunes
       * and broadcasts like the q165 LM. */
-    "q_text_winnowing" -> ((s, d) => {
+    Query("q_text_winnowing",
+      """WITH t AS (
+           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+         ), s AS (
+           SELECT doc_id, list_transform(range(1, len(toks) - 2),
+               i -> md5(array_to_string(toks[i : i + 3], ' '))) AS hs
+           FROM t WHERE len(toks) >= 7
+         ), f AS (
+           SELECT doc_id,
+             unnest(list_distinct(list_transform(range(1, len(hs) - 2),
+               j -> list_aggregate(hs[j : j + 3], 'min')))) AS fp
+           FROM s
+         ), q AS (
+           SELECT fp, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
+           FROM f GROUP BY fp
+         )
+         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp,
+           CAST(count(*) FILTER (WHERE n_docs >= 2) AS BIGINT) AS n_shared,
+           min(fp) AS min_fp
+         FROM f JOIN q USING (fp)
+         GROUP BY doc_id ORDER BY doc_id""")((s, d) => {
       // the fingerprint relation is consumed TWICE (freq side + doc
       // side of the join) — without materialization the array kernel
       // runs twice per execution. It is also the STORED INDEX of the
@@ -434,7 +550,20 @@ object Round12 {
       * stay green. Determinism: the Dec idiom inline in SQL (exact
       * decimal revenue, one double cast), LIMIT only after a total
       * order with the unique orderkey tiebreak (rule D6). */
-    "q_sql_text_frontend" -> ((s, d) => {
+    Query("q_sql_text_frontend",
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+           CAST(CAST(sum(CAST(ROUND(l_extendedprice, 2) AS DECIMAL(18,2)) *
+             CAST(ROUND(1 - l_discount, 4) AS DECIMAL(8,4)))
+             AS DECIMAL(18,4)) AS DOUBLE) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < TIMESTAMP '1997-06-30 00:00:00'
+           AND l_shipdate > TIMESTAMP '1997-06-30 00:00:00'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, l_orderkey
+         LIMIT 10""")((s, d) => {
       lineitem(s, d).createOrReplaceTempView("g189_lineitem")
       orders(s, d).createOrReplaceTempView("g189_orders")
       customer(s, d).createOrReplaceTempView("g189_customer")
@@ -467,7 +596,7 @@ object Round12 {
       * cross-engine — oracle=none; Round12bSpec pins per-day and
       * union estimates within 5% of the exact distincts and that the
       * union estimate is served from the stored sketches alone. */
-    "q_agg_sketch_union" -> ((s, d) => Memos.frame(s, d,
+    Query("q_agg_sketch_union")((s, d) => Memos.frame(s, d,
         "round12/hllSketches") {
       val path = s"${Memos.scratchDir(s, d, "r12")}/hll_daily"
       events(s, d)
@@ -494,7 +623,27 @@ object Round12 {
       * affected-hash set is delta-proportional (chunks of the delta
       * docs only) and broadcast. Oracle = the batch chunker over the
       * post-delta corpus — maintenance must be result-invisible. */
-    "q_incr_chunks" -> ((s, d) => {
+    Query("q_incr_chunks",
+      // q190 is oracle=none (DataSketches HLL is not cross-engine);
+      // Round12bSpec pins estimate accuracy and stored-sketch serving.
+      // q191's oracle: the batch chunker over the POST-DELTA corpus —
+      // the group-level maintenance must be result-invisible.
+      """WITH t AS (
+           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+           WHERE doc_id % 10 <> 1
+         ), x AS (
+           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
+           FROM t WHERE len(toks) >= 16
+         ), c AS (
+           SELECT doc_id,
+             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
+           FROM x
+         )
+         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
+           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+           min(doc_id) AS keep_id
+         FROM c GROUP BY h
+         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""")((s, d) => {
       val docs = documents(s, d)
       def occ(p: Column) = chunkOccurrences(
         docs.filter(p), "doc_id", "text", chunkTokens = 16)
@@ -525,7 +674,23 @@ object Round12 {
       * fixture); appId-isolated scratch. r18 (task 6): 4-partition
       * state + 4-files-per-trigger — 3 micro-batches (originals,
       * duplicates, flush) instead of 9 prove the same contract. */
-    "q_stream_dedup" -> ((s, d) => Memos.frame(s, d,
+    Query.stream("q_stream_dedup",
+      // q193's oracle: the closed-window aggregate over the ORIGINAL
+      // (distinct) events — the duplicated landing plus the stateful
+      // dedup must be result-invisible; a survived duplicate inflates a
+      // count, a lost original deflates one, either flips the hash.
+      """WITH mx AS (
+           SELECT max(ts) AS m FROM events
+         ), agg AS (
+           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+             event_type, count(*) AS n
+           FROM events GROUP BY 1, 2
+         )
+         SELECT day, event_type, CAST(n AS BIGINT) AS n
+         FROM agg, mx
+         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
+               <= m - INTERVAL 10 MINUTE
+         ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
         "round12/streamDedup")(
         graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -586,7 +751,21 @@ object Round12 {
       * row hashable where float HITS would be FP-order-sensitive
       * (the q41 scaled-integer lesson applied to HITS). Top-20 by
       * auth₂ with the unique suppkey tiebreak (D6). */
-    "q_graph_hits" -> ((s, d) => {
+    Query("q_graph_hits",
+      """WITH e AS (
+           SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
+         ), a1 AS (
+           SELECT sk, CAST(count(*) AS BIGINT) AS auth1 FROM e GROUP BY sk
+         ), h1 AS (
+           SELECT p, CAST(sum(auth1) AS BIGINT) AS h1
+           FROM e JOIN a1 USING (sk) GROUP BY p
+         ), a2 AS (
+           SELECT sk, CAST(sum(h1) AS BIGINT) AS auth2
+           FROM e JOIN h1 USING (p) GROUP BY sk
+         )
+         SELECT sk AS suppkey, auth1, auth2
+         FROM a2 JOIN a1 USING (sk)
+         ORDER BY auth2 DESC, suppkey LIMIT 20""")((s, d) => {
       val e = Round11b.bipartiteEdges(s, d)
       val auth1 = e.groupBy("sk").agg(count(lit(1)).as("auth1"))
       val hub1 = e.join(auth1, "sk")
@@ -611,7 +790,15 @@ object Round12 {
       * NDV-sized STATE, not the corpus — the whole point of keeping
       * value counts. Delta convention: o_orderkey%10==0 insert,
       * ==1 delete. Oracle = DuckDB median over the post-delta table. */
-    "q_incr_median" -> ((s, d) => {
+    Query("q_incr_median",
+      // q195's oracle: DuckDB's exact median over the POST-DELTA table —
+      // the value-count-state maintenance and the k-th-by-cumulative-
+      // count derivation must reproduce the engine median bitwise.
+      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_rows,
+           median(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
+             AS median_cents
+         FROM orders WHERE o_orderkey % 10 <> 1
+         GROUP BY o_orderpriority ORDER BY o_orderpriority""")((s, d) => {
       val o = orders(s, d)
         .withColumn("cents", (dec2(col("o_totalprice")) * 100).cast("long"))
       def vc(p: Column, sign: Int) = o.filter(p)
@@ -658,7 +845,21 @@ object Round12 {
       * q13's LeftAnti — both engines implement the same standard
       * semantics, so the hash pins them. Runs through spark.sql
       * (NOT IN is not expressible in the Column DSL). */
-    "q_join_null_aware_anti" -> ((s, d) => {
+    Query("q_join_null_aware_anti",
+      """SELECT 'no_null' AS variant, CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
+         FROM lineitem
+         WHERE l_suppkey NOT IN
+           (SELECT s_suppkey FROM supplier WHERE s_acctbal > 5000)
+         UNION ALL
+         SELECT 'with_null', CAST(count(*) AS BIGINT),
+           CAST(count(DISTINCT l_suppkey) AS BIGINT)
+         FROM lineitem
+         WHERE l_suppkey NOT IN
+           (SELECT CASE WHEN s_acctbal <= 5000 THEN NULL
+                        ELSE s_suppkey END
+            FROM supplier)
+         ORDER BY variant""")((s, d) => {
       lineitem(s, d).createOrReplaceTempView("g196_lineitem")
       supplier(s, d).createOrReplaceTempView("g196_supplier")
       s.sql("""
@@ -689,7 +890,14 @@ object Round12 {
       * reads the parquet original: any quoting/splitting/coercion
       * defect flips the hash. appId-isolated scratch, mode
       * OVERWRITE (q156 convention). */
-    "q_source_text_lines" -> ((s, d) => {
+    Query("q_source_text_lines",
+      // q197's oracle reads the parquet original — the text write,
+      // line parse and type coercion must be result-invisible.
+      """SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations,
+           min(n_name) AS first_nation,
+           CAST(sum(n_nationkey) AS BIGINT) AS key_sum
+         FROM nation JOIN region ON n_regionkey = r_regionkey
+         GROUP BY r_name ORDER BY r_name""")((s, d) => {
       val scratch = s"${Memos.scratchDir(s, d, "r12")}/nation_txt"
       val nat = nation(s, d)
       nat.select(concat_ws("|", col("n_nationkey"), col("n_name"),
@@ -721,7 +929,20 @@ object Round12 {
       * row_number window computes the identical set; `Round12cSpec`
       * additionally proves operator ≡ window form on random frames
       * and pins the physical plan. */
-    "q_topk_native" -> ((s, d) => {
+    Query("q_topk_native",
+      // q198's oracle: the window formulation — the custom operator
+      // must produce exactly the rows row_number() <= k selects under
+      // the same total order.
+      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice
+         FROM (
+           SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
+             row_number() OVER (PARTITION BY l_returnflag
+               ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
+               AS rn
+           FROM lineitem
+         ) t WHERE rn <= 3
+         ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey,
+           l_linenumber""")((s, d) => {
       val li = lineitem(s, d).select(col("l_returnflag"),
         col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       graft.Graft.topKPerGroup(li, Seq("l_returnflag"),
@@ -744,7 +965,19 @@ object Round12 {
       * hash), proves q199 ≡ q198 + 'native', and exercises the
       * window branch at a forced advantage where both branches'
       * rows must STILL agree (total order ⇒ plan-invisible). */
-    "q_topk_auto" -> ((s, d) => {
+    Query("q_topk_auto",
+      // q199's oracle: the window formulation + the committed decision.
+      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
+           'native' AS plan
+         FROM (
+           SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
+             row_number() OVER (PARTITION BY l_returnflag
+               ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
+               AS rn
+           FROM lineitem
+         ) t WHERE rn <= 3
+         ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey,
+           l_linenumber""")((s, d) => {
       val li = lineitem(s, d).select(col("l_returnflag"),
         col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       graft.Graft.autoTopK(li, Seq("l_returnflag"),
@@ -767,7 +1000,35 @@ object Round12 {
       * batch/stream symmetry story (same session_window call runs
       * under readStream in StreamingSpec). One user-keyed shuffle
       * like every sessionize. */
-    "q_win_session_native" -> ((s, d) => {
+    Query("q_win_session_native",
+      // q200's oracle: the same sessions derived by hand via
+      // gaps-and-islands — session_window's engine-side interval merge
+      // must reproduce the portable SQL definition exactly.
+      """WITH e AS (
+           SELECT user_id, ts, epoch_us(ts) AS us,
+             lag(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY ts) AS prev_us
+           FROM events
+         ), flagged AS (
+           SELECT user_id, ts, us,
+             -- session_window extends a session through a gap of
+             -- EXACTLY the gap duration (inclusive merge — verified by
+             -- Round12bSpec's synthetic exact-gap case), matching
+             -- q111's <= convention: break only on gap > 30 min
+             CASE WHEN prev_us IS NULL
+                    OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS brk
+           FROM e
+         ), grp AS (
+           SELECT user_id, ts, us,
+             sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+               ROWS UNBOUNDED PRECEDING) AS sid
+           FROM flagged
+         )
+         SELECT user_id, min(ts) AS session_start,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(max(us) - min(us) AS BIGINT) AS span_us
+         FROM grp GROUP BY user_id, sid
+         ORDER BY user_id, session_start""")((s, d) => {
       events(s, d)
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("w"))
@@ -797,307 +1058,10 @@ object Round12 {
       * store), so they ride the session memo like aprioriBaseState —
       * r18: the per-invocation work is then the two delta-sized
       * aggregations plus the NDV-sized merge and fold per column. */
-    "q_incr_profile" -> ((s, d) => {
-      val li = lineitem(s, d)
-      val base = li.filter(col("l_orderkey") % 10 =!= 0)
-      val ins = li.filter(col("l_orderkey") % 10 === 0)
-      val del = li.filter(col("l_orderkey") % 10 === 1)
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map { c =>
-          val baseCounts = Memos.frame(s, d, s"round12/profileBase:$c")(
-            signedValueCounts(base, c, 1).persist())
-          profileOfState(valueCountStateFrom(baseCounts, ins, del, c), c)
-        }
-        .reduce(_ unionByName _)
-        .orderBy("col_name")
-    })
-  )
-
-  val sql: Map[String, String] = Map(
-    // q180's oracle: the from-scratch wordcount over the POST-DELTA
-    // corpus — the signed merge must be result-invisible.
-    "q_incr_wordcount" ->
-      """WITH t AS (
-           SELECT unnest(string_split(text, ' ')) AS word
-           FROM documents WHERE doc_id % 10 <> 1
-         )
-         SELECT word, CAST(count(*) AS BIGINT) AS n_total
-         FROM t GROUP BY word ORDER BY word""",
-    "q_dedup_chunks" ->
-      """WITH t AS (
-           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-         ), x AS (
-           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
-           FROM t WHERE len(toks) >= 16
-         ), c AS (
-           SELECT doc_id,
-             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
-           FROM x
-         )
-         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           min(doc_id) AS keep_id
-         FROM c GROUP BY h
-         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""",
-    "q_agg_median" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-           median(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-             AS median_cents,
-           min(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-             AS min_cents,
-           max(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-             AS max_cents
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_agg_filtered" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(*) FILTER (WHERE l_discount > 0.05) AS BIGINT)
-             AS n_disc,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-             FILTER (WHERE l_quantity > 25) AS DOUBLE) AS rev_hi_qty,
-           max(l_extendedprice) FILTER (WHERE l_tax < 0.02)
-             AS max_lowtax_price
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_win_nth_value" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
-           nth_value(o_orderkey, 2) OVER w AS second_cheapest,
-           first_value(o_orderkey) OVER w AS cheapest,
-           last_value(o_orderkey) OVER w AS priciest
-         FROM orders WHERE o_custkey < 200
-         WINDOW w AS (PARTITION BY o_orderpriority
-           ORDER BY o_totalprice, o_orderkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ORDER BY o_orderpriority, o_orderkey""",
-    "q_profile_stats" ->
-      """WITH p AS (
-           SELECT 'l_quantity' AS col_name,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(DISTINCT l_quantity) AS BIGINT) AS n_distinct,
-             min(l_quantity) AS min_v, max(l_quantity) AS max_v,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-           FROM lineitem
-           UNION ALL
-           SELECT 'l_extendedprice',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_extendedprice) AS BIGINT),
-             min(l_extendedprice), max(l_extendedprice),
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-           FROM lineitem
-           UNION ALL
-           SELECT 'l_discount',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_discount) AS BIGINT),
-             min(l_discount), max(l_discount),
-             CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-           FROM lineitem
-           UNION ALL
-           SELECT 'l_tax',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_tax) AS BIGINT),
-             min(l_tax), max(l_tax),
-             CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE)
-           FROM lineitem
-         )
-         SELECT * FROM p ORDER BY col_name""",
-    // q186's oracle reads the ORIGINAL events — the landing write and
-    // the compaction rewrite must both be result-invisible.
-    "q_sink_compaction" ->
-      """SELECT CAST(ts AS DATE) AS day,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-         FROM events GROUP BY 1 ORDER BY day""",
-    // q187's oracle: the batch interval join — the streaming execution
-    // (micro-batching, watermark eviction, sink commit log) must be
-    // result-invisible.
-    "q_stream_join_interval" ->
-      """SELECT v.user_id AS user_id, v.event_id AS view_id,
-           p.event_id AS purchase_id,
-           epoch_us(p.ts) - epoch_us(v.ts) AS wait_us
-         FROM events v JOIN events p
-           ON p.user_id = v.user_id
-          AND v.event_type = 'view' AND p.event_type = 'purchase'
-          AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE
-         ORDER BY view_id, purchase_id""",
-    "q_text_winnowing" ->
-      """WITH t AS (
-           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-         ), s AS (
-           SELECT doc_id, list_transform(range(1, len(toks) - 2),
-               i -> md5(array_to_string(toks[i : i + 3], ' '))) AS hs
-           FROM t WHERE len(toks) >= 7
-         ), f AS (
-           SELECT doc_id,
-             unnest(list_distinct(list_transform(range(1, len(hs) - 2),
-               j -> list_aggregate(hs[j : j + 3], 'min')))) AS fp
-           FROM s
-         ), q AS (
-           SELECT fp, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-           FROM f GROUP BY fp
-         )
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp,
-           CAST(count(*) FILTER (WHERE n_docs >= 2) AS BIGINT) AS n_shared,
-           min(fp) AS min_fp
-         FROM f JOIN q USING (fp)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_sql_text_frontend" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-           CAST(CAST(sum(CAST(ROUND(l_extendedprice, 2) AS DECIMAL(18,2)) *
-             CAST(ROUND(1 - l_discount, 4) AS DECIMAL(8,4)))
-             AS DECIMAL(18,4)) AS DOUBLE) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1997-06-30 00:00:00'
-           AND l_shipdate > TIMESTAMP '1997-06-30 00:00:00'
-         GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, l_orderkey
-         LIMIT 10""",
-    // q190 is oracle=none (DataSketches HLL is not cross-engine);
-    // Round12bSpec pins estimate accuracy and stored-sketch serving.
-    // q191's oracle: the batch chunker over the POST-DELTA corpus —
-    // the group-level maintenance must be result-invisible.
-    "q_incr_chunks" ->
-      """WITH t AS (
-           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-           WHERE doc_id % 10 <> 1
-         ), x AS (
-           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
-           FROM t WHERE len(toks) >= 16
-         ), c AS (
-           SELECT doc_id,
-             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
-           FROM x
-         )
-         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           min(doc_id) AS keep_id
-         FROM c GROUP BY h
-         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""",
-    // q193's oracle: the closed-window aggregate over the ORIGINAL
-    // (distinct) events — the duplicated landing plus the stateful
-    // dedup must be result-invisible; a survived duplicate inflates a
-    // count, a lost original deflates one, either flips the hash.
-    "q_stream_dedup" ->
-      """WITH mx AS (
-           SELECT max(ts) AS m FROM events
-         ), agg AS (
-           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             event_type, count(*) AS n
-           FROM events GROUP BY 1, 2
-         )
-         SELECT day, event_type, CAST(n AS BIGINT) AS n
-         FROM agg, mx
-         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
-               <= m - INTERVAL 10 MINUTE
-         ORDER BY day, event_type""",
-    "q_graph_hits" ->
-      """WITH e AS (
-           SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem
-         ), a1 AS (
-           SELECT sk, CAST(count(*) AS BIGINT) AS auth1 FROM e GROUP BY sk
-         ), h1 AS (
-           SELECT p, CAST(sum(auth1) AS BIGINT) AS h1
-           FROM e JOIN a1 USING (sk) GROUP BY p
-         ), a2 AS (
-           SELECT sk, CAST(sum(h1) AS BIGINT) AS auth2
-           FROM e JOIN h1 USING (p) GROUP BY sk
-         )
-         SELECT sk AS suppkey, auth1, auth2
-         FROM a2 JOIN a1 USING (sk)
-         ORDER BY auth2 DESC, suppkey LIMIT 20""",
-    // q195's oracle: DuckDB's exact median over the POST-DELTA table —
-    // the value-count-state maintenance and the k-th-by-cumulative-
-    // count derivation must reproduce the engine median bitwise.
-    "q_incr_median" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_rows,
-           median(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-             AS median_cents
-         FROM orders WHERE o_orderkey % 10 <> 1
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_join_null_aware_anti" ->
-      """SELECT 'no_null' AS variant, CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
-         FROM lineitem
-         WHERE l_suppkey NOT IN
-           (SELECT s_suppkey FROM supplier WHERE s_acctbal > 5000)
-         UNION ALL
-         SELECT 'with_null', CAST(count(*) AS BIGINT),
-           CAST(count(DISTINCT l_suppkey) AS BIGINT)
-         FROM lineitem
-         WHERE l_suppkey NOT IN
-           (SELECT CASE WHEN s_acctbal <= 5000 THEN NULL
-                        ELSE s_suppkey END
-            FROM supplier)
-         ORDER BY variant""",
-    // q197's oracle reads the parquet original — the text write,
-    // line parse and type coercion must be result-invisible.
-    "q_source_text_lines" ->
-      """SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations,
-           min(n_name) AS first_nation,
-           CAST(sum(n_nationkey) AS BIGINT) AS key_sum
-         FROM nation JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name ORDER BY r_name""",
-    // q198's oracle: the window formulation — the custom operator
-    // must produce exactly the rows row_number() <= k selects under
-    // the same total order.
-    "q_topk_native" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice
-         FROM (
-           SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-             row_number() OVER (PARTITION BY l_returnflag
-               ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
-               AS rn
-           FROM lineitem
-         ) t WHERE rn <= 3
-         ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey,
-           l_linenumber""",
-    // q199's oracle: the window formulation + the committed decision.
-    "q_topk_auto" ->
-      """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-           'native' AS plan
-         FROM (
-           SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
-             row_number() OVER (PARTITION BY l_returnflag
-               ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber)
-               AS rn
-           FROM lineitem
-         ) t WHERE rn <= 3
-         ORDER BY l_returnflag, l_extendedprice DESC, l_orderkey,
-           l_linenumber""",
-    // q200's oracle: the same sessions derived by hand via
-    // gaps-and-islands — session_window's engine-side interval merge
-    // must reproduce the portable SQL definition exactly.
-    "q_win_session_native" ->
-      """WITH e AS (
-           SELECT user_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts) AS prev_us
-           FROM events
-         ), flagged AS (
-           SELECT user_id, ts, us,
-             -- session_window extends a session through a gap of
-             -- EXACTLY the gap duration (inclusive merge — verified by
-             -- Round12bSpec's synthetic exact-gap case), matching
-             -- q111's <= convention: break only on gap > 30 min
-             CASE WHEN prev_us IS NULL
-                    OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS brk
-           FROM e
-         ), grp AS (
-           SELECT user_id, ts, us,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-               ROWS UNBOUNDED PRECEDING) AS sid
-           FROM flagged
-         )
-         SELECT user_id, min(ts) AS session_start,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(max(us) - min(us) AS BIGINT) AS span_us
-         FROM grp GROUP BY user_id, sid
-         ORDER BY user_id, session_start""",
-    // q192's oracle: the batch per-column profile over the POST-DELTA
-    // fact table — the value-count state maintenance must be
-    // result-invisible.
-    "q_incr_profile" ->
+    Query("q_incr_profile",
+      // q192's oracle: the batch per-column profile over the POST-DELTA
+      // fact table — the value-count state maintenance must be
+      // result-invisible.
       """WITH post AS (
            SELECT * FROM lineitem WHERE l_orderkey % 10 <> 1
          ), p AS (
@@ -1129,6 +1093,19 @@ object Round12 {
              CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE)
            FROM post
          )
-         SELECT * FROM p ORDER BY col_name"""
+         SELECT * FROM p ORDER BY col_name""")((s, d) => {
+      val li = lineitem(s, d)
+      val base = li.filter(col("l_orderkey") % 10 =!= 0)
+      val ins = li.filter(col("l_orderkey") % 10 === 0)
+      val del = li.filter(col("l_orderkey") % 10 === 1)
+      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+        .map { c =>
+          val baseCounts = Memos.frame(s, d, s"round12/profileBase:$c")(
+            signedValueCounts(base, c, 1).persist())
+          profileOfState(valueCountStateFrom(baseCounts, ins, del, c), c)
+        }
+        .reduce(_ unionByName _)
+        .orderBy("col_name")
+    })
   )
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -137,237 +138,6 @@ object Round18 {
       .unionByName(recomputed.select("event_id", "user_id", "ewma"))
   }
 
-  val defs: Map[String, Q] = Map(
-
-    /** q284: LANGUAGE-MIXTURE DIVERSITY per source [N data-mixture
-      * diagnostic] — the Gini–Simpson diversity (and its inverse,
-      * the effective number of languages) of each source's language
-      * distribution, THE quantity a corpus-mixing run monitors when
-      * rebalancing multilingual shards (a source collapsing toward
-      * one language shows up as effective_langs→1 long before raw
-      * counts do). One partial-aggregated shuffle on (source):
-      * conditional per-lang sums combine map-side, so the exchange
-      * carries ≤ |sources|·6 longs no matter the corpus size; the
-      * index is an exact integer rational over the counts (see
-      * [[diversityOver]] — and why Shannon-in-nats is NOT the
-      * declared metric). Emitting the per-lang counts alongside the
-      * index makes the row self-auditing: a sixth language in the
-      * data breaks the n_docs reconciliation in the oracle hash.
-      * Per-doc n=1 rows feed [[diversityOver]] directly so the pivot
-      * IS the only aggregate — one exchange total (a pre-aggregation
-      * to (source,lang) would add a second for nothing; the incr twin
-      * keeps it because its signed merge needs the lang key). */
-    "q_agg_diversity" -> ((s, d) =>
-      diversityOver(documents(s, d)
-        .select(col("source"), col("lang"), lit(1L).as("n")))),
-
-    /** q285: SIGNED-INCREMENTAL MIXTURE DIVERSITY [P one-step
-      * incremental] — q284 maintained under the corpus delta
-      * (doc_id%10: 0=insert, 1=delete): the per-(source,lang) counts
-      * are SIGNED-ADDITIVE sufficient statistics, so maintenance is
-      * two delta-sized aggregates merged with the stored state by one
-      * signed sum on a ≤|sources|·|langs| key space — the base corpus
-      * is never re-scanned (here the state is recomputed inline to
-      * stay self-contained, exactly like q125/q180), and the index
-      * re-evaluates only from merged counts. Counts reaching zero
-      * vanish (n > 0) as a from-scratch run computes. Oracle = q284's
-      * batch diversity over the post-delta corpus: the hash proves
-      * maintenance ≡ recompute. */
-    "q_incr_diversity" -> ((s, d) => {
-      val docs = documents(s, d)
-      def cnt(dd: DataFrame, sign: Int) =
-        dd.groupBy("source", "lang")
-          .agg((count(lit(1)) * sign).as("n"))
-      val merged = cnt(docs.filter(col("doc_id") % 10 =!= 0), 1)
-        .unionByName(cnt(docs.filter(col("doc_id") % 10 === 0), 1))
-        .unionByName(cnt(docs.filter(col("doc_id") % 10 === 1), -1))
-        .groupBy("source", "lang").agg(sum("n").as("n"))
-        .filter(col("n") > 0)
-      diversityOver(merged)
-    }),
-
-    /** q286: GOPHER-STYLE QUALITY RULE BITMASK [N curation surface] —
-      * the named-rule document filter of the Gopher/MassiveText
-      * recipe, complementing q62's scalar quality score with an
-      * auditable PER-RULE verdict: R1 token count ∈ [20,90] (bit 1),
-      * R2 mean token length ∈ [3,4.5] (bit 2), R3 stopword fraction
-      * ≥ 2% (bit 4), R4 max single-token frequency ≤ 20% (bit 8) —
-      * a doc is kept iff all four pass (bits = 15). Every rule is an
-      * EXACT integer cross-multiplication (3n ≤ Σlen, 2Σlen ≤ 9n,
-      * 50·stop ≥ n, 5·max ≤ n): no float ratio ever materializes, so
-      * both engines take the identical verdict on every doc. Plan:
-      * the three scalar stats are map-only over the corpus; the max
-      * token frequency is one (doc,word)-keyed partial aggregate +
-      * a doc-keyed max — token-proportional shuffle with map-side
-      * combine, then a doc-keyed join back (both sides clustered on
-      * doc_id). At 100 TB: linear, no pair joins, rules evaluate
-      * per-partition. */
-    "q_quality_gopher" -> ((s, d) => {
-      val docs = documents(s, d)
-      val toks = split(col("text"), " ")
-      val base = docs.select(col("doc_id"), col("source"),
-        size(toks).cast("bigint").as("n_tok"),
-        length(col("text")).cast("bigint").as("n_chars"),
-        size(filter(toks, x => x.isInCollection(Seq("the", "a"))))
-          .cast("bigint").as("n_stop"))
-      val mx = docs.select(col("doc_id"), explode(toks).as("w"))
-        .groupBy("doc_id", "w").agg(count(lit(1)).as("nw"))
-        .groupBy("doc_id").agg(max("nw").cast("bigint").as("max_tok"))
-      val sumLen = col("n_chars") - col("n_tok") + 1
-      val r1 = col("n_tok") >= 20 && col("n_tok") <= 90
-      val r2 = sumLen >= col("n_tok") * 3 && sumLen * 2 <= col("n_tok") * 9
-      val r3 = col("n_stop") * 50 >= col("n_tok")
-      val r4 = col("max_tok") * 5 <= col("n_tok")
-      base.join(mx, "doc_id")
-        .select(col("doc_id"), col("source"), col("n_tok"), col("max_tok"),
-          (when(r1, 1L).otherwise(0L) + when(r2, 2L).otherwise(0L) +
-            when(r3, 4L).otherwise(0L) + when(r4, 8L).otherwise(0L))
-            .cast("bigint").as("rule_bits"),
-          when(r1 && r2 && r3 && r4, 1L).otherwise(0L)
-            .cast("bigint").as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    /** q287: DYADIC EWMA over each user's event-value series [T
-      * time-series surface] — an exponentially weighted moving
-      * average with decay 1/2 over the last 8 observations,
-      * ewma_t = Σ_{k=0..7} 2^{7−k}·x_{t−k} / (100·Σ_{k present}
-      * 2^{7−k}): because the decay is DYADIC and the values are
-      * exact cents (the fixture's 2-dp contract, Dec scaladoc), both
-      * numerator and denominator are exact int64 sums of ≤ 8 terms in
-      * a FIXED expression order — the only float operation is the
-      * final single division, so the doubles match bitwise
-      * cross-engine (the q127 discipline applied to a window).
-      * Plan: ONE user-keyed window exchange computes all 8 lags in a
-      * single Window node; at 100 TB this is the same sort-once
-      * shape as q27/q28 — no iteration, no state. The truncation at
-      * 8 lags bounds per-row work and loses < 2^-8 of the weight
-      * mass vs the infinite EWMA. */
-    "q_ts_ewma" -> ((s, d) => ewmaOver(events(s, d)).orderBy("event_id")),
-
-    /** q291: SIGNED-INCREMENTAL EWMA [P group-level recompute] —
-      * q287 maintained under the event delta (event_id%10: 0=insert,
-      * 1=delete): the EWMA is USER-LOCAL (each row depends only on
-      * its user's own prior events), so the window state cannot merge
-      * additively but recomputes exactly per touched user — the
-      * i²MapReduce reduce-group recompute with group = user. Users
-      * with any delta event re-enter the window sort over their
-      * post-delta series (delta-proportional: |touched users| ·
-      * series length); every untouched user's rows PASS THROUGH from
-      * the stored base state without re-sorting — at 100 TB the
-      * maintenance cost tracks the delta's user footprint, not the
-      * event corpus. Oracle = q287's batch EWMA over the post-delta
-      * events: the hash proves maintenance ≡ recompute. Fixture
-      * caveat (the q_incr_band precedent): the %10 delta touches
-      * every user at ~66 events/user, so the declared row exercises
-      * the all-recompute worst case; `Round18cSpec` drives the
-      * pass-through branch on a synthetic frame where untouched
-      * users exist. */
-    "q_incr_ewma" -> ((s, d) => incrEwma(events(s, d)).orderBy("event_id")),
-
-    /** q288: SOFT DEDUP (duplicate-aware down-sampling) [N curation
-      * surface] — instead of q49's hard keep-one, each member of an
-      * exact-duplicate group survives with probability 1/n_dups
-      * (UniMax/soft-dedup: expected ONE surviving copy per group, so
-      * heavily-duplicated content is down-weighted, not annihilated,
-      * preserving natural distribution mass). The keep rule is the
-      * engine's seed-free md5-threshold idiom (q77/q151) made
-      * group-aware with EXACT integers: survive iff
-      * h32(doc_id)·n_dups < 2^32 where h32 is the first 8 md5 hex
-      * digits — cluster-size-independent, reproducible, no float
-      * probability ever materializes. Plan: ONE shuffle on the
-      * 16-byte content hash; the window count and the final
-      * per-group rollup reuse the same hash partitioning, so the
-      * exchange happens once. At 100 TB this is exactly the q49
-      * scan+shuffle with a constant-factor wider row. */
-    "q_sample_softdedup" -> ((s, d) =>
-      softDedupAgg(hashed(documents(s, d)), "h", "n_dups").orderBy("h")),
-
-    /** q290: SIGNED-INCREMENTAL SOFT DEDUP [P §3 group-level
-      * recompute] — q288 maintained under the corpus delta
-      * (doc_id%10: 0=insert, 1=delete). The keep decision of EVERY
-      * member of a group depends on the group's size, so a group
-      * whose size changes must recompute member decisions — exactly
-      * the paper's reduce-group recompute: the delta's content
-      * hashes select the TOUCHED groups, their post-delta members
-      * re-run the 1/n threshold (in production the members come from
-      * the MRBG-store's preserved edges; here a hash semi-join over
-      * the post-delta corpus stands in), and every untouched group's
-      * (n, n_kept, first_kept) row passes through from stored state
-      * VERBATIM — never re-hashed, never re-shuffled. Work is
-      * delta-group-proportional at any corpus size. Oracle = q288's
-      * batch rule over the post-delta corpus. */
-    "q_incr_softdedup" -> ((s, d) => {
-      val docs = documents(s, d)
-      val baseState = softDedupAgg(
-        hashed(docs.filter(col("doc_id") % 10 =!= 0)), "h", "n_dups")
-      val deltaH = hashed(docs.filter(
-          col("doc_id") % 10 === 0 || col("doc_id") % 10 === 1))
-        .select("h").distinct()
-      val untouched = baseState.join(deltaH, Seq("h"), "left_anti")
-      val recomputed = softDedupAgg(
-        hashed(docs.filter(col("doc_id") % 10 =!= 1))
-          .join(deltaH, Seq("h"), "left_semi"), "h", "n_dups")
-      untouched.unionByName(recomputed).orderBy("h")
-    }),
-
-    /** q292: SOFT DEDUP OVER NEAR-DUP CLUSTERS [N composition row] —
-      * the production composition the q288 scaladoc implies: the
-      * down-sampling unit should be the NEAR-duplicate cluster, not
-      * the exact-hash group, or boilerplate variants evade the 1/n
-      * rule. Group key = q108's collapse label (the FIXED-5-round
-      * min-label component of the Jaccard≥0.5 pair graph, memoized —
-      * this row adds ~one window over the label relation, the pair
-      * graph and collapse are shared state), member keep = the same
-      * exact integer threshold h32·n < 2^32. Demonstrates the
-      * collapse output as REUSABLE state for downstream curation —
-      * the i²MapReduce preserved-state story end to end. Oracle =
-      * the q108 unrolled 5-stage label CTE + the q288 threshold
-      * rollup, composed verbatim. */
-    "q_sample_softdedup_near" -> ((s, d) =>
-      softDedupAgg(
-        graft.text.Dedup.defs("q_dedup_groups")(s, d)
-          .select(col("doc_id"), col("keep_id")),
-        "keep_id", "n_members")
-        .orderBy("keep_id")),
-
-    /** q289: MAGIC-BYTE MIME SNIFFING [N multimodal surface] — the
-      * ingest-time format detector every multimodal pipeline runs
-      * before routing blobs to codecs: a mixed media table (PNG /
-      * JPEG / RIFF magic headers prepended to the q60 byte fixture by
-      * doc_id%4; %4==3 stays bare text) is sniffed from its FIRST
-      * FOUR BYTES (hex-prefix compare — the actual file(1) mechanism)
-      * and summarized per detected type. The declared-vs-sniffed
-      * agreement check is what catches mislabeled uploads at ingest.
-      * Plan: pure map over the blobs (binary concat + substring —
-      * both codegen'd) followed by one aggregate on a ≤4-key domain;
-      * the blob column is pruned immediately after the 4-byte slice,
-      * so at 100 TB the shuffle carries counters only. Oracle
-      * reproduces the byte math on the hex plane (the q60 ASCII
-      * contract: byte == char for this fixture). */
-    "q_multimodal_mime" -> ((s, d) => {
-      val m4 = pmod(col("doc_id"), lit(4))
-      val magicHex = when(m4 === 0, lit("89504E470D0A1A0A"))
-        .when(m4 === 1, lit("FFD8FFE0"))
-        .when(m4 === 2, lit("52494646"))
-        .otherwise(lit(""))
-      val content = concat(unhex(magicHex), col("text").cast("binary"))
-      val px = hex(substring(content, 1, 4))
-      val sniffed = when(px === "89504E47", "image/png")
-        .when(substring(px, 1, 6) === "FFD8FF", "image/jpeg")
-        .when(px === "52494646", "audio/wav")
-        .otherwise("text/plain")
-      documents(s, d)
-        .select(col("doc_id"), sniffed.as("mime_sniffed"),
-          length(content).cast("bigint").as("n_bytes"))
-        .groupBy("mime_sniffed")
-        .agg(count(lit(1)).cast("bigint").as("n_docs"),
-          sum("n_bytes").cast("bigint").as("total_bytes"),
-          min("doc_id").as("min_doc"))
-        .orderBy("mime_sniffed")
-    })
-  )
-
   /** q287/q291 oracle body over a parameterized event source. */
   private def ewmaSql(src: String): String =
     s"""WITH e AS (
@@ -432,11 +202,30 @@ object Round18 {
                   + c_zh * c_zh AS DOUBLE) AS effective_langs
        FROM c ORDER BY source"""
 
-  val sql: Map[String, String] = Map(
-    // q284: exact integer rational — the only float ops are single
-    // divisions of exact operands (Shannon ln is 1-ulp-unstable
-    // cross-engine; see the diversityOver scaladoc).
-    "q_agg_diversity" ->
+  val queries: Seq[Query] = Seq(
+
+    /** q284: LANGUAGE-MIXTURE DIVERSITY per source [N data-mixture
+      * diagnostic] — the Gini–Simpson diversity (and its inverse,
+      * the effective number of languages) of each source's language
+      * distribution, THE quantity a corpus-mixing run monitors when
+      * rebalancing multilingual shards (a source collapsing toward
+      * one language shows up as effective_langs→1 long before raw
+      * counts do). One partial-aggregated shuffle on (source):
+      * conditional per-lang sums combine map-side, so the exchange
+      * carries ≤ |sources|·6 longs no matter the corpus size; the
+      * index is an exact integer rational over the counts (see
+      * [[diversityOver]] — and why Shannon-in-nats is NOT the
+      * declared metric). Emitting the per-lang counts alongside the
+      * index makes the row self-auditing: a sixth language in the
+      * data breaks the n_docs reconciliation in the oracle hash.
+      * Per-doc n=1 rows feed [[diversityOver]] directly so the pivot
+      * IS the only aggregate — one exchange total (a pre-aggregation
+      * to (source,lang) would add a second for nothing; the incr twin
+      * keeps it because its signed merge needs the lang key). */
+    Query("q_agg_diversity",
+      // q284: exact integer rational — the only float ops are single
+      // divisions of exact operands (Shannon ln is 1-ulp-unstable
+      // cross-engine; see the diversityOver scaladoc).
       s"""WITH c AS (
            SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS c_de,
@@ -445,10 +234,25 @@ object Round18 {
              CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS c_fr,
              CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS c_zh
            FROM documents GROUP BY source)
-         $diversitySelect""",
-    // q285: batch recompute over the post-delta corpus (deletes are
-    // doc_id%10==1; inserts %10==0 are already part of `documents`).
-    "q_incr_diversity" ->
+         $diversitySelect""")((s, d) =>
+      diversityOver(documents(s, d)
+        .select(col("source"), col("lang"), lit(1L).as("n")))),
+
+    /** q285: SIGNED-INCREMENTAL MIXTURE DIVERSITY [P one-step
+      * incremental] — q284 maintained under the corpus delta
+      * (doc_id%10: 0=insert, 1=delete): the per-(source,lang) counts
+      * are SIGNED-ADDITIVE sufficient statistics, so maintenance is
+      * two delta-sized aggregates merged with the stored state by one
+      * signed sum on a ≤|sources|·|langs| key space — the base corpus
+      * is never re-scanned (here the state is recomputed inline to
+      * stay self-contained, exactly like q125/q180), and the index
+      * re-evaluates only from merged counts. Counts reaching zero
+      * vanish (n > 0) as a from-scratch run computes. Oracle = q284's
+      * batch diversity over the post-delta corpus: the hash proves
+      * maintenance ≡ recompute. */
+    Query("q_incr_diversity",
+      // q285: batch recompute over the post-delta corpus (deletes are
+      // doc_id%10==1; inserts %10==0 are already part of `documents`).
       s"""WITH c AS (
            SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS c_de,
@@ -457,11 +261,39 @@ object Round18 {
              CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS c_fr,
              CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS c_zh
            FROM documents WHERE doc_id % 10 <> 1 GROUP BY source)
-         $diversitySelect""",
-    // q286: every rule an exact integer cross-multiplication; n_tok
-    // via the unnest-sum equals Spark's size(split) (no empty tokens
-    // in the fixture — the q62/q63 contract).
-    "q_quality_gopher" ->
+         $diversitySelect""")((s, d) => {
+      val docs = documents(s, d)
+      def cnt(dd: DataFrame, sign: Int) =
+        dd.groupBy("source", "lang")
+          .agg((count(lit(1)) * sign).as("n"))
+      val merged = cnt(docs.filter(col("doc_id") % 10 =!= 0), 1)
+        .unionByName(cnt(docs.filter(col("doc_id") % 10 === 0), 1))
+        .unionByName(cnt(docs.filter(col("doc_id") % 10 === 1), -1))
+        .groupBy("source", "lang").agg(sum("n").as("n"))
+        .filter(col("n") > 0)
+      diversityOver(merged)
+    }),
+
+    /** q286: GOPHER-STYLE QUALITY RULE BITMASK [N curation surface] —
+      * the named-rule document filter of the Gopher/MassiveText
+      * recipe, complementing q62's scalar quality score with an
+      * auditable PER-RULE verdict: R1 token count ∈ [20,90] (bit 1),
+      * R2 mean token length ∈ [3,4.5] (bit 2), R3 stopword fraction
+      * ≥ 2% (bit 4), R4 max single-token frequency ≤ 20% (bit 8) —
+      * a doc is kept iff all four pass (bits = 15). Every rule is an
+      * EXACT integer cross-multiplication (3n ≤ Σlen, 2Σlen ≤ 9n,
+      * 50·stop ≥ n, 5·max ≤ n): no float ratio ever materializes, so
+      * both engines take the identical verdict on every doc. Plan:
+      * the three scalar stats are map-only over the corpus; the max
+      * token frequency is one (doc,word)-keyed partial aggregate +
+      * a doc-keyed max — token-proportional shuffle with map-side
+      * combine, then a doc-keyed join back (both sides clustered on
+      * doc_id). At 100 TB: linear, no pair joins, rules evaluate
+      * per-partition. */
+    Query("q_quality_gopher",
+      // q286: every rule an exact integer cross-multiplication; n_tok
+      // via the unnest-sum equals Spark's size(split) (no empty tokens
+      // in the fixture — the q62/q63 contract).
       """WITH t AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS w
            FROM documents),
@@ -488,25 +320,143 @@ object Round18 {
                       AND n_stop * 50 >= n_tok
                       AND max_tok * 5 <= n_tok
                 THEN 1 ELSE 0 END AS BIGINT) AS keep
-         FROM b ORDER BY doc_id""",
+         FROM b ORDER BY doc_id""")((s, d) => {
+      val docs = documents(s, d)
+      val toks = split(col("text"), " ")
+      val base = docs.select(col("doc_id"), col("source"),
+        size(toks).cast("bigint").as("n_tok"),
+        length(col("text")).cast("bigint").as("n_chars"),
+        size(filter(toks, x => x.isInCollection(Seq("the", "a"))))
+          .cast("bigint").as("n_stop"))
+      val mx = docs.select(col("doc_id"), explode(toks).as("w"))
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("nw"))
+        .groupBy("doc_id").agg(max("nw").cast("bigint").as("max_tok"))
+      val sumLen = col("n_chars") - col("n_tok") + 1
+      val r1 = col("n_tok") >= 20 && col("n_tok") <= 90
+      val r2 = sumLen >= col("n_tok") * 3 && sumLen * 2 <= col("n_tok") * 9
+      val r3 = col("n_stop") * 50 >= col("n_tok")
+      val r4 = col("max_tok") * 5 <= col("n_tok")
+      base.join(mx, "doc_id")
+        .select(col("doc_id"), col("source"), col("n_tok"), col("max_tok"),
+          (when(r1, 1L).otherwise(0L) + when(r2, 2L).otherwise(0L) +
+            when(r3, 4L).otherwise(0L) + when(r4, 8L).otherwise(0L))
+            .cast("bigint").as("rule_bits"),
+          when(r1 && r2 && r3 && r4, 1L).otherwise(0L)
+            .cast("bigint").as("keep"))
+        .orderBy("doc_id")
+    }),
+
+    /** q287: DYADIC EWMA over each user's event-value series [T
+      * time-series surface] — an exponentially weighted moving
+      * average with decay 1/2 over the last 8 observations,
+      * ewma_t = Σ_{k=0..7} 2^{7−k}·x_{t−k} / (100·Σ_{k present}
+      * 2^{7−k}): because the decay is DYADIC and the values are
+      * exact cents (the fixture's 2-dp contract, Dec scaladoc), both
+      * numerator and denominator are exact int64 sums of ≤ 8 terms in
+      * a FIXED expression order — the only float operation is the
+      * final single division, so the doubles match bitwise
+      * cross-engine (the q127 discipline applied to a window).
+      * Plan: ONE user-keyed window exchange computes all 8 lags in a
+      * single Window node; at 100 TB this is the same sort-once
+      * shape as q27/q28 — no iteration, no state. The truncation at
+      * 8 lags bounds per-row work and loses < 2^-8 of the weight
+      * mass vs the infinite EWMA. */
     // q287: exact-cent lags, dyadic weights, one final division.
-    "q_ts_ewma" -> ewmaSql("events"),
-    // q291: the same batch EWMA over the post-delta events — the
-    // user-level recompute + pass-through must be result-invisible.
-    "q_incr_ewma" ->
-      ewmaSql("(SELECT * FROM events WHERE event_id % 10 <> 1)"),
+    Query("q_ts_ewma", ewmaSql("events"))((s, d) => ewmaOver(events(s, d)).orderBy("event_id")),
+
+    /** q291: SIGNED-INCREMENTAL EWMA [P group-level recompute] —
+      * q287 maintained under the event delta (event_id%10: 0=insert,
+      * 1=delete): the EWMA is USER-LOCAL (each row depends only on
+      * its user's own prior events), so the window state cannot merge
+      * additively but recomputes exactly per touched user — the
+      * i²MapReduce reduce-group recompute with group = user. Users
+      * with any delta event re-enter the window sort over their
+      * post-delta series (delta-proportional: |touched users| ·
+      * series length); every untouched user's rows PASS THROUGH from
+      * the stored base state without re-sorting — at 100 TB the
+      * maintenance cost tracks the delta's user footprint, not the
+      * event corpus. Oracle = q287's batch EWMA over the post-delta
+      * events: the hash proves maintenance ≡ recompute. Fixture
+      * caveat (the q_incr_band precedent): the %10 delta touches
+      * every user at ~66 events/user, so the declared row exercises
+      * the all-recompute worst case; `Round18cSpec` drives the
+      * pass-through branch on a synthetic frame where untouched
+      * users exist. */
+    Query("q_incr_ewma",
+      // q291: the same batch EWMA over the post-delta events — the
+      // user-level recompute + pass-through must be result-invisible.
+      ewmaSql("(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) =>
+      incrEwma(events(s, d)).orderBy("event_id")),
+
+    /** q288: SOFT DEDUP (duplicate-aware down-sampling) [N curation
+      * surface] — instead of q49's hard keep-one, each member of an
+      * exact-duplicate group survives with probability 1/n_dups
+      * (UniMax/soft-dedup: expected ONE surviving copy per group, so
+      * heavily-duplicated content is down-weighted, not annihilated,
+      * preserving natural distribution mass). The keep rule is the
+      * engine's seed-free md5-threshold idiom (q77/q151) made
+      * group-aware with EXACT integers: survive iff
+      * h32(doc_id)·n_dups < 2^32 where h32 is the first 8 md5 hex
+      * digits — cluster-size-independent, reproducible, no float
+      * probability ever materializes. Plan: ONE shuffle on the
+      * 16-byte content hash; the window count and the final
+      * per-group rollup reuse the same hash partitioning, so the
+      * exchange happens once. At 100 TB this is exactly the q49
+      * scan+shuffle with a constant-factor wider row. */
     // q288: identical h32 integer threshold — ('0x'||hex)::UBIGINT
     // parses the same 32-bit value Spark's conv(...,16,10) yields.
-    "q_sample_softdedup" -> softDedupSql("documents"),
-    // q290: the same batch rule over the post-delta corpus — the
-    // touched-group recompute + pass-through must be result-invisible.
-    "q_incr_softdedup" ->
-      softDedupSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"),
+    Query("q_sample_softdedup", softDedupSql("documents"))((s, d) =>
+      softDedupAgg(hashed(documents(s, d)), "h", "n_dups").orderBy("h")),
+
+    /** q290: SIGNED-INCREMENTAL SOFT DEDUP [P §3 group-level
+      * recompute] — q288 maintained under the corpus delta
+      * (doc_id%10: 0=insert, 1=delete). The keep decision of EVERY
+      * member of a group depends on the group's size, so a group
+      * whose size changes must recompute member decisions — exactly
+      * the paper's reduce-group recompute: the delta's content
+      * hashes select the TOUCHED groups, their post-delta members
+      * re-run the 1/n threshold (in production the members come from
+      * the MRBG-store's preserved edges; here a hash semi-join over
+      * the post-delta corpus stands in), and every untouched group's
+      * (n, n_kept, first_kept) row passes through from stored state
+      * VERBATIM — never re-hashed, never re-shuffled. Work is
+      * delta-group-proportional at any corpus size. Oracle = q288's
+      * batch rule over the post-delta corpus. */
+    Query("q_incr_softdedup",
+      // q290: the same batch rule over the post-delta corpus — the
+      // touched-group recompute + pass-through must be result-invisible.
+      softDedupSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
+      val docs = documents(s, d)
+      val baseState = softDedupAgg(
+        hashed(docs.filter(col("doc_id") % 10 =!= 0)), "h", "n_dups")
+      val deltaH = hashed(docs.filter(
+          col("doc_id") % 10 === 0 || col("doc_id") % 10 === 1))
+        .select("h").distinct()
+      val untouched = baseState.join(deltaH, Seq("h"), "left_anti")
+      val recomputed = softDedupAgg(
+        hashed(docs.filter(col("doc_id") % 10 =!= 1))
+          .join(deltaH, Seq("h"), "left_semi"), "h", "n_dups")
+      untouched.unionByName(recomputed).orderBy("h")
+    }),
+
+    /** q292: SOFT DEDUP OVER NEAR-DUP CLUSTERS [N composition row] —
+      * the production composition the q288 scaladoc implies: the
+      * down-sampling unit should be the NEAR-duplicate cluster, not
+      * the exact-hash group, or boilerplate variants evade the 1/n
+      * rule. Group key = q108's collapse label (the FIXED-5-round
+      * min-label component of the Jaccard≥0.5 pair graph, memoized —
+      * this row adds ~one window over the label relation, the pair
+      * graph and collapse are shared state), member keep = the same
+      * exact integer threshold h32·n < 2^32. Demonstrates the
+      * collapse output as REUSABLE state for downstream curation —
+      * the i²MapReduce preserved-state story end to end. Oracle =
+      * the q108 unrolled 5-stage label CTE + the q288 threshold
+      * rollup, composed verbatim. */
     // q292: q108's unrolled 5-stage label CTE chain (reused verbatim
     // from its oracle string — one definition, two rows) + the q288
     // threshold rollup over the label groups.
-    "q_sample_softdedup_near" -> {
-      val q108 = graft.text.Dedup.sql("q_dedup_groups")
+    Query("q_sample_softdedup_near", {
+      val q108 = graft.text.Dedup.dedupGroups.oracle.get
       val cut = q108.lastIndexOf("SELECT node AS doc_id")
       require(cut > 0, "q108 oracle tail changed — fix the q292 splice")
       q108.substring(0, cut) +
@@ -527,11 +477,31 @@ object Round18 {
                                     THEN doc_id END), -1) AS BIGINT)
                AS first_kept
            FROM g GROUP BY keep_id ORDER BY keep_id"""
-    },
-    // q289: the byte math replayed on the hex plane (ASCII fixture:
-    // byte == char, the q60 contract); DuckDB hex() is uppercase
-    // like Spark's.
-    "q_multimodal_mime" ->
+    })((s, d) =>
+      softDedupAgg(
+        graft.text.Dedup.dedupGroups.plan(s, d)
+          .select(col("doc_id"), col("keep_id")),
+        "keep_id", "n_members")
+        .orderBy("keep_id")),
+
+    /** q289: MAGIC-BYTE MIME SNIFFING [N multimodal surface] — the
+      * ingest-time format detector every multimodal pipeline runs
+      * before routing blobs to codecs: a mixed media table (PNG /
+      * JPEG / RIFF magic headers prepended to the q60 byte fixture by
+      * doc_id%4; %4==3 stays bare text) is sniffed from its FIRST
+      * FOUR BYTES (hex-prefix compare — the actual file(1) mechanism)
+      * and summarized per detected type. The declared-vs-sniffed
+      * agreement check is what catches mislabeled uploads at ingest.
+      * Plan: pure map over the blobs (binary concat + substring —
+      * both codegen'd) followed by one aggregate on a ≤4-key domain;
+      * the blob column is pruned immediately after the 4-byte slice,
+      * so at 100 TB the shuffle carries counters only. Oracle
+      * reproduces the byte math on the hex plane (the q60 ASCII
+      * contract: byte == char for this fixture). */
+    Query("q_multimodal_mime",
+      // q289: the byte math replayed on the hex plane (ASCII fixture:
+      // byte == char, the q60 contract); DuckDB hex() is uppercase
+      // like Spark's.
       """WITH m AS (
            SELECT doc_id,
              CASE doc_id % 4 WHEN 0 THEN '89504E470D0A1A0A'
@@ -553,6 +523,26 @@ object Round18 {
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
            CAST(min(doc_id) AS BIGINT) AS min_doc
-         FROM s GROUP BY 1 ORDER BY mime_sniffed"""
+         FROM s GROUP BY 1 ORDER BY mime_sniffed""")((s, d) => {
+      val m4 = pmod(col("doc_id"), lit(4))
+      val magicHex = when(m4 === 0, lit("89504E470D0A1A0A"))
+        .when(m4 === 1, lit("FFD8FFE0"))
+        .when(m4 === 2, lit("52494646"))
+        .otherwise(lit(""))
+      val content = concat(unhex(magicHex), col("text").cast("binary"))
+      val px = hex(substring(content, 1, 4))
+      val sniffed = when(px === "89504E47", "image/png")
+        .when(substring(px, 1, 6) === "FFD8FF", "image/jpeg")
+        .when(px === "52494646", "audio/wav")
+        .otherwise("text/plain")
+      documents(s, d)
+        .select(col("doc_id"), sniffed.as("mime_sniffed"),
+          length(content).cast("bigint").as("n_bytes"))
+        .groupBy("mime_sniffed")
+        .agg(count(lit(1)).cast("bigint").as("n_docs"),
+          sum("n_bytes").cast("bigint").as("total_bytes"),
+          min("doc_id").as("min_doc"))
+        .orderBy("mime_sniffed")
+    })
   )
 }

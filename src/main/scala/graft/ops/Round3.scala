@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -49,7 +49,88 @@ object Round3 {
         .select("a", "b")
         .localCheckpoint())
 
-  val defs: Map[String, Q] = Map(
+  /** q91: batch K-nearest-neighbour search — top-3 cosine
+    * neighbours for each of 5 probe vectors in ONE pass: probes
+    * broadcast to the corpus (never the reverse), similarity via
+    * the codegen'd FloatDot with q52's exact IEEE op order, then a
+    * per-probe top-k window. Scale shape: corpus-partitioned,
+    * probe-replicated — the brute-force baseline the IVF path
+    * (q76) approximates. */
+  val knnBatch: Query =
+    Query("q_sim_knn_batch",
+      """WITH probes AS (
+           SELECT vec_id AS probe_id, embedding AS p
+           FROM embeddings WHERE vec_id < 5
+         ), sims AS (
+           SELECT probe_id, vec_id,
+             list_sum(list_transform(list_zip(embedding, p),
+               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+             / (sqrt(list_sum(list_transform(list_zip(embedding, embedding),
+                  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
+                * sqrt(list_sum(list_transform(list_zip(p, p),
+                    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))))
+             AS sim
+           FROM embeddings, probes
+           WHERE vec_id <> probe_id
+         )
+         SELECT probe_id, vec_id, sim FROM (
+           SELECT *, row_number() OVER (
+             PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS rn
+           FROM sims)
+         WHERE rn <= 3 ORDER BY probe_id, vec_id""")((s, d) => {
+      val emb = embeddings(s, d)
+      val probes = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("p"))
+      val sims = emb.crossJoin(broadcast(probes))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"),
+          (floatDot(col("embedding"), col("p")) /
+            (sqrt(floatDot(col("embedding"), col("embedding"))) *
+              sqrt(floatDot(col("p"), col("p"))))).as("sim"))
+      val w = Window.partitionBy("probe_id")
+        .orderBy(col("sim").desc, col("vec_id"))
+      sims.withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 3)
+        .select("probe_id", "vec_id", "sim")
+        .orderBy("probe_id", "vec_id")
+    })
+
+  /** q95: TF-IDF term scoring — the canonical text-relevance
+    * weight: tf(doc,term) * ln(N/df(term)), top-20 by score.
+    * Numeric note (D3 extension, empirically validated): Java's
+    * Math.log and the oracle's libm `ln` agree BITWISE on all
+    * ratios N/df that occur here (checked exhaustively for
+    * df in 1..500 on this platform), and every other op in the
+    * chain (int→double casts, one divide, one multiply) is
+    * IEEE-exact-rounded — so scores are bit-identical and the
+    * top-20 cut is stable. df-per-term is vocabulary-sized →
+    * broadcast join; tf is one shuffle on (doc, term). */
+  val textTfidf: Query =
+    Query("q_text_tfidf",
+      """WITH toks AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS term
+           FROM documents
+         ), t AS (
+           SELECT doc_id, term, count(*) AS tf FROM toks
+           WHERE length(term) > 0 GROUP BY doc_id, term
+         ), d AS (
+           SELECT term, count(*) AS df FROM t GROUP BY term
+         ), n AS (
+           SELECT count(*) AS nd FROM documents
+         )
+         SELECT doc_id, term,
+           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
+             AS tfidf
+         FROM t JOIN d USING (term), n
+         ORDER BY tfidf DESC, doc_id, term LIMIT 20""")((s, d) =>
+      // single source of truth for the op chain: the facade pipeline
+      // (the oracle depends on its exact IEEE op sequence)
+      graft.Graft.tfidf(documents(s, d), "doc_id", "text")
+        .select("doc_id", "term", "tfidf")
+        .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
+        .limit(20))
+
+  val queries: Seq[Query] = Seq(
     /** q83: triangle counting on the co-purchase graph — parts are
       * connected when they appear together in >= 2 distinct orders
       * ("strong" co-occurrence). Pair generation follows the apriori
@@ -63,7 +144,20 @@ object Round3 {
       * broadcast path while the list is dim-sized and the
       * degree-ordered node-iterator fallback beyond that —
       * `Round4Spec` proves both paths equal. */
-    "q_graph_triangles" -> ((s, d) =>
+    Query("q_graph_triangles",
+      """WITH op AS (
+           SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+         ), pairs AS (
+           SELECT a.l_partkey pa, b.l_partkey pb
+           FROM op a JOIN op b
+             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+         ), e AS (
+           SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2
+         )
+         SELECT CAST(count(*) AS BIGINT) AS n_tri
+         FROM e e1
+         JOIN e e2 ON e1.pb = e2.pa
+         JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb""")((s, d) =>
       Triangles.count(strongEdges(s, d))),
 
     /** q84: the [[Skew]] salted-join skew mitigation as a DECLARED
@@ -72,7 +166,12 @@ object Round3 {
       * must be invisible in the result, which is exactly the claim
       * SkewSpec proves on synthetic data and this query proves under
       * the driver's hash gate on real tables. */
-    "q_join_skew_salted" -> ((s, d) => {
+    Query("q_join_skew_salted",
+      """SELECT p_brand,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+         FROM lineitem JOIN part ON l_partkey = p_partkey
+         GROUP BY p_brand ORDER BY p_brand""")((s, d) => {
       val fact = lineitem(s, d)
         .select(col("l_partkey"), col("l_quantity"),
           col("l_orderkey"), col("l_linenumber"))
@@ -91,7 +190,15 @@ object Round3 {
       * frame would make last_value degenerate). Raw 2-dp price
       * doubles pass through untouched (bit-identical on both
       * engines); nth_value(2) is NULL for single-order customers. */
-    "q_win_first_last" -> ((s, d) => {
+    Query("q_win_first_last",
+      """SELECT o_orderkey, o_custkey,
+           first_value(o_totalprice) OVER w AS first_price,
+           last_value(o_totalprice) OVER w AS last_price,
+           nth_value(o_totalprice, 2) OVER w AS second_price
+         FROM orders
+         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
+           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+         ORDER BY o_orderkey""")((s, d) => {
       val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       orders(s, d)
@@ -106,7 +213,12 @@ object Round3 {
       * comma-joined supplier roster per nation. Sort INSIDE the
       * aggregate (sort_array over the collected list) — collect_list
       * order is shuffle-dependent, the sorted join is not. */
-    "q_agg_listagg" -> ((s, d) => {
+    Query("q_agg_listagg",
+      """SELECT n_name,
+           string_agg(s_name, ',' ORDER BY s_name) AS names,
+           CAST(count(*) AS BIGINT) AS n_sup
+         FROM supplier JOIN nation ON s_nationkey = n_nationkey
+         GROUP BY n_name ORDER BY n_name""")((s, d) => {
       supplier(s, d)
         .join(nation(s, d),
           col("s_nationkey") === col("n_nationkey"))
@@ -121,7 +233,12 @@ object Round3 {
       * open-ended): integer bucket arithmetic + exact decimal sums.
       * value is an exact 2-dp double [M], so floor(value/10) and the
       * dec2 sum are both tie-free cross-engine. */
-    "q_agg_histogram" -> ((s, d) => {
+    Query("q_agg_histogram",
+      """SELECT CAST(floor(value / 10) AS BIGINT) AS bucket,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY 1 ORDER BY bucket""")((s, d) => {
       events(s, d)
         .select(floor(col("value") / 10).cast("bigint").as("bucket"),
           col("value"), col("user_id"))
@@ -138,7 +255,21 @@ object Round3 {
       * min-timestamps are evaluated identically by both engines (µs
       * timestamps, D4). One partial-agg shuffle on user_id, then a
       * single-row final agg. */
-    "q_events_funnel" -> ((s, d) => {
+    Query("q_events_funnel",
+      """WITH m AS (
+           SELECT user_id,
+             min(ts) FILTER (WHERE event_type = 'view') AS tv,
+             min(ts) FILTER (WHERE event_type = 'click') AS tc,
+             min(ts) FILTER (WHERE event_type = 'purchase') AS tp
+           FROM events GROUP BY user_id
+         )
+         SELECT CAST(count(*) AS BIGINT) AS n_users,
+           CAST(count(*) FILTER (WHERE tv IS NOT NULL) AS BIGINT) AS n_view,
+           CAST(count(*) FILTER (WHERE tv IS NOT NULL AND tc > tv) AS BIGINT)
+             AS n_click_after_view,
+           CAST(count(*) FILTER (WHERE tv IS NOT NULL AND tc > tv
+             AND tp > tc) AS BIGINT) AS n_full
+         FROM m""")((s, d) => {
       val stage = events(s, d).groupBy("user_id")
         .agg(min(when(col("event_type") === "view", col("ts"))).as("tv"),
           min(when(col("event_type") === "click", col("ts"))).as("tc"),
@@ -158,7 +289,19 @@ object Round3 {
       * one distinct shuffle + one agg shuffle, no count-distinct
       * expansion. DATE output on both engines (DuckDB date_trunc
       * 'day' yields DATE). */
-    "q_retention_cohort" -> ((s, d) => {
+    Query("q_retention_cohort",
+      """WITH ev AS (
+           SELECT DISTINCT user_id, date_trunc('day', ts) AS activity_day
+           FROM events
+         ), coh AS (
+           SELECT user_id, min(activity_day) AS cohort_day
+           FROM ev GROUP BY user_id
+         )
+         SELECT cohort_day, activity_day,
+           CAST(count(*) AS BIGINT) AS n_users
+         FROM ev JOIN coh USING (user_id)
+         GROUP BY cohort_day, activity_day
+         ORDER BY cohort_day, activity_day""")((s, d) => {
       val ev = events(s, d)
         .select(col("user_id"),
           date_trunc("day", col("ts")).cast("date").as("activity_day"))
@@ -180,7 +323,12 @@ object Round3 {
       * bit-stable cross-engine. Each group materializes on one task
       * (fine for bounded group counts like per-language stats; for
       * unbounded groups use q69's distributed percentile instead). */
-    "q_grouped_map_mad" -> ((s, d) => {
+    Query("q_grouped_map_mad",
+      """SELECT lang,
+           CAST(median(n_chars) AS DOUBLE) AS med,
+           CAST(mad(n_chars) AS DOUBLE) AS mad,
+           CAST(count(*) AS BIGINT) AS n_docs
+         FROM documents GROUP BY lang ORDER BY lang""")((s, d) => {
       val sp = s
       import sp.implicits._
       def q50(a: Array[Double]): Double = {
@@ -213,7 +361,14 @@ object Round3 {
       * read of the materialized view, not a recompute; the plan shape
       * of the incremental branch (delta ⋈ broadcast dim → partial
       * agg → merge) is what scales. */
-    "q_incr_join_view" -> ((s, d) => {
+    Query("q_incr_join_view",
+      """SELECT n_name,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
+         FROM lineitem
+         JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation ON s_nationkey = n_nationkey
+         GROUP BY n_name ORDER BY n_name""")((s, d) => {
       val cut = lit("1999-01-01").cast("timestamp")
       val dim = supplier(s, d)
         .join(nation(s, d), col("s_nationkey") === col("n_nationkey"))
@@ -235,7 +390,10 @@ object Round3 {
       * graph — the standard first look at any large graph, and a
       * two-level aggregation (node degree, then nodes per degree)
       * whose second shuffle is degree-cardinality-sized (tiny). */
-    "q_graph_degree_dist" -> ((s, d) => {
+    Query("q_graph_degree_dist",
+      s"""WITH ${graft.iter.Graphs.cteSql}
+         SELECT outdeg, CAST(count(*) AS BIGINT) AS n_nodes
+         FROM deg GROUP BY outdeg ORDER BY outdeg""")((s, d) => {
       graft.iter.Graphs.deg(graft.iter.Graphs.edgesCached(s, d))
         .groupBy("outdeg")
         .agg(count(lit(1)).as("n_nodes"))
@@ -246,7 +404,17 @@ object Round3 {
       * mode() leaves ties engine-defined, so both sides compute
       * (max count, then min value) explicitly: count per (user,
       * type), per-user top-1 window. */
-    "q_agg_mode" -> ((s, d) => {
+    Query("q_agg_mode",
+      """WITH c AS (
+           SELECT user_id, event_type, count(*) AS n
+           FROM events GROUP BY user_id, event_type
+         )
+         SELECT user_id, event_type AS mode_type, CAST(n AS BIGINT) AS n
+         FROM (
+           SELECT *, row_number() OVER (
+             PARTITION BY user_id ORDER BY n DESC, event_type) AS rn
+           FROM c)
+         WHERE rn = 1 ORDER BY user_id""")((s, d) => {
       val counts = events(s, d)
         .groupBy("user_id", "event_type")
         .agg(count(lit(1)).as("n"))
@@ -262,7 +430,18 @@ object Round3 {
       * null-safe equality (Spark `<=>` ↔ SQL IS NOT DISTINCT FROM) /
       * null-aware counting. The fixture tables are fully non-null, so
       * nulls are manufactured deterministically with nullif. */
-    "q_fn_null" -> ((s, d) => {
+    Query("q_fn_null",
+      """SELECT event_id,
+           coalesce(v1, -1) AS v1_or_neg1,
+           v1 IS NOT DISTINCT FROM v2 AS null_safe_eq,
+           v1 = v2 AS plain_eq,
+           CASE WHEN v1 IS NULL THEN 'NULL' ELSE 'VAL' END AS tag
+         FROM (
+           SELECT event_id,
+             nullif(CAST(floor(value) AS BIGINT), 50) AS v1,
+             nullif(CAST(floor(value / 2) AS BIGINT), 25) AS v2
+           FROM events)
+         ORDER BY event_id""")((s, d) => {
       val v1 = nullif(floor(col("value")).cast("bigint"), lit(50L))
       val v2 = nullif(floor(col("value") / 2).cast("bigint"), lit(25L))
       events(s, d)
@@ -279,7 +458,13 @@ object Round3 {
       * semi join (q12 is the explicit DataFrame form): Catalyst
       * decorrelates the subquery into a LeftSemi join, which is the
       * point — users write the predicate, the engine picks the join. */
-    "q_join_exists_subquery" -> ((s, d) =>
+    Query("q_join_exists_subquery",
+      """SELECT c_custkey, c_name
+         FROM customer c
+         WHERE EXISTS (
+           SELECT 1 FROM orders o
+           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
+         ORDER BY c_custkey""")((s, d) =>
       runSql(s, d, """
         SELECT c_custkey, c_name
         FROM customer c
@@ -293,7 +478,12 @@ object Round3 {
       * a genuinely different operator from q33/q34's distinct-set
       * forms. Aggregated per key so the output is deterministic
       * without relying on row order. */
-    "q_set_intersect_all" -> ((s, d) => {
+    Query("q_set_intersect_all",
+      """SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM (
+           SELECT user_id FROM events WHERE event_type = 'view'
+           INTERSECT ALL
+           SELECT user_id FROM events WHERE event_type = 'click')
+         GROUP BY user_id ORDER BY user_id""")((s, d) => {
       val ev = events(s, d)
       ev.filter(col("event_type") === "view").select("user_id")
         .intersectAll(
@@ -301,7 +491,12 @@ object Round3 {
         .groupBy("user_id").agg(count(lit(1)).as("n"))
         .orderBy("user_id")
     }),
-    "q_set_except_all" -> ((s, d) => {
+    Query("q_set_except_all",
+      """SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM (
+           SELECT user_id FROM events WHERE event_type = 'view'
+           EXCEPT ALL
+           SELECT user_id FROM events WHERE event_type = 'click')
+         GROUP BY user_id ORDER BY user_id""")((s, d) => {
       val ev = events(s, d)
       ev.filter(col("event_type") === "view").select("user_id")
         .exceptAll(
@@ -310,215 +505,7 @@ object Round3 {
         .orderBy("user_id")
     }),
 
-    /** q95: TF-IDF term scoring — the canonical text-relevance
-      * weight: tf(doc,term) * ln(N/df(term)), top-20 by score.
-      * Numeric note (D3 extension, empirically validated): Java's
-      * Math.log and the oracle's libm `ln` agree BITWISE on all
-      * ratios N/df that occur here (checked exhaustively for
-      * df in 1..500 on this platform), and every other op in the
-      * chain (int→double casts, one divide, one multiply) is
-      * IEEE-exact-rounded — so scores are bit-identical and the
-      * top-20 cut is stable. df-per-term is vocabulary-sized →
-      * broadcast join; tf is one shuffle on (doc, term). */
-    "q_text_tfidf" -> ((s, d) =>
-      // single source of truth for the op chain: the facade pipeline
-      // (the oracle depends on its exact IEEE op sequence)
-      graft.Graft.tfidf(documents(s, d), "doc_id", "text")
-        .select("doc_id", "term", "tfidf")
-        .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
-        .limit(20)),
+    textTfidf,
 
-    /** q91: batch K-nearest-neighbour search — top-3 cosine
-      * neighbours for each of 5 probe vectors in ONE pass: probes
-      * broadcast to the corpus (never the reverse), similarity via
-      * the codegen'd FloatDot with q52's exact IEEE op order, then a
-      * per-probe top-k window. Scale shape: corpus-partitioned,
-      * probe-replicated — the brute-force baseline the IVF path
-      * (q76) approximates. */
-    "q_sim_knn_batch" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val probes = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("p"))
-      val sims = emb.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          (floatDot(col("embedding"), col("p")) /
-            (sqrt(floatDot(col("embedding"), col("embedding"))) *
-              sqrt(floatDot(col("p"), col("p"))))).as("sim"))
-      val w = Window.partitionBy("probe_id")
-        .orderBy(col("sim").desc, col("vec_id"))
-      sims.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("probe_id", "vec_id", "sim")
-        .orderBy("probe_id", "vec_id")
-    }))
-
-  val sql: Map[String, String] = Map(
-    "q_graph_triangles" ->
-      """WITH op AS (
-           SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-         ), pairs AS (
-           SELECT a.l_partkey pa, b.l_partkey pb
-           FROM op a JOIN op b
-             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         ), e AS (
-           SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2
-         )
-         SELECT CAST(count(*) AS BIGINT) AS n_tri
-         FROM e e1
-         JOIN e e2 ON e1.pb = e2.pa
-         JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb""",
-    "q_join_skew_salted" ->
-      """SELECT p_brand,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q_win_first_last" ->
-      """SELECT o_orderkey, o_custkey,
-           first_value(o_totalprice) OVER w AS first_price,
-           last_value(o_totalprice) OVER w AS last_price,
-           nth_value(o_totalprice, 2) OVER w AS second_price
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ORDER BY o_orderkey""",
-    "q_agg_listagg" ->
-      """SELECT n_name,
-           string_agg(s_name, ',' ORDER BY s_name) AS names,
-           CAST(count(*) AS BIGINT) AS n_sup
-         FROM supplier JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-    "q_agg_histogram" ->
-      """SELECT CAST(floor(value / 10) AS BIGINT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1 ORDER BY bucket""",
-    "q_events_funnel" ->
-      """WITH m AS (
-           SELECT user_id,
-             min(ts) FILTER (WHERE event_type = 'view') AS tv,
-             min(ts) FILTER (WHERE event_type = 'click') AS tc,
-             min(ts) FILTER (WHERE event_type = 'purchase') AS tp
-           FROM events GROUP BY user_id
-         )
-         SELECT CAST(count(*) AS BIGINT) AS n_users,
-           CAST(count(*) FILTER (WHERE tv IS NOT NULL) AS BIGINT) AS n_view,
-           CAST(count(*) FILTER (WHERE tv IS NOT NULL AND tc > tv) AS BIGINT)
-             AS n_click_after_view,
-           CAST(count(*) FILTER (WHERE tv IS NOT NULL AND tc > tv
-             AND tp > tc) AS BIGINT) AS n_full
-         FROM m""",
-    "q_retention_cohort" ->
-      """WITH ev AS (
-           SELECT DISTINCT user_id, date_trunc('day', ts) AS activity_day
-           FROM events
-         ), coh AS (
-           SELECT user_id, min(activity_day) AS cohort_day
-           FROM ev GROUP BY user_id
-         )
-         SELECT cohort_day, activity_day,
-           CAST(count(*) AS BIGINT) AS n_users
-         FROM ev JOIN coh USING (user_id)
-         GROUP BY cohort_day, activity_day
-         ORDER BY cohort_day, activity_day""",
-    "q_grouped_map_mad" ->
-      """SELECT lang,
-           CAST(median(n_chars) AS DOUBLE) AS med,
-           CAST(mad(n_chars) AS DOUBLE) AS mad,
-           CAST(count(*) AS BIGINT) AS n_docs
-         FROM documents GROUP BY lang ORDER BY lang""",
-    "q_incr_join_view" ->
-      """SELECT n_name,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-         FROM lineitem
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-    "q_graph_degree_dist" ->
-      s"""WITH ${graft.iter.Graphs.cteSql}
-         SELECT outdeg, CAST(count(*) AS BIGINT) AS n_nodes
-         FROM deg GROUP BY outdeg ORDER BY outdeg""",
-    "q_agg_mode" ->
-      """WITH c AS (
-           SELECT user_id, event_type, count(*) AS n
-           FROM events GROUP BY user_id, event_type
-         )
-         SELECT user_id, event_type AS mode_type, CAST(n AS BIGINT) AS n
-         FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY user_id ORDER BY n DESC, event_type) AS rn
-           FROM c)
-         WHERE rn = 1 ORDER BY user_id""",
-    "q_fn_null" ->
-      """SELECT event_id,
-           coalesce(v1, -1) AS v1_or_neg1,
-           v1 IS NOT DISTINCT FROM v2 AS null_safe_eq,
-           v1 = v2 AS plain_eq,
-           CASE WHEN v1 IS NULL THEN 'NULL' ELSE 'VAL' END AS tag
-         FROM (
-           SELECT event_id,
-             nullif(CAST(floor(value) AS BIGINT), 50) AS v1,
-             nullif(CAST(floor(value / 2) AS BIGINT), 25) AS v2
-           FROM events)
-         ORDER BY event_id""",
-    "q_join_exists_subquery" ->
-      """SELECT c_custkey, c_name
-         FROM customer c
-         WHERE EXISTS (
-           SELECT 1 FROM orders o
-           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-         ORDER BY c_custkey""",
-    "q_set_intersect_all" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM (
-           SELECT user_id FROM events WHERE event_type = 'view'
-           INTERSECT ALL
-           SELECT user_id FROM events WHERE event_type = 'click')
-         GROUP BY user_id ORDER BY user_id""",
-    "q_set_except_all" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM (
-           SELECT user_id FROM events WHERE event_type = 'view'
-           EXCEPT ALL
-           SELECT user_id FROM events WHERE event_type = 'click')
-         GROUP BY user_id ORDER BY user_id""",
-    "q_text_tfidf" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents
-         ), t AS (
-           SELECT doc_id, term, count(*) AS tf FROM toks
-           WHERE length(term) > 0 GROUP BY doc_id, term
-         ), d AS (
-           SELECT term, count(*) AS df FROM t GROUP BY term
-         ), n AS (
-           SELECT count(*) AS nd FROM documents
-         )
-         SELECT doc_id, term,
-           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
-             AS tfidf
-         FROM t JOIN d USING (term), n
-         ORDER BY tfidf DESC, doc_id, term LIMIT 20""",
-    "q_sim_knn_batch" ->
-      """WITH probes AS (
-           SELECT vec_id AS probe_id, embedding AS p
-           FROM embeddings WHERE vec_id < 5
-         ), sims AS (
-           SELECT probe_id, vec_id,
-             list_sum(list_transform(list_zip(embedding, p),
-               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(list_zip(embedding, embedding),
-                  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
-                * sqrt(list_sum(list_transform(list_zip(p, p),
-                    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))))
-             AS sim
-           FROM embeddings, probes
-           WHERE vec_id <> probe_id
-         )
-         SELECT probe_id, vec_id, sim FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS rn
-           FROM sims)
-         WHERE rn <= 3 ORDER BY probe_id, vec_id""")
+    knnBatch)
 }

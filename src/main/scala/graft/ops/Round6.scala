@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 
 /** Round-6 coverage extensions (SURVEY.md §2 rows 111–130, ops
@@ -106,7 +107,7 @@ object Round6 {
         md5(regexp_replace(lower(col("text")), " +", " ")))
   }
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q111: BATCH sessionization — the gap-based session assignment
       * (new session when >30 min since the user's previous event),
       * the batch twin of q59's streaming session windows. Two window
@@ -116,7 +117,29 @@ object Round6 {
       * user-keyed sort; the session aggregate rides map-side partials.
       * Ties on ts are broken by the unique event_id, so the running
       * sum (and therefore every session boundary) is deterministic. */
-    "q_events_sessionize" -> ((s, d) => {
+    Query("q_events_sessionize",
+      s"""WITH e AS (
+           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
+             lag(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           FROM events
+         ), flagged AS (
+           SELECT user_id, event_id, ts, us,
+             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
+                  THEN 1 ELSE 0 END AS new_s
+           FROM e
+         ), sess AS (
+           SELECT user_id, event_id, ts, us,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+           FROM flagged
+         )
+         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+           CAST(count(*) AS BIGINT) AS n_events,
+           min(ts) AS session_start,
+           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
+         FROM sess GROUP BY user_id, session_idx
+         ORDER BY user_id, session_idx""")((s, d) => {
       sessionsOf(events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us")))
@@ -133,7 +156,31 @@ object Round6 {
       * exactly the delta's user set and the re-sort is delta-user-
       * sized, never corpus-sized. Oracle = q111's FULL sessionize SQL:
       * incremental maintenance must be result-invisible. */
-    "q_incr_sessionize" -> ((s, d) => {
+    Query("q_incr_sessionize",
+      // q116's oracle IS q111's: incremental maintenance must reproduce
+      // the full recomputation bit-for-bit.
+      s"""WITH e AS (
+           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
+             lag(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           FROM events
+         ), flagged AS (
+           SELECT user_id, event_id, ts, us,
+             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
+                  THEN 1 ELSE 0 END AS new_s
+           FROM e
+         ), sess AS (
+           SELECT user_id, event_id, ts, us,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+           FROM flagged
+         )
+         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+           CAST(count(*) AS BIGINT) AS n_events,
+           min(ts) AS session_start,
+           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
+         FROM sess GROUP BY user_id, session_idx
+         ORDER BY user_id, session_idx""")((s, d) => {
       val cut = lit("2024-01-20").cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -157,274 +204,7 @@ object Round6 {
       * Two windows over one (custkey; date, orderkey) sort — again a
       * single shuffle — and the change filter shrinks the second
       * window's input to the compacted rows. */
-    "q_incr_scd2" -> ((s, d) =>
-      scd2Of(s, d).orderBy("o_custkey", "valid_from", "o_orderkey")),
-
-    /** q113: deterministic per-group "reservoir" k-sample — 5 events
-      * per event_type chosen by md5(event_id) order: a uniform,
-      * seed-free, cluster-size-independent sample (the q77 hash-split
-      * idea applied to per-group top-k). The md5 sort key makes the
-      * pick reproducible on ANY engine — the property a 100 TB
-      * pipeline needs so re-runs and audits agree. Plan shape is q29's
-      * rank-filter (one group-keyed sort); at fact scale the
-      * row_number filter evaluates streaming per group — no global
-      * materialization. */
-    "q_sample_reservoir" -> ((s, d) => {
-      val w = Window.partitionBy("event_type")
-        .orderBy(md5(col("event_id").cast("string")), col("event_id"))
-      events(s, d)
-        .select(col("event_type"), col("event_id"), col("user_id"), col("value"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .select(col("event_type"), col("rn").cast("bigint").as("rn"),
-          col("event_id"), col("user_id"), col("value"))
-        .orderBy("event_type", "rn")
-    }),
-
-    /** q117: the END-TO-END training-data CLEANING PIPELINE in one
-      * declared query — the composition a 100 TB corpus actually runs:
-      * quality gate (q62's keep rule) → language ID (q61's scorer) →
-      * exact near-dup collapse on whitespace-normalized text (q54's
-      * normalization, md5 fingerprint, min-doc_id canonical winner
-      * carrying the duplicate count). One scan, map-only scoring and
-      * filters, ONE shuffle (the fingerprint groupBy) — embarrassingly
-      * parallel at any scale, and the compositional proof that the
-      * pieces interoperate under the hard oracle, not just alone. */
-    "q_pipeline_clean" -> ((s, d) => {
-      val normed = cleanNormed(documents(s, d))
-      val canon = normed.groupBy("h")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
-      normed.join(canon, "h")
-        .filter(col("doc_id") === col("keep_id"))
-        .select(col("doc_id"), col("pred"), col("n_tokens"), col("h"),
-          col("n_dups"))
-        .orderBy("doc_id")
-    }),
-
-    /** q119: INCREMENTAL TF-IDF [P §3 — one-step incremental
-      * aggregation with preserved state]: the corpus splits into a
-      * base (doc_id%10<>0) and a delta; per-(doc,term) tf rows are
-      * DOC-LOCAL so the base's rows are preserved verbatim (in
-      * production read back from the q103 partials store), the
-      * df-counts and doc-count state merge ASSOCIATIVELY
-      * (df = df_base + df_delta, N = N_base + N_delta — exact integer
-      * merges), and only delta docs are tokenized. Scores then apply
-      * q95's exact IEEE chain over the merged state — so the oracle is
-      * q95's FULL TF-IDF verbatim: incremental maintenance must be
-      * result-invisible. Delta-proportional work: the only full-corpus
-      * pass is reading preserved rows. */
-    "q_incr_tfidf" -> ((s, d) => {
-      val docs = documents(s, d)
-      def tfOf(dd: org.apache.spark.sql.DataFrame) = dd
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val tfBase = tfOf(docs.filter(col("doc_id") % 10 =!= 0))
-      val tfDelta = tfOf(docs.filter(col("doc_id") % 10 === 0))
-      def dfOf(tf: org.apache.spark.sql.DataFrame) =
-        tf.groupBy("term").agg(count(lit(1)).as("df"))
-      // associative state merge: term-keyed integer counts
-      val dfMerged = dfOf(tfBase).unionByName(dfOf(tfDelta))
-        .groupBy("term").agg(sum("df").as("df"))
-      val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-      tfBase.unionByName(tfDelta)
-        .join(broadcast(dfMerged), "term")
-        .crossJoin(broadcast(n))
-        .select(col("doc_id"), col("term"),
-          (col("tf").cast("double") *
-            log(col("n_docs") / col("df").cast("double"))).as("tfidf"))
-        .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
-        .limit(20)
-    }),
-
-    /** q122: deterministic STRATIFIED sampling — per-stratum rates
-      * (view 1/16, click 1/4, rest 1/2) decided by the first hex char
-      * of md5(event_id): a pure MAP-SIDE filter (no shuffle, no
-      * sampling state, no seed) whose keep-decision any engine
-      * reproduces — `sampleBy` semantics with audit-grade determinism.
-      * At 100 TB this composes with partition pruning and costs one
-      * scan; rates tune per stratum without touching the plan shape. */
-    "q_sample_stratified" -> ((s, d) => {
-      val hc = substring(md5(col("event_id").cast("string")), 1, 1)
-      events(s, d)
-        .select(col("event_id"), col("event_type"), col("user_id"),
-          col("value"), hc.as("hc"))
-        .filter(
-          when(col("event_type") === "view", col("hc") === "0")
-            .when(col("event_type") === "click", col("hc") < "4")
-            .otherwise(col("hc") < "8"))
-        .select(col("event_id"), col("event_type"), col("user_id"),
-          col("value"))
-        .orderBy("event_id")
-    }),
-
-    /** q124: TEMPORAL point-in-interval join — "which dimension
-      * version was active when this fact row occurred": every order
-      * probes its customer's SCD2 interval table (q112's output,
-      * shared via [[scd2Of]]) on valid_from <= date < valid_to. The
-      * intervals partition each customer's timeline, so every order
-      * matches EXACTLY ONE version — the q112-build → q124-use pair is
-      * the full dimension-maintenance story. Scale shape: the interval
-      * table is change-row-sized (dimension-scale), so it broadcasts;
-      * the fact side streams map-only through the equi-key + range
-      * predicate — no fact shuffle (the q78 range-join rule applied to
-      * versioned dimensions). */
-    "q_join_temporal" -> ((s, d) => {
-      val iv = scd2Of(s, d)
-        .select(col("o_custkey").as("c"), col("status"),
-          col("valid_from"), col("valid_to"))
-      val facts = orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
-      facts.join(broadcast(iv),
-          facts("o_custkey") === iv("c") &&
-            facts("o_orderdate") >= iv("valid_from") &&
-            facts("o_orderdate") < iv("valid_to"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("status"), col("valid_from"))
-        .orderBy("o_orderkey")
-    }),
-
-    /** q127: population COVARIANCE per group with the D-rule numeric
-      * contract — the statistical-aggregate family (corr/covar) that
-      * FP-accumulating builtins can't put under a cross-engine oracle:
-      * Σx, Σy, Σxy as EXACT decimals (map-side partial agg, one
-      * shuffle), Σxy rescaled to 2 dp (half-up on both engines) so its
-      * unscaled value stays inside the 2^53 decimal→double boundary
-      * (Dec scaladoc), then ONE identical IEEE chain
-      * sxy/n − (sx/n)·(sy/n) on both engines. */
-    "q_agg_covar" -> ((s, d) => {
-      import graft.engine.Dec._
-      val li = lineitem(s, d)
-      val g = li.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(dec2(col("l_quantity"))).as("sx"),
-          sum(dec2(col("l_extendedprice"))).as("sy"),
-          round(sum(dec2(col("l_quantity")) * dec2(col("l_extendedprice"))), 2)
-            .as("sxy"))
-      g.select(col("l_returnflag"), col("n"),
-          (dbl(col("sxy")) / dbl(col("n")) -
-            (dbl(col("sx")) / dbl(col("n"))) * (dbl(col("sy")) / dbl(col("n"))))
-            .as("covar_pop"))
-        .orderBy("l_returnflag")
-    }),
-
-    /** q130: Pearson CORRELATION under the D-rule contract — the q127
-      * machinery extended with exact-decimal second moments. Price is
-      * shifted to y' = price·0.01 IN DECIMAL (exact; correlation is
-      * scale-invariant) and every sum is rounded to 2 dp so all
-      * unscaled values stay inside the 2^53 decimal→double boundary
-      * even at sf1+; the correlation formula then runs as ONE pinned
-      * IEEE tree — identical parenthesization on both engines, so the
-      * doubles match bitwise. */
-    "q_agg_corr" -> ((s, d) => {
-      import graft.engine.Dec._
-      val li = lineitem(s, d)
-      val x = dec2(col("l_quantity"))
-      // y' = price·0.01, exact at 4 dp, narrowed back to DECIMAL(8,4)
-      // (max 1050.0000 fits) so y'·y' stays in the int64 decimal path
-      val y = (dec2(col("l_extendedprice")) * lit(0.01).cast("decimal(8,4)"))
-        .cast("decimal(8,4)")
-      val g = li.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          round(sum(x), 2).as("sx"),
-          round(sum(y), 2).as("sy"),
-          round(sum(x * y), 2).as("sxy"),
-          round(sum(x * x), 2).as("sx2"),
-          round(sum(y * y), 2).as("sy2"))
-      val nd = dbl(col("n"))
-      val mx = dbl(col("sx")) / nd
-      val my = dbl(col("sy")) / nd
-      val cov = dbl(col("sxy")) / nd - mx * my
-      val vx = dbl(col("sx2")) / nd - mx * mx
-      val vy = dbl(col("sy2")) / nd - my * my
-      g.select(col("l_returnflag"), col("n"),
-          (cov / (sqrt(vx) * sqrt(vy))).as("corr"))
-        .orderBy("l_returnflag")
-    }),
-
-    /** q131: per-group standard deviation (population) via the q127
-      * machinery — σ = √(sx2/n − (sx/n)²) over exact decimal sums,
-      * one pinned IEEE tree, bitwise-equal doubles (the FP-
-      * accumulating stddev builtins cannot cross-engine-match). */
-    "q_agg_stddev" -> ((s, d) => {
-      import graft.engine.Dec._
-      val li = lineitem(s, d)
-      val x = dec2(col("l_quantity"))
-      val g = li.groupBy("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"),
-          round(sum(x), 2).as("sx"),
-          round(sum(x * x), 2).as("sx2"))
-      val nd = dbl(col("n"))
-      val mx = dbl(col("sx")) / nd
-      g.select(col("l_returnflag"), col("l_linestatus"), col("n"),
-          sqrt(dbl(col("sx2")) / nd - mx * mx).as("stddev_pop"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    /** q132: EDIT-DISTANCE fuzzy matching — levenshtein between each
-      * document and its successor (doc_id+1) on the subset: the fuzzy
-      * string-match primitive (typo-level dedup, record linkage) that
-      * token/shingle measures miss. Exact integer on both engines;
-      * the pair space is the deterministic consecutive-id chain, so
-      * the join is a broadcast-able self-equi-join, not a cross
-      * product (at scale the candidate pairs come from q51's LSH
-      * buckets and this verify runs in-bucket). */
-    "q_text_editdist" -> ((s, d) => {
-      val docs = documents(s, d)
-        .filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text"))
-      val nxt = docs.select((col("doc_id") - 5).as("doc_id"),
-        col("text").as("text_b"))
-      docs.join(nxt, "doc_id")
-        .select(col("doc_id"),
-          levenshtein(col("text"), col("text_b")).cast("bigint").as("dist"),
-          length(col("text")).cast("bigint").as("len_a"),
-          length(col("text_b")).cast("bigint").as("len_b"))
-        .orderBy("doc_id")
-    }),
-
-    /** q128: calendar datetime surface beyond q36 — month arithmetic
-      * (add_months clamps to month end on both engines), last_day,
-      * ISO week number, and Monday-based weekday (Spark `weekday` ==
-      * DuckDB `isodow − 1`; the default dayofweek numberings disagree
-      * between engines, so the portable form is pinned here). */
-    "q_fn_datetime2" -> ((s, d) => {
-      orders(s, d)
-        .select(col("o_orderkey"),
-          add_months(col("o_orderdate"), 3).cast("date").as("plus3m"),
-          last_day(col("o_orderdate")).as("month_end"),
-          weekofyear(col("o_orderdate")).cast("bigint").as("iso_week"),
-          weekday(col("o_orderdate")).cast("bigint").as("wd_mon0"),
-          date_trunc("quarter", col("o_orderdate")).cast("date").as("q_start"))
-        .orderBy("o_orderkey")
-    })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_events_sessionize" ->
-      s"""WITH e AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events
-         ), flagged AS (
-           SELECT user_id, event_id, ts, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
-                  THEN 1 ELSE 0 END AS new_s
-           FROM e
-         ), sess AS (
-           SELECT user_id, event_id, ts, us,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged
-         )
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS session_start,
-           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
-         FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""",
-    "q_incr_scd2" ->
+    Query("q_incr_scd2",
       """WITH h AS (
            SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
              lag(o_orderstatus) OVER
@@ -445,8 +225,19 @@ object Round6 {
                (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
                IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
          FROM chg
-         ORDER BY o_custkey, valid_from, o_orderkey""",
-    "q_sample_reservoir" ->
+         ORDER BY o_custkey, valid_from, o_orderkey""")((s, d) =>
+      scd2Of(s, d).orderBy("o_custkey", "valid_from", "o_orderkey")),
+
+    /** q113: deterministic per-group "reservoir" k-sample — 5 events
+      * per event_type chosen by md5(event_id) order: a uniform,
+      * seed-free, cluster-size-independent sample (the q77 hash-split
+      * idea applied to per-group top-k). The md5 sort key makes the
+      * pick reproducible on ANY engine — the property a 100 TB
+      * pipeline needs so re-runs and audits agree. Plan shape is q29's
+      * rank-filter (one group-keyed sort); at fact scale the
+      * row_number filter evaluates streaming per group — no global
+      * materialization. */
+    Query("q_sample_reservoir",
       """SELECT event_type, CAST(rn AS BIGINT) AS rn, event_id, user_id, value
          FROM (
            SELECT event_type, event_id, user_id, value,
@@ -455,33 +246,28 @@ object Round6 {
            FROM events
          ) t
          WHERE rn <= 5
-         ORDER BY event_type, rn""",
-    // q116's oracle IS q111's: incremental maintenance must reproduce
-    // the full recomputation bit-for-bit.
-    "q_incr_sessionize" ->
-      s"""WITH e AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events
-         ), flagged AS (
-           SELECT user_id, event_id, ts, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
-                  THEN 1 ELSE 0 END AS new_s
-           FROM e
-         ), sess AS (
-           SELECT user_id, event_id, ts, us,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged
-         )
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS session_start,
-           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
-         FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""",
-    "q_pipeline_clean" ->
+         ORDER BY event_type, rn""")((s, d) => {
+      val w = Window.partitionBy("event_type")
+        .orderBy(md5(col("event_id").cast("string")), col("event_id"))
+      events(s, d)
+        .select(col("event_type"), col("event_id"), col("user_id"), col("value"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 5)
+        .select(col("event_type"), col("rn").cast("bigint").as("rn"),
+          col("event_id"), col("user_id"), col("value"))
+        .orderBy("event_type", "rn")
+    }),
+
+    /** q117: the END-TO-END training-data CLEANING PIPELINE in one
+      * declared query — the composition a 100 TB corpus actually runs:
+      * quality gate (q62's keep rule) → language ID (q61's scorer) →
+      * exact near-dup collapse on whitespace-normalized text (q54's
+      * normalization, md5 fingerprint, min-doc_id canonical winner
+      * carrying the duplicate count). One scan, map-only scoring and
+      * filters, ONE shuffle (the fingerprint groupBy) — embarrassingly
+      * parallel at any scale, and the compositional proof that the
+      * pieces interoperate under the hard oracle, not just alone. */
+    Query("q_pipeline_clean",
       """WITH t AS (
            SELECT doc_id, text,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -512,12 +298,64 @@ object Round6 {
          )
          SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
          FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
-         ORDER BY n.doc_id""",
+         ORDER BY n.doc_id""")((s, d) => {
+      val normed = cleanNormed(documents(s, d))
+      val canon = normed.groupBy("h")
+        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
+      normed.join(canon, "h")
+        .filter(col("doc_id") === col("keep_id"))
+        .select(col("doc_id"), col("pred"), col("n_tokens"), col("h"),
+          col("n_dups"))
+        .orderBy("doc_id")
+    }),
+
+    /** q119: INCREMENTAL TF-IDF [P §3 — one-step incremental
+      * aggregation with preserved state]: the corpus splits into a
+      * base (doc_id%10<>0) and a delta; per-(doc,term) tf rows are
+      * DOC-LOCAL so the base's rows are preserved verbatim (in
+      * production read back from the q103 partials store), the
+      * df-counts and doc-count state merge ASSOCIATIVELY
+      * (df = df_base + df_delta, N = N_base + N_delta — exact integer
+      * merges), and only delta docs are tokenized. Scores then apply
+      * q95's exact IEEE chain over the merged state — so the oracle is
+      * q95's FULL TF-IDF verbatim: incremental maintenance must be
+      * result-invisible. Delta-proportional work: the only full-corpus
+      * pass is reading preserved rows. */
     // q119's oracle IS q95's full TF-IDF: the incremental df/N merge
     // must be result-invisible. doc_id is in the SELECT only via the
     // shared projection, so the text is reused verbatim.
-    "q_incr_tfidf" -> Round3.sql("q_text_tfidf"),
-    "q_sample_stratified" ->
+    Query("q_incr_tfidf", Round3.textTfidf.oracle.get)((s, d) => {
+      val docs = documents(s, d)
+      def tfOf(dd: org.apache.spark.sql.DataFrame) = dd
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .filter(length(col("term")) > 0)
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      val tfBase = tfOf(docs.filter(col("doc_id") % 10 =!= 0))
+      val tfDelta = tfOf(docs.filter(col("doc_id") % 10 === 0))
+      def dfOf(tf: org.apache.spark.sql.DataFrame) =
+        tf.groupBy("term").agg(count(lit(1)).as("df"))
+      // associative state merge: term-keyed integer counts
+      val dfMerged = dfOf(tfBase).unionByName(dfOf(tfDelta))
+        .groupBy("term").agg(sum("df").as("df"))
+      val n = docs.agg(count(lit(1)).cast("double").as("n_docs"))
+      tfBase.unionByName(tfDelta)
+        .join(broadcast(dfMerged), "term")
+        .crossJoin(broadcast(n))
+        .select(col("doc_id"), col("term"),
+          (col("tf").cast("double") *
+            log(col("n_docs") / col("df").cast("double"))).as("tfidf"))
+        .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
+        .limit(20)
+    }),
+
+    /** q122: deterministic STRATIFIED sampling — per-stratum rates
+      * (view 1/16, click 1/4, rest 1/2) decided by the first hex char
+      * of md5(event_id): a pure MAP-SIDE filter (no shuffle, no
+      * sampling state, no seed) whose keep-decision any engine
+      * reproduces — `sampleBy` semantics with audit-grade determinism.
+      * At 100 TB this composes with partition pruning and costs one
+      * scan; rates tune per stratum without touching the plan shape. */
+    Query("q_sample_stratified",
       """SELECT event_id, event_type, user_id, value FROM (
            SELECT event_id, event_type, user_id, value,
              substr(md5(CAST(event_id AS VARCHAR)), 1, 1) AS hc
@@ -526,8 +364,32 @@ object Round6 {
          WHERE CASE WHEN event_type = 'view' THEN hc = '0'
                     WHEN event_type = 'click' THEN hc < '4'
                     ELSE hc < '8' END
-         ORDER BY event_id""",
-    "q_join_temporal" ->
+         ORDER BY event_id""")((s, d) => {
+      val hc = substring(md5(col("event_id").cast("string")), 1, 1)
+      events(s, d)
+        .select(col("event_id"), col("event_type"), col("user_id"),
+          col("value"), hc.as("hc"))
+        .filter(
+          when(col("event_type") === "view", col("hc") === "0")
+            .when(col("event_type") === "click", col("hc") < "4")
+            .otherwise(col("hc") < "8"))
+        .select(col("event_id"), col("event_type"), col("user_id"),
+          col("value"))
+        .orderBy("event_id")
+    }),
+
+    /** q124: TEMPORAL point-in-interval join — "which dimension
+      * version was active when this fact row occurred": every order
+      * probes its customer's SCD2 interval table (q112's output,
+      * shared via [[scd2Of]]) on valid_from <= date < valid_to. The
+      * intervals partition each customer's timeline, so every order
+      * matches EXACTLY ONE version — the q112-build → q124-use pair is
+      * the full dimension-maintenance story. Scale shape: the interval
+      * table is change-row-sized (dimension-scale), so it broadcasts;
+      * the fact side streams map-only through the equi-key + range
+      * predicate — no fact shuffle (the q78 range-join rule applied to
+      * versioned dimensions). */
+    Query("q_join_temporal",
       """WITH h AS (
            SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
              lag(o_orderstatus) OVER
@@ -552,8 +414,30 @@ object Round6 {
            ON s.c = o.o_custkey
            AND o.o_orderdate >= s.valid_from
            AND o.o_orderdate < s.valid_to
-         ORDER BY o.o_orderkey""",
-    "q_agg_covar" ->
+         ORDER BY o.o_orderkey""")((s, d) => {
+      val iv = scd2Of(s, d)
+        .select(col("o_custkey").as("c"), col("status"),
+          col("valid_from"), col("valid_to"))
+      val facts = orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
+      facts.join(broadcast(iv),
+          facts("o_custkey") === iv("c") &&
+            facts("o_orderdate") >= iv("valid_from") &&
+            facts("o_orderdate") < iv("valid_to"))
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+          col("status"), col("valid_from"))
+        .orderBy("o_orderkey")
+    }),
+
+    /** q127: population COVARIANCE per group with the D-rule numeric
+      * contract — the statistical-aggregate family (corr/covar) that
+      * FP-accumulating builtins can't put under a cross-engine oracle:
+      * Σx, Σy, Σxy as EXACT decimals (map-side partial agg, one
+      * shuffle), Σxy rescaled to 2 dp (half-up on both engines) so its
+      * unscaled value stays inside the 2^53 decimal→double boundary
+      * (Dec scaladoc), then ONE identical IEEE chain
+      * sxy/n − (sx/n)·(sy/n) on both engines. */
+    Query("q_agg_covar",
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
            CAST(round(sum(CAST(l_quantity AS DECIMAL(18,2))
                           * CAST(l_extendedprice AS DECIMAL(18,2))), 2)
@@ -562,8 +446,31 @@ object Round6 {
               / CAST(count(*) AS DOUBLE))
              * (CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
                 / CAST(count(*) AS DOUBLE)) AS covar_pop
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_agg_corr" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")((s, d) => {
+      import graft.engine.Dec._
+      val li = lineitem(s, d)
+      val g = li.groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n"),
+          sum(dec2(col("l_quantity"))).as("sx"),
+          sum(dec2(col("l_extendedprice"))).as("sy"),
+          round(sum(dec2(col("l_quantity")) * dec2(col("l_extendedprice"))), 2)
+            .as("sxy"))
+      g.select(col("l_returnflag"), col("n"),
+          (dbl(col("sxy")) / dbl(col("n")) -
+            (dbl(col("sx")) / dbl(col("n"))) * (dbl(col("sy")) / dbl(col("n"))))
+            .as("covar_pop"))
+        .orderBy("l_returnflag")
+    }),
+
+    /** q130: Pearson CORRELATION under the D-rule contract — the q127
+      * machinery extended with exact-decimal second moments. Price is
+      * shifted to y' = price·0.01 IN DECIMAL (exact; correlation is
+      * scale-invariant) and every sum is rounded to 2 dp so all
+      * unscaled values stay inside the 2^53 decimal→double boundary
+      * even at sf1+; the correlation formula then runs as ONE pinned
+      * IEEE tree — identical parenthesization on both engines, so the
+      * doubles match bitwise. */
+    Query("q_agg_corr",
       """WITH g AS (
            SELECT l_returnflag, count(*) AS n,
              round(sum(CAST(l_quantity AS DECIMAL(18,2))), 2) AS sx,
@@ -590,8 +497,37 @@ object Round6 {
               * sqrt(CAST(sy2 AS DOUBLE) / CAST(n AS DOUBLE)
                - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
                  * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))) AS corr
-         FROM g ORDER BY l_returnflag""",
-    "q_agg_stddev" ->
+         FROM g ORDER BY l_returnflag""")((s, d) => {
+      import graft.engine.Dec._
+      val li = lineitem(s, d)
+      val x = dec2(col("l_quantity"))
+      // y' = price·0.01, exact at 4 dp, narrowed back to DECIMAL(8,4)
+      // (max 1050.0000 fits) so y'·y' stays in the int64 decimal path
+      val y = (dec2(col("l_extendedprice")) * lit(0.01).cast("decimal(8,4)"))
+        .cast("decimal(8,4)")
+      val g = li.groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n"),
+          round(sum(x), 2).as("sx"),
+          round(sum(y), 2).as("sy"),
+          round(sum(x * y), 2).as("sxy"),
+          round(sum(x * x), 2).as("sx2"),
+          round(sum(y * y), 2).as("sy2"))
+      val nd = dbl(col("n"))
+      val mx = dbl(col("sx")) / nd
+      val my = dbl(col("sy")) / nd
+      val cov = dbl(col("sxy")) / nd - mx * my
+      val vx = dbl(col("sx2")) / nd - mx * mx
+      val vy = dbl(col("sy2")) / nd - my * my
+      g.select(col("l_returnflag"), col("n"),
+          (cov / (sqrt(vx) * sqrt(vy))).as("corr"))
+        .orderBy("l_returnflag")
+    }),
+
+    /** q131: per-group standard deviation (population) via the q127
+      * machinery — σ = √(sx2/n − (sx/n)²) over exact decimal sums,
+      * one pinned IEEE tree, bitwise-equal doubles (the FP-
+      * accumulating stddev builtins cannot cross-engine-match). */
+    Query("q_agg_stddev",
       """WITH g AS (
            SELECT l_returnflag, l_linestatus, count(*) AS n,
              round(sum(CAST(l_quantity AS DECIMAL(18,2))), 2) AS sx,
@@ -603,22 +539,71 @@ object Round6 {
            sqrt(CAST(sx2 AS DOUBLE) / CAST(n AS DOUBLE)
              - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
                * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))) AS stddev_pop
-         FROM g ORDER BY l_returnflag, l_linestatus""",
-    "q_text_editdist" ->
+         FROM g ORDER BY l_returnflag, l_linestatus""")((s, d) => {
+      import graft.engine.Dec._
+      val li = lineitem(s, d)
+      val x = dec2(col("l_quantity"))
+      val g = li.groupBy("l_returnflag", "l_linestatus")
+        .agg(count(lit(1)).as("n"),
+          round(sum(x), 2).as("sx"),
+          round(sum(x * x), 2).as("sx2"))
+      val nd = dbl(col("n"))
+      val mx = dbl(col("sx")) / nd
+      g.select(col("l_returnflag"), col("l_linestatus"), col("n"),
+          sqrt(dbl(col("sx2")) / nd - mx * mx).as("stddev_pop"))
+        .orderBy("l_returnflag", "l_linestatus")
+    }),
+
+    /** q132: EDIT-DISTANCE fuzzy matching — levenshtein between each
+      * document and its successor (doc_id+1) on the subset: the fuzzy
+      * string-match primitive (typo-level dedup, record linkage) that
+      * token/shingle measures miss. Exact integer on both engines;
+      * the pair space is the deterministic consecutive-id chain, so
+      * the join is a broadcast-able self-equi-join, not a cross
+      * product (at scale the candidate pairs come from q51's LSH
+      * buckets and this verify runs in-bucket). */
+    Query("q_text_editdist",
       """SELECT a.doc_id,
            CAST(levenshtein(a.text, b.text) AS BIGINT) AS dist,
            CAST(length(a.text) AS BIGINT) AS len_a,
            CAST(length(b.text) AS BIGINT) AS len_b
          FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 5
          WHERE a.doc_id % 5 = 0 AND b.doc_id % 5 = 0
-         ORDER BY a.doc_id""",
-    "q_fn_datetime2" ->
+         ORDER BY a.doc_id""")((s, d) => {
+      val docs = documents(s, d)
+        .filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text"))
+      val nxt = docs.select((col("doc_id") - 5).as("doc_id"),
+        col("text").as("text_b"))
+      docs.join(nxt, "doc_id")
+        .select(col("doc_id"),
+          levenshtein(col("text"), col("text_b")).cast("bigint").as("dist"),
+          length(col("text")).cast("bigint").as("len_a"),
+          length(col("text_b")).cast("bigint").as("len_b"))
+        .orderBy("doc_id")
+    }),
+
+    /** q128: calendar datetime surface beyond q36 — month arithmetic
+      * (add_months clamps to month end on both engines), last_day,
+      * ISO week number, and Monday-based weekday (Spark `weekday` ==
+      * DuckDB `isodow − 1`; the default dayofweek numberings disagree
+      * between engines, so the portable form is pinned here). */
+    Query("q_fn_datetime2",
       """SELECT o_orderkey,
            CAST(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH AS DATE) AS plus3m,
            last_day(CAST(o_orderdate AS DATE)) AS month_end,
            CAST(weekofyear(o_orderdate) AS BIGINT) AS iso_week,
            CAST(isodow(o_orderdate) - 1 AS BIGINT) AS wd_mon0,
            CAST(date_trunc('quarter', o_orderdate) AS DATE) AS q_start
-         FROM orders ORDER BY o_orderkey"""
+         FROM orders ORDER BY o_orderkey""")((s, d) => {
+      orders(s, d)
+        .select(col("o_orderkey"),
+          add_months(col("o_orderdate"), 3).cast("date").as("plus3m"),
+          last_day(col("o_orderdate")).as("month_end"),
+          weekofyear(col("o_orderdate")).cast("bigint").as("iso_week"),
+          weekday(col("o_orderdate")).cast("bigint").as("wd_mon0"),
+          date_trunc("quarter", col("o_orderdate")).cast("date").as("q_start"))
+        .orderBy("o_orderkey")
+    })
   )
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
 import graft.text.{Dedup, MinHash, Similarity}
@@ -496,7 +496,29 @@ object Round8 {
       .agg(count(lit(1)).as("shared_grams"))
       .filter(col("shared_grams") >= 3)
 
-  val defs: Map[String, Q] = Map(
+  /** q135: BATCH IVF ANN — the production many-probe shape
+    * ([[Similarity.ivfSearchBatch]]) promoted to a declared query:
+    * top-3 cosine neighbours for each of 5 probes over the
+    * √n-centroid IVF index, nprobe=3, probes chunk-broadcast
+    * against the cluster-pruned corpus (the corpus never
+    * re-shuffles per probe). oracle=none (approximate by
+    * construction); SimilaritySpec asserts recall vs q91's exact
+    * batch KNN and that nprobe=k reproduces it exactly. */
+  val annIvfBatch: Query =
+    Query("q_sim_ann_ivf_batch")((s, d) => {
+      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
+      // r18 opt: stored √n-centroid index via the session memo (the
+      // ivfIndex build is offline in the declared production shape)
+      val (indexed, cents) = Similarity.cachedIvfIndex(s, d, 0)
+      val probes = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
+      Similarity.ivfSearchBatch(s, indexed, cents, probes,
+          nprobe = 3, topK = 3, corpusCached = true)
+        .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+        .orderBy("probe_id", "rn")
+    })
+
+  val queries: Seq[Query] = Seq(
     /** q153: the COMPOSITE UPDATE delta [P §3: update = delete +
       * insert on the same key] against q92/q142's aggregated join
       * view, all three delta shapes in ONE signed batch: plain
@@ -511,7 +533,21 @@ object Round8 {
       * abelian-group property doing the work. Oracle = the full view
       * over the post-update facts: the composite delta must be
       * result-invisible. */
-    "q_incr_view_update" -> ((s, d) => {
+    Query("q_incr_view_update",
+      // q153's oracle is the full view over the POST-UPDATE facts: every
+      // l_orderkey % 10 == 3 base row carries its corrected price, the
+      // delta rows appear, nothing else moves.
+      """SELECT n_name,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CAST(CASE WHEN l_shipdate < TIMESTAMP '1999-01-01'
+                               AND l_orderkey % 10 = 3
+                              THEN l_extendedprice + 1.0
+                              ELSE l_extendedprice END
+                    AS DECIMAL(18,2))) AS DOUBLE) AS rev
+         FROM lineitem
+         JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation ON s_nationkey = n_nationkey
+         GROUP BY n_name ORDER BY n_name""")((s, d) => {
       val cut = lit("1999-01-01").cast("timestamp")
       val dim = supplier(s, d)
         .join(nation(s, d), col("s_nationkey") === col("n_nationkey"))
@@ -547,7 +583,7 @@ object Round8 {
       * pins the output to the library chain run directly and
       * `Round8Spec` proves warm-beats-cold + the fixed-point
       * invariant for the same signed delta. */
-    "q_iter_kmeans_incr" -> ((s, d) => {
+    Query("q_iter_kmeans_incr")((s, d) => {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val post = emb.filter(col("vec_id") % 10 =!= 1).persist()
       // the STORED centroid model (converged base-corpus centroids —
@@ -578,7 +614,26 @@ object Round8 {
       * from the stored state via [[tfidfApplyDelta]]. Oracle = q95's
       * full TF-IDF over the post-delta corpus (doc_id % 10 <> 1):
       * the signed merge must be result-invisible. */
-    "q_incr_tfidf_delete" -> ((s, d) => {
+    Query("q_incr_tfidf_delete",
+      // q154: oracle=none (FP-order-sensitive centroid means, like q44).
+      // q133's oracle is q95's full TF-IDF over the POST-DELTA corpus:
+      // signed incremental maintenance must be result-invisible.
+      """WITH toks AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS term
+           FROM documents WHERE doc_id % 10 <> 1
+         ), t AS (
+           SELECT doc_id, term, count(*) AS tf FROM toks
+           WHERE length(term) > 0 GROUP BY doc_id, term
+         ), d AS (
+           SELECT term, count(*) AS df FROM t GROUP BY term
+         ), n AS (
+           SELECT count(*) AS nd FROM documents WHERE doc_id % 10 <> 1
+         )
+         SELECT doc_id, term,
+           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
+             AS tfidf
+         FROM t JOIN d USING (term), n
+         ORDER BY tfidf DESC, doc_id, term LIMIT 20""")((s, d) => {
       val docs = documents(s, d)
       def tfOf(dd: DataFrame) = dd
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
@@ -605,7 +660,11 @@ object Round8 {
       * decrement for groups whose min survived, group-level recompute
       * only for hashes whose min was deleted. Oracle = q49's full
       * dedup over the post-delta corpus. */
-    "q_incr_dedup_delete" -> ((s, d) => {
+    Query("q_incr_dedup_delete",
+      // q134's oracle is q49's full dedup over the POST-DELTA corpus.
+      """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
+         FROM documents WHERE doc_id % 10 <> 1
+         GROUP BY md5(text) ORDER BY h""")((s, d) => {
       val docs = documents(s, d)
       val baseIndex = docs.filter(col("doc_id") % 10 =!= 0)
         .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
@@ -620,26 +679,7 @@ object Round8 {
         .orderBy("h")
     }),
 
-    /** q135: BATCH IVF ANN — the production many-probe shape
-      * ([[Similarity.ivfSearchBatch]]) promoted to a declared query:
-      * top-3 cosine neighbours for each of 5 probes over the
-      * √n-centroid IVF index, nprobe=3, probes chunk-broadcast
-      * against the cluster-pruned corpus (the corpus never
-      * re-shuffles per probe). oracle=none (approximate by
-      * construction); SimilaritySpec asserts recall vs q91's exact
-      * batch KNN and that nprobe=k reproduces it exactly. */
-    "q_sim_ann_ivf_batch" -> ((s, d) => {
-      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      // r18 opt: stored √n-centroid index via the session memo (the
-      // ivfIndex build is offline in the declared production shape)
-      val (indexed, cents) = Similarity.cachedIvfIndex(s, d, 0)
-      val probes = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
-      Similarity.ivfSearchBatch(s, indexed, cents, probes,
-          nprobe = 3, topK = 3, corpusCached = true)
-        .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
-        .orderBy("probe_id", "rn")
-    }),
+    annIvfBatch,
 
     /** q149: the CLEANING PIPELINE maintained under a SIGNED delta
       * [P §3] — the end-to-end "keep a cleaned 100 TB corpus current"
@@ -655,7 +695,41 @@ object Round8 {
       * docs is a provable no-op). Oracle = q117's full pipeline SQL
       * over the post-delta corpus: the composition must be
       * result-invisible. */
-    "q_incr_pipeline_clean_delete" -> ((s, d) => {
+    Query("q_incr_pipeline_clean_delete",
+      // q149's oracle is q117's full pipeline SQL over the POST-DELTA
+      // corpus: the composed signed maintenance (doc-local passthrough
+      // + dedupApplyDelta canon state) must be result-invisible.
+      """WITH t AS (
+           SELECT doc_id, text,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('the','a'))) AS BIGINT) AS n_stop,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('join','filter','agg'))) AS BIGINT) AS s1,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('window','batch','stream'))) AS BIGINT) AS s2,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('hash','sort','merge'))) AS BIGINT) AS s3
+           FROM documents WHERE doc_id % 10 <> 1
+         ), kept AS (
+           SELECT doc_id, text, n_tokens,
+             CASE WHEN s1 >= s2 AND s1 >= s3 THEN 'L1'
+                  WHEN s2 >= s3 THEN 'L2' ELSE 'L3' END AS pred
+           FROM t
+           WHERE n_tokens BETWEEN 20 AND 90
+             AND CAST(n_stop AS DOUBLE) / n_tokens < 0.2
+         ), normed AS (
+           SELECT doc_id, pred, n_tokens,
+             md5(regexp_replace(lower(text), ' +', ' ', 'g')) AS h
+           FROM kept
+         ), canon AS (
+           SELECT h, min(doc_id) AS keep_id,
+             CAST(count(*) AS BIGINT) AS n_dups
+           FROM normed GROUP BY h
+         )
+         SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
+         FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
+         ORDER BY n.doc_id""")((s, d) => {
       val docs = documents(s, d)
       // Stored doc-local state, session-memoized (r18, the bandedIns
       // precedent): the cleaned/scored/normed relations are
@@ -701,7 +775,26 @@ object Round8 {
       * never shuffles for the join, and the only exchange is the
       * per-pair count. At 100 TB this is the production shape: the
       * eval set is always tiny next to the corpus. */
-    "q_text_contamination" -> ((s, d) => {
+    Query("q_text_contamination",
+      // q148: md5 trigram fingerprints agree across engines (the q64
+      // contract); DISTINCT per side, integer overlap counts.
+      """WITH g AS (
+           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
+                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
+                             toks[i + 2]))) AS g
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                 FROM documents) t
+         ), dg AS (
+           SELECT DISTINCT doc_id, g FROM g
+         ), tr AS (
+           SELECT doc_id AS train_id, g FROM dg WHERE doc_id % 97 <> 0
+         ), ev AS (
+           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
+         )
+         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
+         FROM tr JOIN ev USING (g)
+         GROUP BY train_id, eval_id HAVING count(*) >= 3
+         ORDER BY train_id, eval_id""")((s, d) => {
       val doc = documents(s, d)
       val train = contamGrams(doc.filter(col("doc_id") % 97 =!= 0),
         "train_id")
@@ -723,7 +816,29 @@ object Round8 {
       * delta-sized, the training corpus never re-tokenizes. Oracle =
       * q148's full recompute over the post-delta corpus: maintenance
       * must be result-invisible. */
-    "q_incr_contamination" -> ((s, d) => {
+    Query("q_incr_contamination",
+      /** q276 oracle: q148's full recompute over the POST-delta
+        * training corpus (%10 <> 1 — deletes gone, inserts present);
+        * the eval side stays the fixed %97 artifact. Maintenance must
+        * be result-invisible. */
+      """WITH g AS (
+           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
+                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
+                             toks[i + 2]))) AS g
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                 FROM documents) t
+         ), dg AS (
+           SELECT DISTINCT doc_id, g FROM g
+         ), tr AS (
+           SELECT doc_id AS train_id, g FROM dg
+           WHERE doc_id % 97 <> 0 AND doc_id % 10 <> 1
+         ), ev AS (
+           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
+         )
+         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
+         FROM tr JOIN ev USING (g)
+         GROUP BY train_id, eval_id HAVING count(*) >= 3
+         ORDER BY train_id, eval_id""")((s, d) => {
       val doc = documents(s, d)
       val ev = cachedEvalGrams(s, d)
       val baseState = Memos.frame(s, d, "lsh/contamBase") {
@@ -757,7 +872,21 @@ object Round8 {
       * source-keyed window sort — embarrassingly parallel across
       * sources at 100 TB, never a global sequential fold. Integer
       * arithmetic end to end. */
-    "q_pack_sequences" -> ((s, d) => {
+    Query("q_pack_sequences",
+      // q146: integer running-sum packing — window sum, integer
+      // div/mod, no FP anywhere.
+      """SELECT doc_id, source,
+           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
+           CAST(coalesce(sum(len(string_split(text, ' '))) OVER
+               (PARTITION BY source ORDER BY doc_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             // 256 AS BIGINT) AS pack_id,
+           CAST(coalesce(sum(len(string_split(text, ' '))) OVER
+               (PARTITION BY source ORDER BY doc_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             % 256 AS BIGINT) AS pack_offset
+         FROM documents
+         ORDER BY source, doc_id""")((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy("doc_id")
       documents(s, d)
@@ -784,7 +913,23 @@ object Round8 {
       * of two exact BIGINTs for the ratio, identical on both engines
       * (D-rule). Docs with < 2 tokens have no bigrams and drop out,
       * matching the oracle's unnest semantics. */
-    "q_text_repetition" -> ((s, d) => {
+    Query("q_text_repetition",
+      // q145: exact integer bigram counts; the ratio is ONE IEEE
+      // division of two BIGINTs, identical on both engines.
+      """WITH b AS (
+           SELECT doc_id, unnest(list_transform(range(1, len(toks)),
+                    i -> toks[i] || ' ' || toks[i + 1])) AS bigram
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                 FROM documents) t
+         ), c AS (
+           SELECT doc_id, bigram, count(*) AS cnt
+           FROM b GROUP BY doc_id, bigram
+         )
+         SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
+           CAST(count(*) AS BIGINT) AS n_distinct,
+           CAST(max(cnt) AS BIGINT) AS max_rep,
+           CAST(max(cnt) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE) AS rep_ratio
+         FROM c GROUP BY doc_id ORDER BY doc_id""")((s, d) => {
       val b = documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .filter(size(col("toks")) >= 2)
@@ -815,7 +960,7 @@ object Round8 {
       * oracle=none (approximate family); Round8Spec proves the search
       * output bit-equal to q135's pipeline run over a from-scratch
       * assignment of the post-delta corpus at the same centroids. */
-    "q_sim_ann_ivf_incr" -> ((s, d) => {
+    Query("q_sim_ann_ivf_incr")((s, d) => {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val base = emb.filter(col("vec_id") % 10 =!= 0)
       val (indexedOld, cents) = Similarity.ivfIndex(s, base)
@@ -852,7 +997,7 @@ object Round8 {
       * with the exact collapse is ≥ 90% (measured: 98%).
       * Production termination for >5-hop chains:
       * [[graft.iter.IterQueries.minPropagateUntilStable]]. */
-    "q_dedup_groups_lsh" -> ((s, d) =>
+    Query("q_dedup_groups_lsh")((s, d) =>
       // lshCollapse's plan is re-executable (r17: the collapse is a
       // broadcast join over driver-computed labels, no trailing
       // checkpoint) — orderBy's range-partition sampling plus the
@@ -880,7 +1025,19 @@ object Round8 {
       * partially — at 100 TB the base branch is a materialized-view
       * read and the signed branches are delta-sized. Oracle = the
       * full view over the post-delta fact rows. */
-    "q_incr_join_view_delete" -> ((s, d) => {
+    Query("q_incr_join_view_delete",
+      // q142's oracle is q92's full-view SQL over the POST-DELTA fact
+      // rows: the signed (negative-multiplicity) merge must be
+      // result-invisible.
+      """SELECT n_name,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
+         FROM lineitem
+         JOIN supplier ON l_suppkey = s_suppkey
+         JOIN nation ON s_nationkey = n_nationkey
+         WHERE NOT (l_shipdate < TIMESTAMP '1999-01-01'
+                    AND l_orderkey % 10 = 1)
+         GROUP BY n_name ORDER BY n_name""")((s, d) => {
       val cut = lit("1999-01-01").cast("timestamp")
       val dim = supplier(s, d)
         .join(nation(s, d), col("s_nationkey") === col("n_nationkey"))
@@ -911,7 +1068,36 @@ object Round8 {
       * group re-run is the only rule consistent with the
       * change-compaction semantics. Oracle = q112's full SCD2 SQL
       * over the post-delta orders: result-invisible. */
-    "q_incr_scd2_delete" -> ((s, d) => {
+    Query("q_incr_scd2_delete",
+      // q143's oracle is q112's full SCD2 SQL over the POST-DELTA
+      // orders: the signed custkey-level recompute must be
+      // result-invisible.
+      """WITH post AS (
+           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
+           FROM orders
+           WHERE NOT (o_orderdate < TIMESTAMP '1998-01-01'
+                      AND o_orderkey % 10 = 1)
+         ), h AS (
+           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
+             lag(o_orderstatus) OVER
+               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+               AS prev_status
+           FROM post
+         ), chg AS (
+           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
+           FROM h
+           WHERE prev_status IS NULL OR prev_status <> o_orderstatus
+         )
+         SELECT o_custkey, o_orderstatus AS status,
+           o_orderdate AS valid_from, o_orderkey,
+           coalesce(lead(o_orderdate) OVER
+               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+             TIMESTAMP '2100-01-01 00:00:00') AS valid_to,
+           CAST(CASE WHEN lead(o_orderdate) OVER
+               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+               IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
+         FROM chg
+         ORDER BY o_custkey, valid_from, o_orderkey""")((s, d) => {
       val cut = lit("1998-01-01").cast("timestamp")
       val o = orders(s, d)
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
@@ -947,7 +1133,36 @@ object Round8 {
       * consistent with the gap semantics. Oracle = q111's full
       * sessionize SQL over the post-delta event log: signed
       * maintenance must be result-invisible. */
-    "q_incr_sessionize_delete" -> ((s, d) => {
+    Query("q_incr_sessionize_delete",
+      // q140's oracle is q111's full sessionize SQL over the POST-DELTA
+      // event log (base events with event_id % 10 == 1 retracted,
+      // cut-onward events inserted): the signed group-level recompute
+      // must be result-invisible. 1800000000 = the 30-min gap in µs.
+      """WITH post AS (
+           SELECT user_id, event_id, ts FROM events
+           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
+         ), e AS (
+           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
+             lag(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           FROM post
+         ), flagged AS (
+           SELECT user_id, event_id, ts, us,
+             CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
+                  THEN 1 ELSE 0 END AS new_s
+           FROM e
+         ), sess AS (
+           SELECT user_id, event_id, ts, us,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+           FROM flagged
+         )
+         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+           CAST(count(*) AS BIGINT) AS n_events,
+           min(ts) AS session_start,
+           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
+         FROM sess GROUP BY user_id, session_idx
+         ORDER BY user_id, session_idx""")((s, d) => {
       val cut = lit("2024-01-20").cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -985,7 +1200,7 @@ object Round8 {
       * Round8Spec proves the result row-identical to the batch
       * collapse over the post-delta corpus — signed maintenance must
       * be result-invisible. */
-    "q_dedup_groups_lsh_incr" -> ((s, d) => {
+    Query("q_dedup_groups_lsh_incr")((s, d) => {
       val docsPost = documents(s, d).filter(col("doc_id") % 10 =!= 1)
       val pairs = lshPairsIncr(s, d)
       // the maintained pair RELATION re-runs per invocation (only
@@ -996,233 +1211,6 @@ object Round8 {
         knownPairCount = Some(Memos.value(s, d,
           "lsh/lshPairCountIncr")(pairs.count()))).orderBy("doc_id")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    // q153's oracle is the full view over the POST-UPDATE facts: every
-    // l_orderkey % 10 == 3 base row carries its corrected price, the
-    // delta rows appear, nothing else moves.
-    "q_incr_view_update" ->
-      """SELECT n_name,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(CASE WHEN l_shipdate < TIMESTAMP '1999-01-01'
-                               AND l_orderkey % 10 = 3
-                              THEN l_extendedprice + 1.0
-                              ELSE l_extendedprice END
-                    AS DECIMAL(18,2))) AS DOUBLE) AS rev
-         FROM lineitem
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-    // q154: oracle=none (FP-order-sensitive centroid means, like q44).
-
-    // q133's oracle is q95's full TF-IDF over the POST-DELTA corpus:
-    // signed incremental maintenance must be result-invisible.
-    "q_incr_tfidf_delete" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents WHERE doc_id % 10 <> 1
-         ), t AS (
-           SELECT doc_id, term, count(*) AS tf FROM toks
-           WHERE length(term) > 0 GROUP BY doc_id, term
-         ), d AS (
-           SELECT term, count(*) AS df FROM t GROUP BY term
-         ), n AS (
-           SELECT count(*) AS nd FROM documents WHERE doc_id % 10 <> 1
-         )
-         SELECT doc_id, term,
-           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
-             AS tfidf
-         FROM t JOIN d USING (term), n
-         ORDER BY tfidf DESC, doc_id, term LIMIT 20""",
-    // q134's oracle is q49's full dedup over the POST-DELTA corpus.
-    "q_incr_dedup_delete" ->
-      """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
-         FROM documents WHERE doc_id % 10 <> 1
-         GROUP BY md5(text) ORDER BY h""",
-    // q149's oracle is q117's full pipeline SQL over the POST-DELTA
-    // corpus: the composed signed maintenance (doc-local passthrough
-    // + dedupApplyDelta canon state) must be result-invisible.
-    "q_incr_pipeline_clean_delete" ->
-      """WITH t AS (
-           SELECT doc_id, text,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('the','a'))) AS BIGINT) AS n_stop,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('join','filter','agg'))) AS BIGINT) AS s1,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('window','batch','stream'))) AS BIGINT) AS s2,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('hash','sort','merge'))) AS BIGINT) AS s3
-           FROM documents WHERE doc_id % 10 <> 1
-         ), kept AS (
-           SELECT doc_id, text, n_tokens,
-             CASE WHEN s1 >= s2 AND s1 >= s3 THEN 'L1'
-                  WHEN s2 >= s3 THEN 'L2' ELSE 'L3' END AS pred
-           FROM t
-           WHERE n_tokens BETWEEN 20 AND 90
-             AND CAST(n_stop AS DOUBLE) / n_tokens < 0.2
-         ), normed AS (
-           SELECT doc_id, pred, n_tokens,
-             md5(regexp_replace(lower(text), ' +', ' ', 'g')) AS h
-           FROM kept
-         ), canon AS (
-           SELECT h, min(doc_id) AS keep_id,
-             CAST(count(*) AS BIGINT) AS n_dups
-           FROM normed GROUP BY h
-         )
-         SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
-         FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
-         ORDER BY n.doc_id""",
-    // q148: md5 trigram fingerprints agree across engines (the q64
-    // contract); DISTINCT per side, integer overlap counts.
-    "q_text_contamination" ->
-      """WITH g AS (
-           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
-                             toks[i + 2]))) AS g
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents) t
-         ), dg AS (
-           SELECT DISTINCT doc_id, g FROM g
-         ), tr AS (
-           SELECT doc_id AS train_id, g FROM dg WHERE doc_id % 97 <> 0
-         ), ev AS (
-           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
-         )
-         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
-         FROM tr JOIN ev USING (g)
-         GROUP BY train_id, eval_id HAVING count(*) >= 3
-         ORDER BY train_id, eval_id""",
-    /** q276 oracle: q148's full recompute over the POST-delta
-      * training corpus (%10 <> 1 — deletes gone, inserts present);
-      * the eval side stays the fixed %97 artifact. Maintenance must
-      * be result-invisible. */
-    "q_incr_contamination" ->
-      """WITH g AS (
-           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
-                             toks[i + 2]))) AS g
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents) t
-         ), dg AS (
-           SELECT DISTINCT doc_id, g FROM g
-         ), tr AS (
-           SELECT doc_id AS train_id, g FROM dg
-           WHERE doc_id % 97 <> 0 AND doc_id % 10 <> 1
-         ), ev AS (
-           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
-         )
-         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
-         FROM tr JOIN ev USING (g)
-         GROUP BY train_id, eval_id HAVING count(*) >= 3
-         ORDER BY train_id, eval_id""",
-    // q146: integer running-sum packing — window sum, integer
-    // div/mod, no FP anywhere.
-    "q_pack_sequences" ->
-      """SELECT doc_id, source,
-           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
-           CAST(coalesce(sum(len(string_split(text, ' '))) OVER
-               (PARTITION BY source ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             // 256 AS BIGINT) AS pack_id,
-           CAST(coalesce(sum(len(string_split(text, ' '))) OVER
-               (PARTITION BY source ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             % 256 AS BIGINT) AS pack_offset
-         FROM documents
-         ORDER BY source, doc_id""",
-    // q145: exact integer bigram counts; the ratio is ONE IEEE
-    // division of two BIGINTs, identical on both engines.
-    "q_text_repetition" ->
-      """WITH b AS (
-           SELECT doc_id, unnest(list_transform(range(1, len(toks)),
-                    i -> toks[i] || ' ' || toks[i + 1])) AS bigram
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents) t
-         ), c AS (
-           SELECT doc_id, bigram, count(*) AS cnt
-           FROM b GROUP BY doc_id, bigram
-         )
-         SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-           CAST(count(*) AS BIGINT) AS n_distinct,
-           CAST(max(cnt) AS BIGINT) AS max_rep,
-           CAST(max(cnt) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE) AS rep_ratio
-         FROM c GROUP BY doc_id ORDER BY doc_id""",
-    // q142's oracle is q92's full-view SQL over the POST-DELTA fact
-    // rows: the signed (negative-multiplicity) merge must be
-    // result-invisible.
-    "q_incr_join_view_delete" ->
-      """SELECT n_name,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-         FROM lineitem
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         WHERE NOT (l_shipdate < TIMESTAMP '1999-01-01'
-                    AND l_orderkey % 10 = 1)
-         GROUP BY n_name ORDER BY n_name""",
-    // q143's oracle is q112's full SCD2 SQL over the POST-DELTA
-    // orders: the signed custkey-level recompute must be
-    // result-invisible.
-    "q_incr_scd2_delete" ->
-      """WITH post AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
-           FROM orders
-           WHERE NOT (o_orderdate < TIMESTAMP '1998-01-01'
-                      AND o_orderkey % 10 = 1)
-         ), h AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
-             lag(o_orderstatus) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               AS prev_status
-           FROM post
-         ), chg AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
-           FROM h
-           WHERE prev_status IS NULL OR prev_status <> o_orderstatus
-         )
-         SELECT o_custkey, o_orderstatus AS status,
-           o_orderdate AS valid_from, o_orderkey,
-           coalesce(lead(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-             TIMESTAMP '2100-01-01 00:00:00') AS valid_to,
-           CAST(CASE WHEN lead(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-         FROM chg
-         ORDER BY o_custkey, valid_from, o_orderkey""",
-    // q140's oracle is q111's full sessionize SQL over the POST-DELTA
-    // event log (base events with event_id % 10 == 1 retracted,
-    // cut-onward events inserted): the signed group-level recompute
-    // must be result-invisible. 1800000000 = the 30-min gap in µs.
-    "q_incr_sessionize_delete" ->
-      """WITH post AS (
-           SELECT user_id, event_id, ts FROM events
-           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
-         ), e AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM post
-         ), flagged AS (
-           SELECT user_id, event_id, ts, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-           FROM e
-         ), sess AS (
-           SELECT user_id, event_id, ts, us,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged
-         )
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS session_start,
-           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
-         FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""",
     // q135, q136, q139: oracle=none (approximate / sketch-sourced) —
     // see SimilaritySpec and Round8Spec (q139's spec pins it
     // row-identical to the batch q136 collapse on the post corpus).

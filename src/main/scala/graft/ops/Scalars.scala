@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -11,9 +12,18 @@ import graft.engine.Dec._
   * only the results must match, not the SQL text. */
 object Scalars {
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q35: string functions over part. */
-    "q_fn_string" -> ((s, d) => {
+    Query("q_fn_string",
+      """SELECT p_partkey,
+         upper(p_type) AS up, lower(p_brand) AS lo,
+         trim('  ' || p_name || '  ') AS trimmed,
+         substr(p_name, 1, 5) AS pre5,
+         CAST(length(p_name) AS BIGINT) AS len,
+         p_brand || '/' || p_type AS cat,
+         replace(p_type, ' ', '_') AS rep,
+         CAST(len(string_split(p_type, ' ')) AS BIGINT) AS nwords
+         FROM part ORDER BY p_partkey""")((s, d) => {
       part(s, d)
         .select(col("p_partkey"),
           upper(col("p_type")).as("up"),
@@ -28,7 +38,16 @@ object Scalars {
     }),
 
     /** q36: datetime functions over orders. */
-    "q_fn_datetime" -> ((s, d) => {
+    Query("q_fn_datetime",
+      """SELECT o_orderkey,
+         CAST(year(o_orderdate) AS BIGINT) AS yr,
+         CAST(month(o_orderdate) AS BIGINT) AS mo,
+         CAST(day(o_orderdate) AS BIGINT) AS dy,
+         CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
+         date_trunc('month', o_orderdate) AS mstart,
+         CAST(CAST(o_orderdate AS DATE) + INTERVAL 7 DAY AS TIMESTAMP) AS plus7,
+         CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since
+         FROM orders ORDER BY o_orderkey""")((s, d) => {
       orders(s, d)
         .select(col("o_orderkey"),
           year(col("o_orderdate")).cast("bigint").as("yr"),
@@ -45,7 +64,17 @@ object Scalars {
     /** q37: math functions. sqrt is IEEE-correctly-rounded (identical
       * across engines); ln is exercised and oracle-checked on this
       * fixed dataset. */
-    "q_fn_math" -> ((s, d) => {
+    Query("q_fn_math",
+      """SELECT l_orderkey, l_linenumber,
+         abs(l_quantity - 25) AS a,
+         CAST(floor(l_extendedprice) AS BIGINT) AS fl,
+         CAST(ceil(l_extendedprice) AS BIGINT) AS ce,
+         CAST(l_linenumber % 3 AS BIGINT) AS md,
+         pow(2, l_linenumber) AS pw,
+         sqrt(l_extendedprice) AS sq,
+         greatest(l_quantity, l_discount * 100) AS gr,
+         least(l_quantity, l_tax * 100) AS le
+         FROM lineitem ORDER BY l_orderkey, l_linenumber""")((s, d) => {
       lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           abs(col("l_quantity") - 25).as("a"),
@@ -62,7 +91,15 @@ object Scalars {
     /** q38: array functions over the 64-dim embedding column. The
       * element sum is an explicit left-assoc double chain — identical
       * op order on both engines. */
-    "q_fn_array" -> ((s, d) => {
+    Query("q_fn_array",
+      """SELECT vec_id, CAST(label AS BIGINT) AS label,
+         CAST(len(embedding) AS BIGINT) AS n,
+         CAST(embedding[1] AS DOUBLE) AS e1,
+         CAST(embedding[1] AS DOUBLE) + CAST(embedding[2] AS DOUBLE)
+           + CAST(embedding[3] AS DOUBLE) + CAST(embedding[4] AS DOUBLE) AS s4,
+         CAST(list_aggregate(embedding, 'max') AS DOUBLE) AS mx,
+         CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS mn
+         FROM embeddings ORDER BY vec_id""")((s, d) => {
       val e = (i: Int) => element_at(col("embedding"), i).cast("double")
       embeddings(s, d)
         .select(col("vec_id"), col("label").cast("bigint").as("label"),
@@ -75,7 +112,10 @@ object Scalars {
     }),
 
     /** q39: JSON extraction from events.props. */
-    "q_fn_json" -> ((s, d) => {
+    Query("q_fn_json",
+      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+         count(*) AS n
+         FROM events GROUP BY k ORDER BY k""")((s, d) => {
       events(s, d)
         .select(get_json_object(col("props"), "$.k").cast("bigint").as("k"))
         .groupBy("k").agg(count(lit(1)).as("n"))
@@ -84,7 +124,9 @@ object Scalars {
 
     /** q40: struct/map build + field read-back (multimodal columns
       * mandate [N]) — output flattened scalars. */
-    "q_fn_struct_map" -> ((s, d) => {
+    Query("q_fn_struct_map",
+      """SELECT doc_id, lang AS slang, n_chars AS sn, source AS msrc
+         FROM documents ORDER BY doc_id""")((s, d) => {
       documents(s, d)
         .withColumn("s", struct(col("lang").as("lang"), col("n_chars").as("n")))
         .withColumn("m", map(lit("src"), col("source")))
@@ -94,55 +136,5 @@ object Scalars {
           element_at(col("m"), "src").as("msrc"))
         .orderBy("doc_id")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_fn_string" ->
-      """SELECT p_partkey,
-         upper(p_type) AS up, lower(p_brand) AS lo,
-         trim('  ' || p_name || '  ') AS trimmed,
-         substr(p_name, 1, 5) AS pre5,
-         CAST(length(p_name) AS BIGINT) AS len,
-         p_brand || '/' || p_type AS cat,
-         replace(p_type, ' ', '_') AS rep,
-         CAST(len(string_split(p_type, ' ')) AS BIGINT) AS nwords
-         FROM part ORDER BY p_partkey""",
-    "q_fn_datetime" ->
-      """SELECT o_orderkey,
-         CAST(year(o_orderdate) AS BIGINT) AS yr,
-         CAST(month(o_orderdate) AS BIGINT) AS mo,
-         CAST(day(o_orderdate) AS BIGINT) AS dy,
-         CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-         date_trunc('month', o_orderdate) AS mstart,
-         CAST(CAST(o_orderdate AS DATE) + INTERVAL 7 DAY AS TIMESTAMP) AS plus7,
-         CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since
-         FROM orders ORDER BY o_orderkey""",
-    "q_fn_math" ->
-      """SELECT l_orderkey, l_linenumber,
-         abs(l_quantity - 25) AS a,
-         CAST(floor(l_extendedprice) AS BIGINT) AS fl,
-         CAST(ceil(l_extendedprice) AS BIGINT) AS ce,
-         CAST(l_linenumber % 3 AS BIGINT) AS md,
-         pow(2, l_linenumber) AS pw,
-         sqrt(l_extendedprice) AS sq,
-         greatest(l_quantity, l_discount * 100) AS gr,
-         least(l_quantity, l_tax * 100) AS le
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_fn_array" ->
-      """SELECT vec_id, CAST(label AS BIGINT) AS label,
-         CAST(len(embedding) AS BIGINT) AS n,
-         CAST(embedding[1] AS DOUBLE) AS e1,
-         CAST(embedding[1] AS DOUBLE) + CAST(embedding[2] AS DOUBLE)
-           + CAST(embedding[3] AS DOUBLE) + CAST(embedding[4] AS DOUBLE) AS s4,
-         CAST(list_aggregate(embedding, 'max') AS DOUBLE) AS mx,
-         CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS mn
-         FROM embeddings ORDER BY vec_id""",
-    "q_fn_json" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-         count(*) AS n
-         FROM events GROUP BY k ORDER BY k""",
-    "q_fn_struct_map" ->
-      """SELECT doc_id, lang AS slang, n_chars AS sn, source AS msrc
-         FROM documents ORDER BY doc_id"""
   )
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 
 /** §2 group A — scans / sources. Declarative scans so Catalyst pushes
@@ -10,9 +11,11 @@ import graft.engine.Tables._
   * whole table. */
 object Scans {
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q1: projection-only scan — parquet reads just the 3 columns. */
-    "q_scan_project" -> ((s, d) => {
+    Query("q_scan_project",
+      """SELECT l_orderkey, l_linenumber, l_extendedprice AS price
+         FROM lineitem ORDER BY l_orderkey, l_linenumber""")((s, d) => {
       lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice").as("price"))
@@ -20,7 +23,10 @@ object Scans {
     }),
 
     /** q2: predicate reaches the parquet row-group filter. */
-    "q_scan_pushdown" -> ((s, d) => {
+    Query("q_scan_pushdown",
+      """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity AS qty
+         FROM lineitem WHERE l_shipdate < TIMESTAMP '1996-07-01'
+         ORDER BY l_orderkey, l_linenumber""")((s, d) => {
       lineitem(s, d)
         .filter(col("l_shipdate") < lit("1996-07-01").cast("timestamp"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"),
@@ -30,7 +36,13 @@ object Scans {
 
     /** q3: multi-source union of per-table counts (count-star uses
       * parquet footer metadata — no data read). */
-    "q_source_all_tables" -> ((s, d) => {
+    Query("q_source_all_tables",
+      ("SELECT * FROM (" +
+        Seq("region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings")
+          .map(n => s"SELECT '$n' AS tbl, count(*) AS n FROM $n")
+          .mkString(" UNION ALL ") +
+        ") t ORDER BY tbl"))((s, d) => {
       // r18 A/B NOTE: union-then-aggregate (one exchange instead of
       // one per table) was tried and REVERTED — it cut warm jobs
       // 21 -> 13 but RAISED the wall 0.63 -> 0.94 s: the single wide
@@ -43,22 +55,5 @@ object Scans {
           .select(lit(n).as("tbl"), col("n"))
       }.reduce(_ unionByName _).orderBy("tbl")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_scan_project" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice AS price
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_scan_pushdown" ->
-      """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity AS qty
-         FROM lineitem WHERE l_shipdate < TIMESTAMP '1996-07-01'
-         ORDER BY l_orderkey, l_linenumber""",
-    "q_source_all_tables" ->
-      ("SELECT * FROM (" +
-        Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-          .map(n => s"SELECT '$n' AS tbl, count(*) AS n FROM $n")
-          .mkString(" UNION ALL ") +
-        ") t ORDER BY tbl")
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Tables._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 
 /** The COST-BASED SELECTOR surface (SURVEY §2 rows 159-161, moved
   * here from the former Round11 module in the r13 consolidation —
@@ -14,7 +14,7 @@ import graft.engine.Memos
   * driver-visible number. */
 object Selectors {
 
-  val defs: Map[String, Q] = Map(
+  val queries: Seq[Query] = Seq(
     /** q159: RECALL OF THE APPROXIMATE FAMILY AS NUMBERS IN THE DUMP
       * (VERDICT r10 ask 4) — the sketch rows are oracle=none by
       * nature, so their quality lived only in spec booleans; this row
@@ -31,7 +31,7 @@ object Selectors {
       * is session-memoized: it is a deterministic AUDIT of stored
       * index quality (production runs it per index build, not per
       * query), so repeated invocations serve the measured numbers. */
-    "q_quality_recall" -> ((s, d) => Memos.frame(s, d,
+    Query("q_quality_recall")((s, d) => Memos.frame(s, d,
         "selectors/qualityRecall") {
       import scala.jdk.CollectionConverters._
       def recallRow(metric: String, exact: DataFrame,
@@ -43,14 +43,14 @@ object Selectors {
       }
       val rows = Seq(
         recallRow("minhash_pair_recall",
-          graft.text.Dedup.defs("q_sim_jaccard_pairs")(s, d)
+          graft.text.Dedup.jaccardPairs.plan(s, d)
             .select("doc_a", "doc_b"),
-          graft.text.MinHash.defs("q_dedup_minhash")(s, d)
+          graft.text.MinHash.minhashPairs.plan(s, d)
             .select("doc_a", "doc_b"),
           Seq("doc_a", "doc_b")),
         recallRow("ivf_recall_at_3",
-          Round3.defs("q_sim_knn_batch")(s, d).select("probe_id", "vec_id"),
-          Round8.defs("q_sim_ann_ivf_batch")(s, d)
+          Round3.knnBatch.plan(s, d).select("probe_id", "vec_id"),
+          Round8.annIvfBatch.plan(s, d)
             .select("probe_id", "vec_id"),
           Seq("probe_id", "vec_id")))
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -88,38 +88,10 @@ object Selectors {
       * does not re-cost and re-verify the same immutable corpus per
       * query. The first invocation pays the costing job + the chosen
       * branch end-to-end. */
-    "q_dedup_auto" -> ((s, d) => Memos.frame(s, d,
-        "selectors/dedupAuto") {
-      val (plan, pairs) =
-        graft.text.Dedup.autoPairs(s, graft.text.Dedup.subsetTokens(s, d))
-      pairs.withColumn("plan", lit(plan)).orderBy("doc_a", "doc_b")
-        .localCheckpoint()
-    }),
-
-    /** q161: the cost-based KNN selector as a DECLARED query —
-      * [[graft.text.Similarity.autoKnn]] over the full embeddings
-      * corpus with the q91/q135 probe set at the production cap. At
-      * every oracle SF the |probes|×|corpus| volume sits orders of
-      * magnitude under the cap (Round11Spec pins a 10× margin), so
-      * the selector must choose the exact brute scan and reproduce
-      * q91's neighbours — decision column and result both under the
-      * oracle hash. The IVF branch of the same selector is exercised
-      * spec-side (forced cap 0 at nprobe=k ≡ brute, bit-equal) and by
-      * the declared IVF rows q76/q135/q144. */
-    "q_sim_knn_auto" -> ((s, d) => {
-      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val probes = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
-      val (plan, knn) = graft.text.Similarity.autoKnn(s, emb, probes, topK = 3)
-      knn.withColumn("plan", lit(plan)).orderBy("probe_id", "vec_id")
-    })
-  )
-
-  val sql: Map[String, String] = Map(
-    // q160's oracle is q50's exact pair computation with the expected
-    // decision as a constant column: the selector's choice is part of
-    // the checked result.
-    "q_dedup_auto" ->
+    Query("q_dedup_auto",
+      // q160's oracle is q50's exact pair computation with the expected
+      // decision as a constant column: the selector's choice is part of
+      // the checked result.
       """WITH toks AS (
            SELECT DISTINCT doc_id, tok FROM (
              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -138,10 +110,27 @@ object Selectors {
          JOIN sz sa ON sa.doc_id = doc_a
          JOIN sz sb ON sb.doc_id = doc_b
          WHERE 2 * inter >= sa.sz + sb.sz - inter
-         ORDER BY doc_a, doc_b""",
-    // q161's oracle is q91's brute-force KNN with rank kept and the
-    // expected decision as a constant column.
-    "q_sim_knn_auto" ->
+         ORDER BY doc_a, doc_b""")((s, d) => Memos.frame(s, d,
+        "selectors/dedupAuto") {
+      val (plan, pairs) =
+        graft.text.Dedup.autoPairs(s, graft.text.Dedup.subsetTokens(s, d))
+      pairs.withColumn("plan", lit(plan)).orderBy("doc_a", "doc_b")
+        .localCheckpoint()
+    }),
+
+    /** q161: the cost-based KNN selector as a DECLARED query —
+      * [[graft.text.Similarity.autoKnn]] over the full embeddings
+      * corpus with the q91/q135 probe set at the production cap. At
+      * every oracle SF the |probes|×|corpus| volume sits orders of
+      * magnitude under the cap (Round11Spec pins a 10× margin), so
+      * the selector must choose the exact brute scan and reproduce
+      * q91's neighbours — decision column and result both under the
+      * oracle hash. The IVF branch of the same selector is exercised
+      * spec-side (forced cap 0 at nprobe=k ≡ brute, bit-equal) and by
+      * the declared IVF rows q76/q135/q144. */
+    Query("q_sim_knn_auto",
+      // q161's oracle is q91's brute-force KNN with rank kept and the
+      // expected decision as a constant column.
       """WITH probes AS (
            SELECT vec_id AS probe_id, embedding AS p
            FROM embeddings WHERE vec_id < 5
@@ -161,6 +150,12 @@ object Selectors {
            SELECT *, row_number() OVER (
              PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS rn
            FROM sims)
-         WHERE rn <= 3 ORDER BY probe_id, vec_id"""
+         WHERE rn <= 3 ORDER BY probe_id, vec_id""")((s, d) => {
+      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val probes = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
+      val (plan, knn) = graft.text.Similarity.autoKnn(s, emb, probes, topK = 3)
+      knn.withColumn("plan", lit(plan)).orderBy("probe_id", "vec_id")
+    })
   )
 }

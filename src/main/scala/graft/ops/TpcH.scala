@@ -1,8 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
-import graft.engine.Tables
-import graft.engine.Tables.Q
+import graft.engine.{Query, Tables}
 
 /** The TPC-H Q1–Q22 pack, adapted to the fixture's reduced star
   * schema (SURVEY.md §2 rows 250–271) — the recognizable external
@@ -13,7 +11,7 @@ import graft.engine.Tables.Q
   * DuckDB as the oracle), so the Spark plan is exactly what Catalyst
   * derives from the standard text — broadcast of the dimension chain,
   * partial aggregation, semi/anti subquery rewrites, dynamic pruning —
-  * with zero hand-scheduling, and alias drift between the two maps is
+  * with zero hand-scheduling, and alias drift between a plan and its oracle is
   * impossible by construction.
   *
   * ADAPTATION NOTES (the fixture omits some TPC-H columns/tables;
@@ -481,7 +479,9 @@ object TpcH {
        GROUP BY cntrycode
        ORDER BY cntrycode"""
 
-  private val pack: Seq[(String, String)] = Seq(
+  /** Each row's oracle IS its Spark string — one dialect-common text
+    * per query, so the two engines parse identical SQL. */
+  val queries: Seq[Query] = Seq(
     "q_tpch_q1" -> q1, "q_tpch_q2" -> q2, "q_tpch_q3" -> q3,
     "q_tpch_q4" -> q4, "q_tpch_q5" -> q5, "q_tpch_q6" -> q6,
     "q_tpch_q7" -> q7, "q_tpch_q8" -> q8, "q_tpch_q9" -> q9,
@@ -489,14 +489,6 @@ object TpcH {
     "q_tpch_q13" -> q13, "q_tpch_q14" -> q14, "q_tpch_q15" -> q15,
     "q_tpch_q16" -> q16, "q_tpch_q17" -> q17, "q_tpch_q18" -> q18,
     "q_tpch_q19" -> q19, "q_tpch_q20" -> q20, "q_tpch_q21" -> q21,
-    "q_tpch_q22" -> q22)
-
-  val defs: Map[String, Q] =
-    pack.map { case (name, q) =>
-      name -> ((s: SparkSession, d: String) => Tables.runSql(s, d, q))
-    }.toMap
-
-  /** The oracle strings ARE the Spark strings — one dialect-common
-    * text per query, so the two engines parse identical SQL. */
-  val sql: Map[String, String] = pack.toMap
+    "q_tpch_q22" -> q22
+  ).map { case (n, q) => Query(n, q)((s, d) => Tables.runSql(s, d, q)) }
 }

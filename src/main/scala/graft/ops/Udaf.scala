@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -33,8 +34,13 @@ object WeightedAvgAgg extends Aggregator[WIn, WBuf, Double] {
 }
 
 object Udaf {
-  val defs: Map[String, Q] = Map(
-    "q_udaf_weighted_avg" -> ((s, d) => {
+  val queries: Seq[Query] = Seq(
+    Query("q_udaf_weighted_avg",
+      """SELECT l_returnflag,
+         CAST(sum(CAST(ROUND(l_extendedprice,2) AS DECIMAL(18,2))
+                  * CAST(ROUND(l_quantity,2) AS DECIMAL(18,2))) AS DOUBLE)
+         / CAST(sum(CAST(ROUND(l_quantity,2) AS DECIMAL(18,2))) AS DOUBLE) AS wavg
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""")((s, d) => {
       import s.implicits._
       lineitem(s, d)
         .select(col("l_returnflag").as("flag"),
@@ -46,14 +52,5 @@ object Udaf {
         .toDF("l_returnflag", "wavg")
         .orderBy("l_returnflag")
     })
-  )
-
-  val sql: Map[String, String] = Map(
-    "q_udaf_weighted_avg" ->
-      """SELECT l_returnflag,
-         CAST(sum(CAST(ROUND(l_extendedprice,2) AS DECIMAL(18,2))
-                  * CAST(ROUND(l_quantity,2) AS DECIMAL(18,2))) AS DOUBLE)
-         / CAST(sum(CAST(ROUND(l_quantity,2) AS DECIMAL(18,2))) AS DOUBLE) AS wavg
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""
   )
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
 /** §2 row 51 — MinHash + LSH banding near-dup detection [N], the
@@ -258,10 +258,10 @@ object MinHash {
     Memos.frame(s, d, "minhash/bandedSubset")(
       banded(signatures(Dedup.subsetTokens(s, d))).localCheckpoint())
 
-  val defs: Map[String, Q] = Map(
-    /** q51: LSH candidates, exactly verified (so output ⊆ q50's exact
-      * pairs; recall is the sketch's quality metric). */
-    "q_dedup_minhash" -> ((s, d) => {
+  /** q51: LSH candidates, exactly verified (so output ⊆ q50's exact
+    * pairs; recall is the sketch's quality metric). */
+  val minhashPairs: Query =
+    Query("q_dedup_minhash")((s, d) => {
       // r18: the static structures ride session memos — the token
       // relation (filter over Dedup.cachedTokens), the banded
       // signature index (bandedSubsetCached — the declared stored
@@ -278,7 +278,7 @@ object MinHash {
       val mat = Dedup.verifyPairs(cands, Dedup.cachedSubsetDocSets(s, d))
       mat.orderBy("doc_a", "doc_b")
     })
-  )
 
-  val sql: Map[String, String] = Map.empty // oracle=none: sketch-based
+  // oracle=none: sketch-based
+  val queries: Seq[Query] = Seq(minhashPairs)
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
 /** §2 row 66 — SimHash near-dup detection [N]: 64-bit signatures from
@@ -178,72 +178,6 @@ object SimHash {
       .filter(col("hamming") <= MaxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
 
-  val defs: Map[String, Q] = Map(
-    /** q66: SimHash near-dups at Hamming ≤ 3 over the doc subset.
-      * r18 opt: the banded signature index is the family's DECLARED
-      * stored state ([[banded]] scaladoc; q147 memoizes exactly its
-      * two halves), and signatures are doc-local, so the full-subset
-      * index is served as bandedOld ∪ bandedIns — a warm invocation
-      * pays buckets → pairs → popcount verify, not the per-doc
-      * signature aggregation that rebuilt per call. Bucket grouping
-      * is order-insensitive (sort_array over collect_list), so the
-      * union is row-identical to the direct build. */
-    "q_dedup_simhash" -> ((s, d) =>
-      verified(pairsFromBuckets(bucketsOf(
-          bandedOldCached(s, d).unionByName(bandedInsCached(s, d)))))
-        .orderBy("doc_a", "doc_b")),
-
-    /** q147: q66 under a SIGNED doc delta [P §3] — the stored SimHash
-      * band index of the base subset absorbs insert+delete through
-      * [[bucketsTouched]], and the stored PER-BUCKET verified-pair
-      * relation ([[pairsByBucketCached]] — the MRBG-style per-group
-      * intermediate store [P §5], q139's mechanism applied to this
-      * family) makes the per-batch work delta-proportional end to
-      * end: untouched buckets' VERIFIED pairs pass through VERBATIM
-      * (signatures are doc-local and the Hamming verdict is
-      * pair-local, so an untouched bucket's pairs and verdicts cannot
-      * change), and only delta-touched buckets re-generate and
-      * re-verify. The previous shape passed BUCKETS through but then
-      * re-ran pair generation + verify over ALL of them — the
-      * corpus-proportional step VERDICT r10 flagged (~7-11 s).
-      * Delta convention INSIDE q66's doc_id % 5 == 0 subset (the
-      * % 10 == 1 deletion class never intersects it): insert =
-      * % 50 == 0, delete = % 50 == 5 — ~10% of the subset each, both
-      * halves non-empty at every SF. Only STORED state is memoized
-      * (band index, per-bucket pair store — production reads both
-      * from the partials store); the delta maintenance re-runs per
-      * invocation. oracle=none (xxhash64, like q66); Round8Spec
-      * proves the result row-identical to the batch q66 computation
-      * over the post-delta subset. */
-    "q_dedup_simhash_incr" -> ((s, d) => {
-      val toks = Dedup.subsetTokens(s, d).persist()
-      val bandedOld = bandedOldCached(s, d)
-      // The insert batch's band rows are STORED state like
-      // bandedOld's: signatures are doc-local and map-only (computed
-      // once at ingest — [[banded]] scaladoc), so the delta batch
-      // arrives carrying its index rows; per-batch work is the
-      // maintenance itself.
-      val bandedIns = bandedInsCached(s, d)
-      val deleted = toks.filter(col("doc_id") % 50 === 5)
-        .select("doc_id").distinct()
-      val touched = touchedKeys(bandedOld, bandedIns, deleted)
-        .localCheckpoint()
-      val kept = pairsByBucketCached(s, d)
-        .join(broadcast(touched), Seq("band", "bh"), "left_anti")
-        .select("doc_a", "doc_b", "hamming")
-      // delta-sized: bucketsTouched semi-joins the index on the
-      // touched keys before grouping, so generation AND the in-line
-      // popcount verify run over delta-touched buckets only
-      val rebuilt = verified(pairsFromBuckets(bucketsTouched(
-        bandedOld, bandedIns, deleted, touched = Some(touched))))
-      // distinct on (doc_a, doc_b, hamming): a pair colliding in
-      // several bands may arrive from both halves; hamming is a
-      // function of the pair, so this is pair-level dedup
-      val out = kept.unionByName(rebuilt).distinct()
-      graft.iter.IterQueries.finish(out, toks).orderBy("doc_a", "doc_b")
-    })
-  )
-
   /** The STORED state of q147's base subset corpus (doc_id % 5 == 0
     * minus the % 50 == 0 insert class) — the preserved state [P §3],
     * session-memoized like `Round8`'s LSH stores. */
@@ -283,5 +217,70 @@ object SimHash {
         .select("band", "bh", "doc_a", "doc_b", "hamming")
         .localCheckpoint())
 
-  val sql: Map[String, String] = Map.empty // xxhash64 not portable to DuckDB
+  // xxhash64 not portable to DuckDB
+  val queries: Seq[Query] = Seq(
+    /** q66: SimHash near-dups at Hamming ≤ 3 over the doc subset.
+      * r18 opt: the banded signature index is the family's DECLARED
+      * stored state ([[banded]] scaladoc; q147 memoizes exactly its
+      * two halves), and signatures are doc-local, so the full-subset
+      * index is served as bandedOld ∪ bandedIns — a warm invocation
+      * pays buckets → pairs → popcount verify, not the per-doc
+      * signature aggregation that rebuilt per call. Bucket grouping
+      * is order-insensitive (sort_array over collect_list), so the
+      * union is row-identical to the direct build. */
+    Query("q_dedup_simhash")((s, d) =>
+      verified(pairsFromBuckets(bucketsOf(
+          bandedOldCached(s, d).unionByName(bandedInsCached(s, d)))))
+        .orderBy("doc_a", "doc_b")),
+
+    /** q147: q66 under a SIGNED doc delta [P §3] — the stored SimHash
+      * band index of the base subset absorbs insert+delete through
+      * [[bucketsTouched]], and the stored PER-BUCKET verified-pair
+      * relation ([[pairsByBucketCached]] — the MRBG-style per-group
+      * intermediate store [P §5], q139's mechanism applied to this
+      * family) makes the per-batch work delta-proportional end to
+      * end: untouched buckets' VERIFIED pairs pass through VERBATIM
+      * (signatures are doc-local and the Hamming verdict is
+      * pair-local, so an untouched bucket's pairs and verdicts cannot
+      * change), and only delta-touched buckets re-generate and
+      * re-verify. The previous shape passed BUCKETS through but then
+      * re-ran pair generation + verify over ALL of them — the
+      * corpus-proportional step VERDICT r10 flagged (~7-11 s).
+      * Delta convention INSIDE q66's doc_id % 5 == 0 subset (the
+      * % 10 == 1 deletion class never intersects it): insert =
+      * % 50 == 0, delete = % 50 == 5 — ~10% of the subset each, both
+      * halves non-empty at every SF. Only STORED state is memoized
+      * (band index, per-bucket pair store — production reads both
+      * from the partials store); the delta maintenance re-runs per
+      * invocation. oracle=none (xxhash64, like q66); Round8Spec
+      * proves the result row-identical to the batch q66 computation
+      * over the post-delta subset. */
+    Query("q_dedup_simhash_incr")((s, d) => {
+      val toks = Dedup.subsetTokens(s, d).persist()
+      val bandedOld = bandedOldCached(s, d)
+      // The insert batch's band rows are STORED state like
+      // bandedOld's: signatures are doc-local and map-only (computed
+      // once at ingest — [[banded]] scaladoc), so the delta batch
+      // arrives carrying its index rows; per-batch work is the
+      // maintenance itself.
+      val bandedIns = bandedInsCached(s, d)
+      val deleted = toks.filter(col("doc_id") % 50 === 5)
+        .select("doc_id").distinct()
+      val touched = touchedKeys(bandedOld, bandedIns, deleted)
+        .localCheckpoint()
+      val kept = pairsByBucketCached(s, d)
+        .join(broadcast(touched), Seq("band", "bh"), "left_anti")
+        .select("doc_a", "doc_b", "hamming")
+      // delta-sized: bucketsTouched semi-joins the index on the
+      // touched keys before grouping, so generation AND the in-line
+      // popcount verify run over delta-touched buckets only
+      val rebuilt = verified(pairsFromBuckets(bucketsTouched(
+        bandedOld, bandedIns, deleted, touched = Some(touched))))
+      // distinct on (doc_a, doc_b, hamming): a pair colliding in
+      // several bands may arrive from both halves; hamming is a
+      // function of the pair, so this is pair-level dedup
+      val out = kept.unionByName(rebuilt).distinct()
+      graft.iter.IterQueries.finish(out, toks).orderBy("doc_a", "doc_b")
+    })
+  )
 }

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Memos
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.iter.KMeans
 
@@ -109,150 +109,6 @@ object Similarity {
         .persist())
     (idx, cents)
   }
-
-  val defs: Map[String, Q] = Map(
-    "q_sim_topk_cosine" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val probe = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("probe"))
-      // native codegen expression; bit-identical to the HOF fold
-      val dot = graft.functions.FloatDot.float_dot _
-      emb.crossJoin(broadcast(probe))
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          (dot(col("embedding"), col("probe")) /
-            (sqrt(dot(col("embedding"), col("embedding")))
-              * sqrt(dot(col("probe"), col("probe"))))).as("sim"))
-        .orderBy(col("sim").desc, col("vec_id").asc)
-        .limit(10)
-    }),
-
-    /** q67: embedding-cosine near-dup PAIRS — all pairs with cosine
-      * >= 0.32, the exact all-pairs baseline (O(n²) by definition;
-      * the scale paths are IVF cluster pruning and LSH banding).
-      * Norms are precomputed once per vector; the threshold compares
-      * bit-identical doubles on both engines, so the cut is exact. */
-    "q_sim_cosine_pairs" -> ((s, d) =>
-      cosinePairs(embeddings(s, d), 0.32).orderBy("vec_a", "vec_b")),
-
-    /** q275: INT8-QUANTIZED cosine pairs [N scale path] — q67's pair
-      * detection run on symmetric int8 quantization (per-vector scale
-      * 127/max|x|, floor), the memory/bandwidth shape production ANN
-      * actually ships: 4× smaller vectors, integer dot products
-      * (exact BIGINT — SIMD-friendly at the executor), one double
-      * division at the end. The whole quantize→dot→threshold chain is
-      * deterministic cross-engine (exact float→double widening, one
-      * IEEE multiply+divide then floor, integer sums), so unlike
-      * every other ANN row this one is FULLY oracle-checkable — the
-      * approximation is in the declared representation, not in the
-      * arithmetic. Recall vs the float pairs is measured in
-      * Round14Spec (the q159 recall-audit discipline). Zero vectors
-      * quantize to all-zero (qn = 0) and are excluded — cosine is
-      * undefined there in the float row too. */
-    "q_sim_cosine_quantized" -> ((s, d) => {
-      // per-PAIR dot is the hot path and runs as the codegen LongDot
-      // expression (integer sums are exactly order-independent, so the
-      // swap from the HOF chain is hash-invisible; the HOF chain
-      // measured 26.7 s at sf0.1's pair volume). The codes themselves
-      // ride [[cachedQuantized]] — without it, projection collapse
-      // re-inlines the interpreted quantize HOFs into the qn>0 filter
-      // and BOTH self-join sides (r18 opt fifth pass; see the memo's
-      // scaladoc and plans/r18/q_sim_cosine_quantized_before.txt)
-      val ldot = graft.functions.LongDot.long_dot _
-      val q = cachedQuantized(s, d).select("vec_id", "qv", "qn")
-      val a = q.select(col("vec_id").as("vec_a"), col("qv").as("qa"),
-        col("qn").as("qna"))
-      val b = q.select(col("vec_id").as("vec_b"), col("qv").as("qb"),
-        col("qn").as("qnb"))
-      a.join(b, col("vec_a") < col("vec_b"))
-        .filter(col("qna") > 0 && col("qnb") > 0)
-        .withColumn("qdot", ldot(col("qa"), col("qb")))
-        .withColumn("qcos",
-          col("qdot").cast("double") / (sqrt(col("qna")) * sqrt(col("qnb"))))
-        .filter(col("qcos") >= 0.32)
-        .select(col("vec_a"), col("vec_b"), col("qdot"), col("qcos"))
-        .orderBy("vec_a", "vec_b")
-    }),
-
-    /** q277: QUANTIZED IVF ANN [N scale path] — q76's bucketed search
-      * run over the int8-quantized index ([[ivfIndexQuantized]]): the
-      * memory shape production ANN actually ships at 100 TB — the
-      * stored index is (vec_id, cluster, qv, qn), ~4× smaller than
-      * the float corpus, and every in-bucket dot is the codegen
-      * integer [[graft.functions.LongDot]] (SIMD-friendly BIGINT
-      * sums), one double division at the end. Centroids stay FLOAT
-      * (they are the model, k rows — quantizing them buys nothing);
-      * bucket membership is computed on the float vectors at build
-      * time and is bit-identical to q76's index, so quantization
-      * moves ONLY the scoring — the two approximations (IVF pruning,
-      * int8 representation) compose independently. oracle=none
-      * (approximate by construction, like q76); Round15Spec audits
-      * recall against BOTH the exact float top-k (joint loss) and the
-      * quantized brute force (pruning loss isolated — nprobe=k must
-      * reproduce it exactly), the q159/q275 recall-audit discipline. */
-    "q_sim_ann_ivf_quantized" -> ((s, d) =>
-      // r18 opt: the index rides [[cachedIvfIndexQuantized]] (stored
-      // structure — the build is offline in the declared 100 TB
-      // shape); probe selection + in-bucket scoring run per
-      // invocation as before.
-      ivfTopKQuantized(s, d,
-        pre = Some(cachedIvfIndexQuantized(s, d, 10))).drop("cluster")),
-
-    /** q279: BATCH QUANTIZED IVF ANN [N scale path] — the production
-      * many-probe × quantized-index composition (VERDICT r15 task 6):
-      * q135's batch shape run over q277's int8 index. Top-8 quantized
-      * cosine neighbours for each of 5 probes, nprobe = k/4; probes
-      * quantize in-plan (float vector still drives cluster selection,
-      * exactly like the index build), each probe chunk broadcasts
-      * against the cluster-pruned int8 corpus, every dot the codegen
-      * integer [[graft.functions.LongDot]]. oracle=none (approximate
-      * by construction, like q76/q135/q277); Round15Spec pins chunk
-      * invariance, nprobe=k ≡ quantized brute batch (pruning is the
-      * only IVF-side loss) and recall >= 0.8 vs the float brute
-      * force. */
-    "q_sim_ann_ivf_batch_quantized" -> ((s, d) => {
-      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      // r18 opt: stored √n-centroid index via the session memo (k = 0
-      // sizes it like the per-invocation build it replaces)
-      val (indexedQ, cents) = cachedIvfIndexQuantized(s, d, 0)
-      val probes = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
-      ivfSearchBatchQuantized(s, indexedQ, cents, probes,
-          nprobe = math.max(1, cents.length / 4), topK = 8,
-          corpusCached = true)
-        .orderBy("probe_id", "rn")
-    }),
-
-    /** q110: EMBEDDING-COSINE DEDUP COLLAPSE — the embedding-space
-      * analogue of q108 [N]: connected components of the cosine>=0.4
-      * pair graph (min-label, FIXED 5 rounds) giving one canonical
-      * keep_id per vector. At scale the pair source swaps for the IVF
-      * bucketed search (pairs within probed clusters only); the
-      * collapse is unchanged. Threshold compares bit-identical
-      * doubles, labels are integer — fully oracle-checkable.
-      *
-      * CONVERGENCE NOTE: the FIXED 5 rounds are the oracle's
-      * determinism requirement and under-merge >5-hop similarity
-      * chains; production runs
-      * [[graft.iter.IterQueries.minPropagateUntilStable]] instead —
-      * frontier-driven min-label iteration until no label moves —
-      * with every other line unchanged (see the q108 scaladoc). */
-    "q_dedup_embedding_groups" -> ((s, d) => {
-      // pair graph = the MEMOIZED checkpointed cosine computation
-      // (shared with q126) — the loop reads materialized rows, never
-      // re-running the O(n²) join; label loop under the loop conf
-      val pairs = cachedCosinePairs04(s, d)
-      val edges = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .union(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-      // r17: compact driver-frontier collapse — see the q108 note
-      graft.iter.IterQueries.loopConf(s) {
-        graft.iter.IterQueries.minLabelCollapseLocal(edges,
-            embeddings(s, d).select(col("vec_id").as("node")), 5,
-            knownEdgeCount = Some(2 * cachedCosinePairs04Count(s, d)))
-          .select(col("node").as("vec_id"), col("label").as("keep_id"))
-      }.orderBy("vec_id")
-    })
-  )
 
   /** Exact cosine pairs (vec_a < vec_b) at `threshold` — q67's
     * computation, shared with the q110 collapse. Norms computed once
@@ -643,11 +499,77 @@ object Similarity {
     out
   }
 
-  val sql: Map[String, String] = Map(
-    /** q275 oracle: the identical quantize→integer-dot→one-division
-      * chain in DuckDB list ops — every step exact or
-      * deterministically IEEE (see the Spark scaladoc). */
-    "q_sim_cosine_quantized" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_sim_topk_cosine",
+      """WITH probe AS (SELECT embedding AS p FROM embeddings WHERE vec_id = 0)
+         SELECT vec_id,
+           list_sum(list_transform(list_zip(embedding, p),
+             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+           / (sqrt(list_sum(list_transform(list_zip(embedding, embedding),
+                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
+              * sqrt(list_sum(list_transform(list_zip(p, p),
+                  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))))
+           AS sim
+         FROM embeddings, probe
+         WHERE vec_id <> 0
+         ORDER BY sim DESC, vec_id ASC
+         LIMIT 10""")((s, d) => {
+      val emb = embeddings(s, d)
+      val probe = emb.filter(col("vec_id") === 0)
+        .select(col("embedding").as("probe"))
+      // native codegen expression; bit-identical to the HOF fold
+      val dot = graft.functions.FloatDot.float_dot _
+      emb.crossJoin(broadcast(probe))
+        .filter(col("vec_id") =!= 0)
+        .select(col("vec_id"),
+          (dot(col("embedding"), col("probe")) /
+            (sqrt(dot(col("embedding"), col("embedding")))
+              * sqrt(dot(col("probe"), col("probe"))))).as("sim"))
+        .orderBy(col("sim").desc, col("vec_id").asc)
+        .limit(10)
+    }),
+
+    /** q67: embedding-cosine near-dup PAIRS — all pairs with cosine
+      * >= 0.32, the exact all-pairs baseline (O(n²) by definition;
+      * the scale paths are IVF cluster pruning and LSH banding).
+      * Norms are precomputed once per vector; the threshold compares
+      * bit-identical doubles on both engines, so the cut is exact. */
+    Query("q_sim_cosine_pairs",
+      """WITH n AS (
+           SELECT vec_id, embedding,
+             sqrt(list_sum(list_transform(list_zip(embedding, embedding),
+               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))) AS norm
+           FROM embeddings
+         )
+         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+           list_sum(list_transform(list_zip(a.embedding, b.embedding),
+             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+           / (a.norm * b.norm) AS sim
+         FROM n a JOIN n b ON a.vec_id < b.vec_id
+         WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
+             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+           / (a.norm * b.norm) >= 0.32
+         ORDER BY vec_a, vec_b""")((s, d) =>
+      cosinePairs(embeddings(s, d), 0.32).orderBy("vec_a", "vec_b")),
+
+    /** q275: INT8-QUANTIZED cosine pairs [N scale path] — q67's pair
+      * detection run on symmetric int8 quantization (per-vector scale
+      * 127/max|x|, floor), the memory/bandwidth shape production ANN
+      * actually ships: 4× smaller vectors, integer dot products
+      * (exact BIGINT — SIMD-friendly at the executor), one double
+      * division at the end. The whole quantize→dot→threshold chain is
+      * deterministic cross-engine (exact float→double widening, one
+      * IEEE multiply+divide then floor, integer sums), so unlike
+      * every other ANN row this one is FULLY oracle-checkable — the
+      * approximation is in the declared representation, not in the
+      * arithmetic. Recall vs the float pairs is measured in
+      * Round14Spec (the q159 recall-audit discipline). Zero vectors
+      * quantize to all-zero (qn = 0) and are excluded — cosine is
+      * undefined there in the float row too. */
+    Query("q_sim_cosine_quantized",
+      /** q275 oracle: the identical quantize→integer-dot→one-division
+        * chain in DuckDB list ops — every step exact or
+        * deterministically IEEE (see the Spark scaladoc). */
       """WITH e AS (
            SELECT vec_id,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
@@ -676,24 +598,97 @@ object Similarity {
                 CAST(qdot AS DOUBLE) / (sqrt(qna) * sqrt(qnb)) AS qcos
          FROM pairs
          WHERE CAST(qdot AS DOUBLE) / (sqrt(qna) * sqrt(qnb)) >= 0.32
-         ORDER BY vec_a, vec_b""",
-    "q_sim_topk_cosine" ->
-      """WITH probe AS (SELECT embedding AS p FROM embeddings WHERE vec_id = 0)
-         SELECT vec_id,
-           list_sum(list_transform(list_zip(embedding, p),
-             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(list_zip(embedding, embedding),
-                x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
-              * sqrt(list_sum(list_transform(list_zip(p, p),
-                  x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))))
-           AS sim
-         FROM embeddings, probe
-         WHERE vec_id <> 0
-         ORDER BY sim DESC, vec_id ASC
-         LIMIT 10""",
+         ORDER BY vec_a, vec_b""")((s, d) => {
+      // per-PAIR dot is the hot path and runs as the codegen LongDot
+      // expression (integer sums are exactly order-independent, so the
+      // swap from the HOF chain is hash-invisible; the HOF chain
+      // measured 26.7 s at sf0.1's pair volume). The codes themselves
+      // ride [[cachedQuantized]] — without it, projection collapse
+      // re-inlines the interpreted quantize HOFs into the qn>0 filter
+      // and BOTH self-join sides (r18 opt fifth pass; see the memo's
+      // scaladoc and plans/r18/q_sim_cosine_quantized_before.txt)
+      val ldot = graft.functions.LongDot.long_dot _
+      val q = cachedQuantized(s, d).select("vec_id", "qv", "qn")
+      val a = q.select(col("vec_id").as("vec_a"), col("qv").as("qa"),
+        col("qn").as("qna"))
+      val b = q.select(col("vec_id").as("vec_b"), col("qv").as("qb"),
+        col("qn").as("qnb"))
+      a.join(b, col("vec_a") < col("vec_b"))
+        .filter(col("qna") > 0 && col("qnb") > 0)
+        .withColumn("qdot", ldot(col("qa"), col("qb")))
+        .withColumn("qcos",
+          col("qdot").cast("double") / (sqrt(col("qna")) * sqrt(col("qnb"))))
+        .filter(col("qcos") >= 0.32)
+        .select(col("vec_a"), col("vec_b"), col("qdot"), col("qcos"))
+        .orderBy("vec_a", "vec_b")
+    }),
+
+    /** q277: QUANTIZED IVF ANN [N scale path] — q76's bucketed search
+      * run over the int8-quantized index ([[ivfIndexQuantized]]): the
+      * memory shape production ANN actually ships at 100 TB — the
+      * stored index is (vec_id, cluster, qv, qn), ~4× smaller than
+      * the float corpus, and every in-bucket dot is the codegen
+      * integer [[graft.functions.LongDot]] (SIMD-friendly BIGINT
+      * sums), one double division at the end. Centroids stay FLOAT
+      * (they are the model, k rows — quantizing them buys nothing);
+      * bucket membership is computed on the float vectors at build
+      * time and is bit-identical to q76's index, so quantization
+      * moves ONLY the scoring — the two approximations (IVF pruning,
+      * int8 representation) compose independently. oracle=none
+      * (approximate by construction, like q76); Round15Spec audits
+      * recall against BOTH the exact float top-k (joint loss) and the
+      * quantized brute force (pruning loss isolated — nprobe=k must
+      * reproduce it exactly), the q159/q275 recall-audit discipline. */
+    Query("q_sim_ann_ivf_quantized")((s, d) =>
+      // r18 opt: the index rides [[cachedIvfIndexQuantized]] (stored
+      // structure — the build is offline in the declared 100 TB
+      // shape); probe selection + in-bucket scoring run per
+      // invocation as before.
+      ivfTopKQuantized(s, d,
+        pre = Some(cachedIvfIndexQuantized(s, d, 10))).drop("cluster")),
+
+    /** q279: BATCH QUANTIZED IVF ANN [N scale path] — the production
+      * many-probe × quantized-index composition (VERDICT r15 task 6):
+      * q135's batch shape run over q277's int8 index. Top-8 quantized
+      * cosine neighbours for each of 5 probes, nprobe = k/4; probes
+      * quantize in-plan (float vector still drives cluster selection,
+      * exactly like the index build), each probe chunk broadcasts
+      * against the cluster-pruned int8 corpus, every dot the codegen
+      * integer [[graft.functions.LongDot]]. oracle=none (approximate
+      * by construction, like q76/q135/q277); Round15Spec pins chunk
+      * invariance, nprobe=k ≡ quantized brute batch (pruning is the
+      * only IVF-side loss) and recall >= 0.8 vs the float brute
+      * force. */
+    Query("q_sim_ann_ivf_batch_quantized")((s, d) => {
+      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
+      // r18 opt: stored √n-centroid index via the session memo (k = 0
+      // sizes it like the per-invocation build it replaces)
+      val (indexedQ, cents) = cachedIvfIndexQuantized(s, d, 0)
+      val probes = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
+      ivfSearchBatchQuantized(s, indexedQ, cents, probes,
+          nprobe = math.max(1, cents.length / 4), topK = 8,
+          corpusCached = true)
+        .orderBy("probe_id", "rn")
+    }),
+
+    /** q110: EMBEDDING-COSINE DEDUP COLLAPSE — the embedding-space
+      * analogue of q108 [N]: connected components of the cosine>=0.4
+      * pair graph (min-label, FIXED 5 rounds) giving one canonical
+      * keep_id per vector. At scale the pair source swaps for the IVF
+      * bucketed search (pairs within probed clusters only); the
+      * collapse is unchanged. Threshold compares bit-identical
+      * doubles, labels are integer — fully oracle-checkable.
+      *
+      * CONVERGENCE NOTE: the FIXED 5 rounds are the oracle's
+      * determinism requirement and under-merge >5-hop similarity
+      * chains; production runs
+      * [[graft.iter.IterQueries.minPropagateUntilStable]] instead —
+      * frontier-driven min-label iteration until no label moves —
+      * with every other line unchanged (see the q108 scaladoc). */
     /** q110 oracle: q67's validated cosine formulation at 0.4, then
       * the same 5 unrolled min-label stages as q108. */
-    "q_dedup_embedding_groups" -> {
+    Query("q_dedup_embedding_groups", {
       def stage(k: Int): String = {
         val prev = s"label${k - 1}"
         s"""label$k AS (
@@ -727,22 +722,20 @@ object Similarity {
          ${(1 to 5).map(stage).mkString(",\n")}
          SELECT node AS vec_id, label AS keep_id
          FROM label5 ORDER BY vec_id"""
-    },
-    "q_sim_cosine_pairs" ->
-      """WITH n AS (
-           SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(list_zip(embedding, embedding),
-               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))) AS norm
-           FROM embeddings
-         )
-         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           list_sum(list_transform(list_zip(a.embedding, b.embedding),
-             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-           / (a.norm * b.norm) AS sim
-         FROM n a JOIN n b ON a.vec_id < b.vec_id
-         WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-             x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-           / (a.norm * b.norm) >= 0.32
-         ORDER BY vec_a, vec_b"""
+    })((s, d) => {
+      // pair graph = the MEMOIZED checkpointed cosine computation
+      // (shared with q126) — the loop reads materialized rows, never
+      // re-running the O(n²) join; label loop under the loop conf
+      val pairs = cachedCosinePairs04(s, d)
+      val edges = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
+        .union(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+      // r17: compact driver-frontier collapse — see the q108 note
+      graft.iter.IterQueries.loopConf(s) {
+        graft.iter.IterQueries.minLabelCollapseLocal(edges,
+            embeddings(s, d).select(col("vec_id").as("node")), 5,
+            knownEdgeCount = Some(2 * cachedCosinePairs04Count(s, d)))
+          .select(col("node").as("vec_id"), col("label").as("keep_id"))
+      }.orderBy("vec_id")
+    })
   )
 }

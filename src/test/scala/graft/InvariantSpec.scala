@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import graft.iter.{IterQueries, Graphs, KMeans}
-import graft.text.{Dedup, MinHash}
-import graft.incr.IncrMerge
+import graft.iter.Graphs
 
 /** SURVEY.md §5 tier 2 — the reference's own validation idea as laws
   * (incremental == full recomputation [P §7]) plus sketch/cluster
@@ -12,7 +10,7 @@ import graft.incr.IncrMerge
 class InvariantSpec extends SparkSpecBase {
 
   test("incrMerge(base, delta) == full recomputation (the [P §3] law)") {
-    val merged = IncrMerge.defs("q_incr_delta_merge")(spark, sfDir).collect()
+    val merged = SparkEntry.queries("q_incr_delta_merge")(spark, sfDir).collect()
     // full recompute: all events minus the deleted subset
     val ev = Tables.events(spark, sfDir)
     val cut = lit("2024-01-20").cast("timestamp")
@@ -24,9 +22,9 @@ class InvariantSpec extends SparkSpecBase {
   }
 
   test("minhash-LSH pairs are a subset of exact pairs, with recall on high-J pairs") {
-    val exact = Dedup.defs("q_sim_jaccard_pairs")(spark, sfDir).collect()
+    val exact = SparkEntry.queries("q_sim_jaccard_pairs")(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val lsh = MinHash.defs("q_dedup_minhash")(spark, sfDir).collect()
+    val lsh = SparkEntry.queries("q_dedup_minhash")(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exactPairs = exact.map(t => (t._1, t._2)).toSet
     assert(lsh.subsetOf(exactPairs), "LSH output must be exactly verified")
@@ -40,7 +38,7 @@ class InvariantSpec extends SparkSpecBase {
   }
 
   test("kmeans clusters partition the input") {
-    val out = KMeans.defs("q_iter_kmeans")(spark, sfDir).collect()
+    val out = SparkEntry.queries("q_iter_kmeans")(spark, sfDir).collect()
     val total = Tables.embeddings(spark, sfDir).count()
     assert(out.map(_.getAs[Long]("n")).sum == total)
     assert(out.length <= 10)
@@ -49,7 +47,7 @@ class InvariantSpec extends SparkSpecBase {
   }
 
   test("pagerank conserves rank mass (symmetric graph, no dangling)") {
-    val pr = IterQueries.defs("q_iter_pagerank")(spark, sfDir)
+    val pr = SparkEntry.queries("q_iter_pagerank")(spark, sfDir)
     val n = Graphs.nodes(Graphs.edges(spark, sfDir)).count()
     val mass = pr.agg(sum("rs")).head().getLong(0)
     val ideal = n * 10000000000L
@@ -58,9 +56,9 @@ class InvariantSpec extends SparkSpecBase {
   }
 
   test("incremental pagerank differs from base after edge delta") {
-    val base = IterQueries.defs("q_iter_pagerank")(spark, sfDir)
+    val base = SparkEntry.queries("q_iter_pagerank")(spark, sfDir)
       .select("node", "rs").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val incr = IterQueries.defs("q_incr_iter_converge")(spark, sfDir)
+    val incr = SparkEntry.queries("q_incr_iter_converge")(spark, sfDir)
       .select("node", "rs").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(base.keySet == incr.keySet)
     assert(base != incr, "edge delta must perturb some ranks")
@@ -83,7 +81,7 @@ class InvariantSpec extends SparkSpecBase {
   }
 
   test("approx_count_distinct within 10% of exact") {
-    val approx = graft.ops.Aggs.defs("q_agg_approx_distinct")(spark, sfDir)
+    val approx = SparkEntry.queries("q_agg_approx_distinct")(spark, sfDir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val exact = Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag").agg(countDistinct(col("l_partkey")).as("d"))

@@ -38,7 +38,7 @@ class MultimodalSpec extends SparkSpecBase {
   }
 
   test("feature query prunes the binary column for downstream analytics") {
-    val q = Multimodal.defs("q_multimodal_features")(spark, sfDir)
+    val q = SparkEntry.queries("q_multimodal_features")(spark, sfDir)
     assert(!q.columns.contains("content"))
     assert(q.count() == graft.engine.Tables.documents(spark, sfDir).count())
   }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.tools.ClusterSmoke.mayBeEmpty
+
 /** Smoke tier (SURVEY.md §5 tier 1): every registered query runs on
   * sf0.001 and returns rows; every oracle key has a matching query. */
 class RegistrySmokeSpec extends SparkSpecBase {
@@ -10,11 +12,10 @@ class RegistrySmokeSpec extends SparkSpecBase {
   }
 
   test("registry size matches SURVEY §2 — a duplicate key across the merged maps would silently drop a query") {
-    // `queries` is a ++ of ~27 per-module maps; Map.++ keeps the LAST
-    // binding for a colliding key, so a copy-pasted name in a new
-    // round file would shadow an old operator with zero compile
-    // signal. Pin the declared inventory count (update alongside
-    // SURVEY §2's totals block when adding rows).
+    // `queries` is keyed by name, so a copy-pasted name in a new
+    // module would shadow an old operator (RegistryGuardSpec names
+    // the duplicate). Pin the declared inventory count (update
+    // alongside SURVEY §2's totals block when adding rows).
     assert(SparkEntry.queries.size == 292,
       s"expected 292 declared queries, found ${SparkEntry.queries.size} — duplicate or missing key")
     assert(SparkEntry.oracleSql.size == 275,
@@ -24,10 +25,6 @@ class RegistrySmokeSpec extends SparkSpecBase {
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
-
-  /** Queries whose empty result is legitimate at sf0.001 (e.g. every
-    * customer has an order, so anti-join/except come back empty). */
-  private val mayBeEmpty = Set("q_join_anti", "q_set_except")
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs on sf0.001 and returns rows") {

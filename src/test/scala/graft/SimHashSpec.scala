@@ -19,7 +19,7 @@ class SimHashSpec extends SparkSpecBase {
   }
 
   test("declared pairs respect the Hamming bound and are symmetric-free") {
-    val out = SimHash.defs("q_dedup_simhash")(spark, sfDir).collect()
+    val out = SparkEntry.queries("q_dedup_simhash")(spark, sfDir).collect()
     assert(out.forall(_.getAs[Long]("hamming") <= SimHash.MaxHamming))
     assert(out.forall(r => r.getLong(0) < r.getLong(1)))
   }
@@ -32,7 +32,7 @@ class SimHashSpec extends SparkSpecBase {
       (d1, s1) <- sigs; (d2, s2) <- sigs if d1 < d2
       if java.lang.Long.bitCount(s1 ^ s2) <= SimHash.MaxHamming
     } yield (d1, d2)).toSet
-    val banded = SimHash.defs("q_dedup_simhash")(spark, sfDir)
+    val banded = SparkEntry.queries("q_dedup_simhash")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(banded == brute, "4x16 banding must be exhaustive for d<=3")
   }

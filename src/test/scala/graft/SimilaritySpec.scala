@@ -6,7 +6,7 @@ import graft.text.Similarity
 class SimilaritySpec extends SparkSpecBase {
 
   test("IVF top-k is exact within its probed clusters and overlaps brute force") {
-    val exact = Similarity.defs("q_sim_topk_cosine")(spark, sfDir)
+    val exact = SparkEntry.queries("q_sim_topk_cosine")(spark, sfDir)
       .collect().map(_.getLong(0)).toSet
     val ivf = Similarity.ivfTopK(spark, sfDir, nprobe = 3)
       .collect().map(_.getLong(0))

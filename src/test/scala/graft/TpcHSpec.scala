@@ -72,7 +72,7 @@ class TpcHSpec extends SparkSpecBase {
 
   test("a TPC-H call registers exactly the tables its SQL names, " +
       "CTE bodies and subqueries included") {
-    val names = (q: String) => graft.engine.Tables.namedIn(spark, graft.ops.TpcH.sql(q))
+    val names = (q: String) => graft.engine.Tables.namedIn(spark, SparkEntry.oracleSql(q))
     assert(names("q_tpch_q1") == Seq("lineitem"))
     assert(names("q_tpch_q6") == Seq("lineitem"))
     // Q2's lineitem is named only inside the `ps` CTE, whose own name

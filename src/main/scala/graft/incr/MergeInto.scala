@@ -115,7 +115,9 @@ object MergeInto {
     *
     *  1. touched partition values = `delta[partCol]` distinct
     *     (driver-enumerable — a delta touches few partitions by
-    *     construction, or it isn't a delta);
+    *     construction, or it isn't a delta): each task keeps its
+    *     partition's distinct values and the driver merges them, one
+    *     job and no shuffle;
     *  2. read `basePath` restricted to those values — the filter is a
     *     partition-directory prune, untouched partitions are never
     *     READ (PartitionPruneSpec-style `PartitionFilters`, no data
@@ -130,7 +132,11 @@ object MergeInto {
     *     removed explicitly — dynamic overwrite only rewrites
     *     partitions present in the new data, so an emptied one would
     *     otherwise keep stale files (same subtlety as
-    *     `Layout.zorderMaintain`).
+    *     `Layout.zorderMaintain`). The emptied ones are found without
+    *     a Spark job: the touched partition directories are listed
+    *     before and after the overwrite. A rewritten partition holds
+    *     only files of the new write, so a touched partition whose
+    *     file list did not change got no rows.
     *
     * Contract: `partCol` must be key-stable — a key's rows stay in
     * one partition across versions (updates may not move rows between
@@ -167,8 +173,9 @@ object MergeInto {
       : Seq[Any] = {
     require(delta.columns.contains(partCol),
       s"delta must carry the partition column $partCol")
-    val touched = delta.select(col(partCol)).distinct().collect()
-      .map(_.get(0)).toSeq
+    val touched = delta.select(col(partCol)).rdd
+      .mapPartitions(_.map(_.get(0)).toSet.iterator).collect()
+      .distinct.toSeq
     // ADVICE r17 (medium): a null partition value poisons the prune —
     // isin(touched) never matches null so the base's null-partition
     // rows are not read into the slice, yet dynamic overwrite would
@@ -186,18 +193,20 @@ object MergeInto {
         whenMatchedDelete, insertWhenNotMatched,
         whenNotMatchedBySourceDelete, whenMatchedUpdateCond)
       .localCheckpoint()
-    val present = merged.select(col(partCol)).distinct().collect()
-      .map(_.get(0)).toSet
+    val root = new org.apache.hadoop.fs.Path(basePath)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val dirs = touched.map(v => new org.apache.hadoop.fs.Path(root,
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString(partCol, String.valueOf(v))))
+    def files(p: org.apache.hadoop.fs.Path): Set[String] =
+      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet
+      else Set.empty
+    val before = dirs.map(files)
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(basePath)
-    val conf = s.sparkContext.hadoopConfiguration
-    touched.filterNot(present).foreach { v =>
-      val dir = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString(partCol, String.valueOf(v))
-      val p = new org.apache.hadoop.fs.Path(s"$basePath/$dir")
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
+    dirs.zip(before).foreach { case (p, old) =>
+      if (fs.exists(p) && files(p) == old) fs.delete(p, true)
     }
     merged.unpersist(blocking = false)
     touched

@@ -50,7 +50,15 @@ object MrbgPagerank {
   /** `iters` incremental steps from (state0, C0, S0) over the NEW
     * structure, starting from `frontier0` (the sources whose preserved
     * rows are stale — for a structure delta: every src whose edge set
-    * or outdeg changed). Returns the final state. */
+    * or outdeg changed). Returns the final state.
+    *
+    * Every iteration but the last checkpoints its results, since the
+    * next one reads them. The last iteration's frontier and C/S updates
+    * would never be read, so it skips them and returns the final state
+    * as one lazy plan: building it starts no Spark job. A caller that
+    * reads the returned state more than once checkpoints it itself, as
+    * q_incr_mrbg does before its `Memos.frame` stores it (a memo frame
+    * keeps the plan it is given; it does not materialize it). */
   def incrRun(edgesDegNew: DataFrame, state0: DataFrame, c0: DataFrame,
               s0: DataFrame, frontier0: DataFrame, threshold: Long,
               iters: Int): DataFrame = {
@@ -58,29 +66,35 @@ object MrbgPagerank {
     var c = c0
     var s = s0
     var frontier = frontier0 // single column: src
-    for (_ <- 1 to iters) {
-      val newC = contribsFor(edgesDegNew, state, frontier).localCheckpoint()
+    for (i <- 1 to iters) {
+      val last = i == iters
+      // the last iteration's newC and s1 have one consumer each
+      def kept(df: DataFrame): DataFrame =
+        if (last) df else df.localCheckpoint()
+      val newC = kept(contribsFor(edgesDegNew, state, frontier))
       val oldC = c.join(broadcast(frontier), "src")
       // newC − oldC per dst: additions (no old row) add c, deletions
       // (no new row) subtract, survivors adjust by the difference
       val dS = newC.select(col("dst"), col("c"))
         .unionByName(oldC.select(col("dst"), (-col("c")).as("c")))
         .groupBy("dst").agg(sum(col("c")).as("dS"))
-      val s1 = s.join(broadcast(dS), s("node") === dS("dst"), "left")
-        .select(col("node"), (col("S") + coalesce(col("dS"), lit(0L))).as("S"))
-        .localCheckpoint()
+      val s1 = kept(s.join(broadcast(dS), s("node") === dS("dst"), "left")
+        .select(col("node"), (col("S") + coalesce(col("dS"), lit(0L))).as("S")))
       val state1 = s1.selectExpr("node", s"${f("S")} AS rs")
-      val moved = state1
-        .join(state.select(col("node").as("pn"), col("rs").as("prev")),
-          col("node") === col("pn"))
-        .filter(abs(col("rs") - col("prev")) > threshold)
-        .select(col("node").as("src"))
-        .localCheckpoint()
-      c = c.join(broadcast(frontier), Seq("src"), "left_anti")
-        .unionByName(newC).localCheckpoint()
-      s = s1
-      state = state1.localCheckpoint()
-      frontier = moved
+      if (last) state = state1
+      else {
+        val moved = state1
+          .join(state.select(col("node").as("pn"), col("rs").as("prev")),
+            col("node") === col("pn"))
+          .filter(abs(col("rs") - col("prev")) > threshold)
+          .select(col("node").as("src"))
+          .localCheckpoint()
+        c = c.join(broadcast(frontier), Seq("src"), "left_anti")
+          .unionByName(newC).localCheckpoint()
+        s = s1
+        state = state1.localCheckpoint()
+        frontier = moved
+      }
     }
     state
   }
@@ -140,9 +154,12 @@ object MrbgPagerank {
         // frontier: sources whose out-edge set / outdeg changed
         val frontier0 = Graphs.edgesCached(s, d).filter(removed)
           .select("src").distinct()
+        // the memo serves this frame on every call: materialize the
+        // lazy final iteration once, under the loop configuration
         incrRun(edgesDegNew, base, c0, s0s, frontier0, 0L, 2)
           .selectExpr("node", "rs",
             "CAST(rs AS DOUBLE) / 10000000000 AS rank")
+          .localCheckpoint()
       }).orderBy("node")
     })
   )

@@ -40,14 +40,15 @@ object Round12 {
     * stored base counts plus insert/delete doc sets — the i²MapReduce
     * motivating example. Work after the state scan is
     * delta-proportional; counts reaching zero vanish, matching the
-    * from-scratch wordcount of the post-delta corpus. */
+    * from-scratch wordcount of the post-delta corpus. Each delta token
+    * is one signed `(word, ±1)` row, aggregated with the base counts
+    * in one shuffle. */
   def incrTokenCounts(baseCounts: DataFrame, insertDocs: DataFrame,
                       deleteDocs: DataFrame, textCol: String): DataFrame = {
-    def toks(dd: DataFrame, sign: Int) = dd
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .groupBy("word").agg((count(lit(1)) * sign).as("n"))
-    baseCounts.unionByName(toks(insertDocs, 1))
-      .unionByName(toks(deleteDocs, -1))
+    def toks(dd: DataFrame, sign: Long) = dd
+      .select(explode(split(col(textCol), " ")).as("word"), lit(sign).as("n"))
+    baseCounts.unionByName(toks(insertDocs, 1L))
+      .unionByName(toks(deleteDocs, -1L))
       .groupBy("word").agg(sum(col("n")).as("n_total"))
       .filter(col("n_total") > 0)
   }

@@ -1,0 +1,168 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.iter.MrbgPagerank
+import graft.ops.Round12
+
+/** The incremental steps do no dead work: MRBG's last iteration is one
+  * lazy plan, and the signed wordcount merge is one shuffle. Both stay
+  * bit-equal to their from-scratch forms. */
+class IncrStepSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  private val group = "incr-step-spec"
+  private val jobs = new AtomicInteger(0)
+  private lazy val listener = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
+        jobs.incrementAndGet()
+  }
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.sparkContext.addSparkListener(listener)
+  }
+  override def afterAll(): Unit = {
+    spark.sparkContext.removeSparkListener(listener)
+    super.afterAll()
+  }
+
+  /** `f`'s result and the Spark jobs it started in this thread. */
+  private def counted[T](f: => T): (T, Int) = {
+    Bridge.drainListenerBus(spark, 10000)
+    jobs.set(0)
+    spark.sparkContext.setJobGroup(group, group)
+    try {
+      val r = f
+      Bridge.drainListenerBus(spark, 10000)
+      (r, jobs.get())
+    } finally spark.sparkContext.clearJobGroup()
+  }
+
+  private def rows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
+  /** A random 40-node graph, the same graph with some edges removed and
+    * some added, and an arbitrary integer base rank state. */
+  private object Graph {
+    private val rnd = new scala.util.Random(5)
+    val n = 40
+    private val oldEdges = (for {
+      s <- 0 until n; d <- 0 until n if s != d && rnd.nextInt(8) == 0
+    } yield (s.toLong, d.toLong)).distinct
+    private val removed = oldEdges.filter(_ => rnd.nextInt(6) == 0).toSet
+    private val added = (for {
+      s <- 0 until n; d <- 0 until n if s != d && rnd.nextInt(40) == 0
+    } yield (s.toLong, d.toLong)).filterNot(oldEdges.contains).distinct
+    private val newEdges = oldEdges.filterNot(removed) ++ added
+    /** Sources whose out-edge set changed: the first frontier. */
+    val changedSrcs: Seq[Long] = (removed.toSeq ++ added).map(_._1).distinct
+
+    def withDeg(es: Seq[(Long, Long)]): DataFrame = {
+      val e = es.toDF("src", "dst")
+      e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+        .select("src", "dst", "outdeg")
+    }
+    val edgesDegOld: DataFrame = withDeg(oldEdges)
+    val edgesDegNew: DataFrame = withDeg(newEdges)
+    val nodes: DataFrame = (0L until n).toDF("node")
+    val base: DataFrame = (0L until n)
+      .map(v => (v, 1000000000L + 7919L * v * v)).toDF("node", "rs")
+  }
+
+  /** `iters` full PageRank iterations over the new graph from the base
+    * ranks, in the same integer arithmetic as MrbgPagerank. */
+  private def fullIterations(iters: Int): DataFrame = {
+    import Graph._
+    (1 to iters).foldLeft(base) { (state, _) =>
+      val s = edgesDegNew.join(state, state("node") === edgesDegNew("src"))
+        .selectExpr("dst", "rs DIV outdeg AS c")
+        .groupBy("dst").agg(sum(col("c")).as("S"))
+      nodes.join(s, nodes("node") === s("dst"), "left")
+        .selectExpr("node",
+          "CAST(1500000000 + (85 * coalesce(S, 0)) DIV 100 AS BIGINT) AS rs")
+    }
+  }
+
+  /** The preserved state under the old graph: contributions C0 and
+    * per-node sums S0 of the base ranks, materialized. */
+  private def preserved(): (DataFrame, DataFrame) = {
+    import Graph._
+    val c = MrbgPagerank.contribsFor(edgesDegOld, base,
+      nodes.select(col("node").as("src"))).localCheckpoint()
+    val s = nodes.join(c.groupBy("dst").agg(sum(col("c")).as("S")),
+        nodes("node") === col("dst"), "left")
+      .select(col("node"), coalesce(col("S"), lit(0L)).as("S"))
+      .localCheckpoint()
+    (c, s)
+  }
+
+  private def incremental(c0: DataFrame, s0: DataFrame, iters: Int): DataFrame =
+    MrbgPagerank.incrRun(Graph.edgesDegNew, Graph.base, c0, s0,
+      Graph.changedSrcs.toDF("src"), 0L, iters)
+
+  test("MrbgPagerank.incrRun: the last iteration is lazy — iters = 1 starts no Spark job") {
+    val (c0, s0) = preserved()
+    val (state, started) = counted(incremental(c0, s0, 1))
+    assert(started == 0, s"incrRun(iters = 1) started $started Spark job(s)")
+    assert(rows(state.select("node", "rs")) ==
+      rows(fullIterations(1).select("node", "rs")))
+  }
+
+  test("MrbgPagerank.incrRun at iters 1 and 2 == full re-iteration, bit for bit") {
+    assert(Graph.changedSrcs.nonEmpty)
+    val (c0, s0) = preserved()
+    for (iters <- Seq(1, 2)) {
+      val got = rows(incremental(c0, s0, iters))
+      val want = rows(fullIterations(iters))
+      assert(got.size == Graph.n)
+      assert(got == want, s"iters = $iters diverged from full re-iteration")
+    }
+  }
+
+  private val docs = Seq("a b a", "c d", "b e c").toDF("text")
+  private val inserts = Seq("b f", "a").toDF("text")
+  /** Removes the only `d` and every `c`. */
+  private val deletes = Seq("c d", "b e c").toDF("text")
+
+  private def wordcount(d: DataFrame): DataFrame =
+    d.select(explode(split(col("text"), " ")).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("n"))
+
+  /** Base counts as a shuffle-free local relation. */
+  private def baseCounts: DataFrame = {
+    val counted = wordcount(docs).collect().map(r => (r.getString(0), r.getLong(1)))
+    counted.toSeq.toDF("word", "n")
+  }
+
+  test("incrTokenCounts: delta tokens and base counts meet in one shuffle (AQE off)") {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val plan = Round12.incrTokenCounts(baseCounts, inserts, deletes, "text")
+        .queryExecution.executedPlan
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == 1, s"${shuffles.size} shuffles in\n$plan")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("incrTokenCounts == from-scratch wordcount when the delta drives words to zero") {
+    val got = Round12.incrTokenCounts(baseCounts, inserts, deletes, "text")
+    val post = Seq("a b a", "b f", "a").toDF("text")
+    val want = wordcount(post).withColumnRenamed("n", "n_total")
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)))
+    assert(rows(got) == rows(want))
+    assert(!rows(got).exists(r => Set("c", "d").contains(r.getString(0))),
+      "words whose count reached zero must vanish")
+  }
+}

@@ -375,18 +375,15 @@ object Graft {
     * pruning, shuffling at most |groups|·k·|partitions| rows instead
     * of the corpus the window form moves). `sortCols` MUST be a total
     * order (add a unique tie-break) — ties would otherwise resolve by
-    * partition layout. Registers the planner strategy on the session
-    * idempotently; the config path is
+    * partition layout. Installs graft's planner strategies on the
+    * session (`GraftStrategies.install`); the config path is
     * `spark.sql.extensions=graft.plans.GraftExtensions`. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
                    sortCols: Seq[Column], k: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
     import org.apache.spark.sql.graftbridge.Bridge
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerGroupStrategy
+    graft.plans.GraftStrategies.install(spark)
     val order = sortCols.map(c => Bridge.expressionEager(spark, c) match {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)

@@ -24,6 +24,14 @@ import scala.collection.concurrent.TrieMap
   *    peek and overwrite, for an owner that can tell a stale value.
   *  - [[scratchDir]] — the appId-isolated directory a stored layout
   *    is written to.
+  *  - [[storedBroadcast]] / [[keepBroadcast]] — built broadcast
+  *    relations, one per (session, application, canonical build plan),
+  *    held with the sorted (path, length, mtime) of the files the build
+  *    read. A lookup whose files differ is a miss, and the rebuilt
+  *    relation replaces the entry. They count against the same byte
+  *    budget as the frames; an evicted or cleared one is only dropped,
+  *    never destroyed (a running query may still read it, and
+  *    `ContextCleaner` reclaims it once nothing does).
   *
   * The `tables/<name>` value tags are the session's table catalog
   * (`Tables.tbl`): one fingerprinted schema per fixture table path,
@@ -56,6 +64,7 @@ object Memos {
       @volatile var lastHit: Long)
 
   private val frames = TrieMap.empty[Key, Slot]
+  private val broadcasts = TrieMap.empty[BroadcastKey, BroadcastEntry]
   private val values = TrieMap.empty[Key, Any]
   private val tick = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -88,14 +97,63 @@ object Memos {
 
   /** Bytes currently pinned in the block manager (memory + disk),
     * across ALL cached/checkpointed RDDs — memo entries and any
-    * in-flight query scratch. The budget compares against this total:
-    * what matters at runtime is the real storage pressure, not the
-    * memos' own share of it. */
+    * in-flight query scratch — plus the stored broadcast relations.
+    * The budget compares against this total: what matters at runtime
+    * is the real storage pressure, not the memos' own share of it. */
   def storedBytes(s: SparkSession): Long =
-    s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+    s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum +
+      broadcasts.values.map(_.bytes).sum
 
   /** Cumulative budget evictions (observability + spec hook). */
   val evictions = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Cumulative stored broadcasts served ([[storedBroadcast]] hits) and
+    * built ([[keepBroadcast]] calls). */
+  val broadcastHits = new java.util.concurrent.atomic.AtomicLong(0)
+  val broadcastMisses = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Identity of one stored broadcast. The application id keeps a
+    * relation of a stopped SparkContext from being served to a session
+    * built after it; `plan` is the canonicalized broadcast exchange. */
+  private final case class BroadcastKey(s: SparkSession, app: String,
+      plan: AnyRef)
+
+  /** A built broadcast relation: the files it was built from, its
+    * size, and when it was last served (the LRU clock [[frame]] uses). */
+  final class BroadcastEntry private[Memos] (
+      private[Memos] val key: BroadcastKey,
+      val files: Seq[(String, Long, Long)],
+      val value: org.apache.spark.broadcast.Broadcast[Any],
+      val bytes: Long, val rows: Long,
+      @volatile private[Memos] var lastHit: Long)
+
+  /** The relation stored for broadcast `plan` of session `s`, if one was
+    * built from exactly `files`. A hit counts as served. */
+  def storedBroadcast(s: SparkSession, plan: AnyRef,
+      files: Seq[(String, Long, Long)]): Option[BroadcastEntry] = {
+    val hit = broadcasts.get(broadcastKey(s, plan)).filter(_.files == files)
+    hit.foreach { b =>
+      b.lastHit = tick.incrementAndGet(); broadcastHits.incrementAndGet()
+    }
+    hit
+  }
+
+  /** Store a relation built for broadcast `plan` from `files`, replacing
+    * any earlier entry of that plan, then enforce the budget. */
+  def keepBroadcast(s: SparkSession, plan: AnyRef,
+      files: Seq[(String, Long, Long)],
+      value: org.apache.spark.broadcast.Broadcast[Any],
+      bytes: Long, rows: Long): Unit = synchronized {
+    val key = broadcastKey(s, plan)
+    val b = new BroadcastEntry(key, files, value, bytes, rows,
+      tick.incrementAndGet())
+    broadcastMisses.incrementAndGet()
+    broadcasts.update(key, b)
+    enforceBudget(s, b)
+  }
+
+  private def broadcastKey(s: SparkSession, plan: AnyRef) =
+    BroadcastKey(s, s.sparkContext.applicationId, plan)
 
   /** The memoized frame under (s, d, tag), built on a miss. Admission
     * is atomic: `putIfAbsent` decides the winner of two concurrent
@@ -157,9 +215,13 @@ object Memos {
   private[graft] def frameCount(s: SparkSession, d: String): Int =
     frames.keys.count(k => (k.s eq s) && k.dir == d)
 
-  /** Evict every memo: frames are released, values dropped. Safe to
-    * call between fixtures or before a cold-cache measurement; the
-    * next query rebuilds what it needs. The map is emptied BEFORE the
+  /** Stored broadcasts of session `s`. */
+  private[graft] def broadcastsOf(s: SparkSession): Seq[BroadcastEntry] =
+    broadcasts.values.filter(_.key.s eq s).toSeq
+
+  /** Evict every memo: frames are released, values and stored
+    * broadcasts dropped. Safe to call between fixtures or before a
+    * cold-cache measurement; the next query rebuilds what it needs. The map is emptied BEFORE the
     * releases, so [[release]]'s shared-RDD exclusion set no longer
     * counts the dropped slots as live and every shared RDD is freed. */
   def clearAll(): Unit = {
@@ -170,6 +232,7 @@ object Memos {
     }
     dropped.foreach(sl => release(sl.df))
     values.clear()
+    broadcasts.clear()
   }
 
   /** Fully release a memoized frame: the CacheManager entry and any
@@ -198,11 +261,11 @@ object Memos {
     }
   }
 
-  /** Evict least-recently-hit frames until the block manager total
-    * fits the budget. The just-admitted frame is exempt; if
-    * everything evictable is gone and the total still exceeds the
-    * budget, the residue is in-flight query scratch — released by its
-    * own query's end-of-call discipline.
+  /** Evict least-recently-hit entries — frames and stored broadcasts —
+    * until [[storedBytes]] fits the budget. The just-admitted entry is
+    * exempt; if everything evictable is gone and the total still
+    * exceeds the budget, the residue is in-flight query scratch —
+    * released by its own query's end-of-call discipline.
     *
     * Known slack (accepted): a persisted (non-checkpointed) entry's
     * blocks only materialize at its first action, so `storedBytes`
@@ -211,18 +274,18 @@ object Memos {
     * largest entry's size, which the half-heap default leaves room
     * for by construction. */
   private def enforceBudget(s: SparkSession,
-                            justAdmitted: DataFrame): Unit = synchronized {
+                            justAdmitted: AnyRef): Unit = synchronized {
     val budget = budgetBytes(s)
     if (budget <= 0 || storedBytes(s) <= budget) return
-    val sorted = frames.values.toSeq
-      .filter(_.df ne justAdmitted)
-      .sortBy(_.lastHit)
+    val victims: Seq[(Long, () => Unit)] =
+      frames.values.toSeq.filter(_.df ne justAdmitted).map(v =>
+        v.lastHit -> (() => { frames.remove(v.key, v); release(v.df) })) ++
+      broadcasts.values.toSeq.filter(_ ne justAdmitted).map(v =>
+        v.lastHit -> (() => { broadcasts.remove(v.key, v); () }))
     // working-set guard: the newest-hit entries are never victims
-    val it = sorted.dropRight(minResident(s)).iterator
+    val it = victims.sortBy(_._1).dropRight(minResident(s)).iterator
     while (storedBytes(s) > budget && it.hasNext) {
-      val v = it.next()
-      frames.remove(v.key, v)
-      release(v.df)
+      it.next()._2()
       evictions.incrementAndGet()
     }
   }

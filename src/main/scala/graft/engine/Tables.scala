@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types._
 
 /** Typed fixture readers for the driver-generated testdata
@@ -26,6 +26,10 @@ object Tables {
     * table catalog: its schema is inferred once per session and
     * re-inferred only when the table's files change.
     *
+    * Every read installs graft's planner strategies on `s`
+    * ([[graft.plans.GraftStrategies]]), among them the reuse of built
+    * broadcast relations across calls.
+    *
     * The catalog entry lives in [[Memos.value]]'s store under tag
     * `tables/<name>` (one entry per path, replaced on change, dropped by
     * [[Memos.clearAll]]) and holds the fingerprint of the files it was
@@ -36,6 +40,7 @@ object Tables {
     * compares fingerprints; on a mismatch the table is inferred again
     * and the entry replaced. A miss returns the inferring read itself. */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
+    graft.plans.GraftStrategies.install(s)
     val path = s"$dir/$name.parquet"
     val tag = s"tables/$name"
     Memos.stored[Entry](s, dir, tag)
@@ -89,15 +94,22 @@ object Tables {
   /** Sorted (path, length, modification time) of the files `df`'s
     * file index listed when the read was built — no second listing and
     * no Spark job. */
-  private def fingerprint(df: DataFrame): Seq[(String, Long, Long)] =
-    df.queryExecution.analyzed.collectFirst {
+  private def fingerprint(df: DataFrame): Seq[(String, Long, Long)] = {
+    val index = df.queryExecution.analyzed.collectFirst {
       case l: LogicalRelation => l.relation
-    }.collect { case r: HadoopFsRelation => r.location } match {
-      case Some(i: PartitioningAwareFileIndex) => i.allFiles()
+    }.collect { case r: HadoopFsRelation => r.location }
+    index.flatMap(listed).getOrElse(throw new IllegalStateException(
+      s"cannot fingerprint a read whose file index is $index"))
+  }
+
+  /** Sorted (path, length, modification time) of the files a file index
+    * listed, if it is one that lists files itself. */
+  private[graft] def listed(i: FileIndex): Option[Seq[(String, Long, Long)]] =
+    i match {
+      case p: PartitioningAwareFileIndex => Some(p.allFiles()
         .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-        .sorted
-      case other => throw new IllegalStateException(
-        s"cannot fingerprint a read whose file index is $other")
+        .sorted)
+      case _ => None
     }
 
   /** events.parquet physical schema with ts as a raw integer epoch —

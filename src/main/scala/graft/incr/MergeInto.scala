@@ -1,7 +1,11 @@
 package graft.incr
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
@@ -121,7 +125,10 @@ object MergeInto {
     *  2. read `basePath` restricted to those values — the filter is a
     *     partition-directory prune, untouched partitions are never
     *     READ (PartitionPruneSpec-style `PartitionFilters`, no data
-    *     scan);
+    *     scan). The read starts no schema-inference job: the data
+    *     schema comes from one data file's footer ([[writtenSchema]])
+    *     and the partition column is inferred from the directory
+    *     names, as an inferring read does;
     *  3. [[mergeInto]] on just that slice (localCheckpointed before
     *     the write — the q103 read-and-overwrite-same-path
     *     discipline);
@@ -187,18 +194,19 @@ object MergeInto {
         "the hive default partition dir disagree); filter or map them " +
         "to a sentinel first")
     if (touched.isEmpty) return touched
-    val base = s.read.parquet(basePath)
+    val root = new Path(basePath)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val base = writtenSchema(fs, root)
+      .fold(s.read.parquet(basePath))(s.read.schema(_).parquet(basePath))
     val slice = base.filter(col(partCol).isin(touched: _*))
     val merged = mergeInto(slice, delta, keys, whenMatchedUpdate,
         whenMatchedDelete, insertWhenNotMatched,
         whenNotMatchedBySourceDelete, whenMatchedUpdateCond)
       .localCheckpoint()
-    val root = new org.apache.hadoop.fs.Path(basePath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dirs = touched.map(v => new org.apache.hadoop.fs.Path(root,
+    val dirs = touched.map(v => new Path(root,
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .getPartitionPathString(partCol, String.valueOf(v))))
-    def files(p: org.apache.hadoop.fs.Path): Set[String] =
+    def files(p: Path): Set[String] =
       if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet
       else Set.empty
     val before = dirs.map(files)
@@ -210,6 +218,33 @@ object MergeInto {
     }
     merged.unpersist(blocking = false)
     touched
+  }
+
+  /** The schema Spark wrote into the footer of one data file under
+    * `root` (key `org.apache.spark.sql.parquet.row.metadata`; partition
+    * columns are not in it), found by a Hadoop listing and read on the
+    * driver — no Spark job. None when `root` or a data file is missing
+    * or the file carries no such key (not written by Spark). Data files are
+    * what Spark's own listing reads: no path component below `root`
+    * starts with `_` or `.`. */
+  private[graft] def writtenSchema(fs: FileSystem, root: Path)
+      : Option[StructType] = {
+    if (!fs.exists(root)) return None // the inferring read reports it
+    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    def isData(p: Path): Boolean = p.toUri.getPath.stripPrefix(prefix)
+      .split('/').forall(c => !c.startsWith("_") && !c.startsWith("."))
+    val files = fs.listFiles(root, true)
+    var found: Option[Path] = None
+    while (found.isEmpty && files.hasNext) {
+      val p = files.next().getPath
+      if (isData(p)) found = Some(p)
+    }
+    found.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
   val queries: Seq[Query] = Seq(

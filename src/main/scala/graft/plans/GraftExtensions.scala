@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import graft.functions.{FloatDot, FloatDotSafe}
 
@@ -19,6 +20,7 @@ import graft.functions.{FloatDot, FloatDotSafe}
   *   - [[FloatDotRewrite]], an optimizer rule that turns the
   *     declarative HOF dot product into the whole-stage-codegen'd
   *     native expression
+  *   - the planner strategies of [[GraftStrategies]]
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -31,9 +33,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[FloatDotSafe].getCanonicalName, "float_dot"),
       (exprs: Seq[Expression]) => FloatDotSafe(exprs.head, exprs(1))))
     ext.injectOptimizerRule(_ => FloatDotRewrite)
-    // tier-(c): the whole-operator extension — plans TopKPerGroupPlan
-    // to its map-side-pruning physical operator
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
+    GraftStrategies.all.foreach(st => ext.injectPlannerStrategy(_ => st))
+  }
+}
+
+/** graft's planner strategies, and their install on a session built
+  * without [[GraftExtensions]]:
+  *   - [[TopKPerGroupStrategy]] plans `TopKPerGroupPlan` to its
+  *     map-side-pruning physical operator (tier (c));
+  *   - [[BroadcastReuseStrategy]] keeps built broadcast relations
+  *     across queries. */
+object GraftStrategies {
+  val all: Seq[SparkStrategy] = Seq(TopKPerGroupStrategy, BroadcastReuseStrategy)
+
+  /** Add each strategy to `s`'s `experimental.extraStrategies` unless
+    * the session's planner already has it. Cheap and idempotent: the
+    * table readers call it on every read. */
+  def install(s: SparkSession): Unit = {
+    val have = s.sessionState.planner.strategies
+    val missing = all.filterNot(have.contains)
+    if (missing.nonEmpty)
+      s.experimental.extraStrategies = s.experimental.extraStrategies ++ missing
   }
 }
 

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import graft.iter.MrbgPagerank
 import graft.ops.Round12
 
@@ -14,35 +11,6 @@ import graft.ops.Round12
   * bit-equal to their from-scratch forms. */
 class IncrStepSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private val group = "incr-step-spec"
-  private val jobs = new AtomicInteger(0)
-  private lazy val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
-        jobs.incrementAndGet()
-  }
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.addSparkListener(listener)
-  }
-  override def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
-    super.afterAll()
-  }
-
-  /** `f`'s result and the Spark jobs it started in this thread. */
-  private def counted[T](f: => T): (T, Int) = {
-    Bridge.drainListenerBus(spark, 10000)
-    jobs.set(0)
-    spark.sparkContext.setJobGroup(group, group)
-    try {
-      val r = f
-      Bridge.drainListenerBus(spark, 10000)
-      (r, jobs.get())
-    } finally spark.sparkContext.clearJobGroup()
-  }
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -108,7 +76,7 @@ class IncrStepSpec extends SparkSpecBase {
 
   test("MrbgPagerank.incrRun: the last iteration is lazy — iters = 1 starts no Spark job") {
     val (c0, s0) = preserved()
-    val (state, started) = counted(incremental(c0, s0, 1))
+    val (state, started) = jobsOf(incremental(c0, s0, 1))
     assert(started == 0, s"incrRun(iters = 1) started $started Spark job(s)")
     assert(rows(state.select("node", "rs")) ==
       rows(fullIterations(1).select("node", "rs")))

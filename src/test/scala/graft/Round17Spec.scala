@@ -26,25 +26,6 @@ class Round17Spec extends SparkSpecBase {
   private def rowsOf(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** Spark jobs `body` starts, counted after draining the listener bus. */
-  private def jobsOf(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark, 10000L)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(spark, 10000L)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
   test("minLabelCollapseLocal == minPropagate on random graphs, both branches") {
     val rnd = new scala.util.Random(17)
     for (trial <- 1 to 8) {
@@ -86,7 +67,7 @@ class Round17Spec extends SparkSpecBase {
     SparkEntry.queries("q_dedup_groups_lsh")(spark, sfDir).count()
     SparkEntry.queries("q_dedup_groups_lsh_incr")(spark, sfDir).count()
     def warmJobs(name: String): Int =
-      jobsOf(SparkEntry.queries(name)(spark, sfDir).count())
+      jobsOf(SparkEntry.queries(name)(spark, sfDir).count())._2
     // q136 warm = edge-count gate + edge collect + label-broadcast
     // build + the count action (orderBy's sort is eliminated under
     // count) ≈ 4-6; pin at 8 for headroom. Before the r17 rework the
@@ -266,17 +247,37 @@ class Round17Spec extends SparkSpecBase {
     }
   }
 
-  test("warm job-count pin: one mergeIntoPartitioned <= 6 jobs") {
+  test("warm job-count pin: one mergeIntoPartitioned <= 5 jobs") {
     withPriorityStore { (basePath, o, delta) =>
       mergeByOp(basePath, o, delta) // first call: code paths warm
       // the same delta again (it reapplies idempotently): the touched
-      // values (one job, no shuffle), the base's schema read, the
-      // merge's checkpoint and the dynamic overwrite. Emptied
-      // partitions come from a file listing, not a job. Measured 6;
-      // the shuffled distincts for the touched and the still-present
-      // values made it 9.
-      val jobs = jobsOf(mergeByOp(basePath, o, delta))
-      assert(jobs <= 6, s"a warm mergeIntoPartitioned ran $jobs jobs (> 6)")
+      // values (one job, no shuffle), the merge's checkpoint and the
+      // dynamic overwrite. The base's schema comes from a footer read
+      // on the driver, and emptied partitions from a file listing —
+      // neither is a job. Measured 5; an inferring base read made it
+      // 6, and the shuffled distincts for the touched and the
+      // still-present values 9.
+      val jobs = jobsOf(mergeByOp(basePath, o, delta))._2
+      assert(jobs <= 5, s"a warm mergeIntoPartitioned ran $jobs jobs (> 5)")
+    }
+  }
+
+  test("mergeIntoPartitioned's base schema: the footer's data schema plus " +
+      "the inferred partition column equal an inferring read, with no job") {
+    import graft.incr.MergeInto
+    withPriorityStore { (basePath, _, _) =>
+      val root = new org.apache.hadoop.fs.Path(basePath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (written, jobs) = jobsOf(MergeInto.writtenSchema(fs, root))
+      assert(jobs == 0)
+      assert(written.map(_.fieldNames.toSeq) ==
+        Some(Seq("o_orderkey", "o_totalprice")))
+      assert(spark.read.schema(written.get).parquet(basePath).schema ==
+        spark.read.parquet(basePath).schema)
+      // no data file: the caller falls back to the inferring read
+      fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_empty"))
+      assert(MergeInto.writtenSchema(fs,
+        new org.apache.hadoop.fs.Path(root, "_empty")).isEmpty)
     }
   }
 

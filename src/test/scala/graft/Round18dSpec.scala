@@ -23,22 +23,8 @@ import org.apache.spark.sql.functions._
   * regained per-round actions — check those first (r17 lesson). */
 class Round18dSpec extends SparkSpecBase {
 
-  private def warmJobs(name: String): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      SparkEntry.queries(name)(spark, sfDir).count()
-      org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(spark, 10000L)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
+  private def warmJobs(name: String): Int =
+    jobsOf(SparkEntry.queries(name)(spark, sfDir).count())._2
 
   test("r18 optimization warm job-count pins") {
     for (q <- Seq("q_incr_cc_delete", "q_apriori_triples",

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -16,6 +17,28 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
     d.map("%02x".format(_)).mkString
+  }
+
+  /** `body`'s result and the number of Spark jobs it started on `s`'s
+    * context. The listener bus delivers asynchronously, so it is
+    * drained before the count starts (no earlier job's late event is
+    * counted) and again before the count is read (no tail job is
+    * missed). */
+  def jobsOf[T](body: => T, s: SparkSession = spark): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Bridge.drainListenerBus(s, 10000L)
+    s.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      Bridge.drainListenerBus(s, 10000L)
+      (r, jobs.get())
+    } finally s.sparkContext.removeSparkListener(l)
   }
 
   /** Recursively delete a spec-created scratch directory. */

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.Bridge
 import graft.engine.{Memos, Tables}
 
 /** The per-session table catalog behind `Tables.tbl`: a table's schema
@@ -14,35 +11,6 @@ import graft.engine.{Memos, Tables}
   * every listed file, nested partition files included). */
 class TablesCatalogSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private val group = "tables-catalog-spec"
-  private val jobs = new AtomicInteger(0)
-  private lazy val listener = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
-        jobs.incrementAndGet()
-  }
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.sparkContext.addSparkListener(listener)
-  }
-  override def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
-    super.afterAll()
-  }
-
-  /** `f`'s result and the Spark jobs it started in this thread. */
-  private def counted[T](s: SparkSession)(f: => T): (T, Int) = {
-    Bridge.drainListenerBus(s, 10000)
-    jobs.set(0)
-    s.sparkContext.setJobGroup(group, group)
-    try {
-      val r = f
-      Bridge.drainListenerBus(s, 10000)
-      (r, jobs.get())
-    } finally s.sparkContext.clearJobGroup()
-  }
 
   private def rows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
@@ -58,9 +26,9 @@ class TablesCatalogSpec extends SparkSpecBase {
   test("(a) a second tbl of an unchanged table starts no Spark job and returns the same rows") {
     withDir("a") { dir =>
       Seq((1L, "x"), (2L, "y")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
-      val (first, inferJobs) = counted(spark)(Tables.tbl(spark, dir, "t"))
+      val (first, inferJobs) = jobsOf(Tables.tbl(spark, dir, "t"))
       assert(inferJobs > 0, "the first read must infer the schema")
-      val (second, jobsAgain) = counted(spark)(Tables.tbl(spark, dir, "t"))
+      val (second, jobsAgain) = jobsOf(Tables.tbl(spark, dir, "t"))
       assert(jobsAgain == 0, s"a cached resolution started $jobsAgain job(s)")
       assert(second.schema == first.schema)
       assert(rows(second) == rows(first))
@@ -73,11 +41,11 @@ class TablesCatalogSpec extends SparkSpecBase {
       Seq((1L, "x"), (2L, "y")).toDF("id", "v").write.parquet(path)
       assert(rows(Tables.tbl(spark, dir, "t")) == Seq(Row(1L, "x"), Row(2L, "y")))
       Seq((3L, "z", 3.5)).toDF("id", "v", "w").write.mode("overwrite").parquet(path)
-      val (df, reinfer) = counted(spark)(Tables.tbl(spark, dir, "t"))
+      val (df, reinfer) = jobsOf(Tables.tbl(spark, dir, "t"))
       assert(df.columns.toSeq == Seq("id", "v", "w"))
       assert(rows(df) == Seq(Row(3L, "z", 3.5)))
       assert(reinfer > 0, "a changed table must be inferred again")
-      val (again, jobsAgain) = counted(spark)(Tables.tbl(spark, dir, "t").schema)
+      val (again, jobsAgain) = jobsOf(Tables.tbl(spark, dir, "t").schema)
       assert(jobsAgain == 0, "the replaced entry must serve the next read")
       assert(again == df.schema)
     }
@@ -92,7 +60,7 @@ class TablesCatalogSpec extends SparkSpecBase {
         .select("v").as[Long].collect().toSeq == Seq(20L))
       Seq((2L, 99L), (4L, 98L)).toDF("id", "v")
         .write.mode("overwrite").parquet(s"$path/p=2")
-      val (df, reinfer) = counted(spark)(Tables.tbl(spark, dir, "t"))
+      val (df, reinfer) = jobsOf(Tables.tbl(spark, dir, "t"))
       assert(reinfer > 0, "a rewritten partition must change the fingerprint")
       assert(df.columns.toSeq == Seq("id", "v", "p"))
       assert(rows(df) == Seq(Row(1L, 10L, 1), Row(2L, 99L, 2), Row(3L, 30L, 3),
@@ -107,7 +75,7 @@ class TablesCatalogSpec extends SparkSpecBase {
       assert(entry(spark, dir, "t").isDefined)
       Memos.clearAll()
       assert(entry(spark, dir, "t").isEmpty)
-      val (df, reinfer) = counted(spark)(Tables.tbl(spark, dir, "t"))
+      val (df, reinfer) = jobsOf(Tables.tbl(spark, dir, "t"))
       assert(reinfer > 0, "after clearAll the table must be inferred again")
       assert(rows(df) == Seq(Row(1L), Row(2L)))
     }
@@ -119,7 +87,7 @@ class TablesCatalogSpec extends SparkSpecBase {
       Tables.tbl(spark, dir, "t")
       val other = spark.newSession()
       assert(entry(other, dir, "t").isEmpty)
-      val (df, reinfer) = counted(other)(Tables.tbl(other, dir, "t"))
+      val (df, reinfer) = jobsOf(Tables.tbl(other, dir, "t"), other)
       assert(reinfer > 0, "a new session must infer on its own first read")
       assert(rows(df) == Seq(Row(1L), Row(2L)))
       assert(entry(other, dir, "t").isDefined)
@@ -132,9 +100,9 @@ class TablesCatalogSpec extends SparkSpecBase {
       Seq((1L, us / 1000L, 7L, "click", 1.0, "{}")) // epoch millis
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(s"$dir/events.parquet")
-      val (first, sniffJobs) = counted(spark)(Tables.events(spark, dir))
+      val (first, sniffJobs) = jobsOf(Tables.events(spark, dir))
       assert(sniffJobs >= 2, "schema inference plus the one-row unit sample")
-      val (second, jobsAgain) = counted(spark)(Tables.events(spark, dir))
+      val (second, jobsAgain) = jobsOf(Tables.events(spark, dir))
       assert(jobsAgain == 0, s"a cached events read started $jobsAgain job(s)")
       assert(second.schema == first.schema)
       assert(second.select("ts").head().getTimestamp(0).toInstant ==

@@ -334,7 +334,7 @@ object Graft {
   def incrGroupRecompute(base: DataFrame, post: DataFrame,
                          groupCols: Seq[String], affected: DataFrame)
                         (derive: DataFrame => DataFrame): DataFrame =
-    ops.Round11b.incrGroupRecompute(base, post, groupCols, affected)(derive)
+    graft.incr.Maintain.groupRecompute(base, post, groupCols, affected)(derive)
 
   /** Signed incremental wordcount (the i²MapReduce motivating
     * example): maintain token counts from the stored base counts

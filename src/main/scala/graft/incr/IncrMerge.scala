@@ -3,7 +3,7 @@ package graft.incr
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.engine.Query
+import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
 
@@ -23,15 +23,16 @@ import graft.engine.Dec._
 object IncrMerge {
 
   /** Generic signed merge: base rows count as inserts; delta must have
-    * an `op` column ('+'/'-'). Returns per-key signed count and sum. */
+    * an `op` column ('+'/'-'; any other value fails the query). Returns
+    * per-key signed count and sum; a key whose count reaches 0 is kept. */
   def merge(base: DataFrame, delta: DataFrame, keys: Seq[String],
             value: Column): DataFrame = {
-    val all = base.withColumn("op", lit("+")).unionByName(delta)
-    val sign = when(col("op") === "+", lit(1L)).otherwise(lit(-1L))
-    all.groupBy(keys.map(col): _*)
-      .agg(sum(sign).as("n"),
-        dbl(sum(when(col("op") === "+", dec2(value))
-          .otherwise(-dec2(value)))).as("val_sum"))
+    val signed = Maintain.signedBy(col("op")) _
+    val rows = base.withColumn("op", lit("+")).unionByName(delta)
+      .select(keys.map(col) :+ signed(lit(1L)).as("n") :+
+        signed(dec2(value)).as("val_sum"): _*)
+    Maintain.signedMerge(keys, Seq("n", "val_sum"), Seq(rows))(lit(true))
+      .withColumn("val_sum", dbl(col("val_sum")))
   }
 
   /** Incrementally-maintainable DISTINCT COUNT state: per-key HLL
@@ -74,9 +75,7 @@ object IncrMerge {
   /** Merge any number of partial sets by re-aggregating the
     * associative components. */
   def mergePartials(keys: Seq[String], parts: DataFrame*): DataFrame =
-    parts.reduce(_.unionByName(_))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("n")).as("n"), sum(col("psum")).as("psum"))
+    Maintain.signedMerge(keys, Seq("n", "psum"), parts)(lit(true))
 
   private val cutoff = "2024-01-20"
 
@@ -116,8 +115,8 @@ object IncrMerge {
       * genuine parquet scan, not the in-memory lineage), merged with
       * the delta's partials, finalized. The oracle is the full
       * recompute over all of history — restart must be value-identical
-      * while reading only |keys| + |delta| rows. The scratch dir is
-      * deleted after the result materializes. */
+      * while reading only |keys| + |delta| rows. The partials are
+      * rewritten under the session's scratch dir on every call. */
     Query("q_incr_restart",
       /** q103 oracle: the FULL recompute — two-level exact-decimal
         * partial sums equal the one-shot sum bit-for-bit. */
@@ -127,23 +126,17 @@ object IncrMerge {
          FROM events GROUP BY event_type ORDER BY event_type""")((s, d) => {
       val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
-      val dir = java.nio.file.Files.createTempDirectory("graft_mrbg")
-      try {
-        writePartials(
-          partials(ev.filter(col("ts") < cut), Seq("event_type"), col("value")),
-          s"$dir/base")
-        val stored = s.read.parquet(s"$dir/base")
-        val delta =
-          partials(ev.filter(col("ts") >= cut), Seq("event_type"), col("value"))
-        mergePartials(Seq("event_type"), stored, delta)
-          .select(col("event_type"), col("n"), dbl(col("psum")).as("val_sum"))
-          .orderBy("event_type")
-          .localCheckpoint() // materialize before the scratch dir dies
-      } finally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      val dir = Memos.scratchDir(s, d, "incr/restart")
+      writePartials(
+        partials(ev.filter(col("ts") < cut), Seq("event_type"), col("value")),
+        s"$dir/base")
+      val stored = s.read.parquet(s"$dir/base")
+      val delta =
+        partials(ev.filter(col("ts") >= cut), Seq("event_type"), col("value"))
+      mergePartials(Seq("event_type"), stored, delta)
+        .select(col("event_type"), col("n"), dbl(col("psum")).as("val_sum"))
+        .orderBy("event_type")
+        .localCheckpoint() // materialize before the next call overwrites
     }),
 
     /** q47: kv-level upsert = delete+insert [P §3]: last-write-wins

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Maintain
 
 /** §2 row 45 — Apriori-style frequent 2-itemset mining (paper workload
   * [P §7]); items = distinct tokens per document.
@@ -204,12 +205,8 @@ object Apriori {
     val insCnts = frequentItemsets(insToks, k, 1L)     // insert-sized
     val delToks = baseToks.join(deletedIds, Seq("doc_id"), "left_semi")
     val delCnts = frequentItemsets(delToks, k, 1L)     // deletion-sized
-    baseState.select(col("items"), col("support"))
-      .unionByName(insCnts.select(col("items"), col("support")))
-      .unionByName(delCnts.select(col("items"),
-        (-col("support")).as("support")))
-      .groupBy("items").agg(sum("support").as("support"))
-      .filter(col("support") >= minSup)
+    Maintain.signedMerge(Seq("items"), Seq("support"),
+      Seq(baseState, insCnts), Seq(delCnts))(col("support") >= minSup)
   }
 
   val queries: Seq[Query] = Seq(

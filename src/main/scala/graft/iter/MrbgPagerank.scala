@@ -3,6 +3,7 @@ package graft.iter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
+import graft.incr.Maintain
 
 /** MRBGraph-style incremental PageRank — the reference's PRESERVED
   * intermediate state + delta accumulation + change-threshold filter
@@ -75,9 +76,9 @@ object MrbgPagerank {
       val oldC = c.join(broadcast(frontier), "src")
       // newC − oldC per dst: additions (no old row) add c, deletions
       // (no new row) subtract, survivors adjust by the difference
-      val dS = newC.select(col("dst"), col("c"))
-        .unionByName(oldC.select(col("dst"), (-col("c")).as("c")))
-        .groupBy("dst").agg(sum(col("c")).as("dS"))
+      val dS = Maintain.signedMerge(Seq("dst"), Seq("c"), Seq(newC), Seq(oldC))(
+          lit(true))
+        .withColumnRenamed("c", "dS")
       val s1 = kept(s.join(broadcast(dS), s("node") === dS("dst"), "left")
         .select(col("node"), (col("S") + coalesce(col("dS"), lit(0L))).as("S")))
       val state1 = s1.selectExpr("node", s"${f("S")} AS rs")

@@ -3,6 +3,7 @@ package graft.ops
 import graft.engine.Dec
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Maintain
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -799,16 +800,9 @@ object Analytics {
       val touched = delta
         .select(col("event_type"), expr("(user_id - pmod(user_id, 32)) div 32").as("blk"))
         .distinct()
-      val baseP = Memos.frame(s, d, "analytics_bitmap/bitmap_partials") {
-        val p = bitmapBlocks(base).persist()
-        p.count(); p
-      }
-      val keep = baseP
-        .join(broadcast(touched), Seq("event_type", "blk"), "left_anti")
-      val rec = bitmapBlocks(
-        post.withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32"))
-          .join(broadcast(touched), Seq("event_type", "blk"), "left_semi"))
-      bitmapCounts(keep.unionByName(rec))
+      bitmapCounts(Maintain.groupRecomputeMemo(s, d, "bitmap_partials", base,
+        post.withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")),
+        Seq("event_type", "blk"), touched)(bitmapBlocks))
     }),
 
     /** q222: RFM SEGMENTATION [T analytics surface] — the classic
@@ -846,7 +840,7 @@ object Analytics {
       val affected = ev.filter(col("event_id") % 10 === 0 ||
           col("event_id") % 10 === 1)
         .select("user_id").distinct()
-      rfmSegments(Round11b.incrGroupRecomputeMemo(s, d, "rfm_partials",
+      rfmSegments(Maintain.groupRecomputeMemo(s, d, "rfm_partials",
         base, post, Seq("user_id"), affected)(rfmPerUser))
     }),
 
@@ -986,7 +980,7 @@ object Analytics {
       val affected = ev.filter(col("event_id") % 10 === 0 ||
           col("event_id") % 10 === 1)
         .select("user_id").distinct()
-      Round11b.incrGroupRecompute(base, post, Seq("user_id"),
+      Maintain.groupRecompute(base, post, Seq("user_id"),
           affected)(anomalySigma)
         .orderBy("user_id")
     }),
@@ -1026,18 +1020,11 @@ object Analytics {
           datediff(to_date(col("ts")), lit("1970-01-01")).as("dnum"),
           expr("(user_id - pmod(user_id, 32)) div 32").as("blk"))
         .distinct()
-      val baseP = Memos.frame(s, d, "analytics_engagement/dauwau_partials") {
-        val p = dailyBitmaps(base).persist()
-        p.count(); p
-      }
-      val keep = baseP
-        .join(broadcast(touched), Seq("dnum", "blk"), "left_anti")
-      val rec = dailyBitmaps(
+      dauWau(Maintain.groupRecomputeMemo(s, d, "dauwau_partials", base,
         post.withColumn("dnum",
             datediff(to_date(col("ts")), lit("1970-01-01")))
-          .withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32"))
-          .join(broadcast(touched), Seq("dnum", "blk"), "left_semi"))
-      dauWau(keep.unionByName(rec))
+          .withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")),
+        Seq("dnum", "blk"), touched)(dailyBitmaps))
     }),
 
     // Round12e rows (see the section scaladoc above)
@@ -1073,21 +1060,9 @@ object Analytics {
         val p = linregPartials(base).persist()
         p.count(); p
       }
-      def signed(p: DataFrame, sgn: Int) =
-        p.select(col("l_returnflag"),
-          (col("n") * sgn).cast(D38o).as("n"),
-          (col("sx") * sgn).cast(D38o).as("sx"),
-          (col("sy") * sgn).cast(D38o).as("sy"),
-          (col("sxy") * sgn).cast(D38o).as("sxy"),
-          (col("sxx") * sgn).cast(D38o).as("sxx"))
-      val merged = signed(baseP, 1)
-        .unionByName(signed(linregPartials(ins), 1))
-        .unionByName(signed(linregPartials(del), -1))
-        .groupBy("l_returnflag")
-        .agg(sum("n").cast(D38o).as("n"), sum("sx").cast(D38o).as("sx"),
-          sum("sy").cast(D38o).as("sy"), sum("sxy").cast(D38o).as("sxy"),
-          sum("sxx").cast(D38o).as("sxx"))
-        .filter(col("n") > 0)
+      val merged = Maintain.signedMerge(Seq("l_returnflag"),
+        Seq("n", "sx", "sy", "sxy", "sxx"),
+        Seq(baseP, linregPartials(ins)), Seq(linregPartials(del)))(col("n") > 0)
       linregFinalize(merged)
     }),
 
@@ -1109,7 +1084,7 @@ object Analytics {
           col("event_id") % 10 === 1)
         .select("user_id").distinct()
       attributionRollup(
-        Round11b.incrGroupRecomputeMemo(s, d, "attr_credits",
+        Maintain.groupRecomputeMemo(s, d, "attr_credits",
           base, post, Seq("user_id"), affected)(
           df => attrPerPurchase(df)))
     }),
@@ -1194,7 +1169,7 @@ object Analytics {
           col("event_id") % 10 === 1)
         .select("user_id").distinct()
       lifecycleFromActives(
-        Round11b.incrGroupRecomputeMemo(s, d, "lifecycle_actives",
+        Maintain.groupRecomputeMemo(s, d, "lifecycle_actives",
           base, post, Seq("user_id"), affected)(activesOf))
     }),
 
@@ -1348,15 +1323,9 @@ object Analytics {
         val p = chisqCounts(base).persist()
         p.count(); p
       }
-      def signed(p: DataFrame, sgn: Int) =
-        p.select(col("event_type"),
-          (col("a") * sgn).as("a"), (col("c") * sgn).as("c"))
-      val merged = signed(baseP, 1)
-        .unionByName(signed(chisqCounts(ins), 1))
-        .unionByName(signed(chisqCounts(del), -1))
-        .groupBy("event_type")
-        .agg(sum("a").as("a"), sum("c").as("c"))
-        .filter(col("a") + col("c") > 0)
+      val merged = Maintain.signedMerge(Seq("event_type"), Seq("a", "c"),
+        Seq(baseP, chisqCounts(ins)), Seq(chisqCounts(del)))(
+        col("a") + col("c") > 0)
       chisqFinalize(merged)
     })
   )

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Maintain
 
 /** Round-11 second/third/fourth batches (SURVEY §2 rows 162-174): declared
   * queries that widen the relational surface (window distribution
@@ -40,47 +41,6 @@ object Round11b {
       e.count() // materialize so both join sides read cached rows
       e
     }
-
-  /** GENERIC group-level incremental recompute — the i2MapReduce
-    * rule behind the whole signed-delta family (sessionize q140, SCD2
-    * q143, streaks q176, …) as a reusable combinator: any per-group
-    * derivation whose output depends only on its own group's rows is
-    * maintained under a delta by passing untouched groups' results
-    * THROUGH (production: read back from the partials store — `derive`
-    * over the anti-join is the from-scratch stand-in with identical
-    * rows) and re-deriving exactly the touched groups from their
-    * post-delta rows. `affected` is the delta's group-key set —
-    * delta-proportional, broadcast (never a corpus shuffle). */
-  def incrGroupRecompute(base: DataFrame, post: DataFrame,
-                         groupCols: Seq[String], affected: DataFrame)
-                        (derive: DataFrame => DataFrame): DataFrame = {
-    val aff = broadcast(affected)
-    derive(base.join(aff, groupCols, "left_anti"))
-      .unionByName(derive(post.join(aff, groupCols, "left_semi")))
-  }
-
-  /** MEMOIZED variant of [[incrGroupRecompute]] — the stored-state
-    * form the paper's preserved-state rule prescribes: the base-side
-    * per-group partials are derived ONCE per (session, fixture,
-    * label), persisted, and thereafter maintained by anti-join
-    * pass-through (untouched groups' STORED partials are reused
-    * verbatim, never re-derived) + semi-join recompute of touched
-    * groups from post-delta facts. `derive` must emit the group
-    * keys; `affected` must be the delta's group-key set. Used by
-    * q224 (RFM), q232 (attribution), q236 (lifecycle); q229 mirrors
-    * the same rule at (day, block)-cell grain on its own memo. */
-  def incrGroupRecomputeMemo(s: SparkSession, d: String, label: String,
-                             base: DataFrame, post: DataFrame,
-                             groupCols: Seq[String], affected: DataFrame)
-                            (derive: DataFrame => DataFrame): DataFrame = {
-    val baseP = Memos.frame(s, d, s"round11b/$label") {
-      val p = derive(base).persist()
-      p.count(); p
-    }
-    baseP.join(broadcast(affected), groupCols, "left_anti")
-      .unionByName(
-        derive(post.join(broadcast(affected), groupCols, "left_semi")))
-  }
 
   /** GENERIC transition matrix (the q163 shape on caller columns):
     * per-`userCol` timeline ordered by (`tsCol`, `tieCol`), the
@@ -788,7 +748,7 @@ object Round11b {
       val affected = ins.select("user_id")
         .unionByName(base.filter(delPred).select("user_id"))
         .distinct()
-      incrGroupRecompute(base, base.filter(!delPred).unionByName(ins),
+      Maintain.groupRecompute(base, base.filter(!delPred).unionByName(ins),
         Seq("user_id"), affected)(activityStreaks(_, "user_id", "ts"))
         .orderBy("user_id")
     }),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Maintain
 
 /** Round-12 declared queries (SURVEY §2 rows 180-188): the paper's own
   * motivating example promoted to a declared row (signed incremental
@@ -45,12 +46,11 @@ object Round12 {
     * in one shuffle. */
   def incrTokenCounts(baseCounts: DataFrame, insertDocs: DataFrame,
                       deleteDocs: DataFrame, textCol: String): DataFrame = {
-    def toks(dd: DataFrame, sign: Long) = dd
-      .select(explode(split(col(textCol), " ")).as("word"), lit(sign).as("n"))
-    baseCounts.unionByName(toks(insertDocs, 1L))
-      .unionByName(toks(deleteDocs, -1L))
-      .groupBy("word").agg(sum(col("n")).as("n_total"))
-      .filter(col("n_total") > 0)
+    def toks(dd: DataFrame) = dd
+      .select(explode(split(col(textCol), " ")).as("word"), lit(1L).as("n"))
+    Maintain.signedMerge(Seq("word"), Seq("n"),
+        Seq(baseCounts, toks(insertDocs)), Seq(toks(deleteDocs)))(col("n") > 0)
+      .withColumnRenamed("n", "n_total")
   }
 
   /** Chunk occurrence relation: (h, doc_id) — one row per full
@@ -82,11 +82,10 @@ object Round12 {
                      chunkTokens: Int): DataFrame =
     chunkGroupsOf(chunkOccurrences(docs, idCol, textCol, chunkTokens))
 
-  /** Per-value counts of column `c` with sign — one leg of the
-    * signed profile state. */
-  private def signedValueCounts(df: DataFrame, c: String,
-                                sign: Int): DataFrame = df
-    .groupBy(col(c).as("v")).agg((count(lit(1)) * sign).as("n"))
+  /** Per-value counts (v, n) of column `c` — one leg of the profile
+    * state. */
+  private def valueCounts(df: DataFrame, c: String): DataFrame = df
+    .groupBy(col(c).as("v")).agg(count(lit(1)).as("n"))
 
   /** GENERIC incremental profile merge from a PRE-BUILT base state
     * (the partials store a production run reads back): signed merge
@@ -94,17 +93,16 @@ object Round12 {
     * values vanish. */
   def valueCountStateFrom(baseCounts: DataFrame, insert: DataFrame,
                           delete: DataFrame, c: String): DataFrame =
-    baseCounts.unionByName(signedValueCounts(insert, c, 1))
-      .unionByName(signedValueCounts(delete, c, -1))
-      .groupBy("v").agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0)
+    Maintain.signedMerge(Seq("v"), Seq("n"),
+      Seq(baseCounts, valueCounts(insert, c)), Seq(valueCounts(delete, c)))(
+      col("n") > 0)
 
   /** GENERIC incremental profile state: per-value counts of column
     * `c` — the exact-NDV preserved state [P §3]. Signed merge of
     * base/insert/delete value counts; zero-count values vanish. */
   def valueCountState(base: DataFrame, insert: DataFrame,
                       delete: DataFrame, c: String): DataFrame =
-    valueCountStateFrom(signedValueCounts(base, c, 1), insert, delete, c)
+    valueCountStateFrom(valueCounts(base, c), insert, delete, c)
 
   /** Profile row (q185 shape) derived from a per-value count state —
     * every statistic is a fold over the NDV-sized state, never the
@@ -650,7 +648,7 @@ object Round12 {
         docs.filter(p), "doc_id", "text", chunkTokens = 16)
       val affected = occ(col("doc_id") % 10 === 0 ||
         col("doc_id") % 10 === 1).select("h").distinct()
-      Round11b.incrGroupRecompute(
+      Maintain.groupRecompute(
           occ(col("doc_id") % 10 =!= 0),
           occ(col("doc_id") % 10 =!= 1),
           Seq("h"), affected)(chunkGroupsOf)
@@ -802,9 +800,9 @@ object Round12 {
          GROUP BY o_orderpriority ORDER BY o_orderpriority""")((s, d) => {
       val o = orders(s, d)
         .withColumn("cents", (dec2(col("o_totalprice")) * 100).cast("long"))
-      def vc(p: Column, sign: Int) = o.filter(p)
+      def vc(p: Column) = o.filter(p)
         .groupBy(col("o_orderpriority"), col("cents"))
-        .agg((count(lit(1)) * sign).as("n"))
+        .agg(count(lit(1)).as("n"))
       // r18 A/B NOTE: memoizing the base partials (the q212
       // band_partials pattern) was tried and REVERTED — the three
       // union branches share ONE orders scan in a single stage here,
@@ -812,11 +810,10 @@ object Round12 {
       // the shared scan into more stages/jobs (11 -> 18 warm) with no
       // wall win. The per-invocation base aggregation IS the cheap
       // shape at this plan size.
-      val state = vc(col("o_orderkey") % 10 =!= 0, 1)
-        .unionByName(vc(col("o_orderkey") % 10 === 0, 1))
-        .unionByName(vc(col("o_orderkey") % 10 === 1, -1))
-        .groupBy("o_orderpriority", "cents")
-        .agg(sum(col("n")).as("n")).filter(col("n") > 0)
+      val state = Maintain.signedMerge(Seq("o_orderpriority", "cents"),
+        Seq("n"), Seq(vc(col("o_orderkey") % 10 =!= 0),
+          vc(col("o_orderkey") % 10 === 0)),
+        Seq(vc(col("o_orderkey") % 10 === 1)))(col("n") > 0)
       val w = Window.partitionBy("o_orderpriority").orderBy("cents")
       val totals = state.groupBy("o_orderpriority")
         .agg(sum(col("n")).as("n_rows"))
@@ -1102,7 +1099,7 @@ object Round12 {
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         .map { c =>
           val baseCounts = Memos.frame(s, d, s"round12/profileBase:$c")(
-            signedValueCounts(base, c, 1).persist())
+            valueCounts(base, c).persist())
           profileOfState(valueCountStateFrom(baseCounts, ins, del, c), c)
         }
         .reduce(_ unionByName _)

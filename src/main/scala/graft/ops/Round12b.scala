@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Maintain
 import org.apache.spark.sql.graftbridge.Bridge
 import graft.functions.DamerauLevenshtein
 
@@ -900,7 +901,7 @@ object Round12b {
     /** q207: SIGNED-INCREMENTAL FORWARD-FILL [P one-step incremental]
       * — q202 maintained under an event delta (event_id%10==0 insert,
       * ==1 delete; the standing doc-family convention) by the GENERIC
-      * group-recompute rule ([[Round11b.incrGroupRecompute]]):
+      * group-recompute rule ([[Maintain.groupRecompute]]):
       * forward-fill summaries are per-user functions of that user's
       * rows alone, so untouched users' stored rows pass through and
       * only the delta's user set re-derives from post-delta events —
@@ -915,7 +916,7 @@ object Round12b {
       val post = base.filter(col("event_id") % 10 =!= 1).unionByName(ins)
       val affected = ins.select("user_id")
         .unionByName(del.select("user_id")).distinct()
-      Round11b.incrGroupRecompute(base, post, Seq("user_id"), affected)(
+      Maintain.groupRecompute(base, post, Seq("user_id"), affected)(
           ffillSummary)
         .orderBy("user_id")
     }),
@@ -1011,31 +1012,30 @@ object Round12b {
          ORDER BY rule_name""")((s, d) => {
       val li = lineitem(s, d)
       val ordKeys = orders(s, d).select("o_orderkey")
-      def counts(dd: DataFrame, sign: Int) = {
+      def counts(dd: DataFrame) = {
         val orphan = dd.join(broadcast(ordKeys),
             col("l_orderkey") === col("o_orderkey"), "left_anti")
-          .agg((count(lit(1)) * sign).as("v"))
+          .agg(count(lit(1)).as("v"))
           .select(lit("li_fk_orders").as("rule_name"),
-            lit(0L).as("n_checked_d"), col("v").as("n_viol_d"))
+            lit(0L).as("n_checked_raw"), col("v").as("n_violations"))
         val base = dd.agg(
-          (count(lit(1)) * sign).as("n"),
-          (count(when(col("l_quantity") > 30, lit(1))) * sign).as("vq"),
-          (count(when(col("l_discount") < 0 || col("l_discount") > 0.08,
-            lit(1))) * sign).as("vd"))
+          count(lit(1)).as("n"),
+          count(when(col("l_quantity") > 30, lit(1))).as("vq"),
+          count(when(col("l_discount") < 0 || col("l_discount") > 0.08,
+            lit(1))).as("vd"))
         base.select(lit("li_quantity_le_30").as("rule_name"),
-            col("n").as("n_checked_d"), col("vq").as("n_viol_d"))
+            col("n").as("n_checked_raw"), col("vq").as("n_violations"))
           .unionByName(base.select(lit("li_discount_le_008").as("rule_name"),
-            col("n").as("n_checked_d"), col("vd").as("n_viol_d")))
+            col("n").as("n_checked_raw"), col("vd").as("n_violations")))
           .unionByName(orphan)
       }
       // n_checked of the FK rule rides the quantity rule's n (all
       // three rules check every row) — reconstitute per-rule below.
-      val state = counts(li.filter(col("l_orderkey") % 10 =!= 0), 1)
-        .unionByName(counts(li.filter(col("l_orderkey") % 10 === 0), 1))
-        .unionByName(counts(li.filter(col("l_orderkey") % 10 === 1), -1))
-        .groupBy("rule_name")
-        .agg(sum(col("n_checked_d")).as("n_checked_raw"),
-          sum(col("n_viol_d")).as("n_violations"))
+      val state = Maintain.signedMerge(Seq("rule_name"),
+        Seq("n_checked_raw", "n_violations"),
+        Seq(counts(li.filter(col("l_orderkey") % 10 =!= 0)),
+          counts(li.filter(col("l_orderkey") % 10 === 0))),
+        Seq(counts(li.filter(col("l_orderkey") % 10 === 1))))(lit(true))
       val total = state.filter(col("rule_name") === "li_quantity_le_30")
         .select(col("n_checked_raw").as("n_total"))
       state.crossJoin(broadcast(total))
@@ -1076,7 +1076,7 @@ object Round12b {
       * q208 maintained under the event delta (event_id%10: 0=insert,
       * 1=delete) WITHOUT a base rescan, on a join whose result is NOT
       * group-local (a delta row changes pairs involving *other* rows
-      * — the regime where [[Round11b.incrGroupRecompute]] does not
+      * — the regime where [[Maintain.groupRecompute]] does not
       * apply). The mechanism is the LSH touched-bucket design
       * (q139/q147) on a relational operator: stored state =
       * per-attribution-bucket pair partials ([[bandPartials]]); a
@@ -1446,7 +1446,7 @@ object Round12b {
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_matches"),
             min(unix_micros(col("ts"))).as("first_match_us"))
-      Round11b.incrGroupRecompute(base, post, Seq("user_id"), affected)(
+      Maintain.groupRecompute(base, post, Seq("user_id"), affected)(
           derive)
         .orderBy("user_id")
     }),

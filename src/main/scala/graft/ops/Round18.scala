@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Maintain
 
 /** Round-18 extensions (SURVEY.md §2 rows 284–292): the data-mixture /
   * curation diagnostics a training-data pipeline runs between dedup and
@@ -120,22 +121,17 @@ object Round18 {
     docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
 
   /** The q291 maintenance plan over any events-shaped frame
-    * (event_id%10: 0=insert, 1=delete): untouched users' rows pass
-    * through from the base state (anti-join — never re-sorted),
-    * touched users recompute their post-delta series. Public so the
+    * (event_id%10: 0=insert, 1=delete): the touched-group rule with
+    * user = group — untouched users' series pass through from the base
+    * state, touched users recompute their post-delta series. Public so the
     * spec can exercise the pass-through branch on a synthetic frame
     * (the driver fixture's delta touches every user). */
   def incrEwma(ev: DataFrame): DataFrame = {
     val touched = ev
       .filter(col("event_id") % 10 === 0 || col("event_id") % 10 === 1)
       .select("user_id").distinct()
-    val baseState = ewmaOver(ev.filter(col("event_id") % 10 =!= 0))
-    val untouched = baseState.join(touched, Seq("user_id"), "left_anti")
-    val recomputed = ewmaOver(
-      ev.filter(col("event_id") % 10 =!= 1)
-        .join(touched, Seq("user_id"), "left_semi"))
-    untouched.select("event_id", "user_id", "ewma")
-      .unionByName(recomputed.select("event_id", "user_id", "ewma"))
+    Maintain.groupRecompute(ev.filter(col("event_id") % 10 =!= 0),
+      ev.filter(col("event_id") % 10 =!= 1), Seq("user_id"), touched)(ewmaOver)
   }
 
   /** q287/q291 oracle body over a parameterized event source. */
@@ -263,14 +259,12 @@ object Round18 {
            FROM documents WHERE doc_id % 10 <> 1 GROUP BY source)
          $diversitySelect""")((s, d) => {
       val docs = documents(s, d)
-      def cnt(dd: DataFrame, sign: Int) =
-        dd.groupBy("source", "lang")
-          .agg((count(lit(1)) * sign).as("n"))
-      val merged = cnt(docs.filter(col("doc_id") % 10 =!= 0), 1)
-        .unionByName(cnt(docs.filter(col("doc_id") % 10 === 0), 1))
-        .unionByName(cnt(docs.filter(col("doc_id") % 10 === 1), -1))
-        .groupBy("source", "lang").agg(sum("n").as("n"))
-        .filter(col("n") > 0)
+      def cnt(dd: DataFrame) =
+        dd.groupBy("source", "lang").agg(count(lit(1)).as("n"))
+      val merged = Maintain.signedMerge(Seq("source", "lang"), Seq("n"),
+        Seq(cnt(docs.filter(col("doc_id") % 10 =!= 0)),
+          cnt(docs.filter(col("doc_id") % 10 === 0))),
+        Seq(cnt(docs.filter(col("doc_id") % 10 === 1))))(col("n") > 0)
       diversityOver(merged)
     }),
 
@@ -427,16 +421,13 @@ object Round18 {
       // touched-group recompute + pass-through must be result-invisible.
       softDedupSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val docs = documents(s, d)
-      val baseState = softDedupAgg(
-        hashed(docs.filter(col("doc_id") % 10 =!= 0)), "h", "n_dups")
       val deltaH = hashed(docs.filter(
           col("doc_id") % 10 === 0 || col("doc_id") % 10 === 1))
         .select("h").distinct()
-      val untouched = baseState.join(deltaH, Seq("h"), "left_anti")
-      val recomputed = softDedupAgg(
-        hashed(docs.filter(col("doc_id") % 10 =!= 1))
-          .join(deltaH, Seq("h"), "left_semi"), "h", "n_dups")
-      untouched.unionByName(recomputed).orderBy("h")
+      Maintain.groupRecompute(hashed(docs.filter(col("doc_id") % 10 =!= 0)),
+          hashed(docs.filter(col("doc_id") % 10 =!= 1)), Seq("h"), deltaH)(
+          softDedupAgg(_, "h", "n_dups"))
+        .orderBy("h")
     }),
 
     /** q292: SOFT DEDUP OVER NEAR-DUP CLUSTERS [N composition row] —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Query
 import graft.engine.Tables._
+import graft.incr.Maintain
 
 /** Round-6 coverage extensions (SURVEY.md §2 rows 111–130, ops
   * half): batch + incremental sessionization, SCD Type-2 compaction
@@ -187,11 +188,8 @@ object Round6 {
           unix_micros(col("ts")).as("us"))
       val affected = ev.filter(col("ts") >= cut)
         .select("user_id").distinct()
-      val preserved = sessionsOf(
-        ev.filter(col("ts") < cut).join(affected, Seq("user_id"), "left_anti"))
-      val recomputed = sessionsOf(
-        ev.join(affected, Seq("user_id"), "left_semi"))
-      preserved.unionByName(recomputed)
+      Maintain.groupRecompute(ev.filter(col("ts") < cut), ev, Seq("user_id"),
+          affected)(sessionsOf)
         .orderBy("user_id", "session_idx")
     }),
 

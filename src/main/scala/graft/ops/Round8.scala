@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Maintain
 import graft.text.{Dedup, MinHash, Similarity}
 
 /** Round-8 extensions (SURVEY.md §2 rows 133–149, plus rows 153–154
@@ -63,11 +64,8 @@ object Round8 {
     // SIGNED term-keyed merge: base and insert contribute +df,
     // deletions contribute −df; associative, so production folds the
     // delta into stored df state without touching the base corpus
-    val dfMerged = dfOf(tfBase).select(col("term"), col("df"))
-      .unionByName(dfOf(tfDelta))
-      .unionByName(dfOf(tfDeleted).select(col("term"), (-col("df")).as("df")))
-      .groupBy("term").agg(sum("df").as("df"))
-      .filter(col("df") > 0)
+    val dfMerged = Maintain.signedMerge(Seq("term"), Seq("df"),
+      Seq(dfOf(tfBase), dfOf(tfDelta)), Seq(dfOf(tfDeleted)))(col("df") > 0)
     tfSurvive.unionByName(tfDelta)
       .join(broadcast(dfMerged), "term")
       .crossJoin(broadcast(n))
@@ -133,12 +131,9 @@ object Round8 {
     * partials, so the merge is group-cardinality-sized. */
   def viewApplyDelta(base: DataFrame, ins: DataFrame,
                      del: DataFrame): DataFrame =
-    base.unionByName(ins)
-      .unionByName(del.select(col("n_name"),
-        (-col("n")).as("n"), (-col("rev")).as("rev")))
-      .groupBy("n_name")
-      .agg(sum(col("n")).as("n"), dbl(sum(col("rev"))).as("rev"))
-      .filter(col("n") > 0)
+    Maintain.signedMerge(Seq("n_name"), Seq("n", "rev"),
+        Seq(base, ins), Seq(del))(col("n") > 0)
+      .withColumn("rev", dbl(col("rev")))
 
   /** Session memos for the full-corpus LSH intermediates (the
     * `"lsh/..."` memo frames) — the graph/dedup structure memos
@@ -644,12 +639,12 @@ object Round8 {
       val deletedIds = docs.filter(col("doc_id") % 10 === 1)
         .select("doc_id")
       // signed doc-count merge: +1 base, +1 insert, −1 delete
-      val n = docs.filter(col("doc_id") % 10 =!= 0)
-        .select(lit(1L).as("c"))
-        .unionByName(docs.filter(col("doc_id") % 10 === 0)
-          .select(lit(1L).as("c")))
-        .unionByName(deletedIds.select(lit(-1L).as("c")))
-        .agg(sum("c").cast("double").as("n_docs"))
+      def one(dd: DataFrame) = dd.select(lit(1L).as("c"))
+      val n = Maintain.signedMerge(Nil, Seq("c"),
+          Seq(one(docs.filter(col("doc_id") % 10 =!= 0)),
+            one(docs.filter(col("doc_id") % 10 === 0))),
+          Seq(one(deletedIds)))(lit(true))
+        .select(col("c").cast("double").as("n_docs"))
       tfidfApplyDelta(tfBase, tfDelta, deletedIds, n)
         .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
         .limit(20)
@@ -1104,17 +1099,11 @@ object Round8 {
           col("o_orderstatus"))
       val basePred = col("o_orderdate") < cut
       val delPred = basePred && col("o_orderkey") % 10 === 1
-      // delta-custkey-sized: broadcast so the order history never
-      // shuffles for the partition joins (same rationale as q140)
-      val affected = broadcast(
-        o.filter(col("o_orderdate") >= cut).select("o_custkey")
-          .unionByName(o.filter(delPred).select("o_custkey"))
-          .distinct())
-      val preserved = Round6.scd2OfRows(
-        o.filter(basePred).join(affected, Seq("o_custkey"), "left_anti"))
-      val recomputed = Round6.scd2OfRows(
-        o.filter(!delPred).join(affected, Seq("o_custkey"), "left_semi"))
-      preserved.unionByName(recomputed)
+      val affected = o.filter(col("o_orderdate") >= cut).select("o_custkey")
+        .unionByName(o.filter(delPred).select("o_custkey"))
+        .distinct()
+      Maintain.groupRecompute(o.filter(basePred), o.filter(!delPred),
+          Seq("o_custkey"), affected)(Round6.scd2OfRows)
         .orderBy("o_custkey", "valid_from", "o_orderkey")
     }),
 
@@ -1170,18 +1159,13 @@ object Round8 {
       val base = ev.filter(col("ts") < cut)
       val ins = ev.filter(col("ts") >= cut)
       val delPred = col("event_id") % 10 === 1
-      // delta-user-sized: broadcast so the event log never shuffles
-      // for the partition joins — its only exchanges are the two
-      // sessionize sorts themselves (PlanSpec-asserted)
-      val affected = broadcast(ins.select("user_id")
+      // the event log's only exchanges are the two sessionize sorts
+      // (PlanSpec-asserted): the affected set broadcasts
+      val affected = ins.select("user_id")
         .unionByName(base.filter(delPred).select("user_id"))
-        .distinct())
-      val preserved = Round6.sessionsOf(
-        base.join(affected, Seq("user_id"), "left_anti"))
-      val recomputed = Round6.sessionsOf(
-        base.filter(!delPred).unionByName(ins)
-          .join(affected, Seq("user_id"), "left_semi"))
-      preserved.unionByName(recomputed)
+        .distinct()
+      Maintain.groupRecompute(base, base.filter(!delPred).unionByName(ins),
+          Seq("user_id"), affected)(Round6.sessionsOf)
         .orderBy("user_id", "session_idx")
     }),
 

@@ -60,6 +60,21 @@ class FacadeSpec extends SparkSpecBase {
     assert(out.toSeq == Seq(("a", 2L, 50.0), ("b", 1L, 5.0), ("c", 1L, 1.0)))
   }
 
+  test("incrMerge fails on an op other than '+' or '-'") {
+    val sp = spark
+    import sp.implicits._
+    val base = Seq(("a", 10.0)).toDF("k", "v")
+    // the 'I'/'D' encoding of MergeInto: an insert must not count as a delete
+    for (op <- Seq("I", null)) {
+      val delta = Seq(("a", 30.0, op)).toDF("k", "v", "op")
+      val e = intercept[Exception](
+        Graft.incrMerge(base, delta, Seq("k"), col("v")).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("must be '+' or '-'")),
+        s"op = $op: $e")
+    }
+  }
+
   test("tfidf scores match the hand-computed values") {
     val sp = spark
     import sp.implicits._

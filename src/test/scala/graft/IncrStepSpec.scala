@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import graft.incr.IncrMerge
 import graft.iter.MrbgPagerank
 import graft.ops.Round12
 
 /** The incremental steps do no dead work: MRBG's last iteration is one
-  * lazy plan, and the signed wordcount merge is one shuffle. Both stay
-  * bit-equal to their from-scratch forms. */
+  * lazy plan, and the signed merges (wordcount, partials, value counts)
+  * are one shuffle each. They stay bit-equal to their from-scratch forms. */
 class IncrStepSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -108,19 +109,45 @@ class IncrStepSpec extends SparkSpecBase {
     counted.toSeq.toDF("word", "n")
   }
 
-  test("incrTokenCounts: delta tokens and base counts meet in one shuffle (AQE off)") {
+  /** Shuffle exchanges in `df`'s executed plan with AQE off. */
+  private def shuffles(df: DataFrame): Int = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try {
-      val plan = Round12.incrTokenCounts(baseCounts, inserts, deletes, "text")
-        .queryExecution.executedPlan
-      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-      assert(shuffles.size == 1, s"${shuffles.size} shuffles in\n$plan")
-    } finally prev match {
+    try df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }.size
+    finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** `merged` costs its inputs' shuffles plus exactly one: the signed
+    * merge's own exchange on the keys. */
+  private def assertOneMergeShuffle(merged: DataFrame, inputs: DataFrame*): Unit = {
+    val own = shuffles(merged) - inputs.map(shuffles).sum
+    assert(own == 1, s"the merge plans $own shuffles of its own in\n" +
+      merged.queryExecution.executedPlan)
+  }
+
+  test("incrTokenCounts: delta tokens and base counts meet in one shuffle (AQE off)") {
+    assertOneMergeShuffle(Round12.incrTokenCounts(baseCounts, inserts, deletes, "text"))
+  }
+
+  test("IncrMerge.mergePartials: stored and delta partials meet in one shuffle (AQE off)") {
+    val stored = Seq(("a", 2L, BigDecimal("3.50")), ("b", 1L, BigDecimal("1.00")))
+      .toDF("k", "n", "psum")
+    val delta = IncrMerge.partials(
+      Seq(("a", 1.25), ("c", 2.0)).toDF("k", "v"), Seq("k"), col("v"))
+    assertOneMergeShuffle(IncrMerge.mergePartials(Seq("k"), stored, delta), delta)
+  }
+
+  test("Round12.valueCountStateFrom: base and delta value counts meet in one shuffle (AQE off)") {
+    val baseCounts = Seq((1L, 2L), (3L, 1L)).toDF("v", "n")
+    val ins = Seq(1L, 5L).toDF("x")
+    val del = Seq(3L).toDF("x")
+    def counts(df: DataFrame) = df.groupBy(col("x").as("v")).agg(count(lit(1)).as("n"))
+    assertOneMergeShuffle(Round12.valueCountStateFrom(baseCounts, ins, del, "x"),
+      counts(ins), counts(del))
   }
 
   test("incrTokenCounts == from-scratch wordcount when the delta drives words to zero") {

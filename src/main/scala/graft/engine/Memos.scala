@@ -206,10 +206,15 @@ object Memos {
     * stable within a session (writes overwrite — no accumulation
     * across invocations), isolated from concurrent processes on the
     * same fixture by the Spark application id, which also breaks
-    * cross-fixture 32-bit hashCode collisions between processes. */
-  def scratchDir(s: SparkSession, d: String, tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
+    * cross-fixture 32-bit hashCode collisions between processes. The
+    * id makes every application's directory new, so each one is
+    * registered for deletion when the JVM shuts down. */
+  def scratchDir(s: SparkSession, d: String, tag: String): String = {
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
       Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
+    org.apache.spark.sql.graftbridge.Bridge.deleteAtShutdown(dir)
+    dir
+  }
 
   /** Live memo frames of session `s` under fixture dir `d`. */
   private[graft] def frameCount(s: SparkSession, d: String): Int =

@@ -21,6 +21,20 @@ object Sessions {
     spark
   }
 
+  /** Run `body` with `settings` set on `s`, then put every key back as
+    * it was found: its earlier explicit value, or unset. `get(key,
+    * null)` sees only explicit settings (`getOption` falls through to
+    * the entry default), so a key the caller never set is unset after,
+    * not pinned to a default they never chose. */
+  def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val found = settings.map { case (k, _) => k -> Option(s.conf.get(k, null)) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally found.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** `local[n]` with n = `SPARK_GRAFT_CPUS`, default every core. */
   def localCores: String = sys.env.getOrElse(
     "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)

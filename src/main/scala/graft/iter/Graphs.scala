@@ -72,14 +72,14 @@ object Graphs {
     }
 
   /** Note on build parallelism (measured 2026-08-12): the structure
-    * caches are built under the loops' noAqe(8) conf on purpose. An
+    * caches are built under the loop conf (`Loop.conf`) on purpose. An
     * experiment that force-built them first at the session's full 32
     * partitions with AQE on was consistently ~4-7 s SLOWER in the
     * benchmark — at this graph size (1.2M edges) AQE's per-stage
     * re-planning and 32-task stages cost more than they recover. At
     * cluster scale with fact-sized edge lists the balance flips:
     * there the answer is raising the in-loop partition count with
-    * the data (see IterQueries.noAqe), not a separate build conf. */
+    * the data (see `Loop.conf`), not a separate build conf. */
 
   /** GIM-V — the reference's GENERALIZED iterative-matrix-vector
     * operator [P §7], of which PageRank, SSSP and connected

@@ -2,8 +2,10 @@ package graft.iter
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import Loop.{INF, Rank, changedOf, checkpointEvery, conf}
 
 /** §2 group H — iterative processing (the reference's soul, paper
   * [P §4]): a driver-side loop joins loop-variant state to cached
@@ -39,22 +41,14 @@ object IterQueries {
                      allInDeg: Boolean = false): DataFrame = {
     val contribs = edgesDeg
       .join(broadcast(state), state("node") === edgesDeg("src"))
-      .selectExpr("dst", "rs DIV outdeg AS c")
+      .selectExpr("dst", s"${Rank.contribution("rs")} AS c")
       .groupBy("dst").agg(sum(col("c")).as("S"))
     if (allInDeg)
-      contribs.selectExpr("dst AS node",
-        "CAST(1500000000 + (85 * S) DIV 100 AS BIGINT) AS rs")
+      contribs.selectExpr("dst AS node", s"${Rank.assign("S")} AS rs")
     else
       nodes.join(broadcast(contribs), nodes("node") === contribs("dst"), "left")
-        .selectExpr("node",
-          "CAST(1500000000 + (85 * coalesce(S, 0)) DIV 100 AS BIGINT) AS rs")
+        .selectExpr("node", s"${Rank.assign("coalesce(S, 0)")} AS rs")
   }
-
-  /** Lineage is truncated only every few steps: with small FIXED
-    * iteration counts the intermediate states stay lazy and the whole
-    * loop executes as one DAG (no per-step job), while the periodic
-    * checkpoint bounds plan depth for larger counts. */
-  val checkpointEvery = 4
 
   /** Eagerly materialize a query result, then drop the loop's cached
     * inputs: long benchmark sessions run dozens of queries back to
@@ -69,14 +63,9 @@ object IterQueries {
     * returns the materialized final state. */
   def pagerankOn(nodes: DataFrame, edgesDeg: DataFrame, iters: Int,
                  init: DataFrame => DataFrame = n => n,
-                 allInDeg: Boolean = false): DataFrame = {
-    var state = init(nodes).selectExpr("node", "CAST(10000000000 AS BIGINT) AS rs")
-    for (i <- 1 to iters) {
-      state = prStep(nodes, edgesDeg, state, allInDeg)
-      if (i % checkpointEvery == 0) state = state.localCheckpoint()
-    }
-    state.localCheckpoint()
-  }
+                 allInDeg: Boolean = false): DataFrame =
+    Loop.fixed(init(nodes).selectExpr("node", Rank.init), iters)(
+      prStep(nodes, edgesDeg, _, allInDeg)).localCheckpoint()
 
   /** CONVERGENCE-BASED TERMINATION (the reference's distance() +
     * threshold loop control [P §4]): iterate `step` from `init` until
@@ -121,10 +110,10 @@ object IterQueries {
     * The [[iterateUntil]] instantiation of the declared q41 loop. */
   def pagerankUntil(edges0: DataFrame, eps: Double,
                     maxIter: Int): (DataFrame, Int) =
-    noAqe(edges0.sparkSession) {
+    conf(edges0.sparkSession) {
       val edgesDeg = withDeg(edges0)
       val n = Graphs.nodes(edgesDeg).persist()
-      val init = n.selectExpr("node", "CAST(10000000000 AS BIGINT) AS rs")
+      val init = n.selectExpr("node", Rank.init)
       val (state, iters) = iterateUntil(init,
         prStep(n, edgesDeg, _), maxAbsDelta("rs"), eps, maxIter)
       (finish(state, edgesDeg, n), iters)
@@ -134,27 +123,21 @@ object IterQueries {
     * entry point): builds, caches and releases its own structure. */
   def pagerank(edges0: DataFrame, iters: Int,
                init: DataFrame => DataFrame = n => n): DataFrame =
-    noAqe(edges0.sparkSession) {
+    conf(edges0.sparkSession) {
       val edgesDeg = withDeg(edges0)
       val n = Graphs.nodes(edgesDeg).persist()
       val state = pagerankOn(n, edgesDeg, iters, init)
       finish(state, edgesDeg, n)
     }
 
-  /** Run `body` under the iterative-loop conf (AQE off, loop-sized
-    * shuffle partitions) — the public handle for sibling iterative
-    * operators (e.g. [[MrbgPagerank]]); see [[noAqe]] for rationale. */
-  def loopConf[T](s: SparkSession)(body: => T): T = noAqe(s)(body)
+  /** [[Loop.conf]] under the name external callers (perfbench) use. */
+  def loopConf[T](s: SparkSession)(body: => T): T = conf(s)(body)
 
-  /** q41's converged 5-iteration state — shared with q48 and the MRBG
-    * incremental path (identical deterministic computation). */
-  def converged5Shared(s: SparkSession, d: String): DataFrame =
-    converged5(s, d)
-
-  /** q41's converged 5-iteration state, shared with q48 (identical
-    * deterministic computation — memoized per session+dir). */
-  private def converged5(s: SparkSession, d: String): DataFrame =
-    Memos.frame(s, d, "graphs/pr5")(noAqe(s) {
+  /** q41's converged 5-iteration state, shared with q48 and the MRBG
+    * incremental path (identical deterministic computation — memoized
+    * per session+dir). */
+  def converged5(s: SparkSession, d: String): DataFrame =
+    Memos.frame(s, d, "graphs/pr5")(conf(s) {
       // the fixture graph is symmetrized -> every node has in-edges
       pagerankOn(Graphs.nodesCached(s, d), Graphs.edgesDegCached(s, d), 5,
         allInDeg = true)
@@ -168,37 +151,6 @@ object IterQueries {
     edges0.join(broadcast(Graphs.deg(edges0)), "src")
       .select(col("src"), col("dst"), col("outdeg"))
       .persist()
-
-  /** Run `body` with AQE off and a small shuffle-partition count: the
-    * loop's join sides carry explicit broadcast hints and its stage
-    * shapes are static, so AQE's per-exchange re-planning is pure
-    * latency, and the loop-variant frames are node-sized (~20k rows)
-    * — 32 shuffle partitions would mean 32 near-empty tasks per stage
-    * across ~15 stages, all scheduling overhead. (At cluster scale
-    * with big graphs, raise the in-loop parallelism with the data;
-    * the plan shape is unchanged.) */
-  private def noAqe[T](s: SparkSession)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    // Capture the EXPLICIT setting only: getOption answers Some(...)
-    // even for never-set registered entries (it falls through to the
-    // entry default), so restoring it would pin the caller's session
-    // to a value they never chose. get(key, null) bypasses entry
-    // defaults — null means "was not explicitly set" → unset after.
-    def explicit(key: String): Option[String] = Option(s.conf.get(key, null))
-    val prevAqe = explicit(aqeKey)
-    val prevPart = explicit(partKey)
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-    s.conf.set(aqeKey, "false")
-    s.conf.set(partKey, "8")
-    try body finally {
-      restore(aqeKey, prevAqe)
-      restore(partKey, prevPart)
-    }
-  }
 
   /** SQL for one unrolled PageRank stage over edge CTE `e`. */
   private def prStageSql(k: Int, prev: String, e: String, dgc: String): String =
@@ -240,8 +192,6 @@ object IterQueries {
        FROM r${baseIters + incrIters} ORDER BY node"""
   }
 
-  private val INF = 999999999L
-
   /** Min-propagation loop with CHANGE PROPAGATION (the reference's
     * §6 filter [P §6]): only nodes whose value improved in the
     * previous round emit candidates — semantically identical to the
@@ -271,8 +221,7 @@ object IterQueries {
     * lineage depth; short fixed loops whose per-round broadcasts
     * would otherwise re-plan and re-compute a growing join chain
     * (each broadcast build is its own job over the full lineage since
-    * the last materialization) pass 1 to flatten every round — the
-    * r9 LSH-collapse job-cascade fix. */
+    * the last materialization) pass 1 to flatten every round. */
   def minPropagate(edges: DataFrame, state0: DataFrame,
                    changed0: DataFrame, valCol: String,
                    delta: Long, iters: Int,
@@ -290,17 +239,15 @@ object IterQueries {
         .select(col("node"),
           least(col(valCol), coalesce(col("mc"), lit(INF))).as(valCol),
           (coalesce(col("mc"), lit(INF)) < col(valCol)).as("chg"))
-      // r18 opt fifth pass: LAZY checkpoint — the next round's frontier
-      // broadcast build (or the caller's first action) is the job that
-      // materializes it, exactly the minPropagateUntilStable trick.
-      // The eager variant paid one dedicated materialization job per
-      // round (3 jobs/round → 2 on the q283 distributed collapse).
+      // LAZY checkpoint: the next round's frontier broadcast build (or
+      // the caller's first action) is the job that materializes it, as
+      // in minPropagateUntilStable — an eager one would add a dedicated
+      // materialization job per round (2 jobs/round → 3).
       val mat =
         if (i % matEvery == 0) ns.localCheckpoint(eager = false) else ns
       last = mat
       state = mat.select("node", valCol)
-      changed = mat.filter(col("chg"))
-        .select(col("node").as("cnode"), col(valCol).as("cval"))
+      changed = changedOf(mat, valCol)
     }
     last
   }
@@ -332,8 +279,8 @@ object IterQueries {
       .join(state, col("src") === state("node"))
       // sentinel-valued sources can never improve a neighbor
       .filter(col(valCol) < INF)
-      .select(col("node").as("cnode"), col(valCol).as("cval"))
-    val seeds = priorFrontier.unionByName(deltaSeeds).distinct()
+    val seeds = priorFrontier.unionByName(Loop.frontierOf(deltaSeeds, valCol))
+      .distinct()
     minPropagate(edgesNew, state, seeds, valCol, delta, iters)
   }
 
@@ -360,8 +307,7 @@ object IterQueries {
       i += 1
       moving = res.filter(col("chg")).count() > 0
       state = res.select("node", valCol)
-      changed = res.filter(col("chg"))
-        .select(col("node").as("cnode"), col(valCol).as("cval"))
+      changed = changedOf(res, valCol)
     }
     (state, i)
   }
@@ -369,18 +315,18 @@ object IterQueries {
   /** Driver-memory cap (edge rows) for [[minLabelCollapseLocal]] —
     * above it the collapse runs on the distributed [[minPropagate]]
     * instead. Set at the MEASURED crossover, not the memory limit
-    * (r17, quiet-window mins): at sf0.1 (180k directed edges) the
-    * local path wins 0.7 s vs 1.2 s; at sf3 (~1.4M) the two tie
-    * (3.1 s vs r16's 2.9 s distributed); at sf10 (4.58M edges) the
+    * (quiet-window mins on a 32-core host): at sf0.1 (180k directed
+    * edges) the local path wins 0.7 s vs 1.2 s; at sf3 (~1.4M) the
+    * two tie (3.1 s vs 2.9 s distributed); at sf10 (4.58M edges) the
     * collect cost inverts it, 4.4 s local vs 2.5 s distributed. 2M
     * edges ≈ 32 MB packed is also two orders under the driver heap,
     * so the cap is a latency choice with memory safety for free. */
   val LocalCollapseCap: Long = 2L * 1000 * 1000
 
   /** Branch taken by the most recent [[minLabelCollapseLocal]] call
-    * in this JVM — "local" or "distributed" (VERDICT r17 task 3: the
-    * costed selector's decision must be OBSERVABLE in bench
-    * artifacts, not only in specs). Bench nulls it before each row's
+    * in this JVM — "local" or "distributed", so the costed selector's
+    * decision is observable in bench artifacts, not only in specs.
+    * Bench nulls it before each row's
     * samples and emits the surviving value on its `collapse_branch`
     * line; `Round18Spec` pins both values against `localCap`.
     * Plain volatile — Bench runs rows sequentially. */
@@ -393,14 +339,13 @@ object IterQueries {
     * (`Round17Spec` proves it on the fixture pair graph AND on
     * property-tested random graphs).
     *
-    * Why it exists (VERDICT r16 task 1): the distributed loop costs
-    * 3 jobs per round (frontier broadcast build, candidate broadcast
-    * build, checkpoint) — 19 warm jobs for the 5-round LSH collapse —
-    * and on a bursty host every job LAUNCH pays scheduler latency, so
-    * the row's bench reading was hostage to ambient load (6.93 s in
-    * BENCH_r16 vs a 1.21 s quiet min; the r13 A/B had already shown
-    * the warm cost is the local[32] job-launch floor, not data
-    * volume). The collapse's input is the NEAR-DUP PAIR GRAPH — two
+    * Why it exists: the distributed loop costs 3 jobs per round
+    * (frontier broadcast build, candidate broadcast build, checkpoint)
+    * — 19 warm jobs for the 5-round LSH collapse — and on a bursty
+    * host every job LAUNCH pays scheduler latency, so a row's wall
+    * time is hostage to ambient load (measured 6.93 s vs a 1.21 s
+    * quiet min at sf0.1; its warm cost is the job-launch floor, not
+    * data volume). The collapse's input is the NEAR-DUP PAIR GRAPH — two
     * longs per verified pair, the very relation the LSH family
     * already broadcasts under its near-dup-volume scale argument
     * (`lshVerdictJoin`'s kg hint) — so the whole edge list fits where
@@ -423,7 +368,7 @@ object IterQueries {
     * `edges` (src, dst) directed offers; `nodes` (node). Returns
     * (node, label) — nodes with no in-edge keep label = node.
     *
-    * CONTRACT (ADVICE r17): edge endpoints must be ⊆ `nodes`. The two
+    * CONTRACT: edge endpoints must be ⊆ `nodes`. The two
     * branches agree only under it: the distributed [[minPropagate]]
     * joins offers against state, so a src with no state row never
     * offers and never relays; the local branch's round-1 all-srcs
@@ -442,15 +387,15 @@ object IterQueries {
                             knownEdgeCount: Option[Long] = None): DataFrame = {
     require(iters >= 1, "minLabelCollapseLocal needs at least one round")
     val s = nodes.sparkSession
-    // r18 (VERDICT r17 task 1a): callers whose pair graph is a
-    // session-memoized checkpoint pass its memoized count — the gate
-    // then costs zero jobs instead of one count action per
-    // invocation (job launches are what host bursts multiply).
+    // Callers whose pair graph is a session-memoized checkpoint pass
+    // its memoized count — the gate then costs zero jobs instead of
+    // one count action per invocation (job launches are what host
+    // bursts multiply).
     if (knownEdgeCount.getOrElse(edges.count()) > localCap) {
       // over the cap: distributed from round 1 (see scaladoc)
       lastBranch = "distributed"
-      // Round 1 from the IDENTITY state needs no frontier broadcast
-      // (r18, guide §2.4): every node offers exactly its own id, so
+      // Round 1 from the IDENTITY state needs no frontier broadcast:
+      // every node offers exactly its own id, so
       // the candidate relation is just min(src) per dst — one
       // aggregation over the static edge relation — and the round-1
       // state update joins it against `nodes` inside the SAME
@@ -467,12 +412,11 @@ object IterQueries {
           least(col("node"), coalesce(col("mc"), lit(INF))).as("label"),
           (coalesce(col("mc"), lit(INF)) < col("node")).as("chg"))
         // lazy like the round loop: round 2's frontier broadcast
-        // build materializes it (r18 opt fifth pass)
+        // build materializes it
         .localCheckpoint(eager = false)
       if (iters == 1) return st1.select("node", "label")
-      val changed1 = st1.filter(col("chg"))
-        .select(col("node").as("cnode"), col("label").as("cval"))
-      return minPropagate(edges, st1.select("node", "label"), changed1,
+      return minPropagate(edges, st1.select("node", "label"),
+          changedOf(st1, "label"),
           "label", 0L, iters - 1, matEvery = 1)
         .select("node", "label")
     }
@@ -590,9 +534,8 @@ object IterQueries {
       .join(affected, Seq("node"), "left_anti")
       .join(reset, Seq("node"))
       .filter(col(valCol) < INF)
-      .select(col("node").as("cnode"), col(valCol).as("cval"))
-    val (fin, rounds) =
-      minPropagateUntilStable(edgesNew, reset, seeds, valCol, delta, maxIter)
+    val (fin, rounds) = minPropagateUntilStable(edgesNew, reset,
+      Loop.frontierOf(seeds, valCol), valCol, delta, maxIter)
     (fin, affected, rounds)
   }
 
@@ -640,7 +583,7 @@ object IterQueries {
         post("src") === col("node"), "left_semi")
       .coalesce(4)
       .localCheckpoint()
-    // r18: the confined recompute is the min-label collapse from the
+    // The confined recompute is the min-label collapse from the
     // identity state — exactly [[minLabelCollapseLocal]]'s semantics
     // (convergence: its round loop exits when the frontier empties),
     // so it rides the SAME costed selector as the q108 dedup family.
@@ -658,9 +601,7 @@ object IterQueries {
           knownEdgeCount = Some(nInner))
       else {
         lastBranch = "distributed"
-        val rst0 = affected.select(col("node"), col("node").as("label"))
-        val rchanged0 = rst0
-          .select(col("node").as("cnode"), col("label").as("cval"))
+        val (rst0, rchanged0) = Loop.identity(affected)
         minPropagateUntilStable(
           innerE, rst0, rchanged0, "label", 0L, maxIter)._1
       }
@@ -672,53 +613,42 @@ object IterQueries {
     * every iteration. O(edges) per iteration regardless of progress;
     * exists for spec comparison, not production use. */
   def minFullLoop(edges: DataFrame, state0: DataFrame, valCol: String,
-                  delta: Long, iters: Int): DataFrame = {
-    var state = state0
-    for (i <- 1 to iters) {
+                  delta: Long, iters: Int): DataFrame =
+    Loop.fixed(state0, iters) { state =>
       val cand = edges.join(broadcast(state), state("node") === edges("src"))
         .select(col("dst"), (col(valCol) + delta).as("cand"))
         .groupBy("dst").agg(min(col("cand")).as("mc"))
-      val ns = state.join(broadcast(cand), state("node") === cand("dst"), "left")
+      state.join(broadcast(cand), state("node") === cand("dst"), "left")
         .select(col("node"),
           least(col(valCol), coalesce(col("mc"), lit(INF))).as(valCol))
-      state = if (i % checkpointEvery == 0) ns.localCheckpoint() else ns
     }
-    state
-  }
-
-  private def minLoopDelta(edges: DataFrame, state0: DataFrame,
-                           changed0: DataFrame, valCol: String,
-                           delta: Long, iters: Int): DataFrame =
-    minPropagate(edges, state0, changed0, valCol, delta, iters)
-      .select("node", valCol)
 
   /** Generic SSSP over an arbitrary directed `(src, dst)` edge list:
     * unit weights, `iters` relaxation rounds from `source`;
     * unreachable nodes keep the 999999999 sentinel. Facade entry. */
   def sssp(edges0: DataFrame, source: Long, iters: Int): DataFrame =
-    noAqe(edges0.sparkSession) {
-      val edges = edges0.persist()
-      val n = Graphs.allNodes(edges).persist()
-      val state0 = n.select(col("node"),
-        when(col("node") === source, 0L).otherwise(INF).as("dist"))
-      val changed0 = state0.filter(col("dist") === 0)
-        .select(col("node").as("cnode"), col("dist").as("cval"))
-      finish(minLoopDelta(edges, state0, changed0, "dist", 1L, iters),
-        edges, n)
-    }
+    minFacade(edges0, Loop.fromSource(_, source), "dist", 1L, iters)
 
   /** Generic connected components (min-label propagation) over an
     * arbitrary directed edge list; labels flow along edge direction,
     * so pass a symmetrized list for undirected semantics. */
   def connectedComponents(edges0: DataFrame, iters: Int): DataFrame =
-    noAqe(edges0.sparkSession) {
-      val edges = edges0.persist()
+    minFacade(edges0, Loop.identity, "label", 0L, iters)
+
+  /** [[minPropagate]] over a caller's edge list from the start pair
+    * `start` builds on its node set. The edges are cached for the loop
+    * unless the caller already cached them — only what this call
+    * cached is released, so a caller's cache survives the call. */
+  private def minFacade(edges0: DataFrame,
+                        start: DataFrame => (DataFrame, DataFrame),
+                        valCol: String, delta: Long, iters: Int): DataFrame =
+    conf(edges0.sparkSession) {
+      val owned = edges0.storageLevel == StorageLevel.NONE
+      val edges = if (owned) edges0.persist() else edges0
       val n = Graphs.allNodes(edges).persist()
-      val state0 = n.select(col("node"), col("node").as("label"))
-      val changed0 = state0
-        .select(col("node").as("cnode"), col("label").as("cval"))
-      finish(minLoopDelta(edges, state0, changed0, "label", 0L, iters),
-        edges, n)
+      val (state0, changed0) = start(n)
+      finish(minPropagate(edges, state0, changed0, valCol, delta, iters)
+        .select("node", valCol), (if (owned) Seq(edges, n) else Seq(n)): _*)
     }
 
   private def minStageSql(k: Int, valCol: String, delta: Int,
@@ -759,7 +689,7 @@ object IterQueries {
   }
 
   val queries: Seq[Query] = Seq(
-    /** q283 (r18, VERDICT r17 task 7): the DISTRIBUTED collapse
+    /** q283: the DISTRIBUTED collapse
       * branch at DRIVER-BENCH scale — connected-component labels
       * (FIXED 5 min-label rounds, the q108 determinism discipline)
       * over the symmetrized order–part–supplier incidence graph of
@@ -767,8 +697,8 @@ object IterQueries {
       * directed edges — 2.4M at sf0.1, deliberately past
       * [[LocalCollapseCap]] — so EVERY driver bench exercises the
       * distributed [[minPropagate]] shape (and tags `distributed` on
-      * Bench's collapse_branch line); previously only sf10 side
-      * studies took that branch (the r17 verdict caveat). At sf0.01
+      * Bench's collapse_branch line), which the dedup rows reach only
+      * at sf10-sized pair graphs. At sf0.01
       * (240k edges) the same row takes the local branch under the
       * oracle hash — both arms ride one declared row. The edge count
       * is ANALYTIC (4·|lineitem|, one memoized count job, no
@@ -830,7 +760,7 @@ object IterQueries {
         edges.select(col("src").as("node")).distinct().localCheckpoint())
       val nEdges = 4 * Memos.value(s, d, "iter/liCount")(
         lineitem(s, d).count())
-      loopConf(s) {
+      conf(s) {
         minLabelCollapseLocal(edges, nodes, 5,
           knownEdgeCount = Some(nEdges))
       }.groupBy("label").agg(count(lit(1)).as("n_nodes"))
@@ -840,9 +770,7 @@ object IterQueries {
 
     /** q41: PageRank, damping 0.85, FIXED 5 iterations. */
     Query("q_iter_pagerank", pagerankSql(5))((s, d) => {
-      converged5(s, d)
-        .selectExpr("node", "rs", "CAST(rs AS DOUBLE) / 10000000000 AS rank")
-        .orderBy("node")
+      Rank.withRank(converged5(s, d)).orderBy("node")
     }),
 
     /** q48: incremental iterative [P §6] — restart from q41's state
@@ -851,21 +779,19 @@ object IterQueries {
       val base = converged5(s, d)
       // delta-graph degrees, memoized — deterministic per dir, so
       // repeat calls are cache hits (built under the loop conf like
-      // the other structure caches; see the noAqe scaladoc for the
-      // measured local-size tradeoff).
-      val edges2 = Memos.frame(s, d, "graphs/edges2deg")(noAqe(s) {
+      // the other structure caches; see the Graphs note on build
+      // parallelism for the measured local-size tradeoff).
+      val edges2 = Memos.frame(s, d, "graphs/edges2deg")(conf(s) {
         val e2 = withDeg(
           Graphs.edgesCached(s, d)
             .filter((col("src") + col("dst")) % 17 =!= 0))
         e2.count()
         e2
       })
-      noAqe(s) {
-        var state = base
-        for (_ <- 1 to 2) state = prStep(Graphs.nodesCached(s, d), edges2, state)
-        state.localCheckpoint()
-      }.selectExpr("node", "rs", "CAST(rs AS DOUBLE) / 10000000000 AS rank")
-        .orderBy("node")
+      Rank.withRank(conf(s) {
+        Loop.fixed(base, 2)(prStep(Graphs.nodesCached(s, d), edges2, _))
+          .localCheckpoint()
+      }).orderBy("node")
     }),
 
     /** q42: SSSP from the min node id, unit weights, FIXED 5 rounds;
@@ -873,16 +799,12 @@ object IterQueries {
     Query("q_iter_sssp", ssspSql5)((s, d) => {
       // memoized final state (the mrbgResult pattern): deterministic
       // per (session, dir), so repeat invocations are cache hits
-      Memos.frame(s, d, "graphs/ssspResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ssspResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
-        val src = n.agg(min("node")).head().getLong(0)
-        val state0 = n.select(col("node"),
-          when(col("node") === src, 0L).otherwise(INF).as("dist"))
-        // initial frontier: only the source has a propagatable value
-        val changed0 = state0.filter(col("dist") === 0)
-          .select(col("node").as("cnode"), col("dist").as("cval"))
-        finish(minLoopDelta(edges, state0, changed0, "dist", 1L, 5))
+        val (state0, changed0) = Loop.fromSource(n, Loop.minNode(n))
+        finish(minPropagate(edges, state0, changed0, "dist", 1L, 5)
+          .select("node", "dist"))
       }).orderBy("node")
     }),
 
@@ -914,24 +836,18 @@ object IterQueries {
       // localCheckpoints, so repeat invocations are cache hits
       // instead of re-running the seed-union + 3 frontier rounds
       // (~15 sequential micro-stages) every time.
-      Memos.frame(s, d, "graphs/frontierResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/frontierResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
         val baseE = Memos.frame(s, d, "graphs/edgesBase")(
           full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
         val deltaE = full.filter((col("src") + col("dst")) % 17 === 0)
         val n = Graphs.nodesCached(s, d) // FULL node set; isolated-in-base stay INF
-        val src = n.agg(min("node")).head().getLong(0)
-        val state0 = n.select(col("node"),
-          when(col("node") === src, 0L).otherwise(INF).as("dist"))
-        val changed0 = state0.filter(col("dist") === 0)
-          .select(col("node").as("cnode"), col("dist").as("cval"))
+        val (state0, changed0) = Loop.fromSource(n, Loop.minNode(n))
         val baseRun = Memos.frame(s, d, "graphs/ssspBase5")(
           minPropagate(baseE, state0, changed0, "dist", 1L, 5)
             .localCheckpoint())
         val res = iterateIncremental(full, deltaE,
-          baseRun.select("node", "dist"),
-          baseRun.filter(col("chg"))
-            .select(col("node").as("cnode"), col("dist").as("cval")),
+          baseRun.select("node", "dist"), changedOf(baseRun, "dist"),
           "dist", 1L, 3)
         finish(res.select("node", "dist"))
       }).orderBy("node")
@@ -948,20 +864,13 @@ object IterQueries {
     // q106: the generic GIM-V run must match the SAME unrolled oracle
     // as the specialized q41 loop
     Query("q_gimv_pagerank", pagerankSql(5))((s, d) => {
-      Memos.frame(s, d, "graphs/gimvPrResult")(noAqe(s) {
+      Rank.withRank(Memos.frame(s, d, "graphs/gimvPrResult")(conf(s) {
         val edgesDeg = Graphs.edgesDegCached(s, d)
         val n = Graphs.nodesCached(s, d)
-        var state = n.selectExpr("node", "CAST(10000000000 AS BIGINT) AS rs")
-        for (i <- 1 to 5) {
-          state = Graphs.gimvStep(edgesDeg, state, "rs")(
-            expr("v DIV outdeg"), sum,
-            (_, _) => expr(
-              "CAST(1500000000 + (85 * coalesce(M, 0)) DIV 100 AS BIGINT)"))
-          if (i % checkpointEvery == 0) state = state.localCheckpoint()
-        }
-        finish(state)
-      }).selectExpr("node", "rs", "CAST(rs AS DOUBLE) / 10000000000 AS rank")
-        .orderBy("node")
+        finish(Loop.gimv(edgesDeg, n.selectExpr("node", Rank.init), "rs", 5)(
+          expr(Rank.contribution("v")), sum,
+          (_, _) => expr(Rank.assign("coalesce(M, 0)"))))
+      })).orderBy("node")
     }),
 
     /** q107: EDGE-DELETION incremental SSSP [P §6] — the change-
@@ -972,9 +881,9 @@ object IterQueries {
       * re-iteration on the post-deletion graph: the affected-set
       * bounding must be result-invisible. */
     /** q107 oracle: from-scratch re-iteration on the POST-DELETION
-      * graph, 5 unrolled stages (the fixture converges in 2 — see the
-      * round-6 probe — so 5 is converged with margin, matching the
-      * engine's run-until-stable result). Node set and source come
+      * graph, 5 unrolled stages (the fixture graph converges in 2, so
+      * 5 is converged with margin, matching the engine's
+      * run-until-stable result). Node set and source come
       * from the FULL pre-deletion graph, like the engine's. */
     Query("q_incr_sssp_delete", {
       val stages = (1 to 5).map(minStageSql(_, "dist", 1, "edges_b"))
@@ -986,20 +895,17 @@ object IterQueries {
          ${stages.mkString(",\n")}
          SELECT node, dist FROM dist5 ORDER BY node"""
     })((s, d) => {
-      Memos.frame(s, d, "graphs/ssspDeleteResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ssspDeleteResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
         val deleted = full.filter((col("src") + col("dst")) % 17 === 0)
         val newE = Memos.frame(s, d, "graphs/edgesBase")(
           full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
         val n = Graphs.nodesCached(s, d)
-        val srcNode = n.agg(min("node")).head().getLong(0)
+        val srcNode = Loop.minNode(n)
         // deletion restart requires a fully CONVERGED base state (a
         // mid-flight base could under-approximate the affected set)
         val base = Memos.frame(s, d, "graphs/ssspConverged") {
-          val state0 = n.select(col("node"),
-            when(col("node") === srcNode, 0L).otherwise(INF).as("dist"))
-          val changed0 = state0.filter(col("dist") === 0)
-            .select(col("node").as("cnode"), col("dist").as("cval"))
+          val (state0, changed0) = Loop.fromSource(n, srcNode)
           minPropagateUntilStable(full, state0, changed0, "dist", 1L, 50)
             ._1.localCheckpoint()
         }
@@ -1011,13 +917,11 @@ object IterQueries {
     /** q43: connected components via min-label propagation (a GIM-V
       * instance [P §7]), FIXED 5 rounds. */
     Query("q_iter_connected_components", ccSql5)((s, d) => {
-      Memos.frame(s, d, "graphs/ccResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ccResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
-        val n = Graphs.nodesCached(s, d)
-        val state0 = n.select(col("node"), col("node").as("label"))
-        val changed0 = state0
-          .select(col("node").as("cnode"), col("label").as("cval"))
-        finish(minLoopDelta(edges, state0, changed0, "label", 0L, 5))
+        val (state0, changed0) = Loop.identity(Graphs.nodesCached(s, d))
+        finish(minPropagate(edges, state0, changed0, "label", 0L, 5)
+          .select("node", "label"))
       }).orderBy("node")
     }),
 
@@ -1057,23 +961,15 @@ object IterQueries {
          SELECT node, rs, CAST(rs AS DOUBLE) / 10000000000 AS rank
          FROM r5 ORDER BY node"""
     })((s, d) => {
-      Memos.frame(s, d, "graphs/pprResult")(noAqe(s) {
+      Rank.withRank(Memos.frame(s, d, "graphs/pprResult")(conf(s) {
         val edgesDeg = Graphs.edgesDegCached(s, d)
         val n = Graphs.nodesCached(s, d)
-        val seed = n.agg(min("node")).head().getLong(0)
-        var state = n.select(col("node"),
-          when(col("node") === seed, 10000000000L).otherwise(0L).as("rs"))
-        for (i <- 1 to 5) {
-          state = Graphs.gimvStep(edgesDeg, state, "rs")(
-            expr("v DIV outdeg"), sum,
-            (_, _) => expr(
-              s"""CAST(CASE WHEN node = $seed THEN 1500000000 ELSE 0 END
-                  + (85 * coalesce(M, 0)) DIV 100 AS BIGINT)"""))
-          if (i % checkpointEvery == 0) state = state.localCheckpoint()
-        }
-        finish(state)
-      }).selectExpr("node", "rs", "CAST(rs AS DOUBLE) / 10000000000 AS rank")
-        .orderBy("node")
+        val seed = Loop.minNode(n)
+        finish(Loop.gimv(edgesDeg, n.select(col("node"), Rank.initAt(seed)),
+            "rs", 5)(
+          expr(Rank.contribution("v")), sum,
+          (_, _) => expr(Rank.assign("coalesce(M, 0)", Rank.teleportAt(seed)))))
+      })).orderBy("node")
     }),
 
     /** q118: GIM-V instantiated to CONNECTED COMPONENTS as a declared
@@ -1086,16 +982,11 @@ object IterQueries {
     // q118: the generic GIM-V min-instance must match the SAME
     // unrolled oracle as the specialized q43 loop
     Query("q_gimv_cc", ccSql5)((s, d) => {
-      Memos.frame(s, d, "graphs/gimvCcResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/gimvCcResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
-        val n = Graphs.nodesCached(s, d)
-        var state = n.select(col("node"), col("node").as("label"))
-        for (i <- 1 to 5) {
-          state = Graphs.gimvStep(edges, state, "label")(
-            col("v"), min, (v, m) => least(v, coalesce(m, lit(INF))))
-          if (i % checkpointEvery == 0) state = state.localCheckpoint()
-        }
-        finish(state)
+        val (state0, _) = Loop.identity(Graphs.nodesCached(s, d))
+        finish(Loop.gimv(edges, state0, "label", 5)(
+          col("v"), min, (v, m) => least(v, coalesce(m, lit(INF)))))
       }).orderBy("node")
     }),
 
@@ -1108,19 +999,13 @@ object IterQueries {
     // q121: the generic GIM-V min-plus instance must match the SAME
     // unrolled oracle as the specialized q42 loop
     Query("q_gimv_sssp", ssspSql5)((s, d) => {
-      Memos.frame(s, d, "graphs/gimvSsspResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/gimvSsspResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
-        val src = n.agg(min("node")).head().getLong(0)
-        var state = n.select(col("node"),
-          when(col("node") === src, 0L).otherwise(INF).as("dist"))
-        for (i <- 1 to 5) {
-          state = Graphs.gimvStep(edges, state, "dist")(
-            col("v") + lit(1L), min,
-            (v, m) => least(v, coalesce(m, lit(INF))))
-          if (i % checkpointEvery == 0) state = state.localCheckpoint()
-        }
-        finish(state)
+        val (state0, _) = Loop.fromSource(n, Loop.minNode(n))
+        finish(Loop.gimv(edges, state0, "dist", 5)(
+          col("v") + lit(1L), min,
+          (v, m) => least(v, coalesce(m, lit(INF)))))
       }).orderBy("node")
     }),
 
@@ -1180,7 +1065,7 @@ object IterQueries {
            SELECT e.dst, r.m FROM reach r JOIN post_e e ON e.src = r.node
          )
          SELECT CAST(node AS BIGINT) AS node, CAST(min(m) AS BIGINT) AS label
-         FROM reach GROUP BY node ORDER BY node""")((s, d) => noAqe(s) {
+         FROM reach GROUP BY node ORDER BY node""")((s, d) => conf(s) {
       val full = Memos.frame(s, d, "graphs/chainEdges") {
         val nodes = customer(s, d)
           .select(col("c_custkey").cast("long").as("node"))
@@ -1204,11 +1089,8 @@ object IterQueries {
       // incremental query's own work is the delete restart, not the
       // base convergence it reads back
       val base = Memos.frame(s, d, "graphs/chainCcBase") {
-        val state0 = customer(s, d)
-          .select(col("c_custkey").cast("long").as("node"))
-          .select(col("node"), col("node").as("label"))
-        val changed0 = state0
-          .select(col("node").as("cnode"), col("label").as("cval"))
+        val (state0, changed0) = Loop.identity(customer(s, d)
+          .select(col("c_custkey").cast("long").as("node")))
         minPropagateUntilStable(
           full, state0, changed0, "label", 0L, 64)._1.localCheckpoint()
       }
@@ -1227,22 +1109,18 @@ object IterQueries {
          ${(base ++ incr).mkString(",\n")}
          SELECT node, label FROM label8 ORDER BY node"""
     })((s, d) => {
-      Memos.frame(s, d, "graphs/ccFrontierResult")(noAqe(s) {
+      Memos.frame(s, d, "graphs/ccFrontierResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
         val baseE = Memos.frame(s, d, "graphs/edgesBase")(
           full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
         val deltaE = full.filter((col("src") + col("dst")) % 17 === 0)
-        val n = Graphs.nodesCached(s, d) // FULL node set, like q101
-        val state0 = n.select(col("node"), col("node").as("label"))
-        val changed0 = state0
-          .select(col("node").as("cnode"), col("label").as("cval"))
+        // FULL node set, like q101
+        val (state0, changed0) = Loop.identity(Graphs.nodesCached(s, d))
         val baseRun = Memos.frame(s, d, "graphs/ccBase5")(
           minPropagate(baseE, state0, changed0, "label", 0L, 5)
             .localCheckpoint())
         val res = iterateIncremental(full, deltaE,
-          baseRun.select("node", "label"),
-          baseRun.filter(col("chg"))
-            .select(col("node").as("cnode"), col("label").as("cval")),
+          baseRun.select("node", "label"), changedOf(baseRun, "label"),
           "label", 0L, 3)
         finish(res.select("node", "label"))
       }).orderBy("node")

@@ -36,9 +36,6 @@ import graft.incr.Maintain
   * MRBG-Store's access pattern. */
 object MrbgPagerank {
 
-  private def f(sCol: String): String =
-    s"CAST(1500000000 + (85 * coalesce($sCol, 0)) DIV 100 AS BIGINT)"
-
   /** Contributions of `srcs` (single `src` column) under `state` over
     * the given structure — the preserved-edge builder (public: specs
     * and callers maintaining their own C state use it too). */
@@ -46,7 +43,7 @@ object MrbgPagerank {
                   srcs: DataFrame): DataFrame =
     edgesDeg.join(broadcast(srcs), "src")
       .join(broadcast(state), state("node") === col("src"))
-      .selectExpr("src", "dst", "rs DIV outdeg AS c")
+      .selectExpr("src", "dst", s"${Loop.Rank.contribution("rs")} AS c")
 
   /** `iters` incremental steps from (state0, C0, S0) over the NEW
     * structure, starting from `frontier0` (the sources whose preserved
@@ -81,7 +78,7 @@ object MrbgPagerank {
         .withColumnRenamed("c", "dS")
       val s1 = kept(s.join(broadcast(dS), s("node") === dS("dst"), "left")
         .select(col("node"), (col("S") + coalesce(col("dS"), lit(0L))).as("S")))
-      val state1 = s1.selectExpr("node", s"${f("S")} AS rs")
+      val state1 = s1.selectExpr("node", s"${Loop.Rank.assign("coalesce(S, 0)")} AS rs")
       if (last) state = state1
       else {
         val moved = state1
@@ -135,11 +132,11 @@ object MrbgPagerank {
     // must be result-invisible
     Query("q_incr_mrbg", IterQueries.pagerankIncrSql(5, 2))((s0, d) => {
       val s = s0
-      Memos.frame(s, d, "graphs/mrbgResult")(IterQueries.loopConf(s) {
+      Memos.frame(s, d, "graphs/mrbgResult")(Loop.conf(s) {
         val nodes = Graphs.nodesCached(s, d)
         val edgesDegOld = Graphs.edgesDegCached(s, d)
         // converged base state — shared with q41/q48 (memoized)
-        val base = IterQueries.converged5Shared(s, d).select("node", "rs")
+        val base = IterQueries.converged5(s, d).select("node", "rs")
         val removed = (col("src") + col("dst")) % 17 === 0
         val edgesNew = Graphs.edgesCached(s, d).filter(!removed)
         val degNew = edgesNew.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -157,9 +154,7 @@ object MrbgPagerank {
           .select("src").distinct()
         // the memo serves this frame on every call: materialize the
         // lazy final iteration once, under the loop configuration
-        incrRun(edgesDegNew, base, c0, s0s, frontier0, 0L, 2)
-          .selectExpr("node", "rs",
-            "CAST(rs AS DOUBLE) / 10000000000 AS rank")
+        Loop.Rank.withRank(incrRun(edgesDegNew, base, c0, s0s, frontier0, 0L, 2))
           .localCheckpoint()
       }).orderBy("node")
     })

@@ -289,7 +289,7 @@ object Round8 {
     // pass-through ∪ rebuild ∪ verify checkpoint into a couple of
     // statically-planned jobs. Results are conf-invariant
     // (Round8Spec's batch-identity holds unchanged).
-    graft.iter.IterQueries.loopConf(s) { lshPairsIncrBody(s, d) }
+    graft.iter.Loop.conf(s) { lshPairsIncrBody(s, d) }
 
   private def lshPairsIncrBody(s: SparkSession, d: String): DataFrame = {
     val bandedOld = cachedLshBandedOld(s, d)
@@ -403,48 +403,6 @@ object Round8 {
         inter * 2 >= col("sz_a") + col("sz_b") - inter))
       .select("doc_a", "doc_b")
     (out, scratch)
-  }
-
-  /** The LSH-sourced dedup collapse shared by q136 (batch) and q139
-    * (signed-incremental): the q108 5-round min-label collapse over a
-    * checkpointed verified pair graph. The two declared queries
-    * differ ONLY in how the pair graph's bucket relation was produced
-    * (full rebuild vs signed maintenance), which is exactly the
-    * invariant `SignedLshSpec` proves — so the collapse itself is one
-    * code path. `docs` is the corpus the collapse runs over (the
-    * post-delta corpus for q139). */
-  private def lshCollapse(s: SparkSession, docs: DataFrame,
-                          pairs: DataFrame,
-                          knownPairCount: Option[Long] = None): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    // r17 (VERDICT r16 task 1): DRIVER-FRONTIER min-label collapse —
-    // [[graft.iter.IterQueries.minLabelCollapseLocal]], row-identical
-    // to the previous minPropagate(…, 5, matEvery = 1) form
-    // (Round17Spec proves it on this pair graph and on randoms) at
-    // ONE job per round instead of three (frontier broadcast build,
-    // cand broadcast build, checkpoint). The r13 A/B already showed
-    // the row's warm cost was the local[32] JOB-LAUNCH floor, not
-    // data volume, and BENCH_r16 showed that floor multiplied 5× by
-    // ambient host bursts (6.93 s vs a 1.21 s quiet min at 19 warm
-    // jobs); the compact form cuts warm q136 to ~6 jobs — the
-    // frontier (measured 4844→1015→123→25→4 over the 5 rounds at
-    // sf0.1) lives on the driver, re-entering each round's plan as a
-    // LocalRelation whose broadcast build launches no job. Driver
-    // state is bounded by the pair-graph endpoint count — the same
-    // near-dup-volume bound that already justifies broadcasting the
-    // verified-pair store — with LocalCollapseCap as the safety
-    // valve: past it the collapse restarts on the distributed
-    // minPropagate (the 100 TB shape; see the method scaladoc).
-    // No trailing checkpoint: the result plan is docs ⋈ broadcast
-    // (local label map) — a single cheap projection, re-executable.
-    graft.iter.IterQueries.loopConf(s) {
-      graft.iter.IterQueries
-        .minLabelCollapseLocal(edges,
-          docs.select(col("doc_id").as("node")), 5,
-          knownEdgeCount = knownPairCount.map(_ * 2))
-        .select(col("node").as("doc_id"), col("label").as("keep_id"))
-    }
   }
 
   /** Distinct (idCol, trigram-md5) rows — the q148/q276 fingerprint
@@ -992,16 +950,19 @@ object Round8 {
       * with the exact collapse is ≥ 90% (measured: 98%).
       * Production termination for >5-hop chains:
       * [[graft.iter.IterQueries.minPropagateUntilStable]]. */
-    Query("q_dedup_groups_lsh")((s, d) =>
-      // lshCollapse's plan is re-executable (r17: the collapse is a
-      // broadcast join over driver-computed labels, no trailing
-      // checkpoint) — orderBy's range-partition sampling plus the
-      // final pass each run the cheap docs⋈broadcast(labels) join
-      lshCollapse(s, documents(s, d), cachedLshPairs(s, d),
-          // gate scalar memoized with the pair store (r18 task 1a)
-          knownPairCount = Some(Memos.value(s, d,
-            "lsh/lshPairCount")(cachedLshPairs(s, d).count())))
-        .orderBy("doc_id")),
+    Query("q_dedup_groups_lsh")((s, d) => {
+      val docs = documents(s, d)
+      val pairs = cachedLshPairs(s, d)
+      // gate scalar memoized with the pair store, counted outside the
+      // loop conf
+      val n = Memos.value(s, d, "lsh/lshPairCount")(pairs.count())
+      // the collapse's plan is re-executable (a broadcast join over
+      // driver-computed labels, no trailing checkpoint) — orderBy's
+      // range-partition sampling plus the final pass each run the
+      // cheap docs⋈broadcast(labels) join
+      graft.iter.Loop.pairCollapse(s, pairs, "doc_a", "doc_b", n)(docs, "doc_id")
+        .orderBy("doc_id")
+    }),
 
     /** q142: SIGNED incremental maintenance of an aggregated join
       * view [P §3 — the full '+'/'-' delta model on q92's
@@ -1179,7 +1140,7 @@ object Round8 {
       * delta-proportional, and the only rule that survives the cap:
       * deletion can shrink a quarantined mega-bucket below MaxBucket
       * and REVEAL suppressed pairs). The maintained bucket relation
-      * ([[lshPairsIncr]]) then feeds the SAME [[lshCollapse]]
+      * ([[lshPairsIncr]]) then feeds the SAME [[graft.iter.Loop.pairCollapse]]
       * as the batch query. oracle=none (LSH-sourced like q136);
       * Round8Spec proves the result row-identical to the batch
       * collapse over the post-delta corpus — signed maintenance must
@@ -1190,10 +1151,10 @@ object Round8 {
       // the maintained pair RELATION re-runs per invocation (only
       // stored state is memoized) but its COUNT is deterministic per
       // (session, fixture) — the gate scalar rides a memo value,
-      // first invocation pays the one count job (r18 task 1a)
-      lshCollapse(s, docsPost, pairs,
-        knownPairCount = Some(Memos.value(s, d,
-          "lsh/lshPairCountIncr")(pairs.count()))).orderBy("doc_id")
+      // first invocation pays the one count job
+      val n = Memos.value(s, d, "lsh/lshPairCountIncr")(pairs.count())
+      graft.iter.Loop.pairCollapse(s, pairs, "doc_a", "doc_b", n)(
+        docsPost, "doc_id").orderBy("doc_id")
     })
     // q135, q136, q139: oracle=none (approximate / sketch-sourced) —
     // see SimilaritySpec and Round8Spec (q139's spec pins it

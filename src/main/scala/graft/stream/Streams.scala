@@ -19,32 +19,23 @@ import graft.engine.Dec._
   * of accumulating unboundedly. */
 object Streams {
 
-  /** Run `body` with a SMALL shuffle-partition count (r18, VERDICT
-    * r17 task 6): a stateful streaming operator creates one
-    * StateStore instance PER shuffle partition, and every micro-batch
-    * pays a task per store — at the session default of 32, a 5-batch
-    * AvailableNow run over KB-scale landing files spends its wall
-    * clock on 32-way state plumbing, not data (the declared stream
-    * rows' one-time cost, BENCH r17's `stream_first` line: 51.6 s
-    * combined). The fixture streams are micro-batches of a few
-    * thousand rows; 4 stores is the honest sizing. At production
-    * scale this knob RISES with volume (state partitioning is a
-    * throughput dial, not semantics — results are partition-count
-    * invariant), and the partition count is captured into the
-    * query's checkpoint at first start, which is why it must be set
-    * BEFORE `.start()` rather than mid-stream. Restores the
-    * caller's explicit setting on exit (the IterQueries.noAqe
-    * discipline). */
+  /** Run `body` with a SMALL shuffle-partition count: a stateful
+    * streaming operator creates one StateStore instance PER shuffle
+    * partition, and every micro-batch pays a task per store — at the
+    * session default of 32, a 5-batch AvailableNow run over KB-scale
+    * landing files spends its wall clock on 32-way state plumbing,
+    * not data (Bench's `stream_first` line times this one-time cost).
+    * The fixture streams are micro-batches of a few thousand rows; 4
+    * stores is the honest sizing. At production scale this knob RISES
+    * with volume (state partitioning is a throughput dial, not
+    * semantics — results are partition-count invariant), and the
+    * partition count is captured into the query's checkpoint at first
+    * start, which is why it must be set BEFORE `.start()` rather than
+    * mid-stream. The caller's setting is restored on exit. */
   def smallStateConf[T](s: org.apache.spark.sql.SparkSession,
-                        parts: Int = 4)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = Option(s.conf.get(key, null))
-    s.conf.set(key, parts.toString)
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
+                        parts: Int = 4)(body: => T): T =
+    graft.engine.Sessions.withConf(s,
+      "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   /** `root`, emptied first. A declared stream row builds its landing
     * files, checkpoint and sink under one scratch root; when its memo
@@ -204,7 +195,7 @@ object Streams {
       }
   }
 
-  /** STREAMING UPSERT SINK (r16) — maintain a keyed parquet table
+  /** STREAMING UPSERT SINK — maintain a keyed parquet table
     * from a change stream: `foreachBatch` + [[graft.incr.MergeInto
     * .mergeInto]], the streaming face of q278. Per micro-batch:
     *
@@ -225,16 +216,16 @@ object Streams {
     *  3. commit the result as a NEW versioned snapshot and swap the
     *     `_CURRENT` pointer atomically (see [[commitSnapshot]]).
     *
-    * Exactly-once story (r17 — scoped to the write protocol below):
+    * Exactly-once story (scoped to the write protocol below):
     * the MERGE itself is IDEMPOTENT — re-merging a replayed batch
     * (foreachBatch retries after a crash) recomputes the identical
     * snapshot because last-write-wins dedup and the ord-conditional
     * UPDATE are both absorbing — and the COMMIT is crash-safe because
     * the store is never modified in place: the merged state lands in
     * a fresh `snap-<v+1>` directory and becomes visible only when the
-    * one-file `_CURRENT` pointer is atomically renamed over (r16's
-    * in-place overwrite left a truncated store if the writer died
-    * mid-write, ADVICE r16). A crash at ANY point leaves the pointer
+    * one-file `_CURRENT` pointer is atomically renamed over (an
+    * in-place overwrite would leave a truncated store if the writer
+    * died mid-write). A crash at ANY point leaves the pointer
     * on a complete snapshot — old or new — and the retry re-merges
     * into whichever it reads, converging to the same state either
     * way. At 100 TB the store would be partitioned and the merge
@@ -249,8 +240,8 @@ object Streams {
     batch => applyMergeBatch(batch, keys, orderCol, storePath)
   }
 
-  /** One [[mergeSink]] micro-batch, also the unit Round16Spec
-    * replays directly. */
+  /** One [[mergeSink]] micro-batch, also the unit the streaming specs
+    * replay directly. */
   def applyMergeBatch(batch: DataFrame, keys: Seq[String],
                       orderCol: String, storePath: String): Unit = {
     import org.apache.spark.sql.expressions.Window
@@ -276,8 +267,8 @@ object Streams {
     * face of [[mergeSink]] (None before the first committed batch).
     * All paths resolve through Hadoop's FileSystem API from the
     * session's Hadoop conf, so `file:`, `hdfs:`, `s3a:` and friends
-    * all work (ADVICE r16: the previous `java.io.File` existence
-    * check silently treated any scheme'd store as absent). */
+    * all work (a `java.io.File` existence check would silently treat
+    * any scheme'd store as absent). */
   def readStore(s: org.apache.spark.sql.SparkSession,
                 storePath: String): Option[DataFrame] =
     currentSnapshot(s, storePath).map(_._2)

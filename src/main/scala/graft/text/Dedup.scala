@@ -551,21 +551,15 @@ object Dedup {
       // label loop runs under the iterative-loop conf (AQE off,
       // loop-sized partitions — 32-task micro-stages were pure
       // scheduling overhead, measured 11.8 s → ~2 s)
-      val pairs = cachedSubsetPairs(s, d)
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      // r17: the driver-frontier compact collapse (row-identical to
-      // the minPropagate(…, 5, matEvery = 1) form it replaces —
-      // Round17Spec — at ~3 jobs instead of 3 per round; the pair
-      // graph is the near-dup relation, driver-bounded by the same
-      // argument as the LSH family's verified-pair broadcast, with
-      // the distributed fallback past LocalCollapseCap)
-      graft.iter.IterQueries.loopConf(s) {
-        graft.iter.IterQueries.minLabelCollapseLocal(edges,
-            cachedSubsetDocs(s, d).select(col("doc_id").as("node")), 5,
-            knownEdgeCount = Some(2 * cachedSubsetPairCount(s, d)))
-          .select(col("node").as("doc_id"), col("label").as("keep_id"))
-      }.orderBy("doc_id")
+      // the driver-frontier compact collapse (row-identical to the
+      // minPropagate(…, 5, matEvery = 1) form — Round17Spec — at ~3
+      // jobs instead of 3 per round; the pair graph is the near-dup
+      // relation, driver-bounded by the same argument as the LSH
+      // family's verified-pair broadcast, with the distributed
+      // fallback past LocalCollapseCap)
+      graft.iter.Loop.pairCollapse(s, cachedSubsetPairs(s, d), "doc_a", "doc_b",
+          cachedSubsetPairCount(s, d))(cachedSubsetDocs(s, d), "doc_id")
+        .orderBy("doc_id")
     })
 
   val queries: Seq[Query] = Seq(
@@ -666,14 +660,11 @@ object Dedup {
          )
          SELECT node AS doc_id, MIN(label) AS keep_id
          FROM reach GROUP BY node ORDER BY doc_id""")((s, d) => {
-      val pairs = cachedSubsetPairs(s, d)
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      graft.iter.IterQueries.loopConf(s) {
-        val nodes = cachedSubsetDocs(s, d).select(col("doc_id").as("node"))
-        val state0 = nodes.select(col("node"), col("node").as("label"))
-        val changed0 = state0
-          .select(col("node").as("cnode"), col("label").as("cval"))
+      val edges = graft.iter.Loop.symmetrize(cachedSubsetPairs(s, d),
+        "doc_a", "doc_b")
+      graft.iter.Loop.conf(s) {
+        val (state0, changed0) = graft.iter.Loop.identity(
+          cachedSubsetDocs(s, d).select(col("doc_id").as("node")))
         val (st, _) = graft.iter.IterQueries.minPropagateUntilStable(
           edges, state0, changed0, "label", 0L, 50)
         st.select(col("node").as("doc_id"), col("label").as("keep_id"))
@@ -761,17 +752,11 @@ object Dedup {
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
       val ep = Similarity.cachedCosinePairs04(s, d)
         .select(col("vec_a").as("a"), col("vec_b").as("b"))
-      val pairs = tp.unionByName(ep)
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      // r17: compact driver-frontier collapse — see the q108 note
-      graft.iter.IterQueries.loopConf(s) {
-        graft.iter.IterQueries.minLabelCollapseLocal(edges,
-            documents(s, d).select(col("doc_id").as("node")), 5,
-            knownEdgeCount = Some(2 * (cachedSubsetPairCount(s, d) +
-              Similarity.cachedCosinePairs04Count(s, d))))
-          .select(col("node").as("doc_id"), col("label").as("keep_id"))
-      }.orderBy("doc_id")
+      // compact driver-frontier collapse — see the q108 note
+      graft.iter.Loop.pairCollapse(s, tp.unionByName(ep), "a", "b",
+          cachedSubsetPairCount(s, d) + Similarity.cachedCosinePairs04Count(s, d))(
+          documents(s, d), "doc_id")
+        .orderBy("doc_id")
     }),
 
     /** q109: asymmetric CONTAINMENT pairs — |A∩B| / |A| >= 0.8 for

@@ -726,16 +726,10 @@ object Similarity {
       // pair graph = the MEMOIZED checkpointed cosine computation
       // (shared with q126) — the loop reads materialized rows, never
       // re-running the O(n²) join; label loop under the loop conf
-      val pairs = cachedCosinePairs04(s, d)
-      val edges = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .union(pairs.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-      // r17: compact driver-frontier collapse — see the q108 note
-      graft.iter.IterQueries.loopConf(s) {
-        graft.iter.IterQueries.minLabelCollapseLocal(edges,
-            embeddings(s, d).select(col("vec_id").as("node")), 5,
-            knownEdgeCount = Some(2 * cachedCosinePairs04Count(s, d)))
-          .select(col("node").as("vec_id"), col("label").as("keep_id"))
-      }.orderBy("vec_id")
+      // compact driver-frontier collapse — see the q108 note
+      graft.iter.Loop.pairCollapse(s, cachedCosinePairs04(s, d), "vec_a", "vec_b",
+          cachedCosinePairs04Count(s, d))(embeddings(s, d), "vec_id")
+        .orderBy("vec_id")
     })
   )
 }

@@ -35,6 +35,18 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Delete `dir` recursively when the JVM shuts down (Spark's own
+    * temp-dir hook; `ShutdownHookManager` is `private[spark]`).
+    * Registering a directory twice is a no-op. */
+  def deleteAtShutdown(dir: String): Unit =
+    org.apache.spark.util.ShutdownHookManager
+      .registerShutdownDeleteDir(new java.io.File(dir))
+
+  /** Whether `dir` is registered by [[deleteAtShutdown]]. */
+  def deletesAtShutdown(dir: String): Boolean =
+    org.apache.spark.util.ShutdownHookManager
+      .hasShutdownDeleteDir(new java.io.File(dir))
+
   /** The analyzed logical plan of a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 

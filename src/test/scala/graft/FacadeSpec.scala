@@ -23,8 +23,8 @@ class FacadeSpec extends SparkSpecBase {
   }
 
   test("iterative facade leaves caller session conf exactly as found") {
-    // noAqe must restore-or-UNSET: restoring a literal fallback would
-    // pin a never-set key (e.g. stock 200 partitions becoming 32).
+    // the loop conf must restore-or-UNSET: restoring a literal fallback
+    // would pin a never-set key (e.g. stock 200 partitions becoming 32).
     val sp = spark
     import sp.implicits._
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
@@ -46,6 +46,22 @@ class FacadeSpec extends SparkSpecBase {
       case (k, Some(v)) => sp.conf.set(k, v)
       case (k, None)    => sp.conf.unset(k)
     }
+  }
+
+  test("a cached edge list stays cached after sssp and connectedComponents") {
+    val sp = spark
+    import sp.implicits._
+    val ring = (0L until 4L).map(i => (i, (i + 1) % 4)).toDF("src", "dst").cache()
+    try {
+      ring.count()
+      val level = ring.storageLevel
+      assert(level != org.apache.spark.storage.StorageLevel.NONE)
+      Graft.sssp(ring, 0L, 3).collect()
+      assert(ring.storageLevel == level, "sssp released the caller's cache")
+      Graft.connectedComponents(ring, 3).collect()
+      assert(ring.storageLevel == level,
+        "connectedComponents released the caller's cache")
+    } finally ring.unpersist()
   }
 
   test("incrMerge applies inserts and deletes per key") {

@@ -190,6 +190,19 @@ class MemoBudgetSpec extends SparkSpecBase {
     }
   }
 
+  test("a scratch directory is deleted at JVM exit: q_incr_restart's " +
+      "is registered once the row has run") {
+    SparkEntry.queries("q_incr_restart")(spark, sfDir).collect()
+    // the row's directories of this application, found on disk
+    val app = spark.sparkContext.applicationId
+    val dirs = Option(new java.io.File(sys.props("java.io.tmpdir"), "graft_incr")
+        .listFiles).toSeq.flatten
+      .filter(f => f.getName.startsWith("restart_") && f.getName.endsWith(app))
+    assert(dirs.nonEmpty)
+    assert(dirs.forall(f =>
+      org.apache.spark.sql.graftbridge.Bridge.deletesAtShutdown(f.getPath)))
+  }
+
   test("within budget nothing evicts; budget default derives from the " +
       "driver heap") {
     Memos.clearAll()

@@ -172,7 +172,7 @@ class Round4Spec extends SparkSpecBase {
     val s = spark
     val nodes = Graphs.nodesCached(s, sfDir)
     val edgesDegOld = Graphs.edgesDegCached(s, sfDir)
-    val base = IterQueries.converged5Shared(s, sfDir).select("node", "rs")
+    val base = IterQueries.converged5(s, sfDir).select("node", "rs")
     val removed = (col("src") + col("dst")) % 17 === 0
     val edgesNew = Graphs.edgesCached(s, sfDir).filter(!removed)
     val degNew = edgesNew.groupBy("src").agg(count(lit(1)).as("outdeg"))

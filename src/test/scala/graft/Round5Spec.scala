@@ -89,7 +89,7 @@ class Round5Spec extends SparkSpecBase {
       val s = spark
       val nodes = Graphs.nodesCached(s, sfDir)
       val edgesDegOld = Graphs.edgesDegCached(s, sfDir)
-      val baseState = IterQueries.converged5Shared(s, sfDir)
+      val baseState = IterQueries.converged5(s, sfDir)
         .select("node", "rs")
       val removed = (col("src") + col("dst")) % 17 === 0
       val edgesNew = Graphs.edgesCached(s, sfDir).filter(!removed)

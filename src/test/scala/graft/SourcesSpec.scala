@@ -10,8 +10,12 @@ import graft.engine.Tables
   * table would use. */
 class SourcesSpec extends SparkSpecBase {
 
-  private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toString
+  /** A new temp dir, deleted at JVM exit. */
+  private def tmp(prefix: String) = {
+    val dir = Files.createTempDirectory(prefix).toString
+    org.apache.spark.sql.graftbridge.Bridge.deleteAtShutdown(dir)
+    dir
+  }
 
   test("csv source round-trips the nation table") {
     val dir = tmp("graft_csv")

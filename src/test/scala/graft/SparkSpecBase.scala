@@ -56,6 +56,12 @@ object SparkSpecBase {
   lazy val session: SparkSession = graft.engine.Sessions.create("local[4]",
     "spark.app.name" -> "graft-test",
     "spark.sql.shuffle.partitions" -> "4",
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    "spark.sql.warehouse.dir" -> warehouse)
+
+  /** The specs' warehouse: a new temp dir per JVM, deleted at exit. */
+  private lazy val warehouse: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    Bridge.deleteAtShutdown(dir)
+    dir
+  }
 }

@@ -233,7 +233,7 @@ object Graft {
   /** Streaming upsert sink: a `foreachBatch` body that maintains a
     * keyed parquet snapshot from a change stream via [[mergeInto]] —
     * last-write-wins per batch under `orderCol`, idempotent on batch
-    * replay, crash-safe versioned commits (r17). Read the snapshot
+    * replay, crash-safe versioned commits. Read the snapshot
     * back with [[readMergeStore]]. See
     * [[graft.stream.Streams.mergeSink]]. */
   def streamingMergeSink(keys: Seq[String], orderCol: String,
@@ -246,7 +246,7 @@ object Graft {
   def readMergeStore(s: SparkSession, storePath: String): Option[DataFrame] =
     Streams.readStore(s, storePath)
 
-  /** Persist / load a quantized IVF ANN index, partitioned by cluster
+  /** Persist / load an IVF ANN index, partitioned by cluster
     * so probe-time cluster selection becomes parquet partition
     * pruning. See [[graft.text.Similarity.ivfWriteIndex]]. */
   def ivfWriteIndex(indexedQ: DataFrame, cents: Array[Array[Double]],

@@ -208,8 +208,11 @@ object Memos {
     * same fixture by the Spark application id, which also breaks
     * cross-fixture 32-bit hashCode collisions between processes. The
     * id makes every application's directory new, so each one is
-    * registered for deletion when the JVM shuts down. */
+    * registered for deletion when the JVM shuts down. The directory
+    * is a direct child of the temp dir, so `tag` may hold no `/`:
+    * deletion at exit would remove only the leaf. */
   def scratchDir(s: SparkSession, d: String, tag: String): String = {
+    require(!tag.contains('/'), s"scratch tag '$tag' must not contain '/'")
     val dir = s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
       Integer.toHexString(d.hashCode) + "_" + s.sparkContext.applicationId
     org.apache.spark.sql.graftbridge.Bridge.deleteAtShutdown(dir)

@@ -57,18 +57,21 @@ object IncrMerge {
       .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
 
   /** Associative per-key PARTIALS (count + exact decimal sum) — the
-    * persistable state unit of the MRBG-Store analogue [P §5]: write
-    * them to Parquet with [[writePartials]], and a LATER session
-    * warm-restarts by reading them back and [[mergePartials]]-ing a
-    * delta's partials — history is never re-read. Decimal sums are
+    * persistable state unit of the MRBG-Store analogue [P §5]: commit
+    * them to a [[StateStore]], and a LATER session warm-restarts by
+    * reading them back and [[mergePartials]]-ing a delta's partials —
+    * history is never re-read (q_incr_restart). Decimal sums are
     * exact and order-independent, so partial-of-partials equals the
     * one-shot aggregate bit-for-bit. */
   def partials(df: DataFrame, keys: Seq[String], value: Column): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"), sum(dec2(value)).as("psum"))
 
-  /** Persist partials for cross-session restart (overwrite = the
-    * stored view's new version). Parquet keeps the exact decimal. */
+  /** Overwrite `path` with `parts` as plain parquet (Parquet keeps the
+    * exact decimal). Not versioned: a failed overwrite leaves `path`
+    * empty, so preserved state commits through [[StateStore]] instead.
+    * This plain layout is what perfbench's kvmerge cell writes and
+    * reads back through `Tables.tbl`; its other callers are specs. */
   def writePartials(parts: DataFrame, path: String): Unit =
     parts.write.mode("overwrite").parquet(path)
 
@@ -110,13 +113,14 @@ object IncrMerge {
     }),
 
     /** q103: PERSISTED-STATE WARM RESTART (the MRBG-Store's actual
-      * job [P §5]) as a declared query: base partials are written to
-      * Parquet, read BACK from disk (the plan below the merge is a
-      * genuine parquet scan, not the in-memory lineage), merged with
-      * the delta's partials, finalized. The oracle is the full
+      * job [P §5]) as a declared query: base partials are committed to
+      * a [[StateStore]], read BACK from disk (the plan below the merge
+      * is a genuine parquet scan, not the in-memory lineage), merged
+      * with the delta's partials, finalized. The oracle is the full
       * recompute over all of history — restart must be value-identical
-      * while reading only |keys| + |delta| rows. The partials are
-      * rewritten under the session's scratch dir on every call. */
+      * while reading only |keys| + |delta| rows. Every call commits
+      * the partials as the next version of a store under the
+      * session's scratch dir. */
     Query("q_incr_restart",
       /** q103 oracle: the FULL recompute — two-level exact-decimal
         * partial sums equal the one-shot sum bit-for-bit. */
@@ -126,17 +130,16 @@ object IncrMerge {
          FROM events GROUP BY event_type ORDER BY event_type""")((s, d) => {
       val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
-      val dir = Memos.scratchDir(s, d, "incr/restart")
-      writePartials(
-        partials(ev.filter(col("ts") < cut), Seq("event_type"), col("value")),
-        s"$dir/base")
-      val stored = s.read.parquet(s"$dir/base")
+      val root = Memos.scratchDir(s, d, "incr_restart")
+      StateStore.commit(root, Seq("base" ->
+        partials(ev.filter(col("ts") < cut), Seq("event_type"), col("value"))))
+      val stored = StateStore.read(s, root).get("base")
       val delta =
         partials(ev.filter(col("ts") >= cut), Seq("event_type"), col("value"))
       mergePartials(Seq("event_type"), stored, delta)
         .select(col("event_type"), col("n"), dbl(col("psum")).as("val_sum"))
         .orderBy("event_type")
-        .localCheckpoint() // materialize before the next call overwrites
+        .localCheckpoint() // materialize before a later commit GCs this version
     }),
 
     /** q47: kv-level upsert = delete+insert [P §3]: last-write-wins

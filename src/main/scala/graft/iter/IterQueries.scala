@@ -584,27 +584,12 @@ object IterQueries {
       .coalesce(4)
       .localCheckpoint()
     // The confined recompute is the min-label collapse from the
-    // identity state — exactly [[minLabelCollapseLocal]]'s semantics
-    // (convergence: its round loop exits when the frontier empties),
-    // so it rides the SAME costed selector as the q108 dedup family.
-    // Below the cap the convergence rounds are driver arithmetic
-    // (~3 jobs instead of 3 per round — the affected slice is
-    // delete-adjacent-component-sized, usually tiny); above it the
-    // distributed convergence loop runs as before. Branch equality is
-    // Round17Spec's property; the until-stable fallback stays because
-    // the fixed-round distributed arm of the collapse would pay
-    // maxIter rounds where until-stable stops at the fixpoint.
-    val nInner = innerE.count()
-    val recomputed =
-      if (nInner <= LocalCollapseCap)
-        minLabelCollapseLocal(innerE, affected.select("node"), maxIter,
-          knownEdgeCount = Some(nInner))
-      else {
-        lastBranch = "distributed"
-        val (rst0, rchanged0) = Loop.identity(affected)
-        minPropagateUntilStable(
-          innerE, rst0, rchanged0, "label", 0L, maxIter)._1
-      }
+    // identity state, run to convergence: below the cap its rounds are
+    // driver arithmetic (~3 jobs instead of 3 per round — the affected
+    // slice is delete-adjacent-component-sized, usually tiny). Branch
+    // equality is Round17Spec's property.
+    val recomputed = Loop.collapseUntilStable(innerE, affected.select("node"),
+      maxIter, innerE.count())
     preserved.unionByName(recomputed.select("node", "label"))
   }
 

@@ -201,33 +201,24 @@ object KMeans {
                      maxIter: Int): (DataFrame, Int, Array[Array[Double]]) =
     runUntilFrom(s, vecsWithDelta, prevCentroids, eps, maxIter)
 
-  /** Persist converged centroids to Parquet for CROSS-SESSION restart
-    * — the k-means analogue of [[MrbgPagerank.writeState]] (the
-    * MRBG-Store's preserved state [P §5]): k×dims doubles as
-    * (cluster, pos, m) rows. Parquet stores IEEE doubles verbatim, so
-    * [[readCentroids]] in a NEW session returns bit-identical arrays
+  /** A centroid model as rows (cluster, centroid: array<double>) —
+    * the one stored encoding of centroids (the k-means warm restart's
+    * preserved state and the IVF index's model), committed through
+    * [[graft.incr.StateStore]]. Parquet keeps IEEE doubles verbatim,
+    * so [[centroidsOf]] in a NEW session returns bit-identical arrays
     * and `runIncremental` from them is exactly the in-session warm
     * restart — `Round6Spec` proves it across two sessions. */
-  def writeCentroids(s: SparkSession, cents: Array[Array[Double]],
-                     path: String): Unit = {
+  def centroidRows(s: SparkSession, cents: Array[Array[Double]]): DataFrame = {
     import s.implicits._
-    cents.zipWithIndex.flatMap { case (c, ci) =>
-      c.zipWithIndex.map { case (m, p) => (ci, p, m) }
-    }.toSeq.toDF("cluster", "pos", "m")
-      .coalesce(1) // k·dims rows — one footer beats 32 task files
-      .write.mode("overwrite").parquet(path)
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cluster", "centroid")
+      .coalesce(1) // k rows — one footer beats a file per task
   }
 
-  /** Read centroids written by [[writeCentroids]] back into dense
-    * arrays (row order is immaterial — (cluster, pos) keys it). */
-  def readCentroids(s: SparkSession, path: String): Array[Array[Double]] = {
-    val rows = s.read.parquet(path).collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).sortBy(_._1)
-    require(rows.nonEmpty, s"no centroids at $path")
-    val dims = rows.map(_._1._2).max + 1
-    require(rows.length % dims == 0, s"ragged centroid store at $path")
-    rows.map(_._2).grouped(dims).toArray
-  }
+  /** Centroids back from [[centroidRows]]' encoding, in cluster order. */
+  def centroidsOf(rows: DataFrame): Array[Array[Double]] =
+    rows.orderBy("cluster").collect()
+      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
 
   // oracle=none by design
   val queries: Seq[Query] = Seq(

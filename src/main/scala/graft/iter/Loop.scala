@@ -125,6 +125,26 @@ object Loop {
     pairs.select(col(a).as("src"), col(b).as("dst"))
       .union(pairs.select(col(b).as("src"), col(a).as("dst")))
 
+  /** Min-label collapse from the identity state of `nodes` (node), run
+    * until no label moves (at most `maxIter` rounds): (node, label).
+    * `edgeCount` is the number of directed `edges`, so the size gate
+    * costs no job. At or below `IterQueries.LocalCollapseCap` it is
+    * `minLabelCollapseLocal`, whose round loop stops when the frontier
+    * empties; above it the distributed `minPropagateUntilStable`, which
+    * stops at the fixpoint where the collapse's fixed-round distributed
+    * arm would pay all `maxIter` rounds. */
+  def collapseUntilStable(edges: DataFrame, nodes: DataFrame, maxIter: Int,
+                          edgeCount: Long): DataFrame =
+    if (edgeCount <= IterQueries.LocalCollapseCap)
+      IterQueries.minLabelCollapseLocal(edges, nodes, maxIter,
+        knownEdgeCount = Some(edgeCount))
+    else {
+      IterQueries.lastBranch = "distributed"
+      val (state0, changed0) = identity(nodes)
+      IterQueries.minPropagateUntilStable(
+        edges, state0, changed0, "label", 0L, maxIter)._1
+    }
+
   /** The dedup collapse: (idCol, keep_id), keep_id = the least id
     * reached in 5 min-label rounds over the symmetrized pair graph
     * (`IterQueries.minLabelCollapseLocal`, run under [[conf]]).

@@ -1,6 +1,6 @@
 package graft.iter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.incr.Maintain
@@ -33,7 +33,13 @@ import graft.incr.Maintain
   * anti-join/union merges of checkpointed state) — never a full
   * recompute of the graph. Frontier frames are node-bounded and
   * broadcast; C is edge-sized and only ever merged, exactly the
-  * MRBG-Store's access pattern. */
+  * MRBG-Store's access pattern.
+  *
+  * Across sessions (C, S, state) persist as ONE three-part
+  * [[graft.incr.StateStore]] commit, so a failure never leaves parts
+  * of two versions side by side. All three are exact 64-bit integers:
+  * a new session running [[incrRun]] from the stored parts is
+  * bit-equal to the in-session run (`Round5Spec`). */
 object MrbgPagerank {
 
   /** Contributions of `srcs` (single `src` column) under `state` over
@@ -96,29 +102,6 @@ object MrbgPagerank {
     }
     state
   }
-
-  /** Persist the MRBG iterative state — preserved edge contributions
-    * C, per-node sums S, and the rank state — to Parquet for CROSS-
-    * SESSION restart: the MRBG-Store's actual job for ITERATIVE
-    * workloads [P §5] (q103 does the same for aggregation partials).
-    * All three components are exact 64-bit integers, so a NEW session
-    * reading them back via [[readState]] and running [[incrRun]] is
-    * bit-equal to the in-session run — `Round5Spec` proves it across
-    * two separate sessions. */
-  def writeState(c: DataFrame, s: DataFrame, state: DataFrame,
-                 path: String): Unit = {
-    graft.incr.IncrMerge.writePartials(c, s"$path/C")
-    graft.incr.IncrMerge.writePartials(s, s"$path/S")
-    graft.incr.IncrMerge.writePartials(state, s"$path/state")
-  }
-
-  /** Read (C, S, state) written by [[writeState]] into `sp` — a fresh
-    * session restarting an iterative job from the stored MRBG state. */
-  def readState(sp: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    (sp.read.parquet(s"$path/C"),
-     sp.read.parquet(s"$path/S"),
-     sp.read.parquet(s"$path/state"))
 
   val queries: Seq[Query] = Seq(
     /** q104: q48's exact computation (PageRank restart after an edge

@@ -683,13 +683,13 @@ object Round11b {
          JOIN deg da ON da.p = part_a
          JOIN deg db ON db.p = part_b
          ORDER BY part_a, part_b""")((s, d) => {
-      // COSTED pair source (r13): the query emits EVERY intersecting
+      // COSTED pair source: the query emits EVERY intersecting
       // pair with its exact jaccard (no threshold), so no LSH swap
       // is sound — the scale guard is guardedInterPairs' capped
       // branch (hot-supplier cap + exact re-verify), the same
       // degradation the grid join declares. Decision under the hash.
       val e = bipartiteEdges(s, d).filter(col("p") < 100)
-      // gate scalars memoized per (session, fixture) — r18 task 1a
+      // gate scalars memoized per (session, fixture): no count job per call
       val stats = Memos.value(s, d, "round11b/graphNbrStats")(
         graft.text.Dedup.pairStats(
           e.select(col("p").as("doc_id"), col("sk").as("tok")), "tok"))
@@ -791,8 +791,8 @@ object Round11b {
                <= m - INTERVAL 1 MINUTE
          ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
         "round11b/streamRoundtrip")(
-        // r18 (task 6): 4-partition state — the one-time stream cost
-        // is micro-batch state plumbing, not data (Streams.smallStateConf)
+        // 4-partition state — the one-time stream cost is micro-batch
+        // state plumbing, not data (Streams.smallStateConf)
         graft.stream.Streams.smallStateConf(s) {
       val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r11s"))
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
@@ -811,7 +811,7 @@ object Round11b {
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
         .zipWithIndex
         .foreach { case (f, i) => f.setLastModified(1700000000000L + i * 60000L) }
-      val q = s.readStream
+      graft.stream.Streams.runAvailableNow(s.readStream
         .schema(norm.schema)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "1")
@@ -823,13 +823,7 @@ object Round11b {
           col("event_type"), col("n"))
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(180000L))
-        throw new IllegalStateException(
-          "streaming run did not terminate within 180s - sink is partial; " +
-          "not memoizing a truncated result")
+        .outputMode("append"))
       s.read.parquet(out).orderBy("day", "event_type").localCheckpoint()
     })),
 
@@ -864,8 +858,8 @@ object Round11b {
                <= m - INTERVAL 1 MINUTE
          ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
         "round11b/streamRestart")(
-        // r18 (task 6): 4-partition state across BOTH runs (the
-        // checkpoint pins the count at first start)
+        // 4-partition state across BOTH runs (the checkpoint pins the
+        // count at first start)
         graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r11r"))
@@ -886,7 +880,7 @@ object Round11b {
           dst.toFile.setLastModified(1700000000000L + (base + i) * 60000L)
         }
       def runOnce(): Unit = {
-        val q = s.readStream
+        graft.stream.Streams.runAvailableNow(s.readStream
           .schema(norm.schema)
           .option("pathGlobFilter", "*.parquet")
           .option("maxFilesPerTrigger", "1")
@@ -898,20 +892,14 @@ object Round11b {
             col("event_type"), col("n"))
           .writeStream.format("parquet")
           .option("path", out).option("checkpointLocation", ck)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        if (!q.awaitTermination(180000L))
-          throw new IllegalStateException(
-            "streaming run did not terminate within 180s - sink is partial; " +
-            "not memoizing a truncated result")
+          .outputMode("append"))
       }
       land(parts.take(2), 0); runOnce()   // run 1: first half landed
       land(parts.drop(2), 2); runOnce()   // run 2: restart on the rest
       s.read.parquet(out).orderBy("day", "event_type").localCheckpoint()
     })),
 
-    /** q280: STREAMING MERGE UPSERT under the oracle hash (r16) —
+    /** q280: STREAMING MERGE UPSERT under the oracle hash —
       * the third streaming fault-tolerance row: a real file-source
       * stream driven through `foreachBatch` +
       * [[graft.stream.Streams.applyMergeBatch]] (the q278 MERGE as a
@@ -940,9 +928,9 @@ object Round11b {
            FROM events
          ) t WHERE rn = 1 ORDER BY user_id""")((s, d) => Memos.frame(s, d,
         "round11b/streamMergeUpsert")(
-        // r18 (task 6): the foreachBatch MERGE's full-outer join runs
-        // per micro-batch — 4 shuffle partitions size it to the
-        // KB-scale batches (result is partition-count invariant)
+        // the foreachBatch MERGE's full-outer join runs per micro-batch
+        // — 4 shuffle partitions size it to the KB-scale batches
+        // (result is partition-count invariant)
         graft.stream.Streams.smallStateConf(s) {
       val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r16m"))
       val (src, ck, store) = (s"$root/src", s"$root/ck", s"$root/store")
@@ -960,7 +948,7 @@ object Round11b {
         .foreach { case (f, i) =>
           f.setLastModified(1700000000000L - i * 60000L)
         }
-      val q = s.readStream
+      graft.stream.Streams.runAvailableNow(s.readStream
         .schema(norm.schema)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "1")
@@ -972,13 +960,7 @@ object Round11b {
             graft.stream.Streams.applyMergeBatch(
               b.toDF(), Seq("user_id"), "ord", store)
         }
-        .option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(180000L))
-        throw new IllegalStateException(
-          "streaming run did not terminate within 180s - store is " +
-          "partial; not memoizing a truncated result")
+        .option("checkpointLocation", ck))
       graft.stream.Streams.readStore(s, store).get
         .select(col("user_id"), col("event_id").as("last_event_id"),
           col("event_type").as("last_type"), col("value").as("last_value"))

@@ -429,7 +429,7 @@ object Round12 {
           AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE
          ORDER BY view_id, purchase_id""")((s, d) => Memos.frame(s, d,
         "round12/streamJoin")(
-        // r18 (task 6): 4-partition state (4 StateStores per join
+        // 4-partition state (4 StateStores per join
         // side instead of 32) + 2-files-per-trigger — the eviction
         // margin argument above is per-batch generic, so 3
         // micro-batches prove the same contract 5 did, and
@@ -459,7 +459,7 @@ object Round12 {
           .withWatermark(tsC, "10 minutes")
       val views = side("view", "view_id", "v_ts", "v_user")
       val purch = side("purchase", "purchase_id", "p_ts", "p_user")
-      val q = views.join(purch,
+      graft.stream.Streams.runAvailableNow(views.join(purch,
           col("v_user") === col("p_user") &&
           col("p_ts") >= col("v_ts") &&
           col("p_ts") <= col("v_ts") + expr("INTERVAL 30 MINUTES"))
@@ -468,13 +468,7 @@ object Round12 {
           (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("wait_us"))
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(180000L))
-        throw new IllegalStateException(
-          "streaming run did not terminate within 180s - sink is partial; " +
-          "not memoizing a truncated result")
+        .outputMode("append"))
       s.read.parquet(out).orderBy("view_id", "purchase_id").localCheckpoint()
     })),
 
@@ -663,16 +657,16 @@ object Round12 {
       * watermarked stateful dropDuplicates on (event_id, ts) before
       * the windowed aggregate. Every duplicate copy lands in a LATER
       * micro-batch than its original (all originals land first, all
-      * copies after — r18 layout): the second copy is either
+      * copies after): the second copy is either
       * state-deduplicated (ts ≥ watermark — state retained) or
       * dropped as late (ts < watermark) — BOTH paths erase it, and
       * both now cross a real batch boundary, so every event
       * aggregates exactly once and the sink equals the closed-window
       * function of the DISTINCT events, which is what the oracle
       * computes over the original table. Runs once per (session,
-      * fixture); appId-isolated scratch. r18 (task 6): 4-partition
-      * state + 4-files-per-trigger — 3 micro-batches (originals,
-      * duplicates, flush) instead of 9 prove the same contract. */
+      * fixture); appId-isolated scratch. 4-partition state +
+      * 4-files-per-trigger — 3 micro-batches (originals, duplicates,
+      * flush) prove the contract. */
     Query.stream("q_stream_dedup",
       // q193's oracle: the closed-window aggregate over the ORIGINAL
       // (distinct) events — the duplicated landing plus the stateful
@@ -716,7 +710,7 @@ object Round12 {
           dst.toFile.setLastModified(1700000000000L + (off + i) * 60000L)
         }
       }
-      val q = s.readStream.schema(norm.schema)
+      graft.stream.Streams.runAvailableNow(s.readStream.schema(norm.schema)
         .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "4")
         .parquet(src)
@@ -728,13 +722,7 @@ object Round12 {
           col("event_type"), col("n"))
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(180000L))
-        throw new IllegalStateException(
-          "streaming run did not terminate within 180s - sink is partial; " +
-          "not memoizing a truncated result")
+        .outputMode("append"))
       s.read.parquet(out).orderBy("day", "event_type").localCheckpoint()
     })),
 
@@ -803,7 +791,7 @@ object Round12 {
       def vc(p: Column) = o.filter(p)
         .groupBy(col("o_orderpriority"), col("cents"))
         .agg(count(lit(1)).as("n"))
-      // r18 A/B NOTE: memoizing the base partials (the q212
+      // A/B NOTE: memoizing the base partials (the q212
       // band_partials pattern) was tried and REVERTED — the three
       // union branches share ONE orders scan in a single stage here,
       // and splitting the base branch onto an InMemory relation broke
@@ -1054,7 +1042,7 @@ object Round12 {
       * table. The BASE per-value counts are the row's stored state
       * (exactly what a production run reads back from the partials
       * store), so they ride the session memo like aprioriBaseState —
-      * r18: the per-invocation work is then the two delta-sized
+      * the per-invocation work is then the two delta-sized
       * aggregations plus the NDV-sized merge and fold per column. */
     Query("q_incr_profile",
       // q192's oracle: the batch per-column profile over the POST-DELTA

@@ -1116,7 +1116,7 @@ object Round12b {
           .as("ibucket")).distinct()
       // stored state: the base partials ARE the persisted relation a
       // production run reads back from the partials store — session-
-      // memoized like every stored-state family (IndexStore idiom)
+      // memoized like every stored-state family
       val baseP = Memos.frame(s, d, "round12b/band_partials") {
         val p = bandPartials(base).persist()
         p.count(); p

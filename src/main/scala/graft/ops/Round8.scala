@@ -226,7 +226,7 @@ object Round8 {
     * each bucket key, the exact-Jaccard-verified pairs that bucket
     * generates (capped buckets contribute their pair enumeration,
     * quarantined buckets their spanning star). Production persists it
-    * next to the band index (`incr.IndexStore` — all-integer rows);
+    * next to the band index (`incr.StateStore` — all-integer rows);
     * it is what makes per-batch VERIFICATION delta-proportional:
     * untouched buckets' verified pairs pass through verbatim (docs
     * are immutable and verification is pair-local, so a pair's
@@ -525,7 +525,7 @@ object Round8 {
       * as a declared query — the last paper workload's incremental
       * path under the driver's eye. The STORED model is the converged
       * base-corpus centroids (vec_id % 10 <> 0, eps=1e-4 — memoized
-      * here, Parquet via `KMeans.writeCentroids` in production); each
+      * here, a `StateStore` commit of `KMeans.centroidRows` in production); each
       * invocation warm-restarts `KMeans.runIncremental` on the
       * POST-delta corpus (insert % 10 == 0, delete % 10 == 1 — the
       * Round8 convention) from those centroids and reports the
@@ -540,7 +540,7 @@ object Round8 {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val post = emb.filter(col("vec_id") % 10 =!= 1).persist()
       // the STORED centroid model (converged base-corpus centroids —
-      // production writes them through `KMeans.writeCentroids` / reads
+      // production commits them through `incr.StateStore` / reads
       // them back, `Round6Spec` proves that round-trip bit-exact): k×dims
       // doubles per (session, dir), so repeated invocations measure the
       // warm restart itself, not the base convergence

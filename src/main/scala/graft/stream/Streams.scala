@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
 import graft.engine.Dec._
 
 /** Structured-Streaming forms of the §2J operators, shared by batch
@@ -213,23 +213,19 @@ object Streams {
     *     argmax-by-orderCol over every row ever delivered —
     *     INVARIANT to micro-batch boundaries and arrival order (real
     *     CDC feeds deliver late);
-    *  3. commit the result as a NEW versioned snapshot and swap the
-    *     `_CURRENT` pointer atomically (see [[commitSnapshot]]).
+    *  3. commit the result as the store's next version
+    *     ([[graft.incr.StateStore]], one part).
     *
-    * Exactly-once story (scoped to the write protocol below):
-    * the MERGE itself is IDEMPOTENT — re-merging a replayed batch
-    * (foreachBatch retries after a crash) recomputes the identical
-    * snapshot because last-write-wins dedup and the ord-conditional
-    * UPDATE are both absorbing — and the COMMIT is crash-safe because
-    * the store is never modified in place: the merged state lands in
-    * a fresh `snap-<v+1>` directory and becomes visible only when the
-    * one-file `_CURRENT` pointer is atomically renamed over (an
-    * in-place overwrite would leave a truncated store if the writer
-    * died mid-write). A crash at ANY point leaves the pointer
-    * on a complete snapshot — old or new — and the retry re-merges
-    * into whichever it reads, converging to the same state either
-    * way. At 100 TB the store would be partitioned and the merge
-    * slice-restricted + dynamic-overwritten
+    * Exactly-once story: the MERGE itself is IDEMPOTENT — re-merging
+    * a replayed batch (foreachBatch retries after a crash) recomputes
+    * the identical snapshot because last-write-wins dedup and the
+    * ord-conditional UPDATE are both absorbing — and the commit is
+    * crash-safe because the store is never modified in place: a crash
+    * at ANY point leaves the store on a complete snapshot — old or
+    * new — and the retry re-merges into whichever it reads,
+    * converging to the same state either way. At 100 TB the store
+    * would be partitioned and the merge slice-restricted +
+    * dynamic-overwritten
     * ([[graft.incr.MergeInto.mergeIntoPartitioned]], the q249 idiom);
     * the snapshot form here is the fixture-scale expression of the
     * same batch logic. */
@@ -245,81 +241,38 @@ object Streams {
   def applyMergeBatch(batch: DataFrame, keys: Seq[String],
                       orderCol: String, storePath: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val s = batch.sparkSession
     if (batch.isEmpty) return
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(orderCol).desc)
     val dedup = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val (ver, store) = currentSnapshot(s, storePath) match {
-      case Some((v, df)) => (v, df)
-      case None          => (0L, dedup.filter(lit(false)))
-    }
+    val store = readStore(batch.sparkSession, storePath)
+      .getOrElse(dedup.filter(lit(false)))
     // conditional UPDATE SET *: take the source row only when the
     // source version is newer (see scaladoc)
     val merged = graft.incr.MergeInto.mergeInto(store, dedup, keys,
       whenMatchedUpdate = graft.incr.MergeInto.updateAll(store),
       whenMatchedUpdateCond = col(s"s.$orderCol") > col(s"t.$orderCol"))
-    commitSnapshot(s, storePath, ver + 1, merged)
+    graft.incr.StateStore.commit(storePath, Seq(SnapshotPart -> merged))
   }
 
   /** The store's current snapshot as a batch DataFrame — the read
-    * face of [[mergeSink]] (None before the first committed batch).
-    * All paths resolve through Hadoop's FileSystem API from the
-    * session's Hadoop conf, so `file:`, `hdfs:`, `s3a:` and friends
-    * all work (a `java.io.File` existence check would silently treat
-    * any scheme'd store as absent). */
+    * face of [[mergeSink]] (None before the first committed batch). */
   def readStore(s: org.apache.spark.sql.SparkSession,
                 storePath: String): Option[DataFrame] =
-    currentSnapshot(s, storePath).map(_._2)
+    graft.incr.StateStore.read(s, storePath).map(_(SnapshotPart))
 
-  private def pointerOf(storePath: String) =
-    new org.apache.hadoop.fs.Path(storePath, "_CURRENT")
+  private val SnapshotPart = "snapshot"
 
-  private def currentSnapshot(s: org.apache.spark.sql.SparkSession,
-                              storePath: String): Option[(Long, DataFrame)] = {
-    val conf = s.sessionState.newHadoopConf()
-    val ptr = pointerOf(storePath)
-    val fs = ptr.getFileSystem(conf)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim.toLong finally in.close()
-      Some((v, s.read.parquet(
-        new org.apache.hadoop.fs.Path(storePath, s"snap-$v").toString)))
-    }
-  }
-
-  /** Commit `df` as snapshot `v` of the store: write it to a FRESH
-    * `snap-<v>` directory (a dead prior attempt at the same version
-    * is simply overwritten — the pointer never saw it), then swap the
-    * one-line `_CURRENT` pointer via FileContext rename with
-    * OVERWRITE — atomic on HDFS and local filesystems, so a reader
-    * (or a crash-retry) observes either the old complete snapshot or
-    * the new complete snapshot, never a torn one. Superseded
-    * snapshots older than v-1 are garbage-collected; v-1 is kept one
-    * generation so lazily-evaluated readers of the just-replaced
-    * snapshot stay valid across a single commit. */
-  private def commitSnapshot(s: org.apache.spark.sql.SparkSession,
-                             storePath: String, v: Long,
-                             df: DataFrame): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val conf = s.sessionState.newHadoopConf()
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(conf)
-    df.write.mode("overwrite").parquet(new Path(root, s"snap-$v").toString)
-    val tmp = new Path(root, "_CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(fs.getUri, conf)
-      .rename(fs.makeQualified(tmp), fs.makeQualified(pointerOf(storePath)),
-        Options.Rename.OVERWRITE)
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("snap-") &&
-          n.stripPrefix("snap-").toLongOption.exists(_ < v - 1))
-        fs.delete(st.getPath, true)
-    }
+  /** Run `w` once over everything its source holds now
+    * (Trigger.AvailableNow) and wait for it. Fails when the run has
+    * not finished within 180 s, so a caller never memoizes a partial
+    * sink. */
+  def runAvailableNow(w: DataStreamWriter[_]): Unit = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    if (!q.awaitTermination(180000L))
+      throw new IllegalStateException(
+        "streaming run did not terminate within 180s - sink is partial; " +
+        "not memoizing a truncated result")
   }
 }

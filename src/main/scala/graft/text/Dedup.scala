@@ -19,10 +19,9 @@ object Dedup {
     * shared by EVERY costed pair source — [[autoPairs]],
     * [[guardedInterPairs]] and q109's inline gate reference this one
     * constant, so the exact↔guarded decision points can never drift
-    * apart (ADVICE r13: the q109 inline literal duplicated the
-    * default). Sized so one executor core handles the exact join's
-    * shuffle share in seconds; at cluster scale raise it linearly
-    * with cores. */
+    * apart (no row carries its own copy of the literal). Sized so
+    * one executor core handles the exact join's shuffle share in
+    * seconds; at cluster scale raise it linearly with cores. */
   val DefaultVolumeCap: Long = 20L * 1000 * 1000
 
   /** Distinct (doc_id, tok) pairs. */
@@ -36,21 +35,20 @@ object Dedup {
     * relation is shared STRUCTURE (the LSH family's signature source
     * AND the Apriori family's item relation), so it pins once per
     * (session, fixture) instead of paying the tokenize+distinct
-    * shuffle per consumer invocation (r18, VERDICT r17 task 2: the
-    * q102 ledger drift was partly this re-tokenization riding a
-    * 19-job profile). persist(), not checkpoint: lineage stays
-    * re-derivable under memo-budget eviction. */
+    * shuffle per consumer invocation (re-tokenizing per call put
+    * jobs on q102's warm profile). persist(), not checkpoint:
+    * lineage stays re-derivable under memo-budget eviction. */
   def cachedTokens(s: SparkSession, d: String): DataFrame =
     Memos.frame(s, d, "dedup/toksAll")(tokens(s, d).persist())
 
   /** Deterministic subset used by the pairwise queries (bounds the
     * candidate space at any SF; the full-corpus path is q51's LSH).
-    * r18: derived from [[cachedTokens]] — the subset consumers
-    * (q51's signatures, the SimHash bands, the guarded q65 path) all
-    * re-paid the tokenize+distinct shuffle per invocation when the
-    * session already pins the full-corpus token structure; a filter
-    * over the cached relation is a cache-scan, not a shuffle (the
-    * same VERDICT-r17-task-2 treatment the Apriori family got). */
+    * Derived from [[cachedTokens]], so the subset consumers (q51's
+    * signatures, the SimHash bands, the guarded q65 path) never
+    * re-pay the tokenize+distinct shuffle per invocation while the
+    * session pins the full-corpus token structure: a filter over the
+    * cached relation is a cache-scan, not a shuffle (as for the
+    * Apriori family). */
   def subsetTokens(s: SparkSession, d: String): DataFrame =
     cachedTokens(s, d).filter(col("doc_id") % 5 === 0)
 
@@ -78,7 +76,7 @@ object Dedup {
     val setsCached = sets.storageLevel != none
     val matSets = if (setsCached) sets else sets.persist()
     // the candidate stream feeds BOTH the id prune and the verify
-    // join (verifyPairsLazy consumes it twice since the r13 audit):
+    // join (verifyPairsLazy consumes it twice):
     // cache scratch so the single checkpoint action computes it once
     val candsCached = cands.storageLevel != none
     val matCands = if (candsCached) cands else cands.persist()
@@ -99,9 +97,8 @@ object Dedup {
     * callers should pass a cached/materialized candidate frame
     * ([[verifyPairs]] does this automatically).
     *
-    * DE-CORPUSED (VERDICT r13 task 2, the task-1 treatment applied
-    * here): the probes used to be `broadcast(sets)` verbatim — the
-    * stored doc-set relation is CORPUS-sized, so the verify step of
+    * DE-CORPUSED: the probes used to be `broadcast(sets)` verbatim —
+    * the stored doc-set relation is CORPUS-sized, so the verify step of
     * the one pipeline built for 100 TB corpora shipped the corpus to
     * every executor. Now `sets` is left-semi-pruned to the candidate
     * doc-id set (≤ 2·|cands| ids — LSH-candidate-bounded by MaxBucket
@@ -130,8 +127,8 @@ object Dedup {
     * collapse. One token self-join with in-groupBy intersection
     * counting.
     *
-    * Broadcast-audit survivor (VERDICT r13 task 2): the szA/szB
-    * broadcast is SIZE-CAPPED by the caller's gate invariant — the
+    * Broadcast-audit survivor: the szA/szB broadcast is SIZE-CAPPED
+    * by the caller's gate invariant — the
     * only production caller is [[autoPairs]]' exact branch, which
     * admits this plan only when Σdf² ≤ exactVolumeCap; df ≥ 1 gives
     * |docs| ≤ |toks| = Σdf ≤ Σdf² ≤ cap, so the broadcast side is at
@@ -152,8 +149,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("inter"), col("union_sz"))
   }
 
-  /** COST-BASED pair-source selection (VERDICT r10 soft gap 3: the
-    * exact↔LSH swap was documented per row but manual). The exact
+  /** COST-BASED pair-source selection, so the exact↔LSH swap is a
+    * costed choice rather than a per-row manual one. The exact
     * path's dominant cost is the token self-join's pair-instance
     * volume Σ_tok df² — computable from a one-pass df aggregate
     * BEFORE committing to either plan (the classic optimizer
@@ -193,8 +190,8 @@ object Dedup {
     * EXACT row count (ordered, self-pairs included) of the
     * key-equality self-join, computable from one df aggregate BEFORE
     * committing to a plan. [[autoPairs]]'s costing estimate exposed
-    * generically for the whole exact-pair family (VERDICT r12 next
-    * step 4). The relation must be DISTINCT on (id, key). */
+    * generically for the whole exact-pair family. The relation must
+    * be DISTINCT on (id, key). */
   def pairVolume(rel: DataFrame, keyCol: String): Long =
     pairStats(rel, keyCol)._1
 
@@ -236,8 +233,8 @@ object Dedup {
 
   /** Occupancy-costed EXACT-VALUE pair source over ANY distinct
     * (id, key) relation — [[autoPairs]] generalized past the
-    * J ≥ 0.5 token corpus it was built for (VERDICT r12 next step 4:
-    * q65 shingles, q109 containment, q175 graph adjacency). Returns
+    * J ≥ 0.5 token corpus it was built for (q65 shingles, q109
+    * containment, q175 graph adjacency). Returns
     * (plan, pairs) with pairs = (doc_a < doc_b, inter, sz_a, sz_b),
     * values EXACT in both branches:
     *
@@ -256,12 +253,12 @@ object Dedup {
     *    volume is Σ min(df, k)² ≤ n_keys·k², so k = √(volumeCap /
     *    n_keys) (clamped to [min(16, keyCap), keyCap]) bounds the
     *    degraded branch's work BY CONSTRUCTION for any df profile —
-    *    the r13 sf1 scale run measured the previous FIXED 4096 cap
+    *    an sf1 scale run measured a FIXED 4096 cap
     *    admitting a 92 s run on a ~31-term vocabulary (31·4096² ≈
     *    half a billion candidates slip under any fixed per-key cap
     *    when the key space is small).
     *
-    * DE-CORPUSED VERIFY (VERDICT r13 task 1): the capped branch's
+    * DE-CORPUSED VERIFY: the capped branch's
     * verify step used to `broadcast()` the per-doc set and size
     * relations built from the FULL corpus — the branch that exists
     * precisely for corpora too big for the exact join shipped the
@@ -317,7 +314,7 @@ object Dedup {
       val b = capped.select(col("doc_id").as("doc_b"), col("tok"))
       // materialize the cap-bounded candidate set once: it feeds the
       // corpus prune AND the verify probe. persist()+count(), NOT
-      // localCheckpoint (ADVICE r14): finish's unpersist only clears
+      // localCheckpoint: finish's unpersist only clears
       // CacheManager entries, so a checkpoint's storage blocks would
       // leak until ContextCleaner GC — persist makes the release
       // real, and the InMemoryRelation gives AQE in-memory stats.
@@ -375,7 +372,7 @@ object Dedup {
     * self-join + pair groupBy) both the Jaccard family (q50/q108/q126)
     * and the containment query (q109) derive from.
     *
-    * Broadcast-audit survivor (VERDICT r13 task 2): szA/szB here is
+    * Broadcast-audit survivor: szA/szB here is
     * subset-doc-sized — corpus-DERIVED, but this memo is the DECLARED
     * bounded-subset oracle baseline (doc_id % 5, built once per
     * session): its whole computation, broadcast included, is the
@@ -410,8 +407,7 @@ object Dedup {
   /** Memoized row count of [[cachedSubsetPairs]] — the collapse
     * gate's edge scalar (×2 for the symmetrized graph), counted once
     * per (session, fixture) instead of one job per collapse
-    * invocation (VERDICT r17 task 1a: job launches are what host
-    * bursts multiply). */
+    * invocation (job launches are what host bursts multiply). */
   def cachedSubsetPairCount(s: SparkSession, d: String): Long =
     Memos.value(s, d, "dedup/subsetPairCount")(
       cachedSubsetPairs(s, d).count())
@@ -423,7 +419,7 @@ object Dedup {
       subsetTokens(s, d).select(col("doc_id")).distinct().localCheckpoint())
 
   /** Session-memoized [[docSets]] over the pairwise subset — the
-    * verify side of q51's LSH pipeline (r18): the per-doc token-set
+    * verify side of q51's LSH pipeline: the per-doc token-set
     * relation is static structure (the Round8 full-corpus twin is
     * `docSetsAll`), so the collect_set shuffle runs once per
     * (session, fixture) instead of once per q51 invocation.
@@ -600,13 +596,12 @@ object Dedup {
 
     dedupGroups,
 
-    /** q282 (r18, VERDICT r17 task 4): CONVERGENCE-TERMINATED dedup
-      * collapse — the q108 twin that runs the PRODUCTION termination,
-      * [[graft.iter.IterQueries.minPropagateUntilStable]], end to end
-      * under the oracle hash. q108's FIXED 5 rounds exist for the
-      * unrolled-SQL oracle and under-merge components whose diameter
-      * exceeds 5; this row iterates the same min-label step on the
-      * CHANGED frontier until a round moves no label, so
+    /** q282: CONVERGENCE-TERMINATED dedup collapse — the q108 twin
+      * that runs the min-label step until a round moves no label
+      * ([[graft.iter.Loop.collapseUntilStable]]) end to end under the
+      * oracle hash. q108's FIXED 5 rounds exist for the unrolled-SQL
+      * oracle and under-merge components whose diameter exceeds 5;
+      * this row iterates on the CHANGED frontier until it empties, so
       * arbitrary-diameter duplicate chains collapse fully — and the
       * oracle is a TRUE FIXPOINT too: a DuckDB RECURSIVE CTE closes
       * the symmetric pair graph transitively and takes MIN(label)
@@ -615,14 +610,15 @@ object Dedup {
       * fixpoint is unique, so convergence-vs-recursion equality is
       * exact, not approximate.
       *
-      * Scale: this is the distributed collapse shape (per-round work
-      * is frontier-sized, state never leaves the cluster) — the
-      * 100 TB path the q108 scaladoc promises, now a declared row
-      * exercised in EVERY driver bench rather than spec-only.
+      * Scale: the collapse's costed selector takes the edge count from
+      * the memoized pair count (no gate job): below
+      * `LocalCollapseCap` the rounds are driver arithmetic over the
+      * collected pair graph, above it the distributed until-stable
+      * loop (per-round work frontier-sized, state never leaves the
+      * cluster) — the 100 TB path the q108 scaladoc promises.
       * maxIter 50 is a watchdog, not a tuning knob: near-dup
       * components are clique-dense (diameter ~2-3 here), and a graph
-      * that genuinely needed 50+ rounds would simply stop early with
-      * the frontier count saying so. */
+      * that genuinely needed 50+ rounds would simply stop early. */
     Query("q_dedup_groups_converged",
       /** q282 oracle: TRUE-FIXPOINT collapse via RECURSIVE CTE (the
         * q273 discipline — no unrolled stage count): `reach` closes the
@@ -663,11 +659,10 @@ object Dedup {
       val edges = graft.iter.Loop.symmetrize(cachedSubsetPairs(s, d),
         "doc_a", "doc_b")
       graft.iter.Loop.conf(s) {
-        val (state0, changed0) = graft.iter.Loop.identity(
-          cachedSubsetDocs(s, d).select(col("doc_id").as("node")))
-        val (st, _) = graft.iter.IterQueries.minPropagateUntilStable(
-          edges, state0, changed0, "label", 0L, 50)
-        st.select(col("node").as("doc_id"), col("label").as("keep_id"))
+        graft.iter.Loop.collapseUntilStable(edges,
+            cachedSubsetDocs(s, d).select(col("doc_id").as("node")), 50,
+            2 * cachedSubsetPairCount(s, d))
+          .select(col("node").as("doc_id"), col("label").as("keep_id"))
       }.orderBy("doc_id")
     }),
 
@@ -784,7 +779,7 @@ object Dedup {
       // intersection is SYMMETRIC: the canonical-pair relation is
       // emitted in both orientations — (a,b) keeps sz_a, (b,a)
       // promotes sz_b — and the asymmetric |A∩B|/|A| threshold
-      // applies per direction. Pair source is COSTED (r13): under
+      // applies per direction. Pair source is COSTED: under
       // the volume cap the MEMOIZED canonical pairs (shared with the
       // Jaccard family) serve both orientations for free; over it,
       // [[guardedInterPairs]]' capped branch bounds the self-join —
@@ -793,8 +788,8 @@ object Dedup {
       // sf1) and this row is exactly where the guard earns its keep.
       // The decision rides the hash as `plan`.
       val toks = subsetTokens(s, d)
-      // gate scalars memoized per (session, fixture) — the COUNT gate
-      // used to re-run as one job per cold invocation (VERDICT r17)
+      // gate scalars memoized per (session, fixture), so the count
+      // gate is not one job per cold invocation
       val (vol, nKeys) = Memos.value(s, d, "dedup/subsetTokStats")(
         pairStats(toks, "tok"))
       val (plan, inter) =
@@ -835,17 +830,17 @@ object Dedup {
          JOIN sz sb ON sb.doc_id = doc_b
          WHERE 10 * inter >= sa.sz + sb.sz - inter
          ORDER BY doc_a, doc_b""")((s, d) => {
-      // COSTED pair source (r13): J ≥ 0.1 sits far below the LSH
+      // COSTED pair source: J ≥ 0.1 sits far below the LSH
       // banding S-curve, so the scale path is the capped-candidate +
       // exact-verify branch of [[guardedInterPairs]], not a MinHash
       // swap. Shingle df is near-1 in natural text (volume ~n), so
       // the exact branch holds to much larger corpora than the token
       // family; the guard protects against boilerplate shingles.
       val sh = shingles(s, d)
-      // gate scalars memoized per (session, fixture) — r18 task 1a:
-      // the Σdf² stats scan was one extra full-relation job per
-      // invocation of this row; the stats are deterministic with the
-      // fixture, so they ride a memo value
+      // gate scalars memoized per (session, fixture): the Σdf² stats
+      // scan would be one extra full-relation job per invocation of
+      // this row; the stats are deterministic with the fixture, so
+      // they ride a memo value
       val stats = Memos.value(s, d, "dedup/shingleStats")(
         pairStats(sh.select(col("doc_id"), col("sh").as("tok")), "tok"))
       val (plan, pairs) = guardedInterPairs(sh, "sh", "doc_id",

@@ -205,7 +205,7 @@ object SimHash {
     * intermediate store ([[graft.ops.Round8]]'s cachedLshPairsByBucket
     * for this family). All-integer rows (band, bh, doc_a, doc_b,
     * hamming); production persists it next to the band index via
-    * `incr.IndexStore`. Verification here is the in-line popcount, so
+    * `incr.StateStore`. Verification here is the in-line popcount, so
     * unlike MinHash no doc-set join is needed even at build time. */
   private def pairsByBucketCached(s: org.apache.spark.sql.SparkSession,
                                   d: String): DataFrame =

@@ -34,7 +34,7 @@ object Similarity {
 
   /** Memoized row count of [[cachedCosinePairs04]] — the collapse
     * gate scalar for q110/q126, one count per (session, fixture)
-    * instead of one job per invocation (VERDICT r17 task 1a). */
+    * instead of one job per invocation. */
   def cachedCosinePairs04Count(s: SparkSession, d: String): Long =
     Memos.value(s, d, "similarity/cosPairCount04")(
       cachedCosinePairs04(s, d).count())
@@ -42,8 +42,8 @@ object Similarity {
   /** Session-memoized [[quantize]] of the fixture corpus — THE stored
     * int8 representation itself, (vec_id, embedding, qv, qn), shared
     * by q275 (exact all-pairs over the stored codes) and the quantized
-    * IVF index build below (r18 opt, fifth pass). Motivation measured
-    * on q275: quantize is built from withColumn exprs, so projection
+    * IVF index build below. Why it is stored, measured on q275:
+    * quantize is built from withColumn exprs, so projection
     * collapse INLINES the interpreted HOF tree everywhere qv/qn are
     * referenced — the scale aggregate re-evaluates per array ELEMENT
     * inside the transform lambda (O(dims²) per vector) and the whole
@@ -59,12 +59,12 @@ object Similarity {
         .persist())
 
   /** Session-memoized [[ivfIndexQuantized]] over the fixture corpus —
-    * the stored-index discipline (r18 opt): q277/q279's scaladocs
-    * already declare the build OFFLINE at production scale (the index
-    * is (vec_id, cluster, qv, qn) parquet via [[ivfWriteIndex]] /
-    * `incr.IndexStore`), yet both rows re-ran the quantize+assign
-    * corpus scan and the centroid collect per invocation — two of the
-    * five warm jobs and ~1.2 s of the 1.6 s warm wall at sf0.1. The
+    * the stored-index discipline: q277/q279's scaladocs declare the
+    * build OFFLINE at production scale (the index is (vec_id,
+    * cluster, qv, qn) parquet via [[ivfWriteIndex]]), so neither row
+    * re-runs the quantize+assign corpus scan and the centroid collect
+    * per invocation — two of the five warm jobs and ~1.2 s of the
+    * 1.6 s warm wall at sf0.1. The
     * index is deterministic static structure per (session, fixture,
     * k), exactly the aprioriBaseState / cachedLshBandedOld class, so
     * it rides the same memos; the SEARCH (probe scoring, pruning,
@@ -333,39 +333,39 @@ object Similarity {
     (KMeans.assign(s, vecs, cents), cents)
   }
 
-  /** Persist a quantized IVF index (r16): the int8 corpus relation
-    * written PARTITIONED BY CLUSTER — so at read time the nprobe
-    * cluster filter becomes parquet PARTITION PRUNING and a probe
-    * reads only its nprobe/k share of the index from disk, which is
-    * the actual 100 TB ANN-store shape (the in-session path gets the
-    * same pruning from the cluster filter over the cached relation;
-    * the stored path gets it from the directory layout). Centroids —
-    * the k-row model — ride along as a tiny parquet.
-    * `Round16Spec` proves the roundtrip is search-result bit-equal
-    * and that the probed scan carries the cluster partition filter. */
-  def ivfWriteIndex(indexedQ: DataFrame, cents: Array[Array[Double]],
-                    path: String): Unit = {
-    indexedQ.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/corpus")
-    val s = indexedQ.sparkSession
-    import s.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-  }
+  /** Persist an IVF index — the float corpus of [[ivfIndex]] or the
+    * int8 corpus of [[ivfIndexQuantized]] — as one
+    * [[graft.incr.StateStore]] commit: the corpus PARTITIONED BY
+    * CLUSTER, so at read time the nprobe cluster filter becomes
+    * parquet PARTITION PRUNING and a probe reads only its nprobe/k
+    * share of the index from disk (the in-session path gets the same
+    * pruning from the cluster filter over the cached relation), and
+    * the centroid model as [[KMeans.centroidRows]]. `Round16Spec`
+    * proves the roundtrip is search-result bit-equal and that the
+    * probed scan carries the cluster partition filter; `Round9Spec`
+    * proves a new session's `ivfApplyDelta` from it equals the
+    * in-memory chain. */
+  def ivfWriteIndex(indexed: DataFrame, cents: Array[Array[Double]],
+                    path: String): Unit =
+    graft.incr.StateStore.commit(path,
+      Seq("corpus" -> indexed,
+        "centroids" -> KMeans.centroidRows(indexed.sparkSession, cents)),
+      partitionBy = Map("corpus" -> Seq("cluster")))
 
-  /** Load a stored quantized IVF index: (corpus, centroids). The
-    * corpus frame's cluster column is the partition column — any
-    * `cluster IN (...)` filter on it prunes directories before a
-    * byte of payload is read. */
+  /** Load a stored IVF index: (corpus, centroids). The corpus is
+    * (vec_id, cluster, then its other stored columns in order); its
+    * cluster column is the partition column — any `cluster IN (...)`
+    * filter on it prunes directories before a byte of payload is
+    * read. */
   def ivfReadIndex(s: SparkSession, path: String)
       : (DataFrame, Array[Array[Double]]) = {
-    val corpus = s.read.parquet(s"$path/corpus")
-      .select(col("vec_id"), col("cluster").cast("int").as("cluster"),
-        col("qv"), col("qn"))
-    val cents = s.read.parquet(s"$path/centroids").orderBy("cluster")
-      .collect().map(_.getSeq[Double](1).toArray)
-    (corpus, cents)
+    val parts = graft.incr.StateStore.read(s, path).getOrElse(
+      throw new IllegalArgumentException(s"no IVF index committed at $path"))
+    val corpus = parts("corpus")
+    val payload = corpus.columns.filterNot(Set("vec_id", "cluster")).map(col)
+    (corpus.select(col("vec_id") +: col("cluster").cast("int").as("cluster")
+        +: payload.toSeq: _*),
+      KMeans.centroidsOf(parts("centroids")))
   }
 
   /** Brute-force batch KNN: top-`topK` cosine neighbours per probe,
@@ -392,8 +392,8 @@ object Similarity {
   }
 
   /** COST-BASED brute↔IVF KNN selection — [[graft.text.Dedup.autoPairs]]'s
-    * pattern applied to the ANN family (the second half of VERDICT
-    * r10's "the exact↔approximate swap is manual" gap). The brute
+    * pattern applied to the ANN family, so the exact↔approximate swap
+    * is a costed choice rather than a manual one. The brute
     * path's dominant cost is the |probes| × |corpus| dot-product
     * volume, computed exactly from two count aggregates BEFORE
     * committing to a plan: at/below the cap the zero-recall-loss
@@ -605,8 +605,8 @@ object Similarity {
       // measured 26.7 s at sf0.1's pair volume). The codes themselves
       // ride [[cachedQuantized]] — without it, projection collapse
       // re-inlines the interpreted quantize HOFs into the qn>0 filter
-      // and BOTH self-join sides (r18 opt fifth pass; see the memo's
-      // scaladoc and plans/r18/q_sim_cosine_quantized_before.txt)
+      // and BOTH self-join sides (see the memo's scaladoc and
+      // plans/r18/q_sim_cosine_quantized_before.txt)
       val ldot = graft.functions.LongDot.long_dot _
       val q = cachedQuantized(s, d).select("vec_id", "qv", "qn")
       val a = q.select(col("vec_id").as("vec_a"), col("qv").as("qa"),
@@ -640,15 +640,14 @@ object Similarity {
       * quantized brute force (pruning loss isolated — nprobe=k must
       * reproduce it exactly), the q159/q275 recall-audit discipline. */
     Query("q_sim_ann_ivf_quantized")((s, d) =>
-      // r18 opt: the index rides [[cachedIvfIndexQuantized]] (stored
-      // structure — the build is offline in the declared 100 TB
-      // shape); probe selection + in-bucket scoring run per
-      // invocation as before.
+      // the index rides [[cachedIvfIndexQuantized]] (stored structure —
+      // the build is offline in the declared 100 TB shape); probe
+      // selection + in-bucket scoring run per invocation.
       ivfTopKQuantized(s, d,
         pre = Some(cachedIvfIndexQuantized(s, d, 10))).drop("cluster")),
 
     /** q279: BATCH QUANTIZED IVF ANN [N scale path] — the production
-      * many-probe × quantized-index composition (VERDICT r15 task 6):
+      * many-probe × quantized-index composition:
       * q135's batch shape run over q277's int8 index. Top-8 quantized
       * cosine neighbours for each of 5 probes, nprobe = k/4; probes
       * quantize in-plan (float vector still drives cluster selection,
@@ -661,8 +660,8 @@ object Similarity {
       * force. */
     Query("q_sim_ann_ivf_batch_quantized")((s, d) => {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      // r18 opt: stored √n-centroid index via the session memo (k = 0
-      // sizes it like the per-invocation build it replaces)
+      // stored √n-centroid index via the session memo (k = 0 sizes it
+      // at ~√n centroids)
       val (indexedQ, cents) = cachedIvfIndexQuantized(s, d, 0)
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))

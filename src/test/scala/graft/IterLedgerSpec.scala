@@ -31,7 +31,7 @@ class IterLedgerSpec extends SparkSpecBase {
     "q_incr_cc_frontier" -> (31, 3),
     "q_incr_mrbg" -> (32, 3),
     "q_dedup_groups" -> (21, 4),
-    "q_dedup_groups_converged" -> (30, 15),
+    "q_dedup_groups_converged" -> (21, 4),
     "q_dedup_multimodal_groups" -> (24, 4),
     "q_dedup_embedding_groups" -> (9, 4),
     "q_dedup_groups_lsh" -> (27, 4),

@@ -193,14 +193,27 @@ class MemoBudgetSpec extends SparkSpecBase {
   test("a scratch directory is deleted at JVM exit: q_incr_restart's " +
       "is registered once the row has run") {
     SparkEntry.queries("q_incr_restart")(spark, sfDir).collect()
-    // the row's directories of this application, found on disk
-    val app = spark.sparkContext.applicationId
-    val dirs = Option(new java.io.File(sys.props("java.io.tmpdir"), "graft_incr")
-        .listFiles).toSeq.flatten
-      .filter(f => f.getName.startsWith("restart_") && f.getName.endsWith(app))
+    val dirs = incrRestartDirs()
     assert(dirs.nonEmpty)
     assert(dirs.forall(f =>
       org.apache.spark.sql.graftbridge.Bridge.deletesAtShutdown(f.getPath)))
+  }
+
+  /** q_incr_restart's scratch directories of this application: direct
+    * children of the temp dir. */
+  private def incrRestartDirs(): Seq[java.io.File] = {
+    val app = spark.sparkContext.applicationId
+    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles).toSeq.flatten
+      .filter(f => f.getName.startsWith("graft_incr_restart_") &&
+        f.getName.endsWith(app))
+  }
+
+  test("q_incr_restart's scratch directory is a direct child of the " +
+      "temp dir, and a scratch tag with a '/' is rejected") {
+    SparkEntry.queries("q_incr_restart")(spark, sfDir).collect()
+    assert(incrRestartDirs().size == 1)
+    intercept[IllegalArgumentException](
+      Memos.scratchDir(spark, sfDir, "incr/restart"))
   }
 
   test("within budget nothing evicts; budget default derives from the " +

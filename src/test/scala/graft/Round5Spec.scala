@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.iter.{Apriori, Graphs, IterQueries, KMeans, MrbgPagerank}
+import graft.incr.StateStore
 
 /** Round-5 depth items: incremental Apriori (delta-run ≡ full-run,
   * delta-sized touched work), incremental k-means (warm restart from
@@ -109,13 +110,15 @@ class Round5Spec extends SparkSpecBase {
       val inSession = MrbgPagerank
         .incrRun(edgesDegNew, baseState, c0, s0s, frontier0, 0L, 2)
         .localCheckpoint()
-      MrbgPagerank.writeState(c0, s0s, baseState, s"$dir/mrbg")
+      StateStore.commit(s"$dir/mrbg",
+        Seq("C" -> c0, "S" -> s0s, "state" -> baseState))
       graft.incr.IncrMerge.writePartials(edgesDegNew, s"$dir/edgesDegNew")
       graft.incr.IncrMerge.writePartials(frontier0, s"$dir/frontier0")
       // SESSION B: fresh session state — everything below reads ONLY
       // the parquet store (genuine scans, not in-memory lineage)
       val s2 = spark.newSession()
-      val (c0b, s0b, stateB) = MrbgPagerank.readState(s2, s"$dir/mrbg")
+      val mrbg = StateStore.read(s2, s"$dir/mrbg").get
+      val (c0b, s0b, stateB) = (mrbg("C"), mrbg("S"), mrbg("state"))
       val restarted = MrbgPagerank.incrRun(
         s2.read.parquet(s"$dir/edgesDegNew"), stateB, c0b, s0b,
         s2.read.parquet(s"$dir/frontier0"), 0L, 2).localCheckpoint()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.incr.StateStore
 import graft.text.MinHash
 
 /** Round-6 hardening items: the LSH bucket-size cap + quarantine
@@ -108,13 +109,15 @@ class Round6Spec extends SparkSpecBase {
       val eps = 1e-4
       // SESSION A: converge on the base corpus, persist the centroids
       val (_, _, prevCents) = KMeans.runUntilFrom(spark, base, seed, eps, 60)
-      KMeans.writeCentroids(spark, prevCents, s"$dir/cents")
+      StateStore.commit(s"$dir/cents",
+        Seq("centroids" -> KMeans.centroidRows(spark, prevCents)))
       // in-session warm restart on the full corpus — the reference run
       val (warmA, itersA, centsA) =
         KMeans.runIncremental(spark, vecs, prevCents, eps, 60)
       // SESSION B: fresh session state, centroids read from Parquet
       val s2 = spark.newSession()
-      val stored = KMeans.readCentroids(s2, s"$dir/cents")
+      val stored = KMeans.centroidsOf(
+        StateStore.read(s2, s"$dir/cents").get("centroids"))
       // Parquet round-trips IEEE doubles verbatim
       assert(stored.length == prevCents.length)
       assert(stored.zip(prevCents).forall { case (a, b) =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.incr.IndexStore
+import graft.incr.StateStore
 import graft.text.{Dedup, MinHash, SimHash, Similarity}
 
 /** Round-9 items: cross-session Parquet persistence for the signed
@@ -28,7 +28,7 @@ class Round9Spec extends SparkSpecBase {
       val toks = Dedup.tokens(spark, sfDir).localCheckpoint()
       val bandedOld = MinHash.banded(MinHash.signatures(
         toks.filter(col("doc_id") % 10 =!= 0))).localCheckpoint()
-      IndexStore.write(bandedOld, s"$dir/bands")
+      StateStore.commit(s"$dir/bands", Seq("bands" -> bandedOld))
       val bandedIns = MinHash.banded(MinHash.signatures(
         toks.filter(col("doc_id") % 10 === 0))).localCheckpoint()
       val deleted = graft.engine.Tables.documents(spark, sfDir)
@@ -38,7 +38,7 @@ class Round9Spec extends SparkSpecBase {
       // SESSION B: fresh session state; the stored relation read back
       // from Parquet is the delta's base — no in-memory lineage
       val s2 = spark.newSession()
-      val stored = IndexStore.read(s2, s"$dir/bands")
+      val stored = StateStore.read(s2, s"$dir/bands").get("bands")
       assert(bandSet(stored) == bandSet(bandedOld),
         "integer band rows must round-trip Parquet verbatim")
       val toksB = Dedup.tokens(s2, sfDir)
@@ -67,7 +67,7 @@ class Round9Spec extends SparkSpecBase {
       val toks = Dedup.subsetTokens(spark, sfDir).localCheckpoint()
       val bandedOld = SimHash.banded(SimHash.signatures(
         toks.filter(col("doc_id") % 50 =!= 0))).localCheckpoint()
-      IndexStore.write(bandedOld, s"$dir/bands")
+      StateStore.commit(s"$dir/bands", Seq("bands" -> bandedOld))
       val bandedIns = SimHash.banded(SimHash.signatures(
         toks.filter(col("doc_id") % 50 === 0))).localCheckpoint()
       val deleted = toks.filter(col("doc_id") % 50 === 5)
@@ -75,7 +75,7 @@ class Round9Spec extends SparkSpecBase {
       val viaMemory = sigBandSet(
         SimHash.indexApplyDelta(bandedOld, bandedIns, deleted))
       val s2 = spark.newSession()
-      val stored = IndexStore.read(s2, s"$dir/bands")
+      val stored = StateStore.read(s2, s"$dir/bands").get("bands")
       assert(sigBandSet(stored) == sigBandSet(bandedOld),
         "the (doc_id, sig, band, bh) relation must round-trip verbatim")
       val toksB = Dedup.subsetTokens(s2, sfDir)
@@ -104,14 +104,14 @@ class Round9Spec extends SparkSpecBase {
         .select(col("vec_id"), col("embedding")).localCheckpoint()
       val base = emb.filter(col("vec_id") % 10 =!= 0)
       val (indexedOld, cents) = Similarity.ivfIndex(spark, base)
-      IndexStore.writeIvf(indexedOld.localCheckpoint(), cents, s"$dir/ivf")
+      Similarity.ivfWriteIndex(indexedOld.localCheckpoint(), cents, s"$dir/ivf")
       val ins = emb.filter(col("vec_id") % 10 === 0)
       val del = emb.filter(col("vec_id") % 10 === 1).select("vec_id")
       val maintainedA = Similarity
         .ivfApplyDelta(spark, indexedOld, cents, ins, del).localCheckpoint()
       // SESSION B: index + centroid model read back from the store
       val s2 = spark.newSession()
-      val (stored, storedCents) = IndexStore.readIvf(s2, s"$dir/ivf")
+      val (stored, storedCents) = Similarity.ivfReadIndex(s2, s"$dir/ivf")
       assert(storedCents.flatten[Double].zip(cents.flatten[Double]).forall {
         case (x, y) => java.lang.Double.doubleToLongBits(x) ==
           java.lang.Double.doubleToLongBits(y) },
@@ -371,11 +371,11 @@ class Round9Spec extends SparkSpecBase {
     // verbatim like the other three stored relations
     val dir = java.nio.file.Files.createTempDirectory("graft_pair_store")
     try {
-      IndexStore.write(keyed, s"$dir/pairs")
+      StateStore.commit(s"$dir/pairs", Seq("pairs" -> keyed))
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getInt(0), r.getAs[Number](1).longValue,
           r.getLong(2), r.getLong(3))).toSet
-      assert(rows(IndexStore.read(spark.newSession(), s"$dir/pairs")) ==
+      assert(rows(StateStore.read(spark.newSession(), s"$dir/pairs").get("pairs")) ==
         rows(keyed.select("band", "bh", "doc_a", "doc_b")),
         "the per-bucket pair store must round-trip Parquet verbatim")
     } finally deleteRecursively(dir)

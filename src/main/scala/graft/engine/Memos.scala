@@ -24,14 +24,18 @@ import scala.collection.concurrent.TrieMap
   *    peek and overwrite, for an owner that can tell a stale value.
   *  - [[scratchDir]] — the appId-isolated directory a stored layout
   *    is written to.
-  *  - [[storedBroadcast]] / [[keepBroadcast]] — built broadcast
-  *    relations, one per (session, application, canonical build plan),
-  *    held with the sorted (path, length, mtime) of the files the build
-  *    read. A lookup whose files differ is a miss, and the rebuilt
-  *    relation replaces the entry. They count against the same byte
-  *    budget as the frames; an evicted or cleared one is only dropped,
-  *    never destroyed (a running query may still read it, and
-  *    `ContextCleaner` reclaims it once nothing does).
+  *  - [[storedExchange]] / [[keepExchange]] — the one exchange store:
+  *    built broadcast relations and the map outputs of shuffles, one
+  *    entry per (session, application, canonical exchange plan), held
+  *    with the sorted (path, length, mtime) of the files the exchange's
+  *    subtree read. A lookup whose files differ is a miss, and the
+  *    rebuilt exchange replaces the entry. Their bytes (a relation's
+  *    estimated size, the sum of a shuffle's per-partition output
+  *    bytes) count in [[storedBytes]], against the same byte budget
+  *    and LRU as the frames. An evicted, replaced or cleared entry is
+  *    only dropped: a running query may still read it, and Spark's
+  *    `ContextCleaner` destroys the relation, or unregisters the
+  *    shuffle and deletes its files, once no plan holds it.
   *
   * The `tables/<name>` value tags are the session's table catalog
   * (`Tables.tbl`): one fingerprinted schema per fixture table path,
@@ -64,7 +68,7 @@ object Memos {
       @volatile var lastHit: Long)
 
   private val frames = TrieMap.empty[Key, Slot]
-  private val broadcasts = TrieMap.empty[BroadcastKey, BroadcastEntry]
+  private val exchanges = TrieMap.empty[ExchangeKey, ExchangeEntry]
   private val values = TrieMap.empty[Key, Any]
   private val tick = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -97,63 +101,69 @@ object Memos {
 
   /** Bytes currently pinned in the block manager (memory + disk),
     * across ALL cached/checkpointed RDDs — memo entries and any
-    * in-flight query scratch — plus the stored broadcast relations.
-    * The budget compares against this total: what matters at runtime
-    * is the real storage pressure, not the memos' own share of it. */
+    * in-flight query scratch — plus the stored exchanges (broadcast
+    * relations and shuffle map outputs). The budget compares against
+    * this total: what matters at runtime is the real storage pressure,
+    * not the memos' own share of it. */
   def storedBytes(s: SparkSession): Long =
     s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum +
-      broadcasts.values.map(_.bytes).sum
+      exchanges.values.map(_.bytes.getOrElse(0L)).sum
 
   /** Cumulative budget evictions (observability + spec hook). */
   val evictions = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Cumulative stored broadcasts served ([[storedBroadcast]] hits) and
-    * built ([[keepBroadcast]] calls). */
-  val broadcastHits = new java.util.concurrent.atomic.AtomicLong(0)
-  val broadcastMisses = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Cumulative stored exchanges served ([[storedExchange]] hits) and
+    * kept ([[keepExchange]] calls), broadcasts and shuffles together. */
+  val exchangeHits = new java.util.concurrent.atomic.AtomicLong(0)
+  val exchangeMisses = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Identity of one stored broadcast. The application id keeps a
-    * relation of a stopped SparkContext from being served to a session
-    * built after it; `plan` is the canonicalized broadcast exchange. */
-  private final case class BroadcastKey(s: SparkSession, app: String,
+  /** Identity of one stored exchange. The application id keeps an
+    * exchange of a stopped SparkContext from being served to a session
+    * built after it; `plan` is the canonicalized exchange. */
+  private final case class ExchangeKey(s: SparkSession, app: String,
       plan: AnyRef)
 
-  /** A built broadcast relation: the files it was built from, its
-    * size, and when it was last served (the LRU clock [[frame]] uses). */
-  final class BroadcastEntry private[Memos] (
-      private[Memos] val key: BroadcastKey,
+  /** A stored exchange: `value` is what its exchange kept (a built
+    * broadcast relation, or a shuffle's dependency and metrics), built
+    * from `files`, last served at `lastHit` (the LRU clock [[frame]]
+    * uses). `size` gives its bytes once it is built — a shuffle is kept
+    * when its map stage is planned, and that stage may still run, or
+    * may have failed — and None before. */
+  final class ExchangeEntry private[Memos] (
+      private[Memos] val key: ExchangeKey,
       val files: Seq[(String, Long, Long)],
-      val value: org.apache.spark.broadcast.Broadcast[Any],
-      val bytes: Long, val rows: Long,
-      @volatile private[Memos] var lastHit: Long)
+      val value: AnyRef, size: () => Option[Long],
+      @volatile private[Memos] var lastHit: Long) {
+    def bytes: Option[Long] = size()
+  }
 
-  /** The relation stored for broadcast `plan` of session `s`, if one was
+  /** The built exchange stored for `plan` of session `s`, if it was
     * built from exactly `files`. A hit counts as served. */
-  def storedBroadcast(s: SparkSession, plan: AnyRef,
-      files: Seq[(String, Long, Long)]): Option[BroadcastEntry] = {
-    val hit = broadcasts.get(broadcastKey(s, plan)).filter(_.files == files)
-    hit.foreach { b =>
-      b.lastHit = tick.incrementAndGet(); broadcastHits.incrementAndGet()
+  def storedExchange(s: SparkSession, plan: AnyRef,
+      files: Seq[(String, Long, Long)]): Option[ExchangeEntry] = {
+    val hit = exchanges.get(exchangeKey(s, plan))
+      .filter(e => e.files == files && e.bytes.isDefined)
+    hit.foreach { e =>
+      e.lastHit = tick.incrementAndGet(); exchangeHits.incrementAndGet()
     }
     hit
   }
 
-  /** Store a relation built for broadcast `plan` from `files`, replacing
-    * any earlier entry of that plan, then enforce the budget. */
-  def keepBroadcast(s: SparkSession, plan: AnyRef,
-      files: Seq[(String, Long, Long)],
-      value: org.apache.spark.broadcast.Broadcast[Any],
-      bytes: Long, rows: Long): Unit = synchronized {
-    val key = broadcastKey(s, plan)
-    val b = new BroadcastEntry(key, files, value, bytes, rows,
-      tick.incrementAndGet())
-    broadcastMisses.incrementAndGet()
-    broadcasts.update(key, b)
-    enforceBudget(s, b)
+  /** Store `value`, kept by exchange `plan` over `files` with the bytes
+    * `size` gives once built, replacing any earlier entry of that plan,
+    * then enforce the budget. */
+  def keepExchange(s: SparkSession, plan: AnyRef,
+      files: Seq[(String, Long, Long)], value: AnyRef,
+      size: () => Option[Long]): Unit = {
+    val key = exchangeKey(s, plan)
+    val e = new ExchangeEntry(key, files, value, size, tick.incrementAndGet())
+    exchangeMisses.incrementAndGet()
+    exchanges.update(key, e)
+    enforceBudget(s, e, releaseFrames = false)
   }
 
-  private def broadcastKey(s: SparkSession, plan: AnyRef) =
-    BroadcastKey(s, s.sparkContext.applicationId, plan)
+  private def exchangeKey(s: SparkSession, plan: AnyRef) =
+    ExchangeKey(s, s.sparkContext.applicationId, plan)
 
   /** The memoized frame under (s, d, tag), built on a miss. Admission
     * is atomic: `putIfAbsent` decides the winner of two concurrent
@@ -180,7 +190,7 @@ object Memos {
               winner.lastHit = tick.incrementAndGet()
               winner.df
             case None =>
-              enforceBudget(df.sparkSession, df)
+              enforceBudget(df.sparkSession, df, releaseFrames = true)
               df
           }
         }
@@ -223,12 +233,12 @@ object Memos {
   private[graft] def frameCount(s: SparkSession, d: String): Int =
     frames.keys.count(k => (k.s eq s) && k.dir == d)
 
-  /** Stored broadcasts of session `s`. */
-  private[graft] def broadcastsOf(s: SparkSession): Seq[BroadcastEntry] =
-    broadcasts.values.filter(_.key.s eq s).toSeq
+  /** Stored exchanges of session `s`. */
+  private[graft] def exchangesOf(s: SparkSession): Seq[ExchangeEntry] =
+    exchanges.values.filter(_.key.s eq s).toSeq
 
   /** Evict every memo: frames are released, values and stored
-    * broadcasts dropped. Safe to call between fixtures or before a
+    * exchanges dropped. Safe to call between fixtures or before a
     * cold-cache measurement; the next query rebuilds what it needs. The map is emptied BEFORE the
     * releases, so [[release]]'s shared-RDD exclusion set no longer
     * counts the dropped slots as live and every shared RDD is freed. */
@@ -240,7 +250,7 @@ object Memos {
     }
     dropped.foreach(sl => release(sl.df))
     values.clear()
-    broadcasts.clear()
+    exchanges.clear()
   }
 
   /** Fully release a memoized frame: the CacheManager entry and any
@@ -269,11 +279,18 @@ object Memos {
     }
   }
 
-  /** Evict least-recently-hit entries — frames and stored broadcasts —
+  /** Evict least-recently-hit entries — frames and stored exchanges —
     * until [[storedBytes]] fits the budget. The just-admitted entry is
     * exempt; if everything evictable is gone and the total still
     * exceeds the budget, the residue is in-flight query scratch —
     * released by its own query's end-of-call discipline.
+    *
+    * An exchange is admitted inside a running query (its map stage is
+    * being planned, or its relation was just built), where releasing a
+    * frame could wait on a cache that very query is building: that
+    * admission (`releaseFrames` false) only drops exchanges, without
+    * the Memos lock, and frames over the budget are released at the
+    * next frame admission, which holds the lock (see [[frame]]).
     *
     * Known slack (accepted): a persisted (non-checkpointed) entry's
     * blocks only materialize at its first action, so `storedBytes`
@@ -281,15 +298,16 @@ object Memos {
     * admission late — the session may transiently exceed it by the
     * largest entry's size, which the half-heap default leaves room
     * for by construction. */
-  private def enforceBudget(s: SparkSession,
-                            justAdmitted: AnyRef): Unit = synchronized {
+  private def enforceBudget(s: SparkSession, justAdmitted: AnyRef,
+                            releaseFrames: Boolean): Unit = {
     val budget = budgetBytes(s)
     if (budget <= 0 || storedBytes(s) <= budget) return
     val victims: Seq[(Long, () => Unit)] =
-      frames.values.toSeq.filter(_.df ne justAdmitted).map(v =>
-        v.lastHit -> (() => { frames.remove(v.key, v); release(v.df) })) ++
-      broadcasts.values.toSeq.filter(_ ne justAdmitted).map(v =>
-        v.lastHit -> (() => { broadcasts.remove(v.key, v); () }))
+      (if (!releaseFrames) Nil
+       else frames.values.toSeq.filter(_.df ne justAdmitted).map(v =>
+         v.lastHit -> (() => { frames.remove(v.key, v); release(v.df) }))) ++
+      exchanges.values.toSeq.filter(_ ne justAdmitted).map(v =>
+        v.lastHit -> (() => { exchanges.remove(v.key, v); () }))
     // working-set guard: the newest-hit entries are never victims
     val it = victims.sortBy(_._1).dropRight(minResident(s)).iterator
     while (storedBytes(s) > budget && it.hasNext) {

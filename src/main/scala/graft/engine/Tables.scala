@@ -1,5 +1,8 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
@@ -111,6 +114,42 @@ object Tables {
         .sorted)
       case _ => None
     }
+
+  /** The parquet directory `root` read with the data schema Spark wrote
+    * into its footer ([[writtenSchema]]), so the read starts no
+    * schema-inference job; partition columns are still inferred from
+    * the directory names, as an inferring read does. Without the footer
+    * key (or a data file) the read infers. */
+  def readWritten(s: SparkSession, fs: FileSystem, root: Path): DataFrame =
+    writtenSchema(fs, root).fold(s.read.parquet(root.toString))(
+      s.read.schema(_).parquet(root.toString))
+
+  /** The schema Spark wrote into the footer of one data file under
+    * `root` (key `org.apache.spark.sql.parquet.row.metadata`; partition
+    * columns are not in it), found by a Hadoop listing and read on the
+    * driver — no Spark job. None when `root` or a data file is missing
+    * or the file carries no such key (not written by Spark). Data files are
+    * what Spark's own listing reads: no path component below `root`
+    * starts with `_` or `.`. */
+  private[graft] def writtenSchema(fs: FileSystem, root: Path)
+      : Option[StructType] = {
+    if (!fs.exists(root)) return None // the inferring read reports it
+    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    def isData(p: Path): Boolean = p.toUri.getPath.stripPrefix(prefix)
+      .split('/').forall(c => !c.startsWith("_") && !c.startsWith("."))
+    val files = fs.listFiles(root, true)
+    var found: Option[Path] = None
+    while (found.isEmpty && files.hasNext) {
+      val p = files.next().getPath
+      if (isData(p)) found = Some(p)
+    }
+    found.flatMap { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
 
   /** events.parquet physical schema with ts as a raw integer epoch —
     * the fallback read used only when Spark's schema inference rejects

@@ -1,11 +1,8 @@
 package graft.incr
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 
@@ -126,7 +123,7 @@ object MergeInto {
     *     partition-directory prune, untouched partitions are never
     *     READ (PartitionPruneSpec-style `PartitionFilters`, no data
     *     scan). The read starts no schema-inference job: the data
-    *     schema comes from one data file's footer ([[writtenSchema]])
+    *     schema comes from one data file's footer (`Tables.readWritten`)
     *     and the partition column is inferred from the directory
     *     names, as an inferring read does;
     *  3. [[mergeInto]] on just that slice (localCheckpointed before
@@ -196,8 +193,7 @@ object MergeInto {
     if (touched.isEmpty) return touched
     val root = new Path(basePath)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val base = writtenSchema(fs, root)
-      .fold(s.read.parquet(basePath))(s.read.schema(_).parquet(basePath))
+    val base = readWritten(s, fs, root)
     val slice = base.filter(col(partCol).isin(touched: _*))
     val merged = mergeInto(slice, delta, keys, whenMatchedUpdate,
         whenMatchedDelete, insertWhenNotMatched,
@@ -218,33 +214,6 @@ object MergeInto {
     }
     merged.unpersist(blocking = false)
     touched
-  }
-
-  /** The schema Spark wrote into the footer of one data file under
-    * `root` (key `org.apache.spark.sql.parquet.row.metadata`; partition
-    * columns are not in it), found by a Hadoop listing and read on the
-    * driver — no Spark job. None when `root` or a data file is missing
-    * or the file carries no such key (not written by Spark). Data files are
-    * what Spark's own listing reads: no path component below `root`
-    * starts with `_` or `.`. */
-  private[graft] def writtenSchema(fs: FileSystem, root: Path)
-      : Option[StructType] = {
-    if (!fs.exists(root)) return None // the inferring read reports it
-    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
-    def isData(p: Path): Boolean = p.toUri.getPath.stripPrefix(prefix)
-      .split('/').forall(c => !c.startsWith("_") && !c.startsWith("."))
-    val files = fs.listFiles(root, true)
-    var found: Option[Path] = None
-    while (found.isEmpty && files.hasNext) {
-      val p = files.next().getPath
-      if (isData(p)) found = Some(p)
-    }
-    found.flatMap { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, fs.getConf))
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      finally reader.close()
-    }.map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
   val queries: Seq[Query] = Seq(

@@ -2,6 +2,7 @@ package graft.incr
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Tables
 
 /** The versioned store of preserved state — the MRBG-Store analogue
   * [P §5]: state that outlives the process and, after each delta, is
@@ -64,13 +65,14 @@ object StateStore {
   }
 
   /** The committed version's parts by name, each a parquet scan (so
-    * column and partition pruning apply); None before the first
-    * commit. */
+    * column and partition pruning apply) with the schema its footer
+    * holds, so reading starts no job (`Tables.readWritten`); None
+    * before the first commit. */
   def read(s: SparkSession, root: String): Option[Map[String, DataFrame]] = {
     val (fs, base) = resolve(s, root)
     version(fs, base).map { v =>
       fs.listStatus(new Path(base, s"snap-$v")).filter(_.isDirectory)
-        .map(st => st.getPath.getName -> s.read.parquet(st.getPath.toString))
+        .map(st => st.getPath.getName -> Tables.readWritten(s, fs, st.getPath))
         .toMap
     }
   }

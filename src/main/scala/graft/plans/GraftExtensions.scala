@@ -41,10 +41,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * without [[GraftExtensions]]:
   *   - [[TopKPerGroupStrategy]] plans `TopKPerGroupPlan` to its
   *     map-side-pruning physical operator (tier (c));
-  *   - [[BroadcastReuseStrategy]] keeps built broadcast relations
-  *     across queries. */
+  *   - [[ExchangeReuseStrategy]] keeps built exchanges across queries:
+  *     broadcast relations, and the map outputs of the shuffles below
+  *     aggregates and global sorts, over files that have not changed. */
 object GraftStrategies {
-  val all: Seq[SparkStrategy] = Seq(TopKPerGroupStrategy, BroadcastReuseStrategy)
+  val all: Seq[SparkStrategy] = Seq(TopKPerGroupStrategy, ExchangeReuseStrategy)
 
   /** Add each strategy to `s`'s `experimental.extraStrategies` unless
     * the session's planner already has it. Cheap and idempotent: the

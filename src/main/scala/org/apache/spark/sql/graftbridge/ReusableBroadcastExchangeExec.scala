@@ -20,7 +20,7 @@ import org.apache.spark.sql.execution.joins.{HashJoin,
 import graft.engine.Memos
 
 /** The build side of a broadcast hash join whose built relation is kept
-  * across queries ([[graft.plans.BroadcastReuseStrategy]] plans it; the
+  * across queries ([[graft.plans.ExchangeReuseStrategy]] plans it; the
   * build side reads only `files` and local rows through deterministic
   * operators).
   *
@@ -56,17 +56,18 @@ case class ReusableBroadcastExchangeExec(buildKeys: Seq[Expression],
   override def stringArgs: Iterator[Any] = Iterator(mode)
 
   /** Where the relation comes from, decided once per exchange: the
-    * stored entry on a hit, else the exchange that builds it. */
+    * stored relation on a hit, else the exchange that builds it. */
   @transient private lazy val source
-      : Either[Memos.BroadcastEntry, BroadcastExchangeExec] =
-    Memos.storedBroadcast(session, canonicalized, files)
+      : Either[StoredBroadcast, BroadcastExchangeExec] =
+    Memos.storedExchange(session, canonicalized, files)
+      .map(_.value.asInstanceOf[StoredBroadcast])
       .toLeft(session.withActive(BroadcastExchangeExec(mode, child)))
 
   private def keep(b: Broadcast[Any], build: BroadcastExchangeExec)
       : Broadcast[Any] = {
-    val stats = build.runtimeStatistics
-    Memos.keepBroadcast(session, canonicalized, files, b,
-      stats.sizeInBytes.toLong, stats.rowCount.fold(0L)(_.toLong))
+    val kept = StoredBroadcast(b, build.runtimeStatistics)
+    Memos.keepExchange(session, canonicalized, files, kept,
+      () => Some(kept.stats.sizeInBytes.toLong))
     b
   }
 
@@ -85,8 +86,8 @@ case class ReusableBroadcastExchangeExec(buildKeys: Seq[Expression],
   // starts the build (a miss) and registers its store before anything waits
   override protected def doPrepare(): Unit = { relationFuture; completionFuture }
 
-  override def runtimeStatistics: Statistics = source.fold(
-    e => Statistics(e.bytes, Some(e.rows)), _.runtimeStatistics)
+  override def runtimeStatistics: Statistics =
+    source.fold(_.stats, _.runtimeStatistics)
 
   override protected[sql] def doExecuteBroadcast[T](): Broadcast[T] =
     source.fold(_.value, _.executeBroadcast[Any]()).asInstanceOf[Broadcast[T]]
@@ -99,3 +100,7 @@ case class ReusableBroadcastExchangeExec(buildKeys: Seq[Expression],
       : ReusableBroadcastExchangeExec = copy(child = c)
 }
 
+
+/** A built broadcast relation as [[Memos]] keeps it, with the runtime
+  * statistics of the exchange that built it. */
+case class StoredBroadcast(value: Broadcast[Any], stats: Statistics)

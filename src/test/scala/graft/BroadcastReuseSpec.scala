@@ -1,50 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col, concat, lit, rand}
-import graft.engine.{Memos, Tables}
+import graft.engine.{Memos, Sessions, Tables}
 
 /** Built broadcast relations are reused across calls
-  * (`BroadcastReuseStrategy`): keyed on the canonical build plan and the
-  * fingerprint of the files it read, dropped by `Memos.clearAll`, never
-  * shared between sessions, never kept for a build side that is not
-  * files through deterministic operators, and safe to evict while the
-  * query that stored them still runs. */
-class BroadcastReuseSpec extends SparkSpecBase {
-
-  private def run(name: String, s: SparkSession = spark, d: String = sfDir)
-      : Seq[Row] = SparkEntry.queries(name)(s, d).collect().toSeq
-
-  /** Hits and misses `body` added. */
-  private def lookups(body: => Any): (Long, Long) = {
-    val (h, m) = (Memos.broadcastHits.get(), Memos.broadcastMisses.get())
-    body
-    (Memos.broadcastHits.get() - h, Memos.broadcastMisses.get() - m)
-  }
-
-  /** Cleared memos with every fixture table resolved again, so a call
-    * starts only its own jobs and its broadcasts are misses. */
-  private def coldBroadcasts(d: String = sfDir): Unit = {
-    Memos.clearAll()
-    Tables.allNames.foreach(t => Tables.tbl(spark, d, t))
-  }
-
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  * (`ExchangeReuseStrategy`'s broadcast case): keyed on the canonical
+  * build plan and the fingerprint of the files it read, dropped by
+  * `Memos.clearAll`, never shared between sessions, never kept for a
+  * build side that is not files through deterministic operators, and
+  * safe to evict while the query that stored them still runs. */
+class BroadcastReuseSpec extends ExchangeReuseFixtures {
 
   test("(a) a second TPC-H call serves its broadcasts and starts fewer jobs") {
     // measured at sf0.001, local[4]: the second call starts no
     // broadcast job (q3 builds 2 relations, q5 builds 5)
     for ((q, first, second) <- Seq(("q_tpch_q3", 4, 2), ("q_tpch_q5", 7, 2))) {
-      coldBroadcasts()
+      coldExchanges()
       val (rows1, jobs1) = jobsOf(run(q))
       val (rows2, jobs2) = jobsOf(run(q))
       assert(rows2 == rows1, q)
@@ -59,7 +32,7 @@ class BroadcastReuseSpec extends SparkSpecBase {
       for (t <- Tables.allNames) copyTree(Path.of(sfDir, s"$t.parquet"),
         dir.resolve(s"$t.parquet"))
       val d = dir.toString
-      coldBroadcasts(d)
+      coldExchanges(d)
       val before = run("q_tpch_q5", d = d)
       assert(run("q_tpch_q5", d = d) == before)
       val renamed = Tables.nation(spark, d)
@@ -97,26 +70,26 @@ class BroadcastReuseSpec extends SparkSpecBase {
       assert(df.collect().toSeq == expected)
       assert(df.collect().toSeq == expected)
     }
-    assert(Memos.broadcastsOf(spark).isEmpty)
+    assert(broadcastsOf(spark).isEmpty)
   }
 
   test("(d) clearAll drops every entry; sessions never share entries") {
-    coldBroadcasts()
+    coldExchanges()
     run("q_tpch_q3")
-    assert(Memos.broadcastsOf(spark).nonEmpty)
+    assert(broadcastsOf(spark).nonEmpty)
     val other = spark.newSession()
     val expected = run("q_tpch_q3")
     val (hits, misses) = lookups(assert(run("q_tpch_q3", other) == expected))
     assert(hits == 0 && misses > 0, s"another session hit $hits time(s)")
-    assert(Memos.broadcastsOf(other).nonEmpty)
+    assert(broadcastsOf(other).nonEmpty)
     Memos.clearAll()
-    assert(Memos.broadcastsOf(spark).isEmpty && Memos.broadcastsOf(other).isEmpty)
+    assert(broadcastsOf(spark).isEmpty && broadcastsOf(other).isEmpty)
   }
 
   test("(e) with AQE off results are equal and hits still happen") {
     val expected = Seq("q_tpch_q3", "q_tpch_q5").map(q => run(q))
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      coldBroadcasts()
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      coldExchanges()
       assert(Seq("q_tpch_q3", "q_tpch_q5").map(q => run(q)) == expected)
       val (hits, misses) = lookups(
         assert(Seq("q_tpch_q3", "q_tpch_q5").map(q => run(q)) == expected))
@@ -128,25 +101,17 @@ class BroadcastReuseSpec extends SparkSpecBase {
   test("(f) an entry evicted while its query runs: the query completes, " +
       "the next call rebuilds it") {
     val expected = run("q_tpch_q5")
-    withConf(Memos.BudgetConf -> "1", Memos.MinResidentConf -> "0") {
-      coldBroadcasts()
+    Sessions.withConf(spark, Memos.BudgetConf -> "1",
+        Memos.MinResidentConf -> "0") {
+      coldExchanges()
       val before = Memos.evictions.get()
       assert(run("q_tpch_q5") == expected)
       assert(Memos.evictions.get() - before >= 4,
         "each stored relation must evict the one stored before it")
-      assert(Memos.broadcastsOf(spark).size == 1)
+      assert(broadcastsOf(spark).size == 1)
       val (_, misses) = lookups(assert(run("q_tpch_q5") == expected))
       assert(misses >= 4, s"only $misses rebuild(s) after the evictions")
     }
     Memos.clearAll()
-  }
-
-  private def copyTree(from: Path, to: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(from).iterator().asScala.foreach { p =>
-      val target = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(target)
-      else Files.copy(p, target)
-    }
   }
 }

@@ -13,37 +13,37 @@ class IncrLedgerSpec extends SparkSpecBase {
 
   private val ledger: Seq[(String, Int)] = Seq(
     // signed rule
-    "q_incr_delta_merge" -> 4,
-    "q_incr_restart" -> 9,
-    "q_incr_wordcount" -> 5,
-    "q_incr_profile" -> 13,
-    "q_incr_median" -> 10,
-    "q_incr_quality" -> 14,
-    "q_incr_diversity" -> 7,
-    "q_incr_tfidf_delete" -> 12,
+    "q_incr_delta_merge" -> 1,
+    "q_incr_restart" -> 6,
+    "q_incr_wordcount" -> 4,
+    "q_incr_profile" -> 5,
+    "q_incr_median" -> 7,
+    "q_incr_quality" -> 5,
+    "q_incr_diversity" -> 4,
+    "q_incr_tfidf_delete" -> 8,
     "q_incr_view_update" -> 8,
     "q_incr_join_view_delete" -> 7,
-    "q_incr_linreg" -> 5,
-    "q_incr_chisq" -> 7,
-    "q_incr_apriori" -> 9,
+    "q_incr_linreg" -> 3,
+    "q_incr_chisq" -> 5,
+    "q_incr_apriori" -> 8,
     "q_incr_apriori_delete" -> 11,
     "q_incr_mrbg" -> 3,
     // touched-group rule
-    "q_incr_sessionize" -> 6,
-    "q_incr_sessionize_delete" -> 6,
-    "q_incr_scd2_delete" -> 6,
-    "q_incr_ewma" -> 6,
-    "q_incr_softdedup" -> 6,
-    "q_incr_bitmap_distinct" -> 6,
-    "q_incr_dau_wau" -> 11,
-    "q_incr_chunks" -> 8,
-    "q_incr_streaks" -> 7,
-    "q_incr_resample" -> 8,
-    "q_incr_pattern" -> 6,
-    "q_incr_anomaly_sigma" -> 8,
-    "q_incr_rfm" -> 7,
-    "q_incr_attribution" -> 7,
-    "q_incr_lifecycle" -> 8)
+    "q_incr_sessionize" -> 5,
+    "q_incr_sessionize_delete" -> 5,
+    "q_incr_scd2_delete" -> 5,
+    "q_incr_ewma" -> 5,
+    "q_incr_softdedup" -> 5,
+    "q_incr_bitmap_distinct" -> 5,
+    "q_incr_dau_wau" -> 10,
+    "q_incr_chunks" -> 7,
+    "q_incr_streaks" -> 6,
+    "q_incr_resample" -> 7,
+    "q_incr_pattern" -> 5,
+    "q_incr_anomaly_sigma" -> 7,
+    "q_incr_rfm" -> 6,
+    "q_incr_attribution" -> 6,
+    "q_incr_lifecycle" -> 7)
 
   test("warm job ledger of the incremental rows") {
     Memos.clearAll()

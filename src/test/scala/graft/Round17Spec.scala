@@ -264,11 +264,11 @@ class Round17Spec extends SparkSpecBase {
 
   test("mergeIntoPartitioned's base schema: the footer's data schema plus " +
       "the inferred partition column equal an inferring read, with no job") {
-    import graft.incr.MergeInto
+    import graft.engine.Tables
     withPriorityStore { (basePath, _, _) =>
       val root = new org.apache.hadoop.fs.Path(basePath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (written, jobs) = jobsOf(MergeInto.writtenSchema(fs, root))
+      val (written, jobs) = jobsOf(Tables.writtenSchema(fs, root))
       assert(jobs == 0)
       assert(written.map(_.fieldNames.toSeq) ==
         Some(Seq("o_orderkey", "o_totalprice")))
@@ -276,7 +276,7 @@ class Round17Spec extends SparkSpecBase {
         spark.read.parquet(basePath).schema)
       // no data file: the caller falls back to the inferring read
       fs.mkdirs(new org.apache.hadoop.fs.Path(root, "_empty"))
-      assert(MergeInto.writtenSchema(fs,
+      assert(Tables.writtenSchema(fs,
         new org.apache.hadoop.fs.Path(root, "_empty")).isEmpty)
     }
   }

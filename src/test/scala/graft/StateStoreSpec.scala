@@ -91,4 +91,26 @@ class StateStoreSpec extends SparkSpecBase {
       assert(rows(StateStore.read(spark, s"file://$root").get("t")) == Seq((1L, 2L)))
     }
   }
+
+  test("reading a two-part store, one part partitioned, starts no job " +
+      "and equals the inferring read") {
+    withRoot { root =>
+      StateStore.commit(root, Seq(
+          "flat" -> Seq((1L, 10L), (2L, 20L)).toDF("k", "v"),
+          "byCluster" -> Seq((1L, 10L, 0), (2L, 20L, 1), (3L, 30L, 1))
+            .toDF("k", "v", "cluster")),
+        partitionBy = Map("byCluster" -> Seq("cluster")))
+      val (parts, jobs) = jobsOf(StateStore.read(spark, root).get)
+      assert(jobs == 0, s"reading the store started $jobs job(s)")
+      assert(parts.keySet == Set("flat", "byCluster"))
+      val snap = new java.io.File(root).listFiles().map(_.getName)
+        .filter(_.startsWith("snap-")).head
+      for ((name, df) <- parts) {
+        val inferred = spark.read.parquet(s"$root/$snap/$name")
+        assert(df.schema == inferred.schema, name)
+        assert(df.collect().map(_.toString).sorted.toSeq ==
+          inferred.collect().map(_.toString).sorted.toSeq, name)
+      }
+    }
+  }
 }

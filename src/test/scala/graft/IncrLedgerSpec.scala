@@ -3,9 +3,11 @@ package graft
 import graft.engine.Memos
 
 /** Warm job ledger of the incremental rows: the Spark jobs each row's
-  * second call starts at sf0.001 on local[4], from cleared memos. Every
-  * row maintains its state through `graft.incr.Maintain`, the signed
-  * rule or the touched-group rule. Job counts are deterministic, so the
+  * second call starts at sf0.001 on local[4], from cleared memos. Most
+  * rows maintain their state through `graft.incr.Maintain`, the signed
+  * rule or the touched-group rule; the rest apply their delta with a
+  * row-specific rule (an associative merge, a MERGE, a stored index or
+  * model, a layout rewrite). Job counts are deterministic, so the
   * pins are exact: a row above its pin regained work (a memo that stopped
   * hitting, an extra exchange or action), a row below it should have its
   * pin lowered. */
@@ -43,7 +45,27 @@ class IncrLedgerSpec extends SparkSpecBase {
     "q_incr_anomaly_sigma" -> 7,
     "q_incr_rfm" -> 6,
     "q_incr_attribution" -> 6,
-    "q_incr_lifecycle" -> 7)
+    "q_incr_lifecycle" -> 7,
+    // row-specific rules
+    "q_dedup_simhash_incr" -> 16,
+    "q_incr_band" -> 15,
+    "q_incr_contamination" -> 5,
+    "q_incr_dedup_delete" -> 11,
+    "q_incr_dedup_exact" -> 3,
+    "q_incr_heavy_hitters" -> 5,
+    "q_incr_heavy_hitters_delete" -> 4,
+    "q_incr_join_view" -> 6,
+    "q_incr_merge_into" -> 5,
+    "q_incr_merge_partitioned" -> 1,
+    "q_incr_pathing" -> 7,
+    "q_incr_pipeline_clean_delete" -> 15,
+    "q_incr_scd2" -> 4,
+    "q_incr_snapshot_diff" -> 3,
+    "q_incr_tfidf" -> 5,
+    "q_incr_upsert_latest" -> 4,
+    "q_incr_zorder" -> 5,
+    "q_iter_kmeans_incr" -> 11,
+    "q_sim_ann_ivf_incr" -> 12)
 
   test("warm job ledger of the incremental rows") {
     Memos.clearAll()

@@ -102,13 +102,14 @@ object IncrMerge {
            SELECT event_type, value, '-' AS op FROM events
            WHERE ts < TIMESTAMP '$cutoff' AND event_id % 7 = 0
          ) t GROUP BY event_type ORDER BY event_type""")((s, d) => {
-      val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
-      val base = ev.filter(col("ts") < cut)
-      val ins = ev.filter(col("ts") >= cut).withColumn("op", lit("+"))
-      val del = ev.filter(col("ts") < cut && col("event_id") % 7 === 0)
-        .withColumn("op", lit("-"))
-      merge(base, ins.unionByName(del), Seq("event_type"), col("value"))
+      val delta = Delta(events(s, d), col("ts") < cut, col("ts") >= cut,
+          col("event_id") % 7 === 0)
+        .map(_.select(col("event_type"), lit(1L).as("n"),
+          dec2(col("value")).as("val_sum")))
+      Maintain.signedMerge(Seq("event_type"), Seq("n", "val_sum"),
+          Seq(delta.base, delta.inserts), Seq(delta.deletes))(lit(true))
+        .withColumn("val_sum", dbl(col("val_sum")))
         .orderBy("event_type")
     }),
 
@@ -128,15 +129,13 @@ object IncrMerge {
            CAST(count(*) AS BIGINT) AS n,
            CAST(sum(CAST(ROUND(value, 2) AS DECIMAL(18,2))) AS DOUBLE) AS val_sum
          FROM events GROUP BY event_type ORDER BY event_type""")((s, d) => {
-      val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
+      val delta = Delta(events(s, d), col("ts") < cut, col("ts") >= cut,
+        lit(false)).map(partials(_, Seq("event_type"), col("value")))
       val root = Memos.scratchDir(s, d, "incr_restart")
-      StateStore.commit(root, Seq("base" ->
-        partials(ev.filter(col("ts") < cut), Seq("event_type"), col("value"))))
+      StateStore.commit(root, Seq("base" -> delta.base))
       val stored = StateStore.read(s, root).get("base")
-      val delta =
-        partials(ev.filter(col("ts") >= cut), Seq("event_type"), col("value"))
-      mergePartials(Seq("event_type"), stored, delta)
+      mergePartials(Seq("event_type"), stored, delta.inserts)
         .select(col("event_type"), col("n"), dbl(col("psum")).as("val_sum"))
         .orderBy("event_type")
         .localCheckpoint() // materialize before a later commit GCs this version

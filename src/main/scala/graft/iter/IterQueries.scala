@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Delta
 import Loop.{INF, Rank, changedOf, checkpointEvery, conf}
 
 /** §2 group H — iterative processing (the reference's soul, paper
@@ -142,6 +143,15 @@ object IterQueries {
       pagerankOn(Graphs.nodesCached(s, d), Graphs.edgesDegCached(s, d), 5,
         allInDeg = true)
     })
+
+  /** The edge change sets of the incremental graph rows: the edges with
+    * (src + dst) % m == 0 are removed from the graph ([[edgesDeleted]])
+    * or are the ones added to it ([[edgesInserted]]). */
+  private def edgeClass(m: Int) = (col("src") + col("dst")) % m === 0
+  private[iter] def edgesDeleted(edges: DataFrame, m: Int): Delta =
+    Delta(edges, lit(true), lit(false), edgeClass(m))
+  private def edgesInserted(edges: DataFrame, m: Int): Delta =
+    Delta(edges, !edgeClass(m), edgeClass(m), lit(false))
 
   /** Structure-side loop invariant: edges with their source outdeg,
     * cached once for the whole loop. (No repartition: the loop joins
@@ -767,9 +777,7 @@ object IterQueries {
       // the other structure caches; see the Graphs note on build
       // parallelism for the measured local-size tradeoff).
       val edges2 = Memos.frame(s, d, "graphs/edges2deg")(conf(s) {
-        val e2 = withDeg(
-          Graphs.edgesCached(s, d)
-            .filter((col("src") + col("dst")) % 17 =!= 0))
+        val e2 = withDeg(edgesDeleted(Graphs.edgesCached(s, d), 17).post)
         e2.count()
         e2
       })
@@ -823,9 +831,9 @@ object IterQueries {
       // (~15 sequential micro-stages) every time.
       Memos.frame(s, d, "graphs/frontierResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
-        val baseE = Memos.frame(s, d, "graphs/edgesBase")(
-          full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
-        val deltaE = full.filter((col("src") + col("dst")) % 17 === 0)
+        val delta = edgesInserted(full, 17)
+        val baseE = Memos.frame(s, d, "graphs/edgesBase")(delta.base.persist())
+        val deltaE = delta.inserts
         val n = Graphs.nodesCached(s, d) // FULL node set; isolated-in-base stay INF
         val (state0, changed0) = Loop.fromSource(n, Loop.minNode(n))
         val baseRun = Memos.frame(s, d, "graphs/ssspBase5")(
@@ -882,9 +890,9 @@ object IterQueries {
     })((s, d) => {
       Memos.frame(s, d, "graphs/ssspDeleteResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
-        val deleted = full.filter((col("src") + col("dst")) % 17 === 0)
-        val newE = Memos.frame(s, d, "graphs/edgesBase")(
-          full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
+        val delta = edgesDeleted(full, 17)
+        val deleted = delta.deletes
+        val newE = Memos.frame(s, d, "graphs/edgesBase")(delta.post.persist())
         val n = Graphs.nodesCached(s, d)
         val srcNode = Loop.minNode(n)
         // deletion restart requires a fully CONVERGED base state (a
@@ -1065,10 +1073,11 @@ object IterQueries {
       // the splits are INPUT data (the signed delta and the surviving
       // edges), not the query's work — memoized beside chainEdges so
       // warm runs measure the delete restart, not input re-filtering
+      val delta = edgesDeleted(full, 13)
       val deleted = Memos.frame(s, d, "graphs/chainDeleted")(
-        full.filter((col("src") + col("dst")) % 13 === 0).localCheckpoint())
+        delta.deletes.localCheckpoint())
       val post = Memos.frame(s, d, "graphs/chainPost")(
-        full.filter((col("src") + col("dst")) % 13 =!= 0).localCheckpoint())
+        delta.post.localCheckpoint())
       // converged pre-deletion labels — the paper's STORED state
       // [P §3], so session-memoized like q115's ccBase5: the
       // incremental query's own work is the delete restart, not the
@@ -1096,9 +1105,9 @@ object IterQueries {
     })((s, d) => {
       Memos.frame(s, d, "graphs/ccFrontierResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
-        val baseE = Memos.frame(s, d, "graphs/edgesBase")(
-          full.filter((col("src") + col("dst")) % 17 =!= 0).persist())
-        val deltaE = full.filter((col("src") + col("dst")) % 17 === 0)
+        val delta = edgesInserted(full, 17)
+        val baseE = Memos.frame(s, d, "graphs/edgesBase")(delta.base.persist())
+        val deltaE = delta.inserts
         // FULL node set, like q101
         val (state0, changed0) = Loop.identity(Graphs.nodesCached(s, d))
         val baseRun = Memos.frame(s, d, "graphs/ccBase5")(

@@ -120,8 +120,8 @@ object MrbgPagerank {
         val edgesDegOld = Graphs.edgesDegCached(s, d)
         // converged base state — shared with q41/q48 (memoized)
         val base = IterQueries.converged5(s, d).select("node", "rs")
-        val removed = (col("src") + col("dst")) % 17 === 0
-        val edgesNew = Graphs.edgesCached(s, d).filter(!removed)
+        val delta = IterQueries.edgesDeleted(Graphs.edgesCached(s, d), 17)
+        val edgesNew = delta.post
         val degNew = edgesNew.groupBy("src").agg(count(lit(1)).as("outdeg"))
         val edgesDegNew = edgesNew.join(broadcast(degNew), "src")
           .select(col("src"), col("dst"), col("outdeg")).localCheckpoint()
@@ -133,8 +133,7 @@ object MrbgPagerank {
             nodes("node") === col("dst"), "left")
           .select(col("node"), coalesce(col("S"), lit(0L)).as("S"))
         // frontier: sources whose out-edge set / outdeg changed
-        val frontier0 = Graphs.edgesCached(s, d).filter(removed)
-          .select("src").distinct()
+        val frontier0 = delta.touchedKeys("src")
         // the memo serves this frame on every call: materialize the
         // lazy final iteration once, under the loop configuration
         Loop.Rank.withRank(incrRun(edgesDegNew, base, c0, s0s, frontier0, 0L, 2))

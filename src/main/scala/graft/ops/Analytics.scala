@@ -3,7 +3,7 @@ package graft.ops
 import graft.engine.Dec
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -793,16 +793,11 @@ object Analytics {
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val ev = events(s, d)
         .select(col("event_id"), col("event_type"), col("user_id"))
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val delta = ev.filter(col("event_id") % 10 === 0)
-        .unionByName(ev.filter(col("event_id") % 10 === 1))
-      val touched = delta
-        .select(col("event_type"), expr("(user_id - pmod(user_id, 32)) div 32").as("blk"))
-        .distinct()
-      bitmapCounts(Maintain.groupRecomputeMemo(s, d, "bitmap_partials", base,
-        post.withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")),
-        Seq("event_type", "blk"), touched)(bitmapBlocks))
+      val delta = Delta.tenWay(ev, "event_id").map(
+        _.withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")))
+      bitmapCounts(Maintain.groupRecomputeMemo(s, d, "bitmap_partials",
+        delta.base, delta.post, Seq("event_type", "blk"),
+        delta.touchedKeys("event_type", "blk"))(bitmapBlocks))
     }),
 
     /** q222: RFM SEGMENTATION [T analytics surface] — the classic
@@ -833,15 +828,12 @@ object Analytics {
       * maintenance ≡ recompute. */
     Query("q_incr_rfm", rfmSql(
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
-      val ev = events(s, d)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val affected = ev.filter(col("event_id") % 10 === 0 ||
-          col("event_id") % 10 === 1)
-        .select("user_id").distinct()
+      val delta = Delta.tenWay(events(s, d)
+        .select(col("event_id"), col("user_id"), col("ts"), col("value")),
+        "event_id")
       rfmSegments(Maintain.groupRecomputeMemo(s, d, "rfm_partials",
-        base, post, Seq("user_id"), affected)(rfmPerUser))
+        delta.base, delta.post, Seq("user_id"),
+        delta.touchedKeys("user_id"))(rfmPerUser))
     }),
 
     /** q223: DYNAMIC PARTITION PRUNING [N scale path] — the star-
@@ -974,14 +966,9 @@ object Analytics {
          FROM daily d JOIN stats st ON st.user_id = d.user_id
          GROUP BY d.user_id, st.n
          ORDER BY d.user_id""")((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val affected = ev.filter(col("event_id") % 10 === 0 ||
-          col("event_id") % 10 === 1)
-        .select("user_id").distinct()
-      Maintain.groupRecompute(base, post, Seq("user_id"),
-          affected)(anomalySigma)
+      val delta = Delta.tenWay(events(s, d), "event_id")
+      Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(anomalySigma)
         .orderBy("user_id")
     }),
 
@@ -1011,20 +998,12 @@ object Analytics {
                         BETWEEN d.day - 6 AND d.day) AS BIGINT)
                   AS wau
          FROM days d ORDER BY d.day""")((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val touched = ev.filter(col("event_id") % 10 === 0 ||
-          col("event_id") % 10 === 1)
-        .select(
-          datediff(to_date(col("ts")), lit("1970-01-01")).as("dnum"),
-          expr("(user_id - pmod(user_id, 32)) div 32").as("blk"))
-        .distinct()
-      dauWau(Maintain.groupRecomputeMemo(s, d, "dauwau_partials", base,
-        post.withColumn("dnum",
-            datediff(to_date(col("ts")), lit("1970-01-01")))
-          .withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")),
-        Seq("dnum", "blk"), touched)(dailyBitmaps))
+      val delta = Delta.tenWay(events(s, d), "event_id").map(
+        _.withColumn("dnum", datediff(to_date(col("ts")), lit("1970-01-01")))
+          .withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")))
+      dauWau(Maintain.groupRecomputeMemo(s, d, "dauwau_partials",
+        delta.base, delta.post, Seq("dnum", "blk"),
+        delta.touchedKeys("dnum", "blk"))(dailyBitmaps))
     }),
 
     // Round12e rows (see the section scaladoc above)
@@ -1052,17 +1031,15 @@ object Analytics {
       * recompute. */
     Query("q_incr_linreg", linregSql(
       "(SELECT * FROM lineitem WHERE l_orderkey % 10 <> 1)"))((s, d) => {
-      val li = lineitem(s, d)
-      val base = li.filter(col("l_orderkey") % 10 =!= 0)
-      val ins = li.filter(col("l_orderkey") % 10 === 0)
-      val del = li.filter(col("l_orderkey") % 10 === 1)
+      val delta = Delta.tenWay(lineitem(s, d), "l_orderkey")
       val baseP = Memos.frame(s, d, "analytics_ols/linreg_partials") {
-        val p = linregPartials(base).persist()
+        val p = linregPartials(delta.base).persist()
         p.count(); p
       }
       val merged = Maintain.signedMerge(Seq("l_returnflag"),
         Seq("n", "sx", "sy", "sxy", "sxx"),
-        Seq(baseP, linregPartials(ins)), Seq(linregPartials(del)))(col("n") > 0)
+        Seq(baseP, linregPartials(delta.inserts)),
+        Seq(linregPartials(delta.deletes)))(col("n") > 0)
       linregFinalize(merged)
     }),
 
@@ -1077,16 +1054,11 @@ object Analytics {
       * recompute. */
     Query("q_incr_attribution", attributionSql(
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val affected = ev.filter(col("event_id") % 10 === 0 ||
-          col("event_id") % 10 === 1)
-        .select("user_id").distinct()
+      val delta = Delta.tenWay(events(s, d), "event_id")
       attributionRollup(
         Maintain.groupRecomputeMemo(s, d, "attr_credits",
-          base, post, Seq("user_id"), affected)(
-          df => attrPerPurchase(df)))
+          delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(df => attrPerPurchase(df)))
     }),
 
     /** q233: USER LIFECYCLE ACCOUNTING [T analytics surface] — per
@@ -1162,15 +1134,11 @@ object Analytics {
       * ⇒ hash proves maintenance ≡ recompute. */
     Query("q_incr_lifecycle", lifecycleSql(
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val affected = ev.filter(col("event_id") % 10 === 0 ||
-          col("event_id") % 10 === 1)
-        .select("user_id").distinct()
+      val delta = Delta.tenWay(events(s, d), "event_id")
       lifecycleFromActives(
         Maintain.groupRecomputeMemo(s, d, "lifecycle_actives",
-          base, post, Seq("user_id"), affected)(activesOf))
+          delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(activesOf))
     }),
 
     // Round12g rows (see the section scaladoc above)
@@ -1315,17 +1283,14 @@ object Analytics {
       * maintenance ≡ recompute. */
     Query("q_incr_chisq", chisqSql(
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val ins = ev.filter(col("event_id") % 10 === 0)
-      val del = ev.filter(col("event_id") % 10 === 1)
+      val delta = Delta.tenWay(events(s, d), "event_id")
       val baseP = Memos.frame(s, d, "analytics_chisq/chisq_counts") {
-        val p = chisqCounts(base).persist()
+        val p = chisqCounts(delta.base).persist()
         p.count(); p
       }
       val merged = Maintain.signedMerge(Seq("event_type"), Seq("a", "c"),
-        Seq(baseP, chisqCounts(ins)), Seq(chisqCounts(del)))(
-        col("a") + col("c") > 0)
+        Seq(baseP, chisqCounts(delta.inserts)),
+        Seq(chisqCounts(delta.deletes)))(col("a") + col("c") > 0)
       chisqFinalize(merged)
     })
   )

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Delta
 
 /** Round-2 coverage extensions to SURVEY.md §2: distribution window
   * functions, boolean/conditional aggregates, regexp and bitwise
@@ -201,11 +202,12 @@ object Extras {
            CAST(coalesce(b.tb, 0) - coalesce(a.ta, 0) AS DOUBLE) AS delta
          FROM a FULL OUTER JOIN b ON a.user_id = b.user_id
          ORDER BY user_id""")((s, d) => {
-      val ev = events(s, d)
       val cut = lit(cutoff).cast("timestamp")
-      val a = ev.filter(col("ts") < cut).groupBy("user_id")
+      val delta = Delta(events(s, d), col("ts") < cut, col("ts") >= cut,
+        lit(false))
+      val a = delta.base.groupBy("user_id")
         .agg(sum(dec2(col("value"))).as("ta"))
-      val b = ev.filter(col("ts") >= cut).groupBy("user_id")
+      val b = delta.inserts.groupBy("user_id")
         .agg(sum(dec2(col("value"))).as("tb"))
       a.join(b, Seq("user_id"), "full")
         .select(col("user_id"),

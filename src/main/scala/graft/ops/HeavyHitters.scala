@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Delta
 
 /** Misra–Gries heavy hitters [N] — the frequent-items sketch a 100 TB
   * pipeline uses when the item domain (tokens, URLs, user agents) is
@@ -99,6 +100,18 @@ object HeavyHitters {
                           key: String, t: => DataFrame): Map[String, Long] =
     Memos.value(s, d, s"hh/$key")(summaryOf(t, 63))
 
+  /** The corpus tokens as a change set (doc_id % 10: 0 = insert,
+    * 1 = delete). */
+  private def tokenDelta(docs: DataFrame): Delta =
+    Delta.tenWay(docs, "doc_id").map(toksOf)
+
+  /** q123/q138's pre-delta candidates: the preserved base summary ⊕ the
+    * insert summary. */
+  private def preDeltaSummary(s: org.apache.spark.sql.SparkSession, d: String,
+                              delta: Delta): Map[String, Long] =
+    mergeSummaries(memoSummary(s, d, "base", delta.base),
+      memoSummary(s, d, "ins", delta.inserts), 63)
+
   val queries: Seq[Query] = Seq(
     /** q120: tokens with frequency > n/50 over the document corpus —
       * MG(k=63) per partition (63+1 > 50, so the sketch provably
@@ -162,11 +175,7 @@ object HeavyHitters {
          ORDER BY cnt DESC, tok""")((s, d) => {
       import s.implicits._
       val docs = documents(s, d)
-      val merged = mergeSummaries(
-        memoSummary(s, d, "base",
-          toksOf(docs.filter(col("doc_id") % 10 =!= 0))),
-        memoSummary(s, d, "ins",
-          toksOf(docs.filter(col("doc_id") % 10 === 0))), 63)
+      val merged = preDeltaSummary(s, d, tokenDelta(docs))
       val cands = merged.keys.toSeq.toDF("tok")
       val all = toksOf(docs)
       val n = all.agg(count(lit(1)).as("n"))
@@ -219,17 +228,13 @@ object HeavyHitters {
          ORDER BY cnt DESC, tok""")((s, d) => {
       import s.implicits._
       val docs = documents(s, d)
-      // pre-delta candidates: preserved base summary ⊕ insert summary
-      val merged = mergeSummaries(
-        memoSummary(s, d, "base",
-          toksOf(docs.filter(col("doc_id") % 10 =!= 0))),
-        memoSummary(s, d, "ins",
-          toksOf(docs.filter(col("doc_id") % 10 === 0))), 63)
+      val delta = tokenDelta(docs)
+      val merged = preDeltaSummary(s, d, delta)
       // deletion mass budget: n_post * (k+1) >= n_pre * 50, integer —
       // catalog stats of stored relations (scalar-memoized like every
       // gate scalar, r18); the budget CHECK still runs per invocation
       val nPre = Memos.value(s, d, "hh/nPre")(toksOf(docs).count())
-      val post = toksOf(docs.filter(col("doc_id") % 10 =!= 1))
+      val post = delta.post
       val nPost = Memos.value(s, d, "hh/nPost")(post.count())
       require(nPost * 64L >= nPre * 50L,
         s"deletion mass budget exceeded ($nPre -> $nPost): " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Delta
 
 /** The STORAGE-LAYOUT family (SURVEY §2 rows 157-158, 242, 249 —
   * consolidated r13 from the former Round11/Round12h modules as a
@@ -302,23 +303,20 @@ object Layout {
     Query("q_incr_zorder", zorderSql(
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder_incr"
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val delta = ev.filter(col("event_id") % 10 === 0 ||
-        col("event_id") % 10 === 1)
+      val delta = Delta.tenWay(events(s, d), "event_id")
       val stats = Memos.value(s, d, "layout/zorder_incr_stats") {
-        val b = base.withColumn("dnum",
+        val b = delta.base.withColumn("dnum",
           datediff(to_date(col("ts")), lit("1970-01-01")))
         val r = b.agg(max("user_id"), min("dnum"), max("dnum"))
           .collect()(0)
         (r.getLong(0), r.getInt(1), r.getInt(2))
       }
       Memos.value(s, d, "layout/zorder_incr_build") {
-        zorderWrite(base, stats, scratch, dynamic = false); true
+        zorderWrite(delta.base, stats, scratch, dynamic = false); true
       }
       Memos.value(s, d, "layout/zorder_incr_maint") {
-        zorderMaintain(s, scratch, post, cellsOf(delta, stats), stats)
+        zorderMaintain(s, scratch, delta.post, cellsOf(delta.touched, stats),
+          stats)
         true
       }
       boxQuery(s, scratch, stats)

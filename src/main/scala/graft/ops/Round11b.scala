@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 
 /** Round-11 second/third/fourth batches (SURVEY §2 rows 162-174): declared
   * queries that widen the relational surface (window distribution
@@ -458,26 +458,19 @@ object Round11b {
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"))
-      val base = ev.filter(col("ts") < cut)
-      val ins = ev.filter(col("ts") >= cut)
-      val delPred = col("event_id") % 10 === 1
-      val affected = broadcast(ins.select("user_id")
-        .unionByName(base.filter(delPred).select("user_id"))
-        .distinct())
+      val delta = Delta.cut(ev, col("ts") < cut, "event_id")
+      val affected = broadcast(delta.touchedKeys("user_id"))
+      def touchedTransitions(rows: DataFrame) =
+        transitionsOf(rows.join(affected, Seq("user_id"), "left_semi"))
       // the STORED matrix — session-memoized like the rest of the
       // stored-state family (production reads it from the partials
       // store; it is immutable for a given base corpus)
       val stored = Memos.frame(s, d, "round11b/transBase") {
-        val t = transitionsOf(base).persist(); t.count(); t
+        val t = transitionsOf(delta.base).persist(); t.count(); t
       }
-      val neg = transitionsOf(base.join(affected, Seq("user_id"), "left_semi"))
-        .withColumn("n_transitions", -col("n_transitions"))
-      val pos = transitionsOf(base.filter(!delPred).unionByName(ins)
-        .join(affected, Seq("user_id"), "left_semi"))
-      stored.unionByName(neg).unionByName(pos)
-        .groupBy("event_type", "next_type")
-        .agg(sum(col("n_transitions")).as("n_transitions"))
-        .filter(col("n_transitions") > 0)
+      Maintain.signedMerge(Seq("event_type", "next_type"), Seq("n_transitions"),
+          Seq(stored, touchedTransitions(delta.post)),
+          Seq(touchedTransitions(delta.base)))(col("n_transitions") > 0)
         .orderBy("event_type", "next_type")
     }),
 
@@ -742,14 +735,9 @@ object Round11b {
       val cut = lit("2024-01-20").cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"))
-      val base = ev.filter(col("ts") < cut)
-      val ins = ev.filter(col("ts") >= cut)
-      val delPred = col("event_id") % 10 === 1
-      val affected = ins.select("user_id")
-        .unionByName(base.filter(delPred).select("user_id"))
-        .distinct()
-      Maintain.groupRecompute(base, base.filter(!delPred).unionByName(ins),
-        Seq("user_id"), affected)(activityStreaks(_, "user_id", "ts"))
+      val delta = Delta.cut(ev, col("ts") < cut, "event_id")
+      Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+        delta.touchedKeys("user_id"))(activityStreaks(_, "user_id", "ts"))
         .orderBy("user_id")
     }),
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 
 /** Round-12 declared queries (SURVEY §2 rows 180-188): the paper's own
   * motivating example promoted to a declared row (signed incremental
@@ -30,11 +30,6 @@ import graft.incr.Maintain
   * semantics follow SURVEY §2 rows 180-188.
   */
 object Round12 {
-
-  /** Tokenized corpus: (doc rows filtered by `p`) → one `word` row per
-    * token occurrence. */
-  private def tokens(docs: DataFrame, p: Column): DataFrame =
-    docs.filter(p).select(explode(split(col("text"), " ")).as("word"))
 
   /** GENERIC signed incremental wordcount (q180's merge on caller
     * frames): maintain token counts under a corpus delta from the
@@ -185,12 +180,11 @@ object Round12 {
          )
          SELECT word, CAST(count(*) AS BIGINT) AS n_total
          FROM t GROUP BY word ORDER BY word""")((s, d) => {
-      val docs = documents(s, d)
-      val baseState = tokens(docs, col("doc_id") % 10 =!= 0)
+      val delta = Delta.tenWay(documents(s, d), "doc_id")
+      val baseState = delta.base
+        .select(explode(split(col("text"), " ")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
-      incrTokenCounts(baseState,
-          docs.filter(col("doc_id") % 10 === 0),
-          docs.filter(col("doc_id") % 10 === 1), "text")
+      incrTokenCounts(baseState, delta.inserts, delta.deletes, "text")
         .orderBy("word")
     }),
 
@@ -637,15 +631,10 @@ object Round12 {
            min(doc_id) AS keep_id
          FROM c GROUP BY h
          HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""")((s, d) => {
-      val docs = documents(s, d)
-      def occ(p: Column) = chunkOccurrences(
-        docs.filter(p), "doc_id", "text", chunkTokens = 16)
-      val affected = occ(col("doc_id") % 10 === 0 ||
-        col("doc_id") % 10 === 1).select("h").distinct()
-      Maintain.groupRecompute(
-          occ(col("doc_id") % 10 =!= 0),
-          occ(col("doc_id") % 10 =!= 1),
-          Seq("h"), affected)(chunkGroupsOf)
+      val delta = Delta.tenWay(documents(s, d), "doc_id")
+        .map(chunkOccurrences(_, "doc_id", "text", chunkTokens = 16))
+      Maintain.groupRecompute(delta.base, delta.post, Seq("h"),
+          delta.touchedKeys("h"))(chunkGroupsOf)
         .orderBy("h")
     }),
 
@@ -788,9 +777,9 @@ object Round12 {
          GROUP BY o_orderpriority ORDER BY o_orderpriority""")((s, d) => {
       val o = orders(s, d)
         .withColumn("cents", (dec2(col("o_totalprice")) * 100).cast("long"))
-      def vc(p: Column) = o.filter(p)
-        .groupBy(col("o_orderpriority"), col("cents"))
-        .agg(count(lit(1)).as("n"))
+      val delta = Delta.tenWay(o, "o_orderkey").map(
+        _.groupBy(col("o_orderpriority"), col("cents"))
+          .agg(count(lit(1)).as("n")))
       // A/B NOTE: memoizing the base partials (the q212
       // band_partials pattern) was tried and REVERTED — the three
       // union branches share ONE orders scan in a single stage here,
@@ -799,9 +788,8 @@ object Round12 {
       // wall win. The per-invocation base aggregation IS the cheap
       // shape at this plan size.
       val state = Maintain.signedMerge(Seq("o_orderpriority", "cents"),
-        Seq("n"), Seq(vc(col("o_orderkey") % 10 =!= 0),
-          vc(col("o_orderkey") % 10 === 0)),
-        Seq(vc(col("o_orderkey") % 10 === 1)))(col("n") > 0)
+        Seq("n"), Seq(delta.base, delta.inserts), Seq(delta.deletes))(
+        col("n") > 0)
       val w = Window.partitionBy("o_orderpriority").orderBy("cents")
       val totals = state.groupBy("o_orderpriority")
         .agg(sum(col("n")).as("n_rows"))
@@ -1080,15 +1068,13 @@ object Round12 {
            FROM post
          )
          SELECT * FROM p ORDER BY col_name""")((s, d) => {
-      val li = lineitem(s, d)
-      val base = li.filter(col("l_orderkey") % 10 =!= 0)
-      val ins = li.filter(col("l_orderkey") % 10 === 0)
-      val del = li.filter(col("l_orderkey") % 10 === 1)
+      val delta = Delta.tenWay(lineitem(s, d), "l_orderkey")
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         .map { c =>
           val baseCounts = Memos.frame(s, d, s"round12/profileBase:$c")(
-            valueCounts(base, c).persist())
-          profileOfState(valueCountStateFrom(baseCounts, ins, del, c), c)
+            valueCounts(delta.base, c).persist())
+          profileOfState(valueCountStateFrom(baseCounts, delta.inserts,
+            delta.deletes, c), c)
         }
         .reduce(_ unionByName _)
         .orderBy("col_name")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 import org.apache.spark.sql.graftbridge.Bridge
 import graft.functions.DamerauLevenshtein
 
@@ -909,15 +909,9 @@ object Round12b {
       * Oracle = the batch q202 over the post-delta corpus, so the
       * hash proves maintenance ≡ recompute. */
     Query("q_incr_resample", ffillSql("WHERE event_id % 10 <> 1"))((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val ins = ev.filter(col("event_id") % 10 === 0)
-      val del = ev.filter(col("event_id") % 10 === 1)
-      val post = base.filter(col("event_id") % 10 =!= 1).unionByName(ins)
-      val affected = ins.select("user_id")
-        .unionByName(del.select("user_id")).distinct()
-      Maintain.groupRecompute(base, post, Seq("user_id"), affected)(
-          ffillSummary)
+      val delta = Delta.tenWay(events(s, d), "event_id")
+      Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(ffillSummary)
         .orderBy("user_id")
     }),
 
@@ -1031,11 +1025,10 @@ object Round12b {
       }
       // n_checked of the FK rule rides the quantity rule's n (all
       // three rules check every row) — reconstitute per-rule below.
+      val delta = Delta.tenWay(li, "l_orderkey").map(counts)
       val state = Maintain.signedMerge(Seq("rule_name"),
         Seq("n_checked_raw", "n_violations"),
-        Seq(counts(li.filter(col("l_orderkey") % 10 =!= 0)),
-          counts(li.filter(col("l_orderkey") % 10 === 0))),
-        Seq(counts(li.filter(col("l_orderkey") % 10 === 1))))(lit(true))
+        Seq(delta.base, delta.inserts), Seq(delta.deletes))(lit(true))
       val total = state.filter(col("rule_name") === "li_quantity_le_30")
         .select(col("n_checked_raw").as("n_total"))
       state.crossJoin(broadcast(total))
@@ -1101,16 +1094,12 @@ object Round12b {
           AND epoch_us(a.ts) <= epoch_us(b.ts) + 900000000
           AND epoch_us(a.ts) >= epoch_us(b.ts) - 900000000
          GROUP BY 1, 2 ORDER BY t1, t2""")((s, d) => {
-      val ev = bandEvents(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val delta = ev.filter(col("event_id") % 10 === 0)
-        .unionByName(ev.filter(col("event_id") % 10 === 1))
-      val touched = delta
+      val delta = Delta.tenWay(bandEvents(s, d), "event_id")
+      val touched = delta.touched
         .select(explode(expr(
           s"sequence(tsu div ${BandUs}L - 1, tsu div ${BandUs}L + 1)"))
           .as("abucket")).distinct()
-      val inputB = delta
+      val inputB = delta.touched
         .select(explode(expr(
           s"sequence(tsu div ${BandUs}L - 2, tsu div ${BandUs}L + 2)"))
           .as("ibucket")).distinct()
@@ -1118,7 +1107,7 @@ object Round12b {
       // production run reads back from the partials store — session-
       // memoized like every stored-state family
       val baseP = Memos.frame(s, d, "round12b/band_partials") {
-        val p = bandPartials(base).persist()
+        val p = bandPartials(delta.base).persist()
         p.count(); p
       }
       val keep = baseP
@@ -1126,7 +1115,7 @@ object Round12b {
       // the sweep references its input from several plan branches;
       // materialize the delta-proportional recompute slice once (a
       // production run reads it back from the partials store anyway)
-      val recIn = post.join(broadcast(inputB),
+      val recIn = delta.post.join(broadcast(inputB),
           expr(s"tsu div ${BandUs}L") === col("ibucket"), "left_semi")
         .localCheckpoint()
       val rec = bandPartials(recIn)
@@ -1434,20 +1423,15 @@ object Round12b {
          FROM seq
          WHERE event_type = 'view' AND e1 = 'click' AND e2 = 'purchase'
          GROUP BY user_id ORDER BY user_id""")((s, d) => {
-      val ev = events(s, d)
-      val base = ev.filter(col("event_id") % 10 =!= 0)
-      val post = ev.filter(col("event_id") % 10 =!= 1)
-      val affected = ev.filter(col("event_id") % 10 === 0 ||
-          col("event_id") % 10 === 1)
-        .select("user_id").distinct()
+      val delta = Delta.tenWay(events(s, d), "event_id")
       def derive(e: DataFrame) =
         patternMatches(e, "user_id", "ts", "event_id", "event_type",
             Seq("view", "click", "purchase"))
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_matches"),
             min(unix_micros(col("ts"))).as("first_match_us"))
-      Maintain.groupRecompute(base, post, Seq("user_id"), affected)(
-          derive)
+      Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(derive)
         .orderBy("user_id")
     }),
 

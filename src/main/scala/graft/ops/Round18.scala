@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Query
 import graft.engine.Tables._
 import graft.engine.Dec._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 
 /** Round-18 extensions (SURVEY.md §2 rows 284–292): the data-mixture /
   * curation diagnostics a training-data pipeline runs between dedup and
@@ -127,11 +127,9 @@ object Round18 {
     * spec can exercise the pass-through branch on a synthetic frame
     * (the driver fixture's delta touches every user). */
   def incrEwma(ev: DataFrame): DataFrame = {
-    val touched = ev
-      .filter(col("event_id") % 10 === 0 || col("event_id") % 10 === 1)
-      .select("user_id").distinct()
-    Maintain.groupRecompute(ev.filter(col("event_id") % 10 =!= 0),
-      ev.filter(col("event_id") % 10 =!= 1), Seq("user_id"), touched)(ewmaOver)
+    val delta = Delta.tenWay(ev, "event_id")
+    Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+      delta.touchedKeys("user_id"))(ewmaOver)
   }
 
   /** q287/q291 oracle body over a parameterized event source. */
@@ -258,13 +256,10 @@ object Round18 {
              CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS c_zh
            FROM documents WHERE doc_id % 10 <> 1 GROUP BY source)
          $diversitySelect""")((s, d) => {
-      val docs = documents(s, d)
-      def cnt(dd: DataFrame) =
-        dd.groupBy("source", "lang").agg(count(lit(1)).as("n"))
+      val delta = Delta.tenWay(documents(s, d), "doc_id")
+        .map(_.groupBy("source", "lang").agg(count(lit(1)).as("n")))
       val merged = Maintain.signedMerge(Seq("source", "lang"), Seq("n"),
-        Seq(cnt(docs.filter(col("doc_id") % 10 =!= 0)),
-          cnt(docs.filter(col("doc_id") % 10 === 0))),
-        Seq(cnt(docs.filter(col("doc_id") % 10 === 1))))(col("n") > 0)
+        Seq(delta.base, delta.inserts), Seq(delta.deletes))(col("n") > 0)
       diversityOver(merged)
     }),
 
@@ -420,13 +415,9 @@ object Round18 {
       // q290: the same batch rule over the post-delta corpus — the
       // touched-group recompute + pass-through must be result-invisible.
       softDedupSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
-      val docs = documents(s, d)
-      val deltaH = hashed(docs.filter(
-          col("doc_id") % 10 === 0 || col("doc_id") % 10 === 1))
-        .select("h").distinct()
-      Maintain.groupRecompute(hashed(docs.filter(col("doc_id") % 10 =!= 0)),
-          hashed(docs.filter(col("doc_id") % 10 =!= 1)), Seq("h"), deltaH)(
-          softDedupAgg(_, "h", "n_dups"))
+      val delta = Delta.tenWay(documents(s, d), "doc_id").map(hashed)
+      Maintain.groupRecompute(delta.base, delta.post, Seq("h"),
+          delta.touchedKeys("h"))(softDedupAgg(_, "h", "n_dups"))
         .orderBy("h")
     }),
 

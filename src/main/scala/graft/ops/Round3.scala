@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
+import graft.incr.Delta
 
 /** Round-3 coverage extensions to SURVEY.md §2: graph triangle
   * counting (the classic MapReduce graph workload family alongside
@@ -377,10 +378,9 @@ object Round3 {
         .join(broadcast(dim), col("l_suppkey") === col("s_suppkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n"), sum(dec2(col("l_extendedprice"))).as("rev"))
-      val li = lineitem(s, d)
-      val base = view(li.filter(col("l_shipdate") < cut))
-      val delta = view(li.filter(col("l_shipdate") >= cut))
-      base.unionByName(delta)
+      val delta = Delta(lineitem(s, d), col("l_shipdate") < cut,
+        col("l_shipdate") >= cut, lit(false)).map(view)
+      delta.base.unionByName(delta.inserts)
         .groupBy("n_name")
         .agg(sum(col("n")).as("n"), dbl(sum(col("rev"))).as("rev"))
         .orderBy("n_name")

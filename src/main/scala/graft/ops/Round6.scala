@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Query
 import graft.engine.Tables._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 
 /** Round-6 coverage extensions (SURVEY.md §2 rows 111–130, ops
   * half): batch + incremental sessionization, SCD Type-2 compaction
@@ -186,10 +186,9 @@ object Round6 {
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
-      val affected = ev.filter(col("ts") >= cut)
-        .select("user_id").distinct()
-      Maintain.groupRecompute(ev.filter(col("ts") < cut), ev, Seq("user_id"),
-          affected)(sessionsOf)
+      val delta = Delta(ev, col("ts") < cut, col("ts") >= cut, lit(false))
+      Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(sessionsOf)
         .orderBy("user_id", "session_idx")
     }),
 
@@ -324,12 +323,9 @@ object Round6 {
     // shared projection, so the text is reused verbatim.
     Query("q_incr_tfidf", Round3.textTfidf.oracle.get)((s, d) => {
       val docs = documents(s, d)
-      def tfOf(dd: org.apache.spark.sql.DataFrame) = dd
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val tfBase = tfOf(docs.filter(col("doc_id") % 10 =!= 0))
-      val tfDelta = tfOf(docs.filter(col("doc_id") % 10 === 0))
+      val delta = Delta.tenWay(docs, "doc_id").map(Round8.tfOf)
+      val tfBase = delta.base
+      val tfDelta = delta.inserts
       def dfOf(tf: org.apache.spark.sql.DataFrame) =
         tf.groupBy("term").agg(count(lit(1)).as("df"))
       // associative state merge: term-keyed integer counts

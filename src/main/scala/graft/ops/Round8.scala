@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.engine.Dec._
-import graft.incr.Maintain
+import graft.incr.{Delta, Maintain}
 import graft.text.{Dedup, MinHash, Similarity}
 
 /** Round-8 extensions (SURVEY.md §2 rows 133–149, plus rows 153–154
@@ -20,14 +20,19 @@ import graft.text.{Dedup, MinHash, Similarity}
   * endgame operators (repetition scoring, sequence packing, eval-set
   * decontamination).
   *
-  * Delta convention shared by q133/q134/q139: the corpus splits into
-  *   base   = doc_id % 10 <> 0   (the stored state's corpus)
-  *   insert = doc_id % 10 == 0   (the '+' half of the delta)
-  *   delete = doc_id % 10 == 1   (the '-' half — a subset of base)
+  * Delta convention shared by q133/q134/q139: `incr.Delta.tenWay` on
+  * doc_id (base doc_id % 10 <> 0, inserts % 10 == 0, deletes % 10 == 1),
   * so the post-delta corpus is doc_id % 10 <> 1 and each oracle is
   * the FULL recompute over that corpus: signed incremental
   * maintenance must be result-invisible. */
 object Round8 {
+
+  /** Per-(doc_id, term) term frequencies of `docs`' text, empty terms
+    * dropped: the doc-local tf rows of the TF-IDF family. */
+  def tfOf(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+    .filter(length(col("term")) > 0)
+    .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
 
   /** Apply a SIGNED document delta to an incremental TF-IDF state
     * [P §3 — update = delete + insert applied to q119's preserved-tf
@@ -208,7 +213,7 @@ object Round8 {
   private def cachedLshBandedOld(s: SparkSession, d: String): DataFrame =
     Memos.frame(s, d, "lsh/lshBandedOld") {
       MinHash.banded(MinHash.signatures(
-        cachedToksAll(s, d).filter(col("doc_id") % 10 =!= 0)))
+        Delta.tenWay(cachedToksAll(s, d), "doc_id").base))
         .localCheckpoint()
     }
 
@@ -303,9 +308,9 @@ object Round8 {
     // re-derivation) — the part that is genuinely per-batch.
     val bandedIns = Memos.frame(s, d, "lsh/lshBandedIns")(
       MinHash.banded(MinHash.signatures(
-        cachedToksAll(s, d).filter(col("doc_id") % 10 === 0)))
+        Delta.tenWay(cachedToksAll(s, d), "doc_id").inserts))
         .localCheckpoint())
-    val deleted = documents(s, d).filter(col("doc_id") % 10 === 1)
+    val deleted = Delta.tenWay(documents(s, d), "doc_id").deletes
       .select("doc_id")
     val touched = MinHash.touchedKeys(bandedOld, bandedIns, deleted)
       .persist()
@@ -437,7 +442,7 @@ object Round8 {
   private[graft] def cachedCleanNormedBase(s: SparkSession,
                                            d: String): DataFrame =
     Memos.frame(s, d, "lsh/cleanNormedBase")(Round6.cleanNormed(
-      documents(s, d).filter(col("doc_id") % 10 =!= 0)).localCheckpoint())
+      Delta.tenWay(documents(s, d), "doc_id").base).localCheckpoint())
 
   /** The q148 overlap join: train grams probe the BROADCAST eval gram
     * relation (the eval set is a genuinely tiny held-out artifact —
@@ -509,15 +514,14 @@ object Round8 {
         .join(broadcast(dim), col("l_suppkey") === col("s_suppkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n"), sum(dec2(col("l_extendedprice"))).as("rev"))
-      val li = lineitem(s, d)
-      val basePred = col("l_shipdate") < cut
-      val updPred = basePred && col("l_orderkey") % 10 === 3
-      val updNew = li.filter(updPred)
+      // an update deletes the old version and inserts the new one
+      val delta = Delta(lineitem(s, d), col("l_shipdate") < cut,
+        col("l_shipdate") >= cut, col("l_orderkey") % 10 === 3)
+      val updNew = delta.deletes
         .withColumn("l_extendedprice", col("l_extendedprice") + lit(1.0))
-      viewApplyDelta(
-          view(li.filter(basePred)),
-          view(li.filter(col("l_shipdate") >= cut)).unionByName(view(updNew)),
-          view(li.filter(updPred)))
+      viewApplyDelta(view(delta.base),
+          view(delta.inserts).unionByName(view(updNew)),
+          view(delta.deletes))
         .orderBy("n_name")
     }),
 
@@ -537,15 +541,16 @@ object Round8 {
       * `Round8Spec` proves warm-beats-cold + the fixed-point
       * invariant for the same signed delta. */
     Query("q_iter_kmeans_incr")((s, d) => {
-      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val post = emb.filter(col("vec_id") % 10 =!= 1).persist()
+      val delta = Delta.tenWay(
+        embeddings(s, d).select(col("vec_id"), col("embedding")), "vec_id")
+      val post = delta.post.persist()
       // the STORED centroid model (converged base-corpus centroids —
       // production commits them through `incr.StateStore` / reads
       // them back, `Round6Spec` proves that round-trip bit-exact): k×dims
       // doubles per (session, dir), so repeated invocations measure the
       // warm restart itself, not the base convergence
       val baseCents = Memos.value(s, d, "lsh/kmeansBaseCents") {
-        val base = emb.filter(col("vec_id") % 10 =!= 0).persist()
+        val base = delta.base.persist()
         val seed = base.orderBy("vec_id").limit(10).collect()
           .map(_.getSeq[Float](1).map(_.toDouble).toArray)
         val cents = graft.iter.KMeans
@@ -587,23 +592,15 @@ object Round8 {
              AS tfidf
          FROM t JOIN d USING (term), n
          ORDER BY tfidf DESC, doc_id, term LIMIT 20""")((s, d) => {
-      val docs = documents(s, d)
-      def tfOf(dd: DataFrame) = dd
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val tfBase = tfOf(docs.filter(col("doc_id") % 10 =!= 0))
-      val tfDelta = tfOf(docs.filter(col("doc_id") % 10 === 0))
-      val deletedIds = docs.filter(col("doc_id") % 10 === 1)
-        .select("doc_id")
+      val delta = Delta.tenWay(documents(s, d), "doc_id")
+      val deletedIds = delta.deletes.select("doc_id")
       // signed doc-count merge: +1 base, +1 insert, −1 delete
       def one(dd: DataFrame) = dd.select(lit(1L).as("c"))
       val n = Maintain.signedMerge(Nil, Seq("c"),
-          Seq(one(docs.filter(col("doc_id") % 10 =!= 0)),
-            one(docs.filter(col("doc_id") % 10 === 0))),
-          Seq(one(deletedIds)))(lit(true))
+          Seq(one(delta.base), one(delta.inserts)), Seq(one(deletedIds)))(
+          lit(true))
         .select(col("c").cast("double").as("n_docs"))
-      tfidfApplyDelta(tfBase, tfDelta, deletedIds, n)
+      tfidfApplyDelta(tfOf(delta.base), tfOf(delta.inserts), deletedIds, n)
         .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
         .limit(20)
     }),
@@ -618,14 +615,13 @@ object Round8 {
       """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
          FROM documents WHERE doc_id % 10 <> 1
          GROUP BY md5(text) ORDER BY h""")((s, d) => {
-      val docs = documents(s, d)
-      val baseIndex = docs.filter(col("doc_id") % 10 =!= 0)
+      val delta = Delta.tenWay(documents(s, d), "doc_id")
+      val baseIndex = delta.base
         .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))
       val baseState = baseIndex.groupBy("h")
         .agg(count(lit(1)).as("n_dups"), min("doc_id").as("keep_id"))
-      val deletedIds = docs.filter(col("doc_id") % 10 === 1)
-        .select("doc_id")
-      val deltaState = docs.filter(col("doc_id") % 10 === 0)
+      val deletedIds = delta.deletes.select("doc_id")
+      val deltaState = delta.inserts
         .groupBy(md5(col("text").cast("binary")).as("h"))
         .agg(count(lit(1)).as("n_dups"), min("doc_id").as("keep_id"))
       dedupApplyDelta(baseState, baseIndex, deletedIds, deltaState)
@@ -683,7 +679,7 @@ object Round8 {
          SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
          FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
          ORDER BY n.doc_id""")((s, d) => {
-      val docs = documents(s, d)
+      val delta = Delta.tenWay(documents(s, d), "doc_id")
       // Stored doc-local state, session-memoized (r18, the bandedIns
       // precedent): the cleaned/scored/normed relations are
       // deterministic doc-local functions of the fixture — production
@@ -693,8 +689,8 @@ object Round8 {
       // canon application, passthrough anti-join, final join).
       val normedBase = cachedCleanNormedBase(s, d)
       val normedIns = Memos.frame(s, d, "lsh/cleanNormedIns")(
-        Round6.cleanNormed(docs.filter(col("doc_id") % 10 === 0)).localCheckpoint())
-      val deleted = docs.filter(col("doc_id") % 10 === 1).select("doc_id")
+        Round6.cleanNormed(delta.inserts).localCheckpoint())
+      val deleted = delta.deletes.select("doc_id")
       val baseIndex = normedBase.select(col("h"), col("doc_id"))
       val baseState = baseIndex.groupBy("h")
         .agg(count(lit(1)).as("n_dups"), min("doc_id").as("keep_id"))
@@ -792,20 +788,16 @@ object Round8 {
          FROM tr JOIN ev USING (g)
          GROUP BY train_id, eval_id HAVING count(*) >= 3
          ORDER BY train_id, eval_id""")((s, d) => {
-      val doc = documents(s, d)
+      // the training side of the eval split is the changing table
+      val delta = Delta.tenWay(
+        documents(s, d).filter(col("doc_id") % 97 =!= 0), "doc_id")
       val ev = cachedEvalGrams(s, d)
       val baseState = Memos.frame(s, d, "lsh/contamBase") {
-        contamPairs(contamGrams(
-            doc.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 10 =!= 0),
-            "train_id"), ev)
+        contamPairs(contamGrams(delta.base, "train_id"), ev)
           .localCheckpoint()
       }
-      val deleted = doc
-        .filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 10 === 1)
-        .select(col("doc_id").as("train_id"))
-      val inserted = contamGrams(
-        doc.filter(col("doc_id") % 97 =!= 0 && col("doc_id") % 10 === 0),
-        "train_id")
+      val deleted = delta.deletes.select(col("doc_id").as("train_id"))
+      val inserted = contamGrams(delta.inserts, "train_id")
       baseState
         .join(broadcast(deleted), Seq("train_id"), "left_anti")
         .unionByName(contamPairs(inserted, ev))
@@ -914,14 +906,12 @@ object Round8 {
       * output bit-equal to q135's pipeline run over a from-scratch
       * assignment of the post-delta corpus at the same centroids. */
     Query("q_sim_ann_ivf_incr")((s, d) => {
-      val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val base = emb.filter(col("vec_id") % 10 =!= 0)
-      val (indexedOld, cents) = Similarity.ivfIndex(s, base)
+      val delta = Delta.tenWay(
+        embeddings(s, d).select(col("vec_id"), col("embedding")), "vec_id")
+      val (indexedOld, cents) = Similarity.ivfIndex(s, delta.base)
       val maintained = Similarity.ivfApplyDelta(s, indexedOld, cents,
-        emb.filter(col("vec_id") % 10 === 0),
-        emb.filter(col("vec_id") % 10 === 1).select("vec_id"))
-      val probes = emb
-        .filter(col("vec_id") < 5 && col("vec_id") % 10 =!= 1)
+        delta.inserts, delta.deletes.select("vec_id"))
+      val probes = delta.post.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
       Similarity.ivfSearchBatch(s, maintained, cents, probes,
           nprobe = 3, topK = 3)
@@ -1002,12 +992,10 @@ object Round8 {
         .join(broadcast(dim), col("l_suppkey") === col("s_suppkey"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n"), sum(dec2(col("l_extendedprice"))).as("rev"))
-      val li = lineitem(s, d)
-      val basePred = col("l_shipdate") < cut
-      val delPred = basePred && col("l_orderkey") % 10 === 1
-      viewApplyDelta(view(li.filter(basePred)),
-          view(li.filter(col("l_shipdate") >= cut)),
-          view(li.filter(delPred)))
+      val delta = Delta.cut(lineitem(s, d), col("l_shipdate") < cut,
+        "l_orderkey")
+      viewApplyDelta(view(delta.base), view(delta.inserts),
+          view(delta.deletes))
         .orderBy("n_name")
     }),
 
@@ -1058,13 +1046,9 @@ object Round8 {
       val o = orders(s, d)
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
           col("o_orderstatus"))
-      val basePred = col("o_orderdate") < cut
-      val delPred = basePred && col("o_orderkey") % 10 === 1
-      val affected = o.filter(col("o_orderdate") >= cut).select("o_custkey")
-        .unionByName(o.filter(delPred).select("o_custkey"))
-        .distinct()
-      Maintain.groupRecompute(o.filter(basePred), o.filter(!delPred),
-          Seq("o_custkey"), affected)(Round6.scd2OfRows)
+      val delta = Delta.cut(o, col("o_orderdate") < cut, "o_orderkey")
+      Maintain.groupRecompute(delta.base, delta.post, Seq("o_custkey"),
+          delta.touchedKeys("o_custkey"))(Round6.scd2OfRows)
         .orderBy("o_custkey", "valid_from", "o_orderkey")
     }),
 
@@ -1117,16 +1101,11 @@ object Round8 {
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
-      val base = ev.filter(col("ts") < cut)
-      val ins = ev.filter(col("ts") >= cut)
-      val delPred = col("event_id") % 10 === 1
+      val delta = Delta.cut(ev, col("ts") < cut, "event_id")
       // the event log's only exchanges are the two sessionize sorts
       // (PlanSpec-asserted): the affected set broadcasts
-      val affected = ins.select("user_id")
-        .unionByName(base.filter(delPred).select("user_id"))
-        .distinct()
-      Maintain.groupRecompute(base, base.filter(!delPred).unionByName(ins),
-          Seq("user_id"), affected)(Round6.sessionsOf)
+      Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
+          delta.touchedKeys("user_id"))(Round6.sessionsOf)
         .orderBy("user_id", "session_idx")
     }),
 
@@ -1146,7 +1125,7 @@ object Round8 {
       * collapse over the post-delta corpus — signed maintenance must
       * be result-invisible. */
     Query("q_dedup_groups_lsh_incr")((s, d) => {
-      val docsPost = documents(s, d).filter(col("doc_id") % 10 =!= 1)
+      val docsPost = Delta.tenWay(documents(s, d), "doc_id").post
       val pairs = lshPairsIncr(s, d)
       // the maintained pair RELATION re-runs per invocation (only
       // stored state is memoized) but its COUNT is deterministic per

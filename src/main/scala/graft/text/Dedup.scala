@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Delta
 
 /** §2 group I — deduplication over documents [N].
   *
@@ -581,12 +582,10 @@ object Dedup {
       // result-invisible.
       """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
          FROM documents GROUP BY md5(text) ORDER BY h""")((s, d) => {
-      val docs = documents(s, d)
-      def st(dd: DataFrame) = dd
-        .groupBy(md5(col("text").cast("binary")).as("h"))
-        .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keep_id"))
-      st(docs.filter(col("doc_id") % 10 =!= 0))
-        .unionByName(st(docs.filter(col("doc_id") % 10 === 0)))
+      val delta = Delta.tenWay(documents(s, d), "doc_id").map(
+        _.groupBy(md5(col("text").cast("binary")).as("h"))
+          .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keep_id")))
+      delta.base.unionByName(delta.inserts)
         .groupBy("h")
         .agg(sum("n_dups").as("n_dups"), min("keep_id").as("keep_id"))
         .orderBy("h")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.incr.Delta
 
 /** §2 row 66 — SimHash near-dup detection [N]: 64-bit signatures from
   * per-token xxhash64 bit votes; candidate pairs from 4×16-bit band
@@ -178,14 +179,21 @@ object SimHash {
       .filter(col("hamming") <= MaxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
 
+  /** q147's change set over the doc subset's tokens (q66's doc_id % 5
+    * == 0 subset, which the shared % 10 == 1 deletion class never
+    * intersects): inserts % 50 == 0, deletes % 50 == 5 — ~10% of the
+    * subset each, both non-empty at every SF. */
+  private def subsetDelta(toks: DataFrame): Delta =
+    Delta(toks, col("doc_id") % 50 =!= 0, col("doc_id") % 50 === 0,
+      col("doc_id") % 50 === 5)
+
   /** The STORED state of q147's base subset corpus (doc_id % 5 == 0
     * minus the % 50 == 0 insert class) — the preserved state [P §3],
     * session-memoized like `Round8`'s LSH stores. */
   private def bandedOldCached(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame =
     Memos.frame(s, d, "simhash/bandedOld")(
-      banded(signatures(
-        Dedup.subsetTokens(s, d).filter(col("doc_id") % 50 =!= 0)))
+      banded(signatures(subsetDelta(Dedup.subsetTokens(s, d)).base))
         .localCheckpoint())
 
   /** The q147 insert batch's band rows (doc_id % 50 == 0) — stored
@@ -196,8 +204,7 @@ object SimHash {
   private def bandedInsCached(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame =
     Memos.frame(s, d, "simhash/bandedIns")(
-      banded(signatures(
-        Dedup.subsetTokens(s, d).filter(col("doc_id") % 50 === 0)))
+      banded(signatures(subsetDelta(Dedup.subsetTokens(s, d)).inserts))
         .localCheckpoint())
 
   /** Per-(band, bh) VERIFIED near-dup pairs of the base corpus — the
@@ -246,10 +253,7 @@ object SimHash {
       * re-verify. The previous shape passed BUCKETS through but then
       * re-ran pair generation + verify over ALL of them — the
       * corpus-proportional step VERDICT r10 flagged (~7-11 s).
-      * Delta convention INSIDE q66's doc_id % 5 == 0 subset (the
-      * % 10 == 1 deletion class never intersects it): insert =
-      * % 50 == 0, delete = % 50 == 5 — ~10% of the subset each, both
-      * halves non-empty at every SF. Only STORED state is memoized
+      * Delta convention: [[subsetDelta]]. Only STORED state is memoized
       * (band index, per-bucket pair store — production reads both
       * from the partials store); the delta maintenance re-runs per
       * invocation. oracle=none (xxhash64, like q66); Round8Spec
@@ -264,8 +268,7 @@ object SimHash {
       // arrives carrying its index rows; per-batch work is the
       // maintenance itself.
       val bandedIns = bandedInsCached(s, d)
-      val deleted = toks.filter(col("doc_id") % 50 === 5)
-        .select("doc_id").distinct()
+      val deleted = subsetDelta(toks).deletes.select("doc_id").distinct()
       val touched = touchedKeys(bandedOld, bandedIns, deleted)
         .localCheckpoint()
       val kept = pairsByBucketCached(s, d)

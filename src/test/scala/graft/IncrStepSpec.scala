@@ -3,13 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import graft.incr.IncrMerge
+import graft.engine.Tables
+import graft.incr.{Delta, IncrMerge}
 import graft.iter.MrbgPagerank
 import graft.ops.Round12
 
 /** The incremental steps do no dead work: MRBG's last iteration is one
   * lazy plan, and the signed merges (wordcount, partials, value counts)
-  * are one shuffle each. They stay bit-equal to their from-scratch forms. */
+  * are one shuffle each. They stay bit-equal to their from-scratch forms.
+  * The change set they read, `incr.Delta`, keeps its laws on every
+  * constructor. */
 class IncrStepSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -159,5 +162,61 @@ class IncrStepSpec extends SparkSpecBase {
     assert(rows(got) == rows(want))
     assert(!rows(got).exists(r => Set("c", "d").contains(r.getString(0))),
       "words whose count reached zero must vanish")
+  }
+
+  /** Random keyed rows with duplicates: (k, v). */
+  private def keyedRows(seed: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(300)((rnd.nextInt(60).toLong, rnd.nextInt(4))).toDF("k", "v")
+  }
+
+  /** Every constructor over the rows: the 10-way split, a cut, and an
+    * explicit one whose deleted predicate also names non-base rows. */
+  private def constructors(rows: DataFrame): Seq[(String, Delta)] = Seq(
+    "tenWay" -> Delta.tenWay(rows, "k"),
+    "cut" -> Delta.cut(rows, col("k") < 40, "k"),
+    "apply" -> Delta(rows, col("k") % 3 =!= 0, col("k") % 3 === 0,
+      col("k") % 4 === 1))
+
+  private def same(a: DataFrame, b: DataFrame): Boolean = rows(a) == rows(b)
+
+  test("Delta laws: deletes ⊆ base, post = base − deletes + inserts, touched = inserts ∪ deletes") {
+    for (seed <- Seq(1, 2, 3); (name, d) <- constructors(keyedRows(seed))) {
+      val clue = s"$name, seed $seed"
+      assert(d.deletes.exceptAll(d.base).isEmpty, s"deletes ⊄ base ($clue)")
+      assert(!d.inserts.isEmpty && !d.deletes.isEmpty, s"an empty part ($clue)")
+      assert(same(d.post, d.base.exceptAll(d.deletes).unionAll(d.inserts)),
+        s"post ≠ base − deletes + inserts ($clue)")
+      assert(same(d.touched, d.inserts.unionAll(d.deletes)),
+        s"touched ≠ inserts ∪ deletes ($clue)")
+      assert(same(d.touchedKeys("k"), d.touched.select("k").distinct()),
+        s"touchedKeys ≠ the distinct keys of touched ($clue)")
+    }
+  }
+
+  test("Delta.map applies the derivation to every part") {
+    val f = (df: DataFrame) =>
+      df.select((col("k") % 7).as("g"), (col("v") * 10).as("w"))
+    for ((name, d) <- constructors(keyedRows(4))) {
+      val m = d.map(f)
+      val parts = Seq[(String, Delta => DataFrame)]("base" -> (_.base),
+        "inserts" -> (_.inserts), "deletes" -> (_.deletes),
+        "post" -> (_.post), "touched" -> (_.touched))
+      for ((part, of) <- parts)
+        assert(same(of(m), f(of(d))), s"$name: map(f).$part ≠ f($part)")
+      assert(same(m.touchedKeys("g"), f(d.touched).select("g").distinct()),
+        s"$name: map(f).touchedKeys")
+    }
+  }
+
+  test("Delta.tenWay returns the rows of the three filters it replaced (events, sf0.001)") {
+    val ev = Tables.events(spark, sfDir)
+    val d = Delta.tenWay(ev, "event_id")
+    val k = col("event_id") % 10
+    assert(same(d.base, ev.filter(k =!= 0)))
+    assert(same(d.inserts, ev.filter(k === 0)))
+    assert(same(d.deletes, ev.filter(k === 1)))
+    assert(same(d.post, ev.filter(k =!= 1)))
+    assert(same(d.touched, ev.filter(k === 0 || k === 1)))
   }
 }

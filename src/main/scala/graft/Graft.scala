@@ -287,7 +287,7 @@ object Graft {
     * surviving rows with `c_docs`/`t_int` attached. */
   def temperatureRebalance(df: DataFrame, classCol: String,
                            idCol: String): DataFrame =
-    ops.Round11b.temperatureRebalance(df, classCol, idCol)
+    ops.Sampling.temperatureRebalance(df, classCol, idCol)
 
   /** Exact balanced class sample: downsample every `classCol` group
     * to the minority class size, rows ranked by md5(idCol) + id
@@ -295,19 +295,19 @@ object Graft {
     * class sorts independently). */
   def balancedSample(df: DataFrame, classCol: String,
                      idCol: String): DataFrame =
-    ops.Round11b.balancedSample(df, classCol, idCol)
+    ops.Sampling.balancedSample(df, classCol, idCol)
 
   /** User-journey transition matrix: (`typeCol` → next) counts over
     * each `userCol` timeline ordered by (`tsCol`, `tieCol`). */
   def transitionMatrix(ev: DataFrame, userCol: String, tsCol: String,
                        tieCol: String, typeCol: String): DataFrame =
-    ops.Round11b.transitionMatrix(ev, userCol, tsCol, tieCol, typeCol)
+    ops.Events.transitionMatrix(ev, userCol, tsCol, tieCol, typeCol)
 
   /** Consecutive-day activity streaks per `userCol`:
     * (user, n_active_days, n_streaks, longest_streak). */
   def activityStreaks(ev: DataFrame, userCol: String,
                       tsCol: String): DataFrame =
-    ops.Round11b.activityStreaks(ev, userCol, tsCol)
+    ops.Events.activityStreaks(ev, userCol, tsCol)
 
   /** Nearest as-of join: for each left row the same-`key` right row
     * closest in absolute time (ms distance, sub-ms ties by right id;
@@ -315,14 +315,14 @@ object Graft {
   def nearestAsofJoin(left: DataFrame, lId: String, lTs: String,
                       right: DataFrame, rId: String, rTs: String,
                       key: String): DataFrame =
-    ops.Round11b.nearestAsofJoin(left, lId, lTs, right, rId, rTs, key)
+    ops.Joins.nearestAsofJoin(left, lId, lTs, right, rId, rTs, key)
 
   /** Bigram-LM rarity scoring: per doc the bigram count, occurrences
     * rarer than 1/`rarityDenom` under the corpus's own bigram LM
     * (integer threshold test) and the min conditional probability. */
   def lmRarity(docs: DataFrame, idCol: String, textCol: String,
                rarityDenom: Int = 32): DataFrame =
-    ops.Round11b.lmRarity(docs, idCol, textCol, rarityDenom)
+    text.TextStats.lmRarity(docs, idCol, textCol, rarityDenom)
 
   /** The group-level incremental recompute rule as a combinator: for
     * any per-group derivation whose output depends only on its own
@@ -342,33 +342,33 @@ object Graft {
     * after the state scan; zero-count tokens vanish. */
   def incrTokenCounts(baseCounts: DataFrame, insertDocs: DataFrame,
                       deleteDocs: DataFrame, textCol: String): DataFrame =
-    ops.Round12.incrTokenCounts(baseCounts, insertDocs, deleteDocs, textCol)
+    text.TextStats.incrTokenCounts(baseCounts, insertDocs, deleteDocs, textCol)
 
   /** Chunk-level exact dedup: fixed `chunkTokens`-token chunks,
     * md5-hashed; returns chunks occurring in ≥2 docs as
     * (h, n_occ, n_docs, keep_id). */
   def chunkDupGroups(docs: DataFrame, idCol: String, textCol: String,
                      chunkTokens: Int = 16): DataFrame =
-    ops.Round12.chunkDupGroups(docs, idCol, textCol, chunkTokens)
+    text.Dedup.chunkDupGroups(docs, idCol, textCol, chunkTokens)
 
   /** Winnowing fingerprints (MOSS scheme): per doc the distinct
     * selected (k-shingle, w-window-min) hashes as (doc_id, fp) —
     * any two docs sharing a ≥ k+w−1 token run share a fingerprint. */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 4, w: Int = 4): DataFrame =
-    ops.Round12.winnowFingerprints(docs, idCol, textCol, k, w)
+    text.TextStats.winnowFingerprints(docs, idCol, textCol, k, w)
 
   /** ANALYZE-style column profiling: per column one row
     * (col_name, n_rows, n_distinct, min_v, max_v, sum_v). Columns
     * must be numeric with ≤2 decimal places (exact-decimal sums). */
   def profileStats(df: DataFrame, cols: Seq[String]): DataFrame =
-    ops.Round12.profileStats(df, cols)
+    ops.Aggs.profileStats(df, cols)
 
   /** Small-file compaction: rewrite a hive-partitioned directory with
     * exactly one file per `partCol` partition. */
   def compactPartitions(s: SparkSession, inPath: String, outPath: String,
                         partCol: String): Unit =
-    ops.Round12.compactPartitions(s, inPath, outPath, partCol)
+    stream.StreamOps.compactPartitions(s, inPath, outPath, partCol)
 
   /** Top-k per group through the TIER-(c) custom operator
     * ([[graft.plans.TopKPerGroupPlan]] — map-side bounded-heap
@@ -442,41 +442,41 @@ object Graft {
     * Column — Lowrance–Wagner, the variant where a transposed pair
     * may be edited again ([[graft.functions.DamerauLevenshtein]]). */
   def damerauLevenshtein(a: Column, b: Column): Column =
-    ops.Round12b.damerauLev(a, b)
+    ops.Scalars.damerauLev(a, b)
 
   /** Per-key daily resample + forward-fill summary (span/active/gap
     * days + exact forward-filled cents sum) over an events-shaped
     * frame (user_id, ts, event_id, value) — run-length formulation,
     * no calendar explosion. */
-  def ffillSummary(ev: DataFrame): DataFrame = ops.Round12b.ffillSummary(ev)
+  def ffillSummary(ev: DataFrame): DataFrame = ops.TimeSeries.ffillSummary(ev)
 
   /** Prefix-filtered EXACT Jaccard self-join at τ = num/den over a
     * DISTINCT (doc_id, tok) relation — PPJoin candidate pruning,
     * lossless (row-identical to the brute-force join). */
   def prefixJaccardPairs(toks: DataFrame, num: Int, den: Int): DataFrame =
-    ops.Round12b.prefixJaccardPairs(toks, num, den)
+    text.Similarity.prefixJaccardPairs(toks, num, den)
 
   /** Single-pass data-quality report: (rule name, violation
     * predicate) pairs evaluated in ONE conditional-count scan. */
   def qualityReport(df: DataFrame,
                     rules: Seq[(String, Column)]): DataFrame =
-    ops.Round12b.qualityReport(df, rules)
+    ops.Curation.qualityReport(df, rules)
 
   /** Count-Min sketch build / probe — mergeable (counter-wise sum)
     * frequency estimation in depth·width counters. */
   def cmsBuild(df: DataFrame, keyCol: String, depth: Int = 4,
                width: Int = 1024): DataFrame =
-    ops.Round12b.cmsBuild(df, keyCol, depth, width)
+    ops.Aggs.cmsBuild(df, keyCol, depth, width)
   def cmsEstimate(cms: DataFrame, probes: DataFrame, keyCol: String,
                   depth: Int = 4, width: Int = 1024): DataFrame =
-    ops.Round12b.cmsEstimate(cms, probes, keyCol, depth, width)
+    ops.Aggs.cmsEstimate(cms, probes, keyCol, depth, width)
 
   /** All unordered row pairs within `band` of each other on a BIGINT
     * `tsCol` — the bucketed band self-join (equi-join plan, exact
     * integer bucketing, no dedup pass). */
   def bandSelfJoin(df: DataFrame, idCol: String, tsCol: String,
                    band: Long, payload: Seq[String] = Nil): DataFrame =
-    ops.Round12b.bandSelfJoin(df, idCol, tsCol, band, payload)
+    ops.Sweep.bandSelfJoin(df, idCol, tsCol, band, payload)
 
   /** Rows anchoring a strictly consecutive `pattern` run in each
     * key's (ts, tie) timeline — MATCH_RECOGNIZE-shaped contiguous
@@ -484,7 +484,7 @@ object Graft {
   def patternMatches(ev: DataFrame, keyCol: String, tsCol: String,
                      tieCol: String, typeCol: String,
                      pattern: Seq[String]): DataFrame =
-    ops.Round12b.patternMatches(ev, keyCol, tsCol, tieCol, typeCol, pattern)
+    ops.Events.patternMatches(ev, keyCol, tsCol, tieCol, typeCol, pattern)
 
   /** Maximal subgraph of min degree ≥ k (iterated peel to fixpoint)
     * over a symmetric directed edge list (src, dst). Throws rather
@@ -492,7 +492,7 @@ object Graft {
     * `maxRounds` (termination itself is guaranteed: every
     * non-converged round drops at least one edge). */
   def kcore(edges: DataFrame, k: Int, maxRounds: Int = 100000): DataFrame =
-    ops.Round12b.kcore(edges, k, maxRounds)
+    ops.GraphStats.kcore(edges, k, maxRounds)
 
   /** All unordered pairs of overlapping CLOSED intervals — bucketed
     * equi-join with the max(start)-bucket attribution rule (each
@@ -501,7 +501,7 @@ object Graft {
   def intervalOverlapJoin(iv: DataFrame, idCols: Seq[String],
                           sCol: String, eCol: String,
                           bucket: Long): DataFrame =
-    ops.Round12b.intervalOverlapJoin(iv, idCols, sCol, eCol, bucket)
+    ops.Sweep.intervalOverlapJoin(iv, idCols, sCol, eCol, bucket)
 
   /** EXACT 2-D proximity-pair aggregates (per unordered type pair:
     * count, Σ|Δt|, Σ|Δv| over all pairs with |Δt| ≤ T and |Δv| ≤ V)
@@ -610,7 +610,7 @@ object Graft {
     * degree-ordered node-iterator, never all-pairs (row 238 feeds
     * clustering coefficients from this). */
   def triangleVertices(edges: DataFrame): DataFrame =
-    ops.Triangles.triangleVertices(edges)
+    ops.GraphStats.triangleVertices(edges)
 
   /** Morton (Z-order) code of two 4-bit cell coordinates — the
     * clustering key behind row 242's layout. */

@@ -21,17 +21,16 @@ object SparkEntry {
   /** Every registry row, one list. A name appears once (RegistryGuardSpec). */
   val all: Seq[Query] =
     Scans.queries ++ Filters.queries ++ Aggs.queries ++ SortsSets.queries ++
-      Joins.queries ++ Windows.queries ++ Scalars.queries ++
-      IterQueries.queries ++ KMeans.queries ++ Apriori.queries ++
-      MrbgPagerank.queries ++ IncrMerge.queries ++ MergeInto.queries ++
-      Dedup.queries ++ MinHash.queries ++ SimHash.queries ++
-      Similarity.queries ++ TextStats.queries ++
+      Joins.queries ++ Windows.queries ++ Scalars.queries ++ Events.queries ++
+      Sampling.queries ++ TimeSeries.queries ++ GraphStats.queries ++
+      Sweep.queries ++ IterQueries.queries ++ KMeans.queries ++
+      Apriori.queries ++ MrbgPagerank.queries ++ IncrMerge.queries ++
+      MergeInto.queries ++ Dedup.queries ++ MinHash.queries ++
+      SimHash.queries ++ Similarity.queries ++ TextStats.queries ++
       Udaf.queries ++ StreamOps.queries ++ Multimodal.queries ++
-      Extras.queries ++ Round3.queries ++ Round6.queries ++ Round8.queries ++
-      Layout.queries ++ Selectors.queries ++ Round11b.queries ++
-      Round12.queries ++ Round12b.queries ++ Analytics.queries ++
-      Curation.queries ++ Round18.queries ++
-      HeavyHitters.queries ++ BloomPrune.queries ++ TpcH.queries
+      Layout.queries ++ Selectors.queries ++ Analytics.queries ++
+      Curation.queries ++ HeavyHitters.queries ++ BloomPrune.queries ++
+      TpcH.queries
 
   /** Flagship query (TPC-H Q1 shape, q_agg_basic) on sf0.001; the
     * driver smoke-checks rows > 0. */

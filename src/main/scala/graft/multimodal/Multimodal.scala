@@ -121,6 +121,67 @@ object Multimodal {
           md5(element_at(col("frames"), 1)).as("first_frame_md5"),
           length(element_at(col("frames"), -1)).cast("bigint")
             .as("last_frame_bytes"))
-        .orderBy("doc_id"))
+        .orderBy("doc_id")),
+
+    /** q289: MAGIC-BYTE MIME SNIFFING [N multimodal surface] — the
+      * ingest-time format detector every multimodal pipeline runs
+      * before routing blobs to codecs: a mixed media table (PNG /
+      * JPEG / RIFF magic headers prepended to the q60 byte fixture by
+      * doc_id%4; %4==3 stays bare text) is sniffed from its FIRST
+      * FOUR BYTES (hex-prefix compare — the actual file(1) mechanism)
+      * and summarized per detected type. The declared-vs-sniffed
+      * agreement check is what catches mislabeled uploads at ingest.
+      * Plan: pure map over the blobs (binary concat + substring —
+      * both codegen'd) followed by one aggregate on a ≤4-key domain;
+      * the blob column is pruned immediately after the 4-byte slice,
+      * so at 100 TB the shuffle carries counters only. Oracle
+      * reproduces the byte math on the hex plane (the q60 ASCII
+      * contract: byte == char for this fixture). */
+    Query("q_multimodal_mime",
+      // q289: the byte math replayed on the hex plane (ASCII fixture:
+      // byte == char, the q60 contract); DuckDB hex() is uppercase
+      // like Spark's.
+      """WITH m AS (
+           SELECT doc_id,
+             CASE doc_id % 4 WHEN 0 THEN '89504E470D0A1A0A'
+                             WHEN 1 THEN 'FFD8FFE0'
+                             WHEN 2 THEN '52494646'
+                             ELSE '' END AS magic_hex,
+             text
+           FROM documents),
+         s AS (
+           SELECT doc_id,
+             substr(magic_hex || hex(encode(text)), 1, 8) AS px,
+             CAST(length(magic_hex) // 2 + length(text) AS BIGINT)
+               AS n_bytes
+           FROM m)
+         SELECT CASE WHEN px = '89504E47' THEN 'image/png'
+                     WHEN substr(px, 1, 6) = 'FFD8FF' THEN 'image/jpeg'
+                     WHEN px = '52494646' THEN 'audio/wav'
+                     ELSE 'text/plain' END AS mime_sniffed,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
+           CAST(min(doc_id) AS BIGINT) AS min_doc
+         FROM s GROUP BY 1 ORDER BY mime_sniffed""")((s, d) => {
+      val m4 = pmod(col("doc_id"), lit(4))
+      val magicHex = when(m4 === 0, lit("89504E470D0A1A0A"))
+        .when(m4 === 1, lit("FFD8FFE0"))
+        .when(m4 === 2, lit("52494646"))
+        .otherwise(lit(""))
+      val content = concat(unhex(magicHex), col("text").cast("binary"))
+      val px = hex(substring(content, 1, 4))
+      val sniffed = when(px === "89504E47", "image/png")
+        .when(substring(px, 1, 6) === "FFD8FF", "image/jpeg")
+        .when(px === "52494646", "audio/wav")
+        .otherwise("text/plain")
+      documents(s, d)
+        .select(col("doc_id"), sniffed.as("mime_sniffed"),
+          length(content).cast("bigint").as("n_bytes"))
+        .groupBy("mime_sniffed")
+        .agg(count(lit(1)).cast("bigint").as("n_docs"),
+          sum("n_bytes").cast("bigint").as("total_bytes"),
+          min("doc_id").as("min_doc"))
+        .orderBy("mime_sniffed")
+    })
   )
 }

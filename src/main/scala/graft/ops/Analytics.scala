@@ -1217,12 +1217,12 @@ object Analytics {
          FROM deg d LEFT JOIN tv ON tv.node = d.node
          WHERE d.degree >= 2
          ORDER BY d.node""")((s, d) => {
-      val e = Round3.strongEdges(s, d)
+      val e = GraphStats.strongEdges(s, d)
       val deg = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))
         .localCheckpoint() // read twice: orientation + output join
-      val tri = Triangles.triangleVertices(e, Some(deg))
+      val tri = GraphStats.triangleVertices(e, Some(deg))
         .groupBy("node").agg(count(lit(1)).as("n_tri"))
       deg.join(tri, Seq("node"), "left")
         .filter(col("degree") >= 2)

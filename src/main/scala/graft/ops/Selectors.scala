@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Tables._
 import graft.engine.{Memos, Query}
+import graft.text.Similarity
 
 /** The COST-BASED SELECTOR surface (SURVEY §2 rows 159-161, moved
   * here from the former Round11 module in the r13 consolidation —
@@ -49,8 +50,8 @@ object Selectors {
             .select("doc_a", "doc_b"),
           Seq("doc_a", "doc_b")),
         recallRow("ivf_recall_at_3",
-          Round3.knnBatch.plan(s, d).select("probe_id", "vec_id"),
-          Round8.annIvfBatch.plan(s, d)
+          Similarity.knnBatch.plan(s, d).select("probe_id", "vec_id"),
+          Similarity.annIvfBatch.plan(s, d)
             .select("probe_id", "vec_id"),
           Seq("probe_id", "vec_id")))
       val schema = org.apache.spark.sql.types.StructType(Seq(

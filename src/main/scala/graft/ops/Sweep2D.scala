@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 /** EXACT distributed 2-D proximity-pair aggregation — the production
   * exact path for the q216 grid join at densities where the pair join
-  * is quadratic ([[Round12b.gridPairs2d]]'s scaladoc names this
+  * is quadratic ([[Sweep.gridPairs2d]]'s scaladoc names this
   * operator; the r13 sf1 scale run motivated it).
   *
   * Problem: for events (id, type, tsu, vc), aggregate over all

@@ -189,8 +189,8 @@ object ClusterSmoke {
           floor(col("value") * 100).cast("long").as("vc"))
       val T = 900L * 1000000L
       val V = 5000L
-      val exact = graft.ops.Round12b.gridPairs2d(ev, T, V).drop("plan")
-      val swept = graft.ops.Round12b
+      val exact = graft.ops.Sweep.gridPairs2d(ev, T, V).drop("plan")
+      val swept = graft.ops.Sweep
         .gridPairs2d(ev, T, V, volumeCap = 1L).drop("plan")
       require(swept.exceptAll(exact).count() == 0 &&
         exact.exceptAll(swept).count() == 0, "sweep diverged")

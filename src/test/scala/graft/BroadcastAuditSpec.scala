@@ -15,7 +15,7 @@ import graft.text.Dedup
   *
   *  - Dedup.verifyPairsLazy — FIXED: semi-pruned + hint-free;
   *  - Dedup.cappedVerify    — FIXED (task 1): see DedupPlanSpec;
-  *  - Round12b.dedupFirstJaccardPairs — FIXED: hint-free;
+  *  - Similarity.dedupFirstJaccardPairs — FIXED: hint-free;
   *  - Dedup.exactPairs — SURVIVOR: 2 hints, side ≤ volumeCap rows by
   *    the autoPairs gate invariant (|docs| ≤ Σdf ≤ Σdf² ≤ cap);
   *  - Dedup.cachedSubsetInter — SURVIVOR: declared bounded-subset
@@ -47,7 +47,7 @@ class BroadcastAuditSpec extends SparkSpecBase {
   test("dedupFirstJaccardPairs: hint-free (the reps relation " +
       "degenerates to |docs| on a clone-free corpus)") {
     val docs = graft.engine.Tables.documents(spark, sfDir)
-    val df = graft.ops.Round12b
+    val df = graft.text.Similarity
       .dedupFirstJaccardPairs(docs, "doc_id", "text", 1, 2)
     assert(hints(df).isEmpty, s"${hints(df)}")
   }
@@ -64,13 +64,13 @@ class BroadcastAuditSpec extends SparkSpecBase {
     val cands = Seq((0L, 0L), (0L, 5L), (5L, 10L), (0L, 10L))
       .toDF("doc_a", "doc_b")
     // below the cap (forced): kg + pa + pb all hinted
-    val (hintedF, s1) = graft.ops.Round8
+    val (hintedF, s1) = graft.text.Dedup
       .lshVerdictJoin(spark, sfDir, cands, Long.MaxValue)
     assert(hints(hintedF).size == 3,
       s"expected 3 hints (kg, pa, pb) below the cap: ${hints(hintedF).size}")
     // above the cap (forced): only the near-dup-bounded kg hint
     // survives; the doc-set relation is semi-pruned to endpoints
-    val (semiF, s2) = graft.ops.Round8
+    val (semiF, s2) = graft.text.Dedup
       .lshVerdictJoin(spark, sfDir, cands, -1L)
     assert(hints(semiF).size == 1,
       s"expected only the kg hint above the cap: ${hints(semiF).size}")

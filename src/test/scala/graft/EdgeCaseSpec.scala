@@ -100,7 +100,7 @@ class EdgeCaseSpec extends SparkSpecBase {
     val one = Seq((1L, 1L, "2024-03-05 10:00:00", "a"))
       .toDF("u", "id", "t", "typ")
       .withColumn("t", col("t").cast("timestamp"))
-    assert(graft.ops.Round11b.transitionMatrix(one, "u", "t", "id", "typ")
+    assert(graft.ops.Events.transitionMatrix(one, "u", "t", "id", "typ")
       .count() == 0)
     val st = Graft.activityStreaks(one, "u", "t").head()
     assert((st.getLong(1), st.getLong(2), st.getLong(3)) == ((1L, 1L, 1L)))
@@ -156,7 +156,7 @@ class EdgeCaseSpec extends SparkSpecBase {
       pEmpty.forall(r => r.getLong(1) == 0L && r.isNullAt(3)))
     // valueCountState: delete of a never-seen value nets negative and
     // is dropped rather than corrupting the state
-    val vs = graft.ops.Round12.valueCountState(
+    val vs = graft.ops.Aggs.valueCountState(
       Seq((1L, 1.0)).toDF("id", "x"), Seq.empty[(Long, Double)].toDF("id", "x"),
       Seq((9L, 9.0)).toDF("id", "x"), "x")
       .collect().map(r => (r.getDouble(0), r.getLong(1))).toMap

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Round12b
 
 /** Edge cases for the rows 201-215 generics: inputs the fixture never
   * produces but a library user's data will — empty frames, single

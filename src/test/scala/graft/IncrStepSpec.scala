@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.incr.{Delta, IncrMerge}
 import graft.iter.MrbgPagerank
-import graft.ops.Round12
+import graft.ops.Aggs
+import graft.text.TextStats
 
 /** The incremental steps do no dead work: MRBG's last iteration is one
   * lazy plan, and the signed merges (wordcount, partials, value counts)
@@ -133,7 +134,7 @@ class IncrStepSpec extends SparkSpecBase {
   }
 
   test("incrTokenCounts: delta tokens and base counts meet in one shuffle (AQE off)") {
-    assertOneMergeShuffle(Round12.incrTokenCounts(baseCounts, inserts, deletes, "text"))
+    assertOneMergeShuffle(TextStats.incrTokenCounts(baseCounts, inserts, deletes, "text"))
   }
 
   test("IncrMerge.mergePartials: stored and delta partials meet in one shuffle (AQE off)") {
@@ -144,17 +145,17 @@ class IncrStepSpec extends SparkSpecBase {
     assertOneMergeShuffle(IncrMerge.mergePartials(Seq("k"), stored, delta), delta)
   }
 
-  test("Round12.valueCountStateFrom: base and delta value counts meet in one shuffle (AQE off)") {
+  test("Aggs.valueCountStateFrom: base and delta value counts meet in one shuffle (AQE off)") {
     val baseCounts = Seq((1L, 2L), (3L, 1L)).toDF("v", "n")
     val ins = Seq(1L, 5L).toDF("x")
     val del = Seq(3L).toDF("x")
     def counts(df: DataFrame) = df.groupBy(col("x").as("v")).agg(count(lit(1)).as("n"))
-    assertOneMergeShuffle(Round12.valueCountStateFrom(baseCounts, ins, del, "x"),
+    assertOneMergeShuffle(Aggs.valueCountStateFrom(baseCounts, ins, del, "x"),
       counts(ins), counts(del))
   }
 
   test("incrTokenCounts == from-scratch wordcount when the delta drives words to zero") {
-    val got = Round12.incrTokenCounts(baseCounts, inserts, deletes, "text")
+    val got = TextStats.incrTokenCounts(baseCounts, inserts, deletes, "text")
     val post = Seq("a b a", "b f", "a").toDF("text")
     val want = wordcount(post).withColumnRenamed("n", "n_total")
     assert(got.schema.map(f => (f.name, f.dataType)) ==

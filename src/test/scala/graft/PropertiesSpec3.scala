@@ -167,7 +167,7 @@ class PropertiesSpec3 extends SparkSpecBase {
     // groups whose multiplicity hits 0 must VANISH (the small key
     // space makes full-group deletion common across seeds).
     import graft.engine.Dec._
-    import graft.ops.Round8
+    import graft.ops.Joins
     val sp = spark
     import sp.implicits._
     def view(rows: Seq[(String, Double)]): DataFrame =
@@ -185,7 +185,7 @@ class PropertiesSpec3 extends SparkSpecBase {
       val delKey = keys(rnd.nextInt(4))
       val del = base.filter { case (k, _) =>
         k == delKey || rnd.nextInt(4) == 0 }
-      val merged = Round8.viewApplyDelta(view(base), view(ins), view(del))
+      val merged = Joins.viewApplyDelta(view(base), view(ins), view(del))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         .sortBy(_._1).toSeq
       val post = base.diff(del) ++ ins

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
-import graft.ops.Round11b
+import graft.ops.Events
 
 /** Random-structure properties for the round-11 analytics/curation
   * generics. The fixture proofs (Round11bSpec) run on the driver
@@ -58,7 +58,7 @@ class PropertiesSpec4 extends SparkSpecBase {
       try {
         // the q169 shape on explicit frames
         def trans(ev: DataFrame) =
-          Round11b.transitionMatrix(ev, "user_id", "ts", "event_id",
+          Events.transitionMatrix(ev, "user_id", "ts", "event_id",
             "event_type")
         val affected = broadcast(insDf.select("user_id")
           .unionByName(baseDf.join(delDf, "event_id")
@@ -89,7 +89,7 @@ class PropertiesSpec4 extends SparkSpecBase {
   test("transitionMatrix == brute per-user fold on random logs") {
     for (seed <- 10L to 12L) {
       val rows = randomEvents(seed, nUsers = 6, nEvents = 80)
-      val got = Round11b.transitionMatrix(evDf(rows), "user_id", "ts",
+      val got = Events.transitionMatrix(evDf(rows), "user_id", "ts",
           "event_id", "event_type").collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       val brute = rows.groupBy(_._1).toSeq.flatMap { case (_, es) =>

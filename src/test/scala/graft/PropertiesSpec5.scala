@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
-import graft.ops.Round12
+import graft.text.{Dedup, TextStats}
 
 /** Random-structure properties for the round-12 generics. The fixture
   * proofs (Round12Spec) run on the driver documents table, whose
@@ -49,7 +49,7 @@ class PropertiesSpec5 extends SparkSpecBase {
       val baseCounts = docsDf(base)
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
-      val got = Round12.incrTokenCounts(baseCounts, docsDf(ins),
+      val got = TextStats.incrTokenCounts(baseCounts, docsDf(ins),
           docsDf(del), "text")
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       val post = base.filterNot(d => delIds(d._1)) ++ ins
@@ -66,7 +66,7 @@ class PropertiesSpec5 extends SparkSpecBase {
     for (seed <- 4L to 6L) {
       // small vocab so cross-doc chunk collisions actually occur
       val all = randomDocs(seed, nDocs = 80, vocab = 3, maxLen = 18)
-      val got = Round12.chunkDupGroups(docsDf(all), "doc_id", "text", 5)
+      val got = Dedup.chunkDupGroups(docsDf(all), "doc_id", "text", 5)
         .collect()
         .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
         .toMap
@@ -144,7 +144,7 @@ class PropertiesSpec5 extends SparkSpecBase {
     val noise = randomDocs(7L, nDocs = 20, vocab = 40, maxLen = 20)
       .map { case (id, t) => (id + 100L, t) }
     val all = planted ++ noise
-    val fps = Round12.winnowFingerprints(docsDf(all), "doc_id", "text")
+    val fps = TextStats.winnowFingerprints(docsDf(all), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val byDoc = fps.groupBy(_._1).map { case (k, v) => (k, v.map(_._2).toSet) }
     // guarantee: every pair of planted docs shares >= 1 fingerprint

@@ -30,7 +30,7 @@ class PropertiesSpec7 extends SparkSpecBase {
                 else s"s$i"
         (rnd.nextLong().abs, g)
       }.distinct
-      val got = graft.ops.Round18
+      val got = graft.ops.Sampling
         .softDedupAgg(rows.toDF("doc_id", "k"), "k", "n_grp")
         .collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -64,7 +64,7 @@ class PropertiesSpec7 extends SparkSpecBase {
       }
       val ev = rows.toDF("event_id", "user_id", "tsl", "value")
         .withColumn("ts", timestamp_micros(col("tsl"))).drop("tsl")
-      val got = graft.ops.Round18.incrEwma(ev)
+      val got = graft.ops.TimeSeries.incrEwma(ev)
         .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
       // brute: batch EWMA over the post-delta frame
       val post = rows.filter(_._1 % 10 != 1)
@@ -101,14 +101,14 @@ class PropertiesSpec7 extends SparkSpecBase {
     import sp.implicits._
     for (seed <- 1L to 3L) {
       val rnd = new scala.util.Random(seed)
-      val langs = graft.ops.Round18.Langs
+      val langs = graft.ops.Aggs.Langs
       val rows = (0 until 8).flatMap { s =>
         langs.flatMap { l =>
           val n = rnd.nextInt(1000000).toLong // N per group up to 5M
           if (n == 0) None else Some((s"src$s", l, n))
         }
       }
-      val got = graft.ops.Round18.diversityOver(rows.toDF("source", "lang", "n"))
+      val got = graft.ops.Aggs.diversityOver(rows.toDF("source", "lang", "n"))
         .collect()
         .map(r => r.getString(0) -> (r.getLong(7), r.getLong(8))).toMap
       rows.groupBy(_._1).foreach { case (src, cs) =>

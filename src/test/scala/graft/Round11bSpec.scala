@@ -202,7 +202,7 @@ class Round11bSpec extends SparkSpecBase {
     val cut = lit("2024-01-20").cast("timestamp")
     val post = Tables.events(spark, sfDir)
       .filter(!(col("ts") < cut && col("event_id") % 10 === 1))
-    val batch = graft.ops.Round11b
+    val batch = graft.ops.Events
       .activityStreaks(post, "user_id", "ts").orderBy("user_id")
     assert(incr.collect().toSeq == batch.collect().toSeq)
   }

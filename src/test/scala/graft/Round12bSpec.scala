@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import graft.ops.Round12
+import graft.ops.Aggs
+import graft.text.Dedup
 
 /** Round-12 second batch (SURVEY §2 rows 189-192): each row checked
   * against an independent derivation — the SQL front-end against the
@@ -58,7 +59,7 @@ class Round12bSpec extends SparkSpecBase {
     val got = SparkEntry.queries("q_incr_chunks")(spark, sfDir)
     val post = Tables.documents(spark, sfDir)
       .filter(col("doc_id") % 10 =!= 1)
-    val batch = Round12.chunkDupGroups(post, "doc_id", "text", 16)
+    val batch = Dedup.chunkDupGroups(post, "doc_id", "text", 16)
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty,
       "maintained chunk groups differ from the batch recompute")
     assert(got.count() > 0, "no duplicate chunks in the post-delta corpus")
@@ -68,7 +69,7 @@ class Round12bSpec extends SparkSpecBase {
     val got = SparkEntry.queries("q_incr_profile")(spark, sfDir)
     val post = Tables.lineitem(spark, sfDir)
       .filter(col("l_orderkey") % 10 =!= 1)
-    val batch = Round12.profileStats(post,
+    val batch = Aggs.profileStats(post,
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty,
       "state-derived profile differs from the batch profile")
@@ -228,7 +229,7 @@ class Round12bSpec extends SparkSpecBase {
       val del = base.filter(_ => rnd.nextDouble() < 0.3)
       val delIds = del.map(_._1).toSet
       def df(xs: Seq[(Long, Double)]) = xs.toDF("id", "x")
-      val got = Round12.valueCountState(df(base), df(ins), df(del), "x")
+      val got = Aggs.valueCountState(df(base), df(ins), df(del), "x")
         .collect().map(r => (r.getDouble(0), r.getLong(1))).toMap
       val post = base.filterNot(r => delIds(r._1)) ++ ins
       val brute = post.groupBy(_._2).map { case (v, xs) => (v, xs.size.toLong) }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.DamerauLev
-import graft.ops.Round12b
+import graft.ops.{GraphStats, Scalars, TimeSeries}
+import graft.text.Similarity
 
 /** Specs for SURVEY §2 rows 201-207 (Round12b): the Damerau-
   * Levenshtein codegen expression, forward-fill resampling (batch +
@@ -55,7 +56,7 @@ class Round12dSpec extends SparkSpecBase {
     }
     val df = pairs.toDF("a", "b")
       .select(col("a"), col("b"),
-        Round12b.damerauLev(col("a"), col("b")).as("dl"),
+        Scalars.damerauLev(col("a"), col("b")).as("dl"),
         levenshtein(col("a"), col("b")).as("lev"))
     df.collect().foreach { r =>
       val (a, b) = (r.getString(0), r.getString(1))
@@ -70,8 +71,8 @@ class Round12dSpec extends SparkSpecBase {
     }
     // symmetry on the same sample
     val sym = pairs.toDF("a", "b")
-      .select(Round12b.damerauLev(col("a"), col("b")).as("x"),
-        Round12b.damerauLev(col("b"), col("a")).as("y"))
+      .select(Scalars.damerauLev(col("a"), col("b")).as("x"),
+        Scalars.damerauLev(col("b"), col("a")).as("y"))
     assert(sym.filter(col("x") =!= col("y")).count() == 0)
   }
 
@@ -89,14 +90,14 @@ class Round12dSpec extends SparkSpecBase {
   // ---------------- q202/q207 forward-fill ----------------
 
   test("q_ts_resample: runs partition the span; gap accounting closes") {
-    val runs = Round12b.ffillRuns(graft.engine.Tables.events(spark, sfDir))
+    val runs = TimeSeries.ffillRuns(graft.engine.Tables.events(spark, sfDir))
     val sums = runs.groupBy("user_id")
       .agg(sum(col("run_len")).as("rl_sum"),
         (datediff(max(col("day")), min(col("day"))) + 1).cast("long")
           .as("span"))
     assert(sums.filter(col("rl_sum") =!= col("span")).count() == 0,
       "per-user run lengths must sum exactly to the day span")
-    val out = Round12b.ffillSummary(graft.engine.Tables.events(spark, sfDir))
+    val out = TimeSeries.ffillSummary(graft.engine.Tables.events(spark, sfDir))
       .collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -118,7 +119,7 @@ class Round12dSpec extends SparkSpecBase {
       rnd.nextLong(), // unique-ish event id
       rnd.nextDouble() * 100)
     val ev = rows.toDF("user_id", "ts", "event_id", "value")
-    val got = Round12b.ffillSummary(ev).collect()
+    val got = TimeSeries.ffillSummary(ev).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(4)))
       .toMap
     // brute force: explode every calendar day, carry the last daily
@@ -150,7 +151,7 @@ class Round12dSpec extends SparkSpecBase {
   test("q_incr_resample: maintenance is row-identical to the batch form") {
     val ev = graft.engine.Tables.events(spark, sfDir)
     val post = ev.filter(col("event_id") % 10 =!= 1)
-    val batch = Round12b.ffillSummary(post)
+    val batch = TimeSeries.ffillSummary(post)
     val incr = SparkEntry.queries("q_incr_resample")(spark, sfDir)
     assert(incr.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(incr).count() == 0)
@@ -180,7 +181,7 @@ class Round12dSpec extends SparkSpecBase {
 
   test("q_sim_setjoin_prefix: lossless vs brute force at two thresholds") {
     Seq((9, 10), (1, 2)).foreach { case (num, den) =>
-      val pruned = Round12b.prefixFilteredJaccard(spark, sfDir, num, den)
+      val pruned = Similarity.prefixFilteredJaccard(spark, sfDir, num, den)
       val brute = bruteJaccard(num, den)
       assert(pruned.exceptAll(brute).count() == 0,
         s"prefix join emitted a pair brute force lacks (tau=$num/$den)")
@@ -227,7 +228,7 @@ class Round12dSpec extends SparkSpecBase {
 
   test("q_graph_kcore: every survivor of round r had degree >= 3 before it") {
     val e0 = graft.iter.Graphs.edges(spark, sfDir)
-    val e1 = Round12b.peel(e0, 3)
+    val e1 = GraphStats.peel(e0, 3)
     // survivors' degrees measured in the PRE-peel graph
     val deg0 = e0.groupBy("src").agg(count(lit(1)).as("deg"))
     val bad = e1.select(col("src")).distinct()
@@ -249,7 +250,7 @@ class Round12dSpec extends SparkSpecBase {
     var changed = true
     var guard = 0
     while (changed && guard < 50) {
-      val next = Round12b.peel(e, 3)
+      val next = GraphStats.peel(e, 3)
       val m = next.count()
       changed = m != n
       e = next; n = m; guard += 1

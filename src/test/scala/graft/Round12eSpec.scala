@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Round12b
+import graft.ops.Aggs
 
 /** Specs for SURVEY §2 rows 208-211 (Round12b batch 3): the bucketed
   * band self-join, the Count-Min sketch, the signed-incremental
@@ -53,10 +53,10 @@ class Round12eSpec extends SparkSpecBase {
   test("q_agg_countmin: never underestimates; bounded; top-10 exact keys") {
     val li = graft.engine.Tables.lineitem(spark, sfDir)
     val n = li.count()
-    val cms = Round12b.cmsBuild(li, "l_partkey", 4, 1024)
+    val cms = Aggs.cmsBuild(li, "l_partkey", 4, 1024)
     val truth = li.groupBy(col("l_partkey").as("k"))
       .agg(count(lit(1)).as("true_n"))
-    val est = Round12b.cmsEstimate(cms, truth, "k", 4, 1024)
+    val est = Aggs.cmsEstimate(cms, truth, "k", 4, 1024)
       .join(truth, "k")
     assert(est.filter(col("est_n") < col("true_n")).count() == 0,
       "CMS must NEVER underestimate")
@@ -73,10 +73,10 @@ class Round12eSpec extends SparkSpecBase {
     val li = graft.engine.Tables.lineitem(spark, sfDir)
     val a = li.filter(col("l_orderkey") % 2 === 0)
     val b = li.filter(col("l_orderkey") % 2 === 1)
-    val merged = Round12b.cmsBuild(a, "l_partkey", 4, 1024)
-      .unionByName(Round12b.cmsBuild(b, "l_partkey", 4, 1024))
+    val merged = Aggs.cmsBuild(a, "l_partkey", 4, 1024)
+      .unionByName(Aggs.cmsBuild(b, "l_partkey", 4, 1024))
       .groupBy("row", "bucket").agg(sum(col("n")).as("n"))
-    val whole = Round12b.cmsBuild(li, "l_partkey", 4, 1024)
+    val whole = Aggs.cmsBuild(li, "l_partkey", 4, 1024)
     assert(merged.exceptAll(whole).count() == 0)
     assert(whole.exceptAll(merged).count() == 0)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Round12b
+import graft.ops.Sweep
 
 /** Specs for SURVEY §2 rows 212-215 (Round12b batch 4): the
   * signed-incremental band join, the interval-overlap join, the exact
@@ -15,7 +15,7 @@ class Round12fSpec extends SparkSpecBase {
       col("event_id"), col("event_type"), unix_micros(col("ts")).as("tsu"))
     val post = ev.filter(col("event_id") % 10 =!= 1)
     val band = 900L * 1000000L
-    val batch = Round12b.bandSelfJoin(post, "event_id", "tsu", band,
+    val batch = Sweep.bandSelfJoin(post, "event_id", "tsu", band,
         Seq("event_type"))
       .groupBy(least(col("event_type_a"), col("event_type_b")).as("t1"),
         greatest(col("event_type_a"), col("event_type_b")).as("t2"))
@@ -41,7 +41,7 @@ class Round12fSpec extends SparkSpecBase {
         s"sequence(tsu div ${band}L - 1, tsu div ${band}L + 1)"))
       .as("abucket")).distinct()
     def partials(e: org.apache.spark.sql.DataFrame) =
-      Round12b.bandSelfJoin(e, "event_id", "tsu", band, Seq("event_type"))
+      Sweep.bandSelfJoin(e, "event_id", "tsu", band, Seq("event_type"))
         .withColumn("abucket", expr(s"ts_b div ${band}L"))
         .groupBy(col("abucket"),
           least(col("event_type_a"), col("event_type_b")).as("t1"),

@@ -91,7 +91,7 @@ class Round12gSpec extends SparkSpecBase {
   test("q_incr_pattern: maintenance ≡ batch pattern counts over post-delta") {
     val ev = graft.engine.Tables.events(spark, sfDir)
     val post = ev.filter(col("event_id") % 10 =!= 1)
-    val batch = graft.ops.Round12b.patternMatches(post, "user_id", "ts",
+    val batch = graft.ops.Events.patternMatches(post, "user_id", "ts",
         "event_id", "event_type", Seq("view", "click", "purchase"))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_matches"),

@@ -33,8 +33,8 @@ class Round12lSpec extends SparkSpecBase {
   test("q_graph_clustering: Σ n_tri = 3 × total triangles; coeff bounds") {
     val got = SparkEntry.queries("q_graph_clustering")(spark, sfDir)
       .collect()
-    val totalTri = ops.Triangles
-      .count(ops.Round3.strongEdges(spark, sfDir))
+    val totalTri = ops.GraphStats
+      .countTriangles(ops.GraphStats.strongEdges(spark, sfDir))
       .collect()(0).getLong(0)
     assert(got.map(_.getLong(2)).sum == 3 * totalTri,
       "per-node incidences must sum to 3 per triangle")
@@ -54,7 +54,7 @@ class Round12lSpec extends SparkSpecBase {
       (math.min(a, b).toLong, math.max(a, b).toLong)
     }.filter(e => e._1 != e._2).distinct
     val e = edges.toDF("a", "b")
-    val got = ops.Triangles.triangleVertices(e)
+    val got = ops.GraphStats.triangleVertices(e)
       .groupBy("node").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val es = edges.toSet

@@ -34,7 +34,7 @@ class Round12nSpec extends SparkSpecBase {
     import spark.implicits._
     val rows = Seq.tabulate(1000)(i =>
       (s"g${rnd.nextInt(3)}", rnd.nextInt(50).toLong, i.toLong))
-    val got = ops.Extras.eqDepthHistogram(
+    val got = ops.Aggs.eqDepthHistogram(
         rows.toDF("g", "cents", "k"), "g", "cents", "k", 7)
       .collect()
       .map(r => (r.getString(0), r.getInt(1)) ->

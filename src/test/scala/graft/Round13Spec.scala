@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Round12b, Sweep}
+import graft.ops.Sweep
 
 /** Round-13 specs: the sufficient-statistics sweeps that de-quadratic
   * the proximity-join family (SURVEY §2 rows 208/212/213/216). Each
@@ -23,7 +23,7 @@ class Round13Spec extends SparkSpecBase {
     * attributed like [[Sweep.bandStats]]: the later element's bucket. */
   private def pairPartials(ev: org.apache.spark.sql.DataFrame,
                            w: Long) =
-    Round12b.bandSelfJoin(ev, "event_id", "tsu", w, Seq("event_type"))
+    Sweep.bandSelfJoin(ev, "event_id", "tsu", w, Seq("event_type"))
       .withColumn("abucket", expr(s"greatest(ts_a, ts_b) div ${w}L"))
       .groupBy(col("abucket"),
         least(col("event_type_a"), col("event_type_b")).as("t1"),
@@ -120,7 +120,7 @@ class Round13Spec extends SparkSpecBase {
       } ++ Seq((901L, 100L, 200L), (902L, 200L, 300L), // touching
         (903L, 100L, 200L), (904L, 100L, 200L))        // duplicates
       val df = iv.toDF("id", "s", "e")
-      val pairs = Round12b.intervalOverlapJoin(df, Seq("id"), "s", "e",
+      val pairs = Sweep.intervalOverlapJoin(df, Seq("id"), "s", "e",
         2048L)
       val ref = pairs.select(col("id_a").as("id"), col("overlap"))
         .unionByName(pairs.select(col("id_b").as("id"), col("overlap")))
@@ -171,11 +171,11 @@ class Round13Spec extends SparkSpecBase {
         50L + i % 7, 5L + i % 3)) ++
       Seq((100L, "t0", 250L, 5L), (101L, "t1", 260L, 8L))
     val ev = rows.toDF("event_id", "event_type", "tsu", "vc")
-    val exact = Round12b.gridPairs2d(ev, tband, vband)
+    val exact = Sweep.gridPairs2d(ev, tband, vband)
     assert(exact.select("plan").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("exact"))
     // force the sweep branch: tiny volume cap
-    val swept = Round12b.gridPairs2d(ev, tband, vband, volumeCap = 1L)
+    val swept = Sweep.gridPairs2d(ev, tband, vband, volumeCap = 1L)
     assert(swept.select("plan").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("sweep"))
     // the sweep is EXACT: identical aggregate rows, only `plan` differs
@@ -196,7 +196,7 @@ class Round13Spec extends SparkSpecBase {
     } ++ Seq((500L, "t0", 6400L, 0L), (501L, "t1", 6400L, 0L),
       (502L, "t1", 6300L, 10L), (503L, "t2", 6500L, -10L))
     val advDf = adv.toDF("event_id", "event_type", "tsu", "vc")
-    val advExact = Round12b.gridPairs2d(advDf, tband, vband).drop("plan")
+    val advExact = Sweep.gridPairs2d(advDf, tband, vband).drop("plan")
     // derived factor included (r14): the auto-sizer must also be
     // result-invisible
     val auto = graft.ops.Sweep2D.autoSegFactor(advDf, tband)

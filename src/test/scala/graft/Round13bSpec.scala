@@ -118,7 +118,7 @@ class Round13bSpec extends SparkSpecBase {
       (1L, "a b c d"), (2L, "a b c d"), (3L, "a b c d"),
       (10L, "a b c e"), (11L, "a b c e"),
       (20L, "a b c d e")).toDF("doc_id", "text")
-    val got = graft.ops.Round12b
+    val got = graft.text.Similarity
       .dedupFirstJaccardPairs(clones, "doc_id", "text", 1, 2)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->

@@ -53,7 +53,7 @@ class Round17Spec extends SparkSpecBase {
     // the REAL q136 input: the verified LSH pair graph at sf0.001
     val out = SparkEntry.queries("q_dedup_groups_lsh")(spark, sfDir)
       .select(col("doc_id").as("node"), col("keep_id").as("label"))
-    val pairs = graft.ops.Round8.probeLshPairs(spark, sfDir)
+    val pairs = graft.text.Dedup.probeLshPairs(spark, sfDir)
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val nodes = graft.engine.Tables.documents(spark, sfDir)

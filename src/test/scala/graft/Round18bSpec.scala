@@ -16,17 +16,17 @@ class Round18bSpec extends SparkSpecBase {
 
   test("fixture language domain is closed (the q284/q285 pinned-pivot contract)") {
     val langs = docs.map(_._3).toSet
-    assert(langs.subsetOf(graft.ops.Round18.Langs.toSet),
-      s"unexpected language(s) ${langs -- graft.ops.Round18.Langs.toSet} — " +
+    assert(langs.subsetOf(graft.ops.Aggs.Langs.toSet),
+      s"unexpected language(s) ${langs -- graft.ops.Aggs.Langs.toSet} — " +
         "the diversity rows' pinned pivot no longer covers the domain")
   }
 
-  /** The exact rational from Round18.diversityOver, replayed in JVM:
+  /** The exact rational from Aggs.diversityOver, replayed in JVM:
     * (N²−Σc², N², and the two single-division doubles). */
   private def diversityOf(counts: Map[String, Long])
       : (Long, Long, Double, Double) = {
     val n = counts.values.sum
-    val sumSq = graft.ops.Round18.Langs
+    val sumSq = graft.ops.Aggs.Langs
       .map(l => { val c = counts.getOrElse(l, 0L); c * c })
       .sum
     (n * n - sumSq, n * n,
@@ -39,7 +39,7 @@ class Round18bSpec extends SparkSpecBase {
     val src = row.getString(0)
     val (num, den, gini, eff) = diversityOf(counts)
     assert(row.getLong(1) == counts.values.sum, s"$src n_docs")
-    graft.ops.Round18.Langs.zipWithIndex.foreach { case (l, i) =>
+    graft.ops.Aggs.Langs.zipWithIndex.foreach { case (l, i) =>
       assert(row.getLong(2 + i) == counts.getOrElse(l, 0L), s"$src c_$l")
     }
     assert(row.getLong(7) == num && row.getLong(8) == den,

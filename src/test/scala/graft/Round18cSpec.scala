@@ -124,7 +124,7 @@ class Round18cSpec extends SparkSpecBase {
       (12L, 200L, 3000L, 32.00), (13L, 200L, 4000L, 64.00))
       .toDF("event_id", "user_id", "tsl", "value")
       .withColumn("ts", timestamp_micros(col("tsl"))).drop("tsl")
-    val got = graft.ops.Round18.incrEwma(ev)
+    val got = graft.ops.TimeSeries.incrEwma(ev)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     // post-delta series: user 100 = ids 2,3,4 (untouched, from base
     // state); user 200 = ids 10,12,13 (recomputed without deleted 11)

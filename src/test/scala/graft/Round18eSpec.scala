@@ -81,14 +81,14 @@ class Round18eSpec extends SparkSpecBase {
   }
 
   test("q_incr_profile memoized base state == fresh per-invocation build") {
-    import graft.ops.Round12
+    import graft.ops.Aggs
     val li = graft.engine.Tables.lineitem(spark, sfDir)
     val base = li.filter(col("l_orderkey") % 10 =!= 0)
     val ins = li.filter(col("l_orderkey") % 10 === 0)
     val del = li.filter(col("l_orderkey") % 10 === 1)
     val fresh = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      .map(c => Round12.profileOfState(
-        Round12.valueCountState(base, ins, del, c), c))
+      .map(c => Aggs.profileOfState(
+        Aggs.valueCountState(base, ins, del, c), c))
       .reduce(_ unionByName _)
     val declared = SparkEntry.queries("q_incr_profile")(spark, sfDir)
     assert(declared.exceptAll(fresh).isEmpty &&
@@ -97,16 +97,16 @@ class Round18eSpec extends SparkSpecBase {
   }
 
   test("q149 memoized clean-normed state == fresh per-invocation build") {
-    import graft.ops.Round6
+    import graft.ops.Curation
     val docs = graft.engine.Tables.documents(spark, sfDir)
-    val freshBase = Round6.cleanNormed(docs.filter(col("doc_id") % 10 =!= 0))
+    val freshBase = Curation.cleanNormed(docs.filter(col("doc_id") % 10 =!= 0))
     val declared = SparkEntry.queries("q_incr_pipeline_clean_delete")(
       spark, sfDir) // builds/serves the cleanNormedBase memo
     declared.count()
-    val memoBase = graft.ops.Round8.cachedCleanNormedBase(spark, sfDir)
+    val memoBase = graft.ops.Curation.cachedCleanNormedBase(spark, sfDir)
     assert(memoBase.exceptAll(freshBase).isEmpty &&
       freshBase.exceptAll(memoBase).isEmpty,
-      "memoized cleanNormedBase != fresh Round6.cleanNormed build")
+      "memoized cleanNormedBase != fresh Curation.cleanNormed build")
   }
 
   test("q123/q138 memoized MG summaries are result-invisible") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Round3, Triangles}
+import graft.ops.GraphStats
 import graft.iter.{Graphs, IterQueries}
 
 /** Round-4 depth items: triangle-counting scale guard (broadcast path
@@ -12,18 +12,18 @@ class Round4Spec extends SparkSpecBase {
   import spark.implicits._
 
   test("triangle paths agree on the q83 strong-edge graph") {
-    val e = Round3.strongEdges(spark, sfDir).localCheckpoint()
-    val b = Triangles.countBroadcast(e).head().getLong(0)
-    val n = Triangles.countNodeIterator(e).head().getLong(0)
+    val e = GraphStats.strongEdges(spark, sfDir).localCheckpoint()
+    val b = GraphStats.countBroadcast(e).head().getLong(0)
+    val n = GraphStats.countNodeIterator(e).head().getLong(0)
     assert(b === n)
     assert(b > 0) // non-degenerate fixture
   }
 
   test("triangle guard falls back and stays equal when forced") {
-    val e = Round3.strongEdges(spark, sfDir)
-    val viaGuardBroadcast = Triangles.count(e).head().getLong(0)
+    val e = GraphStats.strongEdges(spark, sfDir)
+    val viaGuardBroadcast = GraphStats.countTriangles(e).head().getLong(0)
     // threshold 0 forces the node-iterator path through the guard
-    val viaGuardFallback = Triangles.count(e, broadcastMaxEdges = 0L)
+    val viaGuardFallback = GraphStats.countTriangles(e, broadcastMaxEdges = 0L)
       .head().getLong(0)
     assert(viaGuardBroadcast === viaGuardFallback)
   }
@@ -35,8 +35,8 @@ class Round4Spec extends SparkSpecBase {
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (5L, 6L), (6L, 7L),
       (8L, 9L), (8L, 10L), (9L, 10L)).toDF("a", "b")
-    assert(Triangles.countBroadcast(edges).head().getLong(0) === 5L)
-    assert(Triangles.countNodeIterator(edges).head().getLong(0) === 5L)
+    assert(GraphStats.countBroadcast(edges).head().getLong(0) === 5L)
+    assert(GraphStats.countNodeIterator(edges).head().getLong(0) === 5L)
   }
 
   private val INF = 999999999L

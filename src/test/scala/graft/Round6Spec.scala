@@ -260,7 +260,7 @@ class Round6Spec extends SparkSpecBase {
       (3L, 30L, 0L), (3L, 31L, 0L))
     val e = rows.toDF("user_id", "event_id", "us")
       .withColumn("ts", timestamp_micros(col("us")))
-    val out = graft.ops.Round6.sessionsOf(e)
+    val out = graft.ops.Events.sessionsOf(e)
       .orderBy("user_id", "session_idx")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4)))

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Round8
-import graft.text.{Dedup, MinHash, SimHash, Similarity}
+import graft.text.{Dedup, MinHash, SimHash, Similarity, TextStats}
 
 /** Round-8 items: signed (insert+delete) deltas for the mining-family
   * incrementals (TF-IDF, exact dedup), the declared full-corpus
@@ -49,7 +48,7 @@ class Round8Spec extends SparkSpecBase {
     val deleted = Seq(Tuple1(11L)).toDF("doc_id")
     val n = Seq(Tuple1(3L)).toDF("c") // post-delta doc count: 1, 2, 10
       .agg(sum("c").cast("double").as("n_docs"))
-    val out = Round8.tfidfApplyDelta(tfBase, tfDelta, deleted, n)
+    val out = TextStats.tfidfApplyDelta(tfBase, tfDelta, deleted, n)
       .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2))
       .toMap
     // post-delta state: df(a)=2 (docs 1,10), df(b)=2 (1,2), df(c)=2 (2,10)
@@ -99,7 +98,7 @@ class Round8Spec extends SparkSpecBase {
     val deleted = Seq(Tuple1(1L), Tuple1(4L)).toDF("doc_id")
     val deltaState = Seq(("z", 1L, 10L), ("w", 1L, 11L))
       .toDF("h", "n_dups", "keep_id")
-    val out = Round8.dedupApplyDelta(baseState, baseIndex, deleted, deltaState)
+    val out = Dedup.dedupApplyDelta(baseState, baseIndex, deleted, deltaState)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     // x: min deleted -> group-level recompute over survivors {2}
@@ -122,7 +121,7 @@ class Round8Spec extends SparkSpecBase {
       .toDF("h", "n_dups", "keep_id")
     val deleted = Seq(Tuple1(1L)).toDF("doc_id")
     val deltaState = baseState.limit(0)
-    val out = Round8.dedupApplyDelta(baseState, baseIndex, deleted, deltaState)
+    val out = Dedup.dedupApplyDelta(baseState, baseIndex, deleted, deltaState)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(out == Map("y" -> ((2L, 2L))), "x lost its only member")
@@ -227,7 +226,7 @@ class Round8Spec extends SparkSpecBase {
     val nDeleted = ev
       .filter(col("ts") < cut && col("event_id") % 10 === 1).count()
     assert(nDeleted > 0, "fixture must exercise the '-' half")
-    val full = graft.ops.Round6.sessionsOf(
+    val full = graft.ops.Events.sessionsOf(
         ev.filter(!(col("ts") < cut && col("event_id") % 10 === 1)))
       .orderBy("user_id", "session_idx").collect().toSeq
     assert(incr.nonEmpty)
@@ -275,7 +274,7 @@ class Round8Spec extends SparkSpecBase {
     val base = v(Seq(("A", 2L, bd("30.00")), ("B", 1L, bd("5.00"))))
     val ins = v(Seq(("B", 1L, bd("7.50"))))
     val del = v(Seq(("A", 2L, bd("30.00"))))
-    val out = graft.ops.Round8.viewApplyDelta(base, ins, del)
+    val out = graft.ops.Joins.viewApplyDelta(base, ins, del)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .toSet
     assert(out == Set(("B", 2L, 12.5)),
@@ -354,7 +353,7 @@ class Round8Spec extends SparkSpecBase {
     // retractions must actually remove rows on the fixture
     assert(o.filter(col("o_orderdate") < cut && col("o_orderkey") % 10 === 1)
       .limit(1).count() > 0)
-    val full = graft.ops.Round6.scd2OfRows(
+    val full = graft.ops.Joins.scd2OfRows(
         o.filter(!(col("o_orderdate") < cut && col("o_orderkey") % 10 === 1)))
       .orderBy("o_custkey", "valid_from", "o_orderkey").collect().toSeq
     assert(incr.nonEmpty)

@@ -163,7 +163,7 @@ class Round9Spec extends SparkSpecBase {
     val base = v(Seq(("A", 2L, bd("30.00")), ("B", 1L, bd("5.00"))))
     val ins = v(Seq(("A", 2L, bd("32.00"))))
     val del = v(Seq(("A", 2L, bd("30.00"))))
-    val out = graft.ops.Round8.viewApplyDelta(base, ins, del)
+    val out = graft.ops.Joins.viewApplyDelta(base, ins, del)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .toSet
     assert(out == Set(("A", 2L, 32.0), ("B", 1L, 5.0)),
@@ -222,7 +222,7 @@ class Round9Spec extends SparkSpecBase {
         .agg(count(lit(1)).as("n"),
           sum(col("p").cast("decimal(18,2)")).as("rev"))
       val survivors = base.indices.filterNot(delIdx).toVector.map(base)
-      val merged = graft.ops.Round8
+      val merged = graft.ops.Joins
         .viewApplyDelta(view(base), view(ins), view(del))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         .toSet
@@ -246,7 +246,7 @@ class Round9Spec extends SparkSpecBase {
       .toDF("h", "n_dups", "keep_id")
     val deleted = Seq(Tuple1(2L)).toDF("doc_id")
     val deltaState = Seq(("hb", 1L, 2L)).toDF("h", "n_dups", "keep_id")
-    val out = graft.ops.Round8
+    val out = graft.text.Dedup
       .dedupApplyDelta(baseState, baseIndex, deleted, deltaState)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
@@ -296,14 +296,14 @@ class Round9Spec extends SparkSpecBase {
     val updNew = o.filter(updPred).withColumn("o_orderstatus", flip)
     val affected = broadcast(
       o.filter(updPred).select("o_custkey").distinct())
-    val preserved = graft.ops.Round6.scd2OfRows(
+    val preserved = graft.ops.Joins.scd2OfRows(
       o.filter(basePred).join(affected, Seq("o_custkey"), "left_anti"))
-    val recomputed = graft.ops.Round6.scd2OfRows(
+    val recomputed = graft.ops.Joins.scd2OfRows(
       o.filter(basePred && !updPred).unionByName(updNew)
         .join(affected, Seq("o_custkey"), "left_semi"))
     val viaDelta = preserved.unionByName(recomputed)
       .orderBy("o_custkey", "valid_from", "o_orderkey").collect().toSeq
-    val full = graft.ops.Round6.scd2OfRows(
+    val full = graft.ops.Joins.scd2OfRows(
         o.filter(basePred).withColumn("o_orderstatus",
           when(col("o_orderkey") % 10 === 3, flip)
             .otherwise(col("o_orderstatus"))))

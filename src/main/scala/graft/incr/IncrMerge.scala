@@ -82,6 +82,19 @@ object IncrMerge {
 
   private val cutoff = "2024-01-20"
 
+  /** q47's full last-write-wins state per user, as DuckDB SQL: the
+    * oracle of the batch upsert row and of the stream-maintained
+    * snapshot (`StreamOps`' q_stream_merge_upsert). */
+  val latestPerUserSql: String =
+    """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
+         value AS last_value
+         FROM (
+           SELECT user_id, event_id, event_type, value,
+             row_number() OVER (PARTITION BY user_id
+                                ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events
+         ) t WHERE rn = 1 ORDER BY user_id"""
+
   val queries: Seq[Query] = Seq(
     /** q46: base = events before the cutoff; delta = the rest as
       * inserts plus a deterministic deletion subset (event_id%7=0 of
@@ -143,15 +156,7 @@ object IncrMerge {
 
     /** q47: kv-level upsert = delete+insert [P §3]: last-write-wins
       * current state per user from the event change log. */
-    Query("q_incr_upsert_latest",
-      """SELECT user_id, event_id AS last_event_id, event_type AS last_type,
-         value AS last_value
-         FROM (
-           SELECT user_id, event_id, event_type, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events
-         ) t WHERE rn = 1 ORDER BY user_id""")((s, d) => {
+    Query("q_incr_upsert_latest", latestPerUserSql)((s, d) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts").desc, col("event_id").desc)
       events(s, d)

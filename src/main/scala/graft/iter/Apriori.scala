@@ -209,11 +209,14 @@ object Apriori {
       Seq(baseState, insCnts), Seq(delCnts))(col("support") >= minSup)
   }
 
-  val queries: Seq[Query] = Seq(
-    Query("q_apriori_pairs",
-      s"""WITH toks AS (
+  /** The brute-force frequent-pair SQL at [[minSupport]] over the
+    * document relation `rel`: q45's oracle, q105's over the same
+    * corpus and q137's over its post-delta corpus — the incremental
+    * paths must be result-invisible. */
+  private def pairsSql(rel: String): String =
+    s"""WITH toks AS (
            SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM $rel
            ) r WHERE length(tok) > 0
          )
          SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
@@ -221,7 +224,10 @@ object Apriori {
            ON a.doc_id = b.doc_id AND a.tok < b.tok
          GROUP BY a.tok, b.tok
          HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b""")((s, d) => {
+         ORDER BY tok_a, tok_b"""
+
+  val queries: Seq[Query] = Seq(
+    Query("q_apriori_pairs", pairsSql("documents"))((s, d) => {
       documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .filter(length(col("tok")) > 0)
@@ -282,20 +288,7 @@ object Apriori {
       * min-support over base+delta via [[frequentItemsetsIncr]]. The
       * oracle is the full-corpus brute-force pair expansion (identical
       * to q45's) — the incremental path must be result-invisible. */
-    Query("q_incr_apriori",
-      /** q105 oracle: the FULL recompute over base+delta (= the whole
-        * corpus) — the incremental path must be result-invisible. */
-      s"""WITH toks AS (
-           SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-           ) r WHERE length(tok) > 0
-         )
-         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
-         FROM toks a JOIN toks b
-           ON a.doc_id = b.doc_id AND a.tok < b.tok
-         GROUP BY a.tok, b.tok
-         HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b""")((s, d) => {
+    Query("q_incr_apriori", pairsSql("documents"))((s, d) => {
       val toks = Memos.frame(s, d, "graphs/aprioriToks")(
         documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -323,7 +316,7 @@ object Apriori {
 
     /** q137: incremental Apriori under a SIGNED delta [P §3] — q105
       * completed with deletions via [[frequentItemsetsDelta]]: base =
-      * doc_id%10<>0, inserts = %10==0, deletions = %10==1 (the Round8
+      * doc_id%10<>0, inserts = %10==0, deletions = %10==1 (the signed
       * delta convention). The preserved base state at the relaxed bar
       * stays sound (deletions only decrease support — see the
       * [[frequentItemsetsDelta]] proof), the deleted docs' pair counts
@@ -331,20 +324,7 @@ object Apriori {
       * Oracle = the brute-force pair expansion over the POST-DELTA
       * corpus: signed maintenance must be result-invisible. */
     Query("q_incr_apriori_delete",
-      /** q137 oracle: the full recompute over the POST-DELTA corpus
-        * (doc_id%10<>1) — the signed path must be result-invisible. */
-      s"""WITH toks AS (
-           SELECT DISTINCT doc_id, tok FROM (
-             SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-             FROM documents WHERE doc_id % 10 <> 1
-           ) r WHERE length(tok) > 0
-         )
-         SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS support
-         FROM toks a JOIN toks b
-           ON a.doc_id = b.doc_id AND a.tok < b.tok
-         GROUP BY a.tok, b.tok
-         HAVING count(*) >= $minSupport
-         ORDER BY tok_a, tok_b""")((s, d) => {
+      pairsSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val toks = Memos.frame(s, d, "graphs/aprioriToks")(
         documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))

@@ -646,8 +646,12 @@ object IterQueries {
         .select("node", valCol), (if (owned) Seq(edges, n) else Seq(n)): _*)
     }
 
-  private def minStageSql(k: Int, valCol: String, delta: Int,
-                          edgeCte: String = "edges"): String = {
+  /** Stage `k` of the unrolled min-label loop oracles: each node's
+    * `valCol` from stage k − 1, lowered to the minimum over its
+    * in-edges in `edgeCte` of the source's value + `delta` (0 for
+    * component labels, 1 for BFS distances). */
+  private[graft] def minStageSql(k: Int, valCol: String, delta: Int,
+                                 edgeCte: String = "edges"): String = {
     val prev = if (k == 1) s"${valCol}0" else s"$valCol${k - 1}"
     s"""$valCol$k AS (
         SELECT p.node,
@@ -709,17 +713,7 @@ object IterQueries {
       * SAME incidence graph (the q108 stage pattern), closed with the
       * label histogram. */
     Query("q_graph_cc_lineitem", {
-      def stage(k: Int): String = {
-        val prev = s"label${k - 1}"
-        s"""label$k AS (
-            SELECT p.node, least(p.label, coalesce(s.mc, 999999999)) AS label
-            FROM $prev p LEFT JOIN (
-              SELECT e.dst AS node, MIN(p2.label) AS mc
-              FROM cc_edges e JOIN $prev p2 ON p2.node = e.src
-              GROUP BY e.dst
-            ) s ON s.node = p.node
-          )"""
-      }
+      val stages = (1 to 5).map(minStageSql(_, "label", 0, "cc_edges"))
       s"""WITH und AS (
            SELECT l_orderkey * 4 AS a, l_partkey * 4 + 1 AS b FROM lineitem
            UNION ALL
@@ -734,7 +728,7 @@ object IterQueries {
            SELECT node, node AS label FROM (
              SELECT a AS node FROM und UNION SELECT b AS node FROM und) t
          ),
-         ${(1 to 5).map(stage).mkString(",\n")}
+         ${stages.mkString(",\n")}
          SELECT label AS comp_id, count(*) AS n_nodes
          FROM label5 GROUP BY label ORDER BY comp_id"""
     })((s, d) => {

@@ -239,7 +239,7 @@ object KMeans {
       * here, a `StateStore` commit of `KMeans.centroidRows` in production); each
       * invocation warm-restarts `KMeans.runIncremental` on the
       * POST-delta corpus (insert % 10 == 0, delete % 10 == 1 — the
-      * Round8 convention) from those centroids and reports the
+      * signed-delta convention) from those centroids and reports the
       * per-cluster assignment summary. Deletion needs no special
       * machinery: centroids are means recomputed from whatever corpus
       * is passed, so the '-' half is just the corpus filter.

@@ -17,7 +17,12 @@ import graft.incr.{Delta, Maintain}
   * exact decimal (order-independent under shuffle), then the final
   * value is CAST to DOUBLE — bit-identical with the DuckDB oracle.
   * Integer sums are CAST(... AS BIGINT) on the DuckDB side because
-  * DuckDB widens to HUGEINT, which pandas would render as float. */
+  * DuckDB widens to HUGEINT, which pandas would render as float.
+  *
+  * The statistics family lives here too — moments, medians,
+  * histograms, sketches (HLL, Count-Min), diversity and column
+  * profiles — each incremental twin beside the batch row it must
+  * equal. */
 object Aggs {
 
   private val decQty  = "CAST(ROUND(l_quantity,2) AS DECIMAL(18,2))"
@@ -163,8 +168,19 @@ object Aggs {
       .orderBy("source")
   }
 
-  private val diversitySelect =
-    """SELECT source, n_docs, c_de, c_en, c_es, c_fr, c_zh,
+  /** q284's oracle over the document relation `rel`; q285 checks
+    * against it over its post-delta corpus. The pivot columns follow
+    * [[Langs]]; a new language extends both. */
+  private def diversitySql(rel: String): String =
+    s"""WITH c AS (
+           SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS c_de,
+             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c_en,
+             CAST(sum(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS c_es,
+             CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS c_fr,
+             CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS c_zh
+           FROM $rel GROUP BY source)
+         SELECT source, n_docs, c_de, c_en, c_es, c_fr, c_zh,
          CAST(n_docs * n_docs
            - (c_de * c_de + c_en * c_en + c_es * c_es + c_fr * c_fr
               + c_zh * c_zh) AS BIGINT) AS div_num,
@@ -178,50 +194,12 @@ object Aggs {
                   + c_zh * c_zh AS DOUBLE) AS effective_langs
        FROM c ORDER BY source"""
 
-  // ================================================================
-  // former Round10 module (merged r13, pure move)
-  // ================================================================
-
-  /** Round-10 extensions (SURVEY.md §2 rows 155–156), both closing
-    * VERDICT r9 gaps:
-    *  - q155 `q_fn_ts_absolute`: an ABSOLUTE-time anchor query over the
-    *    event stream. Every other events-time query is either
-    *    ordering-invariant (funnel, as-of) or fails the oracle with an
-    *    opaque row-count diff when the fixture's timestamp unit skews
-    *    (the r9 regression: 12 red rows, zero direct evidence). This
-    *    row outputs raw timestamp bounds AND counts against a fixed
-    *    wall-clock literal, so a unit-skewed ingest fails HERE with
-    *    visibly-1970 values — the oracle-side complement of
-    *    FixtureContractSpec.
-    *  - q156 `q_source_csv_json`: the CSV/JSON source capability as a
-    *    declared oracle-checked surface instead of unit-test-only. */
-
-  // ================================================================
-  // former Round12i module (merged r13, pure move)
-  // ================================================================
-
-  /** Round-12 batch 13 (SURVEY §2 rows 243-248): equi-depth histogram
-    * statistics (the ANALYZE-style optimizer input, completing the
-    * stats family: equi-width q87, moments q70, profile q185, sketches
-    * q81/q190/q209), GROUPING_ID subtotal disambiguation on rollups
-    * (separating NULL-as-data from NULL-as-subtotal), time-INTERVAL
-    * RANGE window frames, week-over-week top movers, and the Spark-4
-    * VARIANT and collation engines as declared rows.
-    *
-    * Determinism: equi-depth buckets come from SQL-standard ntile over
-    * the provably UNIQUE (cents, orderkey) order — identical in any
-    * engine (the q222 argument); boundaries are actual data values
-    * (min/max per bucket), all BIGINT. grouping_id is engine-identical
-    * by the SQL standard's bit-vector definition.
-    *
-    * The reference tree is absent (SURVEY.md §0);
-    * semantics follow SURVEY §2 rows 243-248.
-    */
-
   /** Per-group equi-depth histogram: k buckets of near-equal row
     * count (sizes differ by ≤1 — ntile's contract), each reporting
     * its row count and ACTUAL value boundaries. One window sort +
-    * one aggregate over a single group-keyed exchange. */
+    * one aggregate over a single group-keyed exchange. Deterministic
+    * in any engine when the order is UNIQUE (the q222 argument):
+    * bucket boundaries are actual data values, all BIGINT. */
   def eqDepthHistogram(df: DataFrame, groupCol: String,
                        centsCol: String, keyCol: String,
                        k: Int): DataFrame = {
@@ -240,6 +218,40 @@ object Aggs {
         col("n_rows"), col("lo_cents"), col("hi_cents"))
       .orderBy(groupCol, "bucket")
   }
+
+  /** q185's column-profile oracle over the lineitem relation `rel`;
+    * q192 checks against it over its post-delta rows. */
+  private def profileSql(rel: String): String =
+    s"""WITH p AS (
+           SELECT 'l_quantity' AS col_name,
+             CAST(count(*) AS BIGINT) AS n_rows,
+             CAST(count(DISTINCT l_quantity) AS BIGINT) AS n_distinct,
+             min(l_quantity) AS min_v, max(l_quantity) AS max_v,
+             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
+           FROM $rel
+           UNION ALL
+           SELECT 'l_extendedprice',
+             CAST(count(*) AS BIGINT),
+             CAST(count(DISTINCT l_extendedprice) AS BIGINT),
+             min(l_extendedprice), max(l_extendedprice),
+             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+           FROM $rel
+           UNION ALL
+           SELECT 'l_discount',
+             CAST(count(*) AS BIGINT),
+             CAST(count(DISTINCT l_discount) AS BIGINT),
+             min(l_discount), max(l_discount),
+             CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
+           FROM $rel
+           UNION ALL
+           SELECT 'l_tax',
+             CAST(count(*) AS BIGINT),
+             CAST(count(DISTINCT l_tax) AS BIGINT),
+             min(l_tax), max(l_tax),
+             CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE)
+           FROM $rel
+         )
+         SELECT * FROM p ORDER BY col_name"""
 
   val queries: Seq[Query] = Seq(
     /** q17: TPC-H Q1 shape — the flagship aggregate. */
@@ -882,8 +894,8 @@ object Aggs {
       * union estimates within 5% of the exact distincts and that the
       * union estimate is served from the stored sketches alone. */
     Query("q_agg_sketch_union")((s, d) => Memos.frame(s, d,
-        "round12/hllSketches") {
-      val path = s"${Memos.scratchDir(s, d, "r12")}/hll_daily"
+        "aggs/hllSketches") {
+      val path = s"${Memos.scratchDir(s, d, "aggs")}/hll_daily"
       events(s, d)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
@@ -1019,15 +1031,7 @@ object Aggs {
       // q284: exact integer rational — the only float ops are single
       // divisions of exact operands (Shannon ln is 1-ulp-unstable
       // cross-engine; see the diversityOver scaladoc).
-      s"""WITH c AS (
-           SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS c_de,
-             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c_en,
-             CAST(sum(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS c_es,
-             CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS c_fr,
-             CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS c_zh
-           FROM documents GROUP BY source)
-         $diversitySelect""")((s, d) =>
+      diversitySql("documents"))((s, d) =>
       diversityOver(documents(s, d)
         .select(col("source"), col("lang"), lit(1L).as("n")))),
 
@@ -1046,15 +1050,7 @@ object Aggs {
     Query("q_incr_diversity",
       // q285: batch recompute over the post-delta corpus (deletes are
       // doc_id%10==1; inserts %10==0 are already part of `documents`).
-      s"""WITH c AS (
-           SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS c_de,
-             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c_en,
-             CAST(sum(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS c_es,
-             CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS c_fr,
-             CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS c_zh
-           FROM documents WHERE doc_id % 10 <> 1 GROUP BY source)
-         $diversitySelect""")((s, d) => {
+      diversitySql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(documents(s, d), "doc_id")
         .map(_.groupBy("source", "lang").agg(count(lit(1)).as("n")))
       val merged = Maintain.signedMerge(Seq("source", "lang"), Seq("n"),
@@ -1111,7 +1107,6 @@ object Aggs {
         .orderBy("o_orderkey", "metric")
     }),
 
-    // former Round12i module rows (see the section scaladoc above)
     /** q243: EQUI-DEPTH HISTOGRAM [T stats surface] — per order
       * priority: 4 buckets of near-equal count over cent-scaled
       * order totals, each with its ACTUAL value boundaries — the
@@ -1222,37 +1217,7 @@ object Aggs {
       * compare bitwise; sums go through exact decimal. The
       * approximate production variant swaps count_distinct for HLL
       * (q23) and folds back to one scan. */
-    Query("q_profile_stats",
-      """WITH p AS (
-           SELECT 'l_quantity' AS col_name,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(DISTINCT l_quantity) AS BIGINT) AS n_distinct,
-             min(l_quantity) AS min_v, max(l_quantity) AS max_v,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-           FROM lineitem
-           UNION ALL
-           SELECT 'l_extendedprice',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_extendedprice) AS BIGINT),
-             min(l_extendedprice), max(l_extendedprice),
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-           FROM lineitem
-           UNION ALL
-           SELECT 'l_discount',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_discount) AS BIGINT),
-             min(l_discount), max(l_discount),
-             CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-           FROM lineitem
-           UNION ALL
-           SELECT 'l_tax',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_tax) AS BIGINT),
-             min(l_tax), max(l_tax),
-             CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE)
-           FROM lineitem
-         )
-         SELECT * FROM p ORDER BY col_name""")((s, d) =>
+    Query("q_profile_stats", profileSql("lineitem"))((s, d) =>
       profileStats(lineitem(s, d),
           Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
         .orderBy("col_name")),
@@ -1276,45 +1241,11 @@ object Aggs {
       * the per-invocation work is then the two delta-sized
       * aggregations plus the NDV-sized merge and fold per column. */
     Query("q_incr_profile",
-      // q192's oracle: the batch per-column profile over the POST-DELTA
-      // fact table — the value-count state maintenance must be
-      // result-invisible.
-      """WITH post AS (
-           SELECT * FROM lineitem WHERE l_orderkey % 10 <> 1
-         ), p AS (
-           SELECT 'l_quantity' AS col_name,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(DISTINCT l_quantity) AS BIGINT) AS n_distinct,
-             min(l_quantity) AS min_v, max(l_quantity) AS max_v,
-             CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-           FROM post
-           UNION ALL
-           SELECT 'l_extendedprice',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_extendedprice) AS BIGINT),
-             min(l_extendedprice), max(l_extendedprice),
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-           FROM post
-           UNION ALL
-           SELECT 'l_discount',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_discount) AS BIGINT),
-             min(l_discount), max(l_discount),
-             CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-           FROM post
-           UNION ALL
-           SELECT 'l_tax',
-             CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT l_tax) AS BIGINT),
-             min(l_tax), max(l_tax),
-             CAST(sum(CAST(l_tax AS DECIMAL(18,2))) AS DOUBLE)
-           FROM post
-         )
-         SELECT * FROM p ORDER BY col_name""")((s, d) => {
+      profileSql("(SELECT * FROM lineitem WHERE l_orderkey % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(lineitem(s, d), "l_orderkey")
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
         .map { c =>
-          val baseCounts = Memos.frame(s, d, s"round12/profileBase:$c")(
+          val baseCounts = Memos.frame(s, d, s"aggs/profileBase:$c")(
             valueCounts(delta.base, c).persist())
           profileOfState(valueCountStateFrom(baseCounts, delta.inserts,
             delta.deletes, c), c)

@@ -723,6 +723,44 @@ object Analytics {
                num * 1000 > den * 3841 AS significant
         FROM g ORDER BY event_type"""
 
+  /** The q226 oracle body over a caller-chosen fact relation —
+    * reused verbatim by q229 with the post-delta corpus. */
+  private def dauWauSql(rel: String): String =
+    s"""WITH days AS (
+           SELECT DISTINCT CAST(ts AS DATE) AS day FROM $rel
+         )
+         SELECT d.day,
+                CAST((SELECT count(DISTINCT e.user_id) FROM $rel e
+                      WHERE CAST(e.ts AS DATE) = d.day) AS BIGINT)
+                  AS dau,
+                CAST((SELECT count(DISTINCT e.user_id) FROM $rel e
+                      WHERE CAST(e.ts AS DATE)
+                        BETWEEN d.day - 6 AND d.day) AS BIGINT)
+                  AS wau
+         FROM days d ORDER BY d.day"""
+
+  /** The q225 oracle body over a caller-chosen fact relation —
+    * reused verbatim by q228 with the post-delta corpus. */
+  private def anomalySigmaSql(rel: String): String =
+    s"""WITH daily AS (
+           SELECT user_id, CAST(ts AS DATE) AS day,
+                  CAST(count(*) AS BIGINT) AS x
+           FROM $rel GROUP BY 1, 2
+         ), stats AS (
+           SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+                  CAST(sum(x) AS BIGINT) AS s,
+                  CAST(sum(x * x) AS BIGINT) AS q
+           FROM daily GROUP BY user_id
+         )
+         SELECT d.user_id, t.n AS n_days,
+                CAST(sum(CASE WHEN (t.n * d.x - t.s) * (t.n * d.x - t.s)
+                       > 9 * (t.n * t.q - t.s * t.s)
+                     THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous,
+                CAST(max(d.x) AS BIGINT) AS max_day_count
+         FROM daily d JOIN stats t ON t.user_id = d.user_id
+         GROUP BY d.user_id, t.n
+         ORDER BY d.user_id"""
+
   val queries: Seq[Query] = Seq(
     // Round12c rows (see the section scaladoc above)
     /** q219: EXACT DISTINCT VIA BLOCK BITMAPS [N scale path] — per
@@ -889,25 +927,7 @@ object Analytics {
       * q230 overflow discipline), matching DuckDB's HUGEINT sums.
       * Two aggregates over one user-keyed exchange;
       * |users|·|days|-bounded intermediate. */
-    Query("q_events_anomaly_sigma",
-      """WITH daily AS (
-           SELECT user_id, CAST(ts AS DATE) AS day,
-                  CAST(count(*) AS BIGINT) AS x
-           FROM events GROUP BY 1, 2
-         ), stats AS (
-           SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-                  CAST(sum(x) AS BIGINT) AS s,
-                  CAST(sum(x * x) AS BIGINT) AS q
-           FROM daily GROUP BY user_id
-         )
-         SELECT d.user_id, t.n AS n_days,
-                CAST(sum(CASE WHEN (t.n * d.x - t.s) * (t.n * d.x - t.s)
-                       > 9 * (t.n * t.q - t.s * t.s)
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous,
-                CAST(max(d.x) AS BIGINT) AS max_day_count
-         FROM daily d JOIN stats t ON t.user_id = d.user_id
-         GROUP BY d.user_id, t.n
-         ORDER BY d.user_id""")((s, d) =>
+    Query("q_events_anomaly_sigma", anomalySigmaSql("events"))((s, d) =>
       anomalySigma(events(s, d)).orderBy("user_id")),
 
     // Round12d rows (see the section scaladoc above)
@@ -918,19 +938,7 @@ object Analytics {
       * distinct that COUNT(DISTINCT) OVER cannot express and no
       * sketch answers exactly; here it is one fact exchange + a
       * dimension-sized window. */
-    Query("q_events_dau_wau",
-      """WITH days AS (
-           SELECT DISTINCT CAST(ts AS DATE) AS day FROM events
-         )
-         SELECT d.day,
-                CAST((SELECT count(DISTINCT e.user_id) FROM events e
-                      WHERE CAST(e.ts AS DATE) = d.day) AS BIGINT)
-                  AS dau,
-                CAST((SELECT count(DISTINCT e.user_id) FROM events e
-                      WHERE CAST(e.ts AS DATE)
-                        BETWEEN d.day - 6 AND d.day) AS BIGINT)
-                  AS wau
-         FROM days d ORDER BY d.day""")((s, d) =>
+    Query("q_events_dau_wau", dauWauSql("events"))((s, d) =>
       dauWau(dailyBitmaps(events(s, d)))),
 
     /** q227: MULTI-TOUCH ATTRIBUTION [T analytics surface] — per
@@ -949,23 +957,7 @@ object Analytics {
       * users pass through unread. Oracle = batch q225 over
       * post-delta ⇒ hash proves maintenance ≡ recompute. */
     Query("q_incr_anomaly_sigma",
-      """WITH daily AS (
-           SELECT user_id, CAST(ts AS DATE) AS day, count(*) AS x
-           FROM events WHERE event_id % 10 <> 1 GROUP BY 1, 2
-         ), stats AS (
-           SELECT user_id, count(*) AS n, sum(x) AS s,
-                  sum(x * x) AS q
-           FROM daily GROUP BY 1
-         )
-         SELECT d.user_id, CAST(st.n AS BIGINT) AS n_days,
-                CAST(sum(CASE WHEN (st.n * d.x - st.s)
-                    * (st.n * d.x - st.s)
-                    > (st.n * st.q - st.s * st.s) * 9
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalous,
-                CAST(max(d.x) AS BIGINT) AS max_day_count
-         FROM daily d JOIN stats st ON st.user_id = d.user_id
-         GROUP BY d.user_id, st.n
-         ORDER BY d.user_id""")((s, d) => {
+      anomalySigmaSql("(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(events(s, d), "event_id")
       Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
           delta.touchedKeys("user_id"))(anomalySigma)
@@ -984,20 +976,7 @@ object Analytics {
       * maintained dimension-sized words. Oracle = batch q226 over
       * post-delta ⇒ hash proves maintenance ≡ recompute. */
     Query("q_incr_dau_wau",
-      """WITH post AS (
-           SELECT * FROM events WHERE event_id % 10 <> 1
-         ), days AS (
-           SELECT DISTINCT CAST(ts AS DATE) AS day FROM post
-         )
-         SELECT d.day,
-                CAST((SELECT count(DISTINCT e.user_id) FROM post e
-                      WHERE CAST(e.ts AS DATE) = d.day) AS BIGINT)
-                  AS dau,
-                CAST((SELECT count(DISTINCT e.user_id) FROM post e
-                      WHERE CAST(e.ts AS DATE)
-                        BETWEEN d.day - 6 AND d.day) AS BIGINT)
-                  AS wau
-         FROM days d ORDER BY d.day""")((s, d) => {
+      dauWauSql("(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(events(s, d), "event_id").map(
         _.withColumn("dnum", datediff(to_date(col("ts")), lit("1970-01-01")))
           .withColumn("blk", expr("(user_id - pmod(user_id, 32)) div 32")))

@@ -7,11 +7,13 @@ import graft.incr.{Delta, Maintain}
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import graft.text.Dedup
 
-/** Corpus-curation operators (SURVEY.md §2 rows 149b–152): the three
-  * remaining first-class steps a training-data pipeline runs between
-  * ingest and packing that the engine did not yet declare —
-  * blocklist term scrubbing, target-mixture source sampling, and
-  * prefix-fingerprint duplicate detection. All three are
+/** Corpus-curation operators: the steps a training-data pipeline runs
+  * between ingest and packing — the cleaning pipeline, quality
+  * constraints and Gopher rules, eval-set decontamination, repetition
+  * scoring, sequence packing, blocklist term scrubbing,
+  * target-mixture source sampling and prefix-fingerprint duplicate
+  * detection, each incremental twin beside the batch row it must
+  * equal. Scrub, mixing and prefix dedup are
   * shuffle-minimal by construction (scrub is pure map; mixing is a
   * map-side filter plus a source-cardinality aggregate; prefix dedup
   * is one partial-aggregated shuffle on a 16-byte key), so each
@@ -55,8 +57,8 @@ object Curation {
   }
 
   /** Distinct (idCol, trigram-md5) rows — the q148/q276 fingerprint
-    * relation (hoisted r14 so the batch row and its signed
-    * maintenance share one tokenizer by construction). */
+    * relation, one function so the batch row and its signed
+    * maintenance share one tokenizer by construction. */
   private def contamGrams(docs: DataFrame, idCol: String): DataFrame =
     docs
       .withColumn("toks", split(col("text"), " "))
@@ -71,9 +73,9 @@ object Curation {
 
   /** The held-out eval set's gram relation — a FIXED tiny artifact
     * (doc_id % 97 == 0, ~1% of the corpus) that production stores
-    * next to the contamination index, so it is session-memoized
-    * (r18 task 1a: rebuilding it cost q148/q276 a full documents
-    * scan per invocation for a KB-sized relation). */
+    * next to the contamination index, so it is session-memoized:
+    * rebuilding it would cost q148/q276 a full documents scan per
+    * invocation for a KB-sized relation. */
   private def cachedEvalGrams(s: SparkSession, d: String): DataFrame =
     Memos.frame(s, d, "lsh/contamEval")(
       contamGrams(documents(s, d).filter(col("doc_id") % 97 === 0),
@@ -81,11 +83,11 @@ object Curation {
 
   /** q149's STORED base relation: the cleaned/scored/normed base
     * corpus — doc-local, deterministic per fixture, persisted with
-    * the canon state in production (r18; the bandedIns precedent).
+    * the canon state in production (the bandedIns precedent).
     * Exposed for the spec's memo ≡ fresh-build equality pin. */
   private[graft] def cachedCleanNormedBase(s: SparkSession,
                                            d: String): DataFrame =
-    Memos.frame(s, d, "lsh/cleanNormedBase")(Curation.cleanNormed(
+    Memos.frame(s, d, "lsh/cleanNormedBase")(cleanNormed(
       Delta.tenWay(documents(s, d), "doc_id").base).localCheckpoint())
 
   /** The q148 overlap join: train grams probe the BROADCAST eval gram
@@ -122,6 +124,63 @@ object Curation {
         col(s"v_$n").as("n_violations"))
     }.reduce(_ unionByName _)
   }
+
+  /** q117's cleaning-pipeline oracle over the document relation
+    * `rel`; q149 checks against it over its post-delta corpus. */
+  private def cleanSql(rel: String): String =
+    s"""WITH t AS (
+           SELECT doc_id, text,
+             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('the','a'))) AS BIGINT) AS n_stop,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('join','filter','agg'))) AS BIGINT) AS s1,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('window','batch','stream'))) AS BIGINT) AS s2,
+             CAST(len(list_filter(string_split(text, ' '),
+               x -> x IN ('hash','sort','merge'))) AS BIGINT) AS s3
+           FROM $rel
+         ), kept AS (
+           SELECT doc_id, text, n_tokens,
+             CASE WHEN s1 >= s2 AND s1 >= s3 THEN 'L1'
+                  WHEN s2 >= s3 THEN 'L2' ELSE 'L3' END AS pred
+           FROM t
+           WHERE n_tokens BETWEEN 20 AND 90
+             AND CAST(n_stop AS DOUBLE) / n_tokens < 0.2
+         ), normed AS (
+           SELECT doc_id, pred, n_tokens,
+             md5(regexp_replace(lower(text), ' +', ' ', 'g')) AS h
+           FROM kept
+         ), canon AS (
+           SELECT h, min(doc_id) AS keep_id,
+             CAST(count(*) AS BIGINT) AS n_dups
+           FROM normed GROUP BY h
+         )
+         SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
+         FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
+         ORDER BY n.doc_id"""
+
+  /** q148's contamination oracle with the training side restricted by
+    * `train` (a predicate over doc_id; the eval set is fixed); q276
+    * checks against it with the deleted training docs left out. */
+  private def contaminationSql(train: String): String =
+    s"""WITH g AS (
+           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
+                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
+                             toks[i + 2]))) AS g
+           FROM (SELECT doc_id, string_split(text, ' ') AS toks
+                 FROM documents) t
+         ), dg AS (
+           SELECT DISTINCT doc_id, g FROM g
+         ), tr AS (
+           SELECT doc_id AS train_id, g FROM dg WHERE $train
+         ), ev AS (
+           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
+         )
+         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
+         FROM tr JOIN ev USING (g)
+         GROUP BY train_id, eval_id HAVING count(*) >= 3
+         ORDER BY train_id, eval_id"""
 
   val queries: Seq[Query] = Seq(
     /** q150: BLOCKLIST TERM SCRUBBING — the termlist-redaction pass
@@ -240,38 +299,7 @@ object Curation {
       * filters, ONE shuffle (the fingerprint groupBy) — embarrassingly
       * parallel at any scale, and the compositional proof that the
       * pieces interoperate under the hard oracle, not just alone. */
-    Query("q_pipeline_clean",
-      """WITH t AS (
-           SELECT doc_id, text,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('the','a'))) AS BIGINT) AS n_stop,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('join','filter','agg'))) AS BIGINT) AS s1,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('window','batch','stream'))) AS BIGINT) AS s2,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('hash','sort','merge'))) AS BIGINT) AS s3
-           FROM documents
-         ), kept AS (
-           SELECT doc_id, text, n_tokens,
-             CASE WHEN s1 >= s2 AND s1 >= s3 THEN 'L1'
-                  WHEN s2 >= s3 THEN 'L2' ELSE 'L3' END AS pred
-           FROM t
-           WHERE n_tokens BETWEEN 20 AND 90
-             AND CAST(n_stop AS DOUBLE) / n_tokens < 0.2
-         ), normed AS (
-           SELECT doc_id, pred, n_tokens,
-             md5(regexp_replace(lower(text), ' +', ' ', 'g')) AS h
-           FROM kept
-         ), canon AS (
-           SELECT h, min(doc_id) AS keep_id,
-             CAST(count(*) AS BIGINT) AS n_dups
-           FROM normed GROUP BY h
-         )
-         SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
-         FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
-         ORDER BY n.doc_id""")((s, d) => {
+    Query("q_pipeline_clean", cleanSql("documents"))((s, d) => {
       val normed = cleanNormed(documents(s, d))
       val canon = normed.groupBy("h")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
@@ -297,42 +325,9 @@ object Curation {
       * over the post-delta corpus: the composition must be
       * result-invisible. */
     Query("q_incr_pipeline_clean_delete",
-      // q149's oracle is q117's full pipeline SQL over the POST-DELTA
-      // corpus: the composed signed maintenance (doc-local passthrough
-      // + dedupApplyDelta canon state) must be result-invisible.
-      """WITH t AS (
-           SELECT doc_id, text,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('the','a'))) AS BIGINT) AS n_stop,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('join','filter','agg'))) AS BIGINT) AS s1,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('window','batch','stream'))) AS BIGINT) AS s2,
-             CAST(len(list_filter(string_split(text, ' '),
-               x -> x IN ('hash','sort','merge'))) AS BIGINT) AS s3
-           FROM documents WHERE doc_id % 10 <> 1
-         ), kept AS (
-           SELECT doc_id, text, n_tokens,
-             CASE WHEN s1 >= s2 AND s1 >= s3 THEN 'L1'
-                  WHEN s2 >= s3 THEN 'L2' ELSE 'L3' END AS pred
-           FROM t
-           WHERE n_tokens BETWEEN 20 AND 90
-             AND CAST(n_stop AS DOUBLE) / n_tokens < 0.2
-         ), normed AS (
-           SELECT doc_id, pred, n_tokens,
-             md5(regexp_replace(lower(text), ' +', ' ', 'g')) AS h
-           FROM kept
-         ), canon AS (
-           SELECT h, min(doc_id) AS keep_id,
-             CAST(count(*) AS BIGINT) AS n_dups
-           FROM normed GROUP BY h
-         )
-         SELECT n.doc_id, n.pred, n.n_tokens, n.h, c.n_dups
-         FROM normed n JOIN canon c ON n.h = c.h AND n.doc_id = c.keep_id
-         ORDER BY n.doc_id""")((s, d) => {
+      cleanSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(documents(s, d), "doc_id")
-      // Stored doc-local state, session-memoized (r18, the bandedIns
+      // Stored doc-local state, session-memoized (the bandedIns
       // precedent): the cleaned/scored/normed relations are
       // deterministic doc-local functions of the fixture — production
       // persists the base half with the canon state and the insert
@@ -341,7 +336,7 @@ object Curation {
       // canon application, passthrough anti-join, final join).
       val normedBase = cachedCleanNormedBase(s, d)
       val normedIns = Memos.frame(s, d, "lsh/cleanNormedIns")(
-        Curation.cleanNormed(delta.inserts).localCheckpoint())
+        cleanNormed(delta.inserts).localCheckpoint())
       val deleted = delta.deletes.select("doc_id")
       val baseIndex = normedBase.select(col("h"), col("doc_id"))
       val baseState = baseIndex.groupBy("h")
@@ -579,23 +574,7 @@ object Curation {
     Query("q_text_contamination",
       // q148: md5 trigram fingerprints agree across engines (the q64
       // contract); DISTINCT per side, integer overlap counts.
-      """WITH g AS (
-           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
-                             toks[i + 2]))) AS g
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents) t
-         ), dg AS (
-           SELECT DISTINCT doc_id, g FROM g
-         ), tr AS (
-           SELECT doc_id AS train_id, g FROM dg WHERE doc_id % 97 <> 0
-         ), ev AS (
-           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
-         )
-         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
-         FROM tr JOIN ev USING (g)
-         GROUP BY train_id, eval_id HAVING count(*) >= 3
-         ORDER BY train_id, eval_id""")((s, d) => {
+      contaminationSql("doc_id % 97 <> 0"))((s, d) => {
       val doc = documents(s, d)
       val train = contamGrams(doc.filter(col("doc_id") % 97 =!= 0),
         "train_id")
@@ -618,28 +597,7 @@ object Curation {
       * q148's full recompute over the post-delta corpus: maintenance
       * must be result-invisible. */
     Query("q_incr_contamination",
-      /** q276 oracle: q148's full recompute over the POST-delta
-        * training corpus (%10 <> 1 — deletes gone, inserts present);
-        * the eval side stays the fixed %97 artifact. Maintenance must
-        * be result-invisible. */
-      """WITH g AS (
-           SELECT doc_id, unnest(list_transform(range(1, len(toks) - 1),
-                    i -> md5(toks[i] || ' ' || toks[i + 1] || ' ' ||
-                             toks[i + 2]))) AS g
-           FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                 FROM documents) t
-         ), dg AS (
-           SELECT DISTINCT doc_id, g FROM g
-         ), tr AS (
-           SELECT doc_id AS train_id, g FROM dg
-           WHERE doc_id % 97 <> 0 AND doc_id % 10 <> 1
-         ), ev AS (
-           SELECT doc_id AS eval_id, g FROM dg WHERE doc_id % 97 = 0
-         )
-         SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS shared_grams
-         FROM tr JOIN ev USING (g)
-         GROUP BY train_id, eval_id HAVING count(*) >= 3
-         ORDER BY train_id, eval_id""")((s, d) => {
+      contaminationSql("doc_id % 97 <> 0 AND doc_id % 10 <> 1"))((s, d) => {
       // the training side of the eval split is the changing table
       val delta = Delta.tenWay(
         documents(s, d).filter(col("doc_id") % 97 =!= 0), "doc_id")

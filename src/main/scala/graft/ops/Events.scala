@@ -20,25 +20,30 @@ object Events {
 
   /** 30-minute session gap, in microseconds (events.ts is µs-aligned —
     * see Tables.events). Integer throughout: µs-since-epoch exceeds
-    * double's mantissa, so all gap arithmetic stays in BIGINT. */
-  private val GapUs = 1800L * 1000000L
+    * double's mantissa, so all gap arithmetic stays in BIGINT. Every
+    * sessionizing plan and oracle reads it from here. */
+  private[ops] val GapUs = 1800L * 1000000L
+
+  /** The gaps-and-islands step over any (user_id, event_id, ts, us)
+    * frame: `idxCol` numbers each user's sessions in (ts, event_id)
+    * order, a new session starting after a gap > [[GapUs]]. A running
+    * sum over the same sort as the lag, so one shuffle+sort pass. */
+  private[ops] def withSessionIdx(e: DataFrame, idxCol: String): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    e.withColumn("prev_us", lag(col("us"), 1).over(w))
+      .withColumn("new_s",
+        when(col("prev_us").isNull || col("us") - col("prev_us") > GapUs,
+          1L).otherwise(0L))
+      .withColumn(idxCol, sum(col("new_s")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
 
   /** The q111 session computation over any (user_id, event_id, ts, us)
     * frame — factored out so q116 can run it on the preserved and
     * recomputed partitions of the corpus separately ([[graft]]-visible
     * for the gap-boundary edge-case spec). */
-  private[graft] def sessionsOf(e: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val sess = e
-      .withColumn("prev_us", lag("us", 1).over(w))
-      .withColumn("new_s",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > GapUs,
-          1L).otherwise(0L))
-      .withColumn("session_idx",
-        sum("new_s").over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    sess.groupBy("user_id", "session_idx")
+  private[graft] def sessionsOf(e: DataFrame): DataFrame =
+    withSessionIdx(e, "session_idx").groupBy("user_id", "session_idx")
       .agg(count(lit(1)).as("n_events"),
         min(col("ts")).as("session_start"),
         // integer div (not `/`): µs differences must never transit
@@ -47,7 +52,6 @@ object Events {
           .cast("bigint").as("duration_sec"))
       .select(col("user_id"), col("session_idx").cast("bigint").as("session_idx"),
         col("n_events"), col("session_start"), col("duration_sec"))
-  }
 
   /** GENERIC transition matrix (the q163 shape on caller columns):
     * per-`userCol` timeline ordered by (`tsCol`, `tieCol`), the
@@ -97,6 +101,91 @@ object Events {
     }.reduce(_ && _)
     ev.withColumn("__match", pred).filter(col("__match")).drop("__match")
   }
+
+  /** The cut of the event-log twins' [[Delta.cut]]: events before it
+    * are the base, events from it on the inserts. */
+  private val Cut = "2024-01-20"
+
+  /** That signed delta as a SQL relation: base events with
+    * event_id % 10 == 1 retracted, events from the cut on inserted. The
+    * post-delta log the cut-delta twins' oracles recompute their batch
+    * row over. */
+  private val PostCutSql = "(SELECT * FROM events WHERE NOT " +
+    s"(ts < TIMESTAMP '$Cut' AND event_id % 10 = 1))"
+
+  /** q111's oracle over the event relation `rel`; q116 and q140 check
+    * against the same SQL over their post-delta logs. */
+  private def sessionizeSql(rel: String): String =
+    s"""WITH e AS (
+           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
+             lag(epoch_us(ts)) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
+           FROM $rel
+         ), flagged AS (
+           SELECT user_id, event_id, ts, us,
+             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
+                  THEN 1 ELSE 0 END AS new_s
+           FROM e
+         ), sess AS (
+           SELECT user_id, event_id, ts, us,
+             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
+           FROM flagged
+         )
+         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
+           CAST(count(*) AS BIGINT) AS n_events,
+           min(ts) AS session_start,
+           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
+         FROM sess GROUP BY user_id, session_idx
+         ORDER BY user_id, session_idx"""
+
+  /** q163's oracle over the event relation `rel`. */
+  private def pathingSql(rel: String): String =
+    s"""WITH nxt AS (
+           SELECT user_id, event_type,
+             lead(event_type) OVER
+               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
+           FROM $rel
+         )
+         SELECT event_type, next_type,
+           CAST(count(*) AS BIGINT) AS n_transitions,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+         FROM nxt WHERE next_type IS NOT NULL
+         GROUP BY event_type, next_type
+         ORDER BY event_type, next_type"""
+
+  /** q172's oracle over the event relation `rel`. */
+  private def streaksSql(rel: String): String =
+    s"""WITH d AS (
+           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM $rel
+         ), g AS (
+           SELECT user_id,
+             CAST(day - DATE '2024-01-01' AS BIGINT)
+               - CAST(row_number() OVER
+                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
+           FROM d
+         ), i AS (
+           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
+         )
+         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
+           CAST(count(*) AS BIGINT) AS n_streaks,
+           CAST(max(len) AS BIGINT) AS longest_streak
+         FROM i GROUP BY user_id ORDER BY user_id"""
+
+  /** q211's oracle over the event relation `rel`. */
+  private def patternSql(rel: String): String =
+    s"""WITH seq AS (
+           SELECT user_id, event_type, ts,
+                  lead(event_type, 1) OVER w AS e1,
+                  lead(event_type, 2) OVER w AS e2
+           FROM $rel
+           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+         )
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n_matches,
+                CAST(min(epoch_us(ts)) AS BIGINT) AS first_match_us
+         FROM seq
+         WHERE event_type = 'view' AND e1 = 'click' AND e2 = 'purchase'
+         GROUP BY user_id ORDER BY user_id"""
 
   val queries: Seq[Query] = Seq(
 
@@ -215,29 +304,7 @@ object Events {
       * user-keyed sort; the session aggregate rides map-side partials.
       * Ties on ts are broken by the unique event_id, so the running
       * sum (and therefore every session boundary) is deterministic. */
-    Query("q_events_sessionize",
-      s"""WITH e AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events
-         ), flagged AS (
-           SELECT user_id, event_id, ts, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
-                  THEN 1 ELSE 0 END AS new_s
-           FROM e
-         ), sess AS (
-           SELECT user_id, event_id, ts, us,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged
-         )
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS session_start,
-           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
-         FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""")((s, d) => {
+    Query("q_events_sessionize", sessionizeSql("events"))((s, d) => {
       sessionsOf(events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us")))
@@ -254,32 +321,8 @@ object Events {
       * exactly the delta's user set and the re-sort is delta-user-
       * sized, never corpus-sized. Oracle = q111's FULL sessionize SQL:
       * incremental maintenance must be result-invisible. */
-    Query("q_incr_sessionize",
-      // q116's oracle IS q111's: incremental maintenance must reproduce
-      // the full recomputation bit-for-bit.
-      s"""WITH e AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM events
-         ), flagged AS (
-           SELECT user_id, event_id, ts, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > $GapUs
-                  THEN 1 ELSE 0 END AS new_s
-           FROM e
-         ), sess AS (
-           SELECT user_id, event_id, ts, us,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged
-         )
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS session_start,
-           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
-         FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""")((s, d) => {
-      val cut = lit("2024-01-20").cast("timestamp")
+    Query("q_incr_sessionize", sessionizeSql("events"))((s, d) => {
+      val cut = lit(Cut).cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
@@ -304,37 +347,8 @@ object Events {
       * consistent with the gap semantics. Oracle = q111's full
       * sessionize SQL over the post-delta event log: signed
       * maintenance must be result-invisible. */
-    Query("q_incr_sessionize_delete",
-      // q140's oracle is q111's full sessionize SQL over the POST-DELTA
-      // event log (base events with event_id % 10 == 1 retracted,
-      // cut-onward events inserted): the signed group-level recompute
-      // must be result-invisible. 1800000000 = the 30-min gap in µs.
-      """WITH post AS (
-           SELECT user_id, event_id, ts FROM events
-           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
-         ), e AS (
-           SELECT user_id, event_id, ts, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-           FROM post
-         ), flagged AS (
-           SELECT user_id, event_id, ts, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                  THEN 1 ELSE 0 END AS new_s
-           FROM e
-         ), sess AS (
-           SELECT user_id, event_id, ts, us,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-           FROM flagged
-         )
-         SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-           CAST(count(*) AS BIGINT) AS n_events,
-           min(ts) AS session_start,
-           CAST((max(us) - min(us)) // 1000000 AS BIGINT) AS duration_sec
-         FROM sess GROUP BY user_id, session_idx
-         ORDER BY user_id, session_idx""")((s, d) => {
-      val cut = lit("2024-01-20").cast("timestamp")
+    Query("q_incr_sessionize_delete", sessionizeSql(PostCutSql))((s, d) => {
+      val cut = lit(Cut).cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           unix_micros(col("ts")).as("us"))
@@ -342,7 +356,7 @@ object Events {
       // the event log's only exchanges are the two sessionize sorts
       // (PlanSpec-asserted): the affected set broadcasts
       Maintain.groupRecompute(delta.base, delta.post, Seq("user_id"),
-          delta.touchedKeys("user_id"))(Events.sessionsOf)
+          delta.touchedKeys("user_id"))(sessionsOf)
         .orderBy("user_id", "session_idx")
     }),
 
@@ -355,19 +369,7 @@ object Events {
       * |types|²-bounded aggregate. The product analytics primitive
       * behind funnels (q88) generalized to ALL pairs. Integer
       * counts end to end. */
-    Query("q_events_pathing",
-      """WITH nxt AS (
-           SELECT user_id, event_type,
-             lead(event_type) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-           FROM events
-         )
-         SELECT event_type, next_type,
-           CAST(count(*) AS BIGINT) AS n_transitions,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM nxt WHERE next_type IS NOT NULL
-         GROUP BY event_type, next_type
-         ORDER BY event_type, next_type""")((s, d) => {
+    Query("q_events_pathing", pathingSql("events"))((s, d) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
@@ -399,24 +401,10 @@ object Events {
       * leave the stored aggregate. Oracle = the full lead-window
       * recompute over the post-delta log: signed maintenance must be
       * result-invisible. */
-    Query("q_incr_pathing",
-      // q169's oracle is q163's transition matrix over the POST-DELTA
-      // event log: signed maintenance must be result-invisible.
-      """WITH post AS (
-           SELECT user_id, event_id, ts, event_type FROM events
-           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
-         ), nxt AS (
-           SELECT event_type,
-             lead(event_type) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-           FROM post
-         )
-         SELECT event_type, next_type,
-           CAST(count(*) AS BIGINT) AS n_transitions
-         FROM nxt WHERE next_type IS NOT NULL
-         GROUP BY event_type, next_type
+    Query("q_incr_pathing", s"""SELECT event_type, next_type, n_transitions
+         FROM (${pathingSql(PostCutSql)})
          ORDER BY event_type, next_type""")((s, d) => {
-      val cut = lit("2024-01-20").cast("timestamp")
+      val cut = lit(Cut).cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"))
@@ -427,7 +415,7 @@ object Events {
       // the STORED matrix — session-memoized like the rest of the
       // stored-state family (production reads it from the partials
       // store; it is immutable for a given base corpus)
-      val stored = Memos.frame(s, d, "round11b/transBase") {
+      val stored = Memos.frame(s, d, "events/transBase") {
         val t = transitionsOf(delta.base).persist(); t.count(); t
       }
       Maintain.signedMerge(Seq("event_type", "next_type"), Seq("n_transitions"),
@@ -483,22 +471,7 @@ object Events {
       * sorts locally; nothing is globally ordered at 100 TB. Integer
       * day arithmetic (datediff from a fixed epoch), UTC dates both
       * sides (session pinned / DuckDB naive). */
-    Query("q_events_streaks",
-      """WITH d AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-         ), g AS (
-           SELECT user_id,
-             CAST(day - DATE '2024-01-01' AS BIGINT)
-               - CAST(row_number() OVER
-                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
-           FROM d
-         ), i AS (
-           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
-         )
-         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(max(len) AS BIGINT) AS longest_streak
-         FROM i GROUP BY user_id ORDER BY user_id""")((s, d) =>
+    Query("q_events_streaks", streaksSql("events"))((s, d) =>
       activityStreaks(events(s, d), "user_id", "ts").orderBy("user_id")),
 
     /** q176: SIGNED INCREMENTAL STREAKS [P §3] — q172 maintained
@@ -512,28 +485,8 @@ object Events {
       * consistent with island semantics. Oracle = q172's islands SQL
       * over the post-delta log: maintenance must be
       * result-invisible. */
-    Query("q_incr_streaks",
-      // q176's oracle is q172's islands SQL over the POST-DELTA event
-      // log: signed maintenance must be result-invisible.
-      """WITH post AS (
-           SELECT user_id, event_id, ts FROM events
-           WHERE NOT (ts < TIMESTAMP '2024-01-20' AND event_id % 10 = 1)
-         ), d AS (
-           SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM post
-         ), g AS (
-           SELECT user_id,
-             CAST(day - DATE '2024-01-01' AS BIGINT)
-               - CAST(row_number() OVER
-                   (PARTITION BY user_id ORDER BY day) AS BIGINT) AS grp
-           FROM d
-         ), i AS (
-           SELECT user_id, grp, count(*) AS len FROM g GROUP BY user_id, grp
-         )
-         SELECT user_id, CAST(sum(len) AS BIGINT) AS n_active_days,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(max(len) AS BIGINT) AS longest_streak
-         FROM i GROUP BY user_id ORDER BY user_id""")((s, d) => {
-      val cut = lit("2024-01-20").cast("timestamp")
+    Query("q_incr_streaks", streaksSql(PostCutSql))((s, d) => {
+      val cut = lit(Cut).cast("timestamp")
       val ev = events(s, d)
         .select(col("user_id"), col("event_id"), col("ts"))
       val delta = Delta.cut(ev, col("ts") < cut, "event_id")
@@ -550,19 +503,7 @@ object Events {
       * timeline via two leads over ONE user-keyed window exchange.
       * Per matching user: match count + the µs instant of the first
       * match's anchor (exact integers). */
-    Query("q_events_pattern",
-      """WITH seq AS (
-           SELECT user_id, event_type, ts,
-                  lead(event_type, 1) OVER w AS e1,
-                  lead(event_type, 2) OVER w AS e2
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         )
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_matches,
-                CAST(min(epoch_us(ts)) AS BIGINT) AS first_match_us
-         FROM seq
-         WHERE event_type = 'view' AND e1 = 'click' AND e2 = 'purchase'
-         GROUP BY user_id ORDER BY user_id""")((s, d) =>
+    Query("q_events_pattern", patternSql("events"))((s, d) =>
       patternMatches(events(s, d), "user_id", "ts", "event_id",
           "event_type", Seq("view", "click", "purchase"))
         .groupBy("user_id")
@@ -579,18 +520,7 @@ object Events {
       * re-derives from post-delta timelines. Oracle = batch q211
       * over the post-delta corpus. */
     Query("q_incr_pattern",
-      """WITH seq AS (
-           SELECT user_id, event_type, ts,
-                  lead(event_type, 1) OVER w AS e1,
-                  lead(event_type, 2) OVER w AS e2
-           FROM events WHERE event_id % 10 <> 1
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         )
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_matches,
-                CAST(min(epoch_us(ts)) AS BIGINT) AS first_match_us
-         FROM seq
-         WHERE event_type = 'view' AND e1 = 'click' AND e2 = 'purchase'
-         GROUP BY user_id ORDER BY user_id""")((s, d) => {
+      patternSql("(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(events(s, d), "event_id")
       def derive(e: DataFrame) =
         patternMatches(e, "user_id", "ts", "event_id", "event_type",

@@ -158,8 +158,8 @@ object GraphStats {
     * symmetric graph (which canonicalizes endpoints and so cannot
     * serve the bipartite shape). Persisted: the self-join reads it
     * twice per execution. */
-  private[ops] def bipartiteEdges(s: SparkSession, d: String): DataFrame =
-    Memos.frame(s, d, "round11b/bipartite") {
+  private def bipartiteEdges(s: SparkSession, d: String): DataFrame =
+    Memos.frame(s, d, "graphstats/bipartite") {
       val e = lineitem(s, d)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
         .distinct().persist()
@@ -252,7 +252,7 @@ object GraphStats {
          FROM e e1
          JOIN e e2 ON e1.pb = e2.pa
          JOIN e e3 ON e3.pa = e1.pa AND e3.pb = e2.pb""")((s, d) =>
-      GraphStats.countTriangles(strongEdges(s, d))),
+      countTriangles(strongEdges(s, d))),
 
     /** q93: degree distribution of the symmetrized part↔supplier
       * graph — the standard first look at any large graph, and a
@@ -335,7 +335,7 @@ object GraphStats {
       // degradation the grid join declares. Decision under the hash.
       val e = bipartiteEdges(s, d).filter(col("p") < 100)
       // gate scalars memoized per (session, fixture): no count job per call
-      val stats = Memos.value(s, d, "round11b/graphNbrStats")(
+      val stats = Memos.value(s, d, "graphstats/graphNbrStats")(
         graft.text.Dedup.pairStats(
           e.select(col("p").as("doc_id"), col("sk").as("tok")), "tok"))
       val (plan, pairs) =
@@ -379,7 +379,7 @@ object GraphStats {
          SELECT sk AS suppkey, auth1, auth2
          FROM a2 JOIN a1 USING (sk)
          ORDER BY auth2 DESC, suppkey LIMIT 20""")((s, d) => {
-      val e = GraphStats.bipartiteEdges(s, d)
+      val e = bipartiteEdges(s, d)
       val auth1 = e.groupBy("sk").agg(count(lit(1)).as("auth1"))
       val hub1 = e.join(auth1, "sk")
         .groupBy("p").agg(sum("auth1").as("h1"))
@@ -424,11 +424,11 @@ object GraphStats {
       // for a fixed k), so they join the session memo like
       // Graphs.edges itself — each round's frame is built once and
       // read by both its stats row and the next peel.
-      val e1 = Memos.frame(s, d, "round12b/kcore_e1") {
+      val e1 = Memos.frame(s, d, "graphstats/kcore_e1") {
         val e = peel(graft.iter.Graphs.edges(s, d), 3).persist()
         e.count(); e
       }
-      val e2 = Memos.frame(s, d, "round12b/kcore_e2") {
+      val e2 = Memos.frame(s, d, "graphstats/kcore_e2") {
         val e = peel(e1, 3).persist()
         e.count(); e
       }

@@ -112,16 +112,12 @@ object HeavyHitters {
     mergeSummaries(memoSummary(s, d, "base", delta.base),
       memoSummary(s, d, "ins", delta.inserts), 63)
 
-  val queries: Seq[Query] = Seq(
-    /** q120: tokens with frequency > n/50 over the document corpus —
-      * MG(k=63) per partition (63+1 > 50, so the sketch provably
-      * retains every qualifying token), broadcast candidate semi-join,
-      * exact count + integer threshold (cnt·50 > n — no division).
-      * The oracle computes the same answer by brute-force GROUP BY:
-      * the sketch path must be result-invisible. */
-    Query("q_agg_heavy_hitters",
-      """WITH toks AS (
-           SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+  /** q120's brute-force heavy-hitter oracle over the document relation
+    * `rel`; the incremental twins check against it over their
+    * post-delta corpus. */
+  private def heavyHittersSql(rel: String): String =
+    s"""WITH toks AS (
+           SELECT unnest(string_split(text, ' ')) AS tok FROM $rel
          ), filtered AS (
            SELECT tok FROM toks WHERE length(tok) > 0
          ), t AS (
@@ -131,7 +127,16 @@ object HeavyHitters {
          )
          SELECT tok, CAST(cnt AS BIGINT) AS cnt
          FROM t, n WHERE cnt * 50 > n
-         ORDER BY cnt DESC, tok""")((s, d) => {
+         ORDER BY cnt DESC, tok"""
+
+  val queries: Seq[Query] = Seq(
+    /** q120: tokens with frequency > n/50 over the document corpus —
+      * MG(k=63) per partition (63+1 > 50, so the sketch provably
+      * retains every qualifying token), broadcast candidate semi-join,
+      * exact count + integer threshold (cnt·50 > n — no division).
+      * The oracle computes the same answer by brute-force GROUP BY:
+      * the sketch path must be result-invisible. */
+    Query("q_agg_heavy_hitters", heavyHittersSql("documents"))((s, d) => {
       import s.implicits._
       val toks = documents(s, d)
         .select(explode(split(col("text"), " ")).as("tok"))
@@ -161,18 +166,7 @@ object HeavyHitters {
     Query("q_incr_heavy_hitters",
       // q123's oracle IS q120's: incremental candidate maintenance must
       // be result-invisible.
-      """WITH toks AS (
-           SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-         ), filtered AS (
-           SELECT tok FROM toks WHERE length(tok) > 0
-         ), t AS (
-           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
-         ), n AS (
-           SELECT count(*) AS n FROM filtered
-         )
-         SELECT tok, CAST(cnt AS BIGINT) AS cnt
-         FROM t, n WHERE cnt * 50 > n
-         ORDER BY cnt DESC, tok""")((s, d) => {
+      heavyHittersSql("documents"))((s, d) => {
       import s.implicits._
       val docs = documents(s, d)
       val merged = preDeltaSummary(s, d, tokenDelta(docs))
@@ -213,19 +207,7 @@ object HeavyHitters {
       // q138's oracle: the brute-force GROUP BY over the POST-DELTA
       // corpus — the budget-guarded candidate path must be
       // result-invisible.
-      """WITH toks AS (
-           SELECT unnest(string_split(text, ' ')) AS tok
-           FROM documents WHERE doc_id % 10 <> 1
-         ), filtered AS (
-           SELECT tok FROM toks WHERE length(tok) > 0
-         ), t AS (
-           SELECT tok, count(*) AS cnt FROM filtered GROUP BY tok
-         ), n AS (
-           SELECT count(*) AS n FROM filtered
-         )
-         SELECT tok, CAST(cnt AS BIGINT) AS cnt
-         FROM t, n WHERE cnt * 50 > n
-         ORDER BY cnt DESC, tok""")((s, d) => {
+      heavyHittersSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       import s.implicits._
       val docs = documents(s, d)
       val delta = tokenDelta(docs)

@@ -13,7 +13,12 @@ import graft.incr.{Delta, Maintain}
   * picks sort-merge vs broadcast from sizes, and `broadcast()` pins the
   * map-side case explicitly. At 100 TB: dims (region/nation/supplier/
   * customer) broadcast; only fact-fact joins shuffle, on their join
-  * keys, so co-partitioned downstream aggs reuse the exchange. */
+  * keys, so co-partitioned downstream aggs reuse the exchange.
+  *
+  * Also the temporal joins (as-of, SCD2 and its point-in-interval
+  * consumer) and the maintained join views, each incremental twin
+  * beside the batch row it must equal. The proximity joins live in
+  * [[Sweep]] with their sweep kernels. */
 object Joins {
 
 
@@ -81,6 +86,51 @@ object Joins {
         (col("mk") % 10000000L).as("r_id"),
         expr("mk div 10000000").as("diff_ms"))
   }
+
+  /** The SCD2 interval table q112 declares, as DuckDB SQL over the
+    * orders relation `rel`; q143 checks against it over its post-delta
+    * orders. */
+  private def scd2Sql(rel: String): String =
+    s"""WITH h AS (
+           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
+             lag(o_orderstatus) OVER
+               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+               AS prev_status
+           FROM $rel
+         ), chg AS (
+           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
+           FROM h
+           WHERE prev_status IS NULL OR prev_status <> o_orderstatus
+         )
+         SELECT o_custkey, o_orderstatus AS status,
+           o_orderdate AS valid_from, o_orderkey,
+           coalesce(lead(o_orderdate) OVER
+               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
+             TIMESTAMP '2100-01-01 00:00:00') AS valid_to,
+           CAST(CASE WHEN lead(o_orderdate) OVER
+               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+               IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
+         FROM chg
+         ORDER BY o_custkey, valid_from, o_orderkey"""
+
+  /** q98's correlated EXISTS: the oracle and the Spark SQL the row runs. */
+  private val existsSql =
+    """SELECT c_custkey, c_name
+         FROM customer c
+         WHERE EXISTS (
+           SELECT 1 FROM orders o
+           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
+         ORDER BY c_custkey"""
+
+  /** q82's LATERAL join: the oracle and the Spark SQL the row runs. */
+  private val lateralSql =
+    """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+         FROM customer c, LATERAL (
+           SELECT o_orderkey, o_totalprice FROM orders
+           WHERE o_custkey = c.c_custkey
+           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
+         WHERE c.c_custkey % 10 = 0
+         ORDER BY c.c_custkey, o.o_orderkey"""
 
   val queries: Seq[Query] = Seq(
     /** q7: equi inner join (Projector ONE2MUL shape, paper [P §4]). */
@@ -287,20 +337,8 @@ object Joins {
       * semi join (q12 is the explicit DataFrame form): Catalyst
       * decorrelates the subquery into a LeftSemi join, which is the
       * point — users write the predicate, the engine picks the join. */
-    Query("q_join_exists_subquery",
-      """SELECT c_custkey, c_name
-         FROM customer c
-         WHERE EXISTS (
-           SELECT 1 FROM orders o
-           WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-         ORDER BY c_custkey""")((s, d) =>
-      runSql(s, d, """
-        SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (
-          SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-        ORDER BY c_custkey""")),
+    Query("q_join_exists_subquery", existsSql)((s, d) =>
+      runSql(s, d, existsSql)),
 
     /** q174: NEAREST AS-OF JOIN — q16's as-of join completed with
       * NEAREST semantics (absolute time distance, either direction):
@@ -418,22 +456,8 @@ object Joins {
       * parameterized subplans, the join surface that window-rank
       * rewrites don't literally express. Catalyst decorrelates it
       * into a ranked join under the hood. */
-    Query("q_join_lateral",
-      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-         FROM customer c, LATERAL (
-           SELECT o_orderkey, o_totalprice FROM orders
-           WHERE o_custkey = c.c_custkey
-           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
-         WHERE c.c_custkey % 10 = 0
-         ORDER BY c.c_custkey, o.o_orderkey""")((s, d) =>
-      runSql(s, d, """
-        SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        FROM customer c, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM orders
-          WHERE o_custkey = c.c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
-        WHERE c.c_custkey % 10 = 0
-        ORDER BY c.c_custkey, o.o_orderkey""")),
+    Query("q_join_lateral", lateralSql)((s, d) =>
+      runSql(s, d, lateralSql)),
 
     /** q124: TEMPORAL point-in-interval join — "which dimension
       * version was active when this fact row occurred": every order
@@ -495,28 +519,7 @@ object Joins {
       * Two windows over one (custkey; date, orderkey) sort — again a
       * single shuffle — and the change filter shrinks the second
       * window's input to the compacted rows. */
-    Query("q_incr_scd2",
-      """WITH h AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
-             lag(o_orderstatus) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               AS prev_status
-           FROM orders
-         ), chg AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
-           FROM h
-           WHERE prev_status IS NULL OR prev_status <> o_orderstatus
-         )
-         SELECT o_custkey, o_orderstatus AS status,
-           o_orderdate AS valid_from, o_orderkey,
-           coalesce(lead(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-             TIMESTAMP '2100-01-01 00:00:00') AS valid_to,
-           CAST(CASE WHEN lead(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-         FROM chg
-         ORDER BY o_custkey, valid_from, o_orderkey""")((s, d) =>
+    Query("q_incr_scd2", scd2Sql("orders"))((s, d) =>
       scd2Of(s, d).orderBy("o_custkey", "valid_from", "o_orderkey")),
 
     /** q143: SCD Type-2 dimension maintenance under a SIGNED delta
@@ -532,43 +535,15 @@ object Joins {
       * group re-run is the only rule consistent with the
       * change-compaction semantics. Oracle = q112's full SCD2 SQL
       * over the post-delta orders: result-invisible. */
-    Query("q_incr_scd2_delete",
-      // q143's oracle is q112's full SCD2 SQL over the POST-DELTA
-      // orders: the signed custkey-level recompute must be
-      // result-invisible.
-      """WITH post AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
-           FROM orders
-           WHERE NOT (o_orderdate < TIMESTAMP '1998-01-01'
-                      AND o_orderkey % 10 = 1)
-         ), h AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus,
-             lag(o_orderstatus) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               AS prev_status
-           FROM post
-         ), chg AS (
-           SELECT o_custkey, o_orderdate, o_orderkey, o_orderstatus
-           FROM h
-           WHERE prev_status IS NULL OR prev_status <> o_orderstatus
-         )
-         SELECT o_custkey, o_orderstatus AS status,
-           o_orderdate AS valid_from, o_orderkey,
-           coalesce(lead(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-             TIMESTAMP '2100-01-01 00:00:00') AS valid_to,
-           CAST(CASE WHEN lead(o_orderdate) OVER
-               (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-               IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-         FROM chg
-         ORDER BY o_custkey, valid_from, o_orderkey""")((s, d) => {
+    Query("q_incr_scd2_delete", scd2Sql("(SELECT * FROM orders WHERE NOT " +
+        "(o_orderdate < TIMESTAMP '1998-01-01' AND o_orderkey % 10 = 1))"))((s, d) => {
       val cut = lit("1998-01-01").cast("timestamp")
       val o = orders(s, d)
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
           col("o_orderstatus"))
       val delta = Delta.cut(o, col("o_orderdate") < cut, "o_orderkey")
       Maintain.groupRecompute(delta.base, delta.post, Seq("o_custkey"),
-          delta.touchedKeys("o_custkey"))(Joins.scd2OfRows)
+          delta.touchedKeys("o_custkey"))(scd2OfRows)
         .orderBy("o_custkey", "valid_from", "o_orderkey")
     }),
 

@@ -265,8 +265,10 @@ object Scalars {
         .orderBy("l_orderkey", "l_linenumber")
     }),
 
-    // former Round10 module rows (see the section scaladoc above)
-    /** q155: per-type absolute time bounds + a fixed-cutoff count.
+    /** q155: per-type absolute time bounds + a fixed-cutoff count —
+      * the absolute-time anchor of the event rows: the others are
+      * ordering-invariant or fail with an opaque row-count diff when
+      * the fixture's timestamp unit skews, this one fails visibly.
       * min/max pass raw TimestampType through to the output (any unit
       * error is directly visible in the dumped parquet), and the
       * 2024-01-15 literal comparison breaks under ANY skew — a

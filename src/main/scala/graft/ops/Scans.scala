@@ -130,7 +130,7 @@ object Scans {
            CAST(sum(n_nationkey) AS BIGINT) AS key_sum
          FROM nation JOIN region ON n_regionkey = r_regionkey
          GROUP BY r_name ORDER BY r_name""")((s, d) => {
-      val scratch = s"${Memos.scratchDir(s, d, "r12")}/nation_txt"
+      val scratch = s"${Memos.scratchDir(s, d, "scans")}/nation_txt"
       val nat = nation(s, d)
       nat.select(concat_ws("|", col("n_nationkey"), col("n_name"),
           col("n_regionkey")).as("value"))
@@ -149,8 +149,8 @@ object Scans {
         .orderBy("r_name")
     }),
 
-    /** q156: CSV + JSON source surface as a DECLARED query (VERDICT r9
-      * gap 2: the formats were unit-test-only). The dims round-trip
+    /** q156: CSV + JSON source surface as a DECLARED,
+      * oracle-checked query, not a unit-test-only one. The dims round-trip
       * through both text formats BEFORE the join-aggregate — header
       * CSV for nation, line-JSON for region, explicit schemas (the
       * production pattern: never infer on a 100 TB lake) — so any
@@ -205,7 +205,7 @@ object Scans {
                 CAST(sum(n_nationkey) AS BIGINT) AS key_sum,
                 min(n_name) AS first_name
          FROM nation GROUP BY 1 ORDER BY gen""")((s, d) => {
-      val scratch = s"${Memos.scratchDir(s, d, "r12b")}/evolve"
+      val scratch = s"${Memos.scratchDir(s, d, "scans")}/evolve"
       val nat = nation(s, d)
       nat.filter(col("n_nationkey") < 13)
         .select("n_nationkey", "n_name")

@@ -7,9 +7,9 @@ import graft.engine.{Memos, Query}
 import graft.engine.Tables._
 import graft.incr.Delta
 
-/** SUFFICIENT-STATISTICS SWEEPS — the round-13 de-quadratication of
-  * the proximity-join family (round-12 verdict, weak rows q208/q213/
-  * q216 and q212's recompute branch).
+/** The proximity-join family — band (q208) and its incremental twin
+  * (q212), interval overlap (q213) and the 2-D grid (q216) — and the
+  * SUFFICIENT-STATISTICS SWEEPS that take the pairs out of their plans.
   *
   * The bucketed pair joins ([[Sweep.bandSelfJoin]],
   * [[Sweep.intervalOverlapJoin]]) are CORRECT and remain the
@@ -22,7 +22,8 @@ import graft.incr.Delta
   * sums) are all LINEAR functionals of per-row trailing-window
   * statistics, so they fall out of one sort + windowed prefix sums
   * in O(n log n) with NOTHING pair-sized ever created. This module
-  * holds that machinery; `Round13Spec` proves each sweep ≡ its pair
+  * holds that machinery beside the rows that declare it;
+  * `Round13Spec` proves each sweep ≡ its pair
   * join on the fixture and on adversarial random data (dense ties,
   * touching endpoints, empty/singleton buckets).
   *
@@ -324,7 +325,7 @@ object Sweep {
   /** Candidate-pair volume of a 2-D grid self-join: Σ over ordered
     * adjacent cell pairs of n_a·n_b, computed on the CELL OCCUPANCY
     * relation (|cells| rows — never on facts). This is the costing
-    * input for [[Round12b]]'s q216 selector: unlike the 1-D band
+    * input for q216's selector: unlike the 1-D band
     * aggregates, per-pair 2-D gap sums have no 1-D prefix-sum
     * decomposition (they are dominance sums over two independent
     * orderings), so the exact grid join's Θ(candidate volume) work
@@ -395,7 +396,7 @@ object Sweep {
   private val BandUs = 900L * 1000000L
 
   /** Per-attribution-bucket band-join partials — q212's stored
-    * state. Since round 13 these come from the [[Sweep.bandStats]]
+    * state. They come from the [[bandStats]]
     * sufficient-statistics sweep (no pair materialization; the
     * recompute branch inherits the q208 de-quadratication), which
     * attributes each pair to its LATER element's bucket (ties: the
@@ -407,7 +408,7 @@ object Sweep {
     * {b−1, b}, so the ±2-bucket recompute input is sufficient
     * (`Round13Spec` proves the restricted-input identity). */
   private def bandPartials(evs: DataFrame): DataFrame =
-    Sweep.bandStats(evs, BandUs)
+    bandStats(evs, BandUs)
 
   // ---------------------------------------------------------------
   // q213 kernel: session intervals + bucketed overlap join
@@ -416,22 +417,14 @@ object Sweep {
   private val OverlapBucketUs = 3600L * 1000000L
 
   /** Per-(user, session) µs intervals via the q111 gaps-and-islands
-    * derivation (30-min gap). */
+    * step ([[Events.withSessionIdx]]). */
   private def sessionIntervals(s: SparkSession, d: String,
-                               where: Column): DataFrame = {
-    val gapUs = 1800L * 1000000L
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events(s, d).filter(where)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("prev_us", lag(col("us"), 1).over(w))
-      .withColumn("new_s",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs,
-          1L).otherwise(0L))
-      .withColumn("sidx", sum(col("new_s")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+                               where: Column): DataFrame =
+    Events.withSessionIdx(
+        events(s, d).filter(where).withColumn("us", unix_micros(col("ts"))),
+        "sidx")
       .groupBy("user_id", "sidx")
       .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
-  }
 
   /** GENERIC bucketed interval-overlap self-join: all unordered pairs
     * of (id..., s, e) CLOSED intervals that overlap, linearized to an
@@ -474,14 +467,10 @@ object Sweep {
     * Beyond it the selector switches to [[Sweep2D.gridPairsExact]] —
     * the O(n log n) segmented Fenwick sweep that computes the SAME
     * aggregates without materializing pairs — so the answer stays
-    * EXACT at any density; only the plan changes. (History: the r13
-    * sf1 scale run measured the original 2³¹ ceiling admitting a 41 s
-    * exact join at 1M events — density from many mid-size cells
-    * multiplies candidate volume with no cell ever tripping a fixed
-    * per-cell cap, which killed first the fixed 4096 cap and then the
-    * volume-adaptive cap that briefly replaced it: both were LOSSY
-    * lower bounds, and the sweep made the whole cap family obsolete
-    * in the same round.) */
+    * EXACT at any density; only the plan changes. A 2³¹ ceiling
+    * admitted a 41 s exact join at 1M events (sf1): density from many
+    * mid-size cells multiplies candidate volume with no cell ever
+    * tripping a per-cell cap, so no per-cell cap bounds this join. */
   val GridVolumeCap: Long = 1L << 27
 
   /** The q216 cost-based grid join over `ev` (event_id, event_type,
@@ -501,7 +490,7 @@ object Sweep {
       val cells = ev.select(
         expr(s"(tsu - pmod(tsu, ${T}L)) div ${T}L").as("tc"),
         expr(s"(vc - pmod(vc, ${V}L)) div ${V}L").as("vcell"))
-      val r = Sweep.gridPairVolume(cells).head()
+      val r = gridPairVolume(cells).head()
       (r.getAs[Long]("cand_volume"), r.getAs[Long]("n_rows"))
     }
     if (volume > volumeCap)
@@ -535,13 +524,31 @@ object Sweep {
       .orderBy("t1", "t2")
   }
 
+  /** q208's oracle over the event relation `rel`; q212 checks against
+    * it over its post-delta log. The band predicate is spelled as TWO
+    * INEQUALITIES, not abs(Δ) ≤ T (identical truth table): DuckDB
+    * recognizes the pair as an IEJoin band and runs sort-based
+    * O(n log n + out) instead of a nested loop, which keeps the row
+    * checkable at sf1 (4.0 s vs minutes for the abs() spelling). */
+  private def bandSql(rel: String): String =
+    s"""SELECT least(a.event_type, b.event_type) AS t1,
+                greatest(a.event_type, b.event_type) AS t2,
+                CAST(count(*) AS BIGINT) AS n_pairs,
+                CAST(sum(abs(epoch_us(a.ts) - epoch_us(b.ts))) AS BIGINT)
+                  AS gap_us_sum
+         FROM $rel a JOIN $rel b
+           ON a.event_id < b.event_id
+          AND epoch_us(a.ts) <= epoch_us(b.ts) + 900000000
+          AND epoch_us(a.ts) >= epoch_us(b.ts) - 900000000
+         GROUP BY 1, 2 ORDER BY t1, t2"""
+
   val queries: Seq[Query] = Seq(
 
     /** q208: BAND SELF-JOIN AGGREGATE [T join surface / N scale
       * path] — all event pairs within 15 MINUTES of each other, per
       * unordered type pair: pair count + µs-gap checksum (BIGINT).
       *
-      * DECLARED PLAN (round 13): the [[Sweep.bandStats]]
+      * DECLARED PLAN: the [[bandStats]]
       * sufficient-statistics sweep — one (type, bucket)-partitioned
       * window pass computing each event's trailing-window partner
       * count and Σts, from which the pair aggregates fall out in
@@ -551,27 +558,10 @@ object Sweep {
       * per-band density: correct and fast at fixture scale but a
       * scale-killer on a dense 100 TB event stream, where one hot
       * 15-minute window with 10⁷ events would materialize 10¹⁴
-      * pairs (round-12 verdict, weak row 1 — this rewrite is the
-      * fix; `Round13Spec` proves sweep ≡ pair join, and the oracle
-      * hash proves it again on every driver run). */
-    Query("q_join_band_time",
-      // band predicate spelled as TWO INEQUALITIES, not abs(Δ) ≤ T
-      // (identical truth table): DuckDB recognizes the pair as an
-      // IEJoin band and runs sort-based O(n log n + out) instead of a
-      // nested loop — the sweep-friendly oracle form (VERDICT r13 task
-      // 5) that makes this row sf1-checkable (measured 4.0 s at sf1 vs
-      // minutes for the abs() spelling).
-      """SELECT least(a.event_type, b.event_type) AS t1,
-                greatest(a.event_type, b.event_type) AS t2,
-                CAST(count(*) AS BIGINT) AS n_pairs,
-                CAST(sum(abs(epoch_us(a.ts) - epoch_us(b.ts))) AS BIGINT)
-                  AS gap_us_sum
-         FROM events a JOIN events b
-           ON a.event_id < b.event_id
-          AND epoch_us(a.ts) <= epoch_us(b.ts) + 900000000
-          AND epoch_us(a.ts) >= epoch_us(b.ts) - 900000000
-         GROUP BY 1, 2 ORDER BY t1, t2""")((s, d) =>
-      Sweep.bandStats(bandEvents(s, d), BandUs)
+      * pairs; `Round13Spec` proves sweep ≡ pair join, and the oracle
+      * hash proves it again on every driver run. */
+    Query("q_join_band_time", bandSql("events"))((s, d) =>
+      bandStats(bandEvents(s, d), BandUs)
         .groupBy("t1", "t2")
         .agg(sum(col("n")).as("n_pairs"),
           sum(col("gap_sum")).as("gap_us_sum"))
@@ -595,17 +585,7 @@ object Sweep {
       * (untouched partials are reused rows, not recomputed). */
     Query("q_incr_band",
       // two-inequality band form — see q_join_band_time's note
-      """SELECT least(a.event_type, b.event_type) AS t1,
-                greatest(a.event_type, b.event_type) AS t2,
-                CAST(count(*) AS BIGINT) AS n_pairs,
-                CAST(sum(abs(epoch_us(a.ts) - epoch_us(b.ts))) AS BIGINT)
-                  AS gap_us_sum
-         FROM (SELECT * FROM events WHERE event_id % 10 <> 1) a
-         JOIN (SELECT * FROM events WHERE event_id % 10 <> 1) b
-           ON a.event_id < b.event_id
-          AND epoch_us(a.ts) <= epoch_us(b.ts) + 900000000
-          AND epoch_us(a.ts) >= epoch_us(b.ts) - 900000000
-         GROUP BY 1, 2 ORDER BY t1, t2""")((s, d) => {
+      bandSql("(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(bandEvents(s, d), "event_id")
       val touched = delta.touched
         .select(explode(expr(
@@ -618,7 +598,7 @@ object Sweep {
       // stored state: the base partials ARE the persisted relation a
       // production run reads back from the partials store — session-
       // memoized like every stored-state family
-      val baseP = Memos.frame(s, d, "round12b/band_partials") {
+      val baseP = Memos.frame(s, d, "sweep/band_partials") {
         val p = bandPartials(delta.base).persist()
         p.count(); p
       }
@@ -646,7 +626,7 @@ object Sweep {
       * in time. Per user: overlapping-pair count + total overlap µs,
       * both orientations credited.
       *
-      * DECLARED PLAN (round 13): the [[Sweep.overlapStats]]
+      * DECLARED PLAN: the [[overlapStats]]
       * endpoint sweep — per interval, partner count from two rank
       * probes (#starts ≤ end − #ends < start − 1) and overlap µs
       * from the active-time integral (overlap is ∫ over the span of
@@ -654,18 +634,18 @@ object Sweep {
       * in O(n log n). The former declared plan
       * ([[intervalOverlapJoin]] bucketed pair join, still the facade
       * generic and the oracle formulation) materializes a pair space
-      * quadratic in per-bucket overlapping sessions — the round-12
-      * verdict's weak row 3; `Round13Spec` proves sweep ≡ pair join
+      * quadratic in per-bucket overlapping sessions; `Round13Spec`
+      * proves sweep ≡ pair join
       * and the oracle hash re-proves it on every driver run. */
     Query("q_join_interval_overlap",
-      """WITH e AS (
+      s"""WITH e AS (
            SELECT user_id, event_id, ts, epoch_us(ts) AS us,
              lag(epoch_us(ts)) OVER
                (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
            FROM events
          ), flagged AS (
            SELECT user_id, event_id, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
+             CASE WHEN prev_us IS NULL OR us - prev_us > ${Events.GapUs}
                   THEN 1 ELSE 0 END AS new_s
            FROM e
          ), sess AS (
@@ -698,15 +678,15 @@ object Sweep {
       // the sweep references its input from ~8 plan branches (data,
       // probes, bucket partials, probe buckets); materialize the
       // |sessions|-bounded interval relation ONCE instead of
-      // re-deriving the gaps-and-islands window per branch.
-      // r18 opt: the interval relation is deterministic static
-      // structure per (session, fixture) — q111's gaps-and-islands
+      // re-deriving the gaps-and-islands window per branch. The
+      // interval relation is deterministic static structure per
+      // (session, fixture) — q111's gaps-and-islands
       // derivation of the immutable events table — so it rides the
       // session memo instead of re-running the user-keyed window +
       // checkpoint per invocation (2 of the row's 13 warm jobs).
-      val iv = Memos.frame(s, d, "round12b/overlap_intervals")(
+      val iv = Memos.frame(s, d, "sweep/overlap_intervals")(
         sessionIntervals(s, d, lit(true)).localCheckpoint())
-      Sweep.overlapStats(iv, Seq("user_id", "sidx"),
+      overlapStats(iv, Seq("user_id", "sidx"),
           "s_us", "e_us", OverlapBucketUs)
         .groupBy("user_id")
         .agg(sum(col("n_ov")).as("n_overlaps"),
@@ -724,9 +704,9 @@ object Sweep {
       * once; equi join, shuffle/AQE-eligible, never a nested loop).
       *
       * Unlike the 1-D rows, the per-pair 2-D gap sums have no
-      * ONE-DIMENSIONAL prefix-sum decomposition, so the round-13 fix
-      * for the round-12 weak grade is a COSTED SELECTOR between two
-      * EXACT plans: [[Sweep.gridPairVolume]] measures the
+      * ONE-DIMENSIONAL prefix-sum decomposition, so the plan is a
+      * COSTED SELECTOR between two EXACT plans: [[gridPairVolume]]
+      * measures the
       * adjacent-cell candidate volume on the |cells|-sized occupancy
       * relation first (an eager costing action — the autoTopK/autoKnn
       * pattern); under the cap the pair join runs (`plan='exact'`,
@@ -739,10 +719,10 @@ object Sweep {
       // time band as two inequalities (IEJoin — see q_join_band_time);
       // the vc band stays abs() as the residual filter (IEJoin takes
       // one band pair; measured 4.7 s at sf1). The `plan` column is
-      // COMPUTED with the engine's own integer costing rule (r15
-      // verdict task 2: both selector branches are exact, so the
-      // VALUES never depend on it, but pinning 'exact' made the sf1
-      // sweep read a correct selector flip as a FAIL): candidate
+      // COMPUTED with the engine's own integer costing rule (both
+      // selector branches are exact, so the VALUES never depend on
+      // it, but a pinned 'exact' would read a correct selector flip
+      // at sf1 as a FAIL): candidate
       // volume = Σ na·nc over ordered 3×3-adjacent occupancy cell
       // pairs (self included), sweep above GridVolumeCap = 2^27.
       // Cell ids use the pmod floor-division identity so negative vc
@@ -785,11 +765,11 @@ object Sweep {
       // input — memoize its scalar results across calls in a session
       // (the same table-statistics reuse every cost-based selector
       // in the engine applies)
-      val stats = Memos.value(s, d, "round12b/gridStats") {
+      val stats = Memos.value(s, d, "sweep/gridStats") {
         val cells = ev.select(
           expr(s"(tsu - pmod(tsu, ${T}L)) div ${T}L").as("tc"),
           expr(s"(vc - pmod(vc, ${V}L)) div ${V}L").as("vcell"))
-        val r = Sweep.gridPairVolume(cells).head()
+        val r = gridPairVolume(cells).head()
         (r.getAs[Long]("cand_volume"), r.getAs[Long]("n_rows"))
       }
       gridPairs2d(ev, T, V, knownStats = Some(stats))

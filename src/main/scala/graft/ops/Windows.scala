@@ -187,7 +187,7 @@ object Windows {
       // q200's oracle: the same sessions derived by hand via
       // gaps-and-islands — session_window's engine-side interval merge
       // must reproduce the portable SQL definition exactly.
-      """WITH e AS (
+      s"""WITH e AS (
            SELECT user_id, ts, epoch_us(ts) AS us,
              lag(epoch_us(ts)) OVER
                (PARTITION BY user_id ORDER BY ts) AS prev_us
@@ -199,7 +199,7 @@ object Windows {
              -- Round12bSpec's synthetic exact-gap case), matching
              -- q111's <= convention: break only on gap > 30 min
              CASE WHEN prev_us IS NULL
-                    OR us - prev_us > 1800000000 THEN 1 ELSE 0 END AS brk
+                    OR us - prev_us > ${Events.GapUs} THEN 1 ELSE 0 END AS brk
            FROM e
          ), grp AS (
            SELECT user_id, ts, us,

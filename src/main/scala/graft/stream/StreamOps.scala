@@ -13,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   *
   * This is the Spark-native successor of the reference's MRBG-Store
   * [P §5]: framework-managed, group-keyed incremental state
-  * (StateStore + watermark) instead of a hand-built chunk store. */
+  * (StateStore + watermark) instead of a hand-built chunk store.
+  *
+  * The rows declared with `Query.stream` run a real file-source stream
+  * on their first call (sink round trip, checkpoint restart, merge
+  * upsert, interval join, dedup); sink compaction sits beside them. */
 object StreamOps {
 
 
@@ -27,6 +31,26 @@ object StreamOps {
     s.read.parquet(inPath)
       .repartition(col(partCol))
       .write.mode("overwrite").partitionBy(partCol).parquet(outPath)
+
+  /** The closed-window set {days : day end <= max(ts) - 1 min} of the
+    * per-(day, type) event counts — what append mode plus
+    * AvailableNow's final watermark flush emits. The oracle of the
+    * sink round trip and of its checkpoint-restart twin: a restart
+    * must be result-invisible, so a duplicated or dropped window flips
+    * the hash. */
+  private val closedWindowsSql =
+    """WITH mx AS (
+           SELECT max(ts) AS m FROM events
+         ), agg AS (
+           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+             event_type, count(*) AS n
+           FROM events GROUP BY 1, 2
+         )
+         SELECT day, event_type, CAST(n AS BIGINT) AS n
+         FROM agg, mx
+         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
+               <= m - INTERVAL 1 MINUTE
+         ORDER BY day, event_type"""
 
   val queries: Seq[Query] = Seq(
     /** q57: 1-hour tumbling windows per event type. */
@@ -140,7 +164,7 @@ object StreamOps {
           AND v.event_type = 'view' AND p.event_type = 'purchase'
           AND p.ts >= v.ts AND p.ts <= v.ts + INTERVAL 30 MINUTE
          ORDER BY view_id, purchase_id""")((s, d) => Memos.frame(s, d,
-        "round12/streamJoin")(
+        "streamops/streamJoin")(
         // 4-partition state (4 StateStores per join
         // side instead of 32) + 2-files-per-trigger — the eviction
         // margin argument above is per-batch generic, so 3
@@ -149,7 +173,7 @@ object StreamOps {
         // purchases match batch 1's views)
         graft.stream.Streams.smallStateConf(s) {
       val root = graft.stream.Streams.freshRoot(s,
-        s"${Memos.scratchDir(s, d, "r12")}/sjoin")
+        s"${Memos.scratchDir(s, d, "streamops")}/sjoin")
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
       val norm = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -219,11 +243,11 @@ object StreamOps {
          WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
                <= m - INTERVAL 10 MINUTE
          ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
-        "round12/streamDedup")(
+        "streamops/streamDedup")(
         graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val root = graft.stream.Streams.freshRoot(s,
-        s"${Memos.scratchDir(s, d, "r12")}/sdedup")
+        s"${Memos.scratchDir(s, d, "streamops")}/sdedup")
       val (stage, src, ck, out) = (s"$root/stage", s"$root/src",
         s"$root/ck", s"$root/out")
       val norm = events(s, d)
@@ -283,26 +307,13 @@ object StreamOps {
       * by the proven batch reader so the fixture's physical ts layout
       * is normalized before the stream source reads it. */
     Query.stream("q_stream_sink_roundtrip",
-      // q177's oracle: the closed-window set is the pure function
-      // {days : day end <= max(ts) - 1 min} of the input — what
-      // append-mode + AvailableNow's final watermark flush emits.
-      """WITH mx AS (
-           SELECT max(ts) AS m FROM events
-         ), agg AS (
-           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             event_type, count(*) AS n
-           FROM events GROUP BY 1, 2
-         )
-         SELECT day, event_type, CAST(n AS BIGINT) AS n
-         FROM agg, mx
-         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
-               <= m - INTERVAL 1 MINUTE
-         ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
-        "round11b/streamRoundtrip")(
+      closedWindowsSql)((s, d) => Memos.frame(s, d,
+        "streamops/streamRoundtrip")(
         // 4-partition state — the one-time stream cost is micro-batch
         // state plumbing, not data (Streams.smallStateConf)
         graft.stream.Streams.smallStateConf(s) {
-      val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r11s"))
+      val root = graft.stream.Streams.freshRoot(s,
+        Memos.scratchDir(s, d, "streamops_sink"))
       val (src, ck, out) = (s"$root/src", s"$root/ck", s"$root/out")
       val norm = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -350,27 +361,14 @@ object StreamOps {
       * analogue of the signed-delta family's contract). Stream pair
       * runs once per (session, fixture); appId-isolated scratch. */
     Query.stream("q_stream_restart_exactly_once",
-      // q178: identical closed-window function — the checkpoint restart
-      // must be result-invisible, and a duplicate/dropped window from a
-      // broken exactly-once path flips this hash.
-      """WITH mx AS (
-           SELECT max(ts) AS m FROM events
-         ), agg AS (
-           SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-             event_type, count(*) AS n
-           FROM events GROUP BY 1, 2
-         )
-         SELECT day, event_type, CAST(n AS BIGINT) AS n
-         FROM agg, mx
-         WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY
-               <= m - INTERVAL 1 MINUTE
-         ORDER BY day, event_type""")((s, d) => Memos.frame(s, d,
-        "round11b/streamRestart")(
+      closedWindowsSql)((s, d) => Memos.frame(s, d,
+        "streamops/streamRestart")(
         // 4-partition state across BOTH runs (the checkpoint pins the
         // count at first start)
         graft.stream.Streams.smallStateConf(s) {
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r11r"))
+      val root = graft.stream.Streams.freshRoot(s,
+        Memos.scratchDir(s, d, "streamops_restart"))
       val (stage, src, ck, out) = (s"$root/stage", s"$root/src",
         s"$root/ck", s"$root/out")
       val norm = events(s, d)
@@ -427,20 +425,14 @@ object StreamOps {
       // stream-maintained snapshot must be result-invisible against it
       // (q47's discipline, computed by a MERGE cascade over
       // deliberately out-of-order micro-batches instead of one window).
-      """SELECT user_id, event_id AS last_event_id,
-                event_type AS last_type, value AS last_value
-         FROM (
-           SELECT user_id, event_id, event_type, value,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events
-         ) t WHERE rn = 1 ORDER BY user_id""")((s, d) => Memos.frame(s, d,
-        "round11b/streamMergeUpsert")(
+      graft.incr.IncrMerge.latestPerUserSql)((s, d) => Memos.frame(s, d,
+        "streamops/streamMergeUpsert")(
         // the foreachBatch MERGE's full-outer join runs per micro-batch
         // — 4 shuffle partitions size it to the KB-scale batches
         // (result is partition-count invariant)
         graft.stream.Streams.smallStateConf(s) {
-      val root = graft.stream.Streams.freshRoot(s, Memos.scratchDir(s, d, "r16m"))
+      val root = graft.stream.Streams.freshRoot(s,
+        Memos.scratchDir(s, d, "streamops_upsert"))
       val (src, ck, store) = (s"$root/src", s"$root/ck", s"$root/store")
       val norm = events(s, d)
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -498,8 +490,8 @@ object StreamOps {
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
          FROM events GROUP BY 1 ORDER BY day""")((s, d) => {
-      val root = Memos.value(s, d, "round12/compaction") {
-        val r = s"${Memos.scratchDir(s, d, "r12")}/compact"
+      val root = Memos.value(s, d, "streamops/compaction") {
+        val r = s"${Memos.scratchDir(s, d, "streamops")}/compact"
         val ev = events(s, d).withColumn("day", to_date(col("ts")))
         ev.repartition(8)
           .write.mode("overwrite").partitionBy("day").parquet(s"$r/landing")

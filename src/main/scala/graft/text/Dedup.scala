@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
+import graft.iter.IterQueries
 import graft.incr.{Delta, Maintain}
 
 /** §2 group I — deduplication over documents [N].
@@ -13,7 +14,10 @@ import graft.incr.{Delta, Maintain}
   * Exact pairwise Jaccard (q50) is the oracle-checkable ground truth
   * computed on a deterministic doc subset; the scale path for all-pairs
   * near-dup is MinHash-LSH (q51): O(n·bands) bucket shuffle instead of
-  * O(n²) comparisons, with exact verification only inside buckets. */
+  * O(n²) comparisons, with exact verification only inside buckets.
+  *
+  * Also chunk-level dedup and the LSH dedup collapse, each with its
+  * signed-incremental twin beside it. */
 object Dedup {
 
   /** Default pair-instance volume cap (Σ_key df² join instances)
@@ -421,8 +425,8 @@ object Dedup {
 
   /** Session-memoized [[docSets]] over the pairwise subset — the
     * verify side of q51's LSH pipeline: the per-doc token-set
-    * relation is static structure (the Round8 full-corpus twin is
-    * `docSetsAll`), so the collect_set shuffle runs once per
+    * relation is static structure (the full-corpus twin is
+    * `cachedDocSetsAll`), so the collect_set shuffle runs once per
     * (session, fixture) instead of once per q51 invocation.
     * persist(), not checkpoint: lineage stays re-derivable under
     * memo-budget eviction. */
@@ -504,17 +508,8 @@ object Dedup {
     * q42/q43 pattern). */
   val dedupGroups: Query =
     Query("q_dedup_groups", {
-      def stage(k: Int): String = {
-        val prev = s"label${k - 1}"
-        s"""label$k AS (
-            SELECT p.node, least(p.label, coalesce(s.mc, 999999999)) AS label
-            FROM $prev p LEFT JOIN (
-              SELECT e.dst AS node, MIN(p2.label) AS mc
-              FROM dedup_edges e JOIN $prev p2 ON p2.node = e.src
-              GROUP BY e.dst
-            ) s ON s.node = p.node
-          )"""
-      }
+      val stages =
+        (1 to 5).map(IterQueries.minStageSql(_, "label", 0, "dedup_edges"))
       s"""WITH toks AS (
            SELECT DISTINCT doc_id, tok FROM (
              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -538,7 +533,7 @@ object Dedup {
            SELECT doc_b AS src, doc_a AS dst FROM pairs
          ),
          label0 AS (SELECT DISTINCT doc_id AS node, doc_id AS label FROM toks),
-         ${(1 to 5).map(stage).mkString(",\n")}
+         ${stages.mkString(",\n")}
          SELECT node AS doc_id, label AS keep_id
          FROM label5 ORDER BY doc_id"""
     })((s, d) => {
@@ -618,8 +613,8 @@ object Dedup {
     * of an evolving corpus, and the verified pair graph is the
     * collapse's input table. */
   private def cachedToksAll(s: SparkSession, d: String): DataFrame =
-    // one pinned copy, shared with the Apriori family (r18)
-    Dedup.cachedTokens(s, d)
+    // one pinned copy, shared with the Apriori family
+    cachedTokens(s, d)
 
   /** The per-doc token-set relation over the FULL corpus — STORED
     * state alongside the band index (production persists it with the
@@ -631,7 +626,7 @@ object Dedup {
     * relation already holds. */
   private def cachedDocSetsAll(s: SparkSession, d: String): DataFrame =
     Memos.frame(s, d, "lsh/docSetsAll")(
-      Dedup.docSets(cachedToksAll(s, d)).persist())
+      docSets(cachedToksAll(s, d)).persist())
 
   /** Σsz of the stored doc-set relation — size metadata of STORED
     * state (computed once per (session, dir) alongside the memo; a
@@ -642,11 +637,11 @@ object Dedup {
       cachedDocSetsAll(s, d)
         .agg(coalesce(sum(col("sz")), lit(0L))).head().getLong(0))
 
-  /** Probe-broadcast gate for the signed-LSH verdict join (VERDICT
-    * r14 task 5 — the last doc-only broadcast survivor, retired into
-    * a pinned selector): at or below this stored-relation token
-    * volume the whole doc-set relation broadcasts HINTED (the r13
-    * A/B winner at fixture scale — ~116k tokens ≈ 1 MB at sf0.1,
+  /** Probe-broadcast gate for the signed-LSH verdict join, a pinned
+    * selector rather than an unconditional doc-side broadcast: at or
+    * below this stored-relation token volume the whole doc-set
+    * relation broadcasts HINTED (the A/B winner at fixture scale —
+    * ~116k tokens ≈ 1 MB at sf0.1,
     * where the semi-filter's extra materialization is a measured net
     * loss); above it the probes are semi-pruned to the candidate
     * endpoints and HINT-FREE, so AQE decides from the post-prune
@@ -671,7 +666,7 @@ object Dedup {
       val cands = MinHash.candidatesFromBuckets(bk)
         .unionByName(MinHash.starCandidates(bk))
         .distinct()
-      Dedup.verifyPairs(cands, cachedDocSetsAll(s, d))
+      verifyPairs(cands, cachedDocSetsAll(s, d))
         .select("doc_a", "doc_b").localCheckpoint()
     }
 
@@ -686,8 +681,8 @@ object Dedup {
 
   /** The STORED bucket relation of the base index — the second half
     * of q139's preserved state (production stores the grouped bucket
-    * view next to the band rows; ADVICE r8 names "the banded index
-    * and stored bucket relation" as the memoizable state). Without it
+    * view next to the band rows: the banded index and the stored
+    * bucket relation are the memoizable state). Without it
     * every maintenance batch re-groups the full corpus index. */
   private def cachedLshBucketsOld(s: SparkSession, d: String): DataFrame =
     Memos.frame(s, d, "lsh/lshBucketsOld")(
@@ -712,7 +707,7 @@ object Dedup {
       val bk = cachedLshBucketsOld(s, d)
       val keyed = MinHash.candidatesFromBucketsKeyed(bk)
         .unionByName(MinHash.starCandidatesKeyed(bk)).persist()
-      val verified = Dedup.verifyPairs(
+      val verified = verifyPairs(
           keyed.select("doc_a", "doc_b").distinct(),
           cachedDocSetsAll(s, d))
         .select("doc_a", "doc_b")
@@ -751,10 +746,10 @@ object Dedup {
     * doc-set relation, per-bucket pair store); the delta maintenance
     * re-runs per invocation, scratch persist()ed and released. */
   private def lshPairsIncr(s: SparkSession, d: String): DataFrame =
-    // The whole maintenance runs under the iterative-loop conf (r14,
-    // VERDICT r13 task 4 — attack the JOB count, not the data volume):
-    // its stage shapes are static (every join side carries an explicit
-    // hint, the one shuffle is the delta-sized bucket re-group), so
+    // The whole maintenance runs under the iterative-loop conf — its
+    // cost is the JOB count, not the data volume: its stage shapes
+    // are static (every join side carries an explicit hint, the one
+    // shuffle is the delta-sized bucket re-group), so
     // with AQE ON each broadcast build and exchange materialized as
     // its own query-stage JOB — profiled 6 extra jobs ≈ 0.4 s of pure
     // launch floor at sf0.1 — while AQE-off fuses the fused
@@ -797,13 +792,12 @@ object Dedup {
     // the touched buckets (a pair's Jaccard verdict depends only on
     // the two docs, not the generating bucket), so no keyed
     // enumeration + semi-join round-trip is needed on the query path —
-    // that shape cost a persist and an extra shuffle join per batch
-    // (VERDICT r9's job-granularity finding).
+    // that shape cost a persist and an extra shuffle join per batch.
     val rebuiltCands = MinHash.candidatesFromBuckets(rebuiltBk)
       .unionByName(MinHash.starCandidates(rebuiltBk))
     // PAIR-LEVEL verdict pass-through, fused into ONE linear pipeline
-    // (r10's semi ∪ verify(anti) shape consumed the candidate stream
-    // twice and needed it persisted — one persist, two joins and a
+    // (a semi ∪ verify(anti) shape consumes the candidate stream
+    // twice and needs it persisted — one persist, two joins and a
     // union more than this): left-join the stored verified-pair
     // marker, attach the doc-set probes, and let `coalesce(known,
     // jaccard)` short-circuit — codegen evaluates the Jaccard
@@ -812,12 +806,11 @@ object Dedup {
     // are immutable, so a stored verdict can never change). All three
     // joins are broadcast map-side — the candidate stream never
     // shuffles. Verification runs against the stored doc-set
-    // relation through the COSTED SELECTOR [[lshVerdictJoin]] (r15,
-    // VERDICT r14 task 5): below [[ProbeTokenCap]] the whole relation
-    // broadcasts hinted (the r13 A/B winner at fixture scale — the
-    // semi-filter's extra materialization measured as a net loss
-    // there); above it the probes are semi-pruned to the candidate
-    // endpoints and hint-free. Rebuilt buckets contain no deleted
+    // relation through the COSTED SELECTOR [[lshVerdictJoin]]: below
+    // [[ProbeTokenCap]] the whole relation broadcasts hinted (the A/B
+    // winner at fixture scale — the semi-filter's extra
+    // materialization measured as a net loss there); above it the
+    // probes are semi-pruned to the candidate endpoints and hint-free. Rebuilt buckets contain no deleted
     // docs (bucketsTouched applies the delta before grouping), so
     // the join never looks up a deleted doc either way.
     val (rebuilt, vScratch) = lshVerdictJoin(s, d, rebuiltCands)
@@ -842,7 +835,7 @@ object Dedup {
     * endpoints + hint-free above it (the candidate stream is
     * materialized first in that branch, so the two probe builds read
     * cached rows instead of racing to compute the bucket rebuild —
-    * the failure mode the r13 A/B measured). Returns the lazy frame
+    * the failure mode an A/B measured). Returns the lazy frame
     * plus any scratch this function persisted (caller releases after
     * its one materialization). */
   private[graft] def lshVerdictJoin(s: SparkSession, d: String,
@@ -906,11 +899,34 @@ object Dedup {
                      chunkTokens: Int): DataFrame =
     chunkGroupsOf(chunkOccurrences(docs, idCol, textCol, chunkTokens))
 
+  /** q181's chunk-dedup oracle over the document relation `rel`; q191
+    * checks against it over its post-delta corpus. */
+  private def chunksSql(rel: String): String =
+    s"""WITH t AS (
+           SELECT doc_id, string_split(text, ' ') AS toks FROM $rel
+         ), x AS (
+           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
+           FROM t WHERE len(toks) >= 16
+         ), c AS (
+           SELECT doc_id,
+             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
+           FROM x
+         )
+         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
+           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+           min(doc_id) AS keep_id
+         FROM c GROUP BY h
+         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h"""
+
+  /** q49's exact-dedup oracle over the document relation `rel`; its
+    * incremental twins check against it over their post-delta corpus. */
+  private def exactSql(rel: String): String =
+    s"""SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
+         FROM $rel GROUP BY md5(text) ORDER BY h"""
+
   val queries: Seq[Query] = Seq(
     /** q49: exact dedup by content hash, keep min doc_id. */
-    Query("q_dedup_exact",
-      """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
-         FROM documents GROUP BY md5(text) ORDER BY h""")((s, d) => {
+    Query("q_dedup_exact", exactSql("documents"))((s, d) => {
       documents(s, d)
         .groupBy(md5(col("text").cast("binary")).as("h"))
         .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keep_id"))
@@ -927,8 +943,7 @@ object Dedup {
     Query("q_incr_dedup_exact",
       // q125's oracle IS q49's: the associative group merge must be
       // result-invisible.
-      """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
-         FROM documents GROUP BY md5(text) ORDER BY h""")((s, d) => {
+      exactSql("documents"))((s, d) => {
       val delta = Delta.tenWay(documents(s, d), "doc_id").map(
         _.groupBy(md5(col("text").cast("binary")).as("h"))
           .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keep_id")))
@@ -1030,17 +1045,7 @@ object Dedup {
     /** q126 oracle: the q108 and q110 pair CTEs verbatim, unioned into
       * one edge set, 5 unrolled min-label stages over ALL doc ids. */
     Query("q_dedup_multimodal_groups", {
-      def stage(k: Int): String = {
-        val prev = s"label${k - 1}"
-        s"""label$k AS (
-            SELECT p.node, least(p.label, coalesce(s.mc, 999999999)) AS label
-            FROM $prev p LEFT JOIN (
-              SELECT e.dst AS node, MIN(p2.label) AS mc
-              FROM mm_edges e JOIN $prev p2 ON p2.node = e.src
-              GROUP BY e.dst
-            ) s ON s.node = p.node
-          )"""
-      }
+      val stages = (1 to 5).map(IterQueries.minStageSql(_, "label", 0, "mm_edges"))
       s"""WITH toks AS (
            SELECT DISTINCT doc_id, tok FROM (
              SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -1082,7 +1087,7 @@ object Dedup {
            SELECT b AS src, a AS dst FROM pairs
          ),
          label0 AS (SELECT doc_id AS node, doc_id AS label FROM documents),
-         ${(1 to 5).map(stage).mkString(",\n")}
+         ${stages.mkString(",\n")}
          SELECT node AS doc_id, label AS keep_id
          FROM label5 ORDER BY doc_id"""
     })((s, d) => {
@@ -1211,22 +1216,7 @@ object Dedup {
       * combines map-side, so at 100 TB this stays a single
       * corpus-proportional shuffle (production follows with a
       * semi-join of kept chunks back to docs, the same shape). */
-    Query("q_dedup_chunks",
-      """WITH t AS (
-           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-         ), x AS (
-           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
-           FROM t WHERE len(toks) >= 16
-         ), c AS (
-           SELECT doc_id,
-             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
-           FROM x
-         )
-         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           min(doc_id) AS keep_id
-         FROM c GROUP BY h
-         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""")((s, d) =>
+    Query("q_dedup_chunks", chunksSql("documents"))((s, d) =>
       chunkDupGroups(documents(s, d), "doc_id", "text", chunkTokens = 16)
         .orderBy("h")),
 
@@ -1241,26 +1231,7 @@ object Dedup {
       * docs only) and broadcast. Oracle = the batch chunker over the
       * post-delta corpus — maintenance must be result-invisible. */
     Query("q_incr_chunks",
-      // q190 is oracle=none (DataSketches HLL is not cross-engine);
-      // Round12bSpec pins estimate accuracy and stored-sketch serving.
-      // q191's oracle: the batch chunker over the POST-DELTA corpus —
-      // the group-level maintenance must be result-invisible.
-      """WITH t AS (
-           SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-           WHERE doc_id % 10 <> 1
-         ), x AS (
-           SELECT doc_id, unnest(range(0, len(toks) // 16)) AS ci, toks
-           FROM t WHERE len(toks) >= 16
-         ), c AS (
-           SELECT doc_id,
-             md5(array_to_string(toks[ci * 16 + 1 : ci * 16 + 16], ' ')) AS h
-           FROM x
-         )
-         SELECT h, CAST(count(*) AS BIGINT) AS n_occ,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-           min(doc_id) AS keep_id
-         FROM c GROUP BY h
-         HAVING count(DISTINCT doc_id) >= 2 ORDER BY h""")((s, d) => {
+      chunksSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(documents(s, d), "doc_id")
         .map(chunkOccurrences(_, "doc_id", "text", chunkTokens = 16))
       Maintain.groupRecompute(delta.base, delta.post, Seq("h"),
@@ -1274,10 +1245,7 @@ object Dedup {
       * only for hashes whose min was deleted. Oracle = q49's full
       * dedup over the post-delta corpus. */
     Query("q_incr_dedup_delete",
-      // q134's oracle is q49's full dedup over the POST-DELTA corpus.
-      """SELECT md5(text) AS h, count(*) AS n_dups, min(doc_id) AS keep_id
-         FROM documents WHERE doc_id % 10 <> 1
-         GROUP BY md5(text) ORDER BY h""")((s, d) => {
+      exactSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(documents(s, d), "doc_id")
       val baseIndex = delta.base
         .select(md5(col("text").cast("binary")).as("h"), col("doc_id"))

@@ -248,7 +248,7 @@ object MinHash {
   /** Session-memoized [[banded]] index of the q51 subset corpus —
     * the LSH index relation its own scaladoc declares "the stored
     * state of an evolving corpus" (production persists it via
-    * `IncrMerge.writePartials`; q139's full-corpus twin is Round8's
+    * `IncrMerge.writePartials`; q139's full-corpus twin is Dedup's
     * cachedLshBandedOld). r18 opt: q51 re-ran the 32-permutation
     * signature aggregation + band explode per invocation although
     * the index is deterministic static structure per (session,

@@ -189,7 +189,7 @@ object SimHash {
 
   /** The STORED state of q147's base subset corpus (doc_id % 5 == 0
     * minus the % 50 == 0 insert class) — the preserved state [P §3],
-    * session-memoized like `Round8`'s LSH stores. */
+    * session-memoized like `Dedup`'s LSH stores. */
   private def bandedOldCached(s: org.apache.spark.sql.SparkSession,
                               d: String): DataFrame =
     Memos.frame(s, d, "simhash/bandedOld")(
@@ -209,7 +209,7 @@ object SimHash {
 
   /** Per-(band, bh) VERIFIED near-dup pairs of the base corpus — the
     * second half of the preserved state, the [P §5] per-group
-    * intermediate store ([[graft.ops.Round8]]'s cachedLshPairsByBucket
+    * intermediate store (`Dedup.cachedLshPairsByBucket`
     * for this family). All-integer rows (band, bh, doc_a, doc_b,
     * hamming); production persists it next to the band index via
     * `incr.StateStore`. Verification here is the in-line popcount, so

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import graft.engine.{Memos, Query}
 import graft.engine.Tables._
-import graft.iter.KMeans
+import graft.iter.{IterQueries, KMeans}
 import org.apache.spark.sql.expressions.Window
 import graft.incr.Delta
 
@@ -22,7 +22,10 @@ import graft.incr.Delta
   *
   * Determinism: dot products are explicit left-to-right double folds —
   * the DuckDB oracle uses the same element order and width, so the
-  * doubles match bitwise. */
+  * doubles match bitwise.
+  *
+  * Also batch KNN and IVF search (with the signed IVF maintenance)
+  * and the PPJoin set-similarity joins. */
 object Similarity {
 
   /** Session-memoized cosine>=0.4 pair graph (the
@@ -562,12 +565,12 @@ object Similarity {
   val annIvfBatch: Query =
     Query("q_sim_ann_ivf_batch")((s, d) => {
       val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      // r18 opt: stored √n-centroid index via the session memo (the
-      // ivfIndex build is offline in the declared production shape)
-      val (indexed, cents) = Similarity.cachedIvfIndex(s, d, 0)
+      // stored √n-centroid index via the session memo (the ivfIndex
+      // build is offline in the declared production shape)
+      val (indexed, cents) = cachedIvfIndex(s, d, 0)
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
-      Similarity.ivfSearchBatch(s, indexed, cents, probes,
+      ivfSearchBatch(s, indexed, cents, probes,
           nprobe = 3, topK = 3, corpusCached = true)
         .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
         .orderBy("probe_id", "rn")
@@ -579,7 +582,7 @@ object Similarity {
 
   /** Rarest-first sorted arrays of an arbitrary (doc_id, tok)
     * DISTINCT relation — the generic PPJoin preprocessing. */
-  private[graft] def rarestFirstArrays(toks: DataFrame): DataFrame = {
+  private def rarestFirstArrays(toks: DataFrame): DataFrame = {
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     toks.join(dfreq, "tok")
       .groupBy("doc_id")
@@ -616,7 +619,7 @@ object Similarity {
       col("n_docs").as("n_docs_a"))
     val nb = reps.select(col(idCol).as("doc_b"),
       col("n_docs").as("n_docs_b"))
-    // no broadcast hint (r13 audit): the reps relation is reps-count-
+    // no broadcast hint: the reps relation is reps-count-
     // sized, which DEGENERATES to |docs| on a clone-free corpus — AQE
     // decides from runtime sizes (broadcast at fixture scale, shuffle
     // join when reps are corpus-like)
@@ -627,7 +630,7 @@ object Similarity {
   }
 
   private def sortedDocArrays(s: SparkSession, d: String): DataFrame =
-    Memos.frame(s, d, "round12b/ppjoin_arrays") {
+    Memos.frame(s, d, "similarity/ppjoin_arrays") {
       val toks = documents(s, d)
         .filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -900,17 +903,7 @@ object Similarity {
     /** q110 oracle: q67's validated cosine formulation at 0.4, then
       * the same 5 unrolled min-label stages as q108. */
     Query("q_dedup_embedding_groups", {
-      def stage(k: Int): String = {
-        val prev = s"label${k - 1}"
-        s"""label$k AS (
-            SELECT p.node, least(p.label, coalesce(s.mc, 999999999)) AS label
-            FROM $prev p LEFT JOIN (
-              SELECT e.dst AS node, MIN(p2.label) AS mc
-              FROM emb_edges e JOIN $prev p2 ON p2.node = e.src
-              GROUP BY e.dst
-            ) s ON s.node = p.node
-          )"""
-      }
+      val stages = (1 to 5).map(IterQueries.minStageSql(_, "label", 0, "emb_edges"))
       s"""WITH n AS (
            SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(list_zip(embedding, embedding),
@@ -930,7 +923,7 @@ object Similarity {
            SELECT vec_b AS src, vec_a AS dst FROM pairs
          ),
          label0 AS (SELECT vec_id AS node, vec_id AS label FROM n),
-         ${(1 to 5).map(stage).mkString(",\n")}
+         ${stages.mkString(",\n")}
          SELECT node AS vec_id, label AS keep_id
          FROM label5 ORDER BY vec_id"""
     })((s, d) => {
@@ -960,12 +953,12 @@ object Similarity {
     Query("q_sim_ann_ivf_incr")((s, d) => {
       val delta = Delta.tenWay(
         embeddings(s, d).select(col("vec_id"), col("embedding")), "vec_id")
-      val (indexedOld, cents) = Similarity.ivfIndex(s, delta.base)
-      val maintained = Similarity.ivfApplyDelta(s, indexedOld, cents,
+      val (indexedOld, cents) = ivfIndex(s, delta.base)
+      val maintained = ivfApplyDelta(s, indexedOld, cents,
         delta.inserts, delta.deletes.select("vec_id"))
       val probes = delta.post.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
-      Similarity.ivfSearchBatch(s, maintained, cents, probes,
+      ivfSearchBatch(s, maintained, cents, probes,
           nprobe = 3, topK = 3)
         .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
         .orderBy("probe_id", "rn")
@@ -977,10 +970,10 @@ object Similarity {
       * SimilaritySpec asserts recall vs the exact q52 top-k and
       * nprobe=k ≡ brute force. */
     Query("q_sim_ann_ivf")((s, d) =>
-      // r18 opt: stored index via the session memo (build offline in
-      // the declared production shape); search per invocation.
-      graft.text.Similarity.ivfTopK(s, d,
-        pre = Some(graft.text.Similarity.cachedIvfIndex(s, d, 10)))
+      // stored index via the session memo (build offline in the
+      // declared production shape); search per invocation.
+      ivfTopK(s, d,
+        pre = Some(cachedIvfIndex(s, d, 10)))
         .drop("cluster")),
 
     /** q203: PREFIX-FILTERED EXACT SET-SIMILARITY JOIN [N dedup scale
@@ -1020,7 +1013,7 @@ object Similarity {
         .orderBy("doc_a", "doc_b")),
 
     /** q272: DEDUP-FIRST τ-JOIN [N dedup scale path] — the production
-      * COMPOSITION the r13 sf1 scale run showed q203 needs on
+      * COMPOSITION the sf1 scale run showed q203 needs on
       * clone-heavy corpora: q203 is output-proportional (the sf1
       * clone fixture has 100× more genuinely qualifying pairs —
       * 23.7M rows), so the pipeline collapses exact-duplicate
@@ -1082,7 +1075,7 @@ object Similarity {
       // production materializes it next to the dedup index and
       // downstream consumers read it, they don't re-join per query.
       // The first invocation pays the full pipeline end-to-end.
-      Memos.frame(s, d, "round12b/setjoin_dedup")(
+      Memos.frame(s, d, "similarity/setjoin_dedup")(
         dedupFirstJaccardPairs(
             documents(s, d).filter(col("doc_id") % 2 === 0),
             "doc_id", "text", 9, 10)

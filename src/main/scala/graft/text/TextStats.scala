@@ -7,7 +7,9 @@ import graft.engine.Dec._
 import org.apache.spark.sql.DataFrame
 import graft.incr.{Delta, Maintain}
 
-/** §2 group I — text analysis + UDF/UDTF surfaces [N]. */
+/** §2 group I — text analysis (TF-IDF, word counts, edit distance,
+  * winnowing, PMI, LM rarity) + UDF/UDTF surfaces [N], each
+  * incremental twin beside the batch row it must equal. */
 object TextStats {
 
   /** Scalar UDF surface (q54): text normalizer. Kept as a genuine
@@ -49,22 +51,7 @@ object TextStats {
     * broadcast join; tf is one shuffle on (doc, term). */
   val textTfidf: Query =
     Query("q_text_tfidf",
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents
-         ), t AS (
-           SELECT doc_id, term, count(*) AS tf FROM toks
-           WHERE length(term) > 0 GROUP BY doc_id, term
-         ), d AS (
-           SELECT term, count(*) AS df FROM t GROUP BY term
-         ), n AS (
-           SELECT count(*) AS nd FROM documents
-         )
-         SELECT doc_id, term,
-           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
-             AS tfidf
-         FROM t JOIN d USING (term), n
-         ORDER BY tfidf DESC, doc_id, term LIMIT 20""")((s, d) =>
+      tfidfSql("documents"))((s, d) =>
       // single source of truth for the op chain: the facade pipeline
       // (the oracle depends on its exact IEEE op sequence)
       graft.Graft.tfidf(documents(s, d), "doc_id", "text")
@@ -186,6 +173,26 @@ object TextStats {
         s"array_distinct(transform(sequence(1, size(hs) - ${w - 1}), " +
           s"j -> array_min(slice(hs, j, $w))))")))
       .select(col("doc_id"), col("fp"))
+
+  /** q95's TF-IDF oracle over the document relation `rel`; q133 checks
+    * against it over its post-delta corpus. */
+  private def tfidfSql(rel: String): String =
+    s"""WITH toks AS (
+           SELECT doc_id, unnest(string_split(text, ' ')) AS term
+           FROM $rel
+         ), t AS (
+           SELECT doc_id, term, count(*) AS tf FROM toks
+           WHERE length(term) > 0 GROUP BY doc_id, term
+         ), d AS (
+           SELECT term, count(*) AS df FROM t GROUP BY term
+         ), n AS (
+           SELECT count(*) AS nd FROM $rel
+         )
+         SELECT doc_id, term,
+           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
+             AS tfidf
+         FROM t JOIN d USING (term), n
+         ORDER BY tfidf DESC, doc_id, term LIMIT 20"""
 
   val queries: Seq[Query] = Seq(
     /** q53: per-language corpus stats. */
@@ -353,9 +360,9 @@ object TextStats {
     // q119's oracle IS q95's full TF-IDF: the incremental df/N merge
     // must be result-invisible. doc_id is in the SELECT only via the
     // shared projection, so the text is reused verbatim.
-    Query("q_incr_tfidf", TextStats.textTfidf.oracle.get)((s, d) => {
+    Query("q_incr_tfidf", textTfidf.oracle.get)((s, d) => {
       val docs = documents(s, d)
-      val delta = Delta.tenWay(docs, "doc_id").map(TextStats.tfOf)
+      val delta = Delta.tenWay(docs, "doc_id").map(tfOf)
       val tfBase = delta.base
       val tfDelta = delta.inserts
       def dfOf(tf: org.apache.spark.sql.DataFrame) =
@@ -381,25 +388,7 @@ object TextStats {
       * full TF-IDF over the post-delta corpus (doc_id % 10 <> 1):
       * the signed merge must be result-invisible. */
     Query("q_incr_tfidf_delete",
-      // q154: oracle=none (FP-order-sensitive centroid means, like q44).
-      // q133's oracle is q95's full TF-IDF over the POST-DELTA corpus:
-      // signed incremental maintenance must be result-invisible.
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           FROM documents WHERE doc_id % 10 <> 1
-         ), t AS (
-           SELECT doc_id, term, count(*) AS tf FROM toks
-           WHERE length(term) > 0 GROUP BY doc_id, term
-         ), d AS (
-           SELECT term, count(*) AS df FROM t GROUP BY term
-         ), n AS (
-           SELECT count(*) AS nd FROM documents WHERE doc_id % 10 <> 1
-         )
-         SELECT doc_id, term,
-           CAST(tf AS DOUBLE) * ln(CAST(nd AS DOUBLE) / CAST(df AS DOUBLE))
-             AS tfidf
-         FROM t JOIN d USING (term), n
-         ORDER BY tfidf DESC, doc_id, term LIMIT 20""")((s, d) => {
+      tfidfSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
       val delta = Delta.tenWay(documents(s, d), "doc_id")
       val deletedIds = delta.deletes.select("doc_id")
       // signed doc-count merge: +1 base, +1 insert, −1 delete
@@ -531,7 +520,7 @@ object TextStats {
       // scheme (production maintains it incrementally like the signed
       // LSH index), so it is session-memoized per the q50/q170
       // pair-relation convention.
-      val fps = Memos.frame(s, d, "round12/winnowFps") {
+      val fps = Memos.frame(s, d, "textstats/winnowFps") {
         val f = winnowFingerprints(documents(s, d), "doc_id", "text",
           k = 4, w = 4).persist()
         f.count()

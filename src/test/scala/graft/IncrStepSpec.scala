@@ -145,7 +145,7 @@ class IncrStepSpec extends SparkSpecBase {
     assertOneMergeShuffle(IncrMerge.mergePartials(Seq("k"), stored, delta), delta)
   }
 
-  test("Aggs.valueCountStateFrom: base and delta value counts meet in one shuffle (AQE off)") {
+  test("Round12.valueCountStateFrom: base and delta value counts meet in one shuffle (AQE off)") {
     val baseCounts = Seq((1L, 2L), (3L, 1L)).toDF("v", "n")
     val ins = Seq(1L, 5L).toDF("x")
     val del = Seq(3L).toDF("x")

@@ -8,8 +8,10 @@ import scala.jdk.CollectionConverters._
   * `graft.engine.Query` values in `queries`, and `SparkEntry.all`
   * joins those lists. These guards fail when a module grows a
   * name-keyed `defs`/`sql` map again, when two rows share a name (the
-  * maps derived from `all` would keep only one), or when a row list
-  * kept elsewhere names a row that is not registered. */
+  * maps derived from `all` would keep only one), when a row list
+  * kept elsewhere names a row that is not registered, when a module
+  * is filed by the batch that added it (`Round…`, `Extras`) instead of
+  * by its family, or when one oracle SQL text is written twice. */
 class RegistryGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val owner = root.resolve("graft/SparkEntry.scala")
@@ -20,11 +22,15 @@ class RegistryGuardSpec extends AnyFunSuite {
     ("""\b(?:val|def)\s+(?:defs|sql)\w*\s*""" +
       """(?::\s*Map\[String\b|(?::[^=\n]*)?=\s*Map\s*[\[(.])""").r
 
-  test("no defs/sql registry map outside SparkEntry") {
+  private def sources = {
     assert(Files.isDirectory(root), s"run from the repo root: $root missing")
-    val sources = Files.walk(root).iterator().asScala
+    val all = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.size > 50 && sources.contains(owner))
+    assert(all.size > 50 && all.contains(owner))
+    all
+  }
+
+  test("no defs/sql registry map outside SparkEntry") {
     val hits = for {
       p <- sources if p != owner
       m <- registryMap.findAllMatchIn(Files.readString(p))
@@ -50,5 +56,31 @@ class RegistryGuardSpec extends AnyFunSuite {
       "q_stream_sink_roundtrip", "q_stream_restart_exactly_once",
       "q_stream_join_interval", "q_stream_dedup", "q_stream_merge_upsert"))
     assert(SparkEntry.streamingRows.subsetOf(names))
+  }
+
+  test("no module is named for a batch: Round<n>… or Extras") {
+    val batchName = """Round\d+\w*|Extras""".r
+    val topObject = """(?m)^object\s+(\w+)""".r
+    val hits = sources.flatMap { p =>
+      val file = p.getFileName.toString.stripSuffix(".scala")
+      val objs = topObject.findAllMatchIn(Files.readString(p)).map(_.group(1))
+      (Seq(file) ++ objs).distinct.filter(batchName.matches)
+        .map(n => s"$p: $n")
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("no SELECT-bearing SQL literal is written twice") {
+    val literal = "(?s)\"\"\"(.*?)\"\"\"".r
+    val copies = (for {
+      p <- sources
+      text = Files.readString(p)
+      m <- literal.findAllMatchIn(text) if m.group(1).contains("SELECT")
+    } yield m.group(1).trim.replaceAll("\\s+", " ") -> {
+      val line = text.substring(0, m.start).count(_ == '\n') + 1
+      s"${root.relativize(p)}:$line"
+    }).groupBy(_._1).values.filter(_.size > 1).map(_.map(_._2).mkString(" = "))
+    assert(copies.isEmpty,
+      copies.mkString("\nshare one definition instead:\n", "\n", ""))
   }
 }

@@ -136,7 +136,7 @@ class Round12Spec extends SparkSpecBase {
     // partition; the compacted copy has exactly one per day
     val root = new java.io.File(
       s"${sys.props("java.io.tmpdir")}").listFiles()
-      .filter(f => f.getName.startsWith("graft_r12_") &&
+      .filter(f => f.getName.startsWith("graft_streamops_") &&
         f.getName.endsWith(spark.sparkContext.applicationId))
       .map(f => new java.io.File(f, "compact")).find(_.exists())
     assert(root.isDefined, "compaction scratch root not found")

@@ -89,7 +89,7 @@ class Round12bSpec extends SparkSpecBase {
     // the at-least-once landing really contains every file twice
     val src = new java.io.File(
       s"${sys.props("java.io.tmpdir")}").listFiles()
-      .filter(f => f.getName.startsWith("graft_r12_") &&
+      .filter(f => f.getName.startsWith("graft_streamops_") &&
         f.getName.endsWith(spark.sparkContext.applicationId))
       .map(f => new java.io.File(f, "sdedup/src")).find(_.exists())
     assert(src.isDefined, "dedup landing dir not found")

@@ -9,7 +9,8 @@ import scala.collection.concurrent.TrieMap
   * flags, scratch layouts on disk — is keyed by (session, fixture
   * dir, tag), where the tag is `"<module>/<name>"` (`"graphs/edges"`,
   * `"lsh/lshBandedOld"`): the module prefix keeps every row's entries
-  * apart, so no two rows can share one by accident. Three entry
+  * apart, so no two rows can share one by accident, and no two modules
+  * use one prefix (`MemoApiGuardSpec`). Three entry
   * points:
   *
   *  - [[frame]] — a DataFrame, BYTE-BUDGETED: each admission checks

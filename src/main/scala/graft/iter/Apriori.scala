@@ -271,7 +271,7 @@ object Apriori {
       // session-memoized like aprioriToks/aprioriBaseState in the
       // incremental rows, so warm invocations pay the L2/L3 mining,
       // not the alphabet's corpus aggregation + join
-      val docArr = Memos.frame(s, d, "graphs/aprioriDocArr100")(
+      val docArr = Memos.frame(s, d, "apriori/docArr100")(
         docArrays(toks, minSupport).persist())
       frequentItemsets(toks, 3, minSupport, docArrPre = Some(docArr))
         .select(element_at(col("items"), 1).as("tok_a"),
@@ -289,7 +289,7 @@ object Apriori {
       * oracle is the full-corpus brute-force pair expansion (identical
       * to q45's) — the incremental path must be result-invisible. */
     Query("q_incr_apriori", pairsSql("documents"))((s, d) => {
-      val toks = Memos.frame(s, d, "graphs/aprioriToks")(
+      val toks = Memos.frame(s, d, "apriori/toks")(
         documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
           .filter(length(col("tok")) > 0)
@@ -304,7 +304,7 @@ object Apriori {
       // invocations — in deployment this lives in the partials store
       // (q103's writePartials); the delta is 50 docs by construction,
       // so minSup-50 lower-bounds every possible relaxed threshold
-      val baseState = Memos.frame(s, d, "graphs/aprioriBaseState")(
+      val baseState = Memos.frame(s, d, "apriori/baseState")(
         frequentItemsets(delta.base, 2,
           math.max(1L, minSupport - 50L)).localCheckpoint())
       val out = frequentItemsetsIncr(delta.base, delta.inserts, 2,
@@ -325,7 +325,7 @@ object Apriori {
       * corpus: signed maintenance must be result-invisible. */
     Query("q_incr_apriori_delete",
       pairsSql("(SELECT * FROM documents WHERE doc_id % 10 <> 1)"))((s, d) => {
-      val toks = Memos.frame(s, d, "graphs/aprioriToks")(
+      val toks = Memos.frame(s, d, "apriori/toks")(
         documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
           .filter(length(col("tok")) > 0)
@@ -338,7 +338,7 @@ object Apriori {
       // memo block: it is a property of the stored state, not of the
       // per-batch maintenance, so warm invocations must not pay the
       // count job (VERDICT r10's q137 drift was partly this).
-      val baseState = Memos.frame(s, d, "graphs/aprioriDeltaBaseState") {
+      val baseState = Memos.frame(s, d, "apriori/deltaBaseState") {
         val nIns = delta.inserts.select("doc_id").distinct().count()
         frequentItemsets(delta.base, 2,
           math.max(1L, minSupport - nIns)).localCheckpoint()

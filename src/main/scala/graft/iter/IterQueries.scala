@@ -138,7 +138,7 @@ object IterQueries {
     * incremental path (identical deterministic computation — memoized
     * per session+dir). */
   def converged5(s: SparkSession, d: String): DataFrame =
-    Memos.frame(s, d, "graphs/pr5")(conf(s) {
+    Memos.frame(s, d, "iter/pr5")(conf(s) {
       // the fixture graph is symmetrized -> every node has in-edges
       pagerankOn(Graphs.nodesCached(s, d), Graphs.edgesDegCached(s, d), 5,
         allInDeg = true)
@@ -732,9 +732,9 @@ object IterQueries {
          SELECT label AS comp_id, count(*) AS n_nodes
          FROM label5 GROUP BY label ORDER BY comp_id"""
     })((s, d) => {
-      // structure memo (the "graphs/..." frames): the incidence
+      // structure memo (the "iter/..." frames): the incidence
       // graph is static; the COLLAPSE runs per invocation
-      val edges = Memos.frame(s, d, "graphs/liIncidenceE") {
+      val edges = Memos.frame(s, d, "iter/liIncidenceE") {
         val li = lineitem(s, d)
           .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
         val und = li.select((col("l_orderkey") * 4).as("a"),
@@ -745,7 +745,7 @@ object IterQueries {
           .union(und.select(col("b").as("src"), col("a").as("dst")))
           .localCheckpoint()
       }
-      val nodes = Memos.frame(s, d, "graphs/liIncidenceN")(
+      val nodes = Memos.frame(s, d, "iter/liIncidenceN")(
         edges.select(col("src").as("node")).distinct().localCheckpoint())
       val nEdges = 4 * Memos.value(s, d, "iter/liCount")(
         lineitem(s, d).count())
@@ -770,7 +770,7 @@ object IterQueries {
       // repeat calls are cache hits (built under the loop conf like
       // the other structure caches; see the Graphs note on build
       // parallelism for the measured local-size tradeoff).
-      val edges2 = Memos.frame(s, d, "graphs/edges2deg")(conf(s) {
+      val edges2 = Memos.frame(s, d, "iter/edges2deg")(conf(s) {
         val e2 = withDeg(edgesDeleted(Graphs.edgesCached(s, d), 17).post)
         e2.count()
         e2
@@ -786,7 +786,7 @@ object IterQueries {
     Query("q_iter_sssp", ssspSql5)((s, d) => {
       // memoized final state (the mrbgResult pattern): deterministic
       // per (session, dir), so repeat invocations are cache hits
-      Memos.frame(s, d, "graphs/ssspResult")(conf(s) {
+      Memos.frame(s, d, "iter/ssspResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val (state0, changed0) = Loop.fromSource(n, Loop.minNode(n))
@@ -823,14 +823,14 @@ object IterQueries {
       // localCheckpoints, so repeat invocations are cache hits
       // instead of re-running the seed-union + 3 frontier rounds
       // (~15 sequential micro-stages) every time.
-      Memos.frame(s, d, "graphs/frontierResult")(conf(s) {
+      Memos.frame(s, d, "iter/frontierResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
         val delta = edgesInserted(full, 17)
-        val baseE = Memos.frame(s, d, "graphs/edgesBase")(delta.base.persist())
+        val baseE = Memos.frame(s, d, "iter/edgesBase")(delta.base.persist())
         val deltaE = delta.inserts
         val n = Graphs.nodesCached(s, d) // FULL node set; isolated-in-base stay INF
         val (state0, changed0) = Loop.fromSource(n, Loop.minNode(n))
-        val baseRun = Memos.frame(s, d, "graphs/ssspBase5")(
+        val baseRun = Memos.frame(s, d, "iter/ssspBase5")(
           minPropagate(baseE, state0, changed0, "dist", 1L, 5)
             .localCheckpoint())
         val res = iterateIncremental(full, deltaE,
@@ -851,7 +851,7 @@ object IterQueries {
     // q106: the generic GIM-V run must match the SAME unrolled oracle
     // as the specialized q41 loop
     Query("q_gimv_pagerank", pagerankSql(5))((s, d) => {
-      Rank.withRank(Memos.frame(s, d, "graphs/gimvPrResult")(conf(s) {
+      Rank.withRank(Memos.frame(s, d, "iter/gimvPrResult")(conf(s) {
         val edgesDeg = Graphs.edgesDegCached(s, d)
         val n = Graphs.nodesCached(s, d)
         finish(Loop.gimv(edgesDeg, n.selectExpr("node", Rank.init), "rs", 5)(
@@ -882,16 +882,16 @@ object IterQueries {
          ${stages.mkString(",\n")}
          SELECT node, dist FROM dist5 ORDER BY node"""
     })((s, d) => {
-      Memos.frame(s, d, "graphs/ssspDeleteResult")(conf(s) {
+      Memos.frame(s, d, "iter/ssspDeleteResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
         val delta = edgesDeleted(full, 17)
         val deleted = delta.deletes
-        val newE = Memos.frame(s, d, "graphs/edgesBase")(delta.post.persist())
+        val newE = Memos.frame(s, d, "iter/edgesBase")(delta.post.persist())
         val n = Graphs.nodesCached(s, d)
         val srcNode = Loop.minNode(n)
         // deletion restart requires a fully CONVERGED base state (a
         // mid-flight base could under-approximate the affected set)
-        val base = Memos.frame(s, d, "graphs/ssspConverged") {
+        val base = Memos.frame(s, d, "iter/ssspConverged") {
           val (state0, changed0) = Loop.fromSource(n, srcNode)
           minPropagateUntilStable(full, state0, changed0, "dist", 1L, 50)
             ._1.localCheckpoint()
@@ -904,7 +904,7 @@ object IterQueries {
     /** q43: connected components via min-label propagation (a GIM-V
       * instance [P §7]), FIXED 5 rounds. */
     Query("q_iter_connected_components", ccSql5)((s, d) => {
-      Memos.frame(s, d, "graphs/ccResult")(conf(s) {
+      Memos.frame(s, d, "iter/ccResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
         val (state0, changed0) = Loop.identity(Graphs.nodesCached(s, d))
         finish(minPropagate(edges, state0, changed0, "label", 0L, 5)
@@ -948,7 +948,7 @@ object IterQueries {
          SELECT node, rs, CAST(rs AS DOUBLE) / 10000000000 AS rank
          FROM r5 ORDER BY node"""
     })((s, d) => {
-      Rank.withRank(Memos.frame(s, d, "graphs/pprResult")(conf(s) {
+      Rank.withRank(Memos.frame(s, d, "iter/pprResult")(conf(s) {
         val edgesDeg = Graphs.edgesDegCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val seed = Loop.minNode(n)
@@ -969,7 +969,7 @@ object IterQueries {
     // q118: the generic GIM-V min-instance must match the SAME
     // unrolled oracle as the specialized q43 loop
     Query("q_gimv_cc", ccSql5)((s, d) => {
-      Memos.frame(s, d, "graphs/gimvCcResult")(conf(s) {
+      Memos.frame(s, d, "iter/gimvCcResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
         val (state0, _) = Loop.identity(Graphs.nodesCached(s, d))
         finish(Loop.gimv(edges, state0, "label", 5)(
@@ -986,7 +986,7 @@ object IterQueries {
     // q121: the generic GIM-V min-plus instance must match the SAME
     // unrolled oracle as the specialized q42 loop
     Query("q_gimv_sssp", ssspSql5)((s, d) => {
-      Memos.frame(s, d, "graphs/gimvSsspResult")(conf(s) {
+      Memos.frame(s, d, "iter/gimvSsspResult")(conf(s) {
         val edges = Graphs.edgesCached(s, d)
         val n = Graphs.nodesCached(s, d)
         val (state0, _) = Loop.fromSource(n, Loop.minNode(n))
@@ -1053,7 +1053,7 @@ object IterQueries {
          )
          SELECT CAST(node AS BIGINT) AS node, CAST(min(m) AS BIGINT) AS label
          FROM reach GROUP BY node ORDER BY node""")((s, d) => conf(s) {
-      val full = Memos.frame(s, d, "graphs/chainEdges") {
+      val full = Memos.frame(s, d, "iter/chainEdges") {
         val nodes = customer(s, d)
           .select(col("c_custkey").cast("long").as("node"))
         val eu = customer(s, d).filter(col("c_custkey") % 8 =!= 0)
@@ -1068,15 +1068,15 @@ object IterQueries {
       // edges), not the query's work — memoized beside chainEdges so
       // warm runs measure the delete restart, not input re-filtering
       val delta = edgesDeleted(full, 13)
-      val deleted = Memos.frame(s, d, "graphs/chainDeleted")(
+      val deleted = Memos.frame(s, d, "iter/chainDeleted")(
         delta.deletes.localCheckpoint())
-      val post = Memos.frame(s, d, "graphs/chainPost")(
+      val post = Memos.frame(s, d, "iter/chainPost")(
         delta.post.localCheckpoint())
       // converged pre-deletion labels — the paper's STORED state
       // [P §3], so session-memoized like q115's ccBase5: the
       // incremental query's own work is the delete restart, not the
       // base convergence it reads back
-      val base = Memos.frame(s, d, "graphs/chainCcBase") {
+      val base = Memos.frame(s, d, "iter/chainCcBase") {
         val (state0, changed0) = Loop.identity(customer(s, d)
           .select(col("c_custkey").cast("long").as("node")))
         minPropagateUntilStable(
@@ -1097,14 +1097,14 @@ object IterQueries {
          ${(base ++ incr).mkString(",\n")}
          SELECT node, label FROM label8 ORDER BY node"""
     })((s, d) => {
-      Memos.frame(s, d, "graphs/ccFrontierResult")(conf(s) {
+      Memos.frame(s, d, "iter/ccFrontierResult")(conf(s) {
         val full = Graphs.edgesCached(s, d)
         val delta = edgesInserted(full, 17)
-        val baseE = Memos.frame(s, d, "graphs/edgesBase")(delta.base.persist())
+        val baseE = Memos.frame(s, d, "iter/edgesBase")(delta.base.persist())
         val deltaE = delta.inserts
         // FULL node set, like q101
         val (state0, changed0) = Loop.identity(Graphs.nodesCached(s, d))
-        val baseRun = Memos.frame(s, d, "graphs/ccBase5")(
+        val baseRun = Memos.frame(s, d, "iter/ccBase5")(
           minPropagate(baseE, state0, changed0, "label", 0L, 5)
             .localCheckpoint())
         val res = iterateIncremental(full, deltaE,

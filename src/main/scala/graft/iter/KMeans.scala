@@ -256,7 +256,7 @@ object KMeans {
       // them back, `Round6Spec` proves that round-trip bit-exact): k×dims
       // doubles per (session, dir), so repeated invocations measure the
       // warm restart itself, not the base convergence
-      val baseCents = Memos.value(s, d, "lsh/kmeansBaseCents") {
+      val baseCents = Memos.value(s, d, "kmeans/baseCents") {
         val base = delta.base.persist()
         val seed = base.orderBy("vec_id").limit(10).collect()
           .map(_.getSeq[Float](1).map(_.toDouble).toArray)

@@ -115,7 +115,7 @@ object MrbgPagerank {
     // must be result-invisible
     Query("q_incr_mrbg", IterQueries.pagerankIncrSql(5, 2))((s0, d) => {
       val s = s0
-      Memos.frame(s, d, "graphs/mrbgResult")(Loop.conf(s) {
+      Memos.frame(s, d, "mrbg/result")(Loop.conf(s) {
         val nodes = Graphs.nodesCached(s, d)
         val edgesDegOld = Graphs.edgesDegCached(s, d)
         // converged base state — shared with q41/q48 (memoized)

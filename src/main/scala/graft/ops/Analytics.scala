@@ -897,7 +897,7 @@ object Analytics {
          FROM customer JOIN nation ON c_nationkey = n_nationkey
          WHERE n_regionkey = 0
          GROUP BY n_name ORDER BY n_name""")((s, d) => {
-      val scratch = s"${Memos.scratchDir(s, d, "r12c")}/dpp"
+      val scratch = s"${Memos.scratchDir(s, d, "analytics")}/dpp"
       Memos.value(s, d, "analytics_bitmap/dpp_write") {
         customer(s, d)
           .write.mode("overwrite").partitionBy("c_nationkey")

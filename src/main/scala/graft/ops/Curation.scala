@@ -77,7 +77,7 @@ object Curation {
     * rebuilding it would cost q148/q276 a full documents scan per
     * invocation for a KB-sized relation. */
   private def cachedEvalGrams(s: SparkSession, d: String): DataFrame =
-    Memos.frame(s, d, "lsh/contamEval")(
+    Memos.frame(s, d, "curation/contamEval")(
       contamGrams(documents(s, d).filter(col("doc_id") % 97 === 0),
         "eval_id").localCheckpoint())
 
@@ -87,7 +87,7 @@ object Curation {
     * Exposed for the spec's memo ≡ fresh-build equality pin. */
   private[graft] def cachedCleanNormedBase(s: SparkSession,
                                            d: String): DataFrame =
-    Memos.frame(s, d, "lsh/cleanNormedBase")(cleanNormed(
+    Memos.frame(s, d, "curation/cleanNormedBase")(cleanNormed(
       Delta.tenWay(documents(s, d), "doc_id").base).localCheckpoint())
 
   /** The q148 overlap join: train grams probe the BROADCAST eval gram
@@ -335,7 +335,7 @@ object Curation {
       // the genuine per-batch maintenance (delta aggregation, signed
       // canon application, passthrough anti-join, final join).
       val normedBase = cachedCleanNormedBase(s, d)
-      val normedIns = Memos.frame(s, d, "lsh/cleanNormedIns")(
+      val normedIns = Memos.frame(s, d, "curation/cleanNormedIns")(
         cleanNormed(delta.inserts).localCheckpoint())
       val deleted = delta.deletes.select("doc_id")
       val baseIndex = normedBase.select(col("h"), col("doc_id"))
@@ -602,7 +602,7 @@ object Curation {
       val delta = Delta.tenWay(
         documents(s, d).filter(col("doc_id") % 97 =!= 0), "doc_id")
       val ev = cachedEvalGrams(s, d)
-      val baseState = Memos.frame(s, d, "lsh/contamBase") {
+      val baseState = Memos.frame(s, d, "curation/contamBase") {
         contamPairs(contamGrams(delta.base, "train_id"), ev)
           .localCheckpoint()
       }

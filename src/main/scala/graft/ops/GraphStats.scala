@@ -131,7 +131,7 @@ object GraphStats {
     * part sets; ordered pairs expand in-row via two chained generators
     * and partial agg collapses them — never a fact self-join.
     *
-    * Session-memoized per fixture dir (the `"graphs/..."` memo frames):
+    * Session-memoized per fixture dir (a `"graphstats/..."` memo frame):
     * the strong-edge list is deterministic derived STRUCTURE — the
     * co-purchase graph a production deployment materializes once and
     * shares across graph analytics — and it was the whole repeat cost
@@ -139,7 +139,7 @@ object GraphStats {
     * cold build lands in `value_first`, warm medians measure the
     * count — same methodology as the other structure memos. */
   def strongEdges(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    Memos.frame(s, d, "graphs/strongEdges")(
+    Memos.frame(s, d, "graphstats/strongEdges")(
       lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("ps"))

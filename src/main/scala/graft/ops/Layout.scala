@@ -27,7 +27,7 @@ object Layout {
     val suffix = Integer.toHexString(d.hashCode)
     val (ordT, custT) = (s"g157_ord_$suffix", s"g157_cust_$suffix")
     Memos.value(s, d, "layout/bucketed") {
-      val root = Memos.scratchDir(s, d, "r11")
+      val root = Memos.scratchDir(s, d, "layout")
       s.sql(s"DROP TABLE IF EXISTS $ordT")
       s.sql(s"DROP TABLE IF EXISTS $custT")
       orders(s, d).write.bucketBy(8, "o_custkey").sortBy("o_custkey")
@@ -43,7 +43,7 @@ object Layout {
     * read layout. Returns its path. */
   private def partitionedEvents(s: SparkSession, d: String): String =
     Memos.value(s, d, "layout/evByDay") {
-      val path = s"${Memos.scratchDir(s, d, "r11")}/ev_by_day"
+      val path = s"${Memos.scratchDir(s, d, "layout")}/ev_by_day"
       events(s, d).withColumn("day", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("day").parquet(path)
       path
@@ -270,7 +270,7 @@ object Layout {
       * strictness (<256), Morton bijectivity, and result ≡ unpruned
       * scan. */
     Query("q_scan_zorder", zorderSql("events"))((s, d) => {
-      val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder"
+      val scratch = s"${Memos.scratchDir(s, d, "layout")}/zorder"
       val stats = Memos.value(s, d, "layout/zorder_stats") {
         val ev = events(s, d)
           .withColumn("dnum",
@@ -302,7 +302,7 @@ object Layout {
       * deletion on a constructed frame. */
     Query("q_incr_zorder", zorderSql(
       "(SELECT * FROM events WHERE event_id % 10 <> 1)"))((s, d) => {
-      val scratch = s"${Memos.scratchDir(s, d, "r12h")}/zorder_incr"
+      val scratch = s"${Memos.scratchDir(s, d, "layout")}/zorder_incr"
       val delta = Delta.tenWay(events(s, d), "event_id")
       val stats = Memos.value(s, d, "layout/zorder_incr_stats") {
         val b = delta.base.withColumn("dnum",

@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, countDistinct, rand, sum}
+import org.apache.spark.sql.functions.{col, concat, countDistinct, lit, rand,
+  sum}
 import org.apache.spark.sql.graftbridge.{ShuffleProbe, StoredBroadcast,
   StoredShuffle}
 import graft.engine.{Memos, Sessions, Tables}
@@ -35,6 +38,15 @@ trait ExchangeReuseFixtures extends SparkSpecBase {
     Memos.exchangesOf(s).map(_.value).collect { case x: StoredShuffle => x }
 
   def shuffleIds(s: SparkSession): Seq[Int] = shufflesOf(s).map(_.dep.shuffleId)
+
+  /** The ids of the shuffles that `x`'s map stage reads. */
+  def reads(x: StoredShuffle): Seq[Int] = {
+    def below(r: RDD[_]): Seq[Int] = r.dependencies.flatMap {
+      case d: ShuffleDependency[_, _, _] => Seq(d.shuffleId)
+      case d => below(d.rdd)
+    }
+    below(x.dep.rdd)
+  }
 
   def copyTree(from: Path, to: Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -74,6 +86,20 @@ class ExchangeReuseSpec extends ExchangeReuseFixtures {
       assert(hits > 0, s"$q: the warm call served no stored shuffle")
       assert((jobs1, jobs2) == ((cold, warm)), s"$q jobs (cold, warm)")
     }
+    Memos.clearAll()
+  }
+
+  test("(p) warm q_apriori_pairs serves its stacked shuffles") {
+    // measured at sf0.001, local[4]: the pair count's shuffle sits above
+    // the doc_id aggregate's shuffle stage, and the sort's range shuffle
+    // above the pair count's; a warm call starts only its result job
+    coldExchanges()
+    val (rows1, cold) = jobsOf(run("q_apriori_pairs"))
+    var warm: (Seq[Row], Int) = null
+    val (hits, misses) = lookups { warm = jobsOf(run("q_apriori_pairs")) }
+    assert(warm._1 == rows1)
+    assert(hits == 3 && misses == 0, s"$hits hit(s), $misses miss(es)")
+    assert((cold, warm._2) == ((5, 1)), "jobs (cold, warm)")
     Memos.clearAll()
   }
 
@@ -180,6 +206,23 @@ class ExchangeReuseSpec extends ExchangeReuseFixtures {
         assert(rows.map(q => run(q)) == expected, s"AQE $aqe, second calls")
         assert(Memos.evictions.get() > before, s"AQE $aqe: nothing evicted")
       }
+    // stacked: q_apriori_pairs sorts (a range shuffle) the pair counts
+    // (a hash shuffle) of per-document token sets (another one); the
+    // last exchange it keeps, the range shuffle, evicts both below it,
+    // and at the default budget the next call rebuilds those and is
+    // served the range shuffle above them
+    val pairs = run("q_apriori_pairs")
+    Sessions.withConf(spark, Memos.BudgetConf -> "1",
+        Memos.MinResidentConf -> "0") {
+      coldExchanges()
+      assert(run("q_apriori_pairs") == pairs)
+    }
+    val upper = shufflesOf(spark)
+    assert(upper.size == 1 && reads(upper.head).nonEmpty &&
+      Memos.exchangesOf(spark).size == 1, "only the range shuffle stays")
+    val (hits, _) = lookups(assert(run("q_apriori_pairs") == pairs))
+    assert(hits > 0 && shuffleIds(spark).contains(upper.head.dep.shuffleId),
+      "the range shuffle must be served over the rebuilt exchanges")
     Memos.clearAll()
   }
 
@@ -196,6 +239,23 @@ class ExchangeReuseSpec extends ExchangeReuseFixtures {
     assert(hits > 0, "the stored dependency must still be served")
     assert(ids.forall(ShuffleProbe.availableOutputs(sc, _) > 0),
       "the served shuffle's outputs must be recomputed under its own id")
+    // stacked: q_apriori_pairs' range shuffle reads its pair count's
+    // shuffle, which reads its token sets' shuffle; lose the lower
+    // outputs, then all of them
+    coldExchanges()
+    val pairs = run("q_apriori_pairs")
+    val read = shufflesOf(spark).flatMap(reads).toSet
+    val (lower, upper) = shufflesOf(spark).partition(x => read(x.dep.shuffleId))
+    assert(upper.size == 1 && lower.size == 2)
+    lower.foreach(x => ShuffleProbe.loseOutputs(sc, x.dep.shuffleId))
+    val (lowerLost, _) = lookups(assert(run("q_apriori_pairs") == pairs))
+    assert(lowerLost > 0, "the stacked shuffles must still be served")
+    val stacked = shuffleIds(spark)
+    stacked.foreach(ShuffleProbe.loseOutputs(sc, _))
+    val (allLost, _) = lookups(assert(run("q_apriori_pairs") == pairs))
+    assert(allLost > 0 && shuffleIds(spark) == stacked &&
+      stacked.forall(ShuffleProbe.availableOutputs(sc, _) > 0),
+      "the stacked shuffles must be recomputed under their own ids")
     Memos.clearAll()
   }
 
@@ -221,6 +281,48 @@ class ExchangeReuseSpec extends ExchangeReuseFixtures {
     } finally {
       Memos.clearAll()
       deleteRecursively(out)
+    }
+  }
+
+  test("(o) a stacked exchange misses when a table below it changes: q5 " +
+      "after a rewrite of nation (read only through a broadcast stage), " +
+      "q3 after one of lineitem") {
+    val dir = Files.createTempDirectory("graft_stacked_stale")
+    try {
+      for (t <- Tables.allNames) copyTree(Path.of(sfDir, s"$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+      val d = dir.toString
+      def rewrite(t: String)(f: DataFrame => DataFrame): Unit = {
+        val old = Tables.tbl(spark, d, t)
+        val rows = f(old).collect()
+        spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
+            old.schema)
+          .write.mode("overwrite").parquet(s"$d/$t.parquet")
+      }
+      for ((q, t, f) <- Seq[(String, String, DataFrame => DataFrame)](
+          ("q_tpch_q5", "nation",
+            _.withColumn("n_name", concat(col("n_name"), lit("_v2")))),
+          ("q_tpch_q3", "lineitem", _.where(col("l_linenumber") =!= 1)))) {
+        coldExchanges(d)
+        val before = run(q, d = d)
+        assert(run(q, d = d) == before)
+        val stored = shuffleIds(spark)
+        rewrite(t)(f)
+        var after: Seq[Row] = Nil
+        val (hits, misses) = lookups { after = run(q, d = d) }
+        assert(after != before, s"the rewrite of $t must change $q's rows")
+        assert(after == run(q, spark.newSession(), d),
+          s"$q must equal a fresh session's result")
+        val replaced = shuffleIds(spark)
+        assert(stored.nonEmpty && replaced.size == stored.size &&
+          replaced.intersect(stored).isEmpty,
+          s"$q: shuffles before the rewrite $stored, after $replaced")
+        assert(hits > 0 && misses >= stored.size, s"$q: $hits hit(s), " +
+          s"$misses miss(es); the broadcasts over other tables are served")
+      }
+    } finally {
+      Memos.clearAll()
+      deleteRecursively(dir)
     }
   }
 }

@@ -20,9 +20,9 @@ class IncrLedgerSpec extends SparkSpecBase {
     "q_incr_wordcount" -> 4,
     "q_incr_profile" -> 5,
     "q_incr_median" -> 7,
-    "q_incr_quality" -> 5,
+    "q_incr_quality" -> 2,
     "q_incr_diversity" -> 4,
-    "q_incr_tfidf_delete" -> 8,
+    "q_incr_tfidf_delete" -> 3,
     "q_incr_view_update" -> 8,
     "q_incr_join_view_delete" -> 7,
     "q_incr_linreg" -> 3,
@@ -36,24 +36,24 @@ class IncrLedgerSpec extends SparkSpecBase {
     "q_incr_scd2_delete" -> 5,
     "q_incr_ewma" -> 5,
     "q_incr_softdedup" -> 5,
-    "q_incr_bitmap_distinct" -> 5,
-    "q_incr_dau_wau" -> 10,
+    "q_incr_bitmap_distinct" -> 4,
+    "q_incr_dau_wau" -> 8,
     "q_incr_chunks" -> 7,
-    "q_incr_streaks" -> 6,
+    "q_incr_streaks" -> 4,
     "q_incr_resample" -> 7,
     "q_incr_pattern" -> 5,
-    "q_incr_anomaly_sigma" -> 7,
-    "q_incr_rfm" -> 6,
+    "q_incr_anomaly_sigma" -> 4,
+    "q_incr_rfm" -> 4,
     "q_incr_attribution" -> 6,
-    "q_incr_lifecycle" -> 7,
+    "q_incr_lifecycle" -> 6,
     // row-specific rules
     "q_dedup_simhash_incr" -> 16,
     "q_incr_band" -> 15,
     "q_incr_contamination" -> 5,
-    "q_incr_dedup_delete" -> 11,
-    "q_incr_dedup_exact" -> 3,
-    "q_incr_heavy_hitters" -> 5,
-    "q_incr_heavy_hitters_delete" -> 4,
+    "q_incr_dedup_delete" -> 8,
+    "q_incr_dedup_exact" -> 1,
+    "q_incr_heavy_hitters" -> 4,
+    "q_incr_heavy_hitters_delete" -> 1,
     "q_incr_join_view" -> 6,
     "q_incr_merge_into" -> 5,
     "q_incr_merge_partitioned" -> 1,
@@ -61,7 +61,7 @@ class IncrLedgerSpec extends SparkSpecBase {
     "q_incr_pipeline_clean_delete" -> 15,
     "q_incr_scd2" -> 4,
     "q_incr_snapshot_diff" -> 3,
-    "q_incr_tfidf" -> 5,
+    "q_incr_tfidf" -> 3,
     "q_incr_upsert_latest" -> 4,
     "q_incr_zorder" -> 5,
     "q_iter_kmeans_incr" -> 11,

@@ -32,10 +32,10 @@ class IterLedgerSpec extends SparkSpecBase {
     "q_incr_mrbg" -> (32, 3),
     "q_dedup_groups" -> (21, 4),
     "q_dedup_groups_converged" -> (21, 4),
-    "q_dedup_multimodal_groups" -> (24, 4),
-    "q_dedup_embedding_groups" -> (9, 4),
-    "q_dedup_groups_lsh" -> (27, 4),
-    "q_dedup_groups_lsh_incr" -> (25, 11))
+    "q_dedup_multimodal_groups" -> (24, 2),
+    "q_dedup_embedding_groups" -> (9, 2),
+    "q_dedup_groups_lsh" -> (27, 2),
+    "q_dedup_groups_lsh_incr" -> (25, 9))
 
   test("cold and warm job ledger of the iterative rows") {
     val measured = ledger.map { case (q, _) =>

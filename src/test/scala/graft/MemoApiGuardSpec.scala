@@ -46,6 +46,30 @@ class MemoApiGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
+  /** A memo call with a literal tag: `Memos.frame(s, d, "<tag>"` (also
+    * `value`, `scratchDir`, an `s"..."` tag, a type argument). */
+  private val memoCall =
+    """Memos\.(frame|value|scratchDir)(?:\[[^\]]*\])?\(\s*\w+\s*,\s*\w+\s*,\s*s?"([^"]*)"""".r
+  private val roundNamed = "(?i)(r|round)\\d+[a-z]*".r
+
+  test("each memo tag prefix belongs to one module; no scratch tag is " +
+      "round-named") {
+    val calls = for {
+      p <- sources
+      m <- memoCall.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8"))
+    } yield (p, m.group(1), m.group(2))
+    assert(calls.size > 100, s"the pattern matches only ${calls.size} calls")
+    val shared = calls.groupBy(_._3.takeWhile(_ != '/'))
+      .map { case (prefix, cs) => prefix -> cs.map(_._1).distinct }
+      .filter(_._2.size > 1)
+      .map { case (prefix, ps) => s"'$prefix' in ${ps.mkString(", ")}" }
+    val round = calls.collect {
+      case (p, "scratchDir", tag) if roundNamed.matches(tag) => s"$p: '$tag'"
+    }
+    assert(shared.isEmpty && round.isEmpty,
+      (shared ++ round).mkString("\n", "\n", ""))
+  }
+
   test("no fixture-table path outside engine/Tables.scala") {
     val tableLines = lines(tables)
     assert(tableLines.exists { case (l, _) => fixturePath.findFirstIn(l).isDefined },

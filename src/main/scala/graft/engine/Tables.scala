@@ -1,14 +1,18 @@
 package graft.engine
 
+import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+  SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Typed fixture readers for the driver-generated testdata
@@ -35,74 +39,126 @@ object Tables {
     *
     * The catalog entry lives in [[Memos.value]]'s store under tag
     * `tables/<name>` (one entry per path, replaced on change, dropped by
-    * [[Memos.clearAll]]) and holds the fingerprint of the files it was
-    * resolved from — the sorted (path, length, modification time) of
-    * every file the read's own file index listed, nested partition
-    * files included — with the schema to read them with. A hit reads
-    * with that schema (a listing, but no schema-inference job) and
-    * compares fingerprints; on a mismatch the table is inferred again
-    * and the entry replaced. A miss returns the inferring read itself. */
+    * [[Memos.clearAll]]). It holds the analyzed relation of the read
+    * that resolved the table and that read's fingerprint: the sorted
+    * (path, length, modification time) of every file its file index
+    * listed, nested partition files included. A hit lists the table's
+    * files once ([[listing]]) and, when they still match, returns a
+    * new instance of the stored relation (fresh attribute ids, the
+    * stored file index): no data source, no file index and no Spark
+    * job. On a mismatch the table is inferred again and the entry
+    * replaced. The stored index is never refreshed in place, so a
+    * frame returned earlier keeps reading the files it was built
+    * over. A miss returns the inferring read itself. */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
     graft.plans.GraftStrategies.install(s)
     val path = s"$dir/$name.parquet"
     val tag = s"tables/$name"
     Memos.stored[Entry](s, dir, tag)
-      .flatMap { e =>
-        val df = s.read.schema(e.schema).parquet(path)
-        if (fingerprint(df) == e.files) Some(e.finish(df)) else None
-      }
+      .filter(e => listing(s, path).contains(e.files))
+      .map(e => e.finish(Bridge.ofRows(s, e.relation.newInstance())))
       .getOrElse {
         val (df, ts) =
           if (name == "events") eventsRead(s, path)
           else (s.read.parquet(path), None)
-        val e = Entry(fingerprint(df), df.schema, ts)
+        val e = Entry(relationOf(df), ts)
         Memos.replace(s, dir, tag, e)
         e.finish(df)
       }
   }
 
-  /** Run SQL text over the fixture tables under `dir`: each table the
-    * text names gets a temp view of [[tbl]] under its own name, then
-    * the text runs as written. Only the named tables pay a resolution
-    * and a view registration. Views are resolved into the plan when
-    * `s.sql` analyzes it, so a frame returned here keeps reading `dir`
-    * even after a later call re-points a view at another dir. */
+  /** Run SQL text over the fixture tables under `dir`. The text is
+    * parsed once and each relation that names a fixture table is bound
+    * to that table's [[tbl]] plan under its own name ([[bindTables]]),
+    * so no temp view is registered and the query is the call's only
+    * SQL execution. A relation named like a CTE in scope stays the
+    * CTE's. A table named twice (TPC-H's `nation n1`, `nation n2`) is
+    * resolved once; the analyzer gives each use its own attributes. */
   def runSql(s: SparkSession, dir: String, q: String): DataFrame = {
-    namedIn(s, q).foreach(t => tbl(s, dir, t).createOrReplaceTempView(t))
-    s.sql(q)
+    val plans = mutable.Map.empty[String, LogicalPlan]
+    Bridge.ofRows(s, bindTables(s.sessionState.sqlParser.parsePlan(q)) { t =>
+      SubqueryAlias(t, plans.getOrElseUpdate(t, Bridge.analyzed(tbl(s, dir, t))))
+    })
   }
 
-  /** The fixture tables SQL text `q` reads: the relations its parsed
-    * plan names — CTE bodies and subqueries included — that are
-    * fixture tables (a CTE's own name is not one), in [[allNames]]
-    * order. */
+  /** The fixture tables SQL text `q` reads: the relations [[runSql]]
+    * binds — CTE bodies and subqueries included, a CTE's own name
+    * excluded — in [[allNames]] order. */
   private[graft] def namedIn(s: SparkSession, q: String): Seq[String] = {
-    def named(p: LogicalPlan): Seq[String] = p.collectWithSubqueries {
-      case r: UnresolvedRelation => Seq(r.multipartIdentifier.last)
-      case w: UnresolvedWith => w.cteRelations.flatMap(c => named(c._2))
-    }.flatten
-    val names = named(s.sessionState.sqlParser.parsePlan(q))
-      .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    allNames.filter(names)
+    val named = mutable.Set.empty[String]
+    bindTables(s.sessionState.sqlParser.parsePlan(q)) { t =>
+      named += t
+      UnresolvedRelation(Seq(t))
+    }
+    allNames.filter(named)
   }
 
-  /** One catalog entry: the files a table was resolved from, the
-    * schema to read them with, and the `ts` normalization (events). */
-  private final case class Entry(files: Seq[(String, Long, Long)],
-      schema: StructType, ts: Option[Column]) {
+  /** `plan` with each single-part relation that names a fixture table
+    * replaced by `bind(name)`, in CTE bodies and subquery expressions
+    * too, except where a CTE of that name is in scope (`ctes`): a CTE
+    * body sees the CTEs defined before it (and itself under WITH
+    * RECURSIVE), the WITH's query sees them all. */
+  private def bindTables(plan: LogicalPlan, ctes: Set[String] = Set.empty)(
+      bind: String => LogicalPlan): LogicalPlan = plan match {
+    case w: UnresolvedWith =>
+      val names = w.cteRelations.map(c => lower(c._1))
+      val bodies = w.cteRelations.zipWithIndex.map { case ((n, body, depth), i) =>
+        val scope = ctes ++ names.take(if (w.allowRecursion) i + 1 else i)
+        (n, bindTables(body, scope)(bind).asInstanceOf[SubqueryAlias], depth)
+      }
+      w.copy(child = bindTables(w.child, ctes ++ names)(bind),
+        cteRelations = bodies)
+    case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+      val t = lower(r.multipartIdentifier.head)
+      if (allNames.contains(t) && !ctes(t)) bind(t) else r
+    case p => p.mapChildren(bindTables(_, ctes)(bind)).transformExpressions {
+      case e: SubqueryExpression => e.withNewPlan(bindTables(e.plan, ctes)(bind))
+    }
+  }
+
+  private def lower(n: String): String = n.toLowerCase(java.util.Locale.ROOT)
+
+  /** One catalog entry: the analyzed relation a table was resolved to,
+    * the fingerprint of the files its index listed, and the `ts`
+    * normalization (events). */
+  private final case class Entry(relation: LogicalRelation, ts: Option[Column]) {
+    val files: Seq[(String, Long, Long)] = fingerprint(relation)
     def finish(df: DataFrame): DataFrame =
       ts.fold(df)(df.withColumn("ts", _))
   }
 
-  /** Sorted (path, length, modification time) of the files `df`'s
+  /** The relation a file read `df` analyzed to. */
+  private def relationOf(df: DataFrame): LogicalRelation =
+    Bridge.analyzed(df).collectFirst { case l: LogicalRelation => l }
+      .getOrElse(throw new IllegalStateException(
+        s"not a file read: ${Bridge.analyzed(df).nodeName}"))
+
+  /** Sorted (path, length, modification time) of the files `relation`'s
     * file index listed when the read was built — no second listing and
     * no Spark job. */
-  private def fingerprint(df: DataFrame): Seq[(String, Long, Long)] = {
-    val index = df.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation => l.relation
-    }.collect { case r: HadoopFsRelation => r.location }
-    index.flatMap(listed).getOrElse(throw new IllegalStateException(
-      s"cannot fingerprint a read whose file index is $index"))
+  private def fingerprint(relation: LogicalRelation): Seq[(String, Long, Long)] =
+    (relation.relation match {
+      case r: HadoopFsRelation => listed(r.location)
+      case _ => None
+    }).getOrElse(throw new IllegalStateException(
+      s"cannot fingerprint a read over ${relation.relation}"))
+
+  /** Sorted (path, length, modification time) of the files under
+    * `path` as Spark's file index lists them: one `listStatus` per
+    * directory (no block locations), names Spark skips skipped
+    * ([[Bridge.listsName]]). None when `path` does not exist. */
+  private[graft] def listing(s: SparkSession, path: String)
+      : Option[Seq[(String, Long, Long)]] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(dir: Path): Seq[(String, Long, Long)] =
+      fs.listStatus(dir).toSeq.filter(f => Bridge.listsName(f.getPath.getName))
+        .flatMap { f =>
+          if (f.isDirectory) walk(f.getPath)
+          else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+    try Some(walk(fs.makeQualified(root)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Sorted (path, length, modification time) of the files a file index

@@ -253,6 +253,18 @@ object Aggs {
          )
          SELECT * FROM p ORDER BY col_name"""
 
+  /** q22's GROUPING SETS text: the oracle and the Spark SQL the row
+    * runs. */
+  private val groupingSetsSql =
+    """SELECT coalesce(l_returnflag,'ALL') AS rf, coalesce(l_linestatus,'ALL') AS ls,
+         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+         count(*) AS n,
+         CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
+         CAST(grouping(l_linestatus) AS BIGINT) AS g_ls
+         FROM lineitem
+         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
+         ORDER BY g_rf, g_ls, rf, ls"""
+
   val queries: Seq[Query] = Seq(
     /** q17: TPC-H Q1 shape — the flagship aggregate. */
     Query("q_agg_basic",
@@ -366,27 +378,8 @@ object Aggs {
     }),
 
     /** q22: explicit GROUPING SETS via SQL text (entry point E2). */
-    Query("q_agg_groupingsets",
-      s"""SELECT coalesce(l_returnflag,'ALL') AS rf, coalesce(l_linestatus,'ALL') AS ls,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         count(*) AS n,
-         CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
-         CAST(grouping(l_linestatus) AS BIGINT) AS g_ls
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-         ORDER BY g_rf, g_ls, rf, ls""")((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("li_q22")
-      s.sql("""
-        SELECT coalesce(l_returnflag, 'ALL') AS rf,
-               coalesce(l_linestatus, 'ALL') AS ls,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-               count(1) AS n,
-               CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
-               CAST(grouping(l_linestatus) AS BIGINT) AS g_ls
-        FROM li_q22
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-        ORDER BY g_rf, g_ls, rf, ls""")
-    }),
+    Query("q_agg_groupingsets", groupingSetsSql)((s, d) =>
+      runSql(s, d, groupingSetsSql)),
 
     /** q69: exact percentiles (median/p90) — both engines define
       * quantiles by (n-1)*p linear interpolation; inputs are the

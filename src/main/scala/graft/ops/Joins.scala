@@ -122,6 +122,23 @@ object Joins {
            WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
          ORDER BY c_custkey"""
 
+  /** q196's NOT IN pair: the oracle and the Spark SQL the row runs. */
+  private val nullAwareAntiSql =
+    """SELECT 'no_null' AS variant, CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
+         FROM lineitem
+         WHERE l_suppkey NOT IN
+           (SELECT s_suppkey FROM supplier WHERE s_acctbal > 5000)
+         UNION ALL
+         SELECT 'with_null', CAST(count(*) AS BIGINT),
+           CAST(count(DISTINCT l_suppkey) AS BIGINT)
+         FROM lineitem
+         WHERE l_suppkey NOT IN
+           (SELECT CASE WHEN s_acctbal <= 5000 THEN NULL
+                        ELSE s_suppkey END
+            FROM supplier)
+         ORDER BY variant"""
+
   /** q82's LATERAL join: the oracle and the Spark SQL the row runs. */
   private val lateralSql =
     """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
@@ -387,41 +404,10 @@ object Joins {
       * null-aware anti join (broadcast single-column NAAJ /
       * BroadcastNestedLoopJoin), a different physical operator from
       * q13's LeftAnti — both engines implement the same standard
-      * semantics, so the hash pins them. Runs through spark.sql
-      * (NOT IN is not expressible in the Column DSL). */
-    Query("q_join_null_aware_anti",
-      """SELECT 'no_null' AS variant, CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
-         FROM lineitem
-         WHERE l_suppkey NOT IN
-           (SELECT s_suppkey FROM supplier WHERE s_acctbal > 5000)
-         UNION ALL
-         SELECT 'with_null', CAST(count(*) AS BIGINT),
-           CAST(count(DISTINCT l_suppkey) AS BIGINT)
-         FROM lineitem
-         WHERE l_suppkey NOT IN
-           (SELECT CASE WHEN s_acctbal <= 5000 THEN NULL
-                        ELSE s_suppkey END
-            FROM supplier)
-         ORDER BY variant""")((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("g196_lineitem")
-      supplier(s, d).createOrReplaceTempView("g196_supplier")
-      s.sql("""
-        SELECT 'no_null' AS variant, CAST(count(*) AS BIGINT) AS n_rows,
-          CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_supps
-        FROM g196_lineitem
-        WHERE l_suppkey NOT IN
-          (SELECT s_suppkey FROM g196_supplier WHERE s_acctbal > 5000)
-        UNION ALL
-        SELECT 'with_null', CAST(count(*) AS BIGINT),
-          CAST(count(DISTINCT l_suppkey) AS BIGINT)
-        FROM g196_lineitem
-        WHERE l_suppkey NOT IN
-          (SELECT CASE WHEN s_acctbal <= 5000 THEN NULL
-                       ELSE s_suppkey END
-           FROM g196_supplier)
-        ORDER BY variant""")
-    }),
+      * semantics, so the hash pins them. Runs as SQL text (NOT IN is
+      * not expressible in the Column DSL). */
+    Query("q_join_null_aware_anti", nullAwareAntiSql)((s, d) =>
+      runSql(s, d, nullAwareAntiSql)),
 
     /** q78: range/interval join — events bucketed into static value
       * intervals [lo, hi). The bucket table broadcasts, so the range

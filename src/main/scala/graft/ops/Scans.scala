@@ -29,6 +29,23 @@ object Scans {
          ON date_trunc('month', o_orderdate) = m
        GROUP BY m ORDER BY m"""
 
+  /** q189's TPC-H Q3-shaped text: the oracle and the Spark SQL the
+    * row runs. */
+  private val sqlTextFrontendSql =
+    """SELECT l_orderkey, o_orderdate, o_orderpriority,
+           CAST(CAST(sum(CAST(ROUND(l_extendedprice, 2) AS DECIMAL(18,2)) *
+             CAST(ROUND(1 - l_discount, 4) AS DECIMAL(8,4)))
+             AS DECIMAL(18,4)) AS DOUBLE) AS revenue
+         FROM lineitem
+         JOIN orders ON l_orderkey = o_orderkey
+         JOIN customer ON o_custkey = c_custkey
+         WHERE c_mktsegment = 'BUILDING'
+           AND o_orderdate < TIMESTAMP '1997-06-30 00:00:00'
+           AND l_shipdate > TIMESTAMP '1997-06-30 00:00:00'
+         GROUP BY l_orderkey, o_orderdate, o_orderpriority
+         ORDER BY revenue DESC, l_orderkey
+         LIMIT 10"""
+
   val queries: Seq[Query] = Seq(
     /** q1: projection-only scan — parquet reads just the 3 columns. */
     Query("q_scan_project",
@@ -223,47 +240,17 @@ object Scans {
     }),
 
     /** q189: SQL-TEXT FRONT-END — the other entry point a reference
-      * user expects: register the tables as temp views and run a
-      * QUERY STRING through spark.sql (TPC-H Q3 shape adapted to the
-      * fixture schema: top-10 'BUILDING' orders by unshipped revenue
-      * around a date cut). The string goes through the full
+      * user expects: a QUERY STRING over the fixture tables, run by
+      * `runSql` on the oracle's own text (TPC-H Q3 shape adapted to
+      * the fixture schema: top-10 'BUILDING' orders by unshipped
+      * revenue around a date cut). The string goes through the full
       * parser → analyzer → Catalyst path — a parser or analyzer
       * regression fails this row even when the DataFrame-API rows
       * stay green. Determinism: the Dec idiom inline in SQL (exact
       * decimal revenue, one double cast), LIMIT only after a total
       * order with the unique orderkey tiebreak (rule D6). */
-    Query("q_sql_text_frontend",
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-           CAST(CAST(sum(CAST(ROUND(l_extendedprice, 2) AS DECIMAL(18,2)) *
-             CAST(ROUND(1 - l_discount, 4) AS DECIMAL(8,4)))
-             AS DECIMAL(18,4)) AS DOUBLE) AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1997-06-30 00:00:00'
-           AND l_shipdate > TIMESTAMP '1997-06-30 00:00:00'
-         GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, l_orderkey
-         LIMIT 10""")((s, d) => {
-      lineitem(s, d).createOrReplaceTempView("g189_lineitem")
-      orders(s, d).createOrReplaceTempView("g189_orders")
-      customer(s, d).createOrReplaceTempView("g189_customer")
-      s.sql("""
-        SELECT l_orderkey, o_orderdate, o_orderpriority,
-          CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-            CAST(1 - l_discount AS DECIMAL(8,4))) AS DECIMAL(18,4))
-            AS DOUBLE) AS revenue
-        FROM g189_lineitem
-        JOIN g189_orders ON l_orderkey = o_orderkey
-        JOIN g189_customer ON o_custkey = c_custkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1997-06-30 00:00:00'
-          AND l_shipdate > TIMESTAMP '1997-06-30 00:00:00'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, l_orderkey
-        LIMIT 10""")
-    }),
+    Query("q_sql_text_frontend", sqlTextFrontendSql)((s, d) =>
+      runSql(s, d, sqlTextFrontendSql)),
 
     /** q273: RECURSIVE CTE calendar spine (Spark-4 surface row, like
       * VARIANT q247 / collation q248) — the warehouse pattern SQL

@@ -7,8 +7,9 @@ import graft.engine.{Query, Tables}
   * query suite, declared as first-class rows with full DuckDB oracles.
   *
   * Each query is ONE dialect-common ANSI SQL string executed verbatim
-  * by BOTH engines (Spark over temp views of the fixture tables,
-  * DuckDB as the oracle), so the Spark plan is exactly what Catalyst
+  * by BOTH engines (Spark through `Tables.runSql`, which binds each
+  * table the text names to its catalog relation; DuckDB as the
+  * oracle), so the Spark plan is exactly what Catalyst
   * derives from the standard text — broadcast of the dimension chain,
   * partial aggregation, semi/anti subquery rewrites, dynamic pruning —
   * with zero hand-scheduling, and alias drift between a plan and its oracle is

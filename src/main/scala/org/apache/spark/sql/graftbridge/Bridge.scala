@@ -35,6 +35,14 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Whether Spark's file listing keeps a file or directory of this
+    * name (it skips `_`- and `.`-prefixed names other than partition
+    * directories and parquet summaries, and `._COPYING_` files) — the
+    * filter `InMemoryFileIndex` applies (`HadoopFSUtils` is
+    * `private[spark]`). */
+  def listsName(name: String): Boolean =
+    !org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Delete `dir` recursively when the JVM shuts down (Spark's own
     * temp-dir hook; `ShutdownHookManager` is `private[spark]`).
     * Registering a directory twice is a no-op. */

@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   * maps derived from `all` would keep only one), when a row list
   * kept elsewhere names a row that is not registered, when a module
   * is filed by the batch that added it (`Round…`, `Extras`) instead of
-  * by its family, or when one oracle SQL text is written twice. */
+  * by its family, when one oracle SQL text is written twice, or when a
+  * row registers a temp view instead of running its text through
+  * `Tables.runSql`. */
 class RegistryGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
   private val owner = root.resolve("graft/SparkEntry.scala")
@@ -82,5 +84,16 @@ class RegistryGuardSpec extends AnyFunSuite {
     }).groupBy(_._1).values.filter(_.size > 1).map(_.map(_._2).mkString(" = "))
     assert(copies.isEmpty,
       copies.mkString("\nshare one definition instead:\n", "\n", ""))
+  }
+
+  test("no temp view is registered in src/main: SQL text runs through Tables.runSql") {
+    val view = ("""\bcreate(?:OrReplace)?(?:Global)?TempView\b|""" +
+      """(?i)\bCREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?TEMP(?:ORARY)?\s+VIEW\b""").r
+    val hits = for {
+      p <- sources
+      text = Files.readString(p)
+      m <- view.findAllMatchIn(text)
+    } yield s"${root.relativize(p)}:${text.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }
